@@ -1,13 +1,12 @@
-"""Split manifests, retention, vacuum, and z-order clustering
-(round 18 — sources/commit.py).
+"""Manifest lists, retention, vacuum, and z-order clustering
+(sources/commit.py).
 
-The round-17 v2 table kept ONE JSON manifest listing every data file —
-at 100 TB (millions of files) that document is hundreds of MB parsed
-on the driver per commit.  `split_manifest=True` commits the Iceberg
-manifest-list core instead: a small root (one ~125-byte ref per
-non-empty bucket) plus per-bucket part files, so a merge or lookup
-parses the root + ONLY the touched buckets' parts (metered by
-`commit.MANIFEST_IO` — printed below).  Retention is a table property
+At 100 TB (millions of files) one JSON manifest listing every data
+file would be hundreds of MB parsed on the driver per commit, so every
+table commits the Iceberg manifest-list core: a small root (one
+~125-byte ref per non-empty bucket) plus per-bucket part files, and a
+merge or lookup parses the root + ONLY the touched buckets' parts
+(metered by `commit.MANIFEST_IO` — printed below).  Retention is a table property
 (`keep_generations`, changeable by `table_set_retention`); orphan
 cleanup is `table_vacuum`, the one deliberately O(table-manifest)
 maintenance job.  `cluster_by=[a, b]` z-orders each bucket (quantile-
@@ -32,13 +31,12 @@ def main(spark, sf_dir):
     with tempfile.TemporaryDirectory() as d:
         target = f"{d}/orders_split"
         print(
-            "init (split, z-ordered, retention 3):",
+            "init (z-ordered, retention 3):",
             cm.table_init(
                 orders,
                 target,
                 "o_orderkey",
                 n_buckets=8,
-                split_manifest=True,
                 keep_generations=3,
                 cluster_by=["o_totalprice", "o_custkey"],
                 max_records_per_file=500,

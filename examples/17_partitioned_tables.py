@@ -37,7 +37,6 @@ def main(spark, sf_dir):
                 target,
                 "o_orderkey",
                 n_buckets=8,
-                split_manifest=True,
                 partition_by="o_orderdate",
                 partition_transform="month",
             ),
@@ -46,9 +45,9 @@ def main(spark, sf_dir):
         print(f"partitions={st['partitions']} files={st['files']}")
 
         # Partition-pruned read: a range predicate on the partition
-        # column drops whole months from planning BEFORE stats — on a
-        # split table the pruned months' manifest parts are never even
-        # parsed (metered by cm.MANIFEST_IO).
+        # column drops whole months from planning BEFORE stats — the
+        # pruned months' manifest parts are never even parsed (metered
+        # by cm.MANIFEST_IO).
         lo, hi = orders.agg(
             F.min("o_orderdate"), F.max("o_orderdate")
         ).first()

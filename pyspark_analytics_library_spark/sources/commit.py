@@ -1,4 +1,4 @@
-"""Manifest-pointer table commit — the object-store-safe sink mode
+"""Manifest-pointer table commits — the object-store-safe sink mode
 (VERDICT r14 #4).
 
 :func:`~pyspark_analytics_library_spark.sources.scan_queries._staged_overwrite`'s
@@ -8,70 +8,49 @@ is copy+delete: a crash mid-"rename" leaves a half-copied table that
 reads as if whole — the one deployment class a 100 TB engine actually
 writes to.  This module supplies the committer that works there:
 
-* every overwrite writes a FULL new generation under
-  ``<target>/gen-<uuid>/`` — never touching the live one;
+* a table is hash-bucketed parquet data files plus one small JSON ROOT
+  manifest per committed generation; nothing is ever renamed;
 * the commit point is an atomic swap of ONE small pointer file
-  ``<target>/_CURRENT`` naming the live generation.  Locally that swap
-  is ``os.replace`` (POSIX-atomic); on an object store the same
-  protocol is a single-object PUT, which S3 guarantees atomic with
+  ``<target>/_CURRENT`` naming the live root.  Locally that swap is
+  ``os.replace`` (POSIX-atomic); on an object store the same protocol
+  is a single-object PUT, which S3 guarantees atomic with
   read-after-write consistency — no multi-object window exists at all;
-* readers resolve through :func:`resolve_table` (pointer → generation
-  dir), so a reader either sees the complete old generation or the
-  complete new one, never a mixture.
+* readers resolve pointer → root → file list (:func:`resolve_table`)
+  and scan exactly those files, so a reader sees either the complete
+  old generation or the complete new one, never a mixture.
 
-Crash matrix: a failure during the generation write leaves the pointer
-(and therefore every reader) on the old generation — the orphan
-generation dir is reclaimed by :func:`_prune_generations` on the next
-successful commit (it keeps the newest :data:`KEEP_GENERATIONS`
-pointer-eligible dirs, current first).  A failure between "generation
-complete" and "pointer swapped" is the same story: the commit simply
-never happened.  There is no window in which the table is absent or
-truncated — strictly stronger than the rename swap's documented
+Crash matrix: a failure anywhere before the pointer swap leaves the
+pointer (and therefore every reader) on the old root — the commit
+simply never happened, and its unreferenced files are reclaimed by
+:func:`table_vacuum`.  There is no window in which the table is absent
+or truncated — strictly stronger than the rename swap's documented
 "briefly absent, recoverable by hand" gap.
 
-Cost model at 100 TB: a v1 generation is a full copy-on-write rewrite
-of the table (same as the rename mode — both are overwrite sinks), and
-``KEEP_GENERATIONS=2`` holds one superseded generation as the readers'
-grace window + instant rollback, so peak storage is 2× table size.
-Lakehouse table formats (Delta/Iceberg/Hudi) refine exactly this
-protocol with per-FILE manifests so an update rewrites only touched
-files — and as of round 16 this module implements that core pattern
-too: the v2 functions below (:func:`table_init` / :func:`table_merge`
-/ :func:`table_read`) commit a FILE LIST per generation, and a merge
-rewrites only the hash-buckets its update batch touches (VERDICT r15
-#2).  Round 17 completed the maintenance surface: :func:`table_append`
-(fast append), :func:`table_merge_mor` / :func:`table_delete`
-(merge-on-read via tombstones), :func:`table_compact` (bin-packing +
-tombstone apply, capacity-aware for clustered layouts),
-:func:`table_add_columns` (metadata-only additive schema evolution),
-per-file min/max stats with range-pruned :func:`table_read`, and
-intra-bucket clustering (``cluster_by`` + ``max_records_per_file``).
-The pointer-swap commit core is shared by everything here.  Round 18
-closed the two 100-TB walls the r17 verdict named: the merge-on-read
-read tax (clean/dirty mask split + one-relation gen mapping +
-size-aware task packing — measured 3.18 → 1.78 s at the 5-commit
-point) and the one-document manifest (:func:`table_init`'s
-``split_manifest`` commits a manifest-LIST root + per-bucket part
-files, so commit-path driver I/O is O(touched buckets), metered by
-:data:`MANIFEST_IO`), plus retention as a table property
-(``keep_generations`` / :func:`table_set_retention`),
-:func:`table_vacuum`, 2-column z-order clustering, point/IN-list/
-prefix stats pruning, :func:`table_stats`, and
-:func:`with_commit_retry`.  Round 19 added the two structural walls
-the r18 verdict named: a declared PARTITION SPEC
-(``table_init(partition_by=, partition_transform=)`` — partition-pruned
-reads ahead of any stats pass, partition-local compaction,
-:func:`table_drop_partition`) and POSITIONAL DELETION VECTORS
-(``position_deletes=`` on :func:`table_merge_mor` /
-:func:`table_delete` — DV-covered files mask by exact row position
-with NO join in the plan; see :func:`_masked_scan`), plus 3-column
-z-order.
+Layout — Iceberg's manifest-list core, keyed on (partition, bucket):
+the root lists one ``manifests/part-*.json`` ref per non-empty group,
+and each part holds that group's data-file and tombstone entries.  A
+commit rewrites only the parts (and data files) of the groups it
+touches and carries every other part BY REFERENCE, so commit-path
+driver I/O is O(touched buckets), metered by :data:`MANIFEST_IO`.
+
+Surface: :func:`table_init` / :func:`table_merge` (copy-on-write,
+touched buckets only) / :func:`table_read` / :func:`table_lookup`;
+:func:`table_append` (fast append); :func:`table_merge_mor` /
+:func:`table_delete` (merge-on-read tombstones, optionally with
+positional deletion vectors — see :func:`_masked_scan`);
+:func:`table_compact` (bin-packing + tombstone apply, capacity-aware
+for clustered layouts); metadata-only schema evolution
+(:func:`table_add_columns`, :func:`table_rename_column`,
+:func:`table_drop_column`); a declared partition spec with
+:func:`table_drop_partition`; per-file min/max stats pruning;
+intra-bucket and z-order clustering; retention
+(``keep_generations`` / :func:`table_set_retention`,
+:func:`table_vacuum`); :func:`table_stats`; :func:`with_commit_retry`.
 
 Mode selection: conf ``spark.analytics.sink.commitMode`` = ``rename``
 (default — keeps every committed fixture attestation byte-identical)
-or ``manifest``; ``_staged_overwrite`` dispatches on it and returns the
-path readers should scan, which under manifest mode is the committed
-generation dir.
+or ``manifest``, under which the ``sink_merge_*`` queries seed and
+merge into a table here instead of calling ``_staged_overwrite``.
 """
 
 from __future__ import annotations
@@ -85,131 +64,71 @@ from pyspark.sql import DataFrame
 #: Conf key selecting the overwrite-commit protocol.
 MODE_CONF = "spark.analytics.sink.commitMode"
 
-#: Pointer file naming the live generation (relative dir name inside
-#: the target).  The leading underscore keeps Spark/Hadoop readers from
-#: picking it up as data if someone scans the target root by mistake.
+#: Pointer file naming the live root manifest.  The leading underscore
+#: keeps Spark/Hadoop readers from picking it up as data if someone
+#: scans the target root by mistake.
 CURRENT_POINTER = "_CURRENT"
 
-#: Generations retained after a successful commit: the live one plus
-#: one superseded (readers' grace window + instant rollback).
+#: Default retention: committed generations kept readable — the live
+#: one plus one superseded (readers' grace window + instant rollback).
 KEEP_GENERATIONS = 2
 
 
-def manifest_commit(df: DataFrame, target: str) -> str:
-    """Write ``df`` as a new generation under ``target`` and atomically
-    swap the ``_CURRENT`` pointer to it.  Returns the generation dir.
-
-    Refuses a target that already holds a pointerless non-empty layout
-    (i.e. a rename-mode parquet table): silently nesting generations
-    inside a live flat table would leave bare-path readers seeing mixed
-    content — the caller must migrate or clear the target explicitly.
-    """
-    if (
-        os.path.isdir(target)
-        and os.listdir(target)
-        and not os.path.exists(os.path.join(target, CURRENT_POINTER))
-    ):
-        raise ValueError(
-            f"{target} holds a non-manifest (rename-mode) table; refusing "
-            "to nest generations inside it — clear it or keep commitMode="
-            "rename for this target"
-        )
-    gen = f"gen-{uuid.uuid4().hex[:12]}"
-    gen_dir = os.path.join(target, gen)
-    try:
-        df.write.mode("overwrite").parquet(gen_dir)
-    except BaseException:
-        # Data-sized failure window: pointer untouched, readers
-        # unaffected; reclaim the partial generation eagerly.
-        shutil.rmtree(gen_dir, ignore_errors=True)
-        raise
-    _swap_pointer(target, gen)
-    _prune_generations(target, gen)
-    return gen_dir
-
-
-def _swap_pointer(target: str, gen: str) -> None:
-    """Atomically repoint ``_CURRENT`` at ``gen``: write a temp file,
-    ``os.replace`` over the pointer.  This is the ONLY mutation of
+def _swap_pointer(target: str, name: str) -> None:
+    """Atomically repoint ``_CURRENT`` at root ``name``: write a temp
+    file, ``os.replace`` over the pointer.  This is the ONLY mutation of
     shared state in the protocol — one small-file atomic swap, the
     operation object stores provide natively (single-object PUT), so
     nothing here depends on directory rename being atomic."""
     tmp = os.path.join(target, f".{CURRENT_POINTER}.{uuid.uuid4().hex[:8]}")
     with open(tmp, "w", encoding="utf-8") as f:
-        f.write(gen + "\n")
+        f.write(name + "\n")
     os.replace(tmp, os.path.join(target, CURRENT_POINTER))
 
 
 def resolve_table(target: str) -> str:
-    """Path readers should scan: the pointer's generation dir when
-    ``target`` is a manifest table, else ``target`` itself (rename-mode
-    tables and plain parquet dirs pass through untouched)."""
+    """Path of the live root manifest when ``target`` is a manifest
+    table, else ``target`` itself (rename-mode tables and plain parquet
+    dirs pass through untouched)."""
     ptr = os.path.join(target, CURRENT_POINTER)
     try:
         with open(ptr, encoding="utf-8") as f:
-            gen = f.read().strip()
+            name = f.read().strip()
     except OSError:
         return target
-    # The pointer names a relative child dir by contract; reject
+    # The pointer names a relative child file by contract; reject
     # anything else rather than resolve outside the table root.
-    if not gen or os.sep in gen or gen != os.path.basename(gen):
-        raise ValueError(f"corrupt {CURRENT_POINTER} in {target}: {gen!r}")
-    return os.path.join(target, gen)
-
-
-def _prune_generations(target: str, current: str) -> None:
-    """Reclaim superseded/orphaned generations, keeping the live one
-    plus the newest ``KEEP_GENERATIONS - 1`` others by mtime.  Runs
-    after the pointer swap, so a crash here costs only disk, never
-    correctness.  Best-effort: a racing reader's OS-level deletion
-    semantics (open handles survive unlink on POSIX) plus the one-
-    generation grace window keep in-flight scans safe; an object-store
-    deployment would widen KEEP_GENERATIONS to its read-latency SLA."""
-    try:
-        gens = [
-            n
-            for n in os.listdir(target)
-            if n.startswith("gen-") and n != current
-        ]
-        gens.sort(
-            key=lambda n: os.path.getmtime(os.path.join(target, n)),
-            reverse=True,
-        )
-        for n in gens[KEEP_GENERATIONS - 1 :]:
-            shutil.rmtree(os.path.join(target, n), ignore_errors=True)
-    except OSError:
-        pass
+    if not name or os.sep in name or name != os.path.basename(name):
+        raise ValueError(f"corrupt {CURRENT_POINTER} in {target}: {name!r}")
+    return os.path.join(target, name)
 
 
 # ---------------------------------------------------------------------------
-# v2: per-FILE manifests — incremental merge commits (VERDICT r15 #2)
+# Per-FILE manifests — incremental merge commits (VERDICT r15 #2)
 # ---------------------------------------------------------------------------
 #
-# The v1 protocol above is honest about its cost: every commit is a
-# full copy-on-write generation (2× peak storage, whole-table rewrite).
 # At 100 TB a merge that touches 0.1 % of keys must not rewrite the
 # other 99.9 % — the Delta/Iceberg core pattern is a MANIFEST that
 # lists data FILES, so a commit rewrites only the files containing
-# touched keys and carries every other file over BY REFERENCE.  v2
-# implements exactly that, reusing v1's one atomic primitive (the
-# ``_CURRENT`` pointer swap — a single-object PUT on a store):
+# touched keys and carries every other file over BY REFERENCE:
 #
 # * data files live under ``<target>/data/<commit-id>/bucket=<b>/`` —
 #   hash-bucketed by the merge key (``pmod(xxhash64(key), n_buckets)``),
 #   so "which files can contain key k" is pure arithmetic, no index;
-# * a generation is a small JSON file ``<target>/manifest-<uuid>.json``
-#   listing (relative path, bucket) per data file plus the bucket
-#   spec and the table schema;
-# * ``_CURRENT`` names the live manifest file.  Readers resolve
-#   pointer → manifest → file list and scan exactly those files; a
-#   reader sees the complete old file set or the complete new one;
+# * a generation is a small JSON ROOT ``<target>/manifest-<seq>-<uuid>.json``
+#   holding the bucket spec, the table schema and properties, and one
+#   part ref per non-empty (partition, bucket); the part files under
+#   ``<target>/manifests/`` list (relative path, bucket, stats) per
+#   data file and tombstone;
+# * ``_CURRENT`` names the live root;
 # * a merge commit reads ONLY the files of buckets present in the
 #   update batch, applies the caller's merge function to (that slice,
-#   updates), writes the replacement files for those buckets, and
-#   writes a new manifest = carried-over untouched files + new files.
+#   updates), writes the replacement files and parts for those
+#   buckets, and writes a new root = carried-over part refs + new ones.
 #   Crash during data/manifest write → pointer (and readers) stay on
-#   the old manifest; orphans are reclaimed by :func:`_prune_manifests`
-#   after the next successful commit.
+#   the old root; superseded files are reclaimed by
+#   :func:`_prune_manifests` after the next successful commit, crashed-
+#   commit orphans by :func:`table_vacuum`.
 #
 # Cost model at 100 TB: a merge rewrites touched buckets only —
 # storage and write amplification scale with the UPDATE footprint, not
@@ -223,15 +142,10 @@ MERGE_BUCKETS_CONF = "spark.analytics.sink.mergeBuckets"
 MANIFEST_PREFIX = "manifest-"
 DATA_DIR = "data"
 
-#: Conf: write SPLIT manifests (manifest-list root + one part file per
-#: non-empty bucket) instead of one inline JSON document.  Recorded as
-#: a table property at table_init; every later commit honors it.
-MANIFEST_SPLIT_CONF = "spark.analytics.sink.manifestSplit"
-
 #: Conf: default retention (generations kept) for new v2 tables.
 KEEP_GENERATIONS_CONF = "spark.analytics.sink.keepGenerations"
 
-#: Directory holding split-manifest part files (one per bucket).
+#: Directory holding manifest part files (one per (partition, bucket)).
 PARTS_DIR = "manifests"
 
 #: Conf: write POSITIONAL DELETION VECTORS on merge-on-read commits
@@ -263,7 +177,7 @@ _DV_MAX_POSITIONS_DEFAULT = 1_000_000
 _DV_INLINE_MAX = 10_000
 
 #: Observability/test counter for driver-side manifest I/O: every JSON
-#: read of a root manifest or part file adds here.  The split-manifest
+#: read of a root manifest or part file adds here.  The manifest-list
 #: contract — merges/lookups/pruned reads parse O(touched buckets),
 #: not O(table files) — is asserted against ``part_reads``/``bytes``
 #: (reset it, run the op, inspect).  Driver-side only, test scoped; a
@@ -274,7 +188,7 @@ MANIFEST_IO = {"reads": 0, "part_reads": 0, "bytes": 0}
 
 def _read_json(path: str) -> dict:
     """A manifest/part JSON document, with driver-side I/O accounted
-    in :data:`MANIFEST_IO` — the split-manifest design exists exactly
+    in :data:`MANIFEST_IO` — the manifest-list layout exists exactly
     to bound this I/O, so it is measured, not assumed."""
     import json
 
@@ -305,7 +219,7 @@ def _bucket_expr(key: str, n_buckets: int):
 #
 # Layout: data files gain one directory level —
 # ``data/<commit>/_part=<value>/bucket=<b>/part-*.parquet`` — and every
-# manifest entry / split-manifest part ref carries its partition value,
+# manifest entry / part ref carries its partition value,
 # so the internal grouping key everywhere becomes (partition, bucket)
 # (:func:`_gkey`; ``part`` is None on unpartitioned tables and on every
 # pre-r19 manifest, which therefore keep reading unchanged).
@@ -328,7 +242,7 @@ _TRANSFORMS = ("identity", "day", "month")
 
 def _gkey(e: dict) -> tuple:
     """The (partition, bucket) grouping key of a manifest entry or
-    split-part ref — THE unit of incremental rewrite since round 19.
+    part ref — THE unit of incremental rewrite since round 19.
     ``part`` is absent/None on unpartitioned tables and tombstones."""
     return (e.get("part"), e["bucket"])
 
@@ -693,7 +607,7 @@ def _write_bucketed(
     always repartitions, so a caller passing both has a broken
     precondition, not a silent no-op), and the MoR call site only sets
     it when every source file is under the scan split size — a file
-    larger than ``spark.sql.files.maxPartitionBytes`` is split ACROSS
+    larger than Spark's ``FilePartition.maxSplitBytes`` is split ACROSS
     scan tasks, so "each task holds whole single-bucket files" no
     longer holds and the write would multiply per-bucket files."""
     from pyspark.sql import functions as F
@@ -836,26 +750,23 @@ def _live_manifest_name(target: str) -> str:
 #: the concurrency check entirely".
 _ABSENT = "<absent>"
 
-#: Age (seconds) below which a data file referenced by NO manifest is
-#: left alone by the pruner: it may belong to an IN-FLIGHT commit whose
-#: manifest has not been written yet (review r16: a concurrent writer's
-#: prune could otherwise unlink files another writer's Spark job was
-#: just writing).  Files referenced by a manifest being pruned are
-#: deleted immediately regardless — they were committed once and are
-#: provably superseded.  Crashed-commit orphans are reclaimed after
-#: the grace by any later successful commit.
+#: Age (seconds) below which a file referenced by NO manifest is left
+#: alone by :func:`table_vacuum`: it may belong to an IN-FLIGHT commit
+#: whose manifest has not been written yet (review r16: a concurrent
+#: writer's sweep could otherwise unlink files another writer's Spark
+#: job was just writing).  Crashed-commit orphans are reclaimed by the
+#: first vacuum past the grace.
 ORPHAN_GRACE_S = 3600.0
 
 
 def _commit_manifest(
     target: str, manifest: dict, expect_current: str | None = None
 ) -> str:
-    """Write a new manifest file and atomically repoint ``_CURRENT`` at
-    it — the v2 commit point, same one-small-file swap as v1.  With
-    ``expect_current`` set, refuse (``ConcurrentCommitError``) if the
-    pointer state changed (moved off that manifest, or appeared when
-    :data:`_ABSENT` was expected) — see the exception class for the
-    optimistic-concurrency contract.
+    """Write a new root manifest and atomically repoint ``_CURRENT`` at
+    it — the commit point.  With ``expect_current`` set, refuse
+    (``ConcurrentCommitError``) if the pointer state changed (moved off
+    that manifest, or appeared when :data:`_ABSENT` was expected) — see
+    the exception class for the optimistic-concurrency contract.
 
     The candidate manifest lives at a DOT-PREFIXED temp name (excluded
     by every ``MANIFEST_PREFIX`` listing, like the pointer temp) until
@@ -872,7 +783,7 @@ def _commit_manifest(
 
     # The commit SEQUENCE rides the FILENAME (round 18): retention
     # ordering then needs a directory listing, not a JSON parse per
-    # root — at split-manifest scale the roots are the largest JSON
+    # root — at table scale the roots are the largest JSON
     # documents in the table, and the pruner sorts them on every
     # commit.  Zero-padded so lexicographic = numeric.
     seq = int(manifest.get("seq", -1))
@@ -928,11 +839,23 @@ def _manifest_seq(path: str) -> int:
         return -1
 
 
+def _read_root(path: str) -> dict:
+    """A ROOT manifest — the manifest LIST: table metadata plus one
+    part ref per (partition, bucket), O(buckets) not O(files); entry
+    listings load on demand through :func:`_man_entries`.  A document
+    without a ``parts`` list (e.g. an inline-layout root written by an
+    older version) is refused by name rather than misread."""
+    man = _read_json(path)
+    if not isinstance(man.get("parts"), list):
+        raise ValueError(
+            f"{path} is not a manifest-list root (no 'parts' list); "
+            "re-seed the table with table_init() into a fresh target"
+        )
+    return man
+
+
 def _load_manifest(target: str) -> dict:
-    """The live ROOT manifest dict for a v2 table (pointer → JSON).
-    For split tables this is the manifest LIST — table metadata plus
-    per-bucket part refs, O(buckets) not O(files); per-bucket entry
-    listings load on demand through :func:`_man_entries`."""
+    """The live ROOT manifest dict for a table (pointer → JSON)."""
     live = resolve_table(target)
     base = os.path.basename(live)
     if not base.startswith(MANIFEST_PREFIX):
@@ -940,7 +863,7 @@ def _load_manifest(target: str) -> dict:
             f"{target} is not a per-file manifest table (pointer names "
             f"{base!r}); seed it with table_init() first"
         )
-    return _read_json(live)
+    return _read_root(live)
 
 
 def _schema_shape(st):
@@ -950,17 +873,12 @@ def _schema_shape(st):
 
 
 # ---------------------------------------------------------------------------
-# Round 18: SPLIT manifests — manifest-list root + per-bucket parts
-# (VERDICT r17 next #3: the one-document manifest was the last
-# driver-side O(table-files) cost; at 100 TB a table is millions of
-# files and a several-hundred-MB JSON parse per commit/lookup becomes
-# the driver bottleneck.  Iceberg's answer is a manifest LIST naming
-# per-partition manifest files; this is that core, keyed on the hash
-# bucket: the root manifest lists one small part ref per non-empty
-# bucket, and each part file holds that bucket's data-file and
-# tombstone entries.  A merge/lookup/pruned read parses the root plus
-# ONLY the touched buckets' parts; untouched parts are carried into
-# the next root BY REFERENCE, never reread or rewritten.)
+# Manifest list: root + per-(partition, bucket) parts.  At 100 TB a
+# table is millions of files, and a one-document manifest would make
+# every commit/lookup a several-hundred-MB driver-side JSON parse.  A
+# merge/lookup/pruned read parses the root plus ONLY the touched
+# groups' parts; untouched parts are carried into the next root BY
+# REFERENCE, never reread or rewritten.
 # ---------------------------------------------------------------------------
 
 
@@ -1015,12 +933,12 @@ def _man_entries(
 ) -> tuple[list[dict], list[dict]]:
     """The (data files, tombstones) a manifest makes visible,
     restricted to ``buckets`` / ``partitions`` / exact ``gkeys`` when
-    given — the ONE accessor every op reads listings through.  Inline
-    manifests filter in memory; split manifests load ONLY the parts
-    surviving the filters, which is the whole point of the layout.  A
-    range read without any restriction parses all parts — O(parts)
-    driver work by design (column pruning then happens per entry; see
-    :func:`_write_part` for why the refs carry no column bounds).
+    given — the ONE accessor every op reads listings through.  Only
+    the parts surviving the filters are loaded, which is the whole
+    point of the layout.  A range read without any restriction parses
+    all parts — O(parts) driver work by design (column pruning then
+    happens per entry; see :func:`_write_part` for why the refs carry
+    no column bounds).
 
     TOMBSTONES are partition-less (round 19) and mask rows in ANY
     partition of their bucket, so the ``partitions`` filter applies to
@@ -1047,10 +965,6 @@ def _man_entries(
             return False
         return True
 
-    if "parts" not in man:
-        files = [e for e in man["files"] if want_file(e)]
-        tombs = [t for t in man.get("tombstones", []) if want_tomb(t)]
-        return files, tombs
     files, tombs = [], []
     for ref in man["parts"]:
         # A part holds one gkey's listings: data-file filters apply to
@@ -1071,19 +985,9 @@ def _man_entries(
 def _man_update(target: str, man: dict, touched: dict, seq: int) -> dict:
     """A new manifest dict with each touched GKEY's — (partition,
     bucket); see :func:`_gkey` — (files, tombstones) listing replaced
-    WHOLESALE by ``touched[gkey]``; untouched gkeys carry over — by
-    part REFERENCE in split mode (no reread, no rewrite), by entry in
-    inline mode.  Gkeys whose new listing is empty simply vanish (no
-    empty parts)."""
-    if "parts" not in man:
-        files = [e for e in man["files"] if _gkey(e) not in touched]
-        tombs = [
-            t for t in man.get("tombstones", []) if _gkey(t) not in touched
-        ]
-        for fs, ts in touched.values():
-            files.extend(fs)
-            tombs.extend(ts)
-        return dict(man, files=files, tombstones=tombs, seq=seq)
+    WHOLESALE by ``touched[gkey]``; untouched gkeys carry over by part
+    REFERENCE (no reread, no rewrite).  Gkeys whose new listing is
+    empty simply vanish (no empty parts)."""
     parts = [r for r in man["parts"] if _gkey(r) not in touched]
     for p, b in sorted(touched, key=lambda g: (g[0] or "", g[1])):
         fs, ts = touched[(p, b)]
@@ -1111,15 +1015,11 @@ def _group_listings(target: str, man: dict, new_files=(), new_tombs=()) -> dict:
 
 def _man_file_count(man: dict) -> int:
     """Total data files a manifest lists, without loading parts."""
-    if "parts" not in man:
-        return len(man["files"])
     return sum(ref["files"] for ref in man["parts"])
 
 
 def _man_tomb_count(man: dict) -> int:
     """Total tombstone files a manifest lists, without loading parts."""
-    if "parts" not in man:
-        return len(man.get("tombstones", []))
     return sum(ref["tombstones"] for ref in man["parts"])
 
 
@@ -1144,7 +1044,6 @@ def table_init(
     n_buckets: int | None = None,
     cluster_by: str | None = None,
     max_records_per_file: int | None = None,
-    split_manifest: bool | None = None,
     keep_generations: int | None = None,
     partition_by: str | None = None,
     partition_transform: str = "identity",
@@ -1159,17 +1058,10 @@ def table_init(
     :func:`table_merge`: a competing commit landing mid-seed raises
     :class:`ConcurrentCommitError` instead of being silently replaced
     (review r16 — previously only merges were protected).
-    Refuses a pointerless non-empty target exactly like v1
-    :func:`manifest_commit` and for the same reason.
-
-    ``split_manifest`` (round 18, default conf
-    :data:`MANIFEST_SPLIT_CONF`, else False) selects the SPLIT layout:
-    the committed root is a manifest LIST of per-bucket part refs, so
-    later merges/lookups/pruned reads parse O(touched buckets) of
-    manifest JSON instead of O(table files).  A table property — fixed
-    for the table's lifetime (a re-seed may choose anew; the file sets
-    on either side of a re-seed are disjoint, so the pruner never has
-    to reason across the mode boundary).
+    Refuses a pointerless non-empty target (i.e. a rename-mode parquet
+    table): nesting a manifest layout inside a live flat table would
+    leave bare-path readers seeing mixed content — the caller must
+    migrate or clear the target explicitly.
 
     ``keep_generations`` (round 18, default conf
     :data:`KEEP_GENERATIONS_CONF`, else :data:`KEEP_GENERATIONS`) is
@@ -1182,7 +1074,7 @@ def table_init(
     ``partition_by`` + ``partition_transform`` (round 19, VERDICT r18
     next #1) declare the table PARTITION SPEC: data files gain a
     ``_part=<transform(col)>/`` directory level above the bucket dirs,
-    manifest entries and split parts are keyed (partition, bucket),
+    manifest entries and parts are keyed (partition, bucket),
     reads prune partitions BEFORE any file-stats pass
     (``table_read(partitions=...)`` or automatically from ``where`` /
     ``where_in`` on the partition column), retention gains
@@ -1194,19 +1086,8 @@ def table_init(
     if os.path.isdir(target) and os.listdir(target) and not ptr_exists:
         raise ValueError(
             f"{target} holds a non-manifest (rename-mode) table; refusing "
-            "to nest a manifest layout inside it"
-        )
-    if ptr_exists and not _live_manifest_name(target).startswith(MANIFEST_PREFIX):
-        # ADVICE r16: without this check the v1->v2 migration case fell
-        # through to _load_manifest's "seed it with table_init() first"
-        # error — told from INSIDE table_init, i.e. advising the caller
-        # to do what they just did.  Name the actual situation instead.
-        raise ValueError(
-            f"{target} is a v1 generation table (pointer names "
-            f"{_live_manifest_name(target)!r}); table_init does not migrate "
-            "v1 tables in place — read it via resolve_table() + "
-            "spark.read.parquet and table_init() a cleared or fresh target "
-            "explicitly"
+            "to nest a manifest layout inside it — clear it or keep "
+            "commitMode=rename for this target"
         )
     expected = _live_manifest_name(target) if ptr_exists else _ABSENT
     seq = (
@@ -1215,8 +1096,6 @@ def table_init(
     conf = df.sparkSession.conf
     if n_buckets is None:
         n_buckets = int(conf.get(MERGE_BUCKETS_CONF, "16"))
-    if split_manifest is None:
-        split_manifest = str(conf.get(MANIFEST_SPLIT_CONF, "false")).lower() == "true"
     if keep_generations is None:
         keep_generations = int(
             conf.get(KEEP_GENERATIONS_CONF, str(KEEP_GENERATIONS))
@@ -1260,20 +1139,12 @@ def table_init(
         "partition_by": partition_by,
         "partition_transform": partition_transform if partition_by else None,
         "schema": df.schema.json(),
+        "parts": [],
     }
-    if split_manifest:
-        by_gkey: dict[tuple, list[dict]] = {}
-        for e in entries:
-            by_gkey.setdefault(_gkey(e), []).append(e)
-        manifest["parts"] = [
-            _write_part(target, b, fs, [], part=p)
-            for (p, b), fs in sorted(
-                by_gkey.items(), key=lambda kv: (kv[0][0] or "", kv[0][1])
-            )
-        ]
-    else:
-        manifest["files"] = entries
-        manifest["tombstones"] = []
+    by_gkey: dict[tuple, tuple[list, list]] = {}
+    for e in entries:
+        by_gkey.setdefault(_gkey(e), ([], []))[0].append(e)
+    manifest = _man_update(target, manifest, by_gkey, seq)
     _commit_manifest(target, manifest, expect_current=expected)
     return {"files": len(entries), "n_buckets": n_buckets}
 
@@ -1356,24 +1227,21 @@ def _may_mask(entry: dict, tomb: dict, key: str) -> bool:
 def _mask_split(
     man: dict,
     entries: list[dict],
-    tombstones: list[dict] | None = None,
+    tombstones: list[dict],
     return_maskers: bool = False,
 ):
     """Partition ``entries`` into (clean, dirty, relevant_tombstones):
     a file is CLEAN when no live tombstone :func:`_may_mask` it — it
     takes the plain-scan path, paying zero join; the anti-join runs
     only over the dirty files, against only the tombstones that can
-    affect at least one of them.  Pure manifest arithmetic, no I/O.
-    ``tombstones`` defaults to the inline listing; split-manifest
-    callers pass the part-loaded list explicitly.
+    affect at least one of them.  Pure manifest arithmetic, no I/O:
+    ``tombstones`` is the part-loaded list from :func:`_man_entries`.
 
     With ``return_maskers`` (round 19, the deletion-vector read path)
     a 4th element maps each dirty entry's path to ITS masker list —
     the per-file evidence the DV coverage check needs."""
     key = man["bucket_key"]
     buckets = {e["bucket"] for e in entries}
-    if tombstones is None:
-        tombstones = man.get("tombstones", [])
     tomb_by_bucket: dict[int, list[dict]] = {}
     for t in tombstones:
         if t["bucket"] in buckets:
@@ -1527,7 +1395,7 @@ def _masked_scan(
     target: str,
     man: dict,
     entries: list[dict],
-    tombstones: list[dict] | None = None,
+    tombstones: list[dict],
 ) -> DataFrame:
     """Scan ``entries`` under ``man``'s schema with merge-on-read
     tombstones applied — the ONE read path every v2 reader goes
@@ -1755,7 +1623,7 @@ def _manifest_at(target: str, at: str | None) -> dict:
             f"manifest {at!r} not retained in {target} "
             f"(history: {table_history(target)})"
         )
-    return _read_json(path)
+    return _read_root(path)
 
 
 def _partition_pred(man: dict, preds, where_in, explicit):
@@ -1850,8 +1718,8 @@ def table_read(
     [min, max] for ``col`` cannot intersect the range are never
     scanned — the Iceberg/Delta scan-planning core, reaching
     predicates bucket arithmetic can't (the bucket key hashes away
-    order).  On a split table a range read parses every part —
-    O(buckets), the layout's stated cost — and then prunes per entry.
+    order).  A range read parses every part — O(buckets), the
+    layout's stated cost — and then prunes per entry.
     Files without recorded stats for ``col`` are kept (absent =
     unknown); the residual filters still apply row-level, pushed into
     the parquet scan as usual.
@@ -1870,9 +1738,9 @@ def table_read(
     partition) — partition-level selection with NO residual row
     filter, the "read one day" primitive.  Independently, ``where`` /
     ``where_in`` predicates ON the partition column prune partitions
-    automatically BEFORE any file-stats pass — on a split table the
-    pruned partitions' manifest parts are never even parsed (metered
-    by :data:`MANIFEST_IO`)."""
+    automatically BEFORE any file-stats pass — the pruned partitions'
+    manifest parts are never even parsed (metered by
+    :data:`MANIFEST_IO`)."""
     from pyspark.sql import functions as F
 
     man = _manifest_at(target, at)
@@ -2065,8 +1933,8 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
         .collect()
     )
     touched_set = set(touched)
-    # Split tables: this loads ONLY the touched buckets' parts — the
-    # merge's driver-side manifest parse is O(update footprint).
+    # This loads ONLY the touched buckets' parts — the merge's
+    # driver-side manifest parse is O(update footprint).
     rewritten, touched_tombs = _man_entries(target, man, buckets=touched_set)
     if touched_tombs:
         # A CoW merge's base_slice is the RAW file rows; live merge-on-
@@ -2136,38 +2004,29 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
 
 
 def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> None:
-    """Reclaim superseded manifests and their data files, keeping the
-    live manifest plus the newest ``keep_generations - 1`` others by
-    commit SEQUENCE (retention is the TABLE PROPERTY recorded in the
-    just-committed manifest — round 18; default
+    """Reclaim superseded roots and the data only they reference,
+    keeping the live root plus the newest ``keep_generations - 1``
+    others by commit SEQUENCE (retention is the TABLE PROPERTY recorded
+    in the just-committed root — round 18; default
     :data:`KEEP_GENERATIONS`).  Runs after the pointer swap — a crash
     here costs disk, never correctness.
 
-    Deletion discipline: only what is PROVABLY unreferenced.
-
-    * inline roots being pruned list their data files directly —
-      deleted minus anything a kept manifest still references;
-    * split roots being pruned: a part file also referenced by a kept
-      root is carried state — untouched.  DEAD parts (referenced by
-      pruned roots only) are loaded to enumerate their data files,
-      and kept parts are loaded ONLY for those same buckets (the only
-      place an overlap can exist, since append/MoR carry old entries
-      into the replacement part) — so the commit-path pruner stays
-      O(changed buckets), never O(table);
-    * files referenced by NO manifest at all — possibly an IN-FLIGHT
-      concurrent commit's data that has not reached its manifest
-      write yet — age out past :data:`ORPHAN_GRACE_S` via the
-      directory walk, which needs the FULL kept reference set and
-      therefore runs only when every kept root is inline; split
-      tables defer orphan reclamation to :func:`table_vacuum` (the
-      same split Iceberg makes: expire-snapshots is a commit-path
-      job, remove-orphan-files a maintenance job).
+    Deletion discipline: only what is PROVABLY unreferenced.  A part
+    file also referenced by a kept root is carried state — untouched.
+    DEAD parts (referenced by pruned roots only) are loaded to
+    enumerate their data files, and kept parts are loaded ONLY for
+    those same groups (the only place an overlap can exist, since
+    append/MoR carry old entries into the replacement part) — so the
+    commit-path pruner stays O(changed buckets), never O(table).
+    Files referenced by NO manifest (crashed or in-flight commits) are
+    left to :func:`table_vacuum`, which holds the full reference set —
+    the same split Iceberg makes: expire-snapshots is a commit-path
+    job, remove-orphan-files a maintenance job.
     """
-    import time
 
-    def _try_read(name_or_rel: str) -> dict | None:
+    def _try_read(rel: str, read=_read_json) -> dict | None:
         try:
-            return _read_json(os.path.join(target, name_or_rel))
+            return read(os.path.join(target, rel))
         except (OSError, ValueError, KeyError, TypeError):
             return None
 
@@ -2191,7 +2050,7 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
 
     try:
         if cur_man is None:  # the committer passes its dict; re-read otherwise
-            cur_man = _try_read(current)
+            cur_man = _try_read(current, _read_root)
         keep_n = (
             int(cur_man.get("keep_generations") or KEEP_GENERATIONS)
             if cur_man
@@ -2207,36 +2066,21 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
         )
         keep = [current] + manifests[: keep_n - 1]
         pruned = manifests[keep_n - 1 :]
-        kept_parts: set[str] = set()
-        kept_data: set[str] = set()
-        kept_split_refs: list[dict] = []
-        any_kept_split = False
+        kept_refs: list[dict] = []
         for n in keep:
-            man = cur_man if n == current else _try_read(n)
+            man = cur_man if n == current else _try_read(n, _read_root)
             if man is None:
                 # Unreadable kept manifest: skip pruning entirely —
                 # never delete files we cannot prove unreferenced.
                 return
-            if "parts" in man:
-                any_kept_split = True
-                kept_parts |= {r["path"] for r in man["parts"]}
-                kept_split_refs.extend(man["parts"])
-            else:
-                d = data_refs(man)
-                if d is None:
-                    return  # malformed kept manifest: delete nothing
-                kept_data |= d
+            kept_refs.extend(man["parts"])
+        kept_parts = {r["path"] for r in kept_refs}
         dead_parts: dict[str, tuple] = {}  # rel path -> gkey
-        pruned_data: set[str] = set()
         for n in pruned:
-            man = _try_read(n)
-            if man is not None:
-                if "parts" in man:
-                    for r in man["parts"]:
-                        if r["path"] not in kept_parts:
-                            dead_parts[r["path"]] = _gkey(r)
-                else:
-                    pruned_data |= data_refs(man) or set()
+            man = _try_read(n, _read_root)
+            for r in man["parts"] if man is not None else ():
+                if r["path"] not in kept_parts:
+                    dead_parts[r["path"]] = _gkey(r)
             try:
                 os.remove(os.path.join(target, n))
             except OSError:
@@ -2251,15 +2095,16 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
                 # part PER TOUCHED BUCKET, so a dead part cannot prove
                 # it dead — an unloaded kept part of another bucket may
                 # still reference it.  table_vacuum (full reference
-                # set) owns DV reclamation on split tables.
+                # set) owns DV reclamation.
                 d -= {t["dv"] for t in doc.get("tombstones", []) if t.get("dv")}
                 dead_data |= d
         # Kept parts can share data files with dead parts only in the
         # dead parts' own (partition, bucket) groups (a gkey's listing
         # lives in exactly one part per root) — load just those.
         dead_gkeys = set(dead_parts.values())
+        kept_data: set[str] = set()
         loaded: set[str] = set()
-        for r in kept_split_refs:
+        for r in kept_refs:
             if _gkey(r) in dead_gkeys and r["path"] not in loaded:
                 loaded.add(r["path"])
                 doc = _try_read(r["path"])
@@ -2267,42 +2112,9 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
                 if d is None:
                     return  # cannot prove unreferenced: delete nothing
                 kept_data |= d
-        for rel in sorted((dead_data | pruned_data) - kept_data):
+        for rel in sorted(dead_data - kept_data) + list(dead_parts):
             try:
                 os.remove(os.path.join(target, rel))
-            except OSError:
-                pass
-        for rel in dead_parts:
-            try:
-                os.remove(os.path.join(target, rel))
-            except OSError:
-                pass
-        if any_kept_split:
-            # No full kept-reference set in hand: leave unreferenced-
-            # file aging (and empty-dir sweeping) to table_vacuum.
-            return
-        now = time.time()
-        data_root = os.path.join(target, DATA_DIR)
-        for dirpath, _dirnames, filenames in os.walk(data_root, topdown=False):
-            for fn in filenames:
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, target).replace(os.sep, "/")
-                if rel in kept_data:
-                    continue
-                if rel in pruned_data or rel in dead_data:
-                    pass  # committed-then-superseded: delete now
-                else:
-                    try:
-                        if now - os.path.getmtime(full) < ORPHAN_GRACE_S:
-                            continue  # possibly in-flight — leave it
-                    except OSError:
-                        continue
-                try:
-                    os.remove(full)
-                except OSError:
-                    pass
-            try:
-                os.rmdir(dirpath)  # only succeeds when emptied
             except OSError:
                 pass
     except OSError:
@@ -2335,10 +2147,9 @@ def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
     }
 
 
-def _files_for_keys(spark, man: dict, keys: list, target: str = "") -> list[dict]:
+def _files_for_keys(spark, man: dict, keys: list, target: str) -> list[dict]:
     """Manifest entries whose bucket can contain one of ``keys`` (kept
-    as the test-visible seam; split tables load only those buckets'
-    parts)."""
+    as the test-visible seam; only those buckets' parts are loaded)."""
     wanted = _buckets_for_keys(spark, man, keys)
     return _man_entries(target, man, buckets=wanted)[0]
 
@@ -2352,9 +2163,8 @@ def table_lookup(spark, target: str, keys: list) -> DataFrame:
     ranges exclude the probe).  At 100 TB / 32k buckets a lookup
     touches a few GB instead of the table; the residual filter inside
     the scanned files is an ordinary pushed-down parquet predicate.
-    On a split-manifest table the driver likewise parses only those
-    buckets' manifest parts.  Returns an empty (correctly-typed) frame
-    when no bucket matches.
+    The driver likewise parses only those buckets' manifest parts.
+    Returns an empty (correctly-typed) frame when no bucket matches.
 
     NULL keys follow SQL ``IN`` semantics end to end: the residual
     ``isin`` never matches NULL, so stats pruning may ignore NULL
@@ -2422,9 +2232,9 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
         # as table_compact; a no-op generation would evict a retained
         # time-travel manifest for nothing).
         return {"new_files": 0, "total_files": _man_file_count(man)}
-    # Split tables: only the appended buckets' parts are loaded and
-    # rewritten (old entries carry INTO the new part; other buckets'
-    # parts carry by reference).
+    # Only the appended buckets' parts are loaded and rewritten (old
+    # entries carry INTO the new part; other buckets' parts carry by
+    # reference).
     manifest = _man_update(
         target, man, _group_listings(target, man, new_files=entries), new_seq
     )
@@ -2619,11 +2429,25 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
     # task holds whole single-bucket files just written above), so the
     # tombstone write needs no exchange — round-19 optimization.
     # Round-20 guard (VERDICT r19 #4): that premise only holds while
-    # every delta file fits one scan task — past maxPartitionBytes a
-    # file splits across tasks and partitionBy would write one
-    # tombstone file PER TASK per bucket; keep the repartition then.
-    split_bytes = _size_bytes(
-        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    # every delta file fits one scan task — past the split size a file
+    # splits across tasks and partitionBy would write one tombstone
+    # file PER TASK per bucket; keep the repartition then.  The split
+    # size is Spark's FilePartition.maxSplitBytes: min(maxPartitionBytes,
+    # max(openCostInBytes, totalBytes / minPartitionNum)), each file
+    # counting its length plus the open cost (ADVICE r20 #1).
+    conf = spark.conf
+    open_cost = _size_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    min_parts = int(
+        conf.get("spark.sql.files.minPartitionNum", None)
+        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        or spark.sparkContext.defaultParallelism
+    )
+    split_bytes = min(
+        _size_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m")),
+        max(
+            open_cost,
+            sum((e.get("bytes") or 0) + open_cost for e in entries) // min_parts,
+        ),
     )
     one_task_per_file = all(
         e.get("bytes") is not None and e["bytes"] < split_bytes
@@ -2687,31 +2511,22 @@ def table_compact(
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     mrpf = man.get("max_records_per_file")
 
-    # Per-GKEY (n_files, rows-or-None, n_tombstones) — from part refs
-    # WITHOUT loading any part in split mode (candidate selection is
-    # O(parts) driver work), from the entry lists inline.  Gkeys
-    # holding only tombstones are included (review r17): a tombstone
-    # can live in a bucket with ZERO data files (table_delete of an
-    # absent key) — skipping it would leave readers paying its
-    # anti-join and table_merge refusing the bucket forever.
+    # Per-GKEY (n_files, rows-or-None, n_tombstones) from part refs
+    # WITHOUT loading any part (candidate selection is O(parts) driver
+    # work).  Gkeys holding only tombstones are included (review r17):
+    # a tombstone can live in a bucket with ZERO data files
+    # (table_delete of an absent key) — skipping it would leave readers
+    # paying its anti-join and table_merge refusing the bucket forever.
     meta: dict[tuple, list] = {}
-    if "parts" in man:
-        for ref in man["parts"]:
-            m = meta.setdefault(_gkey(ref), [0, 0, 0])
-            m[0] += ref["files"]
-            m[1] = (
-                None
-                if m[1] is None or ref["rows"] is None
-                else m[1] + ref["rows"]
-            )
-            m[2] += ref["tombstones"]
-    else:
-        for e in man["files"]:
-            m = meta.setdefault(_gkey(e), [0, 0, 0])
-            m[0] += 1
-            m[1] = None if m[1] is None or e.get("rows") is None else m[1] + e["rows"]
-        for t in man.get("tombstones", []):
-            meta.setdefault(_gkey(t), [0, 0, 0])[2] += 1
+    for ref in man["parts"]:
+        m = meta.setdefault(_gkey(ref), [0, 0, 0])
+        m[0] += ref["files"]
+        m[1] = (
+            None
+            if m[1] is None or ref["rows"] is None
+            else m[1] + ref["rows"]
+        )
+        m[2] += ref["tombstones"]
 
     def needs_packing(nf: int, rows) -> bool:
         if nf < min_files:
@@ -3016,9 +2831,9 @@ def table_drop_column(target: str, name: str) -> dict:
 
 def table_stats(target: str) -> dict:
     """Table-level summary from manifest METADATA alone — no data I/O,
-    and on a split table no part loads either (the root's refs carry
-    counts/rows/bytes): files, rows (None when any file predates row
-    counts), bytes, live tombstone files, non-empty buckets, and the
+    and no part loads either (the root's refs carry counts/rows/
+    bytes): files, rows (None when any file predates row counts),
+    bytes, live tombstone files, non-empty buckets, and the
     bucket-skew ratio (max bucket bytes / mean — the number that says
     whether the hash key is balanced enough for the rewrite
     granularity).  The observability op a maintenance scheduler polls
@@ -3026,41 +2841,22 @@ def table_stats(target: str) -> dict:
     man = _load_manifest(target)
     per_bucket: dict[int, dict] = {}
     partitions: set = set()
-    if "parts" in man:
-        for r in man["parts"]:
-            if r.get("part") is not None:
-                partitions.add(r["part"])
-            b = per_bucket.setdefault(
-                r["bucket"], {"files": 0, "rows": 0, "bytes": 0, "tombstones": 0}
-            )
-            # Accumulate (round 19): a partitioned bucket has one part
-            # ref PER partition, plus possibly a tombstone ref.
-            b["files"] += r["files"]
-            b["rows"] = (
-                None
-                if b["rows"] is None or r["rows"] is None
-                else b["rows"] + r["rows"]
-            )
-            b["bytes"] += r["bytes"]
-            b["tombstones"] += r["tombstones"]
-    else:
-        for e in man["files"]:
-            if e.get("part") is not None:
-                partitions.add(e["part"])
-            b = per_bucket.setdefault(
-                e["bucket"], {"files": 0, "rows": 0, "bytes": 0, "tombstones": 0}
-            )
-            b["files"] += 1
-            b["rows"] = (
-                None
-                if b["rows"] is None or e.get("rows") is None
-                else b["rows"] + e["rows"]
-            )
-            b["bytes"] += e.get("bytes") or 0
-        for t in man.get("tombstones", []):
-            per_bucket.setdefault(
-                t["bucket"], {"files": 0, "rows": 0, "bytes": 0, "tombstones": 0}
-            )["tombstones"] += 1
+    for r in man["parts"]:
+        if r.get("part") is not None:
+            partitions.add(r["part"])
+        b = per_bucket.setdefault(
+            r["bucket"], {"files": 0, "rows": 0, "bytes": 0, "tombstones": 0}
+        )
+        # Accumulate (round 19): a partitioned bucket has one part
+        # ref PER partition, plus possibly a tombstone ref.
+        b["files"] += r["files"]
+        b["rows"] = (
+            None
+            if b["rows"] is None or r["rows"] is None
+            else b["rows"] + r["rows"]
+        )
+        b["bytes"] += r["bytes"]
+        b["tombstones"] += r["tombstones"]
     rows_known = [b["rows"] for b in per_bucket.values()]
     bucket_bytes = [b["bytes"] for b in per_bucket.values()]
     mean_bytes = sum(bucket_bytes) / len(bucket_bytes) if bucket_bytes else 0
@@ -3075,7 +2871,6 @@ def table_stats(target: str) -> dict:
         "bucket_skew": (
             round(max(bucket_bytes) / mean_bytes, 3) if mean_bytes else None
         ),
-        "split_manifest": "parts" in man,
         "cluster_by": man.get("cluster_by"),
         "keep_generations": int(man.get("keep_generations") or KEEP_GENERATIONS),
         "partition_by": man.get("partition_by"),
@@ -3143,7 +2938,7 @@ def table_set_retention(target: str, keep_generations: int) -> dict:
 def table_drop_partition(target: str, value) -> dict:
     """Drop one PARTITION from a partitioned v2 table as a
     METADATA-ONLY commit (round 19): the new manifest simply omits the
-    partition's entries/parts — no data file is read, written, or
+    partition's parts — no data file is read, written, or
     deleted at commit time (the files stay referenced by retained
     older generations for time travel and are reclaimed by the pruner
     / :func:`table_vacuum` as those age out).  This is the
@@ -3167,21 +2962,13 @@ def table_drop_partition(target: str, value) -> dict:
         )
     part = NULL_PART if value is None else str(value)
     new_seq = int(man.get("seq", -1)) + 1
-    if "parts" in man:
-        keep = [r for r in man["parts"] if r.get("part") != part]
-        dropped = len(man["parts"]) - len(keep)
-        if not dropped:
-            return {"dropped_files": 0, "partition": part}
-        dropped_files = sum(
-            r["files"] for r in man["parts"] if r.get("part") == part
-        )
-        manifest = dict(man, parts=keep, seq=new_seq)
-    else:
-        keep_f = [e for e in man["files"] if e.get("part") != part]
-        dropped_files = len(man["files"]) - len(keep_f)
-        if not dropped_files:
-            return {"dropped_files": 0, "partition": part}
-        manifest = dict(man, files=keep_f, seq=new_seq)
+    keep = [r for r in man["parts"] if r.get("part") != part]
+    if len(keep) == len(man["parts"]):
+        return {"dropped_files": 0, "partition": part}
+    dropped_files = sum(
+        r["files"] for r in man["parts"] if r.get("part") == part
+    )
+    manifest = dict(man, parts=keep, seq=new_seq)
     _commit_manifest(target, manifest, expect_current=base_name)
     return {"dropped_files": dropped_files, "partition": part}
 
@@ -3196,7 +2983,7 @@ def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
     This is the one deliberately O(table-manifest) driver job: it
     loads every retained root AND every retained part to build the
     full live-reference set — exactly the cost the commit-path pruner
-    avoids by construction (split tables defer orphan aging to here).
+    avoids by construction (orphan aging is deferred to here).
     Run it as a scheduled maintenance window, not per commit.
 
     Reclaims: crashed-commit data/part orphans, roots beyond the
@@ -3214,7 +3001,7 @@ def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
         raise ValueError(
             f"{target} is not a v2 manifest table (pointer names {live!r})"
         )
-    man = _read_json(os.path.join(target, live))
+    man = _read_root(os.path.join(target, live))
     keep_n = int(man.get("keep_generations") or KEEP_GENERATIONS)
     others = sorted(
         (
@@ -3229,22 +3016,13 @@ def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
     excess_roots = others[keep_n - 1 :]
     refs: set[str] = set()
     for name in retained:
-        doc = _read_json(os.path.join(target, name))  # raises → abort
-        if "parts" in doc:
-            for r in doc["parts"]:
-                refs.add(r["path"])
-                part = _read_json(os.path.join(target, r["path"]))
-                refs |= {e["path"] for e in part["files"]}
-                refs |= {t["path"] for t in part["tombstones"]}
-                refs |= {
-                    t["dv"] for t in part["tombstones"] if t.get("dv")
-                }
-        else:
-            refs |= {e["path"] for e in doc["files"]}
-            refs |= {t["path"] for t in doc.get("tombstones", [])}
-            refs |= {
-                t["dv"] for t in doc.get("tombstones", []) if t.get("dv")
-            }
+        doc = _read_root(os.path.join(target, name))  # raises → abort
+        for r in doc["parts"]:
+            refs.add(r["path"])
+            part = _read_json(os.path.join(target, r["path"]))
+            refs |= {e["path"] for e in part["files"]}
+            refs |= {t["path"] for t in part["tombstones"]}
+            refs |= {t["dv"] for t in part["tombstones"] if t.get("dv")}
     now = time.time()
     removed = {"data": 0, "parts": 0}
     for sub, kind in ((DATA_DIR, "data"), (PARTS_DIR, "parts")):

@@ -88,3 +88,14 @@ def assert_query_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: s
         f"[{name}] value mismatch ({len(mismatches)}/{len(srows)} rows); first 3:\n"
         + "\n".join(f"  spark={a}\n  duck ={b}" for _, a, b in mismatches[:3])
     )
+
+
+def manifest_listing(target: str, man: dict | None = None):
+    """(data files, tombstones) a manifest table lists — the live root,
+    or ``man`` when given — read through the commit layer's one
+    listing accessor, so tests never depend on the root's layout."""
+    from pyspark_analytics_library_spark.sources import commit
+
+    if man is None:
+        man = commit._load_manifest(target)
+    return commit._man_entries(target, man)

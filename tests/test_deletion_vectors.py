@@ -34,6 +34,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.sources import commit as cm
+from tests.conftest import manifest_listing
 
 
 def _base(spark, n=1000):
@@ -62,7 +63,7 @@ def _plan(df) -> str:
 @pytest.fixture()
 def dvtable(spark, tmp_path):
     target = str(tmp_path / "dv")
-    cm.table_init(_base(spark), target, "k", n_buckets=8, split_manifest=True)
+    cm.table_init(_base(spark), target, "k", n_buckets=8)
     return target
 
 
@@ -86,8 +87,7 @@ def test_dv_census_covers_every_base_file(spark, dvtable):
         spark.createDataFrame([(1, -1.0)], "k long, v double"),
         position_deletes=True,
     )
-    man = cm._load_manifest(dvtable)
-    files, tombs = cm._man_entries(dvtable, man)
+    files, tombs = manifest_listing(dvtable)
     assert all(t.get("dv") for t in tombs)
     doc = json.load(open(os.path.join(dvtable, tombs[0]["dv"])))
     base_in_bucket = [
@@ -173,8 +173,7 @@ def test_unreadable_dv_degrades_to_fallback_not_guess(spark, dvtable):
         spark.createDataFrame([(7, -1.0)], "k long, v double"),
         position_deletes=True,
     )
-    man = cm._load_manifest(dvtable)
-    _, tombs = cm._man_entries(dvtable, man)
+    _, tombs = manifest_listing(dvtable)
     with open(os.path.join(dvtable, tombs[0]["dv"]), "w") as f:
         f.write("{corrupt")
     got_df = cm.table_read(spark, dvtable)
@@ -193,7 +192,7 @@ def test_census_over_cap_falls_back_to_plain_tombstones(spark, dvtable):
     finally:
         spark.conf.unset(cm.DV_MAX_POSITIONS_CONF)
     assert st["position_deletes"] is False
-    _, tombs = cm._man_entries(dvtable, cm._load_manifest(dvtable))
+    _, tombs = manifest_listing(dvtable)
     assert not any(t.get("dv") for t in tombs)
     exp = _expected(overrides=[(97 * i, -1.0) for i in range(10)])
     assert _got(spark, dvtable) == exp
@@ -228,7 +227,7 @@ def test_dv_on_partitioned_table_with_partition_move(spark, tmp_path):
         (F.col("id") * 1.5).alias("v"),
     )
     cm.table_init(
-        df, target, "k", n_buckets=4, split_manifest=True,
+        df, target, "k", n_buckets=4,
         partition_by="d", partition_transform="day",
     )
     ups = spark.createDataFrame(
@@ -246,7 +245,7 @@ def test_dv_null_key_masking(spark, tmp_path):
     df = spark.createDataFrame(
         [(None, 1.0), (2, 2.0), (3, 3.0)], "k long, v double"
     )
-    cm.table_init(df, target, "k", n_buckets=2, split_manifest=True)
+    cm.table_init(df, target, "k", n_buckets=2)
     ups = spark.createDataFrame([(None, -1.0)], "k long, v double")
     cm.table_merge_mor(spark, target, ups, position_deletes=True)
     rows = sorted(

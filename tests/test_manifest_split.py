@@ -1,13 +1,10 @@
-"""Split manifests (round 18, VERDICT r17 next #3/#4): manifest-list
-root + per-bucket part files, retention as a table property, and
+"""Manifest-list tables (round 18, VERDICT r17 next #3/#4): root +
+per-bucket part files, retention as a table property, and
 table_vacuum.
 
-The split layout's CONTRACT is driver-side manifest I/O bounded by the
+The layout's CONTRACT is driver-side manifest I/O bounded by the
 touched buckets, not the table — asserted here against the
-MANIFEST_IO counter (part files actually read), not assumed.  Every
-write path (merge / append / merge-on-read / delete / compact) is also
-checked for row-level equality with what the same ops produce on an
-inline-manifest table, so the two layouts stay one semantics.
+MANIFEST_IO counter (part files actually read), not assumed.
 """
 
 from __future__ import annotations
@@ -19,6 +16,7 @@ from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.sources import commit as cm
 from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
+from tests.conftest import manifest_listing
 
 
 def _base(spark, n=400):
@@ -41,7 +39,7 @@ def _reset_io():
 def _split_init(spark, tmp_path, n_buckets=8, **kw):
     target = str(tmp_path / "t")
     cm.table_init(
-        _base(spark), target, "o_orderkey", n_buckets=n_buckets, split_manifest=True, **kw
+        _base(spark), target, "o_orderkey", n_buckets=n_buckets, **kw
     )
     return target
 
@@ -106,8 +104,8 @@ def test_split_pruned_range_read_skips_parts(spark, tmp_path):
     """table_read(where=) on a split table: parts are parsed
     (O(buckets) — the layout's stated range-read cost; ref-level
     column bounds could never prune a hash-mixed bucket), then FILE
-    entries prune on their footer stats exactly as inline — rows
-    exact, banded files skipped."""
+    entries prune on their footer stats — rows exact, banded files
+    skipped."""
     target = str(tmp_path / "t")
     frame = _base(spark, 1000)
     # Disjoint value bands land in distinct COMMITS (init + append),
@@ -115,7 +113,6 @@ def test_split_pruned_range_read_skips_parts(spark, tmp_path):
     # entry-level pruning fires.
     cm.table_init(
         frame.filter(F.col("o_orderkey") < 100), target, "o_orderkey", n_buckets=4,
-        split_manifest=True,
     )
     cm.table_append(spark, target, frame.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") < 600)))
     man = cm._load_manifest(target)
@@ -130,28 +127,34 @@ def test_split_pruned_range_read_skips_parts(spark, tmp_path):
 
 
 def test_split_append_mor_delete_compact_roundtrip(spark, tmp_path):
-    """The maintenance family on a split table produces row-for-row
-    what the inline table produces, and compaction packs per-bucket
-    listings back to one file each with tombstones cleared."""
+    """The maintenance family (append / merge-on-read / delete /
+    compact) produces row-for-row what a row-level model of the same
+    ops produces, and compaction packs per-bucket listings back to one
+    file each with tombstones cleared."""
     base = _base(spark)
     tgt_s = str(tmp_path / "split")
-    tgt_i = str(tmp_path / "inline")
-    cm.table_init(base, tgt_s, "o_orderkey", n_buckets=4, split_manifest=True)
-    cm.table_init(base, tgt_i, "o_orderkey", n_buckets=4)
+    cm.table_init(base, tgt_s, "o_orderkey", n_buckets=4)
 
     extra = _base(spark).filter(F.col("o_orderkey") >= 395)
     updates = base.filter(F.col("o_orderkey") % 50 == 0).select(
         "o_orderkey", "o_custkey", F.lit("U").alias("o_orderstatus"), F.lit(1.0).alias("o_totalprice")
     )
-    for tgt in (tgt_s, tgt_i):
-        cm.table_append(spark, tgt, extra)
-        cm.table_merge_mor(spark, tgt, updates)
-        cm.table_delete(spark, tgt, [3, 7])
-    assert _rows(spark, tgt_s) == _rows(spark, tgt_i)
+    cm.table_append(spark, tgt_s, extra)
+    cm.table_merge_mor(spark, tgt_s, updates)
+    cm.table_delete(spark, tgt_s, [3, 7])
+    # Model: append is a log (duplicates coexist); the upsert masks
+    # every older row of its keys; the delete masks keys 3 and 7.
+    upd = [tuple(r) for r in updates.collect()]
+    gone = {r[0] for r in upd} | {3, 7}
+    expect = sorted(
+        [tuple(r) for r in base.unionAll(extra).collect() if r[0] not in gone]
+        + upd
+    )
+    assert _rows(spark, tgt_s) == expect
 
     st = cm.table_compact(spark, tgt_s)
     assert st["tombstones_cleared"] >= 1
-    assert _rows(spark, tgt_s) == _rows(spark, tgt_i)
+    assert _rows(spark, tgt_s) == expect
     man = cm._load_manifest(tgt_s)
     assert all(r["tombstones"] == 0 for r in man["parts"])
     assert all(r["files"] == 1 for r in man["parts"]), (
@@ -244,7 +247,7 @@ def test_retention_property_and_vacuum(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _base(spark)
     cm.table_init(
-        base, target, "o_orderkey", n_buckets=4, split_manifest=True, keep_generations=3
+        base, target, "o_orderkey", n_buckets=4, keep_generations=3
     )
     extra = _base(spark).filter(F.col("o_orderkey") >= 395)
     cm.table_append(spark, target, extra)
@@ -308,13 +311,24 @@ def test_vacuum_aborts_on_unreadable_retained_part(spark, tmp_path):
     assert n_files_after == n_files_before
 
 
-def test_inline_default_unchanged(spark, tmp_path):
-    """The default (no kwarg, no conf) stays the inline layout — every
-    committed attestation keeps its exact shape."""
-    target = str(tmp_path / "t")
-    cm.table_init(_base(spark), target, "o_orderkey", n_buckets=4)
-    man = cm._load_manifest(target)
-    assert "files" in man and "parts" not in man
+def test_root_without_parts_list_is_refused_by_name(spark, tmp_path):
+    """A root manifest with no ``parts`` list (an inline-layout root an
+    older version wrote) must fail loudly, naming the file — never be
+    read as an empty table."""
+    import json
+
+    target = _split_init(spark, tmp_path, n_buckets=2)
+    live = cm.table_history(target)[0]
+    path = os.path.join(target, live)
+    with open(path, encoding="utf-8") as f:
+        man = json.load(f)
+    files, tombs = manifest_listing(target, man)
+    del man["parts"]
+    man.update(files=files, tombstones=tombs)
+    with open(path, "w", encoding="utf-8") as f:
+        json.dump(man, f)
+    with pytest.raises(ValueError, match=live):
+        cm.table_read(spark, target)
 
 
 def _grid(spark, n=10_000):
@@ -326,10 +340,10 @@ def _grid(spark, n=10_000):
     )
 
 
-def _kept(man, preds):
+def _kept(files, preds):
     return [
         e
-        for e in man["files"]
+        for e in files
         if all(cm._stats_overlap(e, c, lo, hi) for c, lo, hi in preds)
     ]
 
@@ -351,9 +365,9 @@ def test_zorder_clustering_prunes_both_dimensions(spark, tmp_path):
         grid, tgt_1, "o_orderkey", n_buckets=1,
         cluster_by="x", max_records_per_file=500,
     )
-    man_z = cm._load_manifest(tgt_z)
-    man_1 = cm._load_manifest(tgt_1)
-    total = len(man_z["files"])
+    man_z = manifest_listing(tgt_z)[0]
+    man_1 = manifest_listing(tgt_1)[0]
+    total = len(man_z)
     assert total >= 15  # 10k rows / 500 per file
 
     x_band = [("x", 10, 19, None)]
@@ -407,11 +421,11 @@ def test_zorder_property_survives_compaction(spark, tmp_path):
     )
     cm.table_delete(spark, target, [0, 1])
     cm.table_compact(spark, target, min_files=1)
-    man = cm._load_manifest(target)
-    assert man["cluster_by"] == ["x", "y"]
-    total = len(man["files"])
+    assert cm._load_manifest(target)["cluster_by"] == ["x", "y"]
+    files = manifest_listing(target)[0]
+    total = len(files)
     assert total >= 8
-    assert len(_kept(man, [("y", 0, 4)])) < total
+    assert len(_kept(files, [("y", 0, 4)])) < total
     expect = sorted(
         r["o_orderkey"]
         for r in grid.filter(
@@ -485,8 +499,8 @@ def test_where_in_and_lookup_stats_pruning(spark, tmp_path):
     cm.table_append(
         spark, target, frame.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") < 600))
     )
-    man = cm._load_manifest(target)
-    assert len(man["files"]) >= 2
+    files = manifest_listing(target)[0]
+    assert len(files) >= 2
 
     # where_in across both bands + a value in neither: rows exact.
     got = sorted(
@@ -501,10 +515,10 @@ def test_where_in_and_lookup_stats_pruning(spark, tmp_path):
     # path uses).
     kept = [
         e
-        for e in man["files"]
+        for e in files
         if cm._stats_overlap(e, "o_orderkey", 550, 550, "long")
     ]
-    assert 0 < len(kept) < len(man["files"])
+    assert 0 < len(kept) < len(files)
 
     # Lookup correctness incl. masking: delete then look up.
     cm.table_delete(spark, target, [550])
@@ -544,10 +558,10 @@ def test_prefix_range_serves_like_predicates(spark, tmp_path):
     cm.table_init(frame.filter(F.col("id") < 100), target, "o_orderkey", n_buckets=1)
     cm.table_append(spark, target, frame.filter((F.col("id") >= 100) & (F.col("id") < 200)))
     cm.table_append(spark, target, frame.filter(F.col("id") >= 200))
-    man = cm._load_manifest(target)
+    files = manifest_listing(target)[0]
     lo, hi = cm.prefix_range("beta-")
-    kept = [e for e in man["files"] if cm._stats_overlap(e, "name", lo, hi, "string")]
-    assert 0 < len(kept) < len(man["files"]), "prefix range must prune bands"
+    kept = [e for e in files if cm._stats_overlap(e, "name", lo, hi, "string")]
+    assert 0 < len(kept) < len(files), "prefix range must prune bands"
     got = sorted(
         r["o_orderkey"]
         for r in cm.table_read(spark, target, where=("name", lo, hi))
@@ -558,24 +572,18 @@ def test_prefix_range_serves_like_predicates(spark, tmp_path):
 
 
 def test_table_stats_metadata_only(spark, tmp_path):
-    """table_stats reads manifest metadata only: on a split table ZERO
-    part files (metered), and the summary matches ground truth on both
-    layouts."""
-    base = _base(spark)
-    for split in (True, False):
-        target = str(tmp_path / ("s" if split else "i"))
-        cm.table_init(base, target, "o_orderkey", n_buckets=4, split_manifest=split)
-        cm.table_delete(spark, target, [1])
-        _reset_io()
-        st = cm.table_stats(target)
-        if split:
-            assert cm.MANIFEST_IO["part_reads"] == 0, "stats must not load parts"
-        assert st["rows"] == 400 and st["files"] >= 4
-        assert st["tombstone_files"] >= 1
-        assert st["buckets_nonempty"] == 4 and st["n_buckets"] == 4
-        assert st["split_manifest"] is split
-        assert st["bucket_skew"] >= 1.0
-        assert st["bytes"] > 0
+    """table_stats reads manifest metadata only — ZERO part files
+    (metered) — and the summary matches ground truth."""
+    target = _split_init(spark, tmp_path, n_buckets=4)
+    cm.table_delete(spark, target, [1])
+    _reset_io()
+    st = cm.table_stats(target)
+    assert cm.MANIFEST_IO["part_reads"] == 0, "stats must not load parts"
+    assert st["rows"] == 400 and st["files"] >= 4
+    assert st["tombstone_files"] >= 1
+    assert st["buckets_nonempty"] == 4 and st["n_buckets"] == 4
+    assert st["bucket_skew"] >= 1.0
+    assert st["bytes"] > 0
 
 
 def test_with_commit_retry_wins_the_race(spark, tmp_path):
@@ -625,38 +633,10 @@ def test_with_commit_retry_wins_the_race(spark, tmp_path):
         cm._commit_manifest = real_commit
 
 
-def test_vacuum_on_inline_table(spark, tmp_path):
-    """table_vacuum works on the inline layout too: aged orphans die,
-    referenced files and young orphans survive, excess roots beyond a
-    lowered retention are reclaimed."""
-    target = str(tmp_path / "t")
-    cm.table_init(_base(spark), target, "o_orderkey", n_buckets=2)
-    cm.table_append(spark, target, _base(spark).filter(F.col("o_orderkey") >= 395))
-
-    old_dir = os.path.join(target, cm.DATA_DIR, "c-cafecafecafe", "bucket=0")
-    os.makedirs(old_dir)
-    old_file = os.path.join(old_dir, "orphan.parquet")
-    with open(old_file, "wb") as f:
-        f.write(b"\x00")
-    os.utime(old_file, (1, 1))
-
-    stats = cm.table_vacuum(target)
-    assert stats["data_files_removed"] == 1 and stats["part_files_removed"] == 0
-    assert not os.path.exists(old_file)
-    assert len(cm.table_history(target)) == 2  # retention honored
-    expect = sorted(
-        tuple(r)
-        for r in _base(spark)
-        .unionAll(_base(spark).filter(F.col("o_orderkey") >= 395))
-        .collect()
-    )
-    assert _rows(spark, target) == expect
-
-
 def test_streaming_foreach_batch_appends_into_v2_table(spark, tmp_path):
     """Structured Streaming -> lakehouse sink (the Delta-style
     pattern): a file-source stream lands each micro-batch into the v2
-    split table via foreachBatch + table_append — one atomic commit
+    table via foreachBatch + table_append — one atomic commit
     per micro-batch, readers never see a partial batch.  Semantics
     note, stated honestly: foreachBatch is at-least-once on retry; an
     exactly-once sink would record the batch id in the manifest and
@@ -673,7 +653,7 @@ def test_streaming_foreach_batch_appends_into_v2_table(spark, tmp_path):
 
     target = str(tmp_path / "t")
     cm.table_init(
-        frame.limit(0), target, "o_orderkey", n_buckets=2, split_manifest=True
+        frame.limit(0), target, "o_orderkey", n_buckets=2
     )
     commits = []
 

@@ -23,6 +23,7 @@ from pyspark_analytics_library_spark.sources.scan_queries import (
     scd1_merged,
     scd2_history,
 )
+from tests.conftest import manifest_listing
 
 
 def _residue(target: str) -> list[str]:
@@ -137,123 +138,73 @@ def test_scd2_null_key_base_rows_stay_open(spark):
 # ---------------------------------------------------------------------------
 # Manifest-pointer commit mode (VERDICT r14 #4): the object-store-safe
 # protocol — commit = one atomic small-file pointer swap, never a
-# directory rename.  These tests simulate the crash windows and forbid
-# directory renames outright.
+# directory rename.  The v2 tests below simulate the crash windows and
+# forbid directory renames outright.
 # ---------------------------------------------------------------------------
 
 from pyspark_analytics_library_spark.sources import commit as commit_mod
 
 
 @pytest.fixture
-def manifest_mode(spark):
+def set_commit_mode(spark):
+    """Setter for the sink commit-mode conf, restored after the test."""
     prev = spark.conf.get(commit_mod.MODE_CONF, None)
-    spark.conf.set(commit_mod.MODE_CONF, "manifest")
-    yield
+    yield lambda mode: spark.conf.set(commit_mod.MODE_CONF, mode)
     if prev is None:
         spark.conf.unset(commit_mod.MODE_CONF)
     else:
         spark.conf.set(commit_mod.MODE_CONF, prev)
 
 
-def _read_current(spark, target):
-    return sorted(
-        r["k"]
-        for r in spark.read.parquet(commit_mod.resolve_table(target)).collect()
+@pytest.mark.parametrize("mode", ["rename", "manifest"])
+@pytest.mark.parametrize("name", ["sink_merge_upsert", "sink_merge_scd2"])
+def test_merge_sinks_match_oracle_under_both_commit_modes(
+    spark, oracle, tmp_path, monkeypatch, set_commit_mode, name, mode
+):
+    """Branch equivalence: each merge sink takes the staged-overwrite
+    path under ``rename`` and the manifest-table path (table_init +
+    incremental table_merge + table_read) under ``manifest``; both
+    must reproduce the query's DuckDB oracle."""
+    from pyspark_analytics_library_spark.registry import (
+        REGISTRY,
+        load_all_query_modules,
+    )
+    from pyspark_analytics_library_spark.sources import scan_queries
+    from tests.conftest import TEST_SF_DIR, assert_query_matches_oracle
+
+    load_all_query_modules()
+    # A fresh scratch root per case: table_init refuses to nest a
+    # manifest table inside the flat parquet a rename-mode run leaves
+    # at the same merge target.
+    monkeypatch.setattr(scan_queries, "_SCRATCH", str(tmp_path))
+    set_commit_mode(mode)
+    spec = REGISTRY[name]
+    assert_query_matches_oracle(
+        spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=f"{name}[{mode}]"
     )
 
 
-def test_manifest_commit_swaps_generations_and_prunes(
-    spark, tmp_path, manifest_mode
-):
-    target = str(tmp_path / "mtable")
-    p1 = _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
-    assert p1.startswith(os.path.join(target, "gen-"))
-    assert _read_current(spark, target) == [0, 1, 2]
-    _staged_overwrite(spark.range(10, 12).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [10, 11]
-    _staged_overwrite(spark.range(20, 23).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [20, 21, 22]
-    gens = [n for n in os.listdir(target) if n.startswith("gen-")]
-    assert len(gens) == commit_mod.KEEP_GENERATIONS, gens
-
-
-def test_manifest_crash_before_pointer_swap_keeps_old_generation_live(
-    spark, tmp_path, manifest_mode, monkeypatch
-):
-    """The metadata-sized crash window: generation fully written, crash
-    before the pointer swap → every reader stays on the old generation;
-    the rename protocol's 'target briefly absent' window must not exist
-    at all here."""
-    target = str(tmp_path / "mtable")
-    _staged_overwrite(spark.range(5).select(F.col("id").alias("k")), target)
-    before = _read_current(spark, target)
-
-    def crash(*a, **kw):
-        raise OSError("simulated crash between data write and commit")
-
-    monkeypatch.setattr(commit_mod, "_swap_pointer", crash)
-    with pytest.raises(OSError, match="simulated crash"):
-        _staged_overwrite(
-            spark.range(100, 104).select(F.col("id").alias("k")), target
-        )
-    assert _read_current(spark, target) == before
-    monkeypatch.undo()
-    _staged_overwrite(spark.range(7, 9).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [7, 8]
-
-
-def test_manifest_commit_performs_no_directory_rename(
-    spark, tmp_path, manifest_mode, monkeypatch
-):
-    """Simulated object store: directory rename is NOT available
-    (os.rename raises), and the only atomic primitive is the
-    single-small-file replace — the commit must still succeed, and its
-    one os.replace must target the pointer file."""
-    target = str(tmp_path / "mtable")
-    replaced = []
-
-    def no_rename(*a, **kw):
-        raise AssertionError("manifest commit must not rename directories")
-
-    real_replace = os.replace
-
-    def tracking_replace(src, dst, **kw):
-        replaced.append(dst)
-        assert not os.path.isdir(src), "os.replace used on a directory"
-        return real_replace(src, dst, **kw)
-
-    monkeypatch.setattr(commit_mod.os, "rename", no_rename)
-    monkeypatch.setattr(commit_mod.os, "replace", tracking_replace)
-    _staged_overwrite(spark.range(4).select(F.col("id").alias("k")), target)
-    assert _read_current(spark, target) == [0, 1, 2, 3]
-    assert replaced == [os.path.join(target, commit_mod.CURRENT_POINTER)]
-
-
-def test_manifest_write_failure_leaves_pointer_and_reclaims_partial(
-    spark, tmp_path, manifest_mode
-):
-    target = str(tmp_path / "mtable")
-    _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
-    before = _read_current(spark, target)
-    bad = spark.range(5).select(
-        F.assert_true(F.col("id") < 0).alias("x"), F.col("id").alias("k")
+def test_merge_sinks_refuse_unknown_commit_mode(spark, set_commit_mode):
+    from pyspark_analytics_library_spark.sources.scan_queries import (
+        q_sink_merge_upsert,
     )
-    with pytest.raises(Exception):
-        _staged_overwrite(bad, target)
-    assert _read_current(spark, target) == before
-    gens = [n for n in os.listdir(target) if n.startswith("gen-")]
-    assert len(gens) == 1, f"partial generation survived the error path: {gens}"
+    from tests.conftest import TEST_SF_DIR
+
+    set_commit_mode("bogus")
+    with pytest.raises(ValueError, match="unknown"):
+        q_sink_merge_upsert(spark, TEST_SF_DIR)
 
 
-def test_manifest_refuses_pointerless_nonempty_target(
-    spark, tmp_path, manifest_mode
-):
-    """Nesting generations inside a live rename-mode parquet dir would
-    leave bare-path readers seeing mixed content — refuse eagerly."""
+def test_manifest_refuses_pointerless_nonempty_target(spark, tmp_path):
+    """Nesting a manifest layout inside a live rename-mode parquet dir
+    would leave bare-path readers seeing mixed content — refuse
+    eagerly."""
     target = str(tmp_path / "flat_table")
     spark.range(2).select(F.col("id").alias("k")).write.parquet(target)
     with pytest.raises(ValueError, match="rename-mode"):
-        _staged_overwrite(spark.range(3).select(F.col("id").alias("k")), target)
+        commit_mod.table_init(
+            spark.range(3).select(F.col("id").alias("k")), target, "k"
+        )
 
 
 def test_resolve_table_passthrough_and_corrupt_pointer(tmp_path):
@@ -312,8 +263,7 @@ def test_table_merge_rewrites_strict_subset_of_files(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=8)
-    man1 = commit_mod._load_manifest(target)
-    files1 = {e["path"]: e["bucket"] for e in man1["files"]}
+    files1 = {e["path"]: e["bucket"] for e in manifest_listing(target)[0]}
     assert len(files1) == 8, "one file per non-empty bucket at this size"
 
     # An update batch confined to ONE bucket: take three keys that all
@@ -338,8 +288,7 @@ def test_table_merge_rewrites_strict_subset_of_files(spark, tmp_path):
     assert stats["rewritten_files"] == 1
     assert stats["carried_files"] == 7
 
-    man2 = commit_mod._load_manifest(target)
-    files2 = {e["path"]: e["bucket"] for e in man2["files"]}
+    files2 = {e["path"]: e["bucket"] for e in manifest_listing(target)[0]}
     carried = set(files1) & set(files2)
     assert len(carried) == 7, "untouched files must be carried by path"
     assert all(files1[p] != 3 for p in carried)
@@ -354,9 +303,10 @@ def test_table_merge_rewrites_strict_subset_of_files(spark, tmp_path):
 def test_table_merge_crash_before_pointer_swap_keeps_old_manifest_live(
     spark, tmp_path, monkeypatch
 ):
-    """Same crash matrix as v1: a failure after the merge's data files
-    are written but before the pointer swap must leave readers on the
-    complete OLD file set."""
+    """The crash-before-commit window: a failure after the merge's data
+    files are written but before the pointer swap must leave readers on
+    the complete OLD file set — the rename protocol's 'target briefly
+    absent' window must not exist at all here."""
     from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
 
     target = str(tmp_path / "t")
@@ -399,9 +349,9 @@ def test_table_merge_crash_before_pointer_swap_keeps_old_manifest_live(
 
 
 def test_table_merge_performs_no_directory_rename(spark, tmp_path, monkeypatch):
-    """v2 inherits v1's object-store contract: the ONLY shared-state
-    mutation is the single pointer-file os.replace — no directory
-    rename anywhere in init or merge."""
+    """Simulated object store: directory rename is NOT available, and
+    the ONLY atomic primitive is the single small-file os.replace — no
+    directory rename anywhere in init or merge."""
     import os as os_mod
 
     from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
@@ -440,7 +390,7 @@ def test_v2_prunes_superseded_manifests_and_unreferenced_files(spark, tmp_path):
     target = tmp_path / "t"
     base = _v2_base(spark)
     commit_mod.table_init(base, str(target), "o_orderkey", n_buckets=4)
-    first_files = {e["path"] for e in commit_mod._load_manifest(str(target))["files"]}
+    first_files = {e["path"] for e in manifest_listing(str(target))[0]}
     for i in range(3):
         updates = base.limit(2 + i).select(
             "o_orderkey",
@@ -451,8 +401,7 @@ def test_v2_prunes_superseded_manifests_and_unreferenced_files(spark, tmp_path):
         commit_mod.table_merge(spark, str(target), updates, scd1_merged)
     manifests = [p.name for p in target.glob("manifest-*.json")]
     assert len(manifests) == commit_mod.KEEP_GENERATIONS
-    live = commit_mod._load_manifest(str(target))
-    for e in live["files"]:
+    for e in manifest_listing(str(target))[0]:
         assert (target / e["path"]).exists()
     # Files superseded in every kept manifest are gone from disk.
     kept_refs = set()
@@ -460,7 +409,10 @@ def test_v2_prunes_superseded_manifests_and_unreferenced_files(spark, tmp_path):
         import json
 
         kept_refs |= {
-            e["path"] for e in json.load(open(target / name))["files"]
+            e["path"]
+            for e in manifest_listing(
+                str(target), json.load(open(target / name))
+            )[0]
         }
     on_disk = {
         str(p.relative_to(target)).replace("\\", "/")
@@ -594,9 +546,9 @@ def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=16)
     man = commit_mod._load_manifest(target)
     keys = [5, 17, 123]
-    entries = commit_mod._files_for_keys(spark, man, keys)
+    entries = commit_mod._files_for_keys(spark, man, keys, target)
     # <=3 keys -> <=3 buckets of 16; strictly fewer files than the table.
-    assert 0 < len(entries) <= 3 < len(man["files"])
+    assert 0 < len(entries) <= 3 < len(manifest_listing(target, man)[0])
     got = sorted(
         tuple(r) for r in commit_mod.table_lookup(spark, target, keys).collect()
     )
@@ -779,19 +731,23 @@ def test_table_append_adds_files_without_rewrite(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-    files1 = {e["path"] for e in commit_mod._load_manifest(target)["files"]}
+    files1 = {e["path"] for e in manifest_listing(target)[0]}
 
     batch = _v2_base(spark).filter(F.col("o_orderkey") < 10)
     stats = commit_mod.table_append(spark, target, batch)
     assert stats["new_files"] >= 1
 
     man2 = commit_mod._load_manifest(target)
-    files2 = {e["path"] for e in man2["files"]}
+    files2 = {e["path"] for e in manifest_listing(target, man2)[0]}
     assert files1 <= files2, "append must never rewrite or drop a file"
     expect = sorted(tuple(r) for r in base.unionAll(batch).collect())
     assert _v2_rows(spark, target) == expect
     # Appended entries are gen-stamped with the commit seq.
-    new_gens = {e["gen"] for e in man2["files"] if e["path"] not in files1}
+    new_gens = {
+        e["gen"]
+        for e in manifest_listing(target, man2)[0]
+        if e["path"] not in files1
+    }
     assert new_gens == {int(man2["seq"])}
 
     with pytest.raises(ValueError, match="does not match table schema"):
@@ -808,7 +764,7 @@ def test_table_merge_mor_masks_old_rows_newest_wins(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-    files1 = {e["path"] for e in commit_mod._load_manifest(target)["files"]}
+    files1 = {e["path"] for e in manifest_listing(target)[0]}
 
     updates = base.filter(F.col("o_orderkey") % 50 == 0).select(
         "o_orderkey",
@@ -818,7 +774,7 @@ def test_table_merge_mor_masks_old_rows_newest_wins(spark, tmp_path):
     )
     stats = commit_mod.table_merge_mor(spark, target, updates)
     assert stats["delta_files"] >= 1 and stats["tombstone_files"] >= 1
-    files2 = {e["path"] for e in commit_mod._load_manifest(target)["files"]}
+    files2 = {e["path"] for e in manifest_listing(target)[0]}
     assert files1 <= files2, "MoR must not rewrite base files"
 
     expect = sorted(tuple(r) for r in scd1_merged(base, updates).collect())
@@ -863,19 +819,19 @@ def test_table_compact_binpacks_and_applies_tombstones(spark, tmp_path):
     commit_mod.table_merge_mor(spark, target, updates)
 
     before = _v2_rows(spark, target)
-    man_before = commit_mod._load_manifest(target)
-    assert man_before["tombstones"], "fixture must carry live tombstones"
-    seq_before = int(man_before["seq"])
+    tombs_before = manifest_listing(target)[1]
+    assert tombs_before, "fixture must carry live tombstones"
+    seq_before = int(commit_mod._load_manifest(target)["seq"])
 
     stats = commit_mod.table_compact(spark, target)
     assert stats["compacted_buckets"]
     assert stats["files_after"] < stats["files_before"]
-    assert stats["tombstones_cleared"] == len(man_before["tombstones"])
+    assert stats["tombstones_cleared"] == len(tombs_before)
 
-    man_after = commit_mod._load_manifest(target)
-    assert man_after["tombstones"] == []
+    files_after, tombs_after = manifest_listing(target)
+    assert tombs_after == []
     per_bucket: dict[int, int] = {}
-    for e in man_after["files"]:
+    for e in files_after:
         per_bucket[e["bucket"]] = per_bucket.get(e["bucket"], 0) + 1
     assert all(n == 1 for n in per_bucket.values())
     assert _v2_rows(spark, target) == before, "compaction changes no row"
@@ -959,18 +915,18 @@ def test_manifest_stats_prune_range_reads(spark, tmp_path):
     hi_band = _v2_base(spark).filter(F.col("o_orderkey") >= 300)
     commit_mod.table_append(spark, target, hi_band)
 
-    man = commit_mod._load_manifest(target)
+    files = manifest_listing(target)[0]
     assert all(
-        "o_totalprice" in e["stats"] for e in man["files"]
+        "o_totalprice" in e["stats"] for e in files
     ), "footer stats must be recorded for numeric columns"
 
     # Range that only the hi band can satisfy: price >= 500.
     kept = [
         e
-        for e in man["files"]
+        for e in files
         if commit_mod._stats_overlap(e, "o_totalprice", 500.0, None)
     ]
-    assert 0 < len(kept) < len(man["files"]), "pruning must skip files"
+    assert 0 < len(kept) < len(files), "pruning must skip files"
     assert {e["gen"] for e in kept} == {1}, "only the hi-band append kept"
 
     got = sorted(
@@ -995,12 +951,13 @@ def test_table_delete_masks_rows_and_compact_makes_physical(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-    files1 = {e["path"] for e in commit_mod._load_manifest(target)["files"]}
+    files1 = {e["path"] for e in manifest_listing(target)[0]}
 
     stats = commit_mod.table_delete(spark, target, [5, 6, 7])
     assert stats["tombstone_files"] >= 1
-    man = commit_mod._load_manifest(target)
-    assert {e["path"] for e in man["files"]} == files1, "no data write"
+    assert {e["path"] for e in manifest_listing(target)[0]} == files1, (
+        "no data write"
+    )
 
     expect = sorted(
         tuple(r) for r in base.filter(~F.col("o_orderkey").isin(5, 6, 7)).collect()
@@ -1009,7 +966,7 @@ def test_table_delete_masks_rows_and_compact_makes_physical(spark, tmp_path):
     assert commit_mod.table_lookup(spark, target, [5]).count() == 0
 
     commit_mod.table_compact(spark, target)
-    assert commit_mod._load_manifest(target)["tombstones"] == []
+    assert manifest_listing(target)[1] == []
     assert _v2_rows(spark, target) == expect
 
 
@@ -1022,9 +979,7 @@ def test_compact_clears_tombstone_in_fileless_bucket(spark, tmp_path):
     # 3 keys into 64 buckets: almost every bucket is file-less.
     base = _v2_base(spark).filter(F.col("o_orderkey") < 3)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=64)
-    data_buckets = {
-        e["bucket"] for e in commit_mod._load_manifest(target)["files"]
-    }
+    data_buckets = {e["bucket"] for e in manifest_listing(target)[0]}
     # A key whose bucket holds no data file:
     probe = spark.range(1000).select(
         F.col("id").alias("k"),
@@ -1034,15 +989,15 @@ def test_compact_clears_tombstone_in_fileless_bucket(spark, tmp_path):
         r["k"] for r in probe.collect() if r["b"] not in data_buckets
     )
     commit_mod.table_delete(spark, target, [int(absent)])
-    man = commit_mod._load_manifest(target)
-    assert man["tombstones"], "tombstone must be recorded"
+    tombs = manifest_listing(target)[1]
+    assert tombs, "tombstone must be recorded"
     assert all(
-        t["bucket"] not in data_buckets for t in man["tombstones"]
+        t["bucket"] not in data_buckets for t in tombs
     ), "fixture must hit a file-less bucket"
 
     stats = commit_mod.table_compact(spark, target, min_files=99)
-    assert stats["tombstones_cleared"] == len(man["tombstones"])
-    assert commit_mod._load_manifest(target)["tombstones"] == []
+    assert stats["tombstones_cleared"] == len(tombs)
+    assert manifest_listing(target)[1] == []
     assert _v2_rows(spark, target) == sorted(tuple(r) for r in base.collect())
 
 
@@ -1091,14 +1046,15 @@ def test_table_add_columns_metadata_only_evolution(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-    files1 = {e["path"] for e in commit_mod._load_manifest(target)["files"]}
+    files1 = {e["path"] for e in manifest_listing(target)[0]}
 
     stats = commit_mod.table_add_columns(
         spark, target, [StructField("o_channel", StringType(), True)]
     )
     assert stats["added"] == ["o_channel"]
-    man = commit_mod._load_manifest(target)
-    assert {e["path"] for e in man["files"]} == files1, "metadata-only"
+    assert {e["path"] for e in manifest_listing(target)[0]} == files1, (
+        "metadata-only"
+    )
 
     got = commit_mod.table_read(spark, target)
     assert got.columns[-1] == "o_channel"
@@ -1141,18 +1097,17 @@ def test_table_compact_max_buckets_incremental_window(spark, tmp_path):
     )
     commit_mod.table_merge_mor(spark, target, updates)
     before = _v2_rows(spark, target)
-    n_tombs = len(commit_mod._load_manifest(target)["tombstones"])
+    n_tombs = len(manifest_listing(target)[1])
     assert n_tombs >= 2
 
     s1 = commit_mod.table_compact(spark, target, max_buckets=1)
     assert len(s1["compacted_buckets"]) == 1
-    man_mid = commit_mod._load_manifest(target)
-    assert man_mid["tombstones"], "uncompacted buckets keep tombstones"
+    assert manifest_listing(target)[1], "uncompacted buckets keep tombstones"
     assert _v2_rows(spark, target) == before, "reads correct mid-window"
 
     s2 = commit_mod.table_compact(spark, target)
     assert s1["tombstones_cleared"] + s2["tombstones_cleared"] == n_tombs
-    assert commit_mod._load_manifest(target)["tombstones"] == []
+    assert manifest_listing(target)[1] == []
     assert _v2_rows(spark, target) == before
 
 
@@ -1175,8 +1130,9 @@ def test_table_clustering_enables_intra_bucket_pruning(spark, tmp_path):
     )
     man = commit_mod._load_manifest(target)
     assert man["cluster_by"] == "o_totalprice"
+    files = manifest_listing(target, man)[0]
     per_bucket: dict[int, list] = {}
-    for e in man["files"]:
+    for e in files:
         per_bucket.setdefault(e["bucket"], []).append(e)
     assert all(len(fs) >= 4 for fs in per_bucket.values()), "files split"
     # Within each bucket the files' price ranges must not overlap
@@ -1189,10 +1145,10 @@ def test_table_clustering_enables_intra_bucket_pruning(spark, tmp_path):
     # Range read on the cluster column: most files pruned, rows exact.
     kept = [
         e
-        for e in man["files"]
+        for e in files
         if commit_mod._stats_overlap(e, "o_totalprice", 2900.0, None)
     ]
-    assert len(kept) < len(man["files"]) / 2, "intra-bucket pruning"
+    assert len(kept) < len(files) / 2, "intra-bucket pruning"
     got = sorted(
         tuple(r)
         for r in commit_mod.table_read(
@@ -1219,9 +1175,8 @@ def test_table_clustering_enables_intra_bucket_pruning(spark, tmp_path):
         )
     stats = commit_mod.table_compact(spark, target)
     assert stats["compacted_buckets"], "append slack must trigger packing"
-    man2 = commit_mod._load_manifest(target)
     per_bucket2: dict[int, list] = {}
-    for e in man2["files"]:
+    for e in manifest_listing(target)[0]:
         per_bucket2.setdefault(e["bucket"], []).append(e)
     for fs in per_bucket2.values():
         spans = sorted(tuple(e["stats"]["o_totalprice"]) for e in fs)
@@ -1375,7 +1330,9 @@ def test_mask_split_clean_dirty_partition(spark, tmp_path):
     )
     commit_mod.table_merge_mor(spark, target, updates)
     man = commit_mod._load_manifest(target)
-    clean, dirty, tombs = commit_mod._mask_split(man, man["files"])
+    clean, dirty, tombs = commit_mod._mask_split(
+        man, *manifest_listing(target, man)
+    )
     # The gen-1 delta files are clean BY GEN (their tombstones are not
     # newer); the gen-0 base files intersect keys 0..9 -> dirty.
     assert {int(e["gen"]) for e in clean} >= {1}
@@ -1405,13 +1362,18 @@ def test_mask_split_clean_dirty_partition(spark, tmp_path):
     assert not commit_mod._may_mask(dict(e_disjoint, gen=t["gen"]), t, "o_orderkey")
 
 
-def test_mor_tombstone_skip_shuffle_guarded_by_split_size(spark, tmp_path):
+def test_mor_tombstone_skip_shuffle_guarded_by_split_size(
+    spark, tmp_path, monkeypatch
+):
     """Round-20 guard (VERDICT r19 #4): the tombstone write may skip
-    its exchange only while every delta file fits ONE scan task.  With
-    maxPartitionBytes forced below the delta file sizes, a split delta
-    file would make each scan task write its own file per bucket — the
-    guard must fall back to the repartition, keeping per-bucket
-    tombstone file counts at 1 and the visible rows identical."""
+    its exchange only while every delta file fits ONE scan task.  The
+    split size is Spark's FilePartition.maxSplitBytes, so both a small
+    maxPartitionBytes and a small openCostInBytes over a large
+    minPartitionNum (ADVICE r20 #1) put the delta files over it; a
+    split delta file would make each scan task write its own file per
+    bucket — the guard must fall back to the repartition, keeping
+    per-bucket tombstone file counts at 1 and the visible rows
+    identical."""
     base = _v2_base(spark)
     updates = base.filter(F.col("o_orderkey") % 50 == 0).select(
         "o_orderkey",
@@ -1419,29 +1381,55 @@ def test_mor_tombstone_skip_shuffle_guarded_by_split_size(spark, tmp_path):
         F.lit("U").alias("o_orderstatus"),
         F.lit(1.0).alias("o_totalprice"),
     )
+    real_write = commit_mod._write_bucketed
 
-    def run(target, conf):
+    def run(target, confs):
         commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-        prev = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", conf)
+        skips = []
+
+        def spy(*a, **kw):
+            skips.append(kw.get("skip_shuffle", False))
+            return real_write(*a, **kw)
+
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        monkeypatch.setattr(commit_mod, "_write_bucketed", spy)
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
             commit_mod.table_merge_mor(spark, target, updates)
         finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", prev)
-        man = commit_mod._load_manifest(target)
-        tombs = man.get("tombstones", [])
+            monkeypatch.setattr(commit_mod, "_write_bucketed", real_write)
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        tombs = manifest_listing(target)[1]
         per_bucket: dict[int, int] = {}
         for t in tombs:
             per_bucket[t["bucket"]] = per_bucket.get(t["bucket"], 0) + 1
-        return per_bucket, _v2_rows(spark, target)
+        # The tombstone write is the commit's last bucketed write.
+        return skips[-1], per_bucket, _v2_rows(spark, target)
 
-    fast_pb, fast_rows = run(str(tmp_path / "fast"), "128m")
-    slow_pb, slow_rows = run(str(tmp_path / "split"), "2k")
-    # guarded path (files "oversized" vs the split size): exactly one
-    # tombstone file per touched bucket, value-identical read
-    assert slow_pb and all(n == 1 for n in slow_pb.values()), slow_pb
-    assert set(slow_pb) == set(fast_pb)
-    assert slow_rows == fast_rows
+    fast_skip, fast_pb, fast_rows = run(str(tmp_path / "fast"), {})
+    assert fast_skip, "small delta files under default confs skip the shuffle"
+    for i, confs in enumerate(
+        [
+            # ~1.3 KB delta files: both inputs put them over the split
+            {"spark.sql.files.maxPartitionBytes": "1k"},
+            {
+                "spark.sql.files.openCostInBytes": "256",
+                "spark.sql.files.minPartitionNum": "64",
+            },
+        ]
+    ):
+        skip, pb, rows = run(str(tmp_path / f"split{i}"), confs)
+        # guarded path (files oversized vs the split size): no skip,
+        # exactly one tombstone file per touched bucket, same rows
+        assert not skip, confs
+        assert pb and all(n == 1 for n in pb.values()), (confs, pb)
+        assert set(pb) == set(fast_pb)
+        assert rows == fast_rows
 
 
 def test_write_bucketed_skip_shuffle_with_part_spec_raises(spark):

@@ -4,11 +4,11 @@ The contract under test:
 
 * ``table_init(partition_by=, partition_transform=)`` lays data out as
   ``data/<commit>/_part=<v>/bucket=<b>/`` and keys manifest entries /
-  split parts by (partition, bucket);
+  parts by (partition, bucket);
 * reads prune partitions BEFORE any file-stats pass — from an explicit
   ``partitions=`` list, or automatically from ``where`` / ``where_in``
-  predicates on the partition column — and on a split table the pruned
-  partitions' manifest parts are never parsed (asserted against
+  predicates on the partition column — and the pruned partitions'
+  manifest parts are never parsed (asserted against
   MANIFEST_IO, not assumed);
 * merge-on-read masking stays correct across a partition MOVE (the
   update relocates a key's row to another partition — the tombstone is
@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.sources import commit as cm
+from tests.conftest import manifest_listing
 
 D = datetime.date
 
@@ -57,7 +58,6 @@ def ptable(spark, tmp_path):
         target,
         "k",
         n_buckets=4,
-        split_manifest=True,
         partition_by="d",
         partition_transform="day",
     )
@@ -71,14 +71,14 @@ def test_partitioned_layout_and_roundtrip(spark, ptable):
     # _part directory level
     gkeys = {cm._gkey(r) for r in man["parts"]}
     assert len(gkeys) == len(man["parts"]) == 20  # 5 days x 4 buckets
-    files, _ = cm._man_entries(ptable, man)
+    files, _ = manifest_listing(ptable, man)
     assert all("/_part=" in e["path"] and e["part"] for e in files)
     assert _rows(cm.table_read(spark, ptable)) == _rows(_frame(spark))
 
 
 def test_partition_pruned_read_parses_only_that_days_parts(spark, ptable):
-    """The headline invariant: a 1-day read on a split partitioned
-    table loads ONLY that day's part files — partition pruning happens
+    """The headline invariant: a 1-day read on a partitioned table
+    loads ONLY that day's part files — partition pruning happens
     before any manifest-part parse, not after."""
     man = cm._load_manifest(ptable)
     _reset_io()
@@ -115,7 +115,7 @@ def test_numeric_identity_partition_never_range_prunes(spark, tmp_path):
         F.col("id").alias("k"), (F.col("id") % 12).alias("grp"), F.lit(1).alias("v")
     )
     cm.table_init(
-        df, target, "k", n_buckets=2, split_manifest=True, partition_by="grp"
+        df, target, "k", n_buckets=2, partition_by="grp"
     )
     # range read over grp in [9, 10]: partition dirs "9" and "10" sort
     # the WRONG way lexicographically — the read must still be exact.
@@ -190,7 +190,7 @@ def test_compact_applies_tombstones_bucket_wide(spark, ptable):
 
 def test_drop_partition_metadata_only_and_time_travel(spark, ptable):
     man_before = cm._live_manifest_name(ptable)
-    files_before, _ = cm._man_entries(ptable, cm._load_manifest(ptable))
+    files_before, _ = manifest_listing(ptable)
     st = cm.table_drop_partition(ptable, "2024-01-02")
     assert st["dropped_files"] == 4
     got = cm.table_read(spark, ptable)
@@ -210,7 +210,7 @@ def test_drop_partition_metadata_only_and_time_travel(spark, ptable):
 
 
 def test_drop_partition_then_vacuum_reclaims_when_aged_out(spark, ptable):
-    files_before, _ = cm._man_entries(ptable, cm._load_manifest(ptable))
+    files_before, _ = manifest_listing(ptable)
     dropped = [e for e in files_before if e.get("part") == "2024-01-02"]
     cm.table_drop_partition(ptable, "2024-01-02")
     # age the previous generation out of retention with another commit
@@ -248,30 +248,6 @@ def test_cow_merge_on_partitioned_table(spark, ptable):
     assert _rows(cm.table_read(spark, ptable)) == sorted(exp)
 
 
-def test_partitioned_inline_manifest_roundtrip(spark, tmp_path):
-    """The inline (non-split) layout carries the same partition
-    semantics — entries keyed by gkey, pruned reads exact."""
-    target = str(tmp_path / "inl")
-    cm.table_init(
-        _frame(spark),
-        target,
-        "k",
-        n_buckets=4,
-        split_manifest=False,
-        partition_by="d",
-        partition_transform="day",
-    )
-    man = cm._load_manifest(target)
-    assert "files" in man and all(e.get("part") for e in man["files"])
-    got = cm.table_read(spark, target, where=("d", D(2024, 1, 2), D(2024, 1, 3)))
-    exp = _rows(
-        _frame(spark).filter(F.col("d").between(D(2024, 1, 2), D(2024, 1, 3)))
-    )
-    assert _rows(got) == exp
-    assert cm.table_drop_partition(target, "2024-01-05")["dropped_files"] > 0
-    assert cm.table_read(spark, target).count() == 240
-
-
 def test_month_transform_and_null_partition(spark, tmp_path):
     target = str(tmp_path / "mon")
     df = spark.createDataFrame(
@@ -284,7 +260,7 @@ def test_month_transform_and_null_partition(spark, tmp_path):
         "k long, d date, v double",
     )
     cm.table_init(
-        df, target, "k", n_buckets=2, split_manifest=True,
+        df, target, "k", n_buckets=2,
         partition_by="d", partition_transform="month",
     )
     man = cm._load_manifest(target)
@@ -326,10 +302,10 @@ def test_unpartitioned_tables_unchanged(spark, tmp_path):
     no _part level, refs carry no 'part', gkeys degenerate to
     (None, bucket)."""
     target = str(tmp_path / "plain")
-    cm.table_init(_frame(spark), target, "k", n_buckets=4, split_manifest=True)
+    cm.table_init(_frame(spark), target, "k", n_buckets=4)
     man = cm._load_manifest(target)
     assert all("part" not in r for r in man["parts"])
-    files, _ = cm._man_entries(target, man)
+    files, _ = manifest_listing(target, man)
     assert all("_part=" not in e["path"] for e in files)
     assert cm.table_stats(target)["partition_by"] is None
     with pytest.raises(ValueError, match="no partition spec"):

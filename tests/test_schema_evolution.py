@@ -45,7 +45,7 @@ def _rows(spark, target, **kw):
 @pytest.fixture()
 def table(spark, tmp_path):
     target = str(tmp_path / "ev")
-    cm.table_init(_base(spark), target, "k", n_buckets=4, split_manifest=True)
+    cm.table_init(_base(spark), target, "k", n_buckets=4)
     return target
 
 

@@ -2,8 +2,7 @@
 
 Hypothesis drives random op sequences — append (duplicate keys
 coexist), merge-on-read upsert, tombstone-only delete, compaction —
-over BOTH manifest layouts (inline and split) and with NULL keys in
-the mix, and compares every visible state against a 30-line in-memory
+with NULL keys in the mix, and compares every visible state against a 30-line in-memory
 model of the masking semantics: a row committed at gen g is visible
 unless some tombstone with its key (null-safe) carries gen > g;
 compaction rewrites the visible rows and clears tombstones.  Retained
@@ -19,7 +18,6 @@ mismatch on a minimal counterexample.
 
 from __future__ import annotations
 
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -69,14 +67,13 @@ def _df(spark, pairs):
     return spark.createDataFrame(pairs, _SCHEMA)
 
 
-@pytest.mark.parametrize("split", [False, True], ids=["inline", "split"])
 @settings(
     max_examples=12,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(ops=st.lists(_OP, min_size=1, max_size=5), data=st.data())
-def test_v2_table_matches_model(spark, tmp_path_factory, split, ops, data):
+def test_v2_table_matches_model(spark, tmp_path_factory, ops, data):
     target = str(tmp_path_factory.mktemp("model") / "t")
     serial = iter(range(10_000))
 
@@ -88,7 +85,6 @@ def test_v2_table_matches_model(spark, tmp_path_factory, split, ops, data):
         target,
         "k",
         n_buckets=2,
-        split_manifest=split,
         keep_generations=2,
     )
     gen = 0
