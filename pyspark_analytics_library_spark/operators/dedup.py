@@ -1049,32 +1049,39 @@ def _cc_loop(
     sym, drop_sym_table = _cc_materialize_sym(
         spark, sym, scratch_root, big_edges=big_edges
     )
-    # Labels start from the EDGE-INCIDENT vertex set only (derived from
-    # the materialized edges — no extra pass over the caller's plan);
-    # singletons rejoin in connected_components via _attach_singletons.
-    # sym carries both directions, so src alone covers every endpoint.
-    verts_e = sym.select(F.col("src").alias("v")).distinct()
-    lab = _cc_checkpoint(
-        verts_e.select(F.col("v"), F.col("v").alias("label")), scratch_root, 0
-    )
-
-    # One round per materialization.  (A GraphFrames-style
-    # checkpointInterval=2 — two lazy rounds per write — was measured
-    # SLOWER here: the mid-round joins plan against unmaterialized
-    # intermediates with no size stats and lose the broadcast/shape
-    # choices the per-round parquet stats buy, costing more than the
-    # saved write.  Measured at sf0.1: 8-10 s vs 5-6 s warm.)
-    #
-    # The convergence count piggybacks on the checkpoint write via an
-    # Observation — the metric is collected DURING the write job, so
-    # each round launches exactly ONE job instead of write + count.
-    # At fixture scale the count job was pure job-launch latency
-    # (~0.1 s × rounds); on a cluster it saves a full re-read of the
-    # label table per round.
+    # Every exit from here on — including a failure in round 0's
+    # checkpoint — must drop the catalog entry (ADVICE r20 #3); the
+    # data files follow the scratch lifecycle below (and _fs_delete is
+    # idempotent).
     from pyspark.sql import Observation
 
-    changed = 0
     try:
+        # Labels start from the EDGE-INCIDENT vertex set only (derived
+        # from the materialized edges — no extra pass over the caller's
+        # plan); singletons rejoin in connected_components via
+        # _attach_singletons.  sym carries both directions, so src alone
+        # covers every endpoint.
+        verts_e = sym.select(F.col("src").alias("v")).distinct()
+        lab = _cc_checkpoint(
+            verts_e.select(F.col("v"), F.col("v").alias("label")),
+            scratch_root,
+            0,
+        )
+
+        # One round per materialization.  (A GraphFrames-style
+        # checkpointInterval=2 — two lazy rounds per write — was measured
+        # SLOWER here: the mid-round joins plan against unmaterialized
+        # intermediates with no size stats and lose the broadcast/shape
+        # choices the per-round parquet stats buy, costing more than the
+        # saved write.  Measured at sf0.1: 8-10 s vs 5-6 s warm.)
+        #
+        # The convergence count piggybacks on the checkpoint write via an
+        # Observation — the metric is collected DURING the write job, so
+        # each round launches exactly ONE job instead of write + count.
+        # At fixture scale the count job was pure job-launch latency
+        # (~0.1 s × rounds); on a cluster it saves a full re-read of the
+        # label table per round.
+        changed = 0
         for round_no in range(1, max_iters + 1):
             start = lab.select(
                 "v", "label", F.col("label").alias("base_label")
@@ -1095,8 +1102,6 @@ def _cc_loop(
             if changed == 0:
                 break
     finally:
-        # The catalog entry is metadata only; the data files follow the
-        # scratch lifecycle below (and _fs_delete is idempotent).
         drop_sym_table()
     if changed != 0:
         # Nothing useful survives an unconverged run — reclaim it all.

@@ -533,10 +533,11 @@ def _triangle_census_impl(
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
     e_dir_path = os.path.join(scratch, "e_dir")
-    ed.select(
+    e_dir_out = ed.select(
         F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
         F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).write.mode("overwrite").parquet(e_dir_path)
+    )
+    e_dir_out.write.mode("overwrite").parquet(e_dir_path)
     # Explicit repartition: the materialized edge file is compact
     # (~8 B/row columnar), so maxPartitionBytes would hand the whole
     # intersection stage to one or two scan tasks — the probe's other
@@ -544,11 +545,11 @@ def _triangle_census_impl(
     # (src, dst) rows is cheap and sizes the stage to the session's
     # shuffle parallelism.
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    e_dir_schema = "src {0}, dst {0}".format(
-        edges.schema["u"].dataType.simpleString()
-    )
+    # The read schema is the written frame's own: src/dst carry the
+    # common type of u and v, which differs from u's when the two
+    # endpoint columns differ (ADVICE r20 #2).
     e_dir = (
-        spark.read.schema(e_dir_schema).parquet(e_dir_path)
+        spark.read.schema(e_dir_out.schema).parquet(e_dir_path)
         .repartition(shuffle_n)
     )
     # The out-neighborhood aggregate stays LAZY (round 19): it has
@@ -562,7 +563,7 @@ def _triangle_census_impl(
         spark.conf.get("spark.analytics.graph.broadcastNbrsMaxEdges", "50000000")
     )
     tri = _sparse_triangle_sum_frame(
-        e_dir, nbrs, m_edges <= bcast_cap, edges.schema["v"].dataType
+        e_dir, nbrs, m_edges <= bcast_cap, e_dir_out.schema["dst"].dataType
     )
     t = int(tri.collect()[0]["t"] or 0)
     # Only scalars escaped: reclaim the whole scratch generation now,

@@ -22,6 +22,7 @@ tie resolution is identical cross-engine.
 
 from __future__ import annotations
 
+import json
 import math
 
 import numpy as np
@@ -298,11 +299,26 @@ _LSH_BITS = 4
 _PLANES = (
     np.random.RandomState(42).normal(size=(_LSH_TABLES, _LSH_BITS, _DIM)).tolist()
 )
+# The whole key computation as ONE Spark SQL expression, built once.
+# The planes enter as a single from_json constant (folded by the
+# optimizer — the physical plan carries a literal array); json.dumps
+# writes shortest-round-trip doubles, so the parsed planes are
+# bit-identical to _PLANES.  ``{col}`` is the embedding column.
+_LSH_KEYS_SQL = (
+    "transform(array(transform({col}, x -> CAST(x AS DOUBLE))), ed -> "
+    "transform(from_json('" + json.dumps(_PLANES) + "', "
+    "'array<array<array<double>>>'), (tbl, ti) -> named_struct("
+    "'table', ti, "
+    "'key', aggregate(transform(tbl, (p, bi) -> IF("
+    "aggregate(zip_with(ed, p, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
+    " > 0, shiftleft(1L, bi), 0L)), 0L, (k, b) -> k + b))))[0]"
+)
 
 
-def lsh_table_keys(emb: Column) -> Column:
+def lsh_table_keys(emb: str) -> Column:
     """Multi-table random-hyperplane LSH: per table, a sign-bit bucket
     key; returns array<struct<table:int, key:long>> to explode.
+    ``emb`` is the name of the array<float> embedding column.
 
     Collision prob. for angle θ is (1 - θ/π)^bits per table, amortized
     over `tables` OR-ed tables — bits trades precision (pruning) for
@@ -310,21 +326,19 @@ def lsh_table_keys(emb: Column) -> Column:
     bits, a cos≈0.4 neighbor is caught with p ≈ 0.97 while random pairs
     (cos≈0) collide at 1/16 per table.  Pure expression — evaluated
     scan-side; the bucket equi-join replaces the O(n²) pair space.
+
+    Why one SQL expression: every PySpark Column call is a py4j round
+    trip to the JVM.  Building this column call by call (a literal per
+    plane coefficient, an array, zip_with and aggregate per plane, a
+    when per bit, a struct per table) cost ~31,000 round trips and
+    3.5-5.8 s of driver time per plan build; the single ``F.expr`` over
+    :data:`_LSH_KEYS_SQL` costs 3 (two gateway lookups and the call).
+    Each dot product is still the in-order left fold
+    ``0D + x0*p0 + x1*p1 + ...`` over the double-cast embedding, so the
+    keys are bit-identical to the call-by-call build (pinned against a
+    numpy twin in tests/test_plans.py).
     """
-    ed = F.transform(emb, lambda x: x.cast("double"))
-    entries = []
-    for ti, table in enumerate(_PLANES):
-        key = F.lit(0).cast("long")
-        for bi, plane in enumerate(table):
-            p = F.array(*[F.lit(v) for v in plane])
-            dot = F.aggregate(
-                F.zip_with(ed, p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            key = key + F.when(dot > 0, F.lit(1 << bi)).otherwise(F.lit(0))
-        entries.append(F.struct(F.lit(ti).alias("table"), key.alias("key")))
-    return F.array(*entries)
+    return F.expr(_LSH_KEYS_SQL.format(col=f"`{emb}`"))
 
 
 _IVF_CELLS = 16
@@ -528,15 +542,17 @@ def q_sim_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     above threshold; the cross-table duplicates that remain are the
     final (id_a, id_b) dropDuplicates — threshold-survivor-sized, not
     candidate-sized.  Same candidate set, same filter, same recall;
-    3.4 s at sf0.1.  Bucket skew is bounded by the 2048-row matmul
-    blocking plus AQE shuffle splitting."""
+    3.4 s at sf0.1 to collect a prebuilt plan (bench.py times collect()
+    only — plan build is outside that figure; see lsh_table_keys for
+    its cost).  Bucket skew is bounded by the 2048-row matmul blocking
+    plus AQE shuffle splitting."""
     t = load_tables(spark, sf_dir)
     e = (
         t["embeddings"]
         .select(
             "vec_id",
             "embedding",
-            F.explode(lsh_table_keys(F.col("embedding"))).alias("tk"),
+            F.explode(lsh_table_keys("embedding")).alias("tk"),
         )
         .select("vec_id", "embedding", "tk.table", "tk.key")
     )

@@ -9,9 +9,11 @@ failures surface before the driver runs at sf0.01.
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
+import types
 
 import duckdb
 import numpy as np
@@ -99,3 +101,25 @@ def manifest_listing(target: str, man: dict | None = None):
     if man is None:
         man = commit._load_manifest(target)
     return commit._man_entries(target, man)
+
+
+@contextlib.contextmanager
+def py4j_commands():
+    """Count the py4j commands the Python driver sends to the JVM inside
+    the block — one per Column/DataFrame call that crosses the gateway,
+    so a plan build's driver cost can be pinned as a number.  Yields a
+    namespace whose ``count`` is live while the block runs."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = types.SimpleNamespace(count=0)
+    send = ClientServerConnection.send_command
+
+    def counting(self, *args, **kwargs):
+        sent.count += 1
+        return send(self, *args, **kwargs)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield sent
+    finally:
+        ClientServerConnection.send_command = send

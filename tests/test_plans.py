@@ -12,7 +12,7 @@ from pyspark_analytics_library_spark.plans.assertions import (
 )
 from pyspark_analytics_library_spark.registry import REGISTRY, load_all_query_modules
 from pyspark_analytics_library_spark.sources.io import load_tables
-from tests.conftest import TEST_SF_DIR, manifest_listing
+from tests.conftest import TEST_SF_DIR, manifest_listing, py4j_commands
 
 load_all_query_modules()
 
@@ -689,7 +689,7 @@ def test_no_query_plans_a_shuffled_cartesian(spark):
         "sim_kmeans_assign", "agg_describe", "graph_triangles",
         "graph_pagerank_nations", "graph_degree_stats",
         "sim_topk_exact", "sim_threshold_pairs", "sim_knn_labels",
-        "sim_ivf_approx", "sim_lsh_approx", "sim_range_search",
+        "sim_ivf_approx", "sim_range_search",
         "scan_jdbc", "sink_parquet_roundtrip", "sink_csv_roundtrip",
         "scan_json_roundtrip", "scan_orc_roundtrip", "scan_csv_options",
         "scan_partition_pruning", "scan_schema_evolution", "scan_dpp",
@@ -899,3 +899,48 @@ def test_minhash_verify_and_band_exchanges_are_reused(spark):
     reused = re.findall(r"ReusedExchange.*?hashpartitioning\(([a-z_]+)", final)
     assert "band_id" in reused, final
     assert "id_a" in reused or "id_b" in reused, final
+
+
+def test_lsh_table_keys_is_one_expression_matching_in_order_fold(spark):
+    """The LSH bucket keys are ONE SQL expression: building the column
+    costs a handful of py4j commands (the call-by-call build cost ~31k),
+    the planes constant folds away before execution, and every key
+    equals a numpy twin that folds the dot product over dimensions in
+    order — the same left fold the expression evaluates — so keys are
+    bit-identical to the per-plane formulation."""
+    import numpy as np
+
+    from pyspark_analytics_library_spark.operators.similarity import (
+        _PLANES,
+        lsh_table_keys,
+    )
+
+    with py4j_commands() as sent:
+        keys = lsh_table_keys("embedding")
+    assert 0 < sent.count <= 10, sent.count
+
+    df = load_tables(spark, TEST_SF_DIR)["embeddings"].select(
+        "embedding", keys.alias("tk")
+    )
+    assert (
+        df.schema["tk"].dataType.simpleString()
+        == "array<struct<table:int,key:bigint>>"
+    )
+    rows = df.collect()
+    E = np.array([r.embedding for r in rows], dtype=np.float64)
+    P = np.array(_PLANES, dtype=np.float64)
+    n_tables, n_bits, dim = P.shape
+    P = P.reshape(n_tables * n_bits, dim)
+    acc = np.zeros((len(E), len(P)))
+    for d in range(dim):
+        acc = acc + E[:, d, None] * P[None, :, d]
+    bits = (acc > 0).reshape(len(E), n_tables, n_bits)
+    want = (bits * (1 << np.arange(n_bits))).sum(axis=2)
+    got_tables = [[t.table for t in r.tk] for r in rows]
+    got_keys = np.array([[t.key for t in r.tk] for r in rows])
+    assert got_tables == [list(range(n_tables))] * len(rows)
+    assert (got_keys == want).all()
+
+    qe = REGISTRY["sim_lsh_approx"].fn(spark, TEST_SF_DIR)._jdf.queryExecution()  # noqa: SLF001
+    assert "from_json" in qe.analyzed().toString()
+    assert "from_json" not in qe.optimizedPlan().toString()

@@ -570,6 +570,45 @@ def test_cc_scratch_dir_conf_honored(spark, tmp_path):
         spark.conf.unset("spark.analytics.cc.driverUnionFindMaxEdges")
 
 
+def test_cc_loop_drops_bucketed_sym_table_on_round0_failure(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r20 #3: a failure between the bucketed edge write and the
+    first round — here round 0's label checkpoint — must still drop the
+    ``pyspark_analytics_cc_sym_*`` catalog entry."""
+    from pyspark_analytics_library_spark.operators import dedup
+
+    real_checkpoint = dedup._cc_checkpoint
+
+    def failing_checkpoint(df, scratch_root, round_no):
+        if round_no == 0:
+            raise RuntimeError("injected round-0 failure")
+        return real_checkpoint(df, scratch_root, round_no)
+
+    monkeypatch.setattr(dedup, "_cc_checkpoint", failing_checkpoint)
+    confs = {
+        "spark.analytics.scratchDir": str(tmp_path),
+        "spark.analytics.cc.edgeBuckets": "4",
+        "spark.analytics.cc.driverUnionFindMaxEdges": "0",
+    }
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+        vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11)], "v long")
+        with pytest.raises(RuntimeError, match="injected round-0"):
+            dedup.connected_components(edges, vertices).collect()
+        leaked = [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("pyspark_analytics_cc_sym_")
+        ]
+        assert leaked == [], leaked
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
+
+
 def test_cc_driver_union_find_matches_loop(spark):
     """Round-19 dispatch pin: the driver union-find path (edge count ≤
     spark.analytics.cc.driverUnionFindMaxEdges) must label exactly like
@@ -908,6 +947,26 @@ def test_triangle_sparse_path_non_bigint_ids(spark):
     finally:
         spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
     assert row == (6, 12, 4, 1.0)
+
+
+def test_triangle_sparse_path_mixed_endpoint_types(spark):
+    """ADVICE r20 #2: with ``u int, v bigint`` edges the oriented
+    (src, dst) columns carry the common type (bigint), so the sparse
+    path's scratch re-read must take its schema from the written frame,
+    not from ``u`` — and must then agree with the dense path."""
+    from pyspark_analytics_library_spark.operators.graph import triangle_census
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (1, 3), (3, 4)], "u int, v bigint"
+    )
+    dense = tuple(triangle_census(spark, edges).collect()[0])
+    spark.conf.set("spark.analytics.graph.denseMatmulMaxVertices", "0")
+    try:
+        sparse = tuple(triangle_census(spark, edges).collect()[0])
+    finally:
+        spark.conf.unset("spark.analytics.graph.denseMatmulMaxVertices")
+    assert dense[:3] == (4, 5, 1)
+    assert sparse == dense
 
 
 def test_ngram_prefix_filter_lossless_across_thresholds(spark):
