@@ -67,6 +67,7 @@ def bench_triangles_sparse(spark, sf_dir):
     slot: ~15k vertices / ~0.93M edges / 4.17M triangles at sf0.1) and
     pins the dispatch by zeroing the vertex cap for the duration, so
     the row measures the sparse code path at every SF."""
+    from pyspark_analytics_library_spark.conf import scoped_conf
     from pyspark_analytics_library_spark.operators.graph import (
         co_occurrence_edges,
         triangle_census,
@@ -77,13 +78,8 @@ def bench_triangles_sparse(spark, sf_dir):
     edges = co_occurrence_edges(
         orders, "o_custkey", [F.col("o_orderdate"), F.col("o_orderpriority")]
     )
-    cap_key = "spark.analytics.graph.denseMatmulMaxVertices"
-    old = spark.conf.get(cap_key, None)
-    spark.conf.set(cap_key, "0")
-    try:
+    with scoped_conf(spark, {"spark.analytics.graph.denseMatmulMaxVertices": 0}):
         return triangle_census(spark, edges)
-    finally:
-        spark.conf.unset(cap_key) if old is None else spark.conf.set(cap_key, old)
 
 
 def bench_cc_distributed(spark, sf_dir):
@@ -96,6 +92,7 @@ def bench_cc_distributed(spark, sf_dir):
     dispatch on the same candidate graph the old dedup_components row
     iterated over (~31.5k edges at sf0.1), exactly the
     triangles_sparse precedent (VERDICT r13 #3)."""
+    from pyspark_analytics_library_spark.conf import scoped_conf
     from pyspark_analytics_library_spark.operators.dedup import (
         candidate_edges,
         connected_components,
@@ -105,17 +102,12 @@ def bench_cc_distributed(spark, sf_dir):
     t = load_tables(spark, sf_dir)
     d = t["documents"].select("doc_id", "lang", "n_chars")
     verts = d.select(F.col("doc_id").alias("v"))
-    cap_key = "spark.analytics.cc.driverUnionFindMaxEdges"
-    old = spark.conf.get(cap_key, None)
-    spark.conf.set(cap_key, "0")
-    try:
+    with scoped_conf(spark, {"spark.analytics.cc.driverUnionFindMaxEdges": 0}):
         lab = connected_components(candidate_edges(d), verts)
-        return lab.groupBy().agg(
-            F.count(F.lit(1)).alias("n"),
-            F.countDistinct("label").alias("n_components"),
-        )
-    finally:
-        spark.conf.unset(cap_key) if old is None else spark.conf.set(cap_key, old)
+    return lab.groupBy().agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("label").alias("n_components"),
+    )
 
 
 #: bench rows that are not registry queries: constructed inputs that

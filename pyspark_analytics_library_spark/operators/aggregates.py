@@ -14,11 +14,10 @@ bridge then renders as float64).
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
 
@@ -449,11 +448,7 @@ def q_agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     df = t["lineitem"].select(*cols)
     out = df.summary("count", "mean", "stddev", "min", "25%", "50%", "75%", "max")
-    self_check = (
-        spark.conf.get("spark.analytics.describe.selfCheck", "true").lower()
-        == "true"
-    )
-    if not self_check:
+    if not conf.get(spark, "spark.analytics.describe.selfCheck"):
         return out
     # 8 rows × 4 columns — bounded by the statistic list, never by input.
     cells = {r["summary"]: r.asDict() for r in out.collect()}
@@ -494,25 +489,6 @@ def q_agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: long count + OpenHashMap load-factor/array overhead), deliberately
 #: conservative.
 _QUANTILE_BYTES_PER_ENTRY = 64
-
-
-def _parse_size_bytes(s: str) -> int:
-    """Byte count from a size conf value, accepting the JVM-style
-    ``k``/``m``/``g``/``t`` (and ``kb``/``mb``/...) suffixes every other
-    Spark memory conf takes (ADVICE r16: the guard doc suggested
-    '12g' but the parser was a bare ``int()``, so following the doc
-    crashed with an opaque ValueError instead of the guard's
-    actionable message)."""
-    s = s.strip().lower()
-    m = re.fullmatch(r"(\d+)\s*([kmgt]?)b?", s)
-    if not m:
-        raise ValueError(
-            f"unparseable size {s!r}: expected bytes or a k/m/g/t-suffixed "
-            "value (e.g. 268435456, 256m, 12g)"
-        )
-    return int(m.group(1)) * 1024 ** {"": 0, "k": 1, "m": 2, "g": 3, "t": 4}[
-        m.group(2)
-    ]
 
 
 def exact_quantile_guard(
@@ -556,7 +532,7 @@ def exact_quantile_guard(
     the actionable message, for callers who want the cheap plan or
     nothing).  Empty set = under cap, use the native exact path.
     """
-    if spark.conf.get("spark.analytics.quantile.guard", "true").lower() != "true":
+    if not conf.get(spark, "spark.analytics.quantile.guard"):
         return set()
     # cols maps column -> number of exact-percentile EXPRESSIONS over
     # it (review r16: Spark's Percentile/Median buffers are per
@@ -564,11 +540,7 @@ def exact_quantile_guard(
     # column hold three maps of the same values).  A plain list means
     # one expression each.
     mult = cols if isinstance(cols, dict) else {c: 1 for c in cols}
-    cap = _parse_size_bytes(
-        spark.conf.get(
-            "spark.analytics.quantile.maxLocalStateBytes", str(256 * 1024**2)
-        )
-    )
+    cap = conf.get(spark, "spark.analytics.quantile.maxLocalStateBytes")
     probe = df.agg(
         F.count(F.lit(1)).alias("_n"),
         *[F.approx_count_distinct(c, rsd=0.05).alias(c) for c in mult],
@@ -580,10 +552,7 @@ def exact_quantile_guard(
         for c, k in mult.items()
     }
     over = {c: b for c, b in est.items() if b > cap}
-    if over and (
-        spark.conf.get("spark.analytics.quantile.onOverCap", "binned").lower()
-        == "error"
-    ):
+    if over and conf.get(spark, "spark.analytics.quantile.onOverCap") == "error":
         detail = ", ".join(f"{c}≈{b / 1e6:.0f} MB" for c, b in over.items())
         raise ValueError(
             "agg_quantile: exact percentile/median would hold "

@@ -24,6 +24,7 @@ from functools import reduce
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
 
@@ -591,9 +592,7 @@ def connected_components(
     """
     spark = edges.sparkSession
     e2 = edges.select("src", "dst")
-    uf_cap = int(
-        spark.conf.get("spark.analytics.cc.driverUnionFindMaxEdges", "500000")
-    )
+    uf_cap = conf.get(spark, "spark.analytics.cc.driverUnionFindMaxEdges")
     if uf_cap > 0:
         head = e2.limit(uf_cap + 1).collect()
         if len(head) <= uf_cap:
@@ -618,27 +617,20 @@ def connected_components(
     # on a bare session): every round pays per-partition task + state
     # overhead x partitions x rounds, and AQE's coalescing does not
     # shrink what localCheckpoint materializes.  Only the untouched 200
-    # default is trimmed — a deliberately sized session is respected —
-    # and the conf is restored on exit (safe: every round runs eagerly,
-    # so nothing inside the loop is re-planned after restore).
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    # Gate to local masters (same discipline as the loader's trim in
-    # sources/io.py): on a cluster whose admin left the default alone,
-    # a library helper must not pin a petabyte shuffle to 8 reducers.
-    # Locally the label table is fixture-sized and each round pays
-    # per-task overhead × partitions × rounds, so fewer is faster.
-    is_local = spark.sparkContext.master.startswith("local")
-    trim = is_local and prev_parts in ("200", "32")
-    if trim:
-        spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
+    # default (or the loader's 32) is trimmed — a deliberately sized
+    # session is respected — and the conf is restored on exit (safe:
+    # every round runs eagerly, so nothing inside the loop is re-planned
+    # after restore).  Gated to local masters (same discipline as the
+    # loader's trim in sources/io.py): on a cluster whose admin left the
+    # default alone, a library helper must not pin a petabyte shuffle
+    # to 8 reducers.
+    parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
+    trim = conf.is_local_master(spark) and parts in ("200", "32")
+    with conf.scoped_conf(spark, {"spark.sql.shuffle.partitions": 8} if trim else {}):
         # Reaching the loop with uf_cap > 0 means the dispatch probe
         # PROVED |E| > uf_cap — the signal the auto edge-bucketing
         # policy keys on (see _cc_materialize_sym).
         lab = _cc_loop(sym, max_iters, big_edges=uf_cap > 0)
-    finally:
-        if trim:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return _attach_singletons(vertices, lab, broadcast_labels=False)
 
 
@@ -781,22 +773,14 @@ def _iteration_scratch_root(spark: SparkSession) -> str:
        writing executor-unreachable local paths would corrupt the loop
        mid-flight, far worse than failing before the first job.
     """
-    import tempfile
-
-    conf_dir = spark.conf.get("spark.analytics.scratchDir", None)
-    if conf_dir:
-        base = conf_dir
-    elif spark.sparkContext.master.startswith("local"):
-        base = tempfile.gettempdir()
-    else:
-        base = spark.sparkContext.getCheckpointDir()
-        if not base:
-            raise ValueError(
-                "iterative operators need durable scratch storage on a "
-                "cluster: set spark.analytics.scratchDir to a shared "
-                "URI (hdfs://, s3a://, ...) or call "
-                "sparkContext.setCheckpointDir() first"
-            )
+    bases = _scratch_bases(spark)
+    if not bases:
+        raise ValueError(
+            "iterative operators need durable scratch storage on a "
+            "cluster: set spark.analytics.scratchDir to a shared "
+            "URI (hdfs://, s3a://, ...) or call "
+            "sparkContext.setCheckpointDir() first"
+        )
     import uuid
 
     # App-id scoping isolates concurrent applications sharing one
@@ -805,8 +789,23 @@ def _iteration_scratch_root(spark: SparkSession) -> str:
     # round files still backing the first run's returned DataFrame.
     app_id = spark.sparkContext.applicationId
     return os.path.join(
-        base, f"pyspark_analytics_cc_{app_id}", uuid.uuid4().hex[:12]
+        bases[0], f"pyspark_analytics_cc_{app_id}", uuid.uuid4().hex[:12]
     )
+
+
+def _scratch_bases(spark: SparkSession) -> list[str]:
+    """Every base iteration scratch can live under, in the resolution
+    order of :func:`_iteration_scratch_root`."""
+    import tempfile
+
+    bases = [conf.get(spark, "spark.analytics.scratchDir")]
+    if conf.is_local_master(spark):
+        bases.append(tempfile.gettempdir())
+    try:
+        bases.append(spark.sparkContext.getCheckpointDir())
+    except Exception:  # best-effort: an unreadable checkpoint dir is no base
+        pass
+    return [b for b in bases if b]
 
 
 def reclaim_iteration_scratch(
@@ -839,25 +838,10 @@ def reclaim_iteration_scratch(
     race-lost deletes are skipped silently, same stance as
     :func:`_fs_delete` — reclaim must never fail the computation).
     """
-    import tempfile
-
-    bases: list[str] = []
-    conf_dir = spark.conf.get("spark.analytics.scratchDir", None)
-    if conf_dir:
-        bases.append(conf_dir)
-    if spark.sparkContext.master.startswith("local"):
-        bases.append(tempfile.gettempdir())
-    try:
-        chk = spark.sparkContext.getCheckpointDir()
-    except Exception:
-        chk = None
-    if chk:
-        bases.append(chk)
-
     app_id = spark.sparkContext.applicationId
     deleted: list[str] = []
     seen: set[str] = set()
-    for base in bases:
+    for base in _scratch_bases(spark):
         app_dir = os.path.join(base, f"pyspark_analytics_cc_{app_id}")
         if app_dir in seen:
             continue
@@ -926,18 +910,14 @@ def _cc_materialize_sym(
     import uuid as _uuid
 
     sym_path = os.path.join(scratch_root, "sym")
-    conf = str(spark.conf.get("spark.analytics.cc.edgeBuckets", "auto"))
-    if conf == "auto":
-        bucket, n_buckets = big_edges, 0
-    else:
-        n_buckets = int(conf)
-        bucket = n_buckets > 0
+    n_buckets = conf.get(spark, "spark.analytics.cc.edgeBuckets")
+    bucket = big_edges if n_buckets is None else n_buckets > 0
     if not bucket:
         sym.coalesce(8).write.mode("overwrite").parquet(sym_path)
         # known schema: skip the re-read's footer inference (see
         # _cc_checkpoint)
         return spark.read.schema(sym.schema).parquet(sym_path), (lambda: None)
-    if n_buckets <= 0:
+    if not n_buckets:
         n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     tbl = f"pyspark_analytics_cc_sym_{_uuid.uuid4().hex[:12]}"
     (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType
 
+from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
 
@@ -413,12 +414,8 @@ def _triangle_census_impl(
     # Degree sum counts each edge twice — the exact edge count with no
     # extra job, so the dense/sparse dispatch is free.
     m_edges = int(deg_pd["d"].sum()) // 2 if n_vertices else 0
-    cap = int(
-        spark.conf.get("spark.analytics.graph.denseMatmulMaxVertices", "4096")
-    )
-    edge_cap = int(
-        spark.conf.get("spark.analytics.graph.denseMatmulMaxEdges", "2000000")
-    )
+    cap = conf.get(spark, "spark.analytics.graph.denseMatmulMaxVertices")
+    edge_cap = conf.get(spark, "spark.analytics.graph.denseMatmulMaxEdges")
     if n_vertices <= cap and m_edges <= edge_cap:
         # Orientation along the (degree, id) total order IS rank order,
         # so orienting driver-side (min rank → row, max rank → column)
@@ -492,9 +489,7 @@ def _triangle_census_impl(
     # spark.analytics.graph.sparseMaxWork roughly linearly with cores.
     import math
 
-    work_cap = float(
-        spark.conf.get("spark.analytics.graph.sparseMaxWork", "1e11")
-    )
+    work_cap = conf.get(spark, "spark.analytics.graph.sparseMaxWork")
     d_np = deg_pd["d"].to_numpy(dtype="float64")
     work = float((d_np * np.minimum(d_np, math.sqrt(2.0 * max(m_edges, 1)))).sum())
     if work > work_cap:
@@ -559,9 +554,7 @@ def _triangle_census_impl(
     # array-heavy nbrs table was a pure materialization tax (measured
     # A/B at sf0.1: 1.53 → 1.11 s for the intersection stage).
     nbrs = e_dir.groupBy("src").agg(F.collect_set("dst").alias("nb"))
-    bcast_cap = int(
-        spark.conf.get("spark.analytics.graph.broadcastNbrsMaxEdges", "50000000")
-    )
+    bcast_cap = conf.get(spark, "spark.analytics.graph.broadcastNbrsMaxEdges")
     tri = _sparse_triangle_sum_frame(
         e_dir, nbrs, m_edges <= bcast_cap, e_dir_out.schema["dst"].dataType
     )

@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.functions.coercion import scaled_int_text
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
@@ -52,11 +53,6 @@ def cosine_sim(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-#: Default cap for the broadcast index build (bytes of float64 matrix).
-#: Override per-session with spark.conf "spark.analytics.sim.maxIndexBytes".
-DEFAULT_MAX_INDEX_BYTES = 2 * 1024**3
-
-
 class IndexTooLargeError(RuntimeError):
     """Raised when the embeddings table exceeds the broadcast-index cap.
 
@@ -70,15 +66,11 @@ def build_index(spark: SparkSession, e: DataFrame, max_bytes: int | None = None)
     valid while the index fits a broadcast (GBs); beyond that, shard.
 
     Guarded: estimates rows × dim × 8 BEFORE collecting and raises
-    IndexTooLargeError over the cap (conf "spark.analytics.sim.
-    maxIndexBytes", default 2 GiB) — an eager, explainable error instead
+    IndexTooLargeError over the cap (conf ``spark.analytics.sim.
+    maxIndexBytes``, default 2 GiB) — an eager, explainable error instead
     of a silent driver OOM deep into a 100 TB job."""
     if max_bytes is None:
-        max_bytes = int(
-            spark.conf.get(
-                "spark.analytics.sim.maxIndexBytes", str(DEFAULT_MAX_INDEX_BYTES)
-            )
-        )
+        max_bytes = conf.get(spark, "spark.analytics.sim.maxIndexBytes")
     # Two cheap probes, not one full scan: dim from a single-row take
     # (reads one Arrow batch), row count from count() (metadata-only on
     # a plain Parquet scan).  max(size(embedding)) would read the widest

@@ -61,8 +61,7 @@ import uuid
 
 from pyspark.sql import DataFrame
 
-#: Conf key selecting the overwrite-commit protocol.
-MODE_CONF = "spark.analytics.sink.commitMode"
+from pyspark_analytics_library_spark import conf
 
 #: Pointer file naming the live root manifest.  The leading underscore
 #: keeps Spark/Hadoop readers from picking it up as data if someone
@@ -132,43 +131,17 @@ def resolve_table(target: str) -> str:
 #
 # Cost model at 100 TB: a merge rewrites touched buckets only —
 # storage and write amplification scale with the UPDATE footprint, not
-# the table.  n_buckets (conf ``spark.analytics.sink.mergeBuckets``)
-# is the rewrite granularity: production tables size it so bucket ≈
+# the table.  n_buckets (a ``table_init`` argument, default 16) is the
+# rewrite granularity: production tables size it so bucket ≈
 # a few GB (e.g. 100 TB / 32k buckets ≈ 3 GB); the fixture default 16
 # keeps file counts test-visible.  Bucket-pruned READS fall out for
 # free: a point lookup on the merge key needs one bucket's files.
 
-MERGE_BUCKETS_CONF = "spark.analytics.sink.mergeBuckets"
 MANIFEST_PREFIX = "manifest-"
 DATA_DIR = "data"
 
-#: Conf: default retention (generations kept) for new v2 tables.
-KEEP_GENERATIONS_CONF = "spark.analytics.sink.keepGenerations"
-
 #: Directory holding manifest part files (one per (partition, bucket)).
 PARTS_DIR = "manifests"
-
-#: Conf: write POSITIONAL DELETION VECTORS on merge-on-read commits
-#: (round 19, VERDICT r18 next #2 — the Iceberg position-delete /
-#: Delta deletion-vector position).  When on, table_merge_mor /
-#: table_delete also locate the exact row positions their keys mask in
-#: the CURRENT base files of the touched buckets and record them in a
-#: per-commit DV document; readers then mask DV-covered files with a
-#: pure position filter — no tombstone key scan, no per-key max-gen
-#: aggregate, no anti-join — and a base file with ZERO masked
-#:  positions is proven clean outright.  The write-side trade is
-#: honest and Iceberg's own: locating positions costs one read of the
-#: touched buckets' base files (the key anti-join fallback costs
-#: nothing at write time but every read pays it until compaction).
-POSITION_DELETES_CONF = "spark.analytics.sink.positionDeletes"
-
-#: Conf: write-side cap on collected (file, position) hits per DV
-#: commit — positions are update-footprint-sized by contract (one hit
-#: per updated key present in base); past the cap the commit falls
-#: back to plain tombstones instead of materializing an unbounded
-#: driver list.
-DV_MAX_POSITIONS_CONF = "spark.analytics.sink.dvMaxPositions"
-_DV_MAX_POSITIONS_DEFAULT = 1_000_000
 
 #: Read-side threshold: total DV positions at or below this inline as
 #: a literal filter expression (plan contains NO join at all); above
@@ -395,21 +368,6 @@ def _json_stat(v):
     if isinstance(v, bytes):
         return None  # undecoded binary: order not JSON-preservable
     return v
-
-
-def _size_bytes(v) -> int:
-    """A Spark size conf value as bytes: bare numbers are bytes, and
-    the standard case-insensitive suffixes (b/k/m/g/t, kb/mb/gb/tb)
-    apply — mirrors JavaUtils.byteStringAsBytes for the values Spark
-    itself accepts (its own getters return e.g. ``134217728b``)."""
-    s = str(v).strip().lower()
-    for suf, mult in (
-        ("tb", 2**40), ("gb", 2**30), ("mb", 2**20), ("kb", 2**10),
-        ("t", 2**40), ("g", 2**30), ("m", 2**20), ("k", 2**10), ("b", 1),
-    ):
-        if s.endswith(suf):
-            return int(float(s[: -len(suf)]) * mult)
-    return int(float(s))
 
 
 def _file_stats(full_path: str) -> dict[str, list]:
@@ -1041,10 +999,10 @@ def table_init(
     df: DataFrame,
     target: str,
     bucket_key: str,
-    n_buckets: int | None = None,
+    n_buckets: int = 16,
     cluster_by: str | None = None,
     max_records_per_file: int | None = None,
-    keep_generations: int | None = None,
+    keep_generations: int = KEEP_GENERATIONS,
     partition_by: str | None = None,
     partition_transform: str = "identity",
 ) -> dict:
@@ -1063,8 +1021,7 @@ def table_init(
     leave bare-path readers seeing mixed content — the caller must
     migrate or clear the target explicitly.
 
-    ``keep_generations`` (round 18, default conf
-    :data:`KEEP_GENERATIONS_CONF`, else :data:`KEEP_GENERATIONS`) is
+    ``keep_generations`` (round 18, default :data:`KEEP_GENERATIONS`) is
     the table's RETENTION property: how many committed generations
     (live included) stay readable for time travel / rollback before
     :func:`_prune_manifests` reclaims them.  The table's time-travel
@@ -1093,13 +1050,6 @@ def table_init(
     seq = (
         int(_load_manifest(target).get("seq", -1)) + 1 if ptr_exists else 0
     )
-    conf = df.sparkSession.conf
-    if n_buckets is None:
-        n_buckets = int(conf.get(MERGE_BUCKETS_CONF, "16"))
-    if keep_generations is None:
-        keep_generations = int(
-            conf.get(KEEP_GENERATIONS_CONF, str(KEEP_GENERATIONS))
-        )
     if keep_generations < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
     if partition_by is not None:
@@ -1303,29 +1253,18 @@ def _read_paths(spark, schema, paths: list[str]) -> DataFrame:
     Scale posture: driver-side listing is only a win when per-file
     metadata calls are cheap (local FS / fast shared FS); on an object
     store 1000 sequential HEADs would cost far more than one listing
-    job, so the default gates to LOCAL masters only — the same
-    discipline as the loader trim in ``sources/io.py`` and the CC
-    loop's partition trim.  ``spark.analytics.lake.driverListing``
-    overrides: ``always`` (operator knows the FS is fast), ``never``,
-    ``auto`` (default: local masters only).  The conf flip is scoped
-    and restored; it only affects how paths are LISTED, never what is
-    read."""
-    mode = spark.conf.get("spark.analytics.lake.driverListing", "auto")
-    local = spark.sparkContext.master.startswith("local")
-    if mode == "always" or (mode == "auto" and local):
-        key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
-        prev = spark.conf.get(key, "32")
-        try:
-            raise_needed = len(paths) > int(prev)
-        except ValueError:
-            raise_needed = True
-        if raise_needed:
-            spark.conf.set(key, str(len(paths)))
-            try:
-                return spark.read.schema(schema).parquet(*paths)
-            finally:
-                spark.conf.set(key, prev)
-    return spark.read.schema(schema).parquet(*paths)
+    job, so this gates to LOCAL masters only — the same discipline as
+    the loader trim in ``sources/io.py`` and the CC loop's partition
+    trim.  The threshold is raised to the path count under
+    :func:`conf.scoped_conf` whatever its current value (reading it
+    first, outside the lock, could see another thread's flip) and
+    restored exactly; it only affects how paths are LISTED, never what
+    is read."""
+    if not conf.is_local_master(spark):
+        return spark.read.schema(schema).parquet(*paths)
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    with conf.scoped_conf(spark, {key: len(paths)}):
+        return spark.read.schema(schema).parquet(*paths)
 
 
 def _scan_entries(spark, target: str, man: dict, schema, items, meta_cols=False):
@@ -2246,15 +2185,12 @@ def _maybe_write_dv(
     spark, target, man, schema, tomb_entries, keys_df, flag
 ) -> str | None:
     """Write the commit's DV doc when position deletes are enabled
-    (explicit kwarg wins; else conf :data:`POSITION_DELETES_CONF`) and
+    (explicit kwarg wins; else conf ``spark.analytics.sink.positionDeletes``) and
     stamp every tombstone entry with its path.  Returns the doc's rel
     path, or None (disabled, empty commit, or census over cap — plain
     tombstones carry the semantics alone in every such case)."""
     if flag is None:
-        flag = (
-            str(spark.conf.get(POSITION_DELETES_CONF, "false")).lower()
-            == "true"
-        )
+        flag = conf.get(spark, "spark.analytics.sink.positionDeletes")
     if not flag or not tomb_entries:
         return None
     rel = _write_position_deletes(
@@ -2285,7 +2221,7 @@ def _write_position_deletes(
     map so the read side matches the exact reported string.
 
     Returns the doc's rel path, or None when the position census
-    overflowed :data:`DV_MAX_POSITIONS_CONF` (the caller keeps plain
+    overflowed ``spark.analytics.sink.dvMaxPositions`` (the caller keeps plain
     tombstones — correctness never depends on the DV).  The one
     driver-side collect here is update-footprint-bounded by that cap:
     at most one (file, position) hit per updated key per base version
@@ -2295,9 +2231,7 @@ def _write_position_deletes(
 
     from pyspark.sql import functions as F
 
-    cap = int(
-        spark.conf.get(DV_MAX_POSITIONS_CONF, str(_DV_MAX_POSITIONS_DEFAULT))
-    )
+    cap = conf.get(spark, "spark.analytics.sink.dvMaxPositions")
     key = man["bucket_key"]
     buckets = {t["bucket"] for t in tomb_entries}
     base, _ = _man_entries(target, man, buckets=buckets)
@@ -2381,7 +2315,7 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
     Deletes are :func:`table_delete`.
 
     ``position_deletes`` (round 19; default conf
-    :data:`POSITION_DELETES_CONF`) additionally records the EXACT row
+    ``spark.analytics.sink.positionDeletes``) additionally records the EXACT row
     positions this commit masks in the touched buckets' base files —
     readers then skip the key anti-join for covered files entirely
     (see :func:`_masked_scan`).  Write-side cost: one read of the
@@ -2435,15 +2369,16 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
     # size is Spark's FilePartition.maxSplitBytes: min(maxPartitionBytes,
     # max(openCostInBytes, totalBytes / minPartitionNum)), each file
     # counting its length plus the open cost (ADVICE r20 #1).
-    conf = spark.conf
-    open_cost = _size_bytes(conf.get("spark.sql.files.openCostInBytes", "4m"))
+    open_cost = conf.size_bytes(
+        spark.conf.get("spark.sql.files.openCostInBytes", "4m")
+    )
     min_parts = int(
-        conf.get("spark.sql.files.minPartitionNum", None)
-        or conf.get("spark.sql.leafNodeDefaultParallelism", None)
+        spark.conf.get("spark.sql.files.minPartitionNum", None)
+        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
         or spark.sparkContext.defaultParallelism
     )
     split_bytes = min(
-        _size_bytes(conf.get("spark.sql.files.maxPartitionBytes", "128m")),
+        conf.size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")),
         max(
             open_cost,
             sum((e.get("bytes") or 0) + open_cost for e in entries) // min_parts,

@@ -19,6 +19,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pyspark_analytics_library_spark import conf
+
 #: The ten fixture tables (TESTDATA.md / FIXTURES.md).
 TABLES = (
     "region",
@@ -138,11 +140,14 @@ def _configure(spark: SparkSession) -> None:
       sizing (2-3x total cores, or AQE coalescing from a high initial
       count).  Measured on the bare-session local replay: whole-suite
       sf0.01 wall time drops ~30%, single worst query 13.3 s -> 3.5 s.
+
+    All three stay set after the loader returns (not scoped): the lazy
+    frames it returns read them when they execute.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if (
-        spark.sparkContext.master.startswith("local")
+        conf.is_local_master(spark)
         and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"
     ):
         spark.conf.set("spark.sql.shuffle.partitions", "32")

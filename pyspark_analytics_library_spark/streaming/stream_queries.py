@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import _normalize_ts, load_tables
+from pyspark_analytics_library_spark.sources.io import _configure, _normalize_ts, load_tables
 
 _SCRATCH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
@@ -253,19 +253,12 @@ def _staged_events_dir(sf_dir: str) -> str:
 
 def stream_events(spark: SparkSession, sf_dir: str, **reader_opts) -> DataFrame:
     """File-source stream over the events parquet with the same ns→µs
-    timestamp normalization as the batch loader (SURVEY.md §1.3)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Streaming state is partitioned by spark.sql.shuffle.partitions at
-    # the FIRST micro-batch and AQE never coalesces it (AQE is batch-
-    # only), so a session still on Spark's default 200 would pay 200
-    # state-store tasks per micro-batch for a fixture-sized stream.
-    # Trim only the untouched default — a deliberately configured
-    # session (ours set 32, a cluster submit sizes it to cores) is
-    # respected.  On a real 100 TB cluster, state partitions should be
-    # ~2-3x executor cores, same rule as batch shuffles.
-    if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+    timestamp normalization and session confs as the batch loader
+    (SURVEY.md §1.3).  Streaming state is partitioned by
+    spark.sql.shuffle.partitions at the FIRST micro-batch and AQE never
+    coalesces it, so the loader's local-master trim of the untouched
+    200 default matters even more here."""
+    _configure(spark)
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     reader = spark.readStream.schema(raw_schema)
     for k, v in reader_opts.items():

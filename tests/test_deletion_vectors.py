@@ -33,6 +33,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as cm
 from tests.conftest import manifest_listing
 
@@ -182,15 +183,12 @@ def test_unreadable_dv_degrades_to_fallback_not_guess(spark, dvtable):
 
 
 def test_census_over_cap_falls_back_to_plain_tombstones(spark, dvtable):
-    spark.conf.set(cm.DV_MAX_POSITIONS_CONF, "3")
-    try:
+    with scoped_conf(spark, {"spark.analytics.sink.dvMaxPositions": 3}):
         st = cm.table_merge_mor(
             spark, dvtable,
             spark.range(10).select((F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")),
             position_deletes=True,
         )
-    finally:
-        spark.conf.unset(cm.DV_MAX_POSITIONS_CONF)
     assert st["position_deletes"] is False
     _, tombs = manifest_listing(dvtable)
     assert not any(t.get("dv") for t in tombs)

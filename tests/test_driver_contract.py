@@ -11,6 +11,7 @@ import os
 
 import pytest
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.registry import REGISTRY, load_all_query_modules
 from tests.conftest import TEST_SF_DIR, assert_query_matches_oracle
 
@@ -396,17 +397,15 @@ def test_describe_self_check_conf_switch(spark, monkeypatch):
         return orig_collect(self)
 
     monkeypatch.setattr(DataFrame, "collect", counting_collect)
-    try:
-        spark.conf.set("spark.analytics.describe.selfCheck", "false")
+    key = "spark.analytics.describe.selfCheck"
+    with scoped_conf(spark, {key: "false"}):
         lazy = fn(spark, TEST_SF_DIR)
         assert calls["n"] == 0, "selfCheck=false must not run eager jobs"
         rows_off = sorted(map(tuple, lazy.collect()))
 
-        calls["n"] = 0
-        spark.conf.set("spark.analytics.describe.selfCheck", "true")
+    calls["n"] = 0
+    with scoped_conf(spark, {key: "true"}):
         attested = fn(spark, TEST_SF_DIR)
         assert calls["n"] >= 2, "default path must run the parse-back jobs"
         rows_on = sorted(map(tuple, attested.collect()))
-    finally:
-        spark.conf.unset("spark.analytics.describe.selfCheck")
     assert rows_off == rows_on

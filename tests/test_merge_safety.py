@@ -142,24 +142,16 @@ def test_scd2_null_key_base_rows_stay_open(spark):
 # forbid directory renames outright.
 # ---------------------------------------------------------------------------
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as commit_mod
 
-
-@pytest.fixture
-def set_commit_mode(spark):
-    """Setter for the sink commit-mode conf, restored after the test."""
-    prev = spark.conf.get(commit_mod.MODE_CONF, None)
-    yield lambda mode: spark.conf.set(commit_mod.MODE_CONF, mode)
-    if prev is None:
-        spark.conf.unset(commit_mod.MODE_CONF)
-    else:
-        spark.conf.set(commit_mod.MODE_CONF, prev)
+COMMIT_MODE = "spark.analytics.sink.commitMode"
 
 
 @pytest.mark.parametrize("mode", ["rename", "manifest"])
 @pytest.mark.parametrize("name", ["sink_merge_upsert", "sink_merge_scd2"])
 def test_merge_sinks_match_oracle_under_both_commit_modes(
-    spark, oracle, tmp_path, monkeypatch, set_commit_mode, name, mode
+    spark, oracle, tmp_path, monkeypatch, name, mode
 ):
     """Branch equivalence: each merge sink takes the staged-overwrite
     path under ``rename`` and the manifest-table path (table_init +
@@ -177,22 +169,22 @@ def test_merge_sinks_match_oracle_under_both_commit_modes(
     # manifest table inside the flat parquet a rename-mode run leaves
     # at the same merge target.
     monkeypatch.setattr(scan_queries, "_SCRATCH", str(tmp_path))
-    set_commit_mode(mode)
     spec = REGISTRY[name]
-    assert_query_matches_oracle(
-        spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=f"{name}[{mode}]"
-    )
+    with scoped_conf(spark, {COMMIT_MODE: mode}):
+        assert_query_matches_oracle(
+            spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=f"{name}[{mode}]"
+        )
 
 
-def test_merge_sinks_refuse_unknown_commit_mode(spark, set_commit_mode):
+def test_merge_sinks_refuse_unknown_commit_mode(spark):
     from pyspark_analytics_library_spark.sources.scan_queries import (
         q_sink_merge_upsert,
     )
     from tests.conftest import TEST_SF_DIR
 
-    set_commit_mode("bogus")
-    with pytest.raises(ValueError, match="unknown"):
-        q_sink_merge_upsert(spark, TEST_SF_DIR)
+    with scoped_conf(spark, {COMMIT_MODE: "bogus"}):
+        with pytest.raises(ValueError, match=COMMIT_MODE):
+            q_sink_merge_upsert(spark, TEST_SF_DIR)
 
 
 def test_manifest_refuses_pointerless_nonempty_target(spark, tmp_path):
@@ -1391,19 +1383,12 @@ def test_mor_tombstone_skip_shuffle_guarded_by_split_size(
             skips.append(kw.get("skip_shuffle", False))
             return real_write(*a, **kw)
 
-        prev = {k: spark.conf.get(k, None) for k in confs}
         monkeypatch.setattr(commit_mod, "_write_bucketed", spy)
-        for k, v in confs.items():
-            spark.conf.set(k, v)
         try:
-            commit_mod.table_merge_mor(spark, target, updates)
+            with scoped_conf(spark, confs):
+                commit_mod.table_merge_mor(spark, target, updates)
         finally:
             monkeypatch.setattr(commit_mod, "_write_bucketed", real_write)
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
         tombs = manifest_listing(target)[1]
         per_bucket: dict[int, int] = {}
         for t in tombs:

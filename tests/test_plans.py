@@ -6,6 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.plans.assertions import (
     assert_in_plan,
     plan_text,
@@ -448,31 +449,24 @@ def test_dense_census_guard_is_conjunctive(spark, tmp_path, monkeypatch):
         return real_sparse(*a, **kw)
 
     monkeypatch.setattr(graph_mod, "_sparse_triangle_sum_frame", tracking_sparse)
-    spark.conf.set("spark.analytics.scratchDir", str(tmp_path / "scratch"))
     v_cap = "spark.analytics.graph.denseMatmulMaxVertices"
     e_cap = "spark.analytics.graph.denseMatmulMaxEdges"
-    try:
-        # stock caps: K6 (6 vertices / 15 edges) is dense — sparse untouched
-        dense_row = tuple(graph_mod.triangle_census(spark, k6).collect()[0])
-        assert calls == [], "fixture-sized graph should take the dense path"
-        # edge cap exceeded, vertex cap misconfigured sky-high → sparse
-        spark.conf.set(v_cap, str(10**9))
-        spark.conf.set(e_cap, "10")
-        assert (
-            tuple(graph_mod.triangle_census(spark, k6).collect()[0]) == dense_row
-        )
-        assert calls == [1], "edge cap alone must force the sparse dispatch"
-        # vertex cap exceeded, edge cap misconfigured sky-high → sparse
-        spark.conf.set(v_cap, "3")
-        spark.conf.set(e_cap, str(10**12))
-        assert (
-            tuple(graph_mod.triangle_census(spark, k6).collect()[0]) == dense_row
-        )
-        assert calls == [1, 1], "vertex cap alone must force the sparse dispatch"
-    finally:
-        spark.conf.unset(v_cap)
-        spark.conf.unset(e_cap)
-        spark.conf.unset("spark.analytics.scratchDir")
+
+    def census(caps):
+        with scoped_conf(
+            spark, {"spark.analytics.scratchDir": str(tmp_path / "scratch"), **caps}
+        ):
+            return tuple(graph_mod.triangle_census(spark, k6).collect()[0])
+
+    # stock caps: K6 (6 vertices / 15 edges) is dense — sparse untouched
+    dense_row = census({})
+    assert calls == [], "fixture-sized graph should take the dense path"
+    # edge cap exceeded, vertex cap misconfigured sky-high → sparse
+    assert census({v_cap: 10**9, e_cap: 10}) == dense_row
+    assert calls == [1], "edge cap alone must force the sparse dispatch"
+    # vertex cap exceeded, edge cap misconfigured sky-high → sparse
+    assert census({v_cap: 3, e_cap: 10**12}) == dense_row
+    assert calls == [1, 1], "vertex cap alone must force the sparse dispatch"
 
 
 def test_sparse_census_reclaims_scratch_before_returning(spark, tmp_path):
@@ -491,13 +485,14 @@ def test_sparse_census_reclaims_scratch_before_returning(spark, tmp_path):
         [(u, v) for u, v in combinations(range(1, 7), 2)], "u long, v long"
     )
     scratch_base = str(tmp_path / "scratch")
-    spark.conf.set("spark.analytics.scratchDir", scratch_base)
-    spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "1")
-    try:
+    with scoped_conf(
+        spark,
+        {
+            "spark.analytics.scratchDir": scratch_base,
+            "spark.analytics.graph.denseMatmulMaxEdges": 1,
+        },
+    ):
         row = tuple(triangle_census(spark, k6).collect()[0])
-    finally:
-        spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
-        spark.conf.unset("spark.analytics.scratchDir")
     assert row == (15, 60, 20, 1.0)
     app_dirs = []
     for root, dirs, _files in os.walk(scratch_base):
@@ -787,13 +782,9 @@ def test_cc_step_shares_one_phase1_subtree(spark, tmp_path):
     ).write.parquet(str(tmp_path / "lab"))
     lab = spark.read.parquet(str(tmp_path / "lab"))
     start = lab.select("v", "label", F.col("label").alias("base_label"))
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
         once = _cc_step(sym, start)
         text = once._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
     assert "ReusedExchange" in text, text
     # the sym parquet is scanned exactly once in the whole round plan
     assert text.count(str(tmp_path / "sym")) == 1, text
@@ -818,11 +809,8 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.adaptive.enabled": "false",
     }
-    prev = {k: spark.conf.get(k, None) for k in confs}
-    for k, v in confs.items():
-        spark.conf.set(k, v)
     scratch = str(tmp_path / "scratch")
-    try:
+    with scoped_conf(spark, confs):
         sym, drop = _cc_materialize_sym(spark, sym0, scratch)
         try:
             lab = spark.range(0, 7).select(
@@ -839,9 +827,6 @@ def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
         finally:
             drop()
             _fs_delete(spark, scratch)
-    finally:
-        for k, v in prev.items():
-            (spark.conf.set(k, v) if v is not None else spark.conf.unset(k))
 
 
 def test_census_scratch_reclaimed_on_failure(spark, tmp_path, monkeypatch):
@@ -853,24 +838,17 @@ def test_census_scratch_reclaimed_on_failure(spark, tmp_path, monkeypatch):
 
     from pyspark_analytics_library_spark.operators.graph import triangle_census
 
-    spark.conf.set("spark.analytics.scratchDir", str(tmp_path))
     monkeypatch.setattr(
         np, "zeros", lambda *a, **k: (_ for _ in ()).throw(RuntimeError("injected"))
     )
-    try:
-        edges = spark.createDataFrame(
-            [(1, 2), (2, 3), (1, 3)], "u long, v long"
-        )
+    edges = spark.createDataFrame([(1, 2), (2, 3), (1, 3)], "u long, v long")
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
         with pytest.raises(RuntimeError, match="injected"):
             triangle_census(spark, edges)
-        leftovers = [
-            p
-            for d in tmp_path.glob("pyspark_analytics_cc_*")
-            for p in d.iterdir()
-        ]
-        assert leftovers == [], leftovers
-    finally:
-        spark.conf.unset("spark.analytics.scratchDir")
+    leftovers = [
+        p for d in tmp_path.glob("pyspark_analytics_cc_*") for p in d.iterdir()
+    ]
+    assert leftovers == [], leftovers
 
 
 def test_minhash_verify_and_band_exchanges_are_reused(spark):

@@ -11,6 +11,7 @@ import pytest
 from hypothesis import given as hyp_given
 from hypothesis import strategies as st
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.registry import REGISTRY, load_all_query_modules
 from tests.conftest import TEST_SF_DIR
 
@@ -46,12 +47,9 @@ def test_build_index_guard_trips(spark):
     with pytest.raises(IndexTooLargeError, match="sim_ivf_approx"):
         build_index(spark, e, max_bytes=1024)
     # conf-driven cap takes effect when max_bytes is not passed
-    spark.conf.set("spark.analytics.sim.maxIndexBytes", "1024")
-    try:
+    with scoped_conf(spark, {"spark.analytics.sim.maxIndexBytes": 1024}):
         with pytest.raises(IndexTooLargeError):
             build_index(spark, e)
-    finally:
-        spark.conf.unset("spark.analytics.sim.maxIndexBytes")
     # and the default cap admits the fixture index
     assert build_index(spark, e) is not None
 
@@ -549,25 +547,24 @@ def test_cc_scratch_dir_conf_honored(spark, tmp_path):
     (round 19: small edge sets dispatch driver-side by default)."""
     from pyspark_analytics_library_spark.operators.dedup import connected_components
 
-    spark.conf.set("spark.analytics.scratchDir", str(tmp_path))
-    spark.conf.set("spark.analytics.cc.driverUnionFindMaxEdges", "0")
-    try:
-        edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
-        vertices = spark.createDataFrame(
-            [(v,) for v in (1, 2, 3, 10, 11, 20)], "v long"
-        )
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+    vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11, 20)], "v long")
+    with scoped_conf(
+        spark,
+        {
+            "spark.analytics.scratchDir": str(tmp_path),
+            "spark.analytics.cc.driverUnionFindMaxEdges": 0,
+        },
+    ):
         out = {r.v: r.label for r in connected_components(edges, vertices).collect()}
-        assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-        runs = list(tmp_path.glob("pyspark_analytics_cc_*/*"))
-        assert runs, "configured scratchDir received no iteration files"
-        names = {p.name for p in runs[0].iterdir()}
-        # Only the final round's files (backing the returned frame) may
-        # survive; the edge materialization is reclaimed at completion.
-        assert any(n.startswith("round_") for n in names)
-        assert "sym" not in names
-    finally:
-        spark.conf.unset("spark.analytics.scratchDir")
-        spark.conf.unset("spark.analytics.cc.driverUnionFindMaxEdges")
+    assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
+    runs = list(tmp_path.glob("pyspark_analytics_cc_*/*"))
+    assert runs, "configured scratchDir received no iteration files"
+    names = {p.name for p in runs[0].iterdir()}
+    # Only the final round's files (backing the returned frame) may
+    # survive; the edge materialization is reclaimed at completion.
+    assert any(n.startswith("round_") for n in names)
+    assert "sym" not in names
 
 
 def test_cc_loop_drops_bucketed_sym_table_on_round0_failure(
@@ -591,22 +588,17 @@ def test_cc_loop_drops_bucketed_sym_table_on_round0_failure(
         "spark.analytics.cc.edgeBuckets": "4",
         "spark.analytics.cc.driverUnionFindMaxEdges": "0",
     }
-    for k, v in confs.items():
-        spark.conf.set(k, v)
-    try:
-        edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
-        vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11)], "v long")
+    edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
+    vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11)], "v long")
+    with scoped_conf(spark, confs):
         with pytest.raises(RuntimeError, match="injected round-0"):
             dedup.connected_components(edges, vertices).collect()
-        leaked = [
-            t.name
-            for t in spark.catalog.listTables()
-            if t.name.startswith("pyspark_analytics_cc_sym_")
-        ]
-        assert leaked == [], leaked
-    finally:
-        for k in confs:
-            spark.conf.unset(k)
+    leaked = [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("pyspark_analytics_cc_sym_")
+    ]
+    assert leaked == [], leaked
 
 
 def test_cc_driver_union_find_matches_loop(spark):
@@ -629,11 +621,8 @@ def test_cc_driver_union_find_matches_loop(spark):
     verts = spark.range(0, 200).select(F.col("id").alias("v"))
 
     uf = {(r.v, r.label) for r in connected_components(edges, verts).collect()}
-    spark.conf.set("spark.analytics.cc.driverUnionFindMaxEdges", "0")
-    try:
+    with scoped_conf(spark, {"spark.analytics.cc.driverUnionFindMaxEdges": 0}):
         loop = {(r.v, r.label) for r in connected_components(edges, verts).collect()}
-    finally:
-        spark.conf.unset("spark.analytics.cc.driverUnionFindMaxEdges")
     assert uf == loop
     # vertices 121..199 never appear in an edge: own-id singletons.
     assert all((v, v) in uf for v in range(121, 200))
@@ -664,29 +653,15 @@ def test_cc_interval_rewrite_matches_edge_closure(spark):
     assert got == want
 
 
-def test_scratch_root_requires_durable_dir_on_cluster():
+def test_scratch_root_requires_durable_dir_on_cluster(spark, monkeypatch):
     """On a non-local master with no conf and no checkpoint dir the loop
     must refuse eagerly instead of writing executor-local paths."""
-    import pytest as _pytest
-
     from pyspark_analytics_library_spark.operators.dedup import _iteration_scratch_root
 
-    class FakeConf:
-        def get(self, key, default=None):
-            return default
-
-    class FakeSC:
-        master = "spark://cluster:7077"
-
-        def getCheckpointDir(self):
-            return None
-
-    class FakeSession:
-        conf = FakeConf()
-        sparkContext = FakeSC()
-
-    with _pytest.raises(ValueError, match="scratchDir"):
-        _iteration_scratch_root(FakeSession())
+    monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
+    monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
+    with pytest.raises(ValueError, match="scratchDir"):
+        _iteration_scratch_root(spark)
 
 
 def test_ngram_jaccard_prefix_filter_is_lossless(spark):
@@ -728,16 +703,13 @@ def test_triangle_dense_dispatch_bounded_by_edges(spark, monkeypatch):
     dense_row = tuple(triangle_census(spark, k6).collect()[0])
     assert dense_row == expected
 
-    spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "10")
-    try:
-        def _no_dense(*a, **k):
-            raise AssertionError("dense matmul path must not run over the edge cap")
+    def _no_dense(*a, **k):
+        raise AssertionError("dense matmul path must not run over the edge cap")
 
-        monkeypatch.setattr(np, "zeros", _no_dense)
+    cap = {"spark.analytics.graph.denseMatmulMaxEdges": 10}
+    with scoped_conf(spark, cap), monkeypatch.context() as m:
+        m.setattr(np, "zeros", _no_dense)
         sparse_row = tuple(triangle_census(spark, k6).collect()[0])
-    finally:
-        monkeypatch.undo()
-        spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
     assert sparse_row == expected
 
 
@@ -756,29 +728,24 @@ def test_exact_quantile_guard_fails_fast_past_distinct_cap(spark):
 
     fn = REGISTRY["agg_quantile"].fn
     baseline = sorted(map(tuple, fn(spark, TEST_SF_DIR).collect()))
-    spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "1024")
-    try:
+    cap = "spark.analytics.quantile.maxLocalStateBytes"
+    with scoped_conf(spark, {cap: "1024"}):
         # Round 17 (VERDICT r16 #7): the DEFAULT over-cap behavior is
         # now compute-not-refuse — the bounded-state binned path must
         # return bit-identical rounded results to the native plan.
         assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-        # onOverCap=error restores the r15/r16 refusal with the
-        # actionable message naming both escape hatches.
-        spark.conf.set("spark.analytics.quantile.onOverCap", "error")
-        with pytest.raises(ValueError, match="agg_approx_quantile"):
-            fn(spark, TEST_SF_DIR)
-        # The conf parser takes JVM-style size suffixes (ADVICE r16):
-        # '12g' must parse as a cap, not crash with a bare int() error.
-        spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "12g")
-        assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-        spark.conf.set("spark.analytics.quantile.maxLocalStateBytes", "1024")
-        # Bypass switch: plan must build (and run) with the probe off.
-        spark.conf.set("spark.analytics.quantile.guard", "false")
-        assert fn(spark, TEST_SF_DIR).count() > 0
-    finally:
-        spark.conf.unset("spark.analytics.quantile.maxLocalStateBytes")
-        spark.conf.unset("spark.analytics.quantile.guard")
-        spark.conf.unset("spark.analytics.quantile.onOverCap")
+        with scoped_conf(spark, {"spark.analytics.quantile.onOverCap": "error"}):
+            # onOverCap=error restores the r15/r16 refusal with the
+            # actionable message naming both escape hatches.
+            with pytest.raises(ValueError, match="agg_approx_quantile"):
+                fn(spark, TEST_SF_DIR)
+            # The conf parser takes JVM-style size suffixes (ADVICE r16):
+            # '12g' must parse as a cap, not crash with a bare int() error.
+            with scoped_conf(spark, {cap: "12g"}):
+                assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
+            # Bypass switch: plan must build (and run) with the probe off.
+            with scoped_conf(spark, {"spark.analytics.quantile.guard": "false"}):
+                assert fn(spark, TEST_SF_DIR).count() > 0
     # Stock cap (256 MB): the fixture estimates a few MB — normal path.
     assert fn(spark, TEST_SF_DIR).count() > 0
 
@@ -861,19 +828,19 @@ def test_triangle_census_fails_fast_past_work_cap(spark, tmp_path):
     k6 = spark.createDataFrame(
         [(u, v) for u, v in combinations(range(1, 7), 2)], "u long, v long"
     )
-    spark.conf.set("spark.analytics.scratchDir", str(tmp_path / "scratch"))
-    spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "1")
-    spark.conf.set("spark.analytics.graph.sparseMaxWork", "10")
-    try:
+    scratch = tmp_path / "scratch"
+    with scoped_conf(
+        spark,
+        {
+            "spark.analytics.scratchDir": str(scratch),
+            "spark.analytics.graph.denseMatmulMaxEdges": 1,
+            "spark.analytics.graph.sparseMaxWork": 10,
+        },
+    ):
         with pytest.raises(ValueError, match="sparseMaxWork"):
             triangle_census(spark, k6)
-        # Nothing may have been written before the refusal.
-        scratch = tmp_path / "scratch"
-        assert not scratch.exists() or not any(scratch.rglob("*.parquet"))
-    finally:
-        spark.conf.unset("spark.analytics.graph.sparseMaxWork")
-        spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
-        spark.conf.unset("spark.analytics.scratchDir")
+    # Nothing may have been written before the refusal.
+    assert not scratch.exists() or not any(scratch.rglob("*.parquet"))
 
 
 def test_approx_quantile_close_to_exact(spark):
@@ -899,34 +866,22 @@ def test_approx_quantile_close_to_exact(spark):
         assert abs(approx[flag] - m) / max(abs(m), 1) < 0.1, (flag, approx[flag], m)
 
 
-def test_scratch_root_uses_checkpoint_dir_on_cluster():
+def test_scratch_root_uses_checkpoint_dir_on_cluster(spark, monkeypatch):
     """With no scratchDir conf, a cluster master falls back to the
     application's configured checkpoint dir."""
     from pyspark_analytics_library_spark.operators.dedup import _iteration_scratch_root
 
-    class FakeConf:
-        def get(self, key, default=None):
-            return default
-
-    class FakeSC:
-        master = "spark://cluster:7077"
-        applicationId = "app-20260814-0007"
-
-        def getCheckpointDir(self):
-            return "hdfs://nn/checkpoints"
-
-    class FakeSession:
-        conf = FakeConf()
-        sparkContext = FakeSC()
-
-    root = _iteration_scratch_root(FakeSession())
+    sc = spark.sparkContext
+    monkeypatch.setattr(sc, "master", "spark://cluster:7077")
+    monkeypatch.setattr(sc, "getCheckpointDir", lambda: "hdfs://nn/checkpoints")
+    root = _iteration_scratch_root(spark)
     # App-id scoped (NOT pid): two drivers sharing one scratch URI must
     # land in disjoint roots even when their pids collide across hosts;
     # the per-call leaf isolates repeated loops within one app.
     assert root.startswith(
-        "hdfs://nn/checkpoints/pyspark_analytics_cc_app-20260814-0007/"
+        f"hdfs://nn/checkpoints/pyspark_analytics_cc_{sc.applicationId}/"
     )
-    assert root != _iteration_scratch_root(FakeSession())
+    assert root != _iteration_scratch_root(spark)
 
 
 def test_triangle_sparse_path_non_bigint_ids(spark):
@@ -941,11 +896,8 @@ def test_triangle_sparse_path_non_bigint_ids(spark):
         [(f"n{u}", f"n{v}") for u, v in combinations(range(4), 2)],
         "u string, v string",
     )
-    spark.conf.set("spark.analytics.graph.denseMatmulMaxEdges", "1")
-    try:
+    with scoped_conf(spark, {"spark.analytics.graph.denseMatmulMaxEdges": 1}):
         row = tuple(triangle_census(spark, k4).collect()[0])
-    finally:
-        spark.conf.unset("spark.analytics.graph.denseMatmulMaxEdges")
     assert row == (6, 12, 4, 1.0)
 
 
@@ -960,11 +912,8 @@ def test_triangle_sparse_path_mixed_endpoint_types(spark):
         [(1, 2), (2, 3), (1, 3), (3, 4)], "u int, v bigint"
     )
     dense = tuple(triangle_census(spark, edges).collect()[0])
-    spark.conf.set("spark.analytics.graph.denseMatmulMaxVertices", "0")
-    try:
+    with scoped_conf(spark, {"spark.analytics.graph.denseMatmulMaxVertices": 0}):
         sparse = tuple(triangle_census(spark, edges).collect()[0])
-    finally:
-        spark.conf.unset("spark.analytics.graph.denseMatmulMaxVertices")
     assert dense[:3] == (4, 5, 1)
     assert sparse == dense
 
@@ -1186,17 +1135,21 @@ def test_reclaim_iteration_scratch_conf_root_keeps_latest(spark, tmp_path):
     )
 
     scratch_base = str(tmp_path / "scratch")
-    spark.conf.set("spark.analytics.scratchDir", scratch_base)
-    # Force the distributed loop: the declared query no longer iterates
-    # (round-19 interval-segmentation rewrite) and small edge sets
-    # dispatch to the driver union-find, neither of which touches
-    # scratch — the reclaim mechanics under test are loop-path-only.
-    spark.conf.set("spark.analytics.cc.driverUnionFindMaxEdges", "0")
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)], "src long, dst long"
     )
     verts = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11, 20)], "v long")
-    try:
+    # Force the distributed loop: the declared query no longer iterates
+    # (round-19 interval-segmentation rewrite) and small edge sets
+    # dispatch to the driver union-find, neither of which touches
+    # scratch — the reclaim mechanics under test are loop-path-only.
+    with scoped_conf(
+        spark,
+        {
+            "spark.analytics.scratchDir": scratch_base,
+            "spark.analytics.cc.driverUnionFindMaxEdges": 0,
+        },
+    ):
         first = connected_components(edges, verts)
         n_first = first.count()
         second = connected_components(edges, verts)
@@ -1219,9 +1172,6 @@ def test_reclaim_iteration_scratch_conf_root_keeps_latest(spark, tmp_path):
         # keep_latest=False reclaims everything, app dir included.
         reclaim_iteration_scratch(spark, keep_latest=False)
         assert not os.path.exists(app_dir)
-    finally:
-        spark.conf.unset("spark.analytics.scratchDir")
-        spark.conf.unset("spark.analytics.cc.driverUnionFindMaxEdges")
 
 
 def test_reclaim_iteration_scratch_local_tempdir_root(spark, tmp_path, monkeypatch):

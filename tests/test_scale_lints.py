@@ -14,8 +14,12 @@ in the code.
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
+
+from pyspark_analytics_library_spark import conf
+from pyspark_analytics_library_spark.sources import io as io_mod
 
 PKG = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -76,8 +80,8 @@ WHITELIST = {
     # clustering column — ≤189 doubles at 3 columns — the z-rank cell
     # edges, round 18; ADVICE r18 doc-drift fix); plus
     # _write_position_deletes' deletion-vector census collect (round
-    # 19): limit(cap+1)-bounded (DV_MAX_POSITIONS_CONF, default 1M
-    # (file, position) pairs — update-footprint-sized by contract, and
+    # 19): limit(cap+1)-bounded (spark.analytics.sink.dvMaxPositions,
+    # default 1M (file, position) pairs — update-footprint-sized by contract, and
     # the commit falls back to plain tombstones past the cap rather
     # than collecting more)
     "sources/commit.py": 4,
@@ -97,22 +101,20 @@ _CALL = re.compile(
 _PYUDF = re.compile(r"\bF\.udf\(")
 
 
-def _count_sites(path: str) -> int:
-    with open(path, encoding="utf-8") as f:
-        return sum(len(_CALL.findall(line)) for line in f)
+def _package_sources():
+    """(path relative to the package, source) of every package module."""
+    for root, _dirs, files in os.walk(PKG):
+        for fname in files:
+            if fname.endswith(".py"):
+                path = os.path.join(root, fname)
+                with open(path, encoding="utf-8") as f:
+                    yield os.path.relpath(path, PKG).replace(os.sep, "/"), f.read()
 
 
 def test_driver_materialization_sites_are_whitelisted():
-    found: dict[str, int] = {}
-    for root, _dirs, files in os.walk(PKG):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
-            n = _count_sites(path)
-            if n:
-                found[rel] = n
+    found = {
+        rel: n for rel, src in _package_sources() if (n := len(_CALL.findall(src)))
+    }
     assert found == WHITELIST, (
         "driver-side materialization sites changed — if the new site is "
         f"size-guarded, update the whitelist: {found} != {WHITELIST}"
@@ -125,16 +127,45 @@ def test_row_at_a_time_udfs_only_in_the_udf_demo_module():
     Arrow-batched pandas UDFs everywhere EXCEPT operators/udf.py, whose
     whole point is demonstrating the UDF machinery tiers side by side
     (plain / arrow / pandas, each with the same CASE oracle)."""
-    offenders = []
-    for root, _dirs, files in os.walk(PKG):
-        for fname in files:
-            if not fname.endswith(".py"):
-                continue
-            path = os.path.join(root, fname)
-            rel = os.path.relpath(path, PKG).replace(os.sep, "/")
-            if rel == "operators/udf.py":
-                continue
-            with open(path, encoding="utf-8") as f:
-                if _PYUDF.search(f.read()):
-                    offenders.append(rel)
+    offenders = [
+        rel
+        for rel, src in _package_sources()
+        if rel != "operators/udf.py" and _PYUDF.search(src)
+    ]
     assert not offenders, f"row-at-a-time F.udf outside the demo module: {offenders}"
+
+
+_SESSION_CONF = re.compile(r"\.conf\.(get|set|unset)\(\s*([^,)]*)")
+_CONF_READ = re.compile(r"\bconf\.get\(\s*spark,\s*\"([^\"]+)\"")
+
+
+def _conf_writes(src: str) -> int:
+    return sum(method != "get" for method, _ in _SESSION_CONF.findall(src))
+
+
+def test_session_conf_is_read_and_scoped_one_way():
+    """Every ``spark.analytics.*`` key is read through ``conf.get``:
+    outside ``conf.py`` a session-conf call takes a literal Spark-owned
+    key; session writes happen only in ``conf.scoped_conf`` and the
+    loader's ``io._configure``; the local-master check is one function;
+    and every declared key is read somewhere (no dead keys)."""
+    ad_hoc, writes, local_checks, read = [], {}, [], set()
+    for rel, src in _package_sources():
+        read.update(_CONF_READ.findall(src))
+        if 'master.startswith("local")' in src and rel != "conf.py":
+            local_checks.append(rel)
+        if _conf_writes(src):
+            writes[rel] = _conf_writes(src)
+        for _method, arg in _SESSION_CONF.findall(src):
+            if rel != "conf.py" and not re.fullmatch(r'"spark\.(?!analytics\.)[^"]+"', arg):
+                ad_hoc.append((rel, arg))
+    assert ad_hoc == [], f"read spark.analytics.* keys with conf.get: {ad_hoc}"
+    assert writes == {
+        "conf.py": _conf_writes(inspect.getsource(conf.scoped_conf)),
+        "sources/io.py": _conf_writes(inspect.getsource(io_mod._configure)),
+    }, "flip session conf with conf.scoped_conf"
+    assert local_checks == [], f"use conf.is_local_master: {local_checks}"
+    assert read == set(conf.KEYS), (
+        f"declared but never read: {sorted(set(conf.KEYS) - read)}; "
+        f"read but not declared: {sorted(read - set(conf.KEYS))}"
+    )

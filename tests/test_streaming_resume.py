@@ -19,6 +19,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark.conf import scoped_conf
+
 ROCKS = (
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 )
@@ -30,16 +32,8 @@ _CONFS = {
 
 @pytest.fixture
 def rocksdb_changelog(spark):
-    prev = {}
-    for k, v in _CONFS.items():
-        prev[k] = spark.conf.get(k, None)
-        spark.conf.set(k, v)
-    yield
-    for k, v in prev.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
+    with scoped_conf(spark, _CONFS):
+        yield
 
 
 def _run_once(spark, src_dir: str, checkpoint: str, sink: list) -> None:
