@@ -1,16 +1,13 @@
-"""Partition spec, deletion vectors, and rename evolution on v2
+"""Partition spec, merge-on-read, and rename evolution on v2
 manifest tables (round 19 — sources/commit.py).
 
-Three round-19 capabilities on one date-partitioned orders table:
+Two round-19 capabilities on one date-partitioned orders table, with a
+merge-on-read upsert between them:
 
 * a declared PARTITION SPEC (`partition_by` + day/month transform):
   reads prune whole partitions before any file-stats pass, and
   `table_drop_partition` is the metadata-only "drop a day" retention
   primitive;
-* POSITIONAL DELETION VECTORS (`position_deletes=True`): merge-on-read
-  commits record the exact row positions they mask, so reads apply a
-  pure position filter — no tombstone join at all (SCALE.md round-19:
-  0.36 s vs 0.86 s on the 5-commit scatter shape);
 * RENAME EVOLUTION (`table_rename_column`): metadata-only; files
   written before the rename are read through their rename epoch.
 
@@ -59,22 +56,19 @@ def main(spark, sf_dir):
             f"{cm.MANIFEST_IO['part_reads']} manifest parts"
         )
 
-        # Merge-on-read upsert WITH deletion vectors: the commit
-        # records masked row positions; the read plan has no join.
+        # Merge-on-read upsert: the commit writes delta files plus key
+        # tombstones; reads mask older rows with a broadcast anti-join.
         batch = (
             orders.orderBy("o_orderkey")
             .limit(5)
             .withColumn("o_orderpriority", F.lit("9-UPDATED"))
             .select(*cols)
         )
-        print("mor+dv:", cm.table_merge_mor(spark, target, batch, position_deletes=True))
+        print("mor:", cm.table_merge_mor(spark, target, batch))
         got = cm.table_read(spark, target)
-        plan = got._jdf.queryExecution().executedPlan().toString()
         print(
             "updated rows:",
             got.filter(F.col("o_orderpriority") == "9-UPDATED").count(),
-            "| joins in read plan:",
-            plan.count("Join"),
         )
 
         # Metadata-only rename; old files read through their epoch.

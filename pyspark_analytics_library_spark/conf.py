@@ -69,8 +69,6 @@ KEYS: dict[str, Key] = {
     "spark.analytics.graph.broadcastNbrsMaxEdges": Key("50000000", int, "sparse census broadcast cap"),
     "spark.analytics.sim.maxIndexBytes": Key("2g", size_bytes, "build_index matrix size cap"),
     "spark.analytics.sink.commitMode": Key("rename", _choice("rename", "manifest"), "sink_merge_* commit protocol"),
-    "spark.analytics.sink.positionDeletes": Key("false", _bool, "merge-on-read commits write deletion vectors"),
-    "spark.analytics.sink.dvMaxPositions": Key("1000000", int, "DV position cap per commit"),
 }
 # fmt: on
 

@@ -883,11 +883,14 @@ def _cc_materialize_sym(
     broadcast threshold every round re-shuffles (and re-sorts) the
     ENTIRE edge table for the sort-merge join — log(diameter) edge
     exchanges for one edge set.  ``bucketBy(n, src).sortBy(src)``
-    persists hash(src) partitioning + order in the table metadata, so
-    every round's join reads the buckets with ZERO exchange and ZERO
-    sort on the edge side (plan pinned by
-    tests/test_plans.py::test_cc_sym_bucketed_join_no_edge_exchange);
-    only the vertex-sized label table moves per round.  The up-front
+    persists hash(src) partitioning in the table metadata, so every
+    round's join reads the edge-side buckets with zero exchange; one
+    local sort per round (Spark reports no bucketed-scan output
+    ordering unless the legacy
+    ``spark.sql.legacy.bucketedTableScan.outputOrdering`` is set; plan
+    pinned by
+    tests/test_plans.py::test_cc_sym_bucketed_join_no_edge_exchange).
+    Only the vertex-sized label table moves per round.  The up-front
     ``repartition(n, src)`` uses the same hash as the bucket spec, so
     each task holds exactly one bucket → one file per bucket (no
     small-file spray).

@@ -36,8 +36,8 @@ driver I/O is O(touched buckets), metered by :data:`MANIFEST_IO`.
 Surface: :func:`table_init` / :func:`table_merge` (copy-on-write,
 touched buckets only) / :func:`table_read` / :func:`table_lookup`;
 :func:`table_append` (fast append); :func:`table_merge_mor` /
-:func:`table_delete` (merge-on-read tombstones, optionally with
-positional deletion vectors — see :func:`_masked_scan`);
+:func:`table_delete` (merge-on-read key tombstones — see
+:func:`_masked_scan`);
 :func:`table_compact` (bin-packing + tombstone apply, capacity-aware
 for clustered layouts); metadata-only schema evolution
 (:func:`table_add_columns`, :func:`table_rename_column`,
@@ -142,12 +142,6 @@ DATA_DIR = "data"
 
 #: Directory holding manifest part files (one per (partition, bucket)).
 PARTS_DIR = "manifests"
-
-#: Read-side threshold: total DV positions at or below this inline as
-#: a literal filter expression (plan contains NO join at all); above
-#: it, apply via a broadcast (file, position) anti-join — still free
-#: of key semantics and gen mapping, just not literal-embedded.
-_DV_INLINE_MAX = 10_000
 
 #: Observability/test counter for driver-side manifest I/O: every JSON
 #: read of a root manifest or part file adds here.  The manifest-list
@@ -1121,8 +1115,8 @@ def table_history(target: str) -> list[str]:
 
 def _scan_coalesce(spark, items: list[dict]) -> int:
     """Task count for scanning ``items``' files: enough partitions to
-    fill the cluster and to keep ~128 MB per task, but never one task
-    per tiny file.  Entries without recorded byte sizes (pre-r18
+    fill the cluster and to keep ``spark.sql.files.maxPartitionBytes``
+    (default 128 MiB) per task, but never one task per tiny file.  Entries without recorded byte sizes (pre-r18
     manifests) get NO coalescing (ADVICE r18: a fixed files-per-task
     estimate silently under-parallelized legacy manifests holding LARGE
     files — without sizes the "files are tiny" premise is unprovable,
@@ -1133,7 +1127,10 @@ def _scan_coalesce(spark, items: list[dict]) -> int:
     sizes = [e.get("bytes") for e in items]
     if any(s is None for s in sizes):
         return len(items)
-    return max(par, -(-sum(sizes) // (128 << 20)))
+    max_bytes = conf.size_bytes(
+        spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+    )
+    return max(par, -(-sum(sizes) // max_bytes))
 
 
 def _ranges_may_intersect(a, b) -> bool:
@@ -1174,22 +1171,13 @@ def _may_mask(entry: dict, tomb: dict, key: str) -> bool:
     )
 
 
-def _mask_split(
-    man: dict,
-    entries: list[dict],
-    tombstones: list[dict],
-    return_maskers: bool = False,
-):
+def _mask_split(man: dict, entries: list[dict], tombstones: list[dict]):
     """Partition ``entries`` into (clean, dirty, relevant_tombstones):
     a file is CLEAN when no live tombstone :func:`_may_mask` it — it
     takes the plain-scan path, paying zero join; the anti-join runs
     only over the dirty files, against only the tombstones that can
     affect at least one of them.  Pure manifest arithmetic, no I/O:
-    ``tombstones`` is the part-loaded list from :func:`_man_entries`.
-
-    With ``return_maskers`` (round 19, the deletion-vector read path)
-    a 4th element maps each dirty entry's path to ITS masker list —
-    the per-file evidence the DV coverage check needs."""
+    ``tombstones`` is the part-loaded list from :func:`_man_entries`."""
     key = man["bucket_key"]
     buckets = {e["bucket"] for e in entries}
     tomb_by_bucket: dict[int, list[dict]] = {}
@@ -1199,21 +1187,16 @@ def _mask_split(
     clean: list[dict] = []
     dirty: list[dict] = []
     relevant: list[dict] = []
-    by_path: dict[str, list[dict]] = {}
     seen_tombs: set[str] = set()
     for e in entries:
         maskers = [
             t for t in tomb_by_bucket.get(e["bucket"], ()) if _may_mask(e, t, key)
         ]
         (dirty if maskers else clean).append(e)
-        if maskers:
-            by_path[e["path"]] = maskers
         for t in maskers:
             if t["path"] not in seen_tombs:
                 seen_tombs.add(t["path"])
                 relevant.append(t)
-    if return_maskers:
-        return clean, dirty, relevant, by_path
     return clean, dirty, relevant
 
 
@@ -1267,7 +1250,7 @@ def _read_paths(spark, schema, paths: list[str]) -> DataFrame:
         return spark.read.schema(schema).parquet(*paths)
 
 
-def _scan_entries(spark, target: str, man: dict, schema, items, meta_cols=False):
+def _scan_entries(spark, target: str, man: dict, schema, items):
     """Parquet scan of manifest entries in the table's CURRENT column
     names, honoring rename epochs (round 19, VERDICT r18 next #4):
     files written before a :func:`table_rename_column` store the
@@ -1275,31 +1258,14 @@ def _scan_entries(spark, target: str, man: dict, schema, items, meta_cols=False)
     silently read NULLs there.  Entries group by how many renames
     postdate their gen; each group scans with its epoch's names and
     aliases back to current — bounded by the rename count, and
-    compaction naturally migrates files to the newest epoch.  With
-    ``meta_cols`` the relation also carries the ``_rel`` path tail
-    and ``_ri`` row index (the DV filter inputs)."""
+    compaction naturally migrates files to the newest epoch."""
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructField, StructType
 
-    def meta(df):
-        if not meta_cols:
-            return df
-        return df.select(
-            "*",
-            F.regexp_extract(
-                F.col("_metadata.file_path"),
-                r"^.*/(data/c-[0-9a-f]{12}/.*)$",
-                1,
-            ).alias("_rel"),
-            F.col("_metadata.row_index").alias("_ri"),
-        )
-
     renames = man.get("renames") or []
     if not renames:
-        return meta(
-            _read_paths(
-                spark, schema, [os.path.join(target, e["path"]) for e in items]
-            )
+        return _read_paths(
+            spark, schema, [os.path.join(target, e["path"]) for e in items]
         )
     groups: dict[int, list[dict]] = {}
     for e in items:
@@ -1311,17 +1277,15 @@ def _scan_entries(spark, target: str, man: dict, schema, items, meta_cols=False)
             StructField(_disk_name(f.name, suffix), f.dataType, f.nullable)
             for f in schema.fields
         ]
-        df = meta(
-            _read_paths(
-                spark,
-                StructType(fields),
-                [os.path.join(target, e["path"]) for e in groups[k]],
-            )
+        df = _read_paths(
+            spark,
+            StructType(fields),
+            [os.path.join(target, e["path"]) for e in groups[k]],
         )
         sel = [
             F.col(d.name).alias(f.name)
             for d, f in zip(fields, schema.fields)
-        ] + ([F.col("_rel"), F.col("_ri")] if meta_cols else [])
+        ]
         pieces.append(df.select(*sel))
     out = pieces[0]
     for p in pieces[1:]:
@@ -1361,16 +1325,9 @@ def _masked_scan(
       duplicate update batches dedup to one row) and broadcast into
       the anti-join.
 
-    Round 19 adds the DELETION-VECTOR fast path in front of the
-    anti-join (VERDICT r18 next #2): a dirty file whose every masker
-    tombstone carries a position-delete document covering it is masked
-    by EXACT row positions instead — zero positions proves it clean
-    (plain scan), small position sets apply as a literal
-    ``(file_name, row_index)`` filter (the plan contains NO join at
-    all), large ones as a broadcast position anti-join.  Files any of
-    whose maskers lack a DV fall back to the key anti-join, which
-    remains fully correct for mixed histories (DV commits also write
-    ordinary tombstone key files).
+    Tombstones written with the since-removed positional deletion
+    vectors carry a ``dv`` field; it is ignored, because those commits
+    also wrote the key tombstones this mask reads.
 
     Tombstones are bucket-filtered to ``entries``' buckets inside the
     split (update-batch-sized by construction; compaction keeps them
@@ -1383,9 +1340,7 @@ def _masked_scan(
     schema = StructType.fromJson(_json.loads(man["schema"]))
     if not entries:
         return spark.createDataFrame([], schema)
-    clean, dirty, tombs, maskers = _mask_split(
-        man, entries, tombstones, return_maskers=True
-    )
+    clean, dirty, tombs = _mask_split(man, entries, tombstones)
 
     def plain(items):
         df = _scan_entries(spark, target, man, schema, items)
@@ -1404,85 +1359,6 @@ def _masked_scan(
     if not dirty:
         return plain(entries)
     key = man["bucket_key"]
-
-    # ---- deletion-vector coverage check (driver-side, manifest+DV
-    # JSON arithmetic only; DV doc reads are metered in MANIFEST_IO
-    # like every other driver-side metadata read) -----------------
-    dv_pos: dict[str, list[int]] = {}  # entry path -> masked positions
-    anti: list[dict] = []
-    _docs: dict[str, dict | None] = {}
-    for e in dirty:
-        ms = maskers[e["path"]]
-        if all(t.get("dv") for t in ms):
-            pos: set[int] = set()
-            covered = True
-            for t in ms:
-                rel = t["dv"]
-                if rel not in _docs:
-                    try:
-                        _docs[rel] = _read_json(os.path.join(target, rel))
-                    except (OSError, ValueError):
-                        _docs[rel] = None
-                fmap = (_docs[rel] or {}).get("files")
-                if fmap is None or e["path"] not in fmap:
-                    # DV doc unreadable, or the file is not in its
-                    # coverage census — fall back, never guess.
-                    covered = False
-                    break
-                pos.update(int(p) for p in fmap[e["path"]])
-            if covered:
-                if pos:
-                    dv_pos[e["path"]] = sorted(pos)
-                else:
-                    clean.append(e)  # DV-proven clean: plain scan
-                continue
-        anti.append(e)
-
-    def dv_scan(items):
-        """Position-filtered scan of DV-covered files: drop exactly
-        the (file, row_index) pairs the DV docs recorded.  Files are
-        addressed by their table-relative PATH TAIL extracted from
-        ``_metadata.file_path`` — part file NAMES are NOT unique
-        (``partitionBy`` reuses one task's part-NNNNN name across
-        every bucket/partition dir it writes, measured round 19), so
-        only the full ``data/<commit>/...`` tail addresses a file.
-        The DV doc records the tail AS THE URI RENDERS IT (``uris``
-        alias map) whenever escaping makes it differ from the entry
-        path, so the comparison is against the exact string Spark
-        reports."""
-        df = _scan_entries(spark, target, man, schema, items, meta_cols=True)
-        k = _scan_coalesce(spark, items)
-        if k < len(items):
-            df = df.coalesce(k)
-        posmap = {e["path"]: dv_pos[e["path"]] for e in items}
-        uris = {}
-        for d in _docs.values():
-            uris.update((d or {}).get("uris", {}))
-        total = sum(len(v) for v in posmap.values())
-        if total <= _DV_INLINE_MAX:
-            # ONE literal map file-tail → position array, probed per
-            # row (O(1) lookup + small-array contains).  NOT an
-            # OR-chain over files: measured round 19, a 101-branch
-            # disjunction of (string-eq & isin) blew past the codegen
-            # thresholds and fell back to interpreted evaluation of
-            # the whole chain per row — 4.4 s where this map form
-            # reads in 0.5 s (the literal map also skips codegen, but
-            # its interpreted probe is constant-time).
-            kv = []
-            for rel, ps in posmap.items():
-                kv.append(F.lit(uris.get(rel, rel)))
-                kv.append(F.array(*[F.lit(p) for p in ps]))
-            ps_col = F.element_at(F.create_map(*kv), F.col("_rel"))
-            df = df.filter(
-                ps_col.isNull() | ~F.array_contains(ps_col, F.col("_ri"))
-            )
-        else:
-            pdf = spark.createDataFrame(
-                [(uris.get(rel, rel), p) for rel, ps in posmap.items() for p in ps],
-                "_rel string, _ri long",
-            )
-            df = df.join(F.broadcast(pdf), ["_rel", "_ri"], "left_anti")
-        return df.drop("_rel", "_ri")
 
     def commit_gen_expr(items):
         """``_gen`` of the enclosing commit, derived from the file
@@ -1503,51 +1379,34 @@ def _masked_scan(
         )
         return F.element_at(gen_map, cid)
 
-    pieces: list[DataFrame] = []
-    if anti:
-        # Tombstones restricted to those masking an anti-path file —
-        # DV-only tombstones never reach the join.
-        anti_tombs, _seen = [], set()
-        for e in anti:
-            for t in maskers[e["path"]]:
-                if t["path"] not in _seen:
-                    _seen.add(t["path"])
-                    anti_tombs.append(t)
-        data = plain(anti).withColumn("_gen", commit_gen_expr(anti))
-        key_field = next(f for f in schema.fields if f.name == key)
-        tomb_schema = StructType([key_field])
-        tomb_scan = _read_paths(
-            spark, tomb_schema, [os.path.join(target, t["path"]) for t in anti_tombs]
-        )
-        tk = _scan_coalesce(spark, anti_tombs)
-        if tk < len(anti_tombs):
-            tomb_scan = tomb_scan.coalesce(tk)
-        tomb = (
-            tomb_scan.withColumn("_tgen", commit_gen_expr(anti_tombs))
-            .groupBy(F.col(key).alias("_tkey"))
-            .agg(F.max("_tgen").alias("_tgen"))
-        )
-        masked = data.join(
-            F.broadcast(tomb),
-            # eqNullSafe (ADVICE r17): a NULL bucket key is one ordinary
-            # merge group (bucket = pmod(xxhash64(NULL), n), same writer-
-            # and reader-side), and CoW scd1 merges treat it that way — a
-            # null-UNSAFE == here would never mask the old NULL-key base
-            # row, leaving a silent duplicate after table_merge_mor /
-            # table_delete on a NULL key.  EqualNullSafe is still a
-            # broadcast-hash-joinable equi-condition.
-            F.col(key).eqNullSafe(F.col("_tkey")) & (F.col("_tgen") > F.col("_gen")),
-            "left_anti",
-        ).drop("_gen")
-        pieces.append(masked)
-    if dv_pos:
-        pieces.append(dv_scan([e for e in dirty if e["path"] in dv_pos]))
-    if clean:
-        pieces.append(plain(clean))
-    out = pieces[0]
-    for p in pieces[1:]:
-        out = out.unionByName(p)
-    return out
+    data = plain(dirty).withColumn("_gen", commit_gen_expr(dirty))
+    key_field = next(f for f in schema.fields if f.name == key)
+    tomb_scan = _read_paths(
+        spark,
+        StructType([key_field]),
+        [os.path.join(target, t["path"]) for t in tombs],
+    )
+    tk = _scan_coalesce(spark, tombs)
+    if tk < len(tombs):
+        tomb_scan = tomb_scan.coalesce(tk)
+    tomb = (
+        tomb_scan.withColumn("_tgen", commit_gen_expr(tombs))
+        .groupBy(F.col(key).alias("_tkey"))
+        .agg(F.max("_tgen").alias("_tgen"))
+    )
+    masked = data.join(
+        F.broadcast(tomb),
+        # eqNullSafe (ADVICE r17): a NULL bucket key is one ordinary
+        # merge group (bucket = pmod(xxhash64(NULL), n), same writer-
+        # and reader-side), and CoW scd1 merges treat it that way — a
+        # null-UNSAFE == here would never mask the old NULL-key base
+        # row, leaving a silent duplicate after table_merge_mor /
+        # table_delete on a NULL key.  EqualNullSafe is still a
+        # broadcast-hash-joinable equi-condition.
+        F.col(key).eqNullSafe(F.col("_tkey")) & (F.col("_tgen") > F.col("_gen")),
+        "left_anti",
+    ).drop("_gen")
+    return masked.unionByName(plain(clean)) if clean else masked
 
 
 def _manifest_at(target: str, at: str | None) -> dict:
@@ -1972,18 +1831,13 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
     def data_refs(doc: dict) -> set[str] | None:
         # Tombstone files are live data too (round 17): a kept
         # manifest's merge-on-read masking breaks if the pruner
-        # unlinks them.  So are DV documents (round 19) — a tombstone
-        # entry's ``dv`` names the position-delete census its masking
-        # fast path reads.  None on a malformed document — callers on
+        # unlinks them.  None on a malformed document — callers on
         # the KEPT side must abort (never delete what can't be proven
         # unreferenced); the pruned side treats it as empty.
         try:
-            tombs = doc.get("tombstones", [])
-            return (
-                {e["path"] for e in doc["files"]}
-                | {t["path"] for t in tombs}
-                | {t["dv"] for t in tombs if t.get("dv")}
-            )
+            return {e["path"] for e in doc["files"]} | {
+                t["path"] for t in doc.get("tombstones", [])
+            }
         except (KeyError, TypeError):
             return None
 
@@ -2028,15 +1882,7 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
         for rel in dead_parts:
             doc = _try_read(rel)
             if doc is not None:
-                d = data_refs(doc) or set()
-                # DV docs are excluded from gkey-local dead reasoning
-                # (round 19): ONE dv doc is referenced from a tombstone
-                # part PER TOUCHED BUCKET, so a dead part cannot prove
-                # it dead — an unloaded kept part of another bucket may
-                # still reference it.  table_vacuum (full reference
-                # set) owns DV reclamation.
-                d -= {t["dv"] for t in doc.get("tombstones", []) if t.get("dv")}
-                dead_data |= d
+                dead_data |= data_refs(doc) or set()
         # Kept parts can share data files with dead parts only in the
         # dead parts' own (partition, bucket) groups (a gkey's listing
         # lives in exactly one part per root) — load just those.
@@ -2181,116 +2027,7 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
     return {"new_files": len(entries), "total_files": _man_file_count(manifest)}
 
 
-def _maybe_write_dv(
-    spark, target, man, schema, tomb_entries, keys_df, flag
-) -> str | None:
-    """Write the commit's DV doc when position deletes are enabled
-    (explicit kwarg wins; else conf ``spark.analytics.sink.positionDeletes``) and
-    stamp every tombstone entry with its path.  Returns the doc's rel
-    path, or None (disabled, empty commit, or census over cap — plain
-    tombstones carry the semantics alone in every such case)."""
-    if flag is None:
-        flag = conf.get(spark, "spark.analytics.sink.positionDeletes")
-    if not flag or not tomb_entries:
-        return None
-    rel = _write_position_deletes(
-        spark, target, man, schema, tomb_entries, keys_df
-    )
-    if rel is not None:
-        for t in tomb_entries:
-            t["dv"] = rel
-    return rel
-
-
-def _write_position_deletes(
-    spark, target: str, man: dict, schema, tomb_entries: list[dict], keys_df
-) -> str | None:
-    """The DV document for one merge-on-read commit (round 19):
-    scan the CURRENT base files of the tombstones' buckets, locate the
-    row positions whose bucket key matches the update keys, and record
-    them per file — EVERY scanned file gets an entry (empty = proven
-    clean), which is the coverage census the read path checks before
-    trusting a DV.  Addressing is by the table-relative PATH TAIL of
-    ``_metadata.file_path`` + ``_metadata.row_index`` — part file
-    names alone are NOT unique (one write task reuses its part-NNNNN
-    name in every bucket/partition dir it touches; measured round 19,
-    and the initial name-keyed draft silently cross-attributed
-    positions between same-named files).  When URI escaping renders a
-    tail differently from the entry path (exotic identity partition
-    values), the observed URI form is recorded in the doc's ``uris``
-    map so the read side matches the exact reported string.
-
-    Returns the doc's rel path, or None when the position census
-    overflowed ``spark.analytics.sink.dvMaxPositions`` (the caller keeps plain
-    tombstones — correctness never depends on the DV).  The one
-    driver-side collect here is update-footprint-bounded by that cap:
-    at most one (file, position) hit per updated key per base version
-    of it, never data-sized."""
-    import json
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    cap = conf.get(spark, "spark.analytics.sink.dvMaxPositions")
-    key = man["bucket_key"]
-    buckets = {t["bucket"] for t in tomb_entries}
-    base, _ = _man_entries(target, man, buckets=buckets)
-    files_map: dict[str, list[int]] = {e["path"]: [] for e in base}
-    uris: dict[str, str] = {}
-    if base:
-        scan = _read_paths(
-            spark, schema, [os.path.join(target, e["path"]) for e in base]
-        )
-        k = _scan_coalesce(spark, base)
-        if k < len(base):
-            scan = scan.coalesce(k)
-        uk = keys_df.select(F.col(key).alias("_uk")).distinct()
-        hits = (
-            scan.select(
-                F.col(key).alias("_k"),
-                F.regexp_extract(
-                    F.col("_metadata.file_path"),
-                    r"^.*/(data/c-[0-9a-f]{12}/.*)$",
-                    1,
-                ).alias("_rel"),
-                F.col("_metadata.row_index").alias("_ri"),
-            )
-            .join(
-                F.broadcast(uk),
-                F.col("_k").eqNullSafe(F.col("_uk")),
-                "left_semi",
-            )
-            .select("_rel", "_ri")
-            .limit(cap + 1)
-            .collect()
-        )
-        if len(hits) > cap:
-            return None
-        for r in hits:
-            tail = r["_rel"]
-            rel_path = tail if tail in files_map else unquote(tail)
-            if rel_path not in files_map:
-                # A hit we cannot attribute to a scanned entry — never
-                # emit a DV that could mask the wrong rows.
-                return None
-            files_map[rel_path].append(int(r["_ri"]))
-            if tail != rel_path:
-                uris[rel_path] = tail
-        for v in files_map.values():
-            v.sort()
-    os.makedirs(os.path.join(target, DATA_DIR), exist_ok=True)
-    rel = f"{DATA_DIR}/dv-{uuid.uuid4().hex[:12]}.json"
-    tmp = os.path.join(target, rel + ".tmp")
-    with open(tmp, "w", encoding="utf-8") as f:
-        doc = {"files": files_map}
-        if uris:
-            doc["uris"] = uris
-        json.dump(doc, f)
-    os.replace(tmp, os.path.join(target, rel))
-    return rel
-
-
-def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bool | None = None) -> dict:
+def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
     """MERGE-ON-READ upsert (deletion-vector class, VERDICT r16
     missing #2): commit cost is the UPDATE batch, even when its keys
     scatter across every bucket — the case where copy-on-write
@@ -2312,16 +2049,7 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
     Batch contract: ``updates`` must carry the table schema and at
     most one row per key (dedup the batch first — both rows would
     survive masking, same as feeding a dup batch to a CoW upsert).
-    Deletes are :func:`table_delete`.
-
-    ``position_deletes`` (round 19; default conf
-    ``spark.analytics.sink.positionDeletes``) additionally records the EXACT row
-    positions this commit masks in the touched buckets' base files —
-    readers then skip the key anti-join for covered files entirely
-    (see :func:`_masked_scan`).  Write-side cost: one read of the
-    touched buckets' base files to locate positions (Iceberg's
-    position-delete trade); the plain-tombstone default keeps writes
-    O(batch)."""
+    Deletes are :func:`table_delete`."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -2396,9 +2124,6 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
         gen=new_seq,
         skip_shuffle=one_task_per_file,
     )
-    dv_rel = _maybe_write_dv(
-        spark, target, man, schema, tomb_entries, delta_keys, position_deletes
-    )
     manifest = _man_update(
         target,
         man,
@@ -2410,7 +2135,6 @@ def table_merge_mor(spark, target: str, updates: DataFrame, position_deletes: bo
         "delta_files": len(entries),
         "tombstone_files": len(tomb_entries),
         "live_tombstone_files": _man_tomb_count(manifest),
-        "position_deletes": dv_rel is not None,
     }
 
 
@@ -2534,16 +2258,13 @@ def table_compact(
     }
 
 
-def table_delete(
-    spark, target: str, keys: list, position_deletes: bool | None = None
-) -> dict:
+def table_delete(spark, target: str, keys: list) -> dict:
     """Keyed delete as a TOMBSTONE-ONLY merge-on-read commit: no data
     file is read or written — the keys land as tombstone files (gen =
     this commit) and every v2 reader masks all OLDER rows with those
     keys (:func:`_masked_scan`); :func:`table_compact` later makes the
-    deletion physical and reclaims the space.  This is the deletion-
-    vector write path proper: commit cost is O(keys), the minimum any
-    format can pay.
+    deletion physical and reclaims the space.  Commit cost is O(keys),
+    the minimum any format can pay.
 
     ``keys`` is a plain Python list (point deletes are key lists by
     nature; a predicate delete is ``table_read`` + the caller's filter
@@ -2571,9 +2292,6 @@ def table_delete(
             "tombstone_files": 0,
             "live_tombstone_files": _man_tomb_count(man),
         }
-    dv_rel = _maybe_write_dv(
-        spark, target, man, schema, tomb_entries, kdf, position_deletes
-    )
     manifest = _man_update(
         target, man, _group_listings(target, man, new_tombs=tomb_entries), new_seq
     )
@@ -2581,7 +2299,6 @@ def table_delete(
     return {
         "tombstone_files": len(tomb_entries),
         "live_tombstone_files": _man_tomb_count(manifest),
-        "position_deletes": dv_rel is not None,
     }
 
 
@@ -2957,7 +2674,6 @@ def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
             part = _read_json(os.path.join(target, r["path"]))
             refs |= {e["path"] for e in part["files"]}
             refs |= {t["path"] for t in part["tombstones"]}
-            refs |= {t["dv"] for t in part["tombstones"] if t.get("dv")}
     now = time.time()
     removed = {"data": 0, "parts": 0}
     for sub, kind in ((DATA_DIR, "data"), (PARTS_DIR, "parts")):

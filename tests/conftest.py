@@ -10,6 +10,7 @@ failures surface before the driver runs at sf0.01.
 from __future__ import annotations
 
 import contextlib
+import json
 import math
 import os
 import sys
@@ -101,6 +102,39 @@ def manifest_listing(target: str, man: dict | None = None):
     if man is None:
         man = commit._load_manifest(target)
     return commit._man_entries(target, man)
+
+
+def stamp_legacy_dv(target: str, text: str | None = None) -> str:
+    """Make the newest merge-on-read commit look as the removed
+    positional-deletion-vector writer left it: each of its tombstones
+    names a ``data/dv-*.json`` document in a ``dv`` field.  By default
+    the document lists every older data file of the touched buckets
+    with no positions, which that writer's reader took as proof the
+    file was clean, so it would have kept the masked rows.  ``text``
+    replaces the document's contents.  Returns its table-relative path."""
+    from pyspark_analytics_library_spark.sources import commit
+
+    man = commit._load_manifest(target)
+    gen = int(man["seq"])
+    files, tombs = commit._man_entries(target, man)
+    buckets = {t["bucket"] for t in tombs if int(t["gen"]) == gen}
+    if text is None:
+        clean = [e["path"] for e in files if e["bucket"] in buckets and int(e["gen"]) < gen]
+        text = json.dumps({"files": {p: [] for p in clean}})
+    rel = f"{commit.DATA_DIR}/dv-{gen:012d}.json"
+    with open(os.path.join(target, rel), "w", encoding="utf-8") as f:
+        f.write(text)
+    for ref in man["parts"]:
+        path = os.path.join(target, ref["path"])
+        with open(path, encoding="utf-8") as f:
+            part = json.load(f)
+        newest = [t for t in part["tombstones"] if int(t["gen"]) == gen]
+        for t in newest:
+            t["dv"] = rel
+        if newest:
+            with open(path, "w", encoding="utf-8") as f:
+                json.dump(part, f)
+    return rel
 
 
 @contextlib.contextmanager

@@ -1,41 +1,28 @@
-"""Positional deletion vectors for merge-on-read (round 19, VERDICT
-r18 next #2 — the Iceberg position-delete / Delta deletion-vector
-position).
+"""Tables written with positional deletion vectors (DVs) still read
+row-exact now that the key-tombstone anti-join is the only merge-on-read
+mask.
 
-Contract under test:
-
-* ``table_merge_mor(..., position_deletes=True)`` / ``table_delete``
-  record the EXACT masked row positions per base file in a per-commit
-  DV document; every scanned base file appears in the census (empty =
-  proven clean);
-* the read plan for DV-covered files contains NO JOIN (the r18 shape
-  paid a tombstone scan + per-key max-gen aggregate + broadcast
-  anti-join); a covered file with zero positions scans plain;
-* files are addressed by full path tail, NOT file name —
-  ``partitionBy`` reuses one task's part-NNNNN file name across every
-  bucket dir it writes (same job UUID), so name-keyed DVs would
-  cross-attribute positions between same-named files (the measured
-  round-19 trap);
-* stacked DV commits union their positions; a mixed history (any
-  masker without a DV) falls back to the key anti-join and stays
-  row-exact; unreadable DV docs degrade to the fallback, never guess;
-* compaction applies DV masking physically and clears the docs;
-  vacuum reclaims them; the commit-path pruner never deletes a DV a
-  kept part may still reference.
+The removed DV writer stamped each tombstone of a commit with a ``dv``
+field naming a ``data/dv-*.json`` document of masked row positions per
+base file, and its reader trusted that document over the tombstone
+keys.  Every DV commit also wrote the ordinary key tombstones, so the
+reader now ignores the field and the document.  Each test below forges
+that on-disk shape with :func:`tests.conftest.stamp_legacy_dv`,
+whose default document claims every touched base file clean — a reader
+that still trusted it would keep the stale rows.
 """
 
 from __future__ import annotations
 
+import datetime
 import glob
-import json
 import os
 
 import pytest
 from pyspark.sql import functions as F
 
-from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as cm
-from tests.conftest import manifest_listing
+from tests.conftest import stamp_legacy_dv
 
 
 def _base(spark, n=1000):
@@ -46,19 +33,21 @@ def _base(spark, n=1000):
 
 def _expected(n=1000, overrides=(), deleted=()):
     out = {k: k * 1.5 for k in range(n)}
-    for k, v in overrides:
-        out[k] = v
+    out.update(overrides)
     for k in deleted:
         out.pop(k, None)
     return out
 
 
 def _got(spark, target):
-    return {r.k: r.v for r in cm.table_read(spark, target).collect()}
+    rows = cm.table_read(spark, target).collect()
+    got = {r.k: r.v for r in rows}
+    assert len(got) == len(rows), "a masked row survived beside its update"
+    return got
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _ups(spark, n, step, v):
+    return spark.range(n).select((F.col("id") * step).alias("k"), F.lit(v).alias("v"))
 
 
 @pytest.fixture()
@@ -68,83 +57,40 @@ def dvtable(spark, tmp_path):
     return target
 
 
-def test_dv_upsert_exact_and_joinless(spark, dvtable):
-    ups = spark.range(10).select(
-        (F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")
+def test_dv_stacked_commits_union_positions(spark, dvtable):
+    cm.table_merge_mor(spark, dvtable, _ups(spark, 10, 97, -1.0))
+    stamp_legacy_dv(dvtable)
+    cm.table_merge_mor(spark, dvtable, _ups(spark, 5, 101, -2.0))
+    stamp_legacy_dv(dvtable)
+    exp = _expected(
+        overrides=[(97 * i, -1.0) for i in range(10)]
+        + [(101 * i, -2.0) for i in range(5)]
     )
-    st = cm.table_merge_mor(spark, dvtable, ups, position_deletes=True)
-    assert st["position_deletes"] is True
-    got_df = cm.table_read(spark, dvtable)
-    exp = _expected(overrides=[(97 * i, -1.0) for i in range(10)])
     assert _got(spark, dvtable) == exp
-    # THE plan pin: no join of any kind for DV-covered masking
-    assert "Join" not in _plan(got_df)
-
-
-def test_dv_census_covers_every_base_file(spark, dvtable):
-    cm.table_merge_mor(
-        spark,
-        dvtable,
-        spark.createDataFrame([(1, -1.0)], "k long, v double"),
-        position_deletes=True,
-    )
-    files, tombs = manifest_listing(dvtable)
-    assert all(t.get("dv") for t in tombs)
-    doc = json.load(open(os.path.join(dvtable, tombs[0]["dv"])))
-    base_in_bucket = [
-        e for e in files
-        if e["gen"] == 0 and e["bucket"] == tombs[0]["bucket"]
-    ]
-    # every base file of the touched bucket is in the census, and the
-    # masked file carries exactly one position
-    assert {e["path"] for e in base_in_bucket} <= set(doc["files"])
-    assert sum(len(v) for v in doc["files"].values()) == 1
 
 
 def test_dv_not_keyed_by_file_name(spark, dvtable):
-    """partitionBy reuses part-NNNNN names across bucket dirs — the
-    on-disk layout MUST contain duplicate basenames for this table
-    shape, and DV masking must stay exact despite them (a name-keyed
-    DV would cross-attribute positions)."""
+    """partitionBy reuses one task's part-NNNNN name in every bucket dir
+    it writes, which is why the removed writer keyed its documents by
+    path tail.  The anti-join reads each row's commit gen from the
+    ``data/<commit>/`` path segment, so duplicate names cannot cross
+    rows between files either."""
     paths = glob.glob(os.path.join(dvtable, "data/c-*/bucket=*/*.parquet"))
     names = [p.rsplit("/", 1)[-1] for p in paths]
     assert len(set(names)) < len(names), (
         "fixture no longer produces duplicate part names; this test "
         "needs a sharper layout to stay meaningful"
     )
-    ups = spark.range(50).select(
-        (F.col("id") * 19).alias("k"), F.lit(-4.0).alias("v")
-    )
-    cm.table_merge_mor(spark, dvtable, ups, position_deletes=True)
+    cm.table_merge_mor(spark, dvtable, _ups(spark, 50, 19, -4.0))
+    stamp_legacy_dv(dvtable)
     exp = _expected(overrides=[(19 * i, -4.0) for i in range(50)])
     assert _got(spark, dvtable) == exp
 
 
-def test_dv_stacked_commits_union_positions(spark, dvtable):
-    cm.table_merge_mor(
-        spark, dvtable,
-        spark.range(10).select((F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")),
-        position_deletes=True,
-    )
-    cm.table_merge_mor(
-        spark, dvtable,
-        spark.range(5).select((F.col("id") * 101).alias("k"), F.lit(-2.0).alias("v")),
-        position_deletes=True,
-    )
-    got_df = cm.table_read(spark, dvtable)
-    exp = _expected(
-        overrides=[(97 * i, -1.0) for i in range(10)]
-        + [(101 * i, -2.0) for i in range(5)]
-    )
-    assert _got(spark, dvtable) == exp
-    assert "Join" not in _plan(got_df)
-
-
 def test_dv_delete_and_reinsert(spark, dvtable):
-    st = cm.table_delete(spark, dvtable, [5, 6], position_deletes=True)
-    assert st["position_deletes"] is True
+    cm.table_delete(spark, dvtable, [5, 6])
+    stamp_legacy_dv(dvtable)
     assert _got(spark, dvtable) == _expected(deleted=[5, 6])
-    assert "Join" not in _plan(cm.table_read(spark, dvtable))
     cm.table_append(
         spark, dvtable, spark.createDataFrame([(5, 555.0)], "k long, v double")
     )
@@ -153,70 +99,39 @@ def test_dv_delete_and_reinsert(spark, dvtable):
 
 def test_mixed_history_falls_back_to_anti_join(spark, dvtable):
     cm.table_merge_mor(
-        spark, dvtable,
-        spark.createDataFrame([(7, -1.0)], "k long, v double"),
-        position_deletes=True,
+        spark, dvtable, spark.createDataFrame([(7, -1.0)], "k long, v double")
     )
+    stamp_legacy_dv(dvtable)
     cm.table_merge_mor(
-        spark, dvtable,
-        spark.createDataFrame([(11, -2.0)], "k long, v double"),
-        position_deletes=False,
+        spark, dvtable, spark.createDataFrame([(11, -2.0)], "k long, v double")
     )
-    got_df = cm.table_read(spark, dvtable)
-    # files masked by the DV-less tombstone need the key anti-join
-    assert "Join" in _plan(got_df)
+    plan = cm.table_read(spark, dvtable)._jdf.queryExecution().executedPlan()
+    assert "Join" in plan.toString()
     assert _got(spark, dvtable) == _expected(overrides=[(7, -1.0), (11, -2.0)])
 
 
 def test_unreadable_dv_degrades_to_fallback_not_guess(spark, dvtable):
     cm.table_merge_mor(
-        spark, dvtable,
-        spark.createDataFrame([(7, -1.0)], "k long, v double"),
-        position_deletes=True,
+        spark, dvtable, spark.createDataFrame([(7, -1.0)], "k long, v double")
     )
-    _, tombs = manifest_listing(dvtable)
-    with open(os.path.join(dvtable, tombs[0]["dv"]), "w") as f:
-        f.write("{corrupt")
-    got_df = cm.table_read(spark, dvtable)
-    assert "Join" in _plan(got_df), "corrupt DV must fall back to anti-join"
+    stamp_legacy_dv(dvtable, text="{corrupt")
     assert _got(spark, dvtable) == _expected(overrides=[(7, -1.0)])
 
 
-def test_census_over_cap_falls_back_to_plain_tombstones(spark, dvtable):
-    with scoped_conf(spark, {"spark.analytics.sink.dvMaxPositions": 3}):
-        st = cm.table_merge_mor(
-            spark, dvtable,
-            spark.range(10).select((F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")),
-            position_deletes=True,
-        )
-    assert st["position_deletes"] is False
-    _, tombs = manifest_listing(dvtable)
-    assert not any(t.get("dv") for t in tombs)
-    exp = _expected(overrides=[(97 * i, -1.0) for i in range(10)])
-    assert _got(spark, dvtable) == exp
-
-
 def test_compact_applies_dvs_then_vacuum_reclaims_docs(spark, dvtable):
-    cm.table_merge_mor(
-        spark, dvtable,
-        spark.range(10).select((F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")),
-        position_deletes=True,
-    )
-    exp = _expected(overrides=[(97 * i, -1.0) for i in range(10)])
-    st = cm.table_compact(spark, dvtable)
-    assert st["tombstones_cleared"] >= 1
-    assert _got(spark, dvtable) == exp
-    assert cm.table_stats(dvtable)["tombstone_files"] == 0
-    # age the pre-compact generation out, then vacuum the docs away
-    cm.table_delete(spark, dvtable, [999999])
+    """Vacuum sweeps the documents as unreferenced files even while a
+    retained part still names them, and no read needs them."""
+    cm.table_delete(spark, dvtable, [3, 4])
+    stamp_legacy_dv(dvtable)
+    exp = _expected(deleted=[3, 4])
     cm.table_vacuum(dvtable, older_than_s=0.0)
     assert glob.glob(os.path.join(dvtable, "data/dv-*.json")) == []
+    assert _got(spark, dvtable) == exp
+    assert cm.table_compact(spark, dvtable)["tombstones_cleared"] >= 1
     assert _got(spark, dvtable) == exp
 
 
 def test_dv_on_partitioned_table_with_partition_move(spark, tmp_path):
-    import datetime
-
     D = datetime.date
     target = str(tmp_path / "pdv")
     df = spark.range(300).select(
@@ -231,11 +146,11 @@ def test_dv_on_partitioned_table_with_partition_move(spark, tmp_path):
     ups = spark.createDataFrame(
         [(0, D(2024, 1, 5), -1.0)], "k long, d date, v double"
     )
-    cm.table_merge_mor(spark, target, ups, position_deletes=True)
-    got_df = cm.table_read(spark, target)
-    assert "Join" not in _plan(got_df)
-    rows = {r.k: (r.d, r.v) for r in got_df.collect()}
-    assert len(rows) == 300 and rows[0] == (D(2024, 1, 5), -1.0)
+    cm.table_merge_mor(spark, target, ups)
+    stamp_legacy_dv(target)
+    got = cm.table_read(spark, target).collect()
+    rows = {r.k: (r.d, r.v) for r in got}
+    assert len(got) == len(rows) == 300 and rows[0] == (D(2024, 1, 5), -1.0)
 
 
 def test_dv_null_key_masking(spark, tmp_path):
@@ -245,26 +160,10 @@ def test_dv_null_key_masking(spark, tmp_path):
     )
     cm.table_init(df, target, "k", n_buckets=2)
     ups = spark.createDataFrame([(None, -1.0)], "k long, v double")
-    cm.table_merge_mor(spark, target, ups, position_deletes=True)
+    cm.table_merge_mor(spark, target, ups)
+    stamp_legacy_dv(target)
     rows = sorted(
         ((r.k, r.v) for r in cm.table_read(spark, target).collect()),
         key=lambda t: (t[0] is None, t[0] or 0),
     )
     assert rows == [(2, 2.0), (3, 3.0), (None, -1.0)]
-
-
-def test_dv_join_path_over_inline_threshold(spark, dvtable, monkeypatch):
-    """Past _DV_INLINE_MAX total positions the filter switches to the
-    broadcast (path-tail, row_index) anti-join — same rows, still no
-    key semantics.  Forced by shrinking the threshold."""
-    ups = spark.range(10).select(
-        (F.col("id") * 97).alias("k"), F.lit(-1.0).alias("v")
-    )
-    cm.table_merge_mor(spark, dvtable, ups, position_deletes=True)
-    exp = _expected(overrides=[(97 * i, -1.0) for i in range(10)])
-    assert _got(spark, dvtable) == exp  # inline path first
-    monkeypatch.setattr(cm, "_DV_INLINE_MAX", 2)
-    got_df = cm.table_read(spark, dvtable)
-    plan = _plan(got_df)
-    assert "Join" in plan and "BroadcastHashJoin" in plan
-    assert {r.k: r.v for r in got_df.collect()} == exp

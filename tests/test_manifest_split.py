@@ -14,6 +14,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as cm
 from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
 from tests.conftest import manifest_listing
@@ -698,3 +699,8 @@ def test_scan_coalesce_sizeless_entries_keep_full_parallelism(spark):
     # The byte-based path still packs tiny files down to the floor.
     tiny = [{"path": f"f{i}", "bytes": 1024} for i in range(100)]
     assert cm._scan_coalesce(spark, tiny) == spark.sparkContext.defaultParallelism
+    # ...and packs to the session's maxPartitionBytes, not a fixed 128 MiB.
+    mid = [{"path": f"f{i}", "bytes": 8 << 20} for i in range(8)]
+    with scoped_conf(spark, {"spark.sql.files.maxPartitionBytes": "4m"}):
+        got = cm._scan_coalesce(spark, mid)
+    assert got == max(spark.sparkContext.defaultParallelism, 16)

@@ -23,7 +23,7 @@ from pyspark_analytics_library_spark.sources.scan_queries import (
     scd1_merged,
     scd2_history,
 )
-from tests.conftest import manifest_listing
+from tests.conftest import manifest_listing, stamp_legacy_dv
 
 
 def _residue(target: str) -> list[str]:
@@ -1254,6 +1254,40 @@ def test_mor_null_key_rows_are_masked(spark, tmp_path):
         .count()
         == 20
     )
+
+
+def test_legacy_dv_table_reads_row_exact(spark, tmp_path):
+    """Tables written with the removed positional deletion vectors: each
+    MoR tombstone names a ``data/dv-*.json`` document, and the old reader
+    trusted an empty position list in it as proof a file was clean.  The
+    key anti-join ignores the document, so one that claims every touched
+    base file clean cannot keep a stale row; compaction plus vacuum then
+    reclaims it as an ordinary unreferenced file."""
+    import pandas as pd
+
+    target = str(tmp_path / "t")
+    base = _v2_base(spark, 200)
+    commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
+    updates = base.filter(F.col("o_orderkey") % 20 == 0).select(
+        "o_orderkey",
+        "o_custkey",
+        F.lit("U").alias("o_orderstatus"),
+        F.lit(-1.0).alias("o_totalprice"),
+    )
+    commit_mod.table_merge_mor(spark, target, updates)
+    rel = stamp_legacy_dv(target)
+    assert all(t.get("dv") == rel for t in manifest_listing(target)[1])
+
+    model = pd.concat([base.toPandas(), updates.toPandas()]).drop_duplicates(
+        "o_orderkey", keep="last"
+    )
+    expect = sorted(model.itertuples(index=False, name=None))
+    assert _v2_rows(spark, target) == expect
+
+    commit_mod.table_compact(spark, target)
+    commit_mod.table_vacuum(target, older_than_s=0)
+    assert not os.path.exists(os.path.join(target, rel))
+    assert _v2_rows(spark, target) == expect
 
 
 def test_stats_prune_date_stats_vs_datetime_bound_not_lossy(spark, tmp_path):

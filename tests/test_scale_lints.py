@@ -78,13 +78,8 @@ WHITELIST = {
     # ints by construction (VERDICT r15 #2); plus _zorder_expr's 1-row
     # quantile-boundary aggregate (percentile_approx: 63 boundaries per
     # clustering column — ≤189 doubles at 3 columns — the z-rank cell
-    # edges, round 18; ADVICE r18 doc-drift fix); plus
-    # _write_position_deletes' deletion-vector census collect (round
-    # 19): limit(cap+1)-bounded (spark.analytics.sink.dvMaxPositions,
-    # default 1M (file, position) pairs — update-footprint-sized by contract, and
-    # the commit falls back to plain tombstones past the cap rather
-    # than collecting more)
-    "sources/commit.py": 4,
+    # edges, round 18; ADVICE r18 doc-drift fix)
+    "sources/commit.py": 3,
 }
 
 #: every DataFrame → driver materialization spelling, not just the two

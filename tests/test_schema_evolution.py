@@ -93,7 +93,7 @@ def test_rename_stats_pruning_translates_epoch(spark, table):
 def test_mor_and_compact_across_rename(spark, table):
     cm.table_rename_column(table, "price", "amount")
     ups = spark.createDataFrame([(5, 5, -1.0)], "k long, grp long, amount double")
-    cm.table_merge_mor(spark, table, ups, position_deletes=True)
+    cm.table_merge_mor(spark, table, ups)
     got = {r.k: r.amount for r in cm.table_read(spark, table).collect()}
     assert len(got) == 400 and got[5] == -1.0 and got[6] == 9.0
     st = cm.table_compact(spark, table)
