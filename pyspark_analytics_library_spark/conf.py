@@ -29,24 +29,6 @@ def size_bytes(value: str) -> int:
     return int(m.group(1)) * 1024 ** " kmgtp".index(m.group(2) or " ")
 
 
-def _choice(*options: str) -> Callable[[str], str]:
-    def parse(value: str) -> str:
-        s = value.strip().lower()
-        if s not in options:
-            raise ValueError(f"expected one of {', '.join(options)}")
-        return s
-
-    return parse
-
-
-def _bool(value: str) -> bool:
-    return _choice("true", "false")(value) == "true"
-
-
-def _int_or_auto(value: str) -> int | None:
-    return None if value.strip().lower() == "auto" else int(value)
-
-
 class Key(NamedTuple):
     default: str | None
     parse: Callable[[str], Any]
@@ -56,19 +38,14 @@ class Key(NamedTuple):
 # fmt: off
 #: name -> (default, parser, doc); the README's Configuration table mirrors it.
 KEYS: dict[str, Key] = {
-    "spark.analytics.describe.selfCheck": Key("true", _bool, "agg_describe re-computes its exact cells to attest them"),
-    "spark.analytics.quantile.guard": Key("true", _bool, "probe exact-percentile state size before computing"),
-    "spark.analytics.quantile.maxLocalStateBytes": Key("256m", size_bytes, "exact-percentile state cap"),
-    "spark.analytics.quantile.onOverCap": Key("binned", _choice("binned", "error"), "over the cap: range-bin or refuse"),
+    "spark.analytics.quantile.maxLocalStateBytes": Key("256m", size_bytes, "exact-percentile state above which the binned path runs"),
     "spark.analytics.cc.driverUnionFindMaxEdges": Key("500000", int, "CC driver union-find edge cap; 0 forces the loop"),
-    "spark.analytics.cc.edgeBuckets": Key("auto", _int_or_auto, "CC loop edge-table buckets: auto, N, or 0 for none"),
     "spark.analytics.scratchDir": Key(None, str, "Hadoop-visible base for iteration scratch"),
     "spark.analytics.graph.denseMatmulMaxVertices": Key("4096", int, "dense triangle census vertex cap"),
     "spark.analytics.graph.denseMatmulMaxEdges": Key("2000000", int, "dense triangle census edge cap"),
     "spark.analytics.graph.sparseMaxWork": Key("1e11", float, "sparse census work above which it refuses"),
     "spark.analytics.graph.broadcastNbrsMaxEdges": Key("50000000", int, "sparse census broadcast cap"),
     "spark.analytics.sim.maxIndexBytes": Key("2g", size_bytes, "build_index matrix size cap"),
-    "spark.analytics.sink.commitMode": Key("rename", _choice("rename", "manifest"), "sink_merge_* commit protocol"),
 }
 # fmt: on
 

@@ -432,24 +432,13 @@ def q_agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared against the same aggregates computed directly, so the
     driver's rows-only green attests VALUES.  Both collects are tiny
     fixed-size scalars (8 summary rows + 1 aggregate row), the same
-    embedded-self-check pattern the streaming queries use.
-
-    Production switch (VERDICT r8 #4): the self-check's extra eager
-    scalar-aggregate job roughly doubles this query's cost (it is the
-    third-heaviest non-streaming query at sf0.1).  Conf
-    ``spark.analytics.describe.selfCheck`` — default ``true`` so every
-    driver replay keeps attesting values — set to ``false`` skips the
-    parse-back job entirely and returns the lazy summary() frame, the
-    right setting for a production pipeline where the statistic is the
-    product, not the attestation."""
+    embedded-self-check pattern the streaming queries use."""
     import math
 
     t = load_tables(spark, sf_dir)
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
     df = t["lineitem"].select(*cols)
     out = df.summary("count", "mean", "stddev", "min", "25%", "50%", "75%", "max")
-    if not conf.get(spark, "spark.analytics.describe.selfCheck"):
-        return out
     # 8 rows × 4 columns — bounded by the statistic list, never by input.
     cells = {r["summary"]: r.asDict() for r in out.collect()}
     # Per-column F.count(c), NOT F.count(1): summary's count row is the
@@ -494,8 +483,8 @@ _QUANTILE_BYTES_PER_ENTRY = 64
 def exact_quantile_guard(
     spark: SparkSession, df: DataFrame, cols: list[str] | dict[str, int]
 ) -> set[str]:
-    """Fail fast before Spark's exact percentile state OOMs the JVM
-    (VERDICT r15 #2).
+    """Columns whose exact percentile state would OOM the JVM
+    (VERDICT r15 #2, r16 #7).
 
     ``percentile()``/``median()`` accumulate an open hash map of every
     distinct value SEEN BY EACH TASK, so concurrent single-JVM state is
@@ -512,28 +501,17 @@ def exact_quantile_guard(
 
     The guard spends ONE cheap aggregate (count + HLL
     approx_count_distinct per column, fixed-size sketch state at any
-    input size) and raises an ACTIONABLE error naming the sketch path
-    when the estimate exceeds ``spark.analytics.quantile.
-    maxLocalStateBytes`` (default 256 MB ≈ the OOM cliff of a small
-    1 g executor with the merge phase's transient doubling; size it to
-    roughly a quarter of executor heap).  The estimate models ONE JVM
-    under local-mode assumptions; on a multi-executor cluster state
-    spreads across JVMs, so the default is conservative there — raise
-    the cap with executor memory.  ``spark.analytics.quantile.guard``
-    = ``false`` skips the probe job entirely (the describe.selfCheck
-    pattern) when the caller has sized heaps for a known value domain.
-
-    Round 17 (VERDICT r16 #7): the guard now RETURNS the set of
-    over-cap columns instead of always raising, so callers can compute
-    the exact answer anyway via :func:`binned_exact_percentiles`
-    (bounded-state two-pass binning) — ``spark.analytics.quantile.
-    onOverCap`` selects the behavior: ``binned`` (default — compute,
-    never OOM, never refuse) or ``error`` (the r15/r16 refusal with
-    the actionable message, for callers who want the cheap plan or
-    nothing).  Empty set = under cap, use the native exact path.
+    input size) and returns the columns whose estimate exceeds
+    ``spark.analytics.quantile.maxLocalStateBytes`` (default 256 MB ≈
+    the OOM cliff of a small 1 g executor with the merge phase's
+    transient doubling; size it to roughly a quarter of executor heap).
+    The estimate models ONE JVM under local-mode assumptions; on a
+    multi-executor cluster state spreads across JVMs, so the default is
+    conservative there — raise the cap with executor memory.  Callers
+    compute over-cap columns' exact answer via
+    :func:`binned_exact_percentiles` (bounded-state range binning);
+    an empty set means under cap: use the native exact path.
     """
-    if not conf.get(spark, "spark.analytics.quantile.guard"):
-        return set()
     # cols maps column -> number of exact-percentile EXPRESSIONS over
     # it (review r16: Spark's Percentile/Median buffers are per
     # expression, not shared per column — three percentiles over one
@@ -551,24 +529,7 @@ def exact_quantile_guard(
         c: min(probe[c] * par, n_rows) * _QUANTILE_BYTES_PER_ENTRY * k
         for c, k in mult.items()
     }
-    over = {c: b for c, b in est.items() if b > cap}
-    if over and conf.get(spark, "spark.analytics.quantile.onOverCap") == "error":
-        detail = ", ".join(f"{c}≈{b / 1e6:.0f} MB" for c, b in over.items())
-        raise ValueError(
-            "agg_quantile: exact percentile/median would hold "
-            f"~min(distinct × {par} tasks, {n_rows} rows) × "
-            f"{_QUANTILE_BYTES_PER_ENTRY} B of concurrent hash-map state "
-            f"({detail}), over spark.analytics.quantile.maxLocalStateBytes="
-            f"{cap} (calibration: ~300 MB estimated state OOM-killed a 1 g "
-            "JVM — SCALE.md round-15 sf≈1 sweep).  Use the sketch path "
-            "instead (agg_approx_quantile / F.percentile_approx: fixed-size "
-            "state at any scale), the exact bounded-state path "
-            "(spark.analytics.quantile.onOverCap=binned — two-pass range "
-            "binning, the default), raise the cap in step with executor "
-            "memory, or set spark.analytics.quantile.guard=false to bypass "
-            "this probe."
-        )
-    return set(over)
+    return {c for c, b in est.items() if b > cap}
 
 
 def binned_exact_percentiles(
@@ -829,8 +790,7 @@ def q_agg_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); :func:`exact_quantile_guard` estimates that state first
     and, past the conf cap, the query COMPUTES the same exact answer
     through :func:`binned_exact_percentiles` (bounded-state iterative
-    range binning) instead of OOMing — or refuses with the sketch-path
-    message under ``onOverCap=error`` (VERDICT r15 #2 / r16 #7).  The
+    range binning) instead of OOMing (VERDICT r15 #2 / r16 #7).  The
     100 TB cheap default remains `agg_approx_quantile` below."""
     t = load_tables(spark, sf_dir)
     df = t["lineitem"]

@@ -627,10 +627,7 @@ def connected_components(
     parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
     trim = conf.is_local_master(spark) and parts in ("200", "32")
     with conf.scoped_conf(spark, {"spark.sql.shuffle.partitions": 8} if trim else {}):
-        # Reaching the loop with uf_cap > 0 means the dispatch probe
-        # PROVED |E| > uf_cap — the signal the auto edge-bucketing
-        # policy keys on (see _cc_materialize_sym).
-        lab = _cc_loop(sym, max_iters, big_edges=uf_cap > 0)
+        lab = _cc_loop(sym, max_iters)
     return _attach_singletons(vertices, lab, broadcast_labels=False)
 
 
@@ -870,78 +867,6 @@ def reclaim_iteration_scratch(
     return deleted
 
 
-def _cc_materialize_sym(
-    spark, sym: DataFrame, scratch_root: str, big_edges: bool = False
-):
-    """Materialize the symmetrized edge list ONCE — as a BUCKETED,
-    src-sorted table when the edge set is big (round-20 optimization,
-    guide §2.4 "bucketed tables persist a partitioning across jobs" /
-    VERDICT r19 next #1), else as plain coalesced parquet.
-
-    The loop joins ``sym`` on ``src`` every round; a plain parquet
-    materialization loses the layout, so at any label size past the
-    broadcast threshold every round re-shuffles (and re-sorts) the
-    ENTIRE edge table for the sort-merge join — log(diameter) edge
-    exchanges for one edge set.  ``bucketBy(n, src).sortBy(src)``
-    persists hash(src) partitioning in the table metadata, so every
-    round's join reads the edge-side buckets with zero exchange; one
-    local sort per round (Spark reports no bucketed-scan output
-    ordering unless the legacy
-    ``spark.sql.legacy.bucketedTableScan.outputOrdering`` is set; plan
-    pinned by
-    tests/test_plans.py::test_cc_sym_bucketed_join_no_edge_exchange).
-    Only the vertex-sized label table moves per round.  The up-front
-    ``repartition(n, src)`` uses the same hash as the bucket spec, so
-    each task holds exactly one bucket → one file per bucket (no
-    small-file spray).
-
-    The bucketed write costs one up-front edge shuffle plus a catalog
-    round-trip (~0.3-0.5 s measured locally), which only pays off when
-    the per-round join would otherwise exchange the edge table — i.e.
-    when |E| is large.  ``spark.analytics.cc.edgeBuckets`` picks the
-    policy: ``auto`` (default) buckets exactly when the union-find
-    dispatch probe PROVED |E| > driverUnionFindMaxEdges (the only case
-    the loop runs in production; bucket count = the session's shuffle
-    partitions — on a cluster size it like any edge-table shuffle), an
-    integer > 0 forces bucketing with that count (the plan-pin test
-    and cluster operators who zeroed the UF cap), and ``0`` never
-    buckets.
-
-    Returns ``(df, drop_fn)``; ``drop_fn`` removes the catalog entry
-    (the data files live in ``scratch_root`` and are reclaimed by the
-    loop's normal scratch lifecycle)."""
-    import uuid as _uuid
-
-    sym_path = os.path.join(scratch_root, "sym")
-    n_buckets = conf.get(spark, "spark.analytics.cc.edgeBuckets")
-    bucket = big_edges if n_buckets is None else n_buckets > 0
-    if not bucket:
-        sym.coalesce(8).write.mode("overwrite").parquet(sym_path)
-        # known schema: skip the re-read's footer inference (see
-        # _cc_checkpoint)
-        return spark.read.schema(sym.schema).parquet(sym_path), (lambda: None)
-    if not n_buckets:
-        n_buckets = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    tbl = f"pyspark_analytics_cc_sym_{_uuid.uuid4().hex[:12]}"
-    (
-        sym.repartition(n_buckets, "src")
-        .write.mode("overwrite")
-        .bucketBy(n_buckets, "src")
-        .sortBy("src")
-        .option("path", sym_path)
-        .format("parquet")
-        .saveAsTable(tbl)
-    )
-
-    def drop():
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        except Exception:  # cleanup must never fail the computation
-            pass
-
-    return spark.table(tbl), drop
-
-
 def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
     """One group-min hash-to-min round (phases 1+2), lazily.  ``start``
     carries (v, label, base_label); base_label — the label at the last
@@ -1016,29 +941,26 @@ def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
     )
 
 
-def _cc_loop(
-    sym: DataFrame, max_iters: int, big_edges: bool = False
-) -> DataFrame:
+def _cc_loop(sym: DataFrame, max_iters: int) -> DataFrame:
     spark = sym.sparkSession
     scratch_root = _iteration_scratch_root(spark)
-    # Materialize the symmetrized edge list ONCE (bucketed + sorted on
-    # src for proven-big edge sets — see _cc_materialize_sym): the loop
-    # references it every round, and without a cut each round would
-    # re-execute the caller's edge-generation plan (here a self-join;
-    # in the fuzzy pipeline a full LSH candidate stage) ~log(diameter)
-    # times.  Also gives every round's planner exact size stats for
-    # the join side.
-    sym_path = os.path.join(scratch_root, "sym")
-    sym, drop_sym_table = _cc_materialize_sym(
-        spark, sym, scratch_root, big_edges=big_edges
-    )
-    # Every exit from here on — including a failure in round 0's
-    # checkpoint — must drop the catalog entry (ADVICE r20 #3); the
-    # data files follow the scratch lifecycle below (and _fs_delete is
-    # idempotent).
     from pyspark.sql import Observation
 
+    # Every failed exit from here on — a write failing in any round, or
+    # non-convergence — reclaims this call's whole scratch generation;
+    # only a converged run keeps its final round's parquet (backing the
+    # returned frame).
     try:
+        # Materialize the symmetrized edge list ONCE: the loop references
+        # it every round, and without a cut each round would re-execute
+        # the caller's edge-generation plan (here a self-join; in the
+        # fuzzy pipeline a full LSH candidate stage) ~log(diameter)
+        # times.  Also gives every round's planner exact size stats for
+        # the join side.  Known schema: skip the re-read's footer
+        # inference (see _cc_checkpoint).
+        sym_path = os.path.join(scratch_root, "sym")
+        sym.coalesce(8).write.mode("overwrite").parquet(sym_path)
+        sym = spark.read.schema(sym.schema).parquet(sym_path)
         # Labels start from the EDGE-INCIDENT vertex set only (derived
         # from the materialized edges — no extra pass over the caller's
         # plan); singletons rejoin in connected_components via
@@ -1084,19 +1006,18 @@ def _cc_loop(
             lab = chk.select("v", "label")
             if changed == 0:
                 break
-    finally:
-        drop_sym_table()
-    if changed != 0:
-        # Nothing useful survives an unconverged run — reclaim it all.
-        _fs_delete(lab.sparkSession, scratch_root)
-        raise ConvergenceError(
-            f"connected components did not converge within {max_iters} "
-            f"group-min rounds ({changed} labels still changing); "
-            "returning partial labels would silently split components"
-        )
+        if changed != 0:
+            raise ConvergenceError(
+                f"connected components did not converge within {max_iters} "
+                f"group-min rounds ({changed} labels still changing); "
+                "returning partial labels would silently split components"
+            )
+    except BaseException:
+        _fs_delete(spark, scratch_root)
+        raise
     # The edge materialization is dead once the loop exits; only the
     # final round's parquet (backing the returned frame) must survive.
-    _fs_delete(lab.sparkSession, sym_path)
+    _fs_delete(spark, sym_path)
     return lab
 
 

@@ -46,11 +46,6 @@ for clustered layouts); metadata-only schema evolution
 intra-bucket and z-order clustering; retention
 (``keep_generations`` / :func:`table_set_retention`,
 :func:`table_vacuum`); :func:`table_stats`; :func:`with_commit_retry`.
-
-Mode selection: conf ``spark.analytics.sink.commitMode`` = ``rename``
-(default — keeps every committed fixture attestation byte-identical)
-or ``manifest``, under which the ``sink_merge_*`` queries seed and
-merge into a table here instead of calling ``_staged_overwrite``.
 """
 
 from __future__ import annotations
@@ -1037,8 +1032,8 @@ def table_init(
     if os.path.isdir(target) and os.listdir(target) and not ptr_exists:
         raise ValueError(
             f"{target} holds a non-manifest (rename-mode) table; refusing "
-            "to nest a manifest layout inside it — clear it or keep "
-            "commitMode=rename for this target"
+            "to nest a manifest layout inside it — clear it or pick "
+            "another target"
         )
     expected = _live_manifest_name(target) if ptr_exists else _ABSENT
     seq = (

@@ -22,7 +22,6 @@ from pyspark.sql import types as T
 
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources import commit as commit_mod
 from pyspark_analytics_library_spark.sources import io as io_mod
 from pyspark_analytics_library_spark.sources.io import load_tables
 
@@ -95,8 +94,8 @@ def _staged_overwrite(df: DataFrame, target: str) -> str:
     copy+delete and this protocol does NOT buy atomicity there.  The
     object-store-safe alternative is the manifest-table commit in
     :mod:`~pyspark_analytics_library_spark.sources.commit` (one atomic
-    pointer-file swap, no directory rename), which the merge queries
-    use under ``spark.analytics.sink.commitMode=manifest``.
+    pointer-file swap, no directory rename): ``commit.table_init`` then
+    ``commit.table_merge``, as ``examples/14_manifest_table.py`` shows.
     """
     staging = f"{target}.staging-{uuid.uuid4().hex[:8]}"
     try:
@@ -543,23 +542,8 @@ def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     path = _merge_target("sink_merge")
-    if conf.get(spark, "spark.analytics.sink.commitMode") == "manifest":
-        # Per-FILE manifest path (VERDICT r15 #2): seed the base as a
-        # bucketed manifest table (the one unavoidable full write —
-        # idempotent per run), then apply the update batch as an
-        # INCREMENTAL merge commit that rewrites only the buckets the
-        # batch touches and carries every other data file by
-        # reference — at 100 TB write amplification scales with the
-        # update footprint, not the table.  Identical output to the
-        # rename path (same merge core, same oracle), pinned by
-        # tests/test_merge_safety.py's strict-subset + equivalence
-        # tests.
-        commit_mod.table_init(base, path, "o_orderkey")
-        commit_mod.table_merge(spark, path, updates, scd1_merged)
-        merged_read = commit_mod.table_read(spark, path)
-    else:
-        merged = scd1_merged(base, updates)
-        merged_read = spark.read.parquet(_staged_overwrite(merged, path))
+    merged = scd1_merged(base, updates)
+    merged_read = spark.read.parquet(_staged_overwrite(merged, path))
     return (
         merged_read
         .groupBy("o_orderstatus")
@@ -583,10 +567,9 @@ def _SCD2_EFF_DATE() -> Column:
 
 def _scd2_update_batch(orders: DataFrame) -> DataFrame:
     """The ONE spelling of the SCD-2 update batch (review r16: this
-    recipe previously lived hand-synchronized in scd2_history, the
-    manifest branch of q_sink_merge_scd2, and the oracle SQL — a drift
-    surface where editing one spelling would silently diverge the
-    others).  Columns: o_orderkey, o_orderstatus, o_totalprice,
+    recipe previously lived hand-synchronized in several Python
+    spellings and the oracle SQL — a drift surface where editing one
+    spelling would silently diverge the others).  Columns: o_orderkey, o_orderstatus, o_totalprice,
     valid_from.  Same %97 update / %101 insert predicates, floor-based
     half-up price rounding, and collision-free insert offset the
     oracle states."""
@@ -655,50 +638,6 @@ def scd2_history(orders: DataFrame) -> DataFrame:
         "valid_from",
         F.when(superseded, eff).alias("valid_to"),
         (~superseded).alias("is_current"),
-    )
-
-
-def scd2_apply(base_hist: DataFrame, updates: DataFrame) -> DataFrame:
-    """Incremental SCD-2 merge core: apply an update batch to an
-    EXISTING history table (the :func:`scd2_history` schema —
-    ``valid_from``/``valid_to``/``is_current``), closing out each
-    updated key's CURRENT row at the update's ``valid_from`` and
-    appending the update as the new open row.
-
-    This is the per-slice form :func:`~pyspark_analytics_library_spark.
-    sources.commit.table_merge` needs — ``base_hist`` may be just the
-    touched-bucket slice of the table; correctness needs only that
-    every updated key's rows are present, which bucket routing
-    guarantees.  On a whole all-open base it reduces exactly to
-    :func:`scd2_history`'s union+window result (pinned equivalent by
-    the sink_merge_scd2 oracle under commitMode=manifest).  Same ONE
-    window / zero joins discipline: ``max(is_update)`` per key flags
-    supersession, the close-out date is the per-key max update
-    ``valid_from`` — pure CASE expressions, one shuffle on the merge
-    key."""
-    from pyspark.sql import Window
-
-    u_hist = updates.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "valid_from",
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-        F.lit("u").alias("_src"),
-    )
-    allr = base_hist.withColumn("_src", F.lit("b")).unionByName(u_hist)
-    w = Window.partitionBy("o_orderkey")
-    has_upd = F.max((F.col("_src") == "u").cast("int")).over(w)
-    eff = F.max(F.when(F.col("_src") == "u", F.col("valid_from"))).over(w)
-    superseded = (F.col("_src") == "b") & (has_upd == 1) & F.col("is_current")
-    return allr.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "valid_from",
-        F.when(superseded, eff).otherwise(F.col("valid_to")).alias("valid_to"),
-        (F.col("is_current") & ~superseded).alias("is_current"),
     )
 
 
@@ -772,27 +711,8 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_tables(spark, sf_dir)["orders"]
     path = _merge_target("sink_merge_scd2")
-    if conf.get(spark, "spark.analytics.sink.commitMode") == "manifest":
-        # Per-FILE manifest path (VERDICT r15 #2): seed the all-open
-        # base history, then ONE incremental close-out commit via
-        # :func:`scd2_apply` — only buckets containing updated keys
-        # are rewritten; the untouched history files are carried by
-        # reference.  See q_sink_merge_upsert's manifest comment.
-        base_hist = orders.select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            F.lit("1990-01-01").cast("date").alias("valid_from"),
-            F.lit(None).cast("date").alias("valid_to"),
-            F.lit(True).alias("is_current"),
-        )
-        updates = _scd2_update_batch(orders)
-        commit_mod.table_init(base_hist, path, "o_orderkey")
-        commit_mod.table_merge(spark, path, updates, scd2_apply)
-        hist_read = commit_mod.table_read(spark, path)
-    else:
-        hist = scd2_history(orders)
-        hist_read = spark.read.parquet(_staged_overwrite(hist, path))
+    hist = scd2_history(orders)
+    hist_read = spark.read.parquet(_staged_overwrite(hist, path))
     return (
         hist_read
         .groupBy("o_orderstatus", "is_current")

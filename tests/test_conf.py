@@ -62,7 +62,7 @@ def cc_loop(spark, monkeypatch):
     records the shuffle partitions in force."""
     seen = []
 
-    def loop(sym, max_iters, big_edges=False):
+    def loop(sym, max_iters):
         seen.append(spark.conf.get(SHUFFLE))
         return spark.createDataFrame([(1, 1), (2, 1)], "v long, label long")
 
@@ -109,7 +109,7 @@ def test_malformed_value_raises_naming_the_key(spark, key):
 
 
 def test_scoped_conf_restores_exactly_on_error_and_when_nested(spark):
-    key = "spark.analytics.cc.edgeBuckets"
+    key = "spark.analytics.cc.driverUnionFindMaxEdges"
     with unset_during(spark, key):
         with pytest.raises(RuntimeError), scoped_conf(spark, {key: 4}):
             raise RuntimeError

@@ -136,7 +136,7 @@ def test_scd2_null_key_base_rows_stay_open(spark):
 
 
 # ---------------------------------------------------------------------------
-# Manifest-pointer commit mode (VERDICT r14 #4): the object-store-safe
+# Manifest-pointer commit protocol (VERDICT r14 #4): the object-store-safe
 # protocol — commit = one atomic small-file pointer swap, never a
 # directory rename.  The v2 tests below simulate the crash windows and
 # forbid directory renames outright.
@@ -145,18 +145,10 @@ def test_scd2_null_key_base_rows_stay_open(spark):
 from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as commit_mod
 
-COMMIT_MODE = "spark.analytics.sink.commitMode"
-
-
-@pytest.mark.parametrize("mode", ["rename", "manifest"])
 @pytest.mark.parametrize("name", ["sink_merge_upsert", "sink_merge_scd2"])
-def test_merge_sinks_match_oracle_under_both_commit_modes(
-    spark, oracle, tmp_path, monkeypatch, name, mode
-):
-    """Branch equivalence: each merge sink takes the staged-overwrite
-    path under ``rename`` and the manifest-table path (table_init +
-    incremental table_merge + table_read) under ``manifest``; both
-    must reproduce the query's DuckDB oracle."""
+def test_merge_sinks_match_oracle(spark, oracle, tmp_path, monkeypatch, name):
+    """Each merge sink's staged-overwrite round trip must reproduce the
+    query's DuckDB oracle."""
     from pyspark_analytics_library_spark.registry import (
         REGISTRY,
         load_all_query_modules,
@@ -165,26 +157,13 @@ def test_merge_sinks_match_oracle_under_both_commit_modes(
     from tests.conftest import TEST_SF_DIR, assert_query_matches_oracle
 
     load_all_query_modules()
-    # A fresh scratch root per case: table_init refuses to nest a
-    # manifest table inside the flat parquet a rename-mode run leaves
-    # at the same merge target.
+    # A fresh scratch root per case: the merge target is a live table
+    # that a previous run in this process may have left behind.
     monkeypatch.setattr(scan_queries, "_SCRATCH", str(tmp_path))
     spec = REGISTRY[name]
-    with scoped_conf(spark, {COMMIT_MODE: mode}):
-        assert_query_matches_oracle(
-            spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=f"{name}[{mode}]"
-        )
-
-
-def test_merge_sinks_refuse_unknown_commit_mode(spark):
-    from pyspark_analytics_library_spark.sources.scan_queries import (
-        q_sink_merge_upsert,
+    assert_query_matches_oracle(
+        spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=name
     )
-    from tests.conftest import TEST_SF_DIR
-
-    with scoped_conf(spark, {COMMIT_MODE: "bogus"}):
-        with pytest.raises(ValueError, match=COMMIT_MODE):
-            q_sink_merge_upsert(spark, TEST_SF_DIR)
 
 
 def test_manifest_refuses_pointerless_nonempty_target(spark, tmp_path):
@@ -440,92 +419,6 @@ def test_table_merge_refuses_rekeying_merge_fn(spark, tmp_path):
     with pytest.raises(ValueError, match="untouched buckets"):
         commit_mod.table_merge(spark, target, updates, rekeying_fn)
     assert _v2_rows(spark, target) == before
-
-
-def test_scd2_apply_on_slice_equals_whole_table_history(spark):
-    """scd2_apply over an all-open base must reproduce scd2_history's
-    result exactly, and applying it per bucket-slice must union to the
-    whole-table answer — the soundness argument table_merge relies on."""
-    from pyspark_analytics_library_spark.sources.scan_queries import (
-        scd2_apply,
-        scd2_history,
-    )
-
-    orders = spark.range(200).select(
-        F.col("id").alias("o_orderkey"),
-        (F.col("id") % 5).alias("o_custkey"),
-        F.lit("O").alias("o_orderstatus"),
-        (F.col("id") * 2.0).alias("o_totalprice"),
-        F.lit("1995-06-01").cast("date").alias("o_orderdate"),
-        F.lit("1-URGENT").alias("o_orderpriority"),
-    )
-    expect = sorted(
-        tuple(r)
-        for r in scd2_history(orders)
-        .select(
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "valid_from",
-            "valid_to",
-            "is_current",
-        )
-        .collect()
-    )
-    eff = F.lit("1998-12-01").cast("date")
-    base_hist = orders.select(
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.lit("1990-01-01").cast("date").alias("valid_from"),
-        F.lit(None).cast("date").alias("valid_to"),
-        F.lit(True).alias("is_current"),
-    )
-    from pyspark_analytics_library_spark.sources.scan_queries import (
-        _insert_key_offset,
-    )
-
-    offset = _insert_key_offset(orders)
-    updates = (
-        orders.filter(F.col("o_orderkey") % 97 == 0)
-        .select(
-            "o_orderkey",
-            F.lit("U").alias("o_orderstatus"),
-            (F.floor(F.col("o_totalprice") * 1.1 * 100 + F.lit(0.5)) / 100).alias(
-                "o_totalprice"
-            ),
-            eff.alias("valid_from"),
-        )
-        .unionByName(
-            orders.filter(F.col("o_orderkey") % 101 == 0).select(
-                (F.col("o_orderkey") + F.lit(offset)).alias("o_orderkey"),
-                F.lit("N").alias("o_orderstatus"),
-                F.lit(42.0).alias("o_totalprice"),
-                eff.alias("valid_from"),
-            )
-        )
-    )
-    got = sorted(tuple(r) for r in scd2_apply(base_hist, updates).collect())
-    assert got == expect
-
-    # Slice decomposition: per-bucket applies union to the same rows.
-    n_buckets = 4
-    b_base = base_hist.withColumn(
-        "_b", commit_mod._bucket_expr("o_orderkey", n_buckets)
-    )
-    b_upd = updates.withColumn(
-        "_b", commit_mod._bucket_expr("o_orderkey", n_buckets)
-    )
-    pieces = []
-    for b in range(n_buckets):
-        pieces += [
-            tuple(r)
-            for r in scd2_apply(
-                b_base.filter(F.col("_b") == b).drop("_b"),
-                b_upd.filter(F.col("_b") == b).drop("_b"),
-            ).collect()
-        ]
-    assert sorted(pieces) == expect
 
 
 def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):

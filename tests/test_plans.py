@@ -790,49 +790,6 @@ def test_cc_step_shares_one_phase1_subtree(spark, tmp_path):
     assert text.count(str(tmp_path / "sym")) == 1, text
 
 
-def test_cc_sym_bucketed_join_no_edge_exchange(spark, tmp_path):
-    """Round-20 bucketed-sym pin (VERDICT r19 next #1): the materialized
-    symmetrized edge table persists hash(src) bucketing, so a src-keyed
-    sort-merge join against it (broadcast disabled) carries NO Exchange
-    on the edge side — only the label side shuffles, every round, at
-    any label size.  The edge side still pays one local ``Sort [src``
-    per round: Spark reports no bucketed-scan output ordering unless
-    the legacy ``bucketedTableScan.outputOrdering`` conf is set."""
-    from pyspark_analytics_library_spark.operators.dedup import (
-        _cc_materialize_sym,
-        _fs_delete,
-    )
-
-    sym0 = spark.createDataFrame(
-        [(i % 7, (i * 3) % 7) for i in range(50)], "src long, dst long"
-    )
-    confs = {
-        "spark.analytics.cc.edgeBuckets": "4",
-        "spark.sql.autoBroadcastJoinThreshold": "-1",
-        "spark.sql.adaptive.enabled": "false",
-    }
-    scratch = str(tmp_path / "scratch")
-    with scoped_conf(spark, confs):
-        sym, drop = _cc_materialize_sym(spark, sym0, scratch)
-        try:
-            lab = spark.range(0, 7).select(
-                F.col("id").alias("v"), F.col("id").alias("label")
-            )
-            joined = sym.join(lab, sym.src == lab.v)
-            text = joined._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-            assert "SortMergeJoin" in text, text
-            assert "SelectedBucketsCount" in text, text
-            # one exchange, on the label side (v); one sort per side
-            assert text.count("Exchange hashpartitioning") == 1, text
-            assert "Exchange hashpartitioning(v#" in text, text
-            assert text.count("Sort [") == 2, text
-            assert text.count("Sort [src") == 1, text
-            assert joined.count() == 50
-        finally:
-            drop()
-            _fs_delete(spark, scratch)
-
-
 def test_census_scratch_reclaimed_on_failure(spark, tmp_path, monkeypatch):
     """Round-20 (ADVICE r19): an exception inside the census body —
     here injected into the dense numpy section, between the edge write

@@ -567,38 +567,36 @@ def test_cc_scratch_dir_conf_honored(spark, tmp_path):
     assert "sym" not in names
 
 
-def test_cc_loop_drops_bucketed_sym_table_on_round0_failure(
-    spark, tmp_path, monkeypatch
+@pytest.mark.parametrize("fail_round", [0, 1])
+def test_cc_loop_reclaims_scratch_on_failure(
+    spark, tmp_path, monkeypatch, fail_round
 ):
-    """ADVICE r20 #3: a failure between the bucketed edge write and the
-    first round — here round 0's label checkpoint — must still drop the
-    ``pyspark_analytics_cc_sym_*`` catalog entry."""
+    """A failure inside the loop — here the label checkpoint of round 0
+    (right after the edge write) or round 1 — must not leak the call's
+    scratch generation (``sym`` and the round files)."""
     from pyspark_analytics_library_spark.operators import dedup
 
     real_checkpoint = dedup._cc_checkpoint
 
     def failing_checkpoint(df, scratch_root, round_no):
-        if round_no == 0:
-            raise RuntimeError("injected round-0 failure")
+        if round_no == fail_round:
+            raise RuntimeError(f"injected round-{fail_round} failure")
         return real_checkpoint(df, scratch_root, round_no)
 
     monkeypatch.setattr(dedup, "_cc_checkpoint", failing_checkpoint)
     confs = {
         "spark.analytics.scratchDir": str(tmp_path),
-        "spark.analytics.cc.edgeBuckets": "4",
         "spark.analytics.cc.driverUnionFindMaxEdges": "0",
     }
     edges = spark.createDataFrame([(1, 2), (2, 3), (10, 11)], "src long, dst long")
     vertices = spark.createDataFrame([(v,) for v in (1, 2, 3, 10, 11)], "v long")
     with scoped_conf(spark, confs):
-        with pytest.raises(RuntimeError, match="injected round-0"):
+        with pytest.raises(RuntimeError, match=f"injected round-{fail_round}"):
             dedup.connected_components(edges, vertices).collect()
-    leaked = [
-        t.name
-        for t in spark.catalog.listTables()
-        if t.name.startswith("pyspark_analytics_cc_sym_")
+    leftovers = [
+        p for d in tmp_path.glob("pyspark_analytics_cc_*") for p in d.iterdir()
     ]
-    assert leaked == [], leaked
+    assert leftovers == [], leftovers
 
 
 def test_cc_driver_union_find_matches_loop(spark):
@@ -714,38 +712,35 @@ def test_triangle_dense_dispatch_bounded_by_edges(spark, monkeypatch):
 
 
 def test_exact_quantile_guard_fails_fast_past_distinct_cap(spark):
-    """VERDICT r15 #2: agg_quantile must refuse with an actionable
-    error naming the sketch path — not a raw JVM OOM — when the
-    estimated concurrent hash-map state (min(distinct × parallelism,
-    rows) × 64 B — the r16 calibration that actually reproduces the
-    ledgered sf≈1 OOM, which a distinct-only cap misses because the
-    distinct count is scale-invariant there) exceeds the conf cap.
-    The fixture trips the guard under a tiny cap; the guard=false
-    switch bypasses the probe entirely."""
-    import pytest
-
+    """VERDICT r15 #2 / r16 #7: past the conf cap on the estimated
+    concurrent hash-map state (min(distinct × parallelism, rows) × 64 B
+    — the r16 calibration that actually reproduces the ledgered sf≈1
+    OOM, which a distinct-only cap misses because the distinct count is
+    scale-invariant there), agg_quantile must compute through the
+    bounded-state binned path instead of OOMing the JVM.  The fixture
+    trips the guard under a tiny cap."""
+    from pyspark_analytics_library_spark.operators.aggregates import (
+        exact_quantile_guard,
+    )
     from pyspark_analytics_library_spark.registry import REGISTRY
+    from pyspark_analytics_library_spark.sources.io import load_tables
 
     fn = REGISTRY["agg_quantile"].fn
+    lineitem = load_tables(spark, TEST_SF_DIR)["lineitem"]
     baseline = sorted(map(tuple, fn(spark, TEST_SF_DIR).collect()))
     cap = "spark.analytics.quantile.maxLocalStateBytes"
     with scoped_conf(spark, {cap: "1024"}):
-        # Round 17 (VERDICT r16 #7): the DEFAULT over-cap behavior is
-        # now compute-not-refuse — the bounded-state binned path must
-        # return bit-identical rounded results to the native plan.
+        assert exact_quantile_guard(spark, lineitem, ["l_quantity"]) == {
+            "l_quantity"
+        }
+        # The bounded-state binned path must return bit-identical
+        # rounded results to the native plan.
         assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-        with scoped_conf(spark, {"spark.analytics.quantile.onOverCap": "error"}):
-            # onOverCap=error restores the r15/r16 refusal with the
-            # actionable message naming both escape hatches.
-            with pytest.raises(ValueError, match="agg_approx_quantile"):
-                fn(spark, TEST_SF_DIR)
-            # The conf parser takes JVM-style size suffixes (ADVICE r16):
-            # '12g' must parse as a cap, not crash with a bare int() error.
-            with scoped_conf(spark, {cap: "12g"}):
-                assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
-            # Bypass switch: plan must build (and run) with the probe off.
-            with scoped_conf(spark, {"spark.analytics.quantile.guard": "false"}):
-                assert fn(spark, TEST_SF_DIR).count() > 0
+    # The conf parser takes JVM-style size suffixes (ADVICE r16): '12g'
+    # must parse as a cap, not crash with a bare int() error.
+    with scoped_conf(spark, {cap: "12g"}):
+        assert exact_quantile_guard(spark, lineitem, ["l_quantity"]) == set()
+        assert sorted(map(tuple, fn(spark, TEST_SF_DIR).collect())) == baseline
     # Stock cap (256 MB): the fixture estimates a few MB — normal path.
     assert fn(spark, TEST_SF_DIR).count() > 0
 

@@ -143,7 +143,8 @@ def test_session_conf_is_read_and_scoped_one_way():
     outside ``conf.py`` a session-conf call takes a literal Spark-owned
     key; session writes happen only in ``conf.scoped_conf`` and the
     loader's ``io._configure``; the local-master check is one function;
-    and every declared key is read somewhere (no dead keys)."""
+    every declared key is read somewhere (no dead keys); and every key
+    is a size, count or path, never a mode switch."""
     ad_hoc, writes, local_checks, read = [], {}, [], set()
     for rel, src in _package_sources():
         read.update(_CONF_READ.findall(src))
@@ -163,4 +164,14 @@ def test_session_conf_is_read_and_scoped_one_way():
     assert read == set(conf.KEYS), (
         f"declared but never read: {sorted(set(conf.KEYS) - read)}; "
         f"read but not declared: {sorted(read - set(conf.KEYS))}"
+    )
+    switches = [
+        k
+        for k, v in conf.KEYS.items()
+        if v.parse not in (int, float, conf.size_bytes, str)
+    ]
+    assert switches == [], (
+        f"mode switches {switches}: a key that picks a code path needs two "
+        "non-test callers that need different values; otherwise make the "
+        "one value in use a constant"
     )
