@@ -6,8 +6,8 @@ reads.
 The trade these ops implement (measured in SCALE.md round-17):
 copy-on-write `table_merge` rewrites every touched bucket (87.5 % of
 table bytes for a scattered 151-row batch), while merge-on-read
-`table_merge_mor` lands the same batch as delta + tombstone files at
-4.3 % — reads then pay a broadcast anti-join until `table_compact`
+`table_merge_mor` lands the same batch as delta files at 4.3 % (each
+delta file is also listed as its bucket's tombstone) — reads then pay a broadcast anti-join until `table_compact`
 applies the tombstones and bin-packs small files back to one per
 bucket.  `table_add_columns` evolves the schema without touching a
 data file; `table_read(where=...)` skips files whose footer min/max

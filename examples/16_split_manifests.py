@@ -42,7 +42,7 @@ def main(spark, sf_dir):
                 max_records_per_file=500,
             ),
         )
-        man = cm._load_manifest(target)
+        man = cm._load_manifest(target)[1]
         print(
             f"root: {len(man['parts'])} part refs; "
             f"layout keys: {sorted(man['parts'][0])}"

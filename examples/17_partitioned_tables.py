@@ -56,8 +56,9 @@ def main(spark, sf_dir):
             f"{cm.MANIFEST_IO['part_reads']} manifest parts"
         )
 
-        # Merge-on-read upsert: the commit writes delta files plus key
-        # tombstones; reads mask older rows with a broadcast anti-join.
+        # Merge-on-read upsert: the commit writes delta files, each also
+        # listed as its bucket's key tombstone; reads mask older rows
+        # with a broadcast anti-join.
         batch = (
             orders.orderBy("o_orderkey")
             .limit(5)

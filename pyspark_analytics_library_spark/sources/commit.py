@@ -36,8 +36,9 @@ driver I/O is O(touched buckets), metered by :data:`MANIFEST_IO`.
 Surface: :func:`table_init` / :func:`table_merge` (copy-on-write,
 touched buckets only) / :func:`table_read` / :func:`table_lookup`;
 :func:`table_append` (fast append); :func:`table_merge_mor` /
-:func:`table_delete` (merge-on-read key tombstones — see
-:func:`_masked_scan`);
+:func:`table_delete` (merge-on-read key tombstones — an upsert's
+delta files are listed as its own tombstones, a delete writes key-only
+tombstone files; see :func:`_masked_scan`);
 :func:`table_compact` (bin-packing + tombstone apply, capacity-aware
 for clustered layouts); metadata-only schema evolution
 (:func:`table_add_columns`, :func:`table_rename_column`,
@@ -359,7 +360,7 @@ def _json_stat(v):
     return v
 
 
-def _file_stats(full_path: str) -> dict[str, list]:
+def _file_stats(full_path: str, key: str) -> dict[str, list]:
     """Per-column [min, max] from a parquet file's FOOTER (row-group
     statistics merged) — the Iceberg/Delta scan-planning core — plus
     the file's row count under the reserved ``_rows`` key and per-
@@ -370,9 +371,10 @@ def _file_stats(full_path: str) -> dict[str, list]:
     reads are metadata-only (no row data touched); at 100 TB this runs
     where the file was written (executor-side) — here the writer is
     local, so a local footer read is the same I/O.  Columns beyond
-    :data:`STATS_MAX_COLS`, nested/binary columns, and columns with no
-    footer stats are simply absent (pruning treats absent as
-    unknown → keep the file)."""
+    :data:`STATS_MAX_COLS` (except the bucket ``key``, always recorded:
+    merge-on-read masking and point lookups prune on it), nested/binary
+    columns, and columns with no footer stats are simply absent
+    (pruning treats absent as unknown → keep the file)."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(full_path).metadata
@@ -389,7 +391,8 @@ def _file_stats(full_path: str) -> dict[str, list]:
         (i, f.name)
         for i, f in enumerate(schema)
         if any(str(f.type).startswith(t) for t in _STATS_OK)
-    ][:STATS_MAX_COLS]
+    ]
+    cols = [c for n, c in enumerate(cols) if n < STATS_MAX_COLS or c[1] == key]
     for ci, name in cols:
         mn = mx = None
         ok = True
@@ -511,7 +514,6 @@ def _write_bucketed(
     cluster_by=None,
     max_records_per_file: int | None = None,
     part_spec: tuple | None = None,
-    skip_shuffle: bool = False,
 ) -> list[dict]:
     """Write ``df`` hash-bucketed by ``key`` under a fresh commit dir;
     return manifest entries
@@ -539,32 +541,9 @@ def _write_bucketed(
     (partition, bucket) combo lands in exactly one task → one file
     (plus the max_records_per_file splitter).
 
-    ``skip_shuffle`` (round-19 optimization, guide §2.4 "remove
-    shuffles outright"): when the input is ALREADY physically grouped
-    by bucket — the merge-on-read tombstone write reads back the just-
-    written bucket-partitioned delta files, so each scan task holds
-    whole single-bucket files — re-hashing it through an exchange
-    moves every row for zero placement information.  partitionBy
-    routes rows by the computed bucket column regardless of physical
-    layout, so the write is value-identical; each task just writes the
-    (few) bucket dirs it already holds.  Never set this for inputs
-    with arbitrary layout: every task would spray one small file into
-    every bucket it touches.  Round-20 guards (VERDICT r19 #4 /
-    ADVICE r19): combining it with ``part_spec`` raises (that branch
-    always repartitions, so a caller passing both has a broken
-    precondition, not a silent no-op), and the MoR call site only sets
-    it when every source file is under the scan split size — a file
-    larger than Spark's ``FilePartition.maxSplitBytes`` is split ACROSS
-    scan tasks, so "each task holds whole single-bucket files" no
-    longer holds and the write would multiply per-bucket files."""
-    from pyspark.sql import functions as F
-
-    if skip_shuffle and part_spec is not None:
-        raise ValueError(
-            "_write_bucketed: skip_shuffle requires the input's physical "
-            "grouping to be the final layout, but part_spec always "
-            "re-partitions — the combination is a caller bug"
-        )
+    ``key`` also gets its footer stats recorded whatever the table's
+    width (see :func:`_file_stats`), so :func:`table_merge_mor` can
+    list these same entries as tombstones."""
     for reserved in ("bucket", "_zorder", "_part"):
         if reserved in df.columns:
             # The helper column would collide (partitionBy would route
@@ -588,7 +567,7 @@ def _write_bucketed(
             ).repartition("_part", "bucket")
             sort_prefix = ["_part", "bucket"]
             part_dirs = ["_part", "bucket"]
-        elif not skip_shuffle:
+        else:
             staged = staged.repartition(n_buckets, "bucket")
         drop_helper = None
         if isinstance(cluster_by, (list, tuple)):
@@ -647,7 +626,7 @@ def _write_bucketed(
         for fn in sorted(filenames):
             if fn.endswith(".parquet"):
                 full = os.path.join(dirpath, fn)
-                stats = _file_stats(full)
+                stats = _file_stats(full, key)
                 nulls = stats.pop("_nulls", {})
                 e = {
                     "path": f"{rel_dir}/{fn}",
@@ -786,6 +765,24 @@ def _manifest_seq(path: str) -> int:
         return -1
 
 
+def _retention(
+    target: str, live: str, man: dict | None
+) -> tuple[list[str], list[str]]:
+    """(retained, expired) root names of ``target`` — THE retention
+    rule :func:`table_history`, :func:`_prune_manifests` and
+    :func:`table_vacuum` share: the live root ``live`` first, then the
+    other roots newest first by commit sequence, split after the
+    table's ``keep_generations`` (recorded in the live root ``man``;
+    :data:`KEEP_GENERATIONS` when None)."""
+    others = sorted(
+        (n for n in os.listdir(target) if n.startswith(MANIFEST_PREFIX) and n != live),
+        key=lambda n: _manifest_seq(os.path.join(target, n)),
+        reverse=True,
+    )
+    keep_n = int((man or {}).get("keep_generations") or KEEP_GENERATIONS)
+    return [live] + others[: keep_n - 1], others[keep_n - 1 :]
+
+
 def _read_root(path: str) -> dict:
     """A ROOT manifest — the manifest LIST: table metadata plus one
     part ref per (partition, bucket), O(buckets) not O(files); entry
@@ -801,8 +798,11 @@ def _read_root(path: str) -> dict:
     return man
 
 
-def _load_manifest(target: str) -> dict:
-    """The live ROOT manifest dict for a table (pointer → JSON)."""
+def _load_manifest(target: str) -> tuple[str, dict]:
+    """The live ROOT's (name, manifest dict) for a table, from ONE
+    pointer read.  Every commit op checks its commit point against
+    this name: a second read could see a newer root than the one the
+    op builds on, and refuse a commit that raced nothing."""
     live = resolve_table(target)
     base = os.path.basename(live)
     if not base.startswith(MANIFEST_PREFIX):
@@ -810,7 +810,7 @@ def _load_manifest(target: str) -> dict:
             f"{target} is not a per-file manifest table (pointer names "
             f"{base!r}); seed it with table_init() first"
         )
-    return _read_root(live)
+    return base, _read_root(live)
 
 
 def _schema_shape(st):
@@ -974,9 +974,10 @@ def _cluster_args(man: dict) -> dict:
     """The table's recorded clustering + partitioning properties as
     _write_bucketed kwargs — every rewriting commit honors them, so
     clustering and the partition spec survive merges/appends/
-    compactions once declared at init.  (Tombstone writes call
-    _write_bucketed WITHOUT these: tombstones are key-only frames and
-    partition-less by design — see the round-19 banner.)"""
+    compactions once declared at init.  (:func:`table_delete`'s
+    tombstone write calls _write_bucketed WITHOUT these: its tombstones
+    are key-only frames and partition-less by design — see the
+    round-19 banner.)"""
     return {
         "cluster_by": man.get("cluster_by"),
         "max_records_per_file": man.get("max_records_per_file"),
@@ -1035,10 +1036,10 @@ def table_init(
             "to nest a manifest layout inside it — clear it or pick "
             "another target"
         )
-    expected = _live_manifest_name(target) if ptr_exists else _ABSENT
-    seq = (
-        int(_load_manifest(target).get("seq", -1)) + 1 if ptr_exists else 0
-    )
+    expected, seq = _ABSENT, 0
+    if ptr_exists:
+        expected, cur_man = _load_manifest(target)
+        seq = int(cur_man.get("seq", -1)) + 1
     if keep_generations < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
     if partition_by is not None:
@@ -1095,17 +1096,8 @@ def table_history(target: str) -> list[str]:
     :data:`KEEP_GENERATIONS` = live + one superseded), i.e. the stated
     time-travel SLA — raise it at init or with
     :func:`table_set_retention`."""
-    live = _live_manifest_name(target)
-    others = sorted(
-        (
-            n
-            for n in os.listdir(target)
-            if n.startswith(MANIFEST_PREFIX) and n != live
-        ),
-        key=lambda n: _manifest_seq(os.path.join(target, n)),
-        reverse=True,
-    )
-    return [live] + others
+    retained, expired = _retention(target, _live_manifest_name(target), None)
+    return retained + expired
 
 
 def _scan_coalesce(spark, items: list[dict]) -> int:
@@ -1318,7 +1310,12 @@ def _masked_scan(
     * tombstones that can affect a dirty file are aggregated to
       per-key MAX gen (masked iff max > gen — smaller broadcast,
       duplicate update batches dedup to one row) and broadcast into
-      the anti-join.
+      the anti-join.  A tombstone is either an MoR delta file (its
+      commit lists it as data AND tombstone) or a key-only file from
+      :func:`table_delete` (or an older MoR commit); both scan with a
+      key-only schema, so parquet reads just a delta file's key
+      column, and its ``_tgen`` equals its own rows' ``_gen``, so it
+      never masks them.
 
     Tombstones written with the since-removed positional deletion
     vectors carry a ``dv`` field; it is ignored, because those commits
@@ -1407,7 +1404,7 @@ def _masked_scan(
 def _manifest_at(target: str, at: str | None) -> dict:
     """The live manifest, or a retained one named by ``at``."""
     if at is None:
-        return _load_manifest(target)
+        return _load_manifest(target)[1]
     if at != os.path.basename(at) or not at.startswith(MANIFEST_PREFIX):
         raise ValueError(f"not a manifest name: {at!r}")
     path = os.path.join(target, at)
@@ -1715,8 +1712,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
     """
     from pyspark.sql import functions as F
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     # One tiny collect: ≤ n_buckets ints — never data-sized.
     touched = sorted(
@@ -1808,9 +1804,11 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
     file also referenced by a kept root is carried state — untouched.
     DEAD parts (referenced by pruned roots only) are loaded to
     enumerate their data files, and kept parts are loaded ONLY for
-    those same groups (the only place an overlap can exist, since
-    append/MoR carry old entries into the replacement part) — so the
-    commit-path pruner stays O(changed buckets), never O(table).
+    those same groups and their buckets' tombstone groups (the only
+    places an overlap can exist: append/MoR carry old entries into
+    the replacement part, and an MoR delta file is also a tombstone)
+    — so the commit-path pruner stays O(changed buckets), never
+    O(table).
     Files referenced by NO manifest (crashed or in-flight commits) are
     left to :func:`table_vacuum`, which holds the full reference set —
     the same split Iceberg makes: expire-snapshots is a commit-path
@@ -1839,21 +1837,7 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
     try:
         if cur_man is None:  # the committer passes its dict; re-read otherwise
             cur_man = _try_read(current, _read_root)
-        keep_n = (
-            int(cur_man.get("keep_generations") or KEEP_GENERATIONS)
-            if cur_man
-            else KEEP_GENERATIONS
-        )
-        manifests = [
-            n
-            for n in os.listdir(target)
-            if n.startswith(MANIFEST_PREFIX) and n != current
-        ]
-        manifests.sort(
-            key=lambda n: _manifest_seq(os.path.join(target, n)), reverse=True
-        )
-        keep = [current] + manifests[: keep_n - 1]
-        pruned = manifests[keep_n - 1 :]
+        keep, pruned = _retention(target, current, cur_man)
         kept_refs: list[dict] = []
         for n in keep:
             man = cur_man if n == current else _try_read(n, _read_root)
@@ -1880,8 +1864,11 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
                 dead_data |= data_refs(doc) or set()
         # Kept parts can share data files with dead parts only in the
         # dead parts' own (partition, bucket) groups (a gkey's listing
-        # lives in exactly one part per root) — load just those.
+        # lives in exactly one part per root) and in their buckets'
+        # partition-less tombstone groups, which list merge-on-read
+        # delta files a second time — load just those.
         dead_gkeys = set(dead_parts.values())
+        dead_gkeys |= {(None, b) for _p, b in dead_gkeys}
         kept_data: set[str] = set()
         loaded: set[str] = set()
         for r in kept_refs:
@@ -1901,6 +1888,21 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
         pass
 
 
+def _key_frame(spark, man: dict, keys: list) -> DataFrame:
+    """``keys`` as a one-column local frame typed as the table's bucket
+    key column (from the manifest-recorded schema)."""
+    import json as _json
+
+    from pyspark.sql.types import StructField, StructType
+
+    key = man["bucket_key"]
+    schema = StructType.fromJson(_json.loads(man["schema"]))
+    key_field = next(f for f in schema.fields if f.name == key)
+    return spark.createDataFrame(
+        [(k,) for k in keys], StructType([StructField(key, key_field.dataType)])
+    )
+
+
 def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
     """Buckets that can contain one of ``keys`` — the read-side payoff
     of the bucketed layout: bucket membership is the same
@@ -1909,17 +1911,9 @@ def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
     Spark expression over a keys-sized local frame (xxhash64 is a JVM
     function; re-implementing it Python-side would be a second source
     of truth that could silently drift)."""
-    from pyspark.sql.types import StructField, StructType
-    import json as _json
-
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    key_field = next(f for f in schema.fields if f.name == man["bucket_key"])
-    kdf = spark.createDataFrame(
-        [(k,) for k in keys], StructType([StructField(key_field.name, key_field.dataType)])
-    )
     return {
         r["b"]
-        for r in kdf.select(
+        for r in _key_frame(spark, man, keys).select(
             _bucket_expr(man["bucket_key"], int(man["n_buckets"])).alias("b")
         )
         .distinct()
@@ -1951,7 +1945,7 @@ def table_lookup(spark, target: str, keys: list) -> DataFrame:
     probes too (use :func:`table_read` + ``isNull`` for NULL rows)."""
     from pyspark.sql import functions as F
 
-    man = _load_manifest(target)
+    man = _load_manifest(target)[1]
     key = man["bucket_key"]
     wanted = _buckets_for_keys(spark, man, keys)
     entries, tombs = _man_entries(target, man, buckets=wanted)
@@ -1990,8 +1984,7 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
 
     from pyspark.sql.types import StructType
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     schema = StructType.fromJson(_json.loads(man["schema"]))
     if _schema_shape(rows.schema) != _schema_shape(schema):
         raise ValueError(
@@ -2030,8 +2023,10 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
     write amplification, SCALE.md r16).
 
     Write side: ``updates`` lands as new data files (gen = this
-    commit's seq) plus TOMBSTONE files holding just the update keys at
-    the same gen — nothing else is read or written.  Read side
+    commit's seq), ONE write; the manifest lists each file twice — as
+    a data file of its (partition, bucket) and as a TOMBSTONE of its
+    bucket (a delta file's key column is exactly the update keys) —
+    and nothing else is read or written.  Read side
     (:func:`_masked_scan`, applied by every v2 reader): a base row is
     masked when a NEWER tombstone holds its key, so the delta row wins
     — newest-wins upsert, deferred to scan time.  The deferred cost is
@@ -2049,8 +2044,7 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
 
     from pyspark.sql.types import StructType
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     schema = StructType.fromJson(_json.loads(man["schema"]))
     if _schema_shape(updates.schema) != _schema_shape(schema):
         raise ValueError(
@@ -2071,64 +2065,28 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
             "tombstone_files": 0,
             "live_tombstone_files": _man_tomb_count(man),
         }
-    # Tombstone keys are derived by READING BACK the just-written delta
-    # files, not by re-evaluating the updates lineage (review r17): a
-    # non-deterministic batch source re-executed for the tombstone
-    # write could emit a DIFFERENT key set — keys tombstoned without a
-    # delta row are silent deletes, delta rows without a tombstone
-    # leave the stale base row alive as a duplicate.  The written files
-    # are the one authoritative evaluation (and re-reading the
-    # batch-sized deltas is cheaper than re-running the batch plan).
-    delta_keys = _read_paths(
-        spark, schema, [os.path.join(target, e["path"]) for e in entries]
-    ).select(key)
-    # skip_shuffle: the delta scan is already grouped by bucket (each
-    # task holds whole single-bucket files just written above), so the
-    # tombstone write needs no exchange — round-19 optimization.
-    # Round-20 guard (VERDICT r19 #4): that premise only holds while
-    # every delta file fits one scan task — past the split size a file
-    # splits across tasks and partitionBy would write one tombstone
-    # file PER TASK per bucket; keep the repartition then.  The split
-    # size is Spark's FilePartition.maxSplitBytes: min(maxPartitionBytes,
-    # max(openCostInBytes, totalBytes / minPartitionNum)), each file
-    # counting its length plus the open cost (ADVICE r20 #1).
-    open_cost = conf.size_bytes(
-        spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-    )
-    min_parts = int(
-        spark.conf.get("spark.sql.files.minPartitionNum", None)
-        or spark.conf.get("spark.sql.leafNodeDefaultParallelism", None)
-        or spark.sparkContext.defaultParallelism
-    )
-    split_bytes = min(
-        conf.size_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")),
-        max(
-            open_cost,
-            sum((e.get("bytes") or 0) + open_cost for e in entries) // min_parts,
-        ),
-    )
-    one_task_per_file = all(
-        e.get("bytes") is not None and e["bytes"] < split_bytes
+    # Each delta file is also its own tombstone: its key column IS the
+    # batch's key set, written once (never re-evaluated — a
+    # non-deterministic batch run twice could tombstone other keys than
+    # it wrote, review r17).  The tombstone entry keeps only the key's
+    # stats and no ``part`` (tombstones are partition-less);
+    # _masked_scan reads just its key column, and gen ordering keeps
+    # it from masking its own rows.
+    tombs = [
+        {k: e[k] for k in ("path", "bucket", "gen", "rows", "bytes", "key_nulls")}
+        | {"stats": {c: v for c, v in e["stats"].items() if c == key}}
         for e in entries
-    )
-    tomb_entries = _write_bucketed(
-        delta_keys,
-        target,
-        key,
-        n_buckets,
-        gen=new_seq,
-        skip_shuffle=one_task_per_file,
-    )
+    ]
     manifest = _man_update(
         target,
         man,
-        _group_listings(target, man, new_files=entries, new_tombs=tomb_entries),
+        _group_listings(target, man, new_files=entries, new_tombs=tombs),
         new_seq,
     )
     _commit_manifest(target, manifest, expect_current=base_name)
     return {
         "delta_files": len(entries),
-        "tombstone_files": len(tomb_entries),
+        "tombstone_files": len(tombs),
         "live_tombstone_files": _man_tomb_count(manifest),
     }
 
@@ -2160,8 +2118,7 @@ def table_compact(
     generation or churns readers).  Returns
     {"compacted_buckets", "files_before", "files_after",
     "tombstones_cleared"}."""
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     mrpf = man.get("max_records_per_file")
 
@@ -2264,21 +2221,14 @@ def table_delete(spark, target: str, keys: list) -> dict:
     ``keys`` is a plain Python list (point deletes are key lists by
     nature; a predicate delete is ``table_read`` + the caller's filter
     + this).  Key type must match the table's bucket-key column."""
-    import json as _json
-
-    from pyspark.sql.types import StructField, StructType
-
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    key = man["bucket_key"]
-    key_field = next(f for f in schema.fields if f.name == key)
-    kdf = spark.createDataFrame(
-        [(k,) for k in keys], StructType([StructField(key, key_field.dataType)])
-    )
+    base_name, man = _load_manifest(target)
     new_seq = int(man.get("seq", -1)) + 1
     tomb_entries = _write_bucketed(
-        kdf, target, key, int(man["n_buckets"]), gen=new_seq
+        _key_frame(spark, man, keys),
+        target,
+        man["bucket_key"],
+        int(man["n_buckets"]),
+        gen=new_seq,
     )
     if not tomb_entries:
         # Empty key list: no-op, no commit (review r17 — a no-op
@@ -2321,8 +2271,7 @@ def table_add_columns(spark, target: str, new_fields) -> dict:
 
     from pyspark.sql.types import StructType
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     schema = StructType.fromJson(_json.loads(man["schema"]))
     fields = list(new_fields.fields) if isinstance(new_fields, StructType) else list(new_fields)
     if not fields:
@@ -2402,8 +2351,7 @@ def table_rename_column(target: str, old: str, new: str) -> dict:
 
     from pyspark.sql.types import StructField, StructType
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     schema = StructType.fromJson(_json.loads(man["schema"]))
     names = [f.name for f in schema.fields]
     if old not in names:
@@ -2451,8 +2399,7 @@ def table_drop_column(target: str, name: str) -> dict:
 
     from pyspark.sql.types import StructType
 
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     schema = StructType.fromJson(_json.loads(man["schema"]))
     names = [f.name for f in schema.fields]
     if name not in names:
@@ -2485,7 +2432,7 @@ def table_stats(target: str) -> dict:
     whether the hash key is balanced enough for the rewrite
     granularity).  The observability op a maintenance scheduler polls
     to decide WHEN to run :func:`table_compact` / :func:`table_vacuum`."""
-    man = _load_manifest(target)
+    man = _load_manifest(target)[1]
     per_bucket: dict[int, dict] = {}
     partitions: set = set()
     for r in man["parts"]:
@@ -2571,8 +2518,7 @@ def table_set_retention(target: str, keep_generations: int) -> dict:
     it when sweeping."""
     if int(keep_generations) < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     manifest = dict(
         man,
         keep_generations=int(keep_generations),
@@ -2600,8 +2546,7 @@ def table_drop_partition(target: str, value) -> dict:
     tombstones are untouched: they are partition-less and may still
     mask rows in other partitions.  Optimistic concurrency as
     everywhere."""
-    base_name = _live_manifest_name(target)
-    man = _load_manifest(target)
+    base_name, man = _load_manifest(target)
     if _part_spec(man) is None:
         raise ValueError(
             f"{target} has no partition spec; table_drop_partition needs "
@@ -2643,24 +2588,8 @@ def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
     "roots_removed", "kept_manifests"}."""
     import time
 
-    live = _live_manifest_name(target)
-    if not live.startswith(MANIFEST_PREFIX):
-        raise ValueError(
-            f"{target} is not a v2 manifest table (pointer names {live!r})"
-        )
-    man = _read_root(os.path.join(target, live))
-    keep_n = int(man.get("keep_generations") or KEEP_GENERATIONS)
-    others = sorted(
-        (
-            n
-            for n in os.listdir(target)
-            if n.startswith(MANIFEST_PREFIX) and n != live
-        ),
-        key=lambda n: _manifest_seq(os.path.join(target, n)),
-        reverse=True,
-    )
-    retained = [live] + others[: keep_n - 1]
-    excess_roots = others[keep_n - 1 :]
+    live, man = _load_manifest(target)
+    retained, excess_roots = _retention(target, live, man)
     refs: set[str] = set()
     for name in retained:
         doc = _read_root(os.path.join(target, name))  # raises → abort

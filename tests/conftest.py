@@ -100,7 +100,7 @@ def manifest_listing(target: str, man: dict | None = None):
     from pyspark_analytics_library_spark.sources import commit
 
     if man is None:
-        man = commit._load_manifest(target)
+        man = commit._load_manifest(target)[1]
     return commit._man_entries(target, man)
 
 
@@ -114,7 +114,7 @@ def stamp_legacy_dv(target: str, text: str | None = None) -> str:
     replaces the document's contents.  Returns its table-relative path."""
     from pyspark_analytics_library_spark.sources import commit
 
-    man = commit._load_manifest(target)
+    man = commit._load_manifest(target)[1]
     gen = int(man["seq"])
     files, tombs = commit._man_entries(target, man)
     buckets = {t["bucket"] for t in tombs if int(t["gen"]) == gen}

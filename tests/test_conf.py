@@ -84,8 +84,7 @@ def cc_loop(spark, monkeypatch):
 )
 def test_size_parser_accepts_what_spark_accepts(spark, value):
     """Every form either former parser was fed: Spark's getter output
-    (``134217728b``), the skip_shuffle guard's fallbacks, the byte-count
-    defaults and the documented suffixes, each equal to Spark's own
+    (``134217728b``), the byte-count defaults and the documented suffixes, each equal to Spark's own
     ``byteStringAsBytes``."""
     jutils = spark._jvm.org.apache.spark.network.util.JavaUtils  # noqa: SLF001
     assert conf.size_bytes(value) == jutils.byteStringAsBytes(value)

@@ -47,7 +47,7 @@ def _split_init(spark, tmp_path, n_buckets=8, **kw):
 
 def test_split_init_layout_and_read_roundtrip(spark, tmp_path):
     target = _split_init(spark, tmp_path)
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     assert "parts" in man and "files" not in man
     assert all(r["path"].startswith(cm.PARTS_DIR + "/") for r in man["parts"])
     assert len(man["parts"]) == len({r["bucket"] for r in man["parts"]}), (
@@ -68,7 +68,7 @@ def test_split_merge_parses_only_touched_buckets(spark, tmp_path):
     root + ONLY the touched buckets' parts — O(update footprint)
     driver-side manifest I/O."""
     target = _split_init(spark, tmp_path, n_buckets=8)
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     total_parts = len(man["parts"])
     assert total_parts == 8
 
@@ -86,7 +86,7 @@ def test_split_merge_parses_only_touched_buckets(spark, tmp_path):
 
     expect = sorted(tuple(r) for r in scd1_merged(_base(spark), one_key).collect())
     assert _rows(spark, target) == expect
-    man2 = cm._load_manifest(target)
+    man2 = cm._load_manifest(target)[1]
     carried = {r["path"] for r in man["parts"]} & {r["path"] for r in man2["parts"]}
     assert len(carried) == total_parts - 1, (
         "untouched parts must carry by reference"
@@ -116,7 +116,7 @@ def test_split_pruned_range_read_skips_parts(spark, tmp_path):
         frame.filter(F.col("o_orderkey") < 100), target, "o_orderkey", n_buckets=4,
     )
     cm.table_append(spark, target, frame.filter((F.col("o_orderkey") >= 500) & (F.col("o_orderkey") < 600)))
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     # Every part's stats union reflects its band mix; a range only the
     # hi band satisfies must skip any part whose union tops out below.
     _reset_io()
@@ -156,7 +156,7 @@ def test_split_append_mor_delete_compact_roundtrip(spark, tmp_path):
     st = cm.table_compact(spark, tgt_s)
     assert st["tombstones_cleared"] >= 1
     assert _rows(spark, tgt_s) == expect
-    man = cm._load_manifest(tgt_s)
+    man = cm._load_manifest(tgt_s)[1]
     assert all(r["tombstones"] == 0 for r in man["parts"])
     assert all(r["files"] == 1 for r in man["parts"]), (
         "compaction packs each bucket's listing to one file"
@@ -181,13 +181,13 @@ def test_split_pruner_reclaims_dead_parts_and_files(spark, tmp_path):
     data files shared between dead and kept parts (append carries old
     entries into the replacement part) are never deleted."""
     target = _split_init(spark, tmp_path, n_buckets=4)
-    man0 = cm._load_manifest(target)
+    man0 = cm._load_manifest(target)[1]
     paths0 = {r["path"] for r in man0["parts"]}
     extra = _base(spark).filter(F.col("o_orderkey") >= 395)  # touches some buckets
     cm.table_append(spark, target, extra)
-    man1 = cm._load_manifest(target)
+    man1 = cm._load_manifest(target)[1]
     cm.table_append(spark, target, extra)  # third root; man0 pruned
-    man2 = cm._load_manifest(target)
+    man2 = cm._load_manifest(target)[1]
 
     live_names = set(cm.table_history(target))
     assert len(live_names) == 2
@@ -297,7 +297,7 @@ def test_vacuum_aborts_on_unreadable_retained_part(spark, tmp_path):
     """Safety: if a retained part is unreadable, vacuum must raise and
     delete NOTHING (it cannot prove any file unreferenced)."""
     target = _split_init(spark, tmp_path, n_buckets=4)
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     victim = os.path.join(target, man["parts"][0]["path"])
     with open(victim, "w") as f:
         f.write("{corrupt")
@@ -422,7 +422,7 @@ def test_zorder_property_survives_compaction(spark, tmp_path):
     )
     cm.table_delete(spark, target, [0, 1])
     cm.table_compact(spark, target, min_files=1)
-    assert cm._load_manifest(target)["cluster_by"] == ["x", "y"]
+    assert cm._load_manifest(target)[1]["cluster_by"] == ["x", "y"]
     files = manifest_listing(target)[0]
     total = len(files)
     assert total >= 8
@@ -676,7 +676,7 @@ def test_streaming_foreach_batch_appends_into_v2_table(spark, tmp_path):
 
     assert len(commits) == 3, commits
     assert _rows(spark, target) == sorted(tuple(r) for r in frame.collect())
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     assert int(man["seq"]) == 3, "one manifest commit per micro-batch"
 
 

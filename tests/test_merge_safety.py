@@ -429,7 +429,7 @@ def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):
     target = str(tmp_path / "t")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=16)
-    man = commit_mod._load_manifest(target)
+    man = commit_mod._load_manifest(target)[1]
     keys = [5, 17, 123]
     entries = commit_mod._files_for_keys(spark, man, keys, target)
     # <=3 keys -> <=3 buckets of 16; strictly fewer files than the table.
@@ -622,7 +622,7 @@ def test_table_append_adds_files_without_rewrite(spark, tmp_path):
     stats = commit_mod.table_append(spark, target, batch)
     assert stats["new_files"] >= 1
 
-    man2 = commit_mod._load_manifest(target)
+    man2 = commit_mod._load_manifest(target)[1]
     files2 = {e["path"] for e in manifest_listing(target, man2)[0]}
     assert files1 <= files2, "append must never rewrite or drop a file"
     expect = sorted(tuple(r) for r in base.unionAll(batch).collect())
@@ -706,7 +706,7 @@ def test_table_compact_binpacks_and_applies_tombstones(spark, tmp_path):
     before = _v2_rows(spark, target)
     tombs_before = manifest_listing(target)[1]
     assert tombs_before, "fixture must carry live tombstones"
-    seq_before = int(commit_mod._load_manifest(target)["seq"])
+    seq_before = int(commit_mod._load_manifest(target)[1]["seq"])
 
     stats = commit_mod.table_compact(spark, target)
     assert stats["compacted_buckets"]
@@ -724,7 +724,7 @@ def test_table_compact_binpacks_and_applies_tombstones(spark, tmp_path):
     # No-op second run: no candidates, no new commit.
     stats2 = commit_mod.table_compact(spark, target)
     assert stats2["compacted_buckets"] == []
-    assert int(commit_mod._load_manifest(target)["seq"]) == seq_before + 1
+    assert int(commit_mod._load_manifest(target)[1]["seq"]) == seq_before + 1
 
 
 def test_table_compact_detects_concurrent_commit(spark, tmp_path, monkeypatch):
@@ -892,13 +892,13 @@ def test_empty_maintenance_batches_commit_nothing(spark, tmp_path):
     time-travel manifest for nothing."""
     target = str(tmp_path / "t")
     commit_mod.table_init(_v2_base(spark), target, "o_orderkey", n_buckets=4)
-    seq0 = int(commit_mod._load_manifest(target)["seq"])
+    seq0 = int(commit_mod._load_manifest(target)[1]["seq"])
 
     assert commit_mod.table_delete(spark, target, [])["tombstone_files"] == 0
     empty = _v2_base(spark).filter(F.lit(False))
     assert commit_mod.table_append(spark, target, empty)["new_files"] == 0
     assert commit_mod.table_merge_mor(spark, target, empty)["delta_files"] == 0
-    assert int(commit_mod._load_manifest(target)["seq"]) == seq0
+    assert int(commit_mod._load_manifest(target)[1]["seq"]) == seq0
 
 
 def test_json_stat_timestamp_encoding_is_ordering_safe():
@@ -1013,7 +1013,7 @@ def test_table_clustering_enables_intra_bucket_pruning(spark, tmp_path):
         cluster_by="o_totalprice",
         max_records_per_file=100,
     )
-    man = commit_mod._load_manifest(target)
+    man = commit_mod._load_manifest(target)[1]
     assert man["cluster_by"] == "o_totalprice"
     files = manifest_listing(target, man)[0]
     per_bucket: dict[int, list] = {}
@@ -1248,7 +1248,7 @@ def test_mask_split_clean_dirty_partition(spark, tmp_path):
         F.lit(1.0).alias("o_totalprice"),
     )
     commit_mod.table_merge_mor(spark, target, updates)
-    man = commit_mod._load_manifest(target)
+    man = commit_mod._load_manifest(target)[1]
     clean, dirty, tombs = commit_mod._mask_split(
         man, *manifest_listing(target, man)
     )
@@ -1281,80 +1281,98 @@ def test_mask_split_clean_dirty_partition(spark, tmp_path):
     assert not commit_mod._may_mask(dict(e_disjoint, gen=t["gen"]), t, "o_orderkey")
 
 
-def test_mor_tombstone_skip_shuffle_guarded_by_split_size(
-    spark, tmp_path, monkeypatch
-):
-    """Round-20 guard (VERDICT r19 #4): the tombstone write may skip
-    its exchange only while every delta file fits ONE scan task.  The
-    split size is Spark's FilePartition.maxSplitBytes, so both a small
-    maxPartitionBytes and a small openCostInBytes over a large
-    minPartitionNum (ADVICE r20 #1) put the delta files over it; a
-    split delta file would make each scan task write its own file per
-    bucket — the guard must fall back to the repartition, keeping
-    per-bucket tombstone file counts at 1 and the visible rows
-    identical."""
+def test_mor_commit_writes_once_and_lists_deltas_as_tombstones(spark, tmp_path):
+    """A merge-on-read upsert writes ONE commit directory: each delta
+    file is listed again as its bucket's tombstone (same path, gen and
+    bucket; no ``part``; key-only stats), and the read is the upsert."""
+    from pyspark_analytics_library_spark.sources.scan_queries import scd1_merged
+
+    target = str(tmp_path / "t")
     base = _v2_base(spark)
+    commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
     updates = base.filter(F.col("o_orderkey") % 50 == 0).select(
         "o_orderkey",
         "o_custkey",
         F.lit("U").alias("o_orderstatus"),
         F.lit(1.0).alias("o_totalprice"),
     )
-    real_write = commit_mod._write_bucketed
+    data_dir = os.path.join(target, commit_mod.DATA_DIR)
+    dirs_before = set(os.listdir(data_dir))
+    st = commit_mod.table_merge_mor(spark, target, updates)
+    new_dirs = set(os.listdir(data_dir)) - dirs_before
+    assert len(new_dirs) == 1 and new_dirs.pop().startswith("c-")
 
-    def run(target, confs):
-        commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
-        skips = []
-
-        def spy(*a, **kw):
-            skips.append(kw.get("skip_shuffle", False))
-            return real_write(*a, **kw)
-
-        monkeypatch.setattr(commit_mod, "_write_bucketed", spy)
-        try:
-            with scoped_conf(spark, confs):
-                commit_mod.table_merge_mor(spark, target, updates)
-        finally:
-            monkeypatch.setattr(commit_mod, "_write_bucketed", real_write)
-        tombs = manifest_listing(target)[1]
-        per_bucket: dict[int, int] = {}
-        for t in tombs:
-            per_bucket[t["bucket"]] = per_bucket.get(t["bucket"], 0) + 1
-        # The tombstone write is the commit's last bucketed write.
-        return skips[-1], per_bucket, _v2_rows(spark, target)
-
-    fast_skip, fast_pb, fast_rows = run(str(tmp_path / "fast"), {})
-    assert fast_skip, "small delta files under default confs skip the shuffle"
-    for i, confs in enumerate(
-        [
-            # ~1.3 KB delta files: both inputs put them over the split
-            {"spark.sql.files.maxPartitionBytes": "1k"},
-            {
-                "spark.sql.files.openCostInBytes": "256",
-                "spark.sql.files.minPartitionNum": "64",
-            },
-        ]
-    ):
-        skip, pb, rows = run(str(tmp_path / f"split{i}"), confs)
-        # guarded path (files oversized vs the split size): no skip,
-        # exactly one tombstone file per touched bucket, same rows
-        assert not skip, confs
-        assert pb and all(n == 1 for n in pb.values()), (confs, pb)
-        assert set(pb) == set(fast_pb)
-        assert rows == fast_rows
-
-
-def test_write_bucketed_skip_shuffle_with_part_spec_raises(spark):
-    """ADVICE r19: skip_shuffle's already-grouped precondition can never
-    hold through the part_spec branch's repartition — the combination
-    must refuse loudly instead of silently repartitioning."""
-    df = spark.range(5).select(F.col("id").alias("k"))
-    with pytest.raises(ValueError, match="skip_shuffle"):
-        commit_mod._write_bucketed(
-            df,
-            "/tmp/never-written",
-            "k",
-            4,
-            part_spec=("k", "identity"),
-            skip_shuffle=True,
+    files, tombs = manifest_listing(target)
+    deltas = [e for e in files if int(e["gen"]) == 1]
+    assert deltas and st["delta_files"] == st["tombstone_files"] == len(deltas)
+    assert sorted(t["path"] for t in tombs) == sorted(e["path"] for e in deltas)
+    by_path = {e["path"]: e for e in deltas}
+    for t in tombs:
+        e = by_path[t["path"]]
+        assert (t["bucket"], t["gen"], t["rows"], t["key_nulls"]) == (
+            e["bucket"], e["gen"], e["rows"], e["key_nulls"]
         )
+        assert "part" not in t
+        assert t["stats"] == {"o_orderkey": e["stats"]["o_orderkey"]}
+    expect = sorted(tuple(r) for r in scd1_merged(base, updates).collect())
+    assert _v2_rows(spark, target) == expect
+
+
+def test_bucket_key_stats_recorded_past_stats_max_cols(spark, tmp_path):
+    """On a table wider than STATS_MAX_COLS whose bucket key comes
+    last, files still record the key's range and null count, so a
+    range-disjoint delete leaves every base file clean."""
+    n = commit_mod.STATS_MAX_COLS
+    df = spark.range(100).select(
+        *[(F.col("id") + i).alias(f"c{i}") for i in range(n)],
+        F.col("id").alias("k"),
+    )
+    target = str(tmp_path / "wide")
+    commit_mod.table_init(df, target, "k", n_buckets=1)
+    files, _ = manifest_listing(target)
+    assert files
+    for e in files:
+        assert e["stats"]["k"] == [0, 99] and e["key_nulls"] == 0
+        assert len(e["stats"]) == n + 1
+
+    commit_mod.table_delete(spark, target, [1000, 1001])
+    man = commit_mod._load_manifest(target)[1]
+    clean, dirty, relevant = commit_mod._mask_split(
+        man, *manifest_listing(target, man)
+    )
+    assert clean and not dirty and not relevant
+    assert commit_mod.table_read(spark, target).count() == 100
+
+
+def test_commit_ops_read_the_live_pointer_once(spark, tmp_path, monkeypatch):
+    """Each commit op resolves ``_CURRENT`` once to load the root it
+    builds on and once more at its commit point.  A second read before
+    the commit could see a root another writer committed in between,
+    so the op would build on that root yet check against the first
+    name, and refuse a commit that raced nothing."""
+    target = str(tmp_path / "t")
+    base = _v2_base(spark)
+    commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
+    batch = base.filter(F.col("o_orderkey") < 3)
+    calls: list[str] = []
+    real = commit_mod.resolve_table
+
+    def counting(t):
+        calls.append(t)
+        return real(t)
+
+    monkeypatch.setattr(commit_mod, "resolve_table", counting)
+    ops = {
+        "table_init": lambda: commit_mod.table_init(
+            base, target, "o_orderkey", n_buckets=4
+        ),
+        "table_append": lambda: commit_mod.table_append(spark, target, batch),
+        "table_merge_mor": lambda: commit_mod.table_merge_mor(spark, target, batch),
+        "table_delete": lambda: commit_mod.table_delete(spark, target, [1]),
+        "table_compact": lambda: commit_mod.table_compact(spark, target),
+        "table_set_retention": lambda: commit_mod.table_set_retention(target, 3),
+    }
+    for name, op in ops.items():
+        calls.clear()
+        op()
+        assert len(calls) == 2, (name, len(calls))

@@ -65,7 +65,7 @@ def ptable(spark, tmp_path):
 
 
 def test_partitioned_layout_and_roundtrip(spark, ptable):
-    man = cm._load_manifest(ptable)
+    man = cm._load_manifest(ptable)[1]
     assert man["partition_by"] == "d" and man["partition_transform"] == "day"
     # one part ref per non-empty (partition, bucket); paths carry the
     # _part directory level
@@ -80,7 +80,7 @@ def test_partition_pruned_read_parses_only_that_days_parts(spark, ptable):
     """The headline invariant: a 1-day read on a partitioned table
     loads ONLY that day's part files — partition pruning happens
     before any manifest-part parse, not after."""
-    man = cm._load_manifest(ptable)
+    man = cm._load_manifest(ptable)[1]
     _reset_io()
     got = cm.table_read(
         spark, ptable, where=("d", D(2024, 1, 3), D(2024, 1, 3))
@@ -124,7 +124,7 @@ def test_numeric_identity_partition_never_range_prunes(spark, tmp_path):
     assert _rows(got) == exp
     # IN-list pruning engages (exact string mapping for ints)
     _reset_io()
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     got2 = cm.table_read(spark, target, where_in=("grp", [7]))
     assert _rows(got2) == _rows(df.filter(F.col("grp") == 7))
     assert cm.MANIFEST_IO["part_reads"] < len(man["parts"])
@@ -159,13 +159,13 @@ def test_compact_packing_is_partition_local(spark, ptable):
         F.lit(9.0).alias("v"),
     )
     cm.table_append(spark, ptable, extra)
-    man = cm._load_manifest(ptable)
+    man = cm._load_manifest(ptable)[1]
     before = {
         cm._gkey(r): r["path"] for r in man["parts"]
     }
     st = cm.table_compact(spark, ptable)
     assert st["tombstones_cleared"] == 0
-    man2 = cm._load_manifest(ptable)
+    man2 = cm._load_manifest(ptable)[1]
     after = {cm._gkey(r): r["path"] for r in man2["parts"]}
     changed = {g for g in after if before.get(g) != after[g]}
     assert changed, "the appended day's groups were packed"
@@ -263,7 +263,7 @@ def test_month_transform_and_null_partition(spark, tmp_path):
         df, target, "k", n_buckets=2,
         partition_by="d", partition_transform="month",
     )
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     parts = {r.get("part") for r in man["parts"]}
     assert parts == {"2024-01", "2024-02", cm.NULL_PART}
     # range predicate on d prunes to one month and NEVER matches the
@@ -303,10 +303,35 @@ def test_unpartitioned_tables_unchanged(spark, tmp_path):
     (None, bucket)."""
     target = str(tmp_path / "plain")
     cm.table_init(_frame(spark), target, "k", n_buckets=4)
-    man = cm._load_manifest(target)
+    man = cm._load_manifest(target)[1]
     assert all("part" not in r for r in man["parts"])
     files, _ = manifest_listing(target, man)
     assert all("_part=" not in e["path"] for e in files)
     assert cm.table_stats(target)["partition_by"] is None
     with pytest.raises(ValueError, match="no partition spec"):
         cm.table_drop_partition(target, "x")
+
+
+def test_drop_partition_keeps_mor_deltas_live_tombstones_name(spark, ptable):
+    """An MoR delta file is listed twice — as data in its (partition,
+    bucket) part and as a tombstone in its bucket's partition-less
+    part.  Dropping its partition leaves the tombstone live, so when
+    retention ages out the pre-drop roots the pruner must not unlink
+    the file: every path the live root names stays on disk and reads
+    stay row-exact."""
+    upd = (
+        _frame(spark)
+        .filter((F.col("d") == D(2024, 1, 2)) & (F.col("k") < 50))
+        .withColumn("v", F.lit(-1.0))
+    )
+    cm.table_merge_mor(spark, ptable, upd)
+    cm.table_drop_partition(ptable, "2024-01-02")
+    for _ in range(2):  # age the MoR root out of the default retention
+        cm.table_set_retention(ptable, cm.KEEP_GENERATIONS)
+    assert len(cm.table_history(ptable)) == cm.KEEP_GENERATIONS
+    files, tombs = manifest_listing(ptable)
+    assert tombs and all("_part=2024-01-02" in t["path"] for t in tombs)
+    for e in files + tombs:
+        assert os.path.exists(os.path.join(ptable, e["path"])), e["path"]
+    want = _rows(_frame(spark).filter(F.col("d") != D(2024, 1, 2)))
+    assert _rows(cm.table_read(spark, ptable)) == want

@@ -103,7 +103,7 @@ def test_mor_and_compact_across_rename(spark, table):
     # compaction migrated the rewritten bucket's files to the newest
     # epoch (they re-read exactly under the current name with no
     # epoch mapping)
-    man = cm._load_manifest(table)
+    man = cm._load_manifest(table)[1]
     files, _ = cm._man_entries(table, man)
     rewritten = [e for e in files if e["bucket"] in st["compacted_buckets"]]
     assert rewritten and all(e["gen"] == int(man["seq"]) for e in rewritten)
