@@ -1,9 +1,8 @@
 """pyspark_analytics_library_spark — a PySpark-native analytics engine.
 
 A from-scratch, Spark-first implementation of the analytics-operator
-surface of ``kuanpern/PySpark-Analytics-Library`` (reference snapshot at
-/root/reference is empty — see SURVEY.md §0.1; the operator inventory in
-SURVEY.md §2 is the authoritative capability contract).
+surface of ``kuanpern/PySpark-Analytics-Library``; the operator
+inventory in SURVEY.md §2 is the authoritative capability contract.
 
 Design stance (SURVEY.md §7):
 - The engine is an *operator layer* over the public PySpark DataFrame
@@ -24,6 +23,49 @@ from pyspark_analytics_library_spark.functions.coercion import (
 
 __version__ = "0.2.0"
 
+#: Lazily re-exported helpers, per defining module.  Importing them
+#: eagerly would pull every operator module (and their pandas/numpy
+#: imports) on package import; the registry's ``load_all_query_modules``
+#: stays the one place that does that on purpose.
+_LAZY = {
+    "operators.udf": ("gapply",),
+    "operators.windows": ("topk_per_group", "lag_lead"),
+    "operators.dedup": (
+        "dedup_exact_keep_min",
+        "minhash_lsh_pairs",
+        "connected_components",
+        "reclaim_iteration_scratch",
+        "word_shingles",
+        "jaccard",
+    ),
+    "operators.similarity": ("cosine_sim", "build_index", "brute_topk"),
+    "operators.text": ("tokenize",),
+    "operators.timeseries": ("tumbling_agg", "sessionize"),
+    # v2 lakehouse table surface
+    "sources.commit": (
+        "table_init",
+        "table_read",
+        "table_lookup",
+        "table_merge",
+        "table_merge_mor",
+        "table_append",
+        "table_delete",
+        "table_compact",
+        "table_add_columns",
+        "table_history",
+        "table_stats",
+        "table_vacuum",
+        "table_set_retention",
+        "table_drop_partition",
+        "table_rename_column",
+        "table_drop_column",
+        "with_commit_retry",
+        "prefix_range",
+        "resolve_table",
+    ),
+}
+_LAZY_MODULE = {name: mod for mod, names in _LAZY.items() for name in names}
+
 __all__ = [
     "REGISTRY",
     "QuerySpec",
@@ -33,133 +75,18 @@ __all__ = [
     "get_spark",
     "ensure_column",
     "ensure_columns",
-    "gapply",
-    "topk_per_group",
-    "lag_lead",
-    "dedup_exact_keep_min",
-    "minhash_lsh_pairs",
-    "connected_components",
-    "reclaim_iteration_scratch",
-    "word_shingles",
-    "jaccard",
-    "cosine_sim",
-    "build_index",
-    "brute_topk",
-    "tokenize",
-    "tumbling_agg",
-    "sessionize",
-    # v2 lakehouse table surface (rounds 15-19, sources/commit.py)
-    "table_init",
-    "table_read",
-    "table_lookup",
-    "table_merge",
-    "table_merge_mor",
-    "table_append",
-    "table_delete",
-    "table_compact",
-    "table_add_columns",
-    "table_history",
-    "table_stats",
-    "table_vacuum",
-    "table_set_retention",
-    "table_drop_partition",
-    "table_rename_column",
-    "table_drop_column",
-    "with_commit_retry",
-    "prefix_range",
-    "resolve_table",
+    *_LAZY_MODULE,
     "__version__",
 ]
 
 
 def __getattr__(name: str):
-    """Lazy re-exports of the operator-layer helpers.
-
-    Importing them eagerly would pull every operator module (and their
-    pandas/numpy imports) on package import; the registry's
-    ``load_all_query_modules`` stays the one place that does that on
-    purpose.  PEP 562 lazy attributes keep ``import
-    pyspark_analytics_library_spark`` cheap while still giving users the
-    flat API the reference exposes (``from pyspark_analytics_library_spark
-    import gapply, cosine_sim, ...``).
-    """
-    lazy = {
-        "gapply": ("pyspark_analytics_library_spark.operators.udf", "gapply"),
-        "topk_per_group": (
-            "pyspark_analytics_library_spark.operators.windows",
-            "topk_per_group",
-        ),
-        "lag_lead": ("pyspark_analytics_library_spark.operators.windows", "lag_lead"),
-        "dedup_exact_keep_min": (
-            "pyspark_analytics_library_spark.operators.dedup",
-            "dedup_exact_keep_min",
-        ),
-        "minhash_lsh_pairs": (
-            "pyspark_analytics_library_spark.operators.dedup",
-            "minhash_lsh_pairs",
-        ),
-        "connected_components": (
-            "pyspark_analytics_library_spark.operators.dedup",
-            "connected_components",
-        ),
-        "reclaim_iteration_scratch": (
-            "pyspark_analytics_library_spark.operators.dedup",
-            "reclaim_iteration_scratch",
-        ),
-        "word_shingles": (
-            "pyspark_analytics_library_spark.operators.dedup",
-            "word_shingles",
-        ),
-        "jaccard": ("pyspark_analytics_library_spark.operators.dedup", "jaccard"),
-        "cosine_sim": (
-            "pyspark_analytics_library_spark.operators.similarity",
-            "cosine_sim",
-        ),
-        "build_index": (
-            "pyspark_analytics_library_spark.operators.similarity",
-            "build_index",
-        ),
-        "brute_topk": (
-            "pyspark_analytics_library_spark.operators.similarity",
-            "brute_topk",
-        ),
-        "tokenize": ("pyspark_analytics_library_spark.operators.text", "tokenize"),
-        "tumbling_agg": (
-            "pyspark_analytics_library_spark.operators.timeseries",
-            "tumbling_agg",
-        ),
-        "sessionize": (
-            "pyspark_analytics_library_spark.operators.timeseries",
-            "sessionize",
-        ),
-        **{
-            name: ("pyspark_analytics_library_spark.sources.commit", name)
-            for name in (
-                "table_init",
-                "table_read",
-                "table_lookup",
-                "table_merge",
-                "table_merge_mor",
-                "table_append",
-                "table_delete",
-                "table_compact",
-                "table_add_columns",
-                "table_history",
-                "table_stats",
-                "table_vacuum",
-                "table_set_retention",
-                "table_drop_partition",
-                "table_rename_column",
-                "table_drop_column",
-                "with_commit_retry",
-                "prefix_range",
-                "resolve_table",
-            )
-        },
-    }
-    if name in lazy:
+    """PEP 562 lazy attributes: ``import pyspark_analytics_library_spark``
+    stays cheap while users still get the flat API the reference exposes
+    (``from pyspark_analytics_library_spark import gapply, cosine_sim``)."""
+    if name in _LAZY_MODULE:
         import importlib
 
-        mod, attr = lazy[name]
-        return getattr(importlib.import_module(mod), attr)
+        mod = importlib.import_module(f"{__name__}.{_LAZY_MODULE[name]}")
+        return getattr(mod, name)
     raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -224,7 +224,7 @@ def q_fn_struct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_fn_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Map construction + key/value access surface.
 
-    Full oracle (upgraded from rows-only in round 5): the map is
+    Full oracle: the map is
     built from two literal keys, so key access, key listing, and entry
     count have closed-form relational values — the oracle verifies the
     map-function RESULTS (DuckDB's map[k]-returns-LIST quirk only

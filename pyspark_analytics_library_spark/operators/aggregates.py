@@ -35,12 +35,11 @@ def money(col: Column | str) -> Column:
     nearest-double of k/100; that double is always within ~1e-11 of
     k/100 and never at a 3-dp half point, so rounding it to 2 dp
     recovers k/100 on BOTH engines regardless of their tie rules.
-    (Contrast with casting a COMPUTED double like price*(1-disc) to
-    decimal: there the value can land exactly between two 8-dp
-    decimals, and the round-15 advice audit measured Spark's HALF_UP
-    on the shortest-repr string vs DuckDB's ties-to-even on the binary
-    value disagreeing on ~6e-4 of rows by ±1e-8 — which is why rule 12
-    now casts OPERANDS, not products.)
+    (A COMPUTED double like price*(1-disc) cast to decimal can land
+    exactly between two 8-dp decimals, where Spark's HALF_UP on the
+    shortest-repr string and DuckDB's ties-to-even on the binary value
+    disagree on ~6e-4 of rows by ±1e-8 — hence rule 12 casts OPERANDS,
+    not products.)
     """
     col = F.col(col) if isinstance(col, str) else col
     return col.cast("decimal(12,2)")
@@ -64,49 +63,26 @@ def one() -> Column:
 
 
 def money_sum(col: Column, scale: int = 4) -> Column:
-    """Order-independent, cross-engine-EXACT money sum (SURVEY.md §5.3
-    rule 12, respelled in round 16 per the r15 advice audit): ``col``
-    must be a DECIMAL expression built from :func:`money` /
-    :func:`rate` / :func:`one` operands (e.g. ``money("l_extendedprice")
-    * (one() - rate("l_discount"))``).  All arithmetic then happens in
-    decimal — exact on both engines with identical per-row results —
-    and SUM in decimal is associative, so the total is bit-identical
-    regardless of partition order, thread schedule, or engine, at ANY
-    scale.
+    """Order-independent, cross-engine-EXACT money sum (SURVEY.md §5.3 rule
+    12).  ``col`` must be a DECIMAL expression built from :func:`money` /
+    :func:`rate` / :func:`one` operands (e.g. ``money("l_extendedprice") *
+    (one() - rate("l_discount"))``): the operands are 2-dp source data
+    whose double→decimal cast has no ties, every later step is exact, and
+    decimal SUM is associative, so the total is bit-identical across
+    partition order, threads and engines at ANY scale (per-row check:
+    tests/test_properties.py::test_money_decimal_cross_engine_exact).
 
-    The round-15 spelling cast the per-row double PRODUCT to
-    DECIMAL(27,8); the advice audit measured that cast disagreeing
-    between engines on ~6e-4 of rows by ±1e-8 (Spark rounds the
-    shortest-repr decimal string HALF_UP, DuckDB rounds the binary
-    value ties-to-even), so it bought ~6 orders of margin, not
-    exactness.  Operand-decimal arithmetic removes the class: the
-    operands are 2-dp source data whose double→decimal cast has no
-    ties (see :func:`money`), and every later step is exact integer
-    arithmetic.  Verified bit-identical old-vs-new at sf0.001/0.01/0.1
-    on all five rule-12 queries (SCALE.md round-16 ledger) and
-    cross-engine per-row on the full sf0.1 fixture
-    (tests/test_properties.py::test_money_decimal_cross_engine_exact).
+    The final ROUND(…, scale) is engine-identical too: Spark and DuckDB
+    both round decimals half-AWAY from zero (2.5→3, −2.5→−3,
+    0.000050→0.0001).  The cast back to double keeps the compare surface
+    atomic.  DuckDB spelling, e.g.: ``CAST(ROUND(SUM(CAST(x AS
+    DECIMAL(12,2)) * (CAST(1 AS DECIMAL(3,2)) - CAST(d AS
+    DECIMAL(3,2)))), 4) AS DOUBLE)``.
 
-    The final ROUND(…, scale) on the exact decimal sum is also
-    engine-identical: both Spark and DuckDB round decimals half-AWAY
-    from zero (probed: 2.5→3, −2.5→−3, 0.000050→0.0001 on both), and
-    the input is an exact decimal, so no binary-repr ambiguity is left
-    to diverge on.  Cast back to double keeps the compare surface
-    atomic.
-
-    DuckDB spelling (both sides must cast/round identically), e.g.:
-    ``CAST(ROUND(SUM(CAST(x AS DECIMAL(12,2)) * (CAST(1 AS
-    DECIMAL(3,2)) - CAST(d AS DECIMAL(3,2)))), 4) AS DOUBLE)``.
-
-    Defensive widening (review r16): the pre-SUM cast to DECIMAL(27,8)
-    is an EXACT no-op for every rule-12 operand-decimal expression
-    (their per-row types peak at DECIMAL(22,6); ≤19 integer digits and
-    ≤8 fractional fit losslessly), but it means a caller who passes a
-    raw DOUBLE expression — the pre-r16 spelling — still gets
-    order-independent decimal summation (r15 semantics, ~6 orders of
-    margin) instead of silently regressing to partition-order-sensitive
-    double accumulation, the exact class rule 12 exists to eliminate.
-    """
+    The pre-SUM cast to DECIMAL(27,8) is an exact no-op for
+    operand-decimal expressions (at most DECIMAL(22,6) per row), and gives
+    a raw DOUBLE expression order-independent decimal summation (~6 orders
+    of margin) instead of partition-order-sensitive double accumulation."""
     return F.round(F.sum(col.cast("decimal(27,8)")), scale).cast("double")
 
 
@@ -130,9 +106,8 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFram
             # the fixture, and integer float64 sums are EXACT below
             # 2^53 (~9e15 — far past 100 TB's ~3.75e10).  The three
             # price sums are money_sum (§5.3 rule 12): their raw
-            # double sums flipped a 4-dp digit at the round-15 sf≈1
-            # sweep (sum_disc_price …289.7999 vs …289.8); r16 moved
-            # the decimal casts from the product to the operands.
+            # double sums flip a 4-dp digit at sf≈1
+            # (sum_disc_price …289.7999 vs …289.8).
             _r(F.sum("l_quantity")).alias("sum_qty"),
             money_sum(money("l_extendedprice")).alias("sum_base_price"),
             money_sum(
@@ -149,14 +124,6 @@ def pricing_summary(lineitem: DataFrame, cutoff: str = "1998-09-02") -> DataFram
             F.count(F.lit(1)).alias("count_order"),
         )
         .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def distinct_per_key(df: DataFrame, key: str | Column, value: str | Column) -> DataFrame:
-    """Exact count-distinct per key (one shuffle; Spark expands distinct
-    aggregates into a two-phase plan with partial aggregation)."""
-    return df.groupBy(key).agg(
-        F.countDistinct(value).alias("n_distinct"), F.count(F.lit(1)).alias("n_rows")
     )
 
 
@@ -268,8 +235,8 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """total_price is money_sum (§5.3 rule 12): the rollup's grand
     total sums EVERY order — ~3.75e11 at sf≈1, where double
-    summation-order noise flipped the 4-dp digit in the round-15
-    sweep (…585.5996 vs …585.6007)."""
+    summation-order noise flips the 4-dp digit (…585.5996 vs
+    …585.6007)."""
     t = load_tables(spark, sf_dir)
     joined = (
         t["orders"]
@@ -425,7 +392,7 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.describe / df.summary surface (string-typed output by design).
 
-    Embedded self-check (VERDICT r6 #5): summary() emits stringly cells
+    Embedded self-check: summary() emits stringly cells
     no oracle can hash, so a rows-only green would otherwise attest
     only that a job ran.  The exact cells — count, mean, min, max; the
     percentile rows are approximate by contract — are parsed back and
@@ -483,37 +450,27 @@ _QUANTILE_BYTES_PER_ENTRY = 64
 def exact_quantile_guard(
     spark: SparkSession, df: DataFrame, cols: list[str] | dict[str, int]
 ) -> set[str]:
-    """Columns whose exact percentile state would OOM the JVM
-    (VERDICT r15 #2, r16 #7).
+    """Columns whose exact percentile state would OOM the JVM.
 
-    ``percentile()``/``median()`` accumulate an open hash map of every
-    distinct value SEEN BY EACH TASK, so concurrent single-JVM state is
-    ~``min(distinct × parallelism, total_rows) × 64 B`` — each task's
-    map is bounded both by the global distinct count and by the rows it
-    scans.  Round-16 calibration against the ledgered r15 OOM (SCALE.md
-    sf≈1 sweep): lineitem prices are ~97 % unique (583 k distinct at
-    sf0.1), so at 6 M rows / local[8] the estimate is
-    min(583 k × 8, 6 M) × 64 ≈ 300 MB of concurrent map state — which
-    killed a 1 g JVM with a raw ``java.lang.OutOfMemoryError`` — while
-    sf0.1's 600 k rows estimate ~38 MB and run fine on the same heap.
-    (A distinct-count cap alone misses this: the distinct count is the
-    SAME at both scales; the rows-per-task term is what grows.)
+    ``percentile()``/``median()`` keep a hash map of every distinct value
+    SEEN BY EACH TASK, so concurrent single-JVM state is ~``min(distinct ×
+    parallelism, total_rows) × 64 B``.  Calibration: lineitem prices are
+    ~97 % unique, so at 6 M rows / local[8] the estimate is
+    min(583 k × 8, 6 M) × 64 ≈ 300 MB — which killed a 1 g JVM — while
+    sf0.1's 600 k rows estimate ~38 MB and run fine.  (A distinct-count
+    cap alone misses this: the distinct count is the SAME at both scales;
+    the rows-per-task term grows.)
 
-    The guard spends ONE cheap aggregate (count + HLL
-    approx_count_distinct per column, fixed-size sketch state at any
-    input size) and returns the columns whose estimate exceeds
-    ``spark.analytics.quantile.maxLocalStateBytes`` (default 256 MB ≈
-    the OOM cliff of a small 1 g executor with the merge phase's
-    transient doubling; size it to roughly a quarter of executor heap).
-    The estimate models ONE JVM under local-mode assumptions; on a
-    multi-executor cluster state spreads across JVMs, so the default is
-    conservative there — raise the cap with executor memory.  Callers
-    compute over-cap columns' exact answer via
-    :func:`binned_exact_percentiles` (bounded-state range binning);
-    an empty set means under cap: use the native exact path.
-    """
+    ONE cheap aggregate (count + HLL approx_count_distinct per column)
+    feeds the estimate; columns over
+    ``spark.analytics.quantile.maxLocalStateBytes`` (default 256 MB ≈ the
+    OOM cliff of a 1 g executor with the merge phase's transient doubling;
+    about a quarter of executor heap) are returned.  The estimate models
+    ONE JVM, so on a multi-executor cluster the default is conservative.
+    Callers compute over-cap columns via :func:`binned_exact_percentiles`;
+    an empty set means the native exact path is safe."""
     # cols maps column -> number of exact-percentile EXPRESSIONS over
-    # it (review r16: Spark's Percentile/Median buffers are per
+    # it (Spark's Percentile/Median buffers are per
     # expression, not shared per column — three percentiles over one
     # column hold three maps of the same values).  A plain list means
     # one expression each.
@@ -541,53 +498,32 @@ def binned_exact_percentiles(
     leaf_limit: int = 65536,
     max_rounds: int = 40,
 ) -> dict[tuple, dict[float, float | None]]:
-    """EXACT grouped percentiles with BOUNDED state at any input size —
-    the compute-instead-of-refuse path behind :func:`exact_quantile_guard`
-    (VERDICT r16 #7: the r15 OOM shape should return the exact median,
-    not a refusal).
+    """EXACT grouped percentiles with BOUNDED state at any input size — the
+    over-cap path behind :func:`exact_quantile_guard`.  Iterative RANGE
+    BINNING (distributed selection, the shape of t-digest's exact
+    fallback):
 
-    Spark's native ``percentile()`` holds every distinct value per task
-    in a hash map — O(distinct) state, the thing that OOM'd a 1 g heap
-    at 6 M near-unique rows (SCALE.md r15).  This is the classic
-    alternative: iterative RANGE BINNING (the distributed
-    selection-problem algorithm — e.g. Blum et al.'s selection bounds
-    carried to histograms; same shape as t-digest's exact fallback):
-
-    1. one aggregate per round bins each search unit's candidate
-       interval into ``bins`` equal-width ranges — per-task state is a
-       fixed ``units x bins`` count array regardless of input size
-       (map-side combinable ordinary groupBy);
-    2. the driver walks the (bounded, <= units x bins rows) histogram
-       to find the ONE bin holding the unit's target rank, accumulates
-       the exact count below it, and narrows the interval to that
-       bin's OBSERVED [min, max] — duplicates collapse the interval in
-       one step;
-    3. when a unit's candidate count is <= ``leaf_limit``, ONE final
-       filtered pass collects just those candidate values (bounded by
-       units x leaf_limit, the only value-sized collect) and the order
+    1. one aggregate per round bins each search unit's candidate interval
+       into ``bins`` equal-width ranges — per-task state is a fixed
+       ``units x bins`` count array (map-side combinable);
+    2. the driver walks the (<= units x bins rows) histogram to the ONE
+       bin holding the unit's target rank, accumulates the count below it,
+       and narrows the interval to that bin's OBSERVED [min, max];
+    3. once a unit has <= ``leaf_limit`` candidates, ONE filtered pass
+       collects them (the only value-sized collect) and the order
        statistic is read off the sorted leaf.
 
-    A search unit hunts a SINGLE order statistic k (review r17: units
-    covering a prob's two bracketing ranks at once could stall on an
-    unshrinkable interval — the ranks straddling nearly the whole
-    distribution — and previously fell back to an UNBOUNDED leaf
-    collect, breaking the never-OOM contract).  A single-rank unit's
-    covering range is exactly one bin, whose observed [min, max] is at
-    most ~1/bins of the interval, so every round either resolves the
-    unit (bin min == max) or shrinks its interval >= bins-fold: rounds
-    <= ceil(log_bins(span / ULP)) ~ 6 at bins=4096, no stall path
-    exists, and the leaf collect is genuinely <= leaf_limit.  The one
-    degenerate case — the interval so narrow that the bin width
-    UNDERFLOWS to 0.0 — holds at most ~bins representable doubles, and
-    resolves through an exact per-VALUE histogram (bounded by the
-    same arithmetic).  Group-key joins are null-safe (NULL is an
-    ordinary SQL group).
+    A unit hunts a SINGLE order statistic (a unit covering two bracketing
+    ranks can stall on an interval the ranks straddle).  Its range is one
+    bin, at most ~1/bins of the interval, so every round resolves the unit
+    or shrinks it >= bins-fold: rounds <= ceil(log_bins(span / ULP)) ~ 6
+    at bins=4096.  An interval so narrow that the bin width UNDERFLOWS to
+    0.0 holds at most ~bins doubles and resolves through an exact
+    per-VALUE histogram.  Group keys join null-safely.
 
-    Returns ``{group_key_tuple: {prob: value}}`` for EVERY group in
-    ``df`` (including all-NULL-value groups, which yield ``None`` —
-    matching native percentile's row set) with the same interpolation
-    as ``percentile_cont``.  NULLs are ignored per SQL semantics.
-    """
+    Returns ``{group_key_tuple: {prob: value}}`` for EVERY group
+    (all-NULL-value groups yield ``None``, matching native percentile)
+    with ``percentile_cont`` interpolation; NULLs are ignored."""
     import math
 
     spark = df.sparkSession
@@ -790,8 +726,8 @@ def q_agg_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     state); :func:`exact_quantile_guard` estimates that state first
     and, past the conf cap, the query COMPUTES the same exact answer
     through :func:`binned_exact_percentiles` (bounded-state iterative
-    range binning) instead of OOMing (VERDICT r15 #2 / r16 #7).  The
-    100 TB cheap default remains `agg_approx_quantile` below."""
+    range binning) instead of OOMing.  The 100 TB cheap default is
+    `agg_approx_quantile` below."""
     t = load_tables(spark, sf_dir)
     df = t["lineitem"]
     # 3 exact-percentile expressions over l_quantity (median + two
@@ -914,8 +850,8 @@ def q_agg_freqitems(spark: SparkSession, sf_dir: str) -> DataFrame:
     The raw output is one row of ARRAY columns whose element order is
     a nondeterministic artifact of partial-merge order, so the declared
     boundary serializes each array as ``to_json(sort_array(...))`` —
-    SURVEY §5.3 rule 11; the r6 driver canonicalizer crashed on the
-    bare list cells (CORRECTNESS_r06, unhashable type: 'list')."""
+    SURVEY §5.3 rule 11 (a driver canonicalizer cannot hash bare list
+    cells)."""
     t = load_tables(spark, sf_dir)
     fi = t["lineitem"].freqItems(["l_quantity", "l_returnflag"], support=0.1)
     return fi.select(
@@ -1125,12 +1061,12 @@ def q_agg_argmax(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Linear-regression aggregates (regr_slope/intercept/r2/count):
-    price-vs-quantity fit per return flag in ONE grouped pass — the
+    """Linear-regression aggregates (regr_slope, regr_intercept,
+    regr_r2, regr_count): price-vs-quantity fit per return flag in ONE grouped pass — the
     moment sums partial-aggregate map-side like any sum/count, so the
     fit costs the same shuffle as a plain groupBy at any scale.
     Both engines define slope = covar_pop/var_pop; results rounded
-    (4 dp; r2 at 6 dp) under the §5.3 float discipline."""
+    (4 dp; regr_r2 at 6 dp) under the §5.3 float discipline."""
     t = load_tables(spark, sf_dir)
     y, x = F.col("l_extendedprice"), F.col("l_quantity")
     return (
@@ -1234,10 +1170,10 @@ def q_agg_product(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin SUM(LN x) — compounding factors per group (the
     compound-growth / survival-probability pattern).  Log-space is the
     100 TB-safe form (sums partial-aggregate and never under/overflow)
-    and is REPORTED in log-space: exponentiating first made the value's
-    magnitude grow with the row count, so a fixed decimal rounding
-    could no longer absorb summation-order ulps (the sf0.1 sweep caught
-    a 2-ulp mismatch at 9.1e17).  The bounded product() column rounds
+    and is REPORTED in log-space: exponentiating first makes the value's
+    magnitude grow with the row count, so a fixed decimal rounding can
+    no longer absorb summation-order ulps (a 2-ulp mismatch at 9.1e17
+    at sf0.1).  The bounded product() column rounds
     fine at any scale (≤1 by construction)."""
     t = load_tables(spark, sf_dir)
     keep = 1.0 - F.col("l_discount")
@@ -1280,9 +1216,9 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a data-dependent histogram would need; the clamp keeps outliers in
     the last bucket instead of an unbounded bucket id space.
 
-    total_price is money_sum (§5.3 rule 12): the round-15 sf≈1 margin
-    audit measured the hottest bucket at 7.1e10 — within 1.5 decimal
-    orders of summation noise crossing the 2-dp grid.
+    total_price is money_sum (§5.3 rule 12): at sf≈1 the hottest bucket
+    measures 7.1e10 — within 1.5 decimal orders of summation noise
+    crossing the 2-dp grid.
     """
     t = load_tables(spark, sf_dir)
     bucket = F.least(F.floor(F.col("o_totalprice") / 50000.0), F.lit(11)).cast(

@@ -6,8 +6,8 @@ strings operators together. Correctness of each piece is covered by
 the per-operator queries; these pin the interactions (join reordering,
 partial aggregation under a join, TakeOrderedAndProject on top).
 
-Scale posture: both queries follow the star-join discipline
-(SCALE.md): dimension filters applied before the join so pushdown
+Scale posture: the queries follow the star-join discipline:
+dimension filters applied before the join so pushdown
 shrinks the build sides, fact-side shuffles only on the join keys,
 final top-k is TakeOrderedAndProject (no global sort materialization).
 """
@@ -346,12 +346,11 @@ def q_query_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst pushes each half into the respective broadcast build.
 
     The pair NATION_3/NATION_8 is load-bearing for attestation: the
-    sf0.001 fixture has only 10 suppliers spread over 10 nations, so
-    the original NATION_1/NATION_2 pair had NO supplier there and the
-    sf0.001 differential test compared two vacuously-empty results
-    (found by the round-10 all-SF vacuity sweep).  NATION_3 and
-    NATION_8 both have suppliers at every fixture SF; the result is
-    14 (supp, cust, year) groups at sf0.001, sf0.01 AND sf0.1.
+    sf0.001 fixture has only 10 suppliers spread over 10 nations, and
+    a pair without a supplier there compares two vacuously-empty
+    results.  NATION_3 and NATION_8 both have suppliers at every
+    fixture SF; the result is 14 (supp, cust, year) groups at sf0.001,
+    sf0.01 AND sf0.1.
     """
     t = load_tables(spark, sf_dir)
     n1 = t["nation"].select(
@@ -890,12 +889,11 @@ def q_query_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     first, so a last-bit summation-order difference between engines
     can never flip a borderline part in or out.
 
-    Threshold and nation are load-bearing for attestation (found by
-    the round-10 all-SF vacuity sweep).  The original fixed fraction
-    of the TOTAL (0.002×SUM) is the Q11 trap real TPC-H avoids by
-    scaling its fraction 1/SF: part count grows with SF, so at sf0.1
-    the max per-part share is 0.0004 and the result was EMPTY — every
-    sf0.1 sweep compared nothing.  2×AVG is scale-invariant in the
+    Threshold and nation are load-bearing for attestation.  A fixed
+    fraction of the TOTAL (0.002×SUM) is the Q11 trap real TPC-H avoids
+    by scaling its fraction 1/SF: part count grows with SF, so at sf0.1
+    the max per-part share is 0.0004 and the result is EMPTY.  2×AVG is
+    scale-invariant in the
     part count (selects the distribution's upper tail: 20/195 parts
     at sf0.001, 155/1,204 at sf0.01, 1,627/13,437 at sf0.1).  And
     NATION_7 has no supplier in the 10-supplier sf0.001 fixture;

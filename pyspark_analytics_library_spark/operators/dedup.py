@@ -48,18 +48,15 @@ def dedup_exact_keep_min(
     duplicate group) — ``dropDuplicates`` keeps an arbitrary row, which
     can never parity-check across engines.
 
-    Implemented as ONE hash aggregate (min + min_by + count), not a
-    window: the aggregate gets map-side partial aggregation, so at
-    100 TB only one pre-combined row per group per map task reaches the
-    shuffle, where the window formulation shuffles and sorts EVERY row.
-    ``min_by`` carries the keeper's non-key columns (deterministic here
-    because ``order_col`` is unique per group, same contract as the
-    row_number formulation).
+    ONE hash aggregate (min + min_by + count), not a window: map-side
+    partial aggregation sends one pre-combined row per group per map task
+    to the shuffle, where a window shuffles and sorts EVERY row.
+    ``min_by`` carries the keeper's other columns (deterministic because
+    ``order_col`` is unique per group).
 
-    ``group_cols`` takes column NAMES (one or a list — the helper must
-    compute the complement column set, which Column expressions cannot
-    name); a bare string is one column, not characters.
-    """
+    ``group_cols`` takes column NAMES (the complement column set must be
+    computed, which Column expressions cannot name); a bare string is one
+    column."""
     if isinstance(group_cols, str):
         group_cols = [group_cols]
     if isinstance(group_cols, Column) or any(
@@ -94,44 +91,33 @@ def minhash_lsh_pairs(
     rows_per_band: int | None = None,
     verify_threshold: float = 0.4,
 ) -> DataFrame:
-    """Near-duplicate pairs via shingle → minhash → band → bucket-join.
+    """Near-duplicate pairs via shingle → minhash → band → bucket-join,
+    deterministic (xxhash64 with fixed per-hash salts):
 
-    Fully deterministic (xxhash64 with fixed per-hash salts).  Pipeline:
     1. distinct 3-word shingles per doc (JVM array expressions);
-    2. per doc, signature[i] = array_min over xxhash64(salt_i, shingle)
-       — a pure projection, no explode/groupBy shuffle (round 19);
+    2. signature[i] = array_min over xxhash64(salt_i, shingle) — a
+       per-row projection, no explode/groupBy shuffle;
     3. band key = xxhash64 over each band's rows; explode (band_id, key);
     4. equi-join docs sharing a (band_id, key) bucket → candidates;
     5. exact-Jaccard verification of candidates only.
-    The bucket self-join and both shingle-array verify joins carry
-    explicit merge hints: all sides are text-exploded and corpus-sized,
-    the class the static planner mis-broadcasts off compressed file
-    estimates (see ngram_jaccard_pairs for the measured failure).
-    At 100 TB: no O(n²) stage exists; the bucket join shuffles each doc
-    ``bands`` times; skew from degenerate buckets is AQE-split.
 
-    Choosing (bands, rows_per_band) — VERDICT r12 #2: a pair with true
-    Jaccard ``s`` becomes a candidate with probability
-    ``1 − (1 − s^r)^b`` (r = rows_per_band, b = bands), an S-curve with
-    inflection near ``(1/b)^(1/r)``.  More bands at fixed r → recall
-    is monotonically non-decreasing (each band is one more independent
-    chance to collide; tests/test_properties.py pins this), at the cost
-    of ``b``× signature/bucket rows.  Deeper bands (larger r) sharpen
-    the curve — fewer false candidates to verify — but push the
-    inflection up.  For a target false-negative rate ``fn`` at
-    threshold τ, pick the smallest b with ``(1 − τ^r)^b ≤ fn``.  The
-    MEASURED recall curve for this corpus (SCALE.md round-13: sf0.1 +
-    a 500 k-doc staging, against the unblocked exact-Jaccard truth) —
-    the defaults b=4, r=2 sit at the curve's knee for τ=0.4; recall
-    near τ is content-hash-sensitive (the r12 probe: borderline pairs
-    flip with the text's hash draw), so treat single-pair differences
-    near the threshold as expected, not as corruption.
+    The bucket self-join and both verify joins are merge-hinted: all sides
+    are text-exploded and corpus-sized (see ngram_jaccard_pairs).  No
+    O(n²) stage exists; the bucket join shuffles each doc ``bands`` times.
 
-    Pass EITHER ``rows_per_band`` (then num_hashes = bands × r exactly)
-    or a ``num_hashes`` divisible by ``bands`` (the legacy spelling —
-    a non-divisible count would silently truncate the signature, so it
-    raises instead).
-    """
+    Choosing (bands b, rows_per_band r): a pair with Jaccard ``s`` becomes
+    a candidate with probability ``1 − (1 − s^r)^b``, an S-curve with
+    inflection near ``(1/b)^(1/r)``.  More bands at fixed r never lower
+    recall (tests/test_properties.py pins this) but cost ``b``× rows;
+    larger r sharpens the curve but moves the inflection up.  For a
+    false-negative rate ``fn`` at threshold τ, pick the smallest b with
+    ``(1 − τ^r)^b ≤ fn``.  The defaults b=4, r=2 sit at the measured
+    recall knee for τ=0.4 on this corpus; borderline pairs flip with the
+    text's hash draw, so single-pair differences near τ are expected.
+
+    Pass EITHER ``rows_per_band`` (num_hashes = bands × r) or a
+    ``num_hashes`` divisible by ``bands`` (a non-divisible count would
+    silently truncate the signature, so it raises)."""
     if rows_per_band is not None:
         num_hashes = bands * rows_per_band
     elif num_hashes % bands != 0:
@@ -146,16 +132,12 @@ def minhash_lsh_pairs(
     ).filter(F.size("shingles") > 0)
 
     # Signature via array_min(transform(...)) — a pure per-row
-    # projection.  Round-19 optimization (guide §2.4 "remove shuffles
-    # outright"): the previous explode + groupBy(doc) formulation
-    # shuffled the EXPLODED shingle table (corpus × ~shingles-per-doc
-    # rows — the largest exchange in the whole pipeline at corpus
-    # scale) just to take per-doc minima that are computable inside
-    # the row.  Same hashes, same minima, proven row-identical and
-    # measured ~20 % faster end-to-end even at bench scale
-    # (OPTIMIZATION_r19.md #3).  The per-salt closure is a named
-    # factory: a two-parameter lambda would be called as
-    # (element, index) by the higher-order-function binder.
+    # projection: an explode + groupBy(doc) would shuffle the EXPLODED
+    # shingle table (corpus × shingles-per-doc rows, the pipeline's
+    # largest exchange) for per-doc minima computable inside the row.
+    # The per-salt closure is a named factory: a two-parameter lambda
+    # would be called as (element, index) by the higher-order-function
+    # binder.
     def _salted(i: int):
         return lambda s: F.xxhash64(F.lit(i), s)
 
@@ -319,11 +301,10 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("dedup_ngram_jaccard_prefixed", oracle=_NGRAM_JACCARD_ORACLE)
 def q_dedup_ngram_jaccard_prefixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``prefix_filter=True`` web-scale path of
-    :func:`ngram_jaccard_pairs` as its own declared query (VERDICT r5
-    #5): prefix filtering is lossless, so it shares the unblocked
-    oracle — a driver hash-green row attests that the filter-then-
-    verify split returns the byte-identical pair set, not just that a
-    property test said so at fixture scale."""
+    :func:`ngram_jaccard_pairs` as its own declared query: prefix
+    filtering is lossless, so it shares the unblocked oracle, and a
+    driver hash-green row attests that the filter-then-verify split
+    returns the byte-identical pair set."""
     t = load_tables(spark, sf_dir)
     return ngram_jaccard_pairs(t["documents"], prefix_filter=True)
 
@@ -331,48 +312,33 @@ def q_dedup_ngram_jaccard_prefixed(spark: SparkSession, sf_dir: str) -> DataFram
 def ngram_jaccard_pairs(
     docs: DataFrame, tau: float = 0.2, prefix_filter: bool = False
 ) -> DataFrame:
-    """All same-language doc pairs with 3-shingle Jaccard ≥ ``tau``, as
-    a distributed set-similarity join: explode each document's distinct
-    shingles, equi-join on (lang, shingle), and COUNT the matches per
-    (id_a, id_b) — that count IS |A∩B| exactly, so no pair ever
-    carries (or intersects) the shingle arrays themselves.  Sizes join
-    back afterward for the inclusion-exclusion denominator.
+    """All same-language doc pairs with 3-shingle Jaccard ≥ ``tau``, as a
+    set-similarity join: explode each document's distinct shingles,
+    equi-join on (lang, shingle), and COUNT matches per (id_a, id_b) —
+    exactly |A∩B|, so no pair carries the shingle arrays.  Sizes join back
+    for the inclusion-exclusion denominator.
 
-    Why this shape: any pair with J ≥ tau shares ≥ 1 shingle, so the
-    shingle equi-join is SOUND blocking with the selectivity of the
-    shingle vocabulary — candidate volume is Σ_s C(df_s, 2), a function
-    of how often a shingle repeats across docs, not |docs|² per
-    language.  (The previous log₅ shingle-count bucketing collapsed to
-    ~2 distinct buckets on real length distributions, making it
-    lang-only blocking: 107 s at sf0.1; this shape runs the same query
-    in a few seconds and shuffles id pairs, not arrays.)
+    Any pair with J ≥ tau shares a shingle, so the join is SOUND blocking:
+    candidate volume is Σ_s C(df_s, 2), set by how often shingles repeat,
+    not |docs|² per language.  (Bucketing by shingle count collapses to
+    ~2 buckets on real length distributions — 107 s at sf0.1.)
 
-    ``prefix_filter=True`` is the web-scale path for the residual risk
-    of ubiquitous hot shingles ("of the and") fattening Σ C(df_s, 2):
-    classic prefix filtering orders each document's shingles by
-    ascending global document frequency (ties by shingle text — a total
-    order, so every doc agrees) and joins only on each doc's first
-    n − ⌈τ·n⌉ + 1 of them.  Any τ-qualifying pair must collide inside
-    both prefixes under a shared total order, so the candidate set is a
-    superset of the answer; the hottest shingles sort LAST and drop out
-    of the join entirely.  Survivor-sized candidates are then verified
-    exactly via array_intersect on the full shingle sets (JVM-side,
-    candidate-volume work — the standard filter-then-verify split).
+    ``prefix_filter=True`` handles ubiquitous hot shingles fattening
+    Σ C(df_s, 2): each document's shingles are ordered by ascending global
+    document frequency (ties by text — a total order every doc agrees on)
+    and only the first n − ⌈τ·n⌉ + 1 are joined.  Any τ-qualifying pair
+    collides inside both prefixes, so candidates are a superset of the
+    answer, and the hottest shingles drop out of the join.  Candidates are
+    verified exactly via array_intersect on the full shingle sets.
 
-    The threshold filters the UNROUNDED ratio (identical IEEE division
-    on both engines); only the output column is rounded.
+    The threshold filters the UNROUNDED ratio (identical IEEE division on
+    both engines); only the output is rounded.
 
-    Every join below carries an explicit ``merge`` hint: all sides —
-    posting lists, the shingle-df vocabulary, candidates, and the
-    full shingle-array table — are CORPUS-sized, and Catalyst's static
-    planner estimates them from the pre-explode parquet file size,
-    which text compression can understate by orders of magnitude.
-    The round-9 sf≈10 probe (1 M docs in a 4.5 MB file — 100×
-    -duplicated text) demonstrated the failure: every join planned
-    BroadcastHashJoin and the build died with
-    notEnoughMemoryToBuildAndBroadcastTable.  A corpus-sized side must
-    never be statically broadcast; sort-merge is the scale-safe
-    strategy, and at fixture scale the cost is milliseconds."""
+    Every join is merge-hinted: all sides are CORPUS-sized, and the static
+    planner estimates them from the pre-explode file size, which text
+    compression understates by orders of magnitude — at 1 M docs in a
+    4.5 MB file every join planned BroadcastHashJoin and died with
+    notEnoughMemoryToBuildAndBroadcastTable."""
     sh = docs.select("doc_id", "lang", word_shingles(F.col("text")).alias("sh"))
     posts = sh.select(
         "doc_id", "lang", F.size("sh").alias("n"), F.explode("sh").alias("s")
@@ -517,79 +483,45 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
 def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iters: int = 30
 ) -> DataFrame:
-    """Min-label connected components over (src, dst) edges: every
-    vertex ends up labeled with the smallest vertex id in its
-    component — the step that turns near-dup PAIRS into dedup GROUPS
-    (pick one keeper per component).
+    """Min-label connected components over (src, dst) edges: every vertex is
+    labeled with the smallest vertex id in its component — the step that
+    turns near-dup PAIRS into dedup GROUPS.
 
-    Vertex/edge contract (since round 19; made explicit per ADVICE
-    r19): edge endpoints need NOT appear in ``vertices`` — labels
-    initialize from the edge-incident endpoint set on both dispatch
-    paths, so an out-of-vertex endpoint participates in merging and
-    its id can become a component's label (it just never appears as an
-    output row, since the output is keyed on ``vertices``).  Callers
-    wanting the pre-r19 "edges outside the vertex set never propagate"
-    behavior must semi-join their edges to the vertex set first.
-    NULL endpoints are no-ops (a NULL never equi-joins), and every
-    vertex absent from any edge labels itself.
+    Edge endpoints need NOT appear in ``vertices``: labels start from the
+    edge-incident endpoints on both dispatch paths, so an out-of-vertex
+    endpoint takes part in merging and can become a label (it is never an
+    output row; the output is keyed on ``vertices``).  Semi-join edges to
+    the vertex set first to stop that.  NULL endpoints are no-ops, and a
+    vertex on no edge labels itself.
 
-    Algorithm: two-phase hash-to-min.  Each round (1) takes the min
-    label over each vertex's neighborhood, then (2) takes the min of
-    that over each CURRENT LABEL GROUP and joins it back through both
-    the old and the new label.  Phase 2 is what makes the round count
-    O(log n): labels form shrinking star clusters whose mins merge
-    pairwise per round regardless of how vertex ids are laid out.
-    (The previous formulation — pointer doubling, label <- label(label)
-    — is only logarithmic when ids increase along paths; on the real
-    fixture graph, whose doc_ids are RANDOM along the n_chars chain,
-    it degraded to near-linear rounds: >20 rounds at sf0.1 where this
-    scheme takes 8, and a 500-node chain took 84-342 rounds in
-    simulation vs ≤10 for group-min.)
+    Dispatch:
 
-    Every round materializes the label table to an app-and-run-scoped
-    scratch parquet (see _iteration_scratch_root) and re-reads it.  This does TWO jobs ``localCheckpoint``
-    does not: it cuts the logical plan (cache() truncates recompute,
-    NOT the plan tree) AND it resets Catalyst's size statistics —
-    LogicalRDD carries the ORIGIN plan's estimated stats, and a
-    join's size estimate is the product of its children's, so the
-    carried estimate compounds exponentially across rounds until the
-    driver OOMs inside the BigInteger stats arithmetic (observed at
-    sf0.1, round ~20: 30 s planning per round, then heap exhaustion).
-    A cluster run writes the same per-round table to durable storage
-    — this is exactly GraphFrames' periodic-checkpoint discipline.
-    The convergence check is one driver-side scalar per round (the
-    same pattern as any Pregel-style loop).
-
-    Round-19 optimization (guide §1.2 "the distributed algorithm", §5
-    guarded-driver discipline), measured shapes in OPTIMIZATION_r19.md:
-
-    - **Driver union-find dispatch.**  When the edge set fits
+    - **Driver union-find** when the edge set fits
       ``spark.analytics.cc.driverUnionFindMaxEdges`` (default 500 000 —
-      ≲ tens of MB of id pairs on the driver, sub-second union-find),
-      the pair list is collected once (``limit(cap+1)`` — one early-
-      exiting pass decides the dispatch AND delivers the data) and the
-      closure is computed driver-side, exactly like the dense-matmul
-      branch of ``graph.triangle_census`` and ``similarity.build_index``
-      collect under their caps.  This removes the per-round job latency
-      entirely for small candidate graphs (the common LSH output: a few
-      hundred to a few hundred thousand pairs even on large corpora).
-      Set the cap to ``0`` to force the distributed loop.  Above-cap
-      cost, stated honestly (ADVICE r19): ``CollectLimit`` early-exits
-      only when the edge plan's FINAL stage is limit-pushable — when
-      the plan ends in a shuffle (the usual LSH candidate join), the
-      probe executes that plan essentially in full before the loop
-      materializes it AGAIN, so operators of large fuzzy pipelines
-      whose edge sets are known to exceed the cap should set the cap
-      to ``0`` and skip the probe.
-    - **Singleton bypass.**  The distributed loop now iterates over the
-      EDGE-INCIDENT vertices only — every other vertex's component is
-      itself by definition, so carrying them through log(diameter)
-      rounds of joins shuffled |V| rows per round for zero information
-      (guide §2.3 "shuffle fewer bytes").  Singletons rejoin via one
-      left join + coalesce at the end.  On a dedup workload where 1-10 %
-      of documents have any candidate pair, the per-round shuffle drops
-      10-100×.
-    """
+      tens of MB of id pairs, sub-second union-find): one
+      ``limit(cap+1)`` collect decides the dispatch AND delivers the data,
+      like the capped driver branches of ``graph.triangle_census`` and
+      ``similarity.build_index``.  Set the cap to ``0`` to force the loop.
+      ``CollectLimit`` early-exits only when the edge plan's final stage
+      is limit-pushable; a plan ending in a shuffle (the usual LSH
+      candidate join) runs in full for the probe and again in the loop, so
+      pipelines whose edge sets exceed the cap should set it to ``0``.
+    - **Distributed loop**: two-phase hash-to-min over the EDGE-INCIDENT
+      vertices only (singletons rejoin by one left join + coalesce; with
+      1-10 % of documents on any candidate pair, each round shuffles
+      10-100× less).  Each round (1) takes the min label over each
+      vertex's neighborhood, then (2) the min of that over each CURRENT
+      LABEL GROUP, joined back through the old and the new label; phase 2
+      makes the round count O(log n) however ids are laid out (pointer
+      doubling takes >20 rounds at sf0.1 on the fixture graph, this 8).
+
+    Every round writes the label table to app-and-run-scoped scratch
+    parquet (see _iteration_scratch_root) and re-reads it.  Unlike
+    ``localCheckpoint`` this cuts the plan AND resets Catalyst's size
+    statistics: LogicalRDD carries the origin plan's estimate, and join
+    estimates multiply, so the carried estimate compounds until the driver
+    OOMs in the BigInteger stats arithmetic (seen at sf0.1 after ~20
+    rounds).  This is GraphFrames' periodic-checkpoint discipline."""
     spark = edges.sparkSession
     e2 = edges.select("src", "dst")
     uf_cap = conf.get(spark, "spark.analytics.cc.driverUnionFindMaxEdges")
@@ -599,12 +531,10 @@ def connected_components(
             return _cc_driver_union_find(
                 spark, head, vertices, e2.schema["src"].dataType
             )
-    # Symmetrize by a row-local explode, NOT a union of two branches
-    # (round 20, guide §2.4): a union references ``e2`` twice, so the
-    # sym materialization job executed the CALLER'S edge-generation
-    # plan — here a self-join, in the fuzzy pipelines a full LSH
-    # candidate stage — twice (plan: 7 source scans → 4; measured
-    # −30 % on the sym build at sf0.1; rows proven identical).
+    # Symmetrize by a row-local explode, NOT a union of two branches: a
+    # union references ``e2`` twice, so the sym materialization job
+    # would execute the CALLER'S edge-generation plan (in the fuzzy
+    # pipelines a full LSH candidate stage) twice.
     sym = e2.select(
         F.explode(
             F.array(
@@ -725,51 +655,38 @@ def _fs_delete(spark: SparkSession, path: str) -> None:
 
 
 def _cc_checkpoint(df: DataFrame, scratch_root: str, round_no: int) -> DataFrame:
-    """Materialize a loop frame to scratch parquet and re-read it —
-    cuts BOTH the logical plan and the carried size statistics (see
-    connected_components docstring).  Rolls the prior round's files off
-    via the Hadoop FS API (so the delete is real on remote scratchDirs
-    too); only the latest round is ever on disk, and the loop deletes
-    everything except the FINAL round's files — those back the returned
-    DataFrame and are reclaimed by :func:`reclaim_iteration_scratch`
-    (the documented per-app pruning helper), by the caller clearing the
-    app-scoped scratch dir, or locally by the OS tempdir cleaner.
+    """Materialize a loop frame to scratch parquet and re-read it, cutting
+    the plan and the carried size statistics (see connected_components).
+    Rolls the prior round's files off via the Hadoop FS API, so the delete
+    is real on remote scratchDirs too.  The FINAL round's files back the
+    returned DataFrame; :func:`reclaim_iteration_scratch`, clearing the
+    app-scoped scratch dir, or the OS tempdir cleaner reclaim them.
 
-    Writes are coalesced to a few files: the label table is
-    vertex-count-sized and every downstream round re-reads it whole, so
-    shuffle-partition-many tiny files would pay per-file open/commit
-    cost × rounds for zero parallelism benefit.  (coalesce, not
-    repartition — no extra shuffle; a billion-vertex cluster run sizes
-    this up with the rest of the session's partitioning.)"""
+    Writes are coalesced to a few files: the vertex-count-sized label
+    table is re-read whole every round, so many tiny files would pay
+    per-file open/commit cost × rounds for no parallelism."""
     path = os.path.join(scratch_root, f"round_{round_no}")
     df.coalesce(4).write.mode("overwrite").parquet(path)
     _fs_delete(df.sparkSession, os.path.join(scratch_root, f"round_{round_no - 1}"))
     # The written schema is df's own — passing it skips the re-read's
     # footer-based schema inference (~70 ms of driver work per reader
-    # build, ~log(diameter) builds per loop; measured round 20).
+    # build, ~log(diameter) builds per loop).
     return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def _iteration_scratch_root(spark: SparkSession) -> str:
-    """Durable scratch base for iterative materialization, scoped by
-    the cluster-unique Spark application id (NOT the driver pid: pids
-    collide across hosts and containerized drivers are routinely pid 1,
-    so two apps sharing one scratchDir URI would overwrite each other's
-    round files).
+    """Durable scratch base for iterative materialization, scoped by the
+    Spark application id (NOT the driver pid: pids collide across hosts
+    and containerized drivers are routinely pid 1) plus a per-call uuid.
 
-    Resolution order (VERDICT r4 "what's wrong" #1 — a driver-local
-    tempdir is only correct when driver and executors share a
-    filesystem, i.e. local masters):
+    Resolution order (a driver-local tempdir is only correct when driver
+    and executors share a filesystem, i.e. local masters):
 
-    1. ``spark.analytics.scratchDir`` conf — any Hadoop-visible URI
-       (hdfs://, s3a://, a shared mount); used verbatim when set.
-    2. local[*] master — the OS tempdir (single machine: executors and
-       driver share it; the tempdir cleaner reclaims leftovers).
-    3. cluster master — ``sparkContext.getCheckpointDir()`` if the
-       application already configured one, else raise eagerly: silently
-       writing executor-unreachable local paths would corrupt the loop
-       mid-flight, far worse than failing before the first job.
-    """
+    1. ``spark.analytics.scratchDir`` — any Hadoop-visible URI, verbatim;
+    2. local[*] master — the OS tempdir;
+    3. cluster master — ``sparkContext.getCheckpointDir()`` if set, else
+       raise before the first job: executor-unreachable local paths would
+       corrupt the loop mid-flight."""
     bases = _scratch_bases(spark)
     if not bases:
         raise ValueError(
@@ -810,31 +727,21 @@ def reclaim_iteration_scratch(
 ) -> list[str]:
     """Prune THIS application's superseded iteration-scratch generations.
 
-    Iterative operators (:func:`connected_components`'s loop; the
-    sparse triangle census self-cleans since round 10) materialize to a
-    fresh per-call uuid generation under
-    ``<base>/pyspark_analytics_cc_<applicationId>/`` — a second call
-    must never overwrite the final-round parquet still backing the
-    first call's returned DataFrame, so generations accumulate across
-    calls in a long-lived application (VERDICT r9 "what's wrong" #2).
-    This helper is the documented reclaim path: it lists the app-scoped
-    dir under every base :func:`_iteration_scratch_root` could have
-    used (``spark.analytics.scratchDir``, the OS tempdir on local
-    masters, the checkpoint dir) and deletes superseded generations
-    through the Hadoop FileSystem API, so the delete is real on
-    hdfs://, s3a://, etc., not just local paths.
+    :func:`connected_components`'s loop writes a fresh per-call generation
+    under ``<base>/pyspark_analytics_cc_<applicationId>/`` (a later call
+    must not overwrite the parquet backing an earlier call's returned
+    DataFrame), so generations accumulate in a long-lived application.
+    This lists the app-scoped dir under every base
+    :func:`_iteration_scratch_root` could have used and deletes through
+    the Hadoop FileSystem API, so remote deletes are real.
 
-    ``keep_latest=True`` (default) keeps the most-recently-modified
-    generation per base — the one backing the LAST returned frame —
-    and deletes the rest.  ``keep_latest=False`` deletes every
-    generation and the app-scoped dir itself; any not-yet-materialized
-    DataFrame previously returned by these operators becomes invalid,
-    so callers must persist/collect results they still need first.
+    ``keep_latest=True`` keeps the most recently modified generation per
+    base (backing the LAST returned frame).  ``keep_latest=False`` deletes
+    every generation and the app dir; frames returned earlier become
+    invalid, so persist or collect them first.
 
-    Returns the URIs it deleted (best-effort: unreachable bases and
-    race-lost deletes are skipped silently, same stance as
-    :func:`_fs_delete` — reclaim must never fail the computation).
-    """
+    Returns the URIs deleted; unreachable bases and race-lost deletes are
+    skipped (reclaim must never fail the computation)."""
     app_id = spark.sparkContext.applicationId
     deleted: list[str] = []
     seen: set[str] = set()
@@ -873,46 +780,36 @@ def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
     materialized state — passes through untouched so the convergence
     count can compare against it.
 
-    Phase 2 was restructured in round 20 (guide §2.4; measured in
-    OPTIMIZATION_r20.md #1).  The previous shape computed
-    ``gmin = stepped.groupBy(round_old).min(c)`` and joined it back
-    TWICE (through round_old and through c); with ``stepped`` lazy,
-    the physical plan computed the ENTIRE phase-1 subtree — the
-    edge-table join — three times per round (plan capture:
-    plans/r20/cc_round_step_before.txt, 10 exchanges + 3 broadcasts).
-    Now each row explodes into its two lookup keys, ONE explicit
-    ``repartition(k)`` exchange feeds BOTH the group-min aggregate and
-    the join probe (identical subtree → ReusedExchange, statically
-    pinned with AQE off), and a vertex-keyed aggregate folds the two
-    lookups back:
+    Phase 2 does not join ``gmin = stepped.groupBy(round_old).min(c)``
+    back twice (through round_old and through c): with ``stepped``
+    lazy, that plan computes the ENTIRE phase-1 subtree — the
+    edge-table join — three times per round.  Instead each row
+    explodes into its two lookup keys, ONE explicit ``repartition(k)``
+    exchange feeds BOTH the group-min aggregate and the join probe
+    (identical subtree → ReusedExchange, also with AQE off), and a
+    vertex-keyed aggregate folds the two lookups back:
 
         label'(v) = min over v's rows of least(c, g'(k))
                   = least(c, g'(round_old), g'(c))
 
     where g'(k) = min(c) over ALL exploded rows keyed k.  Equivalence
-    to the old two-join form, pointwise: the exploded (c → c) rows
+    to the two-join form, pointwise: the exploded (c → c) rows
     change g only to g'(l) = min(g(l), l·[∃u: c(u) = l]); for
     k = round_old(v), v itself is in group round_old so
     g(round_old) ≤ c(v) ≤ round_old and the extra candidate never
     wins; for k = c(v), the extra candidate is c(v) itself, already an
-    argument of the outer least; and where the old form's left-join
-    coalesced a missing g(c) to c, g'(c) = c exactly (v's own (c → c)
-    row).  Labels and per-round convergence counts are therefore
-    IDENTICAL (measured: same labels, same round count at sf0.01 — 3
-    rounds — and sf0.1 — 8 rounds).  One semantic footnote: a NULL
-    edge endpoint's (NULL, NULL) label row is dropped by the inner
-    join (NULL never equi-matches) instead of carried inert — it never
-    matched anything downstream (_attach_singletons joins on the
-    caller's vertices), so outputs are unchanged; pinned incl. NULL
-    endpoints by test_cc_driver_union_find_matches_loop.
+    argument of the outer least; and where the two-join form's
+    left-join coalesces a missing g(c) to c, g'(c) = c exactly (v's own
+    (c → c) row).  Labels and per-round convergence counts are
+    therefore IDENTICAL.  A NULL edge endpoint's (NULL, NULL) label row
+    is dropped by the inner join (NULL never equi-matches); it matches
+    nothing downstream (_attach_singletons joins on the caller's
+    vertices), so outputs are unchanged.
 
-    Why it matters: phase 1 (the EDGE-SIZED join + neighbor-min) now
-    executes once per round instead of three times, and phase 2's
-    delivery stays a partial-aggregated groupBy + equi-join — hot
-    label groups (a giant component in late rounds) keep map-side
+    Phase 2's delivery stays a partial-aggregated groupBy + equi-join:
+    hot label groups (a giant component in late rounds) keep map-side
     combining and AQE skew-split, which a window-function delivery
-    (measured marginally faster locally) would serialize onto one
-    task at 100 TB."""
+    (marginally faster locally) would serialize onto one task."""
     nb = (
         sym.join(start, sym.src == start.v)
         .groupBy(F.col("dst").alias("nv"))
@@ -973,19 +870,16 @@ def _cc_loop(sym: DataFrame, max_iters: int) -> DataFrame:
             0,
         )
 
-        # One round per materialization.  (A GraphFrames-style
-        # checkpointInterval=2 — two lazy rounds per write — was measured
-        # SLOWER here: the mid-round joins plan against unmaterialized
+        # One round per materialization.  A GraphFrames-style
+        # checkpointInterval=2 (two lazy rounds per write) measured
+        # SLOWER: the mid-round joins plan against unmaterialized
         # intermediates with no size stats and lose the broadcast/shape
-        # choices the per-round parquet stats buy, costing more than the
-        # saved write.  Measured at sf0.1: 8-10 s vs 5-6 s warm.)
+        # choices the per-round parquet stats buy (sf0.1: 8-10 s vs
+        # 5-6 s warm).
         #
         # The convergence count piggybacks on the checkpoint write via an
-        # Observation — the metric is collected DURING the write job, so
-        # each round launches exactly ONE job instead of write + count.
-        # At fixture scale the count job was pure job-launch latency
-        # (~0.1 s × rounds); on a cluster it saves a full re-read of the
-        # label table per round.
+        # Observation — collected DURING the write job, so each round
+        # launches ONE job instead of write + count.
         changed = 0
         for round_no in range(1, max_iters + 1):
             start = lab.select(
@@ -1029,8 +923,7 @@ def candidate_edges(d: DataFrame) -> DataFrame:
     the blocking is SOUND — it prunes only pairs the residual would
     reject anyway, and the unblocked oracle closure still matches.
     Without this the equi-key is `lang` alone (5 distinct values):
-    five giant skewed join buckets at corpus scale.  Same discipline
-    as dedup_ngram_jaccard's log₅ shingle buckets above.
+    five giant skewed join buckets at corpus scale.
     """
     bkt = F.floor(F.col("n_chars") / 3)
     a = d.select(
@@ -1073,37 +966,24 @@ def candidate_edges(d: DataFrame) -> DataFrame:
     """,
 )
 def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dup-group assignment: components of the near-dup candidate
-    graph (here: same lang, n_chars within 2 — a deterministic stand-in
-    for an LSH candidate edge set), labeled by smallest doc_id.
-
-    This is the missing last mile of every fuzzy-dedup pipeline:
-    MinHash/LSH emit PAIRS; transitivity must merge (a,b),(b,c) into
-    one keep-group {a,b,c} even though (a,c) never scored.  The oracle
-    states the same closure as a recursive CTE (label < dst pruning —
+    """Dup-group assignment: components of the near-dup candidate graph
+    (same lang, n_chars within 2 — a deterministic stand-in for an LSH
+    candidate set), labeled by smallest doc_id.  Transitivity merges
+    (a,b),(b,c) into one keep-group even though (a,c) never scored.  The
+    oracle states the closure as a recursive CTE (label < dst pruning is
     safe because a component's min label precedes every member).
 
-    Round-19 optimization (guide §8 — use what the optimizer cannot
-    know): THIS candidate predicate is a 1-D proximity rule, so its
-    graph is an interval graph over the distinct ``n_chars`` values
-    within each lang.  Two docs are transitively connected iff every
-    gap between consecutive distinct n_chars values on the path is
-    ≤ 2 — so the closure is gap-based segmentation of the per-lang
-    sorted distinct values, and NO edge set needs to exist at all.
-    That matters at 100 TB far beyond the bench win: the edge-based
-    formulation is QUADRATIC in docs-per-(lang, n_chars) (10⁶ docs of
-    one length → 5·10¹¹ edges before the loop even starts), while this
-    shape is one small aggregate + a window over (langs × distinct
-    lengths) rows + one broadcast join, at any corpus size.  Result
-    proven hash-identical to the recursive-CTE oracle at sf0.001/0.01/
-    0.1 (OPTIMIZATION_r19.md).  The general-purpose closure for
-    ARBITRARY pair sets remains :func:`connected_components` (used by
-    the fuzzy pipelines; benched by the ``cc_distributed`` row).
+    This predicate is a 1-D proximity rule, so its graph is an interval
+    graph over the distinct ``n_chars`` values per lang: docs connect iff
+    every gap between consecutive distinct values on the path is ≤ 2.  The
+    closure is gap-based segmentation of the sorted distinct values, and
+    NO edge set is built — an edge formulation is QUADRATIC in
+    docs-per-(lang, n_chars) (10⁶ docs of one length → 5·10¹¹ edges).
+    :func:`connected_components` remains the closure for ARBITRARY pair
+    sets.
 
-    Docs with a NULL lang or NULL n_chars never satisfy the edge
-    predicate on either engine (NULL equi-join / NULL arithmetic), so
-    they are singletons: the mapping is built on non-null keys only and
-    the left join's coalesce labels them with their own id."""
+    Docs with a NULL lang or n_chars satisfy no edge predicate on either
+    engine, so they are singletons labeled with their own id."""
     t = load_tables(spark, sf_dir)
     d = t["documents"].select("doc_id", "lang", "n_chars")
     clean = d.filter(F.col("lang").isNotNull() & F.col("n_chars").isNotNull())
@@ -1130,16 +1010,12 @@ def q_dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("val_min").over(Window.partitionBy("lang", "seg")),
     ).select("lang", "n_chars", "component")
     # The mapping's cardinality is languages × distinct document
-    # lengths — usually tiny, but bounded by data, not by structure
-    # (ADVICE r19: a corpus of very long documents could make it
-    # millions of rows).  Round 20 drops the unconditional broadcast
-    # hint and lets the planner choose: the mapping sits behind an
-    # aggregate exchange, so AQE sees its TRUE runtime size and still
-    # picks a broadcast join whenever it fits (verified at sf0.1: all
-    # four joins stay BroadcastHashJoin, rows identical, timing equal
-    # — plans/r20/dedup_connected_components_{before,after}.txt),
-    # while a pathological mapping degrades to a sort-merge join
-    # instead of an executor OOM.
+    # lengths — usually tiny, but bounded by data, not by structure (a
+    # corpus of very long documents could make it millions of rows).
+    # No broadcast hint: the mapping sits behind an aggregate exchange,
+    # so AQE sees its TRUE runtime size and picks a broadcast join
+    # whenever it fits, while a pathological mapping degrades to a
+    # sort-merge join instead of an executor OOM.
     return (
         d.join(mapping, ["lang", "n_chars"], "left")
         .select(

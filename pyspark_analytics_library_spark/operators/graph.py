@@ -325,7 +325,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
       shape here).  The oriented edge list and the out-neighborhoods
       are materialized once to iteration scratch, and the adjacency is
       broadcast when Σ|N⁺| (= m) fits the broadcastNbrsMaxEdges cap —
-      see the in-branch comment for the measured round-9 rationale.
+      see the in-branch comment for the measured rationale.
 
     The triangle count is orientation-invariant, so the natural-order
     DuckDB oracle counts the identical set; wedge totals come straight
@@ -344,22 +344,15 @@ def triangle_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
     for the density-aware dispatch contract.
 
     The edge list is typically the expensive part of the caller's plan
-    (here a DISTINCT co-occurrence self-join), so the census is careful
-    about how many times it executes.  Round-19 optimization (guide
-    §2.4 "two operations keyed the same way can share one pass", §1.2):
-    the edge plan now executes exactly ONCE — it is materialized to
-    iteration scratch up front, and every downstream consumer (degree
-    aggregate; the dense path's pair collect; the sparse path's
-    orientation write) reads the materialized parquet with exact size
-    stats.  Before round 19 both paths executed the caller's plan
-    twice (measured at sf0.1: the DISTINCT co-occurrence self-join is
-    ~1 s of the dense row's 2.8 s and ~1.4 s of the sparse row's
-    5.0 s — OPTIMIZATION_r19.md #2); the pre-round-9 lazy sparse
-    formulation re-executed it ~6× (420 s for a 7.9M-edge graph).
-    Edge count, wedge count, and the summary scalars still derive
-    driver-side from the already-collected degree table.
+    (here a DISTINCT co-occurrence self-join: ~1 s of the dense row's
+    2.8 s at sf0.1), so the edge plan executes exactly ONCE: it is
+    materialized to iteration scratch up front, and every downstream
+    consumer (degree aggregate; the dense path's pair collect; the
+    sparse path's orientation write) reads the materialized parquet
+    with exact size stats.  Edge count, wedge count, and the summary
+    scalars derive driver-side from the collected degree table.
 
-    Scratch contract (BOTH paths since round 19): the census
+    Scratch contract (BOTH paths): the census
     materializes to iteration scratch, which on a CLUSTER master
     requires ``spark.analytics.scratchDir`` (any Hadoop-visible URI) or
     a configured checkpoint dir — the census raises eagerly before the
@@ -369,12 +362,11 @@ def triangle_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
     is deleted before returning — including on the work-cap refusal
     path — so the returned 1-row summary frame is backed purely by
     driver-local literals and repeated census calls leave nothing on
-    disk (ADVICE r9: an earlier revision returned a frame lazily backed
-    by the scratch parquet, which therefore could never be reclaimed).
-    Round 20 (ADVICE r19): the whole body runs under an exception
-    guard that reclaims the scratch generation — previously a failure
-    between the edge write and the normal-path deletes (e.g. inside
-    the dense numpy section) leaked it."""
+    disk (a frame lazily backed by the scratch parquet could never be
+    reclaimed).  The whole body runs under an exception guard that
+    reclaims the scratch generation, so a failure between the edge
+    write and the normal-path deletes (e.g. inside the dense numpy
+    section) leaks nothing."""
     from pyspark_analytics_library_spark.operators.dedup import (
         _fs_delete,
         _iteration_scratch_root,
@@ -403,7 +395,7 @@ def _triangle_census_impl(
     edges_schema = edges.schema
     edges.write.mode("overwrite").parquet(edges_path)
     # known schema: skip the re-read's footer inference (~70 ms of
-    # driver work per reader build; measured round 20)
+    # driver work per reader build)
     edges = spark.read.schema(edges_schema).parquet(edges_path)
 
     ends = edges.select(F.explode(F.array("u", "v")).alias("node"))
@@ -440,24 +432,20 @@ def _triangle_census_impl(
     # ----- sparse / large: distributed adjacency-intersection path -----
     # Edge and wedge totals come from the ALREADY-collected degree
     # table — free driver-side scalars, exactly like the dense path.
-    # The round-9 sf≈1 probe measured the previous lazy formulation at
-    # 420 s on a 7.9M-edge graph: every downstream aggregate (e_dir's
-    # two degree joins, nbrs, tri, n_edges, n_wedges) re-executed the
-    # caller's edge-generation plan (a DISTINCT co-occurrence
-    # self-join), and the sort-merge triangle join shuffled
-    # |N⁺(u)|+|N⁺(v)| neighbor-array elements PER EDGE ROW
-    # (Σ_e ≈ 7.5e9 elements ≈ 60 GB).  Three changes fix both:
+    # A lazy formulation measured 420 s on a 7.9M-edge graph: every
+    # downstream aggregate re-executed the caller's edge-generation
+    # plan, and the sort-merge triangle join shuffled |N⁺(u)|+|N⁺(v)|
+    # neighbor-array elements PER EDGE ROW (Σ_e ≈ 7.5e9 elements
+    # ≈ 60 GB).  Hence:
     #
     # 1. Orientation joins the degree table as a LOCAL broadcast frame
-    #    (it is vertex-count-sized and already on the driver from the
-    #    dispatch decision), so the caller's edge plan executes exactly
-    #    ONCE in the whole census (round 19 — the up-front raw-edge
-    #    materialization; everything here reads that parquet).
+    #    (vertex-count-sized and already on the driver from the
+    #    dispatch decision); everything here reads the edge parquet.
     # 2. The oriented edge list is materialized to the same scratch
     #    generation; both its consumers (the out-neighborhood aggregate
     #    and the probe side of the intersection join) read the parquet
     #    with exact size stats.  The out-neighborhood aggregate itself
-    #    stays lazy — see the round-19 note at its definition below.
+    #    stays lazy — see the note at its definition below.
     # 3. When Σ|N⁺| — which equals m_edges exactly — fits
     #    spark.analytics.graph.broadcastNbrsMaxEdges (default 5e7,
     #    ~400 MB of ids), the adjacency is BROADCAST and the triangle
@@ -469,18 +457,17 @@ def _triangle_census_impl(
     #    is the textbook cost of the intersection join, amortized by
     #    cluster parallelism rather than a single box.
 
-    # Fail fast on a census this formulation cannot finish (VERDICT
-    # r15 #3).  The sparse path's cost is the adjacency-intersection
+    # Fail fast on a census this formulation cannot finish.  The
+    # sparse path's cost is the adjacency-intersection
     # work W = Σ_e (|N⁺(src)|+|N⁺(dst)|); with out-degrees bounded by
     # min(d_v, √(2m)) under the (degree, id) orientation, W ≤
     # Σ_v d_v·min(d_v, √(2m)) — computable for FREE from the degree
-    # table already on the driver, before any scratch write.  The
-    # round-15 sf≈1 sweep ledgered the worst case (SCALE.md): ts-
-    # identical copies densified the co-activity graph quadratically
-    # to 53 % density at 15 k vertices (~6e7 edges, W ≈ 9.5e11) —
-    # intractable for both branches AND for the wedge-join oracle, and
-    # previously the operator would attempt it anyway and run for
-    # hours.  Measured calibration for the default cap of 1e11:
+    # table already on the driver, before any scratch write.  Worst
+    # case seen at sf≈1: ts-identical copies densify the co-activity
+    # graph quadratically to 53 % density at 15 k vertices (~6e7 edges,
+    # W ≈ 9.5e11) — intractable for both branches AND for the
+    # wedge-join oracle; without the cap the census runs for hours.
+    # Measured calibration for the default cap of 1e11:
     # W ≈ 3.1e10 (7.89 M-edge sf1 graph) ran 87–338 s on one box —
     # the cap admits ~3× that and refuses clearly beyond.  The bound
     # is skew-sharp: a 1 M-edge hub-and-spoke graph scores W ≈ 2.8e9
@@ -542,17 +529,17 @@ def _triangle_census_impl(
     shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     # The read schema is the written frame's own: src/dst carry the
     # common type of u and v, which differs from u's when the two
-    # endpoint columns differ (ADVICE r20 #2).
+    # endpoint columns differ.
     e_dir = (
         spark.read.schema(e_dir_out.schema).parquet(e_dir_path)
         .repartition(shuffle_n)
     )
-    # The out-neighborhood aggregate stays LAZY (round 19): it has
-    # exactly one physical consumer — the single broadcast relation /
-    # reused exchange both join sides share (_sparse_triangle_sum_frame,
-    # ReusedExchange test-pinned) — so the former write+read of the
-    # array-heavy nbrs table was a pure materialization tax (measured
-    # A/B at sf0.1: 1.53 → 1.11 s for the intersection stage).
+    # The out-neighborhood aggregate stays LAZY: it has exactly one
+    # physical consumer — the single broadcast relation / reused
+    # exchange both join sides share (_sparse_triangle_sum_frame) — so
+    # writing the array-heavy nbrs table would be a pure
+    # materialization tax (1.53 vs 1.11 s for the intersection stage at
+    # sf0.1).
     nbrs = e_dir.groupBy("src").agg(F.collect_set("dst").alias("nb"))
     bcast_cap = conf.get(spark, "spark.analytics.graph.broadcastNbrsMaxEdges")
     tri = _sparse_triangle_sum_frame(
@@ -575,13 +562,10 @@ def _sparse_triangle_sum_frame(
     first output column, so the plans canonicalize identically and a
     SINGLE broadcast hash relation is built and shipped for both —
     ReuseExchange statically with AQE off, the AQE stage cache at
-    runtime otherwise.  ADVICE r9 flagged the previous per-side
-    ``F.broadcast`` as ~2× on-wire/in-memory right at the
-    broadcastNbrsMaxEdges cap; measurement showed canonicalization
-    already deduped even that shape (alias names canonicalize away),
-    but nothing GUARANTEED it — this formulation plus the
-    ReusedExchange plan test pins the single-relation invariant the
-    cap's sizing assumes."""
+    runtime otherwise.  A per-side ``F.broadcast`` would risk ~2×
+    on-wire/in-memory right at the broadcastNbrsMaxEdges cap; this
+    formulation plus the ReusedExchange plan test pins the
+    single-relation invariant the cap's sizing assumes."""
     if broadcast_adjacency:
         nbrs = F.broadcast(nbrs)
     nbrs_u = nbrs.select(F.col("src").alias("u"), F.col("nb").alias("nu"))

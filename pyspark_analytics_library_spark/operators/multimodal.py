@@ -23,8 +23,7 @@ from pyspark.sql import functions as F
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
 
-#: The repo's "image" format (VERDICT r12 #6 — a REAL binary codec in
-#: place of the former hash-derived stub): 4-byte magic ``IMG1`` +
+#: The repo's "image" format, a REAL binary codec: 4-byte magic ``IMG1`` +
 #: big-endian uint16 width + big-endian uint16 height + width×height
 #: single-channel pixel bytes.  Pixel values here are ASCII md5-hex
 #: chars (0x30–0x39 / 0x61–0x66) because the fixture has no real
@@ -49,7 +48,7 @@ def decode_image_grid(payload: bytes) -> tuple[int, int, int, str, int]:
     if arr[:4].tobytes() != IMG_MAGIC:
         raise ValueError(f"bad magic: {arr[:4].tobytes()!r}")
     if arr.size < IMG_HEADER_LEN:
-        # ADVICE r13: valid magic truncated INSIDE the 8-byte header
+        # Valid magic truncated INSIDE the 8-byte header
         # (4-7 bytes) must be the same loud ValueError as every other
         # corruption, not an IndexError from the width read below.
         raise ValueError(f"truncated header: {arr.size} bytes")
@@ -155,8 +154,7 @@ def q_mm_decode_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decode/feature-extract stage: IMG1 binary payloads → typed
     (width, height, n_px, px_md5, px_sum) via a REAL mapInPandas
     decode — np.frombuffer, magic check, big-endian header parse,
-    pixel-grid slice, whole-array stats (VERDICT r12 #6: the former
-    hash-derived stub and its NotImplementedError hook are gone).
+    pixel-grid slice, whole-array stats.
 
     The encode side builds the payload scan-side in pure JVM
     expressions: dims from two md5 hex chars (8..23, so the oracle's

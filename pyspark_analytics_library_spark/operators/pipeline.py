@@ -322,15 +322,13 @@ def q_pipeline_contamination_check(spark: SparkSession, sf_dir: str) -> DataFram
     Shape: shingle both splits once (scan-side explode), then a
     semi-join from test shingles into the train shingle set on
     (lang, gram).  The train side is CORPUS-sized and carries an
-    explicit merge hint — the round-9 sf≈10 probe showed the static
-    planner broadcasting text-exploded sides off the compressed file
-    estimate.  `hits` (the contaminated doc-id set) is CORPUS-
-    PROPORTIONAL too — the test split is a fixed 2/16 sha-nibble
-    fraction of the corpus, and in a heavily-duplicated corpus every
-    test doc can hit — so it carries the same merge hint (ADVICE r9:
-    an earlier revision pinned it F.broadcast, the exact static-
-    broadcast class the round-9 sweep removed elsewhere).  Only the
-    genuinely bounded frame — the per-LANGUAGE `contaminated`
+    explicit merge hint: the static planner broadcasts text-exploded
+    sides off the compressed file estimate (see
+    :func:`..dedup.ngram_jaccard_pairs`).  `hits` (the contaminated
+    doc-id set) is CORPUS-PROPORTIONAL too — the test split is a fixed
+    2/16 sha-nibble fraction of the corpus, and in a heavily-duplicated
+    corpus every test doc can hit — so it carries the same merge hint.
+    Only the genuinely bounded frame — the per-LANGUAGE `contaminated`
     aggregate, ≤ |languages| rows — is explicitly broadcast.
     (A bloom filter on train grams would cut the shuffle further.)
     Output is per-language counts, so nothing document-sized leaves
@@ -530,7 +528,7 @@ def q_pipeline_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("pipeline_fuzzy_dedup", tags=("rows-only",))  # LSH: xxhash64 absent in DuckDB
 def q_pipeline_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END fuzzy dedup — the seam a real 100 TB corpus run
-    exercises as ONE plan (VERDICT r11 #2): MinHash-LSH candidate
+    exercises as ONE plan: MinHash-LSH candidate
     pairs (:func:`..dedup.minhash_lsh_pairs`, verified Jaccard ≥ 0.4)
     → connected components over the pair graph
     (:func:`..dedup.connected_components` — transitivity merges
@@ -539,7 +537,7 @@ def q_pipeline_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (singletons keep themselves: their label IS their id) → per-lang
     yield accounting, attributed to each document's OWN language —
     removed docs in a cross-language component count under their own
-    lang, not the keeper's (ADVICE r12) — so the global identity
+    lang, not the keeper's — so the global identity
     sum(n_kept) + sum(n_removed) = corpus size holds even when an LSH
     component spans languages.
 
@@ -700,8 +698,8 @@ def q_pipeline_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale posture: candidate generation is the bucketed LSH equi-join
     (never all-pairs); the split tags join each pair end by doc_id —
-    corpus-sized sides, merge-hinted per the r9 broadcast-misestimate
-    finding.  The per-lang rollup is one shuffle.
+    corpus-sized sides, merge-hinted against the static planner's
+    broadcast misestimate.  The per-lang rollup is one shuffle.
     """
     from pyspark_analytics_library_spark.operators.dedup import minhash_lsh_pairs
 
@@ -717,9 +715,9 @@ def q_pipeline_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     tags = tagged.select("doc_id", "split")
     pairs = minhash_lsh_pairs(docs)
     # Each verified pair, both directions: (x, y) = x near-dups y.
-    # Row-local explode, not a two-branch union (round 20, guide §2.4):
-    # the union referenced the pairs plan twice, so the ENTIRE LSH
-    # verify stage appeared as two physical subtrees.
+    # Row-local explode, not a two-branch union: a union references the
+    # pairs plan twice, so the ENTIRE LSH verify stage would run as two
+    # physical subtrees.
     ends = pairs.select(
         F.explode(
             F.array(
@@ -838,9 +836,8 @@ def q_pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is_new = F.col("source").isin("src18", "src19")
     pairs = ngram_jaccard_pairs(docs.select("doc_id", "text", "lang"))
     membership = docs.select("doc_id", is_new.alias("is_new"))
-    # Row-local explode, not a two-branch union (round 20, guide §2.4):
-    # the union referenced the pairs plan twice, so the ngram candidate
-    # stage appeared as two physical subtrees.
+    # Row-local explode, not a two-branch union (see the fuzzy
+    # contamination twin): one physical ngram candidate stage.
     ends = pairs.select(
         F.explode(
             F.array(

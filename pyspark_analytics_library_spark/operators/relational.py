@@ -349,8 +349,8 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     choice; strategy is physical — SURVEY.md §2.3).
 
     revenue is money_sum (§5.3 rule 12): 5 region groups over ALL of
-    lineitem reach ~6e10 at sf≈1, where the round-15 sweep caught the
-    raw double sum flipping its 4-dp digit (…111.3918 vs …111.392)."""
+    lineitem reach ~6e10 at sf≈1, where the raw double sum flips its
+    4-dp digit (…111.3918 vs …111.392)."""
     from pyspark_analytics_library_spark.operators.aggregates import (
         money,
         money_sum,

@@ -11,7 +11,7 @@ pair-expression formulation (zip_with+aggregate lambdas are
 interpreted, not codegen'd).  At 100 TB the index no longer fits one
 broadcast: shard it (IVF — union of per-shard results, re-ranked) or
 switch to sim_lsh_approx; brute force remains the per-shard /
-validation kernel (SCALE.md).
+validation kernel.
 
 Float discipline: DuckDB's ``list_cosine_similarity`` computes in
 float32 (measured deltas ~1e-7 — breaks ROUND(6) parity), so oracles
@@ -308,28 +308,21 @@ _LSH_KEYS_SQL = (
 
 
 def lsh_table_keys(emb: str) -> Column:
-    """Multi-table random-hyperplane LSH: per table, a sign-bit bucket
-    key; returns array<struct<table:int, key:long>> to explode.
-    ``emb`` is the name of the array<float> embedding column.
+    """Multi-table random-hyperplane LSH: per table, a sign-bit bucket key;
+    returns array<struct<table:int, key:long>> to explode.  ``emb`` names
+    the array<float> embedding column.
 
-    Collision prob. for angle θ is (1 - θ/π)^bits per table, amortized
-    over `tables` OR-ed tables — bits trades precision (pruning) for
-    recall; tables buys recall linearly in cost.  With 16 tables × 4
-    bits, a cos≈0.4 neighbor is caught with p ≈ 0.97 while random pairs
-    (cos≈0) collide at 1/16 per table.  Pure expression — evaluated
-    scan-side; the bucket equi-join replaces the O(n²) pair space.
+    Collision probability for angle θ is (1 - θ/π)^bits per table, OR-ed
+    over the tables: bits trade recall for pruning, tables buy recall
+    linearly in cost.  With 16 tables × 4 bits a cos≈0.4 neighbor is
+    caught with p ≈ 0.97 while random pairs collide at 1/16 per table.
 
-    Why one SQL expression: every PySpark Column call is a py4j round
-    trip to the JVM.  Building this column call by call (a literal per
-    plane coefficient, an array, zip_with and aggregate per plane, a
-    when per bit, a struct per table) cost ~31,000 round trips and
+    One SQL expression because every PySpark Column call is a py4j round
+    trip: built call by call this column costs ~31,000 round trips and
     3.5-5.8 s of driver time per plan build; the single ``F.expr`` over
-    :data:`_LSH_KEYS_SQL` costs 3 (two gateway lookups and the call).
-    Each dot product is still the in-order left fold
-    ``0D + x0*p0 + x1*p1 + ...`` over the double-cast embedding, so the
-    keys are bit-identical to the call-by-call build (pinned against a
-    numpy twin in tests/test_plans.py).
-    """
+    :data:`_LSH_KEYS_SQL` costs 3.  Each dot product is the in-order left
+    fold ``0D + x0*p0 + ...`` over the double-cast embedding (pinned
+    against a numpy twin in tests/test_plans.py)."""
     return F.expr(_LSH_KEYS_SQL.format(col=f"`{emb}`"))
 
 
@@ -341,50 +334,29 @@ _IVF_NPROBE = 6
 
 
 def _bounded_hash_sample(e: DataFrame, sample: int) -> pd.DataFrame:
-    """Deterministic, layout-independent training sample whose
-    driver-side merge is bounded by a hash filter's selectivity, not by
-    partition count (VERDICT r13 #5).
+    """Deterministic, layout-independent training sample whose driver-side
+    merge is bounded by a hash filter, not by partition count.
 
-    The former ``orderBy("vec_id").limit(sample)`` planned as
-    TakeOrderedAndProject: each of P scan partitions ships up to
-    ``sample`` rows into the driver-side ordered merge — P×sample rows
-    at extreme partition counts (a 100 TB table at 128 MB splits is
-    ~800k partitions).  Here every row gets a deterministic bucket
-    ``h = pmod(xxhash64(vec_id), 1e6)`` and only rows with
-    ``h < threshold`` — sized to ~1.2×sample expected survivors —
-    reach the ordered merge at all, so the driver-side cost is bounded
-    by the FILTER (~1.2×sample rows TOTAL across all partitions).
+    ``orderBy("vec_id").limit(sample)`` plans as TakeOrderedAndProject:
+    each of P partitions ships up to ``sample`` rows into the driver-side
+    merge (a 100 TB table at 128 MB splits is ~800k partitions).  Here
+    only rows with ``h = pmod(xxhash64(vec_id), 1e6) < threshold`` — sized
+    to ~1.2×sample survivors in TOTAL — reach the ordered merge.  The
+    chosen set, the ``sample`` smallest (h, vec_id), is a pure function of
+    the ids; a threshold that under-delivers doubles, which only WIDENS
+    the candidate pool.
 
-    The chosen set — the ``sample`` smallest (h, vec_id) pairs — is a
-    pure function of the ids: rerun-exact, layout-independent, and
-    independent of the escalation path (an under-delivering threshold
-    — hash variance makes this rare at the 1.2× margin — only WIDENS
-    the candidate pool when doubled; the smallest-(h, id) rule never
-    changes, so any threshold that yields ≥sample survivors selects
-    the identical set).
+    ROW ORDER is part of the contract: the result is sorted by ``vec_id``
+    on BOTH paths, because :func:`train_ivf_centroids` is row-order
+    sensitive (``rng.choice`` picks by position; float mean order varies).
+    The sort is driver-side on ≤ ``sample`` rows.
 
-    ROW ORDER is part of the contract (ADVICE r14): the returned frame
-    is sorted by ``vec_id`` on BOTH paths, because the consumer
-    (:func:`train_ivf_centroids`) is row-order sensitive — ``rng.choice``
-    picks rows by position and float mean accumulation order varies —
-    so an unpinned order would make trained centroids depend on the
-    physical partition layout.  The sort happens DRIVER-side on the
-    already-bounded frame (≤ ``sample`` rows), so it costs nothing
-    distributed.
-
-    Small-table path (every fixture SF lands here): a single
-    ``limit(sample + 1).toPandas()`` probe — CollectLimit, incremental
-    and driver-bounded at ``sample + 1`` rows at ANY partition count.
-    ≤ ``sample`` rows back means the probe IS the whole table; sorting
-    it by vec_id yields exactly what the former count()-then-toPandas()
-    spelling produced, minus one full job (ADVICE r14: the count and
-    the pull scanned the same data twice).  ``sample + 1`` rows back
-    means n > sample, and only then is the count() (a column-less
-    metadata-speed scan) paid to size the hash threshold — the loop
-    path's per-pass scans are kept in preference to persisting the
-    input, which at 100 TB would spill the whole table to executor
-    disk to save one cheap pass.
-    """
+    Small tables (every fixture SF): one ``limit(sample + 1).toPandas()``
+    probe, driver-bounded at any partition count, IS the whole table
+    when it returns ≤ ``sample`` rows.  Otherwise one column-less
+    count() sizes the threshold; the loop's per-pass scans are kept
+    rather than persisting the input, which at 100 TB would spill the
+    table to save one pass."""
     e = e.select("vec_id", "embedding")
     pdf = e.limit(sample + 1).toPandas()
     if len(pdf) <= sample:
@@ -519,25 +491,19 @@ def q_sim_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("sim_lsh_approx", tags=("rows-only",))  # LSH recall checked by property test
 def q_sim_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate NN: candidates = same bucket in ANY of the LSH
-    tables; exact cosine only on candidates, evaluated as a per-bucket
-    vectorized matmul (`applyInPandas` cogrouped by (table, key)).
+    """Approximate NN: candidates = same bucket in ANY of the LSH tables;
+    exact cosine only on candidates, as a per-bucket vectorized matmul
+    (`applyInPandas` cogrouped by (table, key)).
 
-    Why per-bucket kernels instead of a pair self-join: with 4-bit
-    keys (chosen for recall at cos ≈ 0.3), random pairs still collide
-    in SOME of the 16 tables with p ≈ 0.64, so a bucket self-join
-    materializes a large fraction of all n² pairs — each dragging two
-    embedding arrays through shuffle and an interpreted expression
-    fold (measured 21 s at sf0.1).  Grouping instead shuffles each
-    vector exactly `tables` times (ids + one array, no pair blowup),
-    runs one blocked BLAS matmul per bucket, and emits ONLY the pairs
-    above threshold; the cross-table duplicates that remain are the
-    final (id_a, id_b) dropDuplicates — threshold-survivor-sized, not
-    candidate-sized.  Same candidate set, same filter, same recall;
-    3.4 s at sf0.1 to collect a prebuilt plan (bench.py times collect()
-    only — plan build is outside that figure; see lsh_table_keys for
-    its cost).  Bucket skew is bounded by the 2048-row matmul blocking
-    plus AQE shuffle splitting."""
+    Not a pair self-join: with 4-bit keys (chosen for recall at
+    cos ≈ 0.3) random pairs still collide in SOME of the 16 tables with
+    p ≈ 0.64, so a bucket self-join materializes a large fraction of all
+    n² pairs, each dragging two arrays through a shuffle (21 s at sf0.1).
+    Grouping shuffles each vector exactly `tables` times, runs one blocked
+    BLAS matmul per bucket and emits ONLY pairs above threshold; the final
+    (id_a, id_b) dropDuplicates is survivor-sized (3.4 s at sf0.1).
+    Bucket skew is bounded by the 2048-row matmul blocking plus AQE
+    shuffle splitting."""
     t = load_tables(spark, sf_dir)
     e = (
         t["embeddings"]
@@ -656,14 +622,12 @@ def q_sim_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE hash aggregate: each dimension is an independent avg(emb[i])
     aggregate expression (64 of them), so the per-task partial state
     is one 64-float accumulator per label and the whole query is a
-    single shuffle of (labels × 64 doubles) plus the output sort.
-    This was measured against the posexplode → groupBy(label, pos) →
-    collect_list reassembly formulation, which costs THREE exchanges
-    (hash(label, pos) does not satisfy the reassembly's hash(label)
-    clustering, and the 64× row explosion shuffles 64 rows per vector
-    instead of one partial row per label) — the widened aggregate is
-    the plan you want at 100 TB.  Nothing vector-sized ever reaches
-    the driver.
+    single shuffle of (labels × 64 doubles) plus the output sort.  A
+    posexplode → groupBy(label, pos) → collect_list reassembly costs
+    THREE exchanges (hash(label, pos) does not satisfy the reassembly's
+    hash(label) clustering, and the 64× row explosion shuffles 64 rows
+    per vector instead of one partial row per label).  Nothing
+    vector-sized ever reaches the driver.
 
     The centroid vector is serialized to floor-scaled-integer text at
     the compare boundary (flatten-before-compare, §5.3 rules 4+7 —
@@ -703,9 +667,8 @@ def _nearest_clusters(C: "np.ndarray", A: "np.ndarray") -> "np.ndarray":
 
 def _assign_nearest(C: "np.ndarray"):
     """mapInPandas generator: (vec_id, embedding) → (vec_id, cluster).
-    Round 19: the embedding column no longer rides back across the
-    Arrow boundary — no consumer ever read it from the output (guide
-    §4.1: pass only the columns the function needs, both directions)."""
+    The embedding does not ride back across the Arrow boundary: no
+    consumer reads it from the output."""
 
     def gen(batches):
         for pdf in batches:
@@ -727,15 +690,11 @@ def _assign_partials(C: "np.ndarray"):
     assign rows to centroids and emit the per-cluster partial sums and
     counts — ≤ k×dim rows per batch, never row-sized output.
 
-    Round-19 optimization (guide §2.3 "aggregate before you shuffle",
-    §4.1): the previous update shipped every (vec_id, cluster,
-    embedding) row back to the JVM, posexploded n×dim (cluster, dim, x)
-    rows, and relied on hash-aggregate map-side combine.  Folding the
-    partial aggregation into the SAME matmul pass means embeddings
-    never leave the Python worker and the exchange carries only
-    k×dim×batches partials.  Final means = sum(s)/sum(cnt) per
-    (cluster, dim) — verified assignment-identical to the old
-    formulation at sf0.001/0.01/0.1 (OPTIMIZATION_r19.md #5)."""
+    Folding the partial aggregation into the SAME matmul pass means
+    embeddings never leave the Python worker and the exchange carries
+    only k×dim×batches partials (shipping every row back to the JVM and
+    posexploding n×dim rows would rely on map-side combine instead).
+    Final means = sum(s)/sum(cnt) per (cluster, dim)."""
     k, dim = C.shape
 
     def gen(batches):
@@ -766,23 +725,19 @@ def distributed_kmeans_assign(
 ) -> DataFrame:
     """Fully DISTRIBUTED Lloyd k-means: per-iteration Arrow-batched
     assignment + partial-sum centroid update fused into ONE mapInPandas
-    pass (``_assign_partials`` — round 19; previously assignment and a
-    posexplode → groupBy avg ran as separate row-sized stages), with
-    only the k×dim centroid matrix crossing to the driver each round —
-    the iterative-ML companion to :func:`train_ivf_centroids`, which
-    trains on a bounded driver-side SAMPLE (the FAISS recipe).  Use
-    this shape when the training set itself is the 100 TB table: state
-    on the driver is k×dim floats per iteration (the same bounded
-    class as PageRank's rank vector), every data-sized operation is a
-    scan whose output is ≤ k×dim partial rows per Arrow batch before
-    the exchange; embeddings never leave the Python workers.
+    pass (``_assign_partials``), with only the k×dim centroid matrix
+    crossing to the driver each round — the companion to
+    :func:`train_ivf_centroids`, which trains on a bounded driver-side
+    SAMPLE (the FAISS recipe).  Use this shape when the training set is
+    the 100 TB table: driver state is k×dim floats per iteration, every
+    data-sized operation is a scan emitting ≤ k×dim partial rows per Arrow
+    batch, and embeddings never leave the Python workers.
 
-    Deterministic: init = the first ``k`` vectors by vec_id
-    (orderBy before limit — layout-independent), fixed ``iters``, no
-    RNG; reruns are exact, enabling the numpy-twin test.
-    """
-    # Persist the projected input across the Lloyd iterations (VERDICT
-    # r12 #5): each iteration's update job is a fresh action, so without
+    Deterministic: init = the first ``k`` vectors by vec_id (orderBy
+    before limit — layout-independent), fixed ``iters``, no RNG; reruns
+    are exact, enabling the numpy-twin test."""
+    # Persist the projected input across the Lloyd iterations: each
+    # iteration's update job is a fresh action, so without
     # the cache every round re-reads the scan — iters× redundant I/O at
     # 100 TB.  Unpersisted after the loop: the returned frame is lazy,
     # so a cache it depended on could never be released; the final

@@ -1,62 +1,46 @@
 """Skew mitigation and shuffle co-location (the 100 TB hygiene surface).
 
 Three declared queries, each proving a *scale technique* produces
-bit-identical results to the plain declarative path (full DuckDB
-oracles — the oracle is the unsalted/unbucketed SQL):
+bit-identical results to the plain declarative path (the DuckDB oracle
+is the unsalted/unbucketed SQL):
 
-- ``agg_salted_skew``: two-phase salted aggregation. A hot grouping
+- ``agg_salted_skew``: two-phase salted aggregation.  A hot grouping
   key funnels its state through one reducer; salting splits it into
   ``buckets`` partials that combine in a second, tiny aggregation.
-  Salt is ``pmod(hash(unique_col), buckets)`` — deterministic (reruns
-  agree) yet uniform.  Scope (measured at 1 B rows, SCALE.md r12): for
-  ALGEBRAIC aggregates Spark's map-side partial aggregation already
-  collapses the hot key per task, so plain groupBy is not skew-bound
-  and two-phase merely costs nothing extra (decimal-exact agreement on
-  all 5,001 keys at 1 B rows); the technique's real targets are
-  aggregates whose partial state does not collapse (exact
-  count-distinct sets, collect_list) — and the JOIN case below, where
-  no combiner exists.
+  Salt is ``pmod(hash(unique_col), buckets)`` — deterministic yet
+  uniform.  For ALGEBRAIC aggregates Spark's map-side partial
+  aggregation already collapses the hot key per task (measured at 1 B
+  rows: plain groupBy is not skew-bound, two-phase costs nothing
+  extra); the technique's real targets are aggregates whose partial
+  state does not collapse (exact count-distinct sets, collect_list)
+  and the JOIN case below, where no combiner exists.
 - ``join_salted_skew``: skewed equi-join — replicate the build side
   across ``buckets`` salt replicas (explode — no driver loop), salt the
-  probe side by hash of a unique column, join on (key, salt). AQE's
-  skew-join split handles moderate skew automatically WHEN its
-  engagement conditions hold; explicit salting is the dependable lever
-  because those conditions are environmental, invisible to the query
-  author, and AQE declines SILENTLY.  Root-caused in round 12 (SCALE.md
-  "AQE skew-split root cause"; PySpark 4.1.2 OptimizeSkewedJoin /
-  ShufflePartitionsUtil, bytecode-verified + DEBUG-log bisect), the
-  rule requires ALL of:
-  (1) size: hot partition's COMPRESSED map-output bytes >
+  probe side by hash of a unique column, join on (key, salt).  AQE's
+  skew-join split engages only when ALL of these hold (PySpark 4.1.2
+  OptimizeSkewedJoin), and declines SILENTLY otherwise:
+  (1) size: the hot partition's COMPRESSED map-output bytes >
       max(skewedPartitionThresholdInBytes [256 MB],
       skewedPartitionFactor [5.0] x median).  A single-key partition
-      compresses far better than mixed-key neighbors — measured 36x
-      row-skew showing only 3x byte-skew (2.9 MB vs 0.83 MB median at
-      10 M rows), and the SAME rows at 42.6 MB once shuffled out of
-      clustered order (14x compression swing) — so row-skew reasoning
+      compresses far better than mixed-key neighbors (36x row-skew
+      measured as 3x byte-skew at 10 M rows), so row-skew reasoning
       over-predicts engagement;
-  (2) splittability: the split happens only at MAP-output-block
-      boundaries (createSkewPartitionSpecs returns None at <= 1 chunk,
-      with NO log line).  Few effective upstream maps — e.g. a parquet
-      scan whose files hold one giant row group, where only splits
-      containing a row-group midpoint emit rows — make the hot
-      partition one unsplittable block (the r11 probe's fixture:
-      1 file, 1 row group, 100 % of rows from ONE map);
+  (2) splittability: splits happen only at MAP-output-block
+      boundaries; few effective upstream maps (e.g. one file with one
+      giant row group) make the hot partition one unsplittable block;
   (3) shape: BOTH join children must be Sort over a BARE
       ENSURE_REQUIREMENTS ShuffleQueryStageExec — reusing an upstream
-      aggregation's partitioning on the join key (distinct/groupBy
-      feeding the join) removes the Exchange and disqualifies the join
-      entirely.  ``forceOptimizeSkewedJoin`` waives only the
-      extra-shuffle cost veto, none of the above.
-  The completing measurement (SCALE.md round-12 follow-up): with the
-  LAYOUT fixed — 64 map blocks, shuffled row order — the split engages
-  at STOCK thresholds on the same 100 M-row join and fixes the
-  straggler (15.1 s vs 46.4 s warm), while ``salted_join`` still
-  matched or beat it (9.9 s) and needs no layout cooperation.
+      aggregation's partitioning on the join key removes the Exchange
+      and disqualifies the join.  ``forceOptimizeSkewedJoin`` waives
+      only the extra-shuffle cost veto.
+  With the layout fixed (64 map blocks, shuffled row order) the split
+  engages at stock thresholds on a 100 M-row join (15.1 s vs 46.4 s
+  warm), while ``salted_join`` matches or beats it (9.9 s) with no
+  layout cooperation — hence explicit salting.
 - ``join_bucketed_colocated``: both fact sides written bucketed by the
   join key, then joined — the join runs shuffle-free (no Exchange in
-  the plan, pinned by tests/test_plans.py). At 100 TB this is THE
-  pattern for repeated fact⋈fact joins: pay the shuffle once at write
-  time, amortize it over every downstream join.
+  the plan, pinned by tests/test_plans.py): pay the shuffle once at
+  write time, amortize it over every downstream join.
 """
 
 from __future__ import annotations
@@ -91,7 +75,7 @@ def salted_sum_count(
 ) -> DataFrame:
     """Two-phase salted SUM/COUNT: partials on (keys, salt), final on
     keys. Works for any algebraic aggregate (sum/count/min/max); holistic
-    aggregates (median) need the sketch path instead (SCALE.md)."""
+    aggregates (median) need the sketch path instead."""
     partial = (
         df.withColumn("_salt", salt_column(unique_col, buckets))
         .groupBy(*ensure_columns(keys), "_salt")
@@ -174,10 +158,9 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n_items"),
         # Reported in millions: a raw ~1e9 sum rounded at 4 dp sits inside
-        # cross-engine summation-order noise (~1e-4) — the sf0.1 sweep
-        # caught the resulting off-by-one-ulp rounding flips.  Rescaling
-        # puts 6 orders of magnitude between the noise and the rounding
-        # threshold.
+        # cross-engine summation-order noise (~1e-4), which flips the last
+        # digit; rescaling puts 6 orders of magnitude between the noise
+        # and the rounding threshold.
         F.round(F.sum("l_extendedprice") / 1e6, 4).alias("total_price_m"),
     )
 
@@ -281,11 +264,7 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_items"),
-            # Reported in millions: a raw ~1e9 sum rounded at 4 dp sits inside
-        # cross-engine summation-order noise (~1e-4) — the sf0.1 sweep
-        # caught the resulting off-by-one-ulp rounding flips.  Rescaling
-        # puts 6 orders of magnitude between the noise and the rounding
-        # threshold.
+            # Reported in millions: see q_join_salted_skew.
         F.round(F.sum("l_extendedprice") / 1e6, 4).alias("total_price_m"),
         )
     )
@@ -307,20 +286,17 @@ def q_agg_distinct_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     so a hot grouping key spreads across every reducer) followed by a
     count of pre-collapsed singletons.  Same result as `agg_distinct`'s
     plain `countDistinct` (the oracle is identical SQL); the point is
-    the PLAN: the r12 probe measured the plain spelling at 143.7 s vs
-    this one at 45.1 s (3.2×) on a 50 %-hot key at 200 M rows, because
-    countDistinct's partial state — the per-task distinct SET of the
-    hot key — is the one aggregation state map-side combine cannot
-    collapse (SCALE.md round-12 follow-up).  At 100 TB this spelling
-    (or `approx_count_distinct` when ±2 % is acceptable —
-    `agg_approx_distinct`) is the difference between a straggler-bound
-    job and a uniform one.
+    the PLAN: the plain spelling measured 143.7 s vs this one's 45.1 s
+    on a 50 %-hot key at 200 M rows, because countDistinct's partial
+    state — the per-task distinct SET of the hot key — is the one
+    aggregation state map-side combine cannot collapse.
+    (`approx_count_distinct` is the alternative when ±2 % is acceptable
+    — `agg_approx_distinct`.)
 
-    NULL semantics (ADVICE r12): a bare ``distinct()`` keeps one row
-    for a NULL value, while ``COUNT(DISTINCT user_id)`` ignores NULLs —
-    so the NULL filter below is what makes the two spellings equivalent
-    on data with NULL user_ids (the fixture has none, but the spelling
-    is the prescription and must not silently off-by-one elsewhere)."""
+    NULL semantics: a bare ``distinct()`` keeps one row for a NULL
+    value, while ``COUNT(DISTINCT user_id)`` ignores NULLs — the NULL
+    filter below makes the two spellings equivalent on data with NULL
+    user_ids."""
     t = load_tables(spark, sf_dir)
     pairs = (
         t["events"]

@@ -37,10 +37,9 @@ def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) ->
 #: cares about most.  Restricted to the shared ANSI surface: TIMESTAMP
 #: literals, BETWEEN, ROUND, COUNT/SUM/AVG, CAST/DECIMAL, GROUP BY,
 #: ORDER BY.  revenue is the shared-dialect spelling of §5.3 rule 12
-#: (decimal-exact money sum): the round-15 sf≈1 margin audit measured
-#: it at 3.0e10 — within 1.5 decimal orders of double summation-order
-#: noise crossing the 2-dp grid, the same class the sweep caught live
-#: in agg_pricing_summary.
+#: (decimal-exact money sum): at sf≈1 it measures 3.0e10 — within 1.5
+#: decimal orders of double summation-order noise crossing the 2-dp
+#: grid.
 SHARED_ANSI_SQL = """
     SELECT l_returnflag, l_linestatus,
            COUNT(*) AS n_items,
@@ -86,7 +85,7 @@ def q_sql_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows at every fixture SF and the oracle hash compares nothing
     (both engines vacuously agree on empty).  1.5× keeps ~25 % of
     orders in the result (measured: 380/1,500 at sf0.001, 3,717/15,000
-    at sf0.01 — the r9 driver row — 37,430/150,000 at sf0.1), making
+    at sf0.01, 37,430/150,000 at sf0.1), making
     the driver's value hash a real check.
     """
     register_views(spark, sf_dir, ("orders",))

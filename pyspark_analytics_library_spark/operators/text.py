@@ -126,22 +126,17 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ml.feature — identical arithmetic must run on both engines).
     tf = corpus term count per lang; idf = ln((N+1)/(df+1)).
 
-    Two-phase top-k (round-13 500 k-doc probe, SCALE.md): a single
-    window partitioned by lang funnels the whole vocab-sized score
-    table into ≤ |langs| sort tasks — a guaranteed straggler at a
-    100 TB vocabulary, though NOT the measured bottleneck at the probe
-    (the fixture vocab collapses to 15.5 k rows; the 27 M-token
-    explode+aggregate scan dominates and the two-phase cost is noise:
-    32.1 s vs 33.7 s single-window).  Phase 1 ranks within (lang,
+    Two-phase top-k: a single window partitioned by lang funnels the
+    whole vocab-sized score table into ≤ |langs| sort tasks — a
+    guaranteed straggler at a 100 TB vocabulary (at a 500 k-doc probe
+    the two-phase cost is noise: 32.1 s vs 33.7 s).  Phase 1 ranks
+    within (lang,
     32-way word-hash salt) — ~32× parallel — and keeps each bucket's
     top-5; phase 2 ranks the ≤ 160 survivors per lang.  LOSSLESS:
     (score desc, word asc) is a total order and every global-top-5 row
     is necessarily in its own bucket's top-5, so the final rn over
     survivors equals the rn over the full table.  The per-lang doc
-    counts stay an explicit broadcast (|langs| rows — the totals side
-    the probe confirmed broadcast-safe; the probe also verified the
-    FULL 500 k-doc output against DuckDB exactly, both before and
-    after this rewrite)."""
+    counts stay an explicit broadcast (|langs| rows)."""
     t = load_tables(spark, sf_dir)
     tokens = t["documents"].select(
         "doc_id", "lang", F.explode(tokenize()).alias("word")
@@ -150,12 +145,11 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stopword-class word appears in ~every document, and
     # countDistinct's per-task partial state — the distinct doc_id SET
     # per (lang, word) group — is the one aggregation state map-side
-    # combine cannot collapse (the r12 agg_distinct_skew finding, 3.2×
-    # at 200 M rows on a 50 %-hot key).  distinct() shuffles on all
-    # three columns, so a hot word spreads across every reducer and no
-    # task ever materializes a corpus-sized doc set.  Costs one extra
-    # vocab-sized join vs the fused two-agg groupBy — measured noise at
-    # the 500 k-doc probe (SCALE.md round-13).
+    # combine cannot collapse (see agg_distinct_skew).  distinct()
+    # shuffles on all three columns, so a hot word spreads across every
+    # reducer and no task ever materializes a corpus-sized doc set.
+    # Costs one extra vocab-sized join vs the fused two-agg groupBy —
+    # noise at a 500 k-doc probe.
     tf_only = tokens.groupBy("lang", "word").agg(F.count(F.lit(1)).alias("tf"))
     df_only = (
         tokens.distinct()

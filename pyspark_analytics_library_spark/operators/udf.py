@@ -151,7 +151,7 @@ def q_udf_cogrouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cogrouped applyInPandas: per customer, join their orders stats
     with their event stats in Python (pd.merge per key).
 
-    Full oracle (upgraded from rows-only in round 5): the per-key
+    Full oracle: the per-key
     pandas function computes deterministic counts + a 4dp-rounded sum,
     exactly a FULL OUTER JOIN of the two per-key aggregates — the
     oracle verifies the cogrouped result, not its mechanism.  Sum
@@ -248,7 +248,7 @@ def q_udtf_table_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF exploding each document into (word, length) rows
     (lateral join over the table).
 
-    Full oracle (upgraded from rows-only in round 5): the UDTF is
+    Full oracle: the UDTF is
     deterministic — single-space split, empties dropped — so the
     relational unnest computes the identical row set; the oracle
     verifies the UDTF *result*, not its mechanism (same stance as the

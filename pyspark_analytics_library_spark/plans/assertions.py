@@ -23,8 +23,3 @@ def assert_in_plan(df: DataFrame, *needles: str) -> None:
     missing = [n for n in needles if n not in text]
     assert not missing, f"plan missing {missing}; plan:\n{text}"
 
-
-def assert_not_in_plan(df: DataFrame, *needles: str) -> None:
-    text = plan_text(df)
-    present = [n for n in needles if n in text]
-    assert not present, f"plan unexpectedly contains {present}; plan:\n{text}"

@@ -73,90 +73,6 @@ _MODULE_ORDER = (
 )
 
 
-@dataclass(frozen=True)
-class _Pin:
-    """A front-of-rotation pin for a query whose semantics changed.
-
-    ``until`` names the round whose GREEN driver row clears the pin.
-    ``expect_rows`` (when set) additionally requires the clearing row to
-    record exactly that ``spark_rows`` at the driver SF — so a green row
-    produced by a stale checkout (pre-change code that happens to run in
-    the named round) cannot clear the pin without attesting the NEW
-    result shape.  Leave it ``None`` only for changes that do not move
-    the driver-SF row count (then the round number is the only guard).
-    """
-
-    until: int
-    expect_rows: int | None = None
-
-
-#: Queries emitted literally first — ahead of the attestation tiers and
-#: the module round-robin (a within-module frontload only surfaces ~3
-#: names per module in a 50-query prefix).  Add a pin when a query's
-#: semantics/oracle change after its last driver attestation; the pin
-#: clears on a green driver row from round >= ``until`` whose recorded
-#: row count matches ``expect_rows`` (see :class:`_Pin`), after which
-#: the query re-enters the normal staleness rotation — a pin can never
-#: permanently starve the least-recently-attested tier.
-#:
-#: Pin history (all cleared): stream_stateful/stream_sink/
-#: stream_foreach_batch/dedup_connected_components (until r5, machinery
-#: changes in r4-5, cleared r9); sql_subquery_scalar (until r9,
-#: threshold 4x->1.5x, cleared r9); query_important_stock /
-#: query_volume_shipping (until r10, scale-invariant threshold
-#: rewrites from the all-SF vacuity sweep, cleared r10 at 155/14 rows).
-#:
-#: mm_decode_batch (until r13): round 13 replaced the hash-derived
-#: decode stub with the real IMG1 binary codec — new output schema
-#: (width/height/n_px/px_md5/px_sum), new oracle.  expect_rows=None
-#: per the _Pin contract: the driver-SF row count (500 = all
-#: documents) does not move with the change.
-#:
-#: sink_merge_upsert (until r13): check column rescaled
-#: total_price_k → total_price_m after the round-13 SCD-2 100× probe
-#: showed the /1e3 4-dp spelling sits inside cross-engine
-#: summation-order noise at 15 M rows.  Row count (5 status groups at
-#: sf0.01) does not move → expect_rows=None.
-#: agg_pricing_summary / agg_rollup / join_broadcast (until r15):
-#: price sums respelled money_sum (decimal-exact, §5.3 rule 12) after
-#: the round-15 sf≈1 sweep caught all three flipping a 4-dp digit to
-#: cross-engine (and even cross-RUN DuckDB thread-order) summation
-#: noise.  agg_histogram / sql_ansi_shared (until r15): same
-#: respelling from the sweep's follow-up margin audit (their 2-dp
-#: money columns measured 7.1e10 / 3.0e10 at sf1 — within 1.5 decimal
-#: orders of the same flip).  Row counts at the driver SF do not move
-#: → expect_rows=None.
-#:
-#: Round 16 respelled money_sum again (operand-level DECIMAL — §5.3
-#: rule 12, ADVICE r15) WITHOUT pins: the change was verified
-#: output-BIT-IDENTICAL to the r15 spelling on both engines at
-#: sf0.001/0.01/0.1 for all five rule-12 queries before landing
-#: (SCALE.md round-16 ledger), so the green r15 driver rows attest
-#: exactly the values the new code produces — there is no result
-#: delta for a pin to force re-attestation of, and the r16 rotation
-#: budget (r11 tier 3 + r12 tier 48 = 51 > K=50) had zero slack for
-#: cosmetic pins.  The ADVICE r15 stale-checkout hazard is moot for
-#: an output-identical change by construction.
-#:
-#: CONVENTION (round 17, VERDICT r16 #4): any future mid-round
-#: semantics change that is NOT proven output-bit-identical pins with
-#: ``until = N + 1`` where N is the round being built — the pin then
-#: clears on the very next driver attestation instead of holding a
-#: front-of-rotation slot against a stale checkout.  Round 17 itself
-#: adds no pins: the quantile over-cap fallback only changes behavior
-#: past a state cap the driver SFs never trip, and the bench
-#: restructure touches no declared query.
-_PRIORITY: dict[str, _Pin] = {
-    "mm_decode_batch": _Pin(until=13),
-    "sink_merge_upsert": _Pin(until=13),
-    "agg_pricing_summary": _Pin(until=15),
-    "agg_rollup": _Pin(until=15),
-    "join_broadcast": _Pin(until=15),
-    "agg_histogram": _Pin(until=15),
-    "sql_ansi_shared": _Pin(until=15),
-}
-
-
 def _row_green(row: object) -> bool:
     """Whether a driver CORRECTNESS row records a PASS.
 
@@ -176,19 +92,17 @@ def _row_green(row: object) -> bool:
     return all(row.get(k) for k in ("rows_match", "schema_match", "hash_match"))
 
 
-def _driver_green_rows(
-    root: pathlib.Path | None = None,
-) -> dict[str, list[tuple[int, int | None]]]:
-    """All GREEN driver CORRECTNESS rows per query: (round, spark_rows).
+def _driver_attestation_rounds(root: pathlib.Path | None = None) -> dict[str, int]:
+    """Latest round with a GREEN driver CORRECTNESS row, per query name.
 
     Parses the committed ``CORRECTNESS_r*.json`` artifacts at the repo
     root (two directories above this file).  A query absent from every
-    file — or present only with failing rows — has never been
-    driver-attested.  Missing/unparseable files are skipped — outside
-    the repo checkout this degrades to "nothing attested", which leaves
-    the ordering well-defined.
+    file, or present only with failing rows, has never been
+    driver-attested.  Missing or unparseable files are skipped, so
+    outside the repo checkout this degrades to "nothing attested",
+    which leaves the ordering well-defined.
     """
-    rows: dict[str, list[tuple[int, int | None]]] = {}
+    rounds: dict[str, int] = {}
     if root is None:
         root = pathlib.Path(__file__).resolve().parent.parent
     for path in root.glob("CORRECTNESS_r*.json"):
@@ -204,123 +118,53 @@ def _driver_green_rows(
             continue
         for name, row in data.items():
             if _row_green(row):
-                n = row.get("spark_rows")
-                rows.setdefault(name, []).append(
-                    (rnd, n if isinstance(n, int) else None)
-                )
-    return rows
-
-
-def _driver_attestation_rounds(root: pathlib.Path | None = None) -> dict[str, int]:
-    """Latest driver round with a GREEN CORRECTNESS row per query name."""
-    return {
-        name: max(rnd for rnd, _ in rows)
-        for name, rows in _driver_green_rows(root).items()
-    }
-
-
-def _active_pins(green: dict[str, list[tuple[int, int | None]]]) -> list[str]:
-    """Names of :data:`_PRIORITY` pins not yet cleared by a green driver
-    row from round >= ``until`` that records ``expect_rows`` (when set)."""
-
-    def cleared(name: str, pin: _Pin) -> bool:
-        return any(
-            rnd >= pin.until and (pin.expect_rows is None or n == pin.expect_rows)
-            for rnd, n in green.get(name, ())
-        )
-
-    return [
-        name
-        for name, pin in _PRIORITY.items()
-        if name in REGISTRY and not cleared(name, pin)
-    ]
-
-
-#: How many rounds past ``until`` a pin may stay active before it is
-#: considered STALE (ADVICE r11: a pin whose ``expect_rows`` was
-#: miscalculated — or whose row count moved with a driver-SF change —
-#: would otherwise hold a front-of-rotation slot forever, silently).
-#: Two rounds is enough for the named round plus one sampling miss.
-PIN_STALENESS_GRACE = 2
-
-
-def stale_pins(current_round: int) -> list[str]:
-    """Active pins that have outlived ``until + PIN_STALENESS_GRACE``.
-
-    ``tests/test_driver_contract.py`` fails the contract suite when
-    this is non-empty, so a wrong ``expect_rows`` surfaces as a red
-    test instead of a permanently pinned rotation slot.  Callers
-    compute ``current_round`` from the newest committed
-    ``CORRECTNESS_r*.json`` (that file's round + 1 is the round being
-    built)."""
-    active = _active_pins(_driver_green_rows())
-    return [
-        name
-        for name in active
-        if current_round > _PRIORITY[name].until + PIN_STALENESS_GRACE
-    ]
-
-
-def latest_attested_round() -> int:
-    """Highest round number with any committed CORRECTNESS artifact (0
-    if none) — ``+ 1`` is the round currently being built."""
-    rounds = [r for rows in _driver_green_rows().values() for r, _ in rows]
-    return max(rounds, default=0)
+                rounds[name] = max(rounds.get(name, 0), rnd)
+    return rounds
 
 
 def ordered_registry() -> dict[str, QuerySpec]:
     """REGISTRY ordered least-recently-driver-attested first.
 
-    The driver's per-round CORRECTNESS check samples a prefix of this
-    ordering, so the order IS the attestation schedule: queries with no
-    driver CORRECTNESS row in any committed ``CORRECTNESS_r*.json`` come
-    first (with :data:`_PRIORITY` flattened to the very front), then
+    The driver's CORRECTNESS check samples a prefix of this ordering, so
+    the order IS the attestation schedule: queries with no green driver
+    row in any committed ``CORRECTNESS_r*.json`` come first, then
     queries whose latest attestation is oldest.  Within each tier,
     emission is round-robin across modules (see _MODULE_ORDER) so any
     prefix still spans operator families.  Registration order follows
     Python import order, which cross-module imports distort; this
     function is the stable, intent-bearing order used by
-    ``__spark_entry__.queries()``.
+    ``__spark_entry__.queries()``.  A query whose semantics change is
+    re-attested through this rotation.
 
     ROTATION INVARIANT (do not regress): with a driver sample of K
     queries per round and committed CORRECTNESS files as the only
     state, the attestation floor (min over queries of the latest green
     round) advances whenever the stalest tier has <= K members, because
-    that whole tier sits in the K-prefix.  With 197 queries and K=50
-    the steady state is a 4-round rotation — no query's latest green
-    row is ever older than 4 rounds — PROVIDED (a) new queries are not
-    added faster than K/round, (b) pins are temporary (each clears on
-    its named round's green row, enforced by :class:`_Pin`), and (c)
-    failing rows do NOT count as attestation (see :func:`_row_green`),
-    so a failed query re-enters the prefix immediately instead of
-    aging out.  ``tests/test_driver_contract.py`` pins the prefix
-    property (frontload + starvation + pin-expiry tests).
+    that whole tier sits in the K-prefix.  With 198 queries and K=50
+    the steady state is a 4-round rotation (no query's latest green
+    row is ever older than 4 rounds) PROVIDED (a) new queries are not
+    added faster than K per round and (b) failing rows do NOT count as
+    attestation (see :func:`_row_green`), so a failed query re-enters
+    the prefix immediately instead of aging out.
+    ``tests/test_driver_contract.py`` pins the prefix property
+    (frontload, stalest-tier and starvation tests).
 
-    HEADROOM MATH (round-14 budget lesson): the floor advances in a
-    round only when pins + never-attested newcomers + the stalest tier
-    all fit the K=50 prefix.  In the steady K·R rotation each tier
-    holds ~total/R members, so the hard ceiling for an R-round floor
-    cadence is total ≤ K·R: at 198 queries the 4-round rotation leaves
-    exactly 200−198 = 2 PERMANENT new-query slots; a round whose
-    stalest tier is full-sized (49–50, as after any steady round) can
-    afford ZERO new queries and ZERO pins without stalling the floor.
-    Spend slack deliberately: add queries (or pin changed ones) only
-    in a round whose stalest tier is measured small, via
+    HEADROOM: in the steady K·R rotation each tier holds ~total/R
+    members, so the hard ceiling for an R-round floor cadence is
+    total ≤ K·R: at 198 queries the 4-round rotation leaves exactly
+    200−198 = 2 permanent new-query slots, and a round whose stalest
+    tier is full-sized (49–50, as after any steady round) can afford
+    zero new queries without stalling the floor.  Add queries only in
+    a round whose stalest tier is measured small, via
     ``_driver_attestation_rounds()``.
     """
-    green = _driver_green_rows()
-    attested = {name: max(r for r, _ in rows) for name, rows in green.items()}
-    pinned = _active_pins(green)
+    attested = _driver_attestation_rounds()
     tiers: dict[int, dict[str, list[QuerySpec]]] = {}
     for spec in REGISTRY.values():
-        if spec.name in pinned:
-            continue
         tier = attested.get(spec.name, 0)
         mod = spec.fn.__module__.rsplit(".", 1)[-1]
         tiers.setdefault(tier, {}).setdefault(mod, []).append(spec)
     out: dict[str, QuerySpec] = {}
-    for name in pinned:
-        out[name] = REGISTRY[name]
     for tier in sorted(tiers):
         by_module = tiers[tier]
         for specs in by_module.values():

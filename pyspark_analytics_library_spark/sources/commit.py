@@ -1,53 +1,42 @@
-"""Manifest-pointer table commits — the object-store-safe sink mode
-(VERDICT r14 #4).
+"""Manifest-pointer table commits — the object-store-safe sink mode.
 
 :func:`~pyspark_analytics_library_spark.sources.scan_queries._staged_overwrite`'s
-rename-swap discipline is crash-safe only where directory ``rename`` is
-atomic (POSIX local FS, HDFS).  On object stores (S3A et al.) "rename"
-is copy+delete: a crash mid-"rename" leaves a half-copied table that
-reads as if whole — the one deployment class a 100 TB engine actually
-writes to.  This module supplies the committer that works there:
+rename swap is crash-safe only where directory ``rename`` is atomic
+(POSIX local FS, HDFS).  On object stores "rename" is copy+delete: a
+crash mid-"rename" leaves a half-copied table that reads as if whole.
+This module's committer works there:
 
 * a table is hash-bucketed parquet data files plus one small JSON ROOT
   manifest per committed generation; nothing is ever renamed;
-* the commit point is an atomic swap of ONE small pointer file
-  ``<target>/_CURRENT`` naming the live root.  Locally that swap is
-  ``os.replace`` (POSIX-atomic); on an object store the same protocol
-  is a single-object PUT, which S3 guarantees atomic with
-  read-after-write consistency — no multi-object window exists at all;
+* the commit point is an atomic swap of ONE pointer file
+  ``<target>/_CURRENT`` naming the live root — ``os.replace`` locally,
+  a single-object PUT on an object store;
 * readers resolve pointer → root → file list (:func:`resolve_table`)
-  and scan exactly those files, so a reader sees either the complete
-  old generation or the complete new one, never a mixture.
+  and scan exactly those files, so a reader sees the complete old
+  generation or the complete new one, never a mixture.
 
-Crash matrix: a failure anywhere before the pointer swap leaves the
-pointer (and therefore every reader) on the old root — the commit
-simply never happened, and its unreferenced files are reclaimed by
-:func:`table_vacuum`.  There is no window in which the table is absent
-or truncated — strictly stronger than the rename swap's documented
-"briefly absent, recoverable by hand" gap.
+A failure anywhere before the pointer swap leaves every reader on the
+old root; the commit's unreferenced files are reclaimed by
+:func:`table_vacuum`.  The table is never absent or truncated.
 
-Layout — Iceberg's manifest-list core, keyed on (partition, bucket):
-the root lists one ``manifests/part-*.json`` ref per non-empty group,
-and each part holds that group's data-file and tombstone entries.  A
-commit rewrites only the parts (and data files) of the groups it
-touches and carries every other part BY REFERENCE, so commit-path
-driver I/O is O(touched buckets), metered by :data:`MANIFEST_IO`.
+Layout — Iceberg's manifest-list core, keyed on (partition, bucket): the
+root lists one ``manifests/part-*.json`` ref per non-empty group, and
+each part holds that group's data-file and tombstone entries.  A commit
+rewrites only the parts (and data files) of the groups it touches and
+carries every other part BY REFERENCE, so commit-path driver I/O is
+O(touched buckets), metered by :data:`MANIFEST_IO`.
 
-Surface: :func:`table_init` / :func:`table_merge` (copy-on-write,
-touched buckets only) / :func:`table_read` / :func:`table_lookup`;
-:func:`table_append` (fast append); :func:`table_merge_mor` /
-:func:`table_delete` (merge-on-read key tombstones — an upsert's
-delta files are listed as its own tombstones, a delete writes key-only
-tombstone files; see :func:`_masked_scan`);
-:func:`table_compact` (bin-packing + tombstone apply, capacity-aware
-for clustered layouts); metadata-only schema evolution
+Surface: :func:`table_init`, :func:`table_merge` (copy-on-write,
+touched buckets only), :func:`table_read`, :func:`table_lookup`,
+:func:`table_append`, :func:`table_merge_mor` / :func:`table_delete`
+(merge-on-read key tombstones, see :func:`_masked_scan`),
+:func:`table_compact`, metadata-only schema evolution
 (:func:`table_add_columns`, :func:`table_rename_column`,
-:func:`table_drop_column`); a declared partition spec with
-:func:`table_drop_partition`; per-file min/max stats pruning;
-intra-bucket and z-order clustering; retention
-(``keep_generations`` / :func:`table_set_retention`,
-:func:`table_vacuum`); :func:`table_stats`; :func:`with_commit_retry`.
-"""
+:func:`table_drop_column`), a declared partition spec with
+:func:`table_drop_partition`, per-file min/max stats pruning,
+intra-bucket and z-order clustering, retention
+(:func:`table_set_retention`, :func:`table_vacuum`),
+:func:`table_stats` and :func:`with_commit_retry`."""
 
 from __future__ import annotations
 
@@ -99,39 +88,16 @@ def resolve_table(target: str) -> str:
 
 
 # ---------------------------------------------------------------------------
-# Per-FILE manifests — incremental merge commits (VERDICT r15 #2)
+# Per-FILE manifests.  Data files live under
+# ``<target>/data/<commit-id>/bucket=<b>/``, hash-bucketed by the merge
+# key (``pmod(xxhash64(key), n_buckets)``), so "which files can contain
+# key k" is pure arithmetic.  A generation is a ROOT
+# ``<target>/manifest-<seq>-<uuid>.json`` (bucket spec, schema,
+# properties, one part ref per non-empty (partition, bucket)); parts
+# under ``<target>/manifests/`` list each data file and tombstone.
+# n_buckets (``table_init``, default 16) is the rewrite granularity:
+# size it so a bucket is a few GB (100 TB / 32k buckets ≈ 3 GB).
 # ---------------------------------------------------------------------------
-#
-# At 100 TB a merge that touches 0.1 % of keys must not rewrite the
-# other 99.9 % — the Delta/Iceberg core pattern is a MANIFEST that
-# lists data FILES, so a commit rewrites only the files containing
-# touched keys and carries every other file over BY REFERENCE:
-#
-# * data files live under ``<target>/data/<commit-id>/bucket=<b>/`` —
-#   hash-bucketed by the merge key (``pmod(xxhash64(key), n_buckets)``),
-#   so "which files can contain key k" is pure arithmetic, no index;
-# * a generation is a small JSON ROOT ``<target>/manifest-<seq>-<uuid>.json``
-#   holding the bucket spec, the table schema and properties, and one
-#   part ref per non-empty (partition, bucket); the part files under
-#   ``<target>/manifests/`` list (relative path, bucket, stats) per
-#   data file and tombstone;
-# * ``_CURRENT`` names the live root;
-# * a merge commit reads ONLY the files of buckets present in the
-#   update batch, applies the caller's merge function to (that slice,
-#   updates), writes the replacement files and parts for those
-#   buckets, and writes a new root = carried-over part refs + new ones.
-#   Crash during data/manifest write → pointer (and readers) stay on
-#   the old root; superseded files are reclaimed by
-#   :func:`_prune_manifests` after the next successful commit, crashed-
-#   commit orphans by :func:`table_vacuum`.
-#
-# Cost model at 100 TB: a merge rewrites touched buckets only —
-# storage and write amplification scale with the UPDATE footprint, not
-# the table.  n_buckets (a ``table_init`` argument, default 16) is the
-# rewrite granularity: production tables size it so bucket ≈
-# a few GB (e.g. 100 TB / 32k buckets ≈ 3 GB); the fixture default 16
-# keeps file counts test-visible.  Bucket-pruned READS fall out for
-# free: a point lookup on the merge key needs one bucket's files.
 
 MANIFEST_PREFIX = "manifest-"
 DATA_DIR = "data"
@@ -173,27 +139,23 @@ def _bucket_expr(key: str, n_buckets: int):
 
 
 # ---------------------------------------------------------------------------
-# Round 19: PARTITION SPEC — declared table partitioning (VERDICT r18
-# next #1: every real 100-TB fact table is date/tenant-partitioned;
-# per-file min/max stats prune well only under time-ordered ingest,
-# while a declared partition drops whole directories from planning
-# BEFORE any stats pass, survives compaction reshuffles and late data,
-# and gives retention a partition-granular drop primitive.)
+# PARTITION SPEC — declared table partitioning.  Per-file min/max stats
+# prune well only under time-ordered ingest, while a declared partition
+# drops whole directories from planning BEFORE any stats pass, survives
+# compaction reshuffles and late data, and gives retention a
+# partition-granular drop primitive.
 #
 # Layout: data files gain one directory level —
 # ``data/<commit>/_part=<value>/bucket=<b>/part-*.parquet`` — and every
-# manifest entry / part ref carries its partition value,
-# so the internal grouping key everywhere becomes (partition, bucket)
-# (:func:`_gkey`; ``part`` is None on unpartitioned tables and on every
-# pre-r19 manifest, which therefore keep reading unchanged).
+# manifest entry / part ref carries its partition value, so the grouping
+# key everywhere is (partition, bucket) (:func:`_gkey`; ``part`` is None
+# on unpartitioned tables).
 #
 # Tombstones are deliberately PARTITION-LESS (gkey (None, bucket)):
-# merge-on-read masking is keyed on the bucket key and an update may
-# MOVE a row's partition value, so a tombstone must mask the old row in
-# whatever partition it lies — the same reason Iceberg's equality
-# deletes are partition-scoped only when the writer can prove the key
-# set's partition.  The cost is honest: compaction of a tombstoned
-# bucket is bucket-wide; pure small-file packing stays partition-local.
+# masking is keyed on the bucket key and an update may MOVE a row's
+# partition value, so a tombstone must mask the old row in whatever
+# partition it lies.  Compaction of a tombstoned bucket is therefore
+# bucket-wide; pure small-file packing stays partition-local.
 # ---------------------------------------------------------------------------
 
 #: Directory/manifest encoding of a NULL partition value (Hive's).
@@ -205,7 +167,7 @@ _TRANSFORMS = ("identity", "day", "month")
 
 def _gkey(e: dict) -> tuple:
     """The (partition, bucket) grouping key of a manifest entry or
-    part ref — THE unit of incremental rewrite since round 19.
+    part ref — THE unit of incremental rewrite.
     ``part`` is absent/None on unpartitioned tables and tombstones."""
     return (e.get("part"), e["bucket"])
 
@@ -309,11 +271,10 @@ _STATS_OK = ("int", "uint", "float", "double", "string", "large_string",
              "date", "timestamp")
 
 
-#: Max recorded length for STRING bounds in manifest stats (round 18,
-#: the Iceberg write.metadata.truncate position): long string bounds —
-#: comment-class columns — dominated manifest size while pruning on
-#: them almost never fires past a short prefix.  32 keeps the 26-char
-#: fixed-width datetime encodings intact.
+#: Max recorded length for STRING bounds in manifest stats (Iceberg's
+#: write.metadata.truncate): long comment-class bounds dominate manifest
+#: size while pruning on them almost never fires past a short prefix.
+#: 32 keeps the 26-char fixed-width datetime encodings intact.
 _STR_BOUND_MAX = 32
 
 
@@ -342,11 +303,10 @@ def _trunc_upper(s: str):
 def _json_stat(v):
     """A parquet footer statistic as a JSON value whose natural Python
     ordering matches the column ordering.  Datetimes are normalized to
-    a FIXED-WIDTH tz-less UTC ISO string (review r17: bare
-    ``isoformat()`` appends offsets and drops zero microseconds, so a
-    tz-aware footer stat vs a naive query bound compared lexicographic-
-    ally could lossily prune a live file); naive inputs are taken as
-    UTC — the engine's session timezone."""
+    a FIXED-WIDTH tz-less UTC ISO string (bare ``isoformat()`` appends
+    offsets and drops zero microseconds, so a tz-aware footer stat vs a
+    naive query bound compared lexicographically could lossily prune a
+    live file); naive inputs are taken as UTC, the session timezone."""
     import datetime
 
     if isinstance(v, datetime.datetime):
@@ -361,20 +321,15 @@ def _json_stat(v):
 
 
 def _file_stats(full_path: str, key: str) -> dict[str, list]:
-    """Per-column [min, max] from a parquet file's FOOTER (row-group
-    statistics merged) — the Iceberg/Delta scan-planning core — plus
-    the file's row count under the reserved ``_rows`` key and per-
-    column NULL counts under ``_nulls`` (both popped by the caller;
-    compaction's capacity rule needs rows, and the merge-on-read
-    clean/dirty split needs the bucket key's null count because footer
-    [min, max] never covers NULLs — round 18).  Footer
-    reads are metadata-only (no row data touched); at 100 TB this runs
-    where the file was written (executor-side) — here the writer is
-    local, so a local footer read is the same I/O.  Columns beyond
-    :data:`STATS_MAX_COLS` (except the bucket ``key``, always recorded:
-    merge-on-read masking and point lookups prune on it), nested/binary
-    columns, and columns with no footer stats are simply absent
-    (pruning treats absent as unknown → keep the file)."""
+    """Per-column [min, max] from a parquet file's FOOTER (row-group stats
+    merged), plus the row count under ``_rows`` and per-column NULL counts
+    under ``_nulls`` (both popped by the caller: compaction's capacity rule
+    needs rows, and the merge-on-read clean/dirty split needs the key's
+    null count because [min, max] never covers NULLs).  Metadata-only.
+    Columns beyond :data:`STATS_MAX_COLS` (except the bucket ``key``,
+    always recorded: masking and point lookups prune on it),
+    nested/binary columns, and columns with no footer stats are absent,
+    which pruning treats as unknown → keep the file."""
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(full_path).metadata
@@ -437,28 +392,19 @@ _Z_CELLS = 64
 def _zorder_expr(df: DataFrame, cols: list[str]):
     """12-bit Z-value (bit-interleaved QUANTILE ranks) over 2 or 3
     numeric/temporal columns — the intra-bucket MULTI-column sort key
-    (round 18, VERDICT r17 next #6; Delta's OPTIMIZE ZORDER position).
-    Two columns interleave 6-bit ranks (64 quantile cells each); three
-    columns interleave 4-bit ranks (16 cells each, round 19 — the same
-    12-bit z budget, so the sort key and the per-column boundary agg
-    stay the same size as dimensions are added).
+    (Delta's OPTIMIZE ZORDER).  Two columns interleave 6-bit ranks (64
+    cells each); three interleave 4-bit ranks (16 cells), keeping the same
+    12-bit budget.  Interleaving keeps locality on every dimension, where
+    a lexicographic sort serves only the leading column.
 
-    Ranks are quantile CELLS, not min/max scaling (measured: a skewed
-    or outlier-stretched distribution compresses most rows into a
-    sliver of the min/max range, collapsing that dimension's locality
-    — the r18 1.5 M-row probe read 88 %-kept on the price dimension
-    under min/max vs ~30 % under quantile cells).  ONE tiny agg job
-    computes 63 boundaries per column (driver gets 126 doubles); the
-    per-row rank is a 63-comparison fold over an array literal and the
-    bits interleave as a static JVM expression tree — whole-stage-
-    codegen friendly, no UDF.  Per-commit normalization is harmless:
-    the z-value orders the PHYSICAL layout only and is never stored —
-    pruning reads the real per-file column stats.
-
-    Interleaving preserves locality on BOTH dimensions at once, so a
-    range read on either column (or a 2-D band) keeps few files —
-    where a lexicographic 2-column sort serves only the leading
-    column."""
+    Ranks are quantile CELLS, not min/max scaling: a skewed distribution
+    compresses most rows into a sliver of the min/max range (a 1.5 M-row
+    probe kept 88 % of files on the price dimension under min/max vs
+    ~30 % under quantile cells).  ONE tiny agg job computes 63 boundaries
+    per column; the per-row rank is a 63-comparison fold over an array
+    literal and the bits interleave as a static JVM expression — no UDF.
+    The z-value orders the PHYSICAL layout only and is never stored, so
+    per-commit normalization is harmless."""
     from pyspark.sql import functions as F
 
     def as_double(c):
@@ -520,30 +466,19 @@ def _write_bucketed(
     [{"path": rel, "bucket": b, "gen": gen, "stats": {col: [mn, mx]}}].
 
     ``partitionBy`` lays files out as ``bucket=<b>/part-*.parquet`` and
-    DROPS the helper column from the data files; readers get the
-    original schema back because :func:`table_read` passes explicit
-    leaf files (no basePath → no partition-column inference).  One
-    repartition on the bucket id keeps it to one file per non-empty
-    bucket at fixture scale (a production writer would also split by
-    target file size).
+    DROPS the helper column; readers get the original schema back because
+    :func:`table_read` passes explicit leaf files (no partition-column
+    inference).  One repartition on the bucket id — on (partition, bucket)
+    when ``part_spec`` = ``(column, transform)`` adds the ``_part=<value>/``
+    level above the bucket dirs — gives one file per non-empty group
+    (``max_records_per_file`` splits further).
 
-    ``gen`` stamps the entries with the COMMIT SEQUENCE that produced
-    them (round 17) — the merge-on-read read path orders delta rows
-    against tombstones by it.  ``stats`` carries per-file column
-    min/max lifted from the parquet footers (round 17, VERDICT r16
-    #4): file-level range pruning for predicates bucket arithmetic
-    can't touch.
-
-    ``part_spec`` = ``(column, transform)`` (round 19) adds the
-    declared-partition directory level ``_part=<value>/`` ABOVE the
-    bucket dirs and stamps each entry with its partition value.  The
-    repartition then hashes on (partition, bucket) so each non-empty
-    (partition, bucket) combo lands in exactly one task → one file
-    (plus the max_records_per_file splitter).
-
-    ``key`` also gets its footer stats recorded whatever the table's
-    width (see :func:`_file_stats`), so :func:`table_merge_mor` can
-    list these same entries as tombstones."""
+    ``gen`` stamps the entries with the COMMIT SEQUENCE that produced them;
+    the merge-on-read path orders delta rows against tombstones by it.
+    ``stats`` carries per-file footer min/max for range pruning bucket
+    arithmetic can't do; ``key`` always gets its stats (see
+    :func:`_file_stats`), so :func:`table_merge_mor` can list these same
+    entries as tombstones."""
     for reserved in ("bucket", "_zorder", "_part"):
         if reserved in df.columns:
             # The helper column would collide (partitionBy would route
@@ -571,7 +506,7 @@ def _write_bucketed(
             staged = staged.repartition(n_buckets, "bucket")
         drop_helper = None
         if isinstance(cluster_by, (list, tuple)):
-            # MULTI-column clustering (round 18): sort each bucket
+            # MULTI-column clustering: sort each bucket
             # partition by the bit-interleaved Z-value of the listed
             # columns — locality on every listed dimension, so per-file
             # stats prune range reads on ANY of them.  The helper
@@ -590,7 +525,7 @@ def _write_bucketed(
                     drop_helper, _zorder_expr(df, list(cluster_by))
                 ).sortWithinPartitions(*sort_prefix, drop_helper)
         elif cluster_by is not None:
-            # Intra-bucket CLUSTERING (round 17): sort each bucket
+            # Intra-bucket CLUSTERING: sort each bucket
             # partition by the cluster column and split on row count —
             # consecutive files then carry near-disjoint [min, max]
             # for it, so the manifest stats prune RANGE reads WITHIN a
@@ -634,7 +569,7 @@ def _write_bucketed(
                     "gen": gen,
                     "rows": stats.pop("_rows"),
                     "bytes": os.path.getsize(full),
-                    # NULL count of the bucket key (round 18): the
+                    # NULL count of the bucket key: the
                     # clean/dirty MoR split needs it because footer
                     # [min, max] never covers NULLs — absent/None =
                     # unknown = assume NULLs present (never lossy).
@@ -648,22 +583,16 @@ def _write_bucketed(
 
 
 class ConcurrentCommitError(RuntimeError):
-    """The table's live manifest moved between a merge's read of it and
-    its commit point — another writer committed in between.  Committing
-    anyway would silently DROP the other writer's changes (the new
-    manifest's carried-file list was derived from a superseded state).
-    The merge's data files are orphans (pruned later); the caller
-    should re-read and retry the merge — classic optimistic
-    concurrency, the same protocol lakehouse formats run.
+    """The table's live manifest moved between an op's read of it and its
+    commit point — another writer committed in between.  Committing
+    anyway would silently DROP the other writer's changes.  The op's data
+    files are orphans (pruned later); re-read and retry — optimistic
+    concurrency, as lakehouse formats run it.
 
-    Honesty note: on a local FS this check-then-swap has a residual
-    race window of microseconds (no portable compare-and-swap over
-    ``os.replace``); it reliably catches real interleavings — a
-    concurrent commit that lands any time before the final pointer
-    write — which is the lost-update class that matters.  An
-    object-store deployment closes the window completely with a
-    conditional PUT (ETag/If-Match precondition) on ``_CURRENT``,
-    which is exactly where this check sits."""
+    On a local FS the check-then-swap keeps a race window of microseconds
+    (no portable compare-and-swap over ``os.replace``); an object store
+    closes it with a conditional PUT (ETag/If-Match) on ``_CURRENT``,
+    which is where this check sits."""
 
 
 def _live_manifest_name(target: str) -> str:
@@ -678,40 +607,32 @@ _ABSENT = "<absent>"
 
 #: Age (seconds) below which a file referenced by NO manifest is left
 #: alone by :func:`table_vacuum`: it may belong to an IN-FLIGHT commit
-#: whose manifest has not been written yet (review r16: a concurrent
-#: writer's sweep could otherwise unlink files another writer's Spark
-#: job was just writing).  Crashed-commit orphans are reclaimed by the
-#: first vacuum past the grace.
+#: whose manifest has not been written yet (a concurrent writer's sweep
+#: could otherwise unlink files another writer's Spark job is writing).
+#: Crashed-commit orphans are reclaimed by the first vacuum past it.
 ORPHAN_GRACE_S = 3600.0
 
 
 def _commit_manifest(
     target: str, manifest: dict, expect_current: str | None = None
 ) -> str:
-    """Write a new root manifest and atomically repoint ``_CURRENT`` at
-    it — the commit point.  With ``expect_current`` set, refuse
-    (``ConcurrentCommitError``) if the pointer state changed (moved off
-    that manifest, or appeared when :data:`_ABSENT` was expected) — see
-    the exception class for the optimistic-concurrency contract.
+    """Write a new root manifest and atomically repoint ``_CURRENT`` at it —
+    the commit point.  With ``expect_current`` set, raise
+    :class:`ConcurrentCommitError` if the pointer moved off that manifest
+    (or appeared when :data:`_ABSENT` was expected).
 
-    The candidate manifest lives at a DOT-PREFIXED temp name (excluded
-    by every ``MANIFEST_PREFIX`` listing, like the pointer temp) until
-    the commit point, and is ``os.replace``d to its final name only
-    after the concurrency check passes (ADVICE r16: an uncommitted
-    manifest visible under its final name could win a KEEP_GENERATIONS
-    retention slot in a CONCURRENT writer's ``_prune_manifests`` — it
-    sorts by seq, and the in-flight manifest carries the highest — and
-    evict the genuine previous generation before this commit either
-    lands or aborts).  It is still removed on every non-commit exit;
-    the temp naming just makes the pre-commit window invisible to other
-    writers instead of merely short."""
+    The candidate lives at a DOT-PREFIXED temp name (excluded from every
+    ``MANIFEST_PREFIX`` listing) until the check passes: visible under its
+    final name, an uncommitted manifest could win a retention slot in a
+    CONCURRENT writer's ``_prune_manifests`` (it sorts by seq and carries
+    the highest) and evict the genuine previous generation.  It is removed
+    on every non-commit exit."""
     import json
 
-    # The commit SEQUENCE rides the FILENAME (round 18): retention
-    # ordering then needs a directory listing, not a JSON parse per
-    # root — at table scale the roots are the largest JSON
-    # documents in the table, and the pruner sorts them on every
-    # commit.  Zero-padded so lexicographic = numeric.
+    # The commit SEQUENCE rides the FILENAME: retention ordering then
+    # needs a directory listing, not a JSON parse per root (the roots
+    # are the table's largest JSON documents, and the pruner sorts them
+    # on every commit).  Zero-padded so lexicographic = numeric.
     seq = int(manifest.get("seq", -1))
     name = f"{MANIFEST_PREFIX}{seq:010d}-{uuid.uuid4().hex[:12]}.json"
     tmp = os.path.join(target, f".{name}.tmp")
@@ -750,10 +671,10 @@ def _manifest_seq(path: str) -> int:
     """Commit sequence recorded in a manifest (−1 when unreadable or
     pre-seq) — the deterministic retention/time-travel order.  mtime
     is NOT used: its granularity (1 s on some filesystems) and clock
-    skew on shared stores can misorder close commits (review r16).
-    Since round 18 the sequence is embedded in the filename
-    (``manifest-<seq10>-<uuid>.json``) so ordering needs no JSON
-    parse; pre-r18 names fall back to reading the document."""
+    skew on shared stores can misorder close commits.  The sequence is
+    embedded in the filename (``manifest-<seq10>-<uuid>.json``) so
+    ordering needs no JSON parse; other names fall back to reading the
+    document."""
     import re as _re
 
     m = _re.match(rf"{MANIFEST_PREFIX}(\d{{10}})-", os.path.basename(path))
@@ -820,12 +741,11 @@ def _schema_shape(st):
 
 
 # ---------------------------------------------------------------------------
-# Manifest list: root + per-(partition, bucket) parts.  At 100 TB a
-# table is millions of files, and a one-document manifest would make
-# every commit/lookup a several-hundred-MB driver-side JSON parse.  A
-# merge/lookup/pruned read parses the root plus ONLY the touched
-# groups' parts; untouched parts are carried into the next root BY
-# REFERENCE, never reread or rewritten.
+# Manifest list: root + per-(partition, bucket) parts.  A table of
+# millions of files in one document would make every commit/lookup a
+# several-hundred-MB driver-side JSON parse.  A merge/lookup/pruned
+# read parses the root plus ONLY the touched groups' parts; untouched
+# parts are carried into the next root BY REFERENCE.
 # ---------------------------------------------------------------------------
 
 
@@ -836,18 +756,14 @@ def _write_part(
     tombs: list[dict],
     part: str | None = None,
 ) -> dict:
-    """Write one bucket's manifest PART file and return its root-level
-    ref.  The ref carries everything commit-path planning needs so the
-    part itself is loaded only when the bucket is actually touched or
-    scanned: entry counts and summed rows/bytes (compaction's capacity
-    rule and scan sizing).  Deliberately NO column stats at the ref
-    level (round 18, measured): hash routing mixes every bucket, so a
-    per-bucket part's column union always spans the full domain —
-    ref-level bounds cost root bytes (the one document every commit
-    parses) and can never prune.  Column pruning lives at the per-FILE
-    entry level, where intra-bucket clustering makes bounds tight.
-    Parts are immutable and unreferenced until the root commits — a
-    crash leaves an orphan for vacuum, never a visible state."""
+    """Write one group's manifest PART file and return its root-level ref,
+    which carries what commit-path planning needs (entry counts, summed
+    rows/bytes) so the part loads only when its group is touched or
+    scanned.  NO column stats at the ref level: hash routing mixes every
+    bucket, so a part's column union spans the full domain — ref-level
+    bounds would cost root bytes and never prune.  Parts are immutable and
+    unreferenced until the root commits; a crash leaves an orphan for
+    vacuum, never a visible state."""
     import json
 
     os.makedirs(os.path.join(target, PARTS_DIR), exist_ok=True)
@@ -868,9 +784,8 @@ def _write_part(
         "bytes": sum(e.get("bytes") or 0 for e in files),
     }
     if part is not None:
-        # Partitioned tables (round 19): parts are keyed (partition,
-        # bucket) so a partition-pruned read loads ONLY that
-        # partition's part files — the whole point of the spec.
+        # Partitioned tables key parts (partition, bucket) so a
+        # partition-pruned read loads ONLY that partition's part files.
         ref["part"] = part
     return ref
 
@@ -878,21 +793,16 @@ def _write_part(
 def _man_entries(
     target: str, man: dict, buckets=None, partitions=None, gkeys=None
 ) -> tuple[list[dict], list[dict]]:
-    """The (data files, tombstones) a manifest makes visible,
-    restricted to ``buckets`` / ``partitions`` / exact ``gkeys`` when
-    given — the ONE accessor every op reads listings through.  Only
-    the parts surviving the filters are loaded, which is the whole
-    point of the layout.  A range read without any restriction parses
-    all parts — O(parts) driver work by design (column pruning then
-    happens per entry; see :func:`_write_part` for why the refs carry
-    no column bounds).
+    """The (data files, tombstones) a manifest makes visible, restricted to
+    ``buckets`` / ``partitions`` / exact ``gkeys`` when given — the ONE
+    accessor every op reads listings through.  Only the parts surviving
+    the filters are loaded; an unrestricted read parses all parts.
 
-    TOMBSTONES are partition-less (round 19) and mask rows in ANY
-    partition of their bucket, so the ``partitions`` filter applies to
-    data files only — a partition-pruned read still sees every
-    tombstone of the surviving buckets.  The exact-``gkeys`` filter
-    (compaction's unit selector) is literal: tombstones are returned
-    only when their own (None, bucket) gkey is listed."""
+    TOMBSTONES are partition-less and mask rows in ANY partition of their
+    bucket, so the ``partitions`` filter applies to data files only.  The
+    exact-``gkeys`` filter (compaction's unit selector) is literal:
+    tombstones are returned only when their own (None, bucket) gkey is
+    listed."""
     if partitions is not None and not callable(partitions):
         partitions = (lambda s: (lambda p: p in s))(set(partitions))
 
@@ -977,7 +887,7 @@ def _cluster_args(man: dict) -> dict:
     compactions once declared at init.  (:func:`table_delete`'s
     tombstone write calls _write_bucketed WITHOUT these: its tombstones
     are key-only frames and partition-less by design — see the
-    round-19 banner.)"""
+    partition-spec banner.)"""
     return {
         "cluster_by": man.get("cluster_by"),
         "max_records_per_file": man.get("max_records_per_file"),
@@ -998,37 +908,25 @@ def table_init(
 ) -> dict:
     """(Re)seed ``target`` as a v2 per-file manifest table from ``df``.
 
-    A full bucketed write + manifest commit — the ONE unavoidable
-    whole-table write; every later :func:`table_merge` is incremental.
-    Re-seeding an existing v2 table is an ordinary commit (readers on
-    the old manifest are undisturbed; superseded files are pruned),
-    and carries the same optimistic-concurrency check as
-    :func:`table_merge`: a competing commit landing mid-seed raises
-    :class:`ConcurrentCommitError` instead of being silently replaced
-    (review r16 — previously only merges were protected).
-    Refuses a pointerless non-empty target (i.e. a rename-mode parquet
-    table): nesting a manifest layout inside a live flat table would
-    leave bare-path readers seeing mixed content — the caller must
-    migrate or clear the target explicitly.
+    A full bucketed write + manifest commit — the ONE whole-table write;
+    later commits are incremental.  Re-seeding an existing v2 table is an
+    ordinary commit with the same optimistic-concurrency check as
+    :func:`table_merge`.  Refuses a pointerless non-empty target (a
+    rename-mode parquet table): nesting a manifest layout inside a live
+    flat table would leave bare-path readers seeing mixed content.
 
-    ``keep_generations`` (round 18, default :data:`KEEP_GENERATIONS`) is
-    the table's RETENTION property: how many committed generations
-    (live included) stay readable for time travel / rollback before
-    :func:`_prune_manifests` reclaims them.  The table's time-travel
-    SLA, stated instead of hard-coded; changeable later with
+    ``keep_generations`` (default :data:`KEEP_GENERATIONS`) is the table's
+    RETENTION property: how many committed generations (live included)
+    stay readable for time travel / rollback; see
     :func:`table_set_retention`.
 
-    ``partition_by`` + ``partition_transform`` (round 19, VERDICT r18
-    next #1) declare the table PARTITION SPEC: data files gain a
-    ``_part=<transform(col)>/`` directory level above the bucket dirs,
-    manifest entries and parts are keyed (partition, bucket),
-    reads prune partitions BEFORE any file-stats pass
-    (``table_read(partitions=...)`` or automatically from ``where`` /
-    ``where_in`` on the partition column), retention gains
+    ``partition_by`` + ``partition_transform`` (``identity`` | ``day`` |
+    ``month``; day/month need a date/timestamp column) declare the
+    PARTITION SPEC: data files gain a ``_part=<transform(col)>/`` level,
+    entries and parts are keyed (partition, bucket), reads prune
+    partitions BEFORE any file-stats pass, retention gains
     :func:`table_drop_partition`, and small-file compaction goes
-    partition-local.  Transforms: ``identity`` | ``day`` | ``month``
-    (day/month need a date/timestamp column).  A table property, fixed
-    at init like the bucket spec."""
+    partition-local.  Fixed at init like the bucket spec."""
     ptr_exists = os.path.exists(os.path.join(target, CURRENT_POINTER))
     if os.path.isdir(target) and os.listdir(target) and not ptr_exists:
         raise ValueError(
@@ -1069,13 +967,13 @@ def table_init(
         "seq": seq,
         "bucket_key": bucket_key,
         "n_buckets": n_buckets,
-        # Clustering is a TABLE PROPERTY (round 17): recorded here and
-        # honored by every later rewriting commit via _cluster_args.
+        # Clustering is a TABLE PROPERTY: recorded here and honored by
+        # every later rewriting commit via _cluster_args.
         "cluster_by": cluster_by,
         "max_records_per_file": max_records_per_file,
         "keep_generations": int(keep_generations),
-        # Partition spec (round 19): a table property like the bucket
-        # spec — every rewriting commit routes through it.
+        # Partition spec: a table property like the bucket spec —
+        # every rewriting commit routes through it.
         "partition_by": partition_by,
         "partition_transform": partition_transform if partition_by else None,
         "schema": df.schema.json(),
@@ -1092,10 +990,9 @@ def table_init(
 def table_history(target: str) -> list[str]:
     """Manifest names retained for ``target``, newest first, live
     manifest first — the time-travel surface.  Bounded by the table's
-    ``keep_generations`` RETENTION property (round 18; default
-    :data:`KEEP_GENERATIONS` = live + one superseded), i.e. the stated
-    time-travel SLA — raise it at init or with
-    :func:`table_set_retention`."""
+    ``keep_generations`` RETENTION property (default
+    :data:`KEEP_GENERATIONS` = live + one superseded) — raise it at init
+    or with :func:`table_set_retention`."""
     retained, expired = _retention(target, _live_manifest_name(target), None)
     return retained + expired
 
@@ -1103,13 +1000,12 @@ def table_history(target: str) -> list[str]:
 def _scan_coalesce(spark, items: list[dict]) -> int:
     """Task count for scanning ``items``' files: enough partitions to
     fill the cluster and to keep ``spark.sql.files.maxPartitionBytes``
-    (default 128 MiB) per task, but never one task per tiny file.  Entries without recorded byte sizes (pre-r18
-    manifests) get NO coalescing (ADVICE r18: a fixed files-per-task
-    estimate silently under-parallelized legacy manifests holding LARGE
-    files — without sizes the "files are tiny" premise is unprovable,
-    so leave Spark's own split planning alone; only the byte-based path
-    may shrink the task count, and it never shrinks below the natural
-    large-table partition count)."""
+    (default 128 MiB) per task, but never one task per tiny file.
+    Entries without recorded byte sizes get NO coalescing: without
+    sizes the "files are tiny" premise is unprovable, and a fixed
+    files-per-task estimate under-parallelizes LARGE files.  Only the
+    byte-based path may shrink the task count, and never below the
+    cluster's default parallelism."""
     par = spark.sparkContext.defaultParallelism
     sizes = [e.get("bytes") for e in items]
     if any(s is None for s in sizes):
@@ -1137,7 +1033,7 @@ def _ranges_may_intersect(a, b) -> bool:
 def _may_mask(entry: dict, tomb: dict, key: str) -> bool:
     """May tombstone ``tomb`` mask any row of data file ``entry``?
     False only on PROOF of impossibility — the scan-pruning core of
-    the merge-on-read read path (VERDICT r17 next #2):
+    the merge-on-read read path:
 
     * gen ordering: a tombstone at gen <= the file's gen masks nothing
       in it (masking is strictly newest-wins);
@@ -1206,30 +1102,18 @@ def _disk_name(col: str, suffix: list[dict]) -> str:
 
 
 def _read_paths(spark, schema, paths: list[str]) -> DataFrame:
-    """``spark.read.schema(schema).parquet(*paths)`` with the file
-    listing kept DRIVER-SIDE on local masters (round-20 optimization,
-    guide §6 "file listing" / §5 "the driver").
+    """``spark.read.schema(schema).parquet(*paths)`` with the file listing
+    kept DRIVER-SIDE on local masters.
 
-    Every explicit-path reader in this module hands Spark a manifest-
-    derived leaf-file list; when that list exceeds
-    ``spark.sql.sources.parallelPartitionDiscovery.threshold`` (default
-    32) Spark launches a DISTRIBUTED LISTING JOB whose launch latency
-    (~0.25 s measured at bench scale) dwarfs the work — listing 64
-    local files driver-side takes ~5 ms, so the job cut reader
-    construction 0.36 s → 0.10 s per scan (OPTIMIZATION_r20.md #2).
-    The commit layer builds several such readers per table op, so the
-    tax repeated per op.
-
-    Scale posture: driver-side listing is only a win when per-file
-    metadata calls are cheap (local FS / fast shared FS); on an object
-    store 1000 sequential HEADs would cost far more than one listing
-    job, so this gates to LOCAL masters only — the same discipline as
-    the loader trim in ``sources/io.py`` and the CC loop's partition
-    trim.  The threshold is raised to the path count under
-    :func:`conf.scoped_conf` whatever its current value (reading it
-    first, outside the lock, could see another thread's flip) and
-    restored exactly; it only affects how paths are LISTED, never what
-    is read."""
+    Past ``spark.sql.sources.parallelPartitionDiscovery.threshold``
+    (default 32) paths Spark launches a DISTRIBUTED LISTING JOB whose
+    launch latency (~0.25 s) dwarfs listing 64 local files driver-side
+    (~5 ms); the commit layer builds several readers per table op.  On an
+    object store 1000 sequential HEADs cost far more than one listing job,
+    so this applies to LOCAL masters only.  The threshold is raised to the
+    path count under :func:`conf.scoped_conf` (reading it first, outside
+    the lock, could see another thread's flip) and restored exactly; it
+    only affects how paths are LISTED, never what is read."""
     if not conf.is_local_master(spark):
         return spark.read.schema(schema).parquet(*paths)
     key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
@@ -1239,9 +1123,9 @@ def _read_paths(spark, schema, paths: list[str]) -> DataFrame:
 
 def _scan_entries(spark, target: str, man: dict, schema, items):
     """Parquet scan of manifest entries in the table's CURRENT column
-    names, honoring rename epochs (round 19, VERDICT r18 next #4):
-    files written before a :func:`table_rename_column` store the
-    column under its OLD name, and a single current-schema scan would
+    names, honoring rename epochs: files written before a
+    :func:`table_rename_column` store the column under its OLD name,
+    and a single current-schema scan would
     silently read NULLs there.  Entries group by how many renames
     postdate their gen; each group scans with its epoch's names and
     aliases back to current — bounded by the rename count, and
@@ -1287,43 +1171,29 @@ def _masked_scan(
     entries: list[dict],
     tombstones: list[dict],
 ) -> DataFrame:
-    """Scan ``entries`` under ``man``'s schema with merge-on-read
-    tombstones applied — the ONE read path every v2 reader goes
-    through (manifest-recorded schema enforced per ADVICE r16: a scan
-    that takes its schema from an arbitrary file would turn per-file
-    drift into silent layout skew).
+    """Scan ``entries`` under ``man``'s schema with merge-on-read tombstones
+    applied — the ONE read path of every v2 reader.  The manifest schema
+    is enforced: taking it from an arbitrary file would turn per-file
+    drift into silent layout skew.
 
-    Masking semantics: a row from a file committed at ``gen`` g is
-    dropped when a tombstone committed at gen t > g holds its key —
-    newest-wins upsert.  Round 18 restructured the plan around
-    :func:`_mask_split` (VERDICT r17 next #2):
+    A row from a file committed at gen g is dropped when a tombstone
+    committed at gen t > g holds its key (newest-wins).  The plan splits
+    on :func:`_mask_split`:
 
-    * CLEAN files — provably unmaskable by gen ordering, key-range
-      disjointness, or null-freeness — are one PLAIN parquet relation,
-      no join at all (the newest delta commit is always clean; on a
-      clustered/time-ordered table most of the base is too);
-    * DIRTY files form ONE parquet relation (not one per gen — the
-      r17 shape paid per-gen plan/scan overhead linear in commits
-      since compaction) with ``_gen`` derived from the commit id in
-      the file path via a literal map (commits-since-compaction
-      entries, JVM-side, whole-stage-codegen friendly);
-    * tombstones that can affect a dirty file are aggregated to
-      per-key MAX gen (masked iff max > gen — smaller broadcast,
-      duplicate update batches dedup to one row) and broadcast into
-      the anti-join.  A tombstone is either an MoR delta file (its
-      commit lists it as data AND tombstone) or a key-only file from
-      :func:`table_delete` (or an older MoR commit); both scan with a
-      key-only schema, so parquet reads just a delta file's key
-      column, and its ``_tgen`` equals its own rows' ``_gen``, so it
-      never masks them.
+    * CLEAN files — provably unmaskable — are one PLAIN parquet relation,
+      no join (the newest delta commit always is; on a clustered table
+      most of the base is too);
+    * DIRTY files form ONE parquet relation (one per gen would cost plan
+      overhead linear in commits since compaction), with ``_gen`` mapped
+      from the commit id in the file path by a literal map;
+    * the tombstones that can affect a dirty file are scanned key-only,
+      reduced to per-key MAX gen and broadcast into the anti-join.  An MoR
+      delta file is its own tombstone: its ``_tgen`` equals its rows'
+      ``_gen``, so it never masks them.
 
-    Tombstones written with the since-removed positional deletion
-    vectors carry a ``dv`` field; it is ignored, because those commits
-    also wrote the key tombstones this mask reads.
-
-    Tombstones are bucket-filtered to ``entries``' buckets inside the
-    split (update-batch-sized by construction; compaction keeps them
-    from accumulating)."""
+    A tombstone's ``dv`` field (positional deletion vectors, written by
+    older versions) is ignored: those commits also wrote the key
+    tombstones this mask reads."""
     import json as _json
 
     from pyspark.sql import functions as F
@@ -1336,7 +1206,7 @@ def _masked_scan(
 
     def plain(items):
         df = _scan_entries(spark, target, man, schema, items)
-        # Small-file task collapse (round 18, measured): when total
+        # Small-file task collapse: when total
         # bytes are tiny, Spark's file bin-packing degenerates to ONE
         # file per task (maxSplitBytes bottoms out at openCostInBytes),
         # so a 275-small-file MoR backlog scheduled 275 tasks — pure
@@ -1388,7 +1258,7 @@ def _masked_scan(
     )
     masked = data.join(
         F.broadcast(tomb),
-        # eqNullSafe (ADVICE r17): a NULL bucket key is one ordinary
+        # eqNullSafe: a NULL bucket key is one ordinary
         # merge group (bucket = pmod(xxhash64(NULL), n), same writer-
         # and reader-side), and CoW scd1 merges treat it that way — a
         # null-UNSAFE == here would never mask the old NULL-key base
@@ -1489,55 +1359,39 @@ def table_read(
     where_in: tuple | None = None,
     partitions=None,
 ) -> DataFrame:
-    """Scan a manifest's file list — the v2 reader.  Explicit leaf
-    paths (not the data/ root): a reader never globs, so orphaned
-    files from an in-flight or crashed commit are invisible to it.
-    Merge-on-read tombstones (from :func:`table_merge_mor`) are applied
-    transparently — see :func:`_masked_scan`.
+    """Scan a manifest's file list — the v2 reader.  Explicit leaf paths: a
+    reader never globs, so orphaned files from an in-flight or crashed
+    commit are invisible to it.  Merge-on-read tombstones are applied by
+    :func:`_masked_scan`.
 
     ``at`` names a retained manifest from :func:`table_history` for a
-    time-travel read (the previous generation's files are kept intact
-    until pruned; its manifest still lists exactly them).  Default:
-    the live manifest.
+    time-travel read; default: the live manifest.
 
-    ``where`` = ``(col, lo, hi)`` — or a LIST of such tuples for a
-    conjunctive multi-column band (round 18, the natural read shape
-    over z-order clustering) — is a RANGE predicate (``lo``/``hi``
-    may each be None for a half-open range) served with FILE-LEVEL
-    stats pruning (round 17, VERDICT r16 #4): files whose manifest
-    [min, max] for ``col`` cannot intersect the range are never
-    scanned — the Iceberg/Delta scan-planning core, reaching
-    predicates bucket arithmetic can't (the bucket key hashes away
-    order).  A range read parses every part — O(buckets), the
-    layout's stated cost — and then prunes per entry.
-    Files without recorded stats for ``col`` are kept (absent =
-    unknown); the residual filters still apply row-level, pushed into
-    the parquet scan as usual.
+    ``where`` = ``(col, lo, hi)`` — or a LIST of them, a conjunctive band
+    (the read shape z-order clustering serves) — is a RANGE predicate
+    (``lo``/``hi`` may be None) served with FILE-LEVEL stats pruning:
+    files whose manifest [min, max] for ``col`` cannot intersect are never
+    scanned.  A range read parses every part — O(buckets) — then prunes
+    per entry; files without stats for ``col`` are kept.  The residual
+    filters still apply row-level.
 
-    ``where_in`` = ``(col, [v1, v2, ...])`` is the IN-LIST / point
-    predicate twin (round 18, VERDICT r17 missing #4): a file is kept
-    only if SOME listed value can fall inside its recorded [min, max]
-    — each value is a degenerate range, so the same non-lossy overlap
-    rules (temporal widening, unknown→keep) apply.  NULL values follow
-    SQL ``IN`` semantics (never match), so they prune nothing and
-    return nothing.  Composes with ``where`` as a conjunction.
+    ``where_in`` = ``(col, [v1, ...])`` is the IN-list twin: a file is kept
+    if SOME value can fall inside its [min, max], under the same non-lossy
+    rules.  NULL values never match (SQL ``IN``).  Composes with ``where``
+    as a conjunction.
 
-    ``partitions`` (round 19, partitioned tables only) restricts the
-    read to the listed partition VALUES (transformed encoding, e.g.
-    ``"2024-01-05"`` for a day transform; ``None`` selects the NULL
-    partition) — partition-level selection with NO residual row
-    filter, the "read one day" primitive.  Independently, ``where`` /
-    ``where_in`` predicates ON the partition column prune partitions
-    automatically BEFORE any file-stats pass — the pruned partitions'
-    manifest parts are never even parsed (metered by
-    :data:`MANIFEST_IO`)."""
+    ``partitions`` (partitioned tables only) restricts the read to the
+    listed partition VALUES (transformed encoding, e.g. ``"2024-01-05"``
+    for a day transform; ``None`` is the NULL partition) with no residual
+    row filter.  ``where`` / ``where_in`` predicates ON the partition
+    column also prune partitions BEFORE any file-stats pass; pruned
+    partitions' parts are never parsed (metered by :data:`MANIFEST_IO`)."""
     from pyspark.sql import functions as F
 
     man = _manifest_at(target, at)
-    # ``where`` may be one (col, lo, hi) tuple or a list of them
-    # (round 18: multi-column clustering makes conjunctive 2-D band
-    # reads the natural shape) — every predicate prunes independently
-    # (conjunction: a file survives only if it can satisfy ALL).
+    # ``where`` may be one (col, lo, hi) tuple or a list of them; every
+    # predicate prunes independently (conjunction: a file survives only
+    # if it can satisfy ALL).
     preds = []
     if where is not None:
         preds = [where] if isinstance(where, tuple) else list(where)
@@ -1547,7 +1401,7 @@ def table_read(
 
     def ecol(e, c):
         # Entry stats are keyed by the name the column had WHEN THE
-        # FILE WAS WRITTEN (round 19): translate through the entry's
+        # FILE WAS WRITTEN: translate through the entry's
         # rename epoch, else pruning on a renamed column would consult
         # a key old files never recorded.
         return _disk_name(c, _rename_suffix(man, e.get("gen")))
@@ -1617,7 +1471,7 @@ def _widen_date_encoding(v):
 def prefix_range(prefix: str) -> tuple[str, str]:
     """A string ``LIKE 'prefix%'`` predicate as the [lo, hi] range
     ``table_read(where=(col, *prefix_range(p)))`` serves with stats
-    pruning (round 18, VERDICT r17 missing #4): lo = the prefix
+    pruning: lo = the prefix
     itself, hi = the prefix with its last char incremented (carrying
     left past U+10FFFF) — every string starting with ``prefix``
     orders in [lo, hi), so the inclusive-range scan is a sound
@@ -1642,12 +1496,12 @@ def _stats_overlap(entry: dict, col: str, lo, hi, dtype: str | None = None) -> b
 
     ``dtype`` is the column's Spark type name from the manifest schema.
     For date/timestamp-family columns every compared encoding is
-    widened to the fixed-width midnight-timestamp form first (ADVICE
-    r17: a DATE column's 10-char stats against a datetime bound's
-    26-char encoding compared lexicographically — ``'2024-01-06' <
-    '2024-01-06T00:00:00.000000'`` — lossily pruning a file whose
-    2024-01-06 rows DO satisfy the row filter after Spark's
-    date-to-timestamp cast).  Widening only under a known temporal
+    widened to the fixed-width midnight-timestamp form first: a DATE
+    column's 10-char stats against a datetime bound's 26-char encoding
+    compare lexicographically — ``'2024-01-06' <
+    '2024-01-06T00:00:00.000000'`` — and would lossily prune a file
+    whose 2024-01-06 rows DO satisfy the row filter after Spark's
+    date-to-timestamp cast.  Widening only under a known temporal
     dtype keeps string columns with date-shaped VALUES untouched;
     without a dtype, a mixed-width temporal-shaped comparison is
     treated as unknown → keep."""
@@ -1687,29 +1541,23 @@ def _stats_overlap(entry: dict, col: str, lo, hi, dtype: str | None = None) -> b
 
 
 def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
-    """Incremental merge commit: rewrite ONLY the buckets the update
-    batch touches; carry every other data file into the new manifest
-    by reference (the Delta/Iceberg copy-on-write core).
+    """Incremental copy-on-write merge: rewrite ONLY the buckets the update
+    batch touches; carry every other data file into the new manifest by
+    reference.
 
     ``merge_fn(base_slice, updates) -> DataFrame`` supplies the merge
-    semantics (e.g. scd1_merged / the SCD-2 close-out) and must return
-    the table schema.  It sees ONLY the touched-bucket slice of the
-    base — sound because an update to key k can, by bucket-routing
-    arithmetic, only affect files in bucket(k), which is touched by
-    construction; rows of untouched buckets are bit-identical carried
-    files, not rewritten rows.
+    semantics (e.g. scd1_merged) and must return the table schema.  It
+    sees ONLY the touched-bucket slice of the base — sound because an
+    update to key k can only affect files in bucket(k), which is touched
+    by construction.
 
-    Returns commit stats — {"touched_buckets", "rewritten_files",
-    "carried_files", "new_files"} — so callers and tests can assert
-    the strict-subset rewrite property instead of trusting it.
+    Returns {"touched_buckets", "rewritten_files", "carried_files",
+    "new_files"} so callers can assert the strict-subset rewrite.
 
-    Concurrency: optimistic — the commit refuses
-    (:class:`ConcurrentCommitError`) if another writer moved the live
-    manifest between this merge's read of it and its commit point,
-    because the carried-file list would then describe a superseded
-    state and committing would silently drop the other writer's
-    changes.  Catch it, re-read, retry.
-    """
+    Concurrency: optimistic — the commit raises
+    :class:`ConcurrentCommitError` if another writer moved the live
+    manifest since this merge read it (the carried-file list would
+    describe a superseded state).  Catch it, re-read, retry."""
     from pyspark.sql import functions as F
 
     base_name, man = _load_manifest(target)
@@ -1793,27 +1641,21 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
 
 
 def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> None:
-    """Reclaim superseded roots and the data only they reference,
-    keeping the live root plus the newest ``keep_generations - 1``
-    others by commit SEQUENCE (retention is the TABLE PROPERTY recorded
-    in the just-committed root — round 18; default
-    :data:`KEEP_GENERATIONS`).  Runs after the pointer swap — a crash
-    here costs disk, never correctness.
+    """Reclaim superseded roots and the data only they reference, keeping
+    the live root plus the newest ``keep_generations - 1`` others by
+    commit SEQUENCE (the retention recorded in the just-committed root).
+    Runs after the pointer swap — a crash here costs disk, never
+    correctness.
 
-    Deletion discipline: only what is PROVABLY unreferenced.  A part
-    file also referenced by a kept root is carried state — untouched.
-    DEAD parts (referenced by pruned roots only) are loaded to
-    enumerate their data files, and kept parts are loaded ONLY for
-    those same groups and their buckets' tombstone groups (the only
-    places an overlap can exist: append/MoR carry old entries into
-    the replacement part, and an MoR delta file is also a tombstone)
-    — so the commit-path pruner stays O(changed buckets), never
-    O(table).
-    Files referenced by NO manifest (crashed or in-flight commits) are
-    left to :func:`table_vacuum`, which holds the full reference set —
-    the same split Iceberg makes: expire-snapshots is a commit-path
-    job, remove-orphan-files a maintenance job.
-    """
+    Deletes only what is PROVABLY unreferenced.  DEAD parts (referenced
+    by pruned roots only) are loaded to enumerate their data files; kept
+    parts are loaded ONLY for those groups and their buckets' tombstone
+    groups, the only places an overlap can exist (append/MoR carry old
+    entries into the replacement part, and an MoR delta file is also a
+    tombstone) — so the pruner stays O(changed buckets).  Files no
+    manifest references (crashed or in-flight commits) are left to
+    :func:`table_vacuum` — Iceberg's expire-snapshots vs
+    remove-orphan-files split."""
 
     def _try_read(rel: str, read=_read_json) -> dict | None:
         try:
@@ -1822,7 +1664,7 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
             return None
 
     def data_refs(doc: dict) -> set[str] | None:
-        # Tombstone files are live data too (round 17): a kept
+        # Tombstone files are live data too: a kept
         # manifest's merge-on-read masking breaks if the pruner
         # unlinks them.  None on a malformed document — callers on
         # the KEPT side must abort (never delete what can't be proven
@@ -1910,39 +1752,27 @@ def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
     lookup needs no index, just the manifest.  Evaluated with one
     Spark expression over a keys-sized local frame (xxhash64 is a JVM
     function; re-implementing it Python-side would be a second source
-    of truth that could silently drift)."""
+    of truth that could silently drift).  The ids are deduplicated on
+    the driver: a Spark ``distinct`` costs one more job for a
+    keys-sized frame."""
     return {
         r["b"]
-        for r in _key_frame(spark, man, keys).select(
-            _bucket_expr(man["bucket_key"], int(man["n_buckets"])).alias("b")
-        )
-        .distinct()
+        for r in _key_frame(spark, man, keys)
+        .select(_bucket_expr(man["bucket_key"], int(man["n_buckets"])).alias("b"))
         .collect()
     }
 
 
-def _files_for_keys(spark, man: dict, keys: list, target: str) -> list[dict]:
-    """Manifest entries whose bucket can contain one of ``keys`` (kept
-    as the test-visible seam; only those buckets' parts are loaded)."""
-    wanted = _buckets_for_keys(spark, man, keys)
-    return _man_entries(target, man, buckets=wanted)[0]
-
-
 def table_lookup(spark, target: str, keys: list) -> DataFrame:
-    """Point lookup: rows whose merge key is in ``keys``, scanning ONLY
-    the files of the keys' buckets — and, within those buckets, only
-    the files whose per-file key [min, max] can contain one of the
-    keys (round 18, VERDICT r17 missing #4: on banded-ingest tables a
-    bucket accumulates one file per commit, and most commits' key
-    ranges exclude the probe).  At 100 TB / 32k buckets a lookup
-    touches a few GB instead of the table; the residual filter inside
-    the scanned files is an ordinary pushed-down parquet predicate.
-    The driver likewise parses only those buckets' manifest parts.
-    Returns an empty (correctly-typed) frame when no bucket matches.
+    """Point lookup: rows whose merge key is in ``keys``, scanning ONLY the
+    keys' buckets' files whose per-file key [min, max] can contain a key
+    (on banded-ingest tables a bucket holds one file per commit, most of
+    whose ranges exclude the probe).  The driver parses only those
+    buckets' parts.  Returns an empty, correctly-typed frame when nothing
+    matches.
 
-    NULL keys follow SQL ``IN`` semantics end to end: the residual
-    ``isin`` never matches NULL, so stats pruning may ignore NULL
-    probes too (use :func:`table_read` + ``isNull`` for NULL rows)."""
+    NULL keys follow SQL ``IN`` semantics: the residual ``isin`` never
+    matches NULL (use :func:`table_read` + ``isNull`` for NULL rows)."""
     from pyspark.sql import functions as F
 
     man = _load_manifest(target)[1]
@@ -1961,25 +1791,18 @@ def table_lookup(spark, target: str, keys: list) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Round 17: table maintenance — fast append, merge-on-read, compaction
-# (VERDICT r16 "What's missing" #1/#2: the first maintenance jobs a
-# real 100 TB CDC user reaches for; Delta/Iceberg ship all three.)
+# Table maintenance — fast append, merge-on-read, compaction: the first
+# maintenance jobs a CDC user reaches for; Delta/Iceberg ship all three.
 # ---------------------------------------------------------------------------
 
 
 def table_append(spark, target: str, rows: DataFrame) -> dict:
-    """Fast append (Iceberg's append commit): write ``rows`` as NEW
-    bucketed data files and commit a manifest that adds them — no base
-    file is read or rewritten, so the commit cost is exactly the batch
-    size.  This is the high-rate ingest path; it is also what
-    accumulates small files per bucket, which :func:`table_compact`
-    bin-packs back to one.
-
-    Append semantics: duplicate keys simply coexist (a log, not an
-    upsert) — use :func:`table_merge` (copy-on-write) or
-    :func:`table_merge_mor` (merge-on-read) for keyed updates.
-    Optimistic concurrency as everywhere: the commit refuses if another
-    writer landed first."""
+    """Fast append (Iceberg's append commit): write ``rows`` as NEW bucketed
+    data files and commit a manifest that adds them; no base file is read
+    or rewritten.  The high-rate ingest path — it accumulates small files,
+    which :func:`table_compact` packs.  Duplicate keys coexist (a log,
+    not an upsert); keyed updates are :func:`table_merge` /
+    :func:`table_merge_mor`."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -2001,9 +1824,8 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
         **_cluster_args(man),
     )
     if not entries:
-        # Empty batch: no-op, no commit (review r17 — same discipline
-        # as table_compact; a no-op generation would evict a retained
-        # time-travel manifest for nothing).
+        # Empty batch: no-op, no commit (as in table_compact: a no-op
+        # generation would evict a retained time-travel manifest).
         return {"new_files": 0, "total_files": _man_file_count(man)}
     # Only the appended buckets' parts are loaded and rewritten (old
     # entries carry INTO the new part; other buckets' parts carry by
@@ -2016,29 +1838,22 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
 
 
 def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
-    """MERGE-ON-READ upsert (deletion-vector class, VERDICT r16
-    missing #2): commit cost is the UPDATE batch, even when its keys
-    scatter across every bucket — the case where copy-on-write
-    :func:`table_merge` degrades to a full rewrite (measured 102 %
-    write amplification, SCALE.md r16).
+    """MERGE-ON-READ upsert: commit cost is the UPDATE batch, even when its
+    keys scatter across every bucket — where copy-on-write
+    :func:`table_merge` degrades to a full rewrite (measured 102 % write
+    amplification).
 
-    Write side: ``updates`` lands as new data files (gen = this
-    commit's seq), ONE write; the manifest lists each file twice — as
-    a data file of its (partition, bucket) and as a TOMBSTONE of its
-    bucket (a delta file's key column is exactly the update keys) —
-    and nothing else is read or written.  Read side
-    (:func:`_masked_scan`, applied by every v2 reader): a base row is
-    masked when a NEWER tombstone holds its key, so the delta row wins
-    — newest-wins upsert, deferred to scan time.  The deferred cost is
-    real and deliberate: reads pay a broadcast anti-join against the
-    accumulated tombstones until :func:`table_compact` applies them
-    and resets the table to plain files.  That trade (cheap scattered
-    writes, slightly dearer reads, periodic compaction) is exactly the
-    Delta deletion-vector / Iceberg merge-on-read position.
+    Write side: ``updates`` lands as new data files (gen = this commit's
+    seq) in ONE write; the manifest lists each file as a data file of its
+    (partition, bucket) and as a TOMBSTONE of its bucket (its key column
+    is exactly the update keys).  Read side (:func:`_masked_scan`): a base
+    row is masked when a NEWER tombstone holds its key — newest-wins,
+    deferred to scan time.  Reads pay a broadcast anti-join against the
+    live tombstones until :func:`table_compact` applies them: the Delta
+    deletion-vector / Iceberg merge-on-read trade.
 
-    Batch contract: ``updates`` must carry the table schema and at
-    most one row per key (dedup the batch first — both rows would
-    survive masking, same as feeding a dup batch to a CoW upsert).
+    Batch contract: ``updates`` carries the table schema and at most one
+    row per key (both rows of a duplicate would survive masking).
     Deletes are :func:`table_delete`."""
     import json as _json
 
@@ -2068,7 +1883,7 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
     # Each delta file is also its own tombstone: its key column IS the
     # batch's key set, written once (never re-evaluated — a
     # non-deterministic batch run twice could tombstone other keys than
-    # it wrote, review r17).  The tombstone entry keeps only the key's
+    # it wrote).  The tombstone entry keeps only the key's
     # stats and no ``part`` (tombstones are partition-less);
     # _masked_scan reads just its key column, and gen ordering keeps
     # it from masking its own rows.
@@ -2094,39 +1909,31 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
 def table_compact(
     spark, target: str, min_files: int = 2, max_buckets: int | None = None
 ) -> dict:
-    """Bin-pack small files and apply merge-on-read tombstones — the
-    OPTIMIZE maintenance op (VERDICT r16 missing #1).
+    """Bin-pack small files and apply merge-on-read tombstones — the OPTIMIZE
+    maintenance op.
 
     A (partition, bucket) group is a candidate when it holds >=
-    ``min_files`` data files (append/MoR accumulation); a BUCKET is a
-    candidate when it holds ANY tombstone (so compaction is also the
-    MoR "apply" step — bucket-wide, because key-based masking crosses
-    partitions).  Each candidate's MASKED content is read once and
-    rewritten packed; untouched groups' files are carried by
-    reference, so compaction cost scales with the small-file
-    footprint, not the table — same strict-subset discipline as
-    :func:`table_merge`, same optimistic-concurrency commit (a
-    concurrent merge/append during the rewrite raises
-    :class:`ConcurrentCommitError`; catch, re-read, retry).
+    ``min_files`` data files; a BUCKET is a candidate when it holds ANY
+    tombstone (compaction is also the MoR "apply" step — bucket-wide,
+    because key-based masking crosses partitions).  Each candidate's
+    MASKED content is read once and rewritten packed; other groups carry
+    by reference, so cost scales with the small-file footprint, not the
+    table.  Same optimistic-concurrency commit as :func:`table_merge`.
 
-    ``max_buckets`` bounds one run's rewrite UNITS for incremental
-    maintenance windows (a unit = one tombstoned bucket, or one
-    (partition, bucket) packing group; remaining candidates keep
-    their tombstones — the manifest stays correct because masking is
-    per-bucket).
-    No candidates -> no commit at all (a no-op never burns a
-    generation or churns readers).  Returns
-    {"compacted_buckets", "files_before", "files_after",
-    "tombstones_cleared"}."""
+    ``max_buckets`` bounds one run's rewrite UNITS (one tombstoned bucket,
+    or one packing group); remaining candidates keep their tombstones,
+    which stays correct because masking is per-bucket.  No candidates ->
+    no commit.  Returns {"compacted_buckets", "files_before",
+    "files_after", "tombstones_cleared"}."""
     base_name, man = _load_manifest(target)
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     mrpf = man.get("max_records_per_file")
 
     # Per-GKEY (n_files, rows-or-None, n_tombstones) from part refs
     # WITHOUT loading any part (candidate selection is O(parts) driver
-    # work).  Gkeys holding only tombstones are included (review r17):
-    # a tombstone can live in a bucket with ZERO data files
-    # (table_delete of an absent key) — skipping it would leave readers
+    # work).  Gkeys holding only tombstones are included: a tombstone
+    # can live in a bucket with ZERO data files (table_delete of an
+    # absent key) — skipping it would leave readers
     # paying its anti-join and table_merge refusing the bucket forever.
     meta: dict[tuple, list] = {}
     for ref in man["parts"]:
@@ -2156,7 +1963,7 @@ def table_compact(
 
         return nf > max(1, math.ceil(rows / int(mrpf)))
 
-    # Rewrite UNITS (round 19): a bucket with live tombstones compacts
+    # Rewrite UNITS: a bucket with live tombstones compacts
     # BUCKET-WIDE (masking is key-based and a masked row may sit in any
     # partition of its bucket — applying a tombstone to one partition
     # while leaving it live for another would resurrect rows when it
@@ -2211,16 +2018,11 @@ def table_compact(
 
 
 def table_delete(spark, target: str, keys: list) -> dict:
-    """Keyed delete as a TOMBSTONE-ONLY merge-on-read commit: no data
-    file is read or written — the keys land as tombstone files (gen =
-    this commit) and every v2 reader masks all OLDER rows with those
-    keys (:func:`_masked_scan`); :func:`table_compact` later makes the
-    deletion physical and reclaims the space.  Commit cost is O(keys),
-    the minimum any format can pay.
-
-    ``keys`` is a plain Python list (point deletes are key lists by
-    nature; a predicate delete is ``table_read`` + the caller's filter
-    + this).  Key type must match the table's bucket-key column."""
+    """Keyed delete as a TOMBSTONE-ONLY merge-on-read commit: the keys land
+    as tombstone files and every reader masks all OLDER rows with those
+    keys; :func:`table_compact` later makes the deletion physical.  Commit
+    cost is O(keys).  ``keys`` is a Python list typed like the bucket-key
+    column (a predicate delete is ``table_read`` + a filter + this)."""
     base_name, man = _load_manifest(target)
     new_seq = int(man.get("seq", -1)) + 1
     tomb_entries = _write_bucketed(
@@ -2231,8 +2033,8 @@ def table_delete(spark, target: str, keys: list) -> dict:
         gen=new_seq,
     )
     if not tomb_entries:
-        # Empty key list: no-op, no commit (review r17 — a no-op
-        # generation would burn a retention slot for nothing).
+        # Empty key list: no-op, no commit (a no-op generation would
+        # burn a retention slot for nothing).
         return {
             "tombstone_files": 0,
             "live_tombstone_files": _man_tomb_count(man),
@@ -2248,25 +2050,19 @@ def table_delete(spark, target: str, keys: list) -> dict:
 
 
 def table_add_columns(spark, target: str, new_fields) -> dict:
-    """ADDITIVE schema evolution as a METADATA-ONLY commit (round 17):
-    append nullable columns to the table schema without touching one
-    data file — the Iceberg/Delta "add column" semantics.  Existing
-    files simply lack the column; every v2 reader already enforces the
-    manifest-recorded schema on the scan, and Spark's parquet reader
-    fills fields absent from a file with NULL, so old rows read as
-    NULL in the new column and the next merge/append writes it.
+    """ADDITIVE schema evolution as a METADATA-ONLY commit: append nullable
+    columns without touching a data file.  Every v2 reader enforces the
+    manifest schema on the scan and Spark's parquet reader fills absent
+    fields with NULL, so old rows read NULL in the new column.
 
-    ``new_fields`` is a list of ``StructField`` (or a ``StructType``);
-    each must be nullable (existing rows HAVE no value — a non-null
-    add would be a lie the reader cannot honor) and must not collide
-    with an existing column or the reserved ``bucket`` name.  Commit
-    cost: one manifest write + pointer swap, O(1) in table size.
-    Optimistic concurrency as everywhere.
+    ``new_fields`` is a list of ``StructField`` (or a ``StructType``); each
+    must be nullable (existing rows HAVE no value) and must not collide
+    with an existing, retired or reserved ``bucket`` name.  Cost: one
+    manifest write + pointer swap.  Optimistic concurrency as everywhere.
 
-    Dropping/renaming/retyping stays a whole-table re-seed
-    (``table_init``): those change what existing BYTES mean, which a
-    carried-by-reference file layout cannot re-interpret safely.
-    """
+    Retyping stays a whole-table re-seed (``table_init``): it changes what
+    existing BYTES mean, which a carried-by-reference layout cannot
+    re-interpret safely."""
     import json as _json
 
     from pyspark.sql.types import StructType
@@ -2333,20 +2129,15 @@ def _immutable_cols(man: dict) -> dict[str, str]:
 
 
 def table_rename_column(target: str, old: str, new: str) -> dict:
-    """RENAME a column as a METADATA-ONLY commit (round 19, VERDICT
-    r18 next #4): the manifest schema gets the new name and an entry
-    is appended to the table's RENAMES log; no data file is touched.
-    Readers group files by rename epoch — files written before this
-    commit are scanned under the old name and aliased to the new one
-    (:func:`_scan_entries`), so both pre- and post-rename snapshots
-    read row-exact, and compaction migrates old files forward.
+    """RENAME a column as a METADATA-ONLY commit: the manifest schema gets the
+    new name and the table's RENAMES log an entry; no data file is
+    touched.  Readers scan older files under the old name and alias it
+    (:func:`_scan_entries`), so pre- and post-rename snapshots read
+    row-exact, and compaction migrates old files forward.
 
-    Refusals (each a layout contract, not a limitation dressed up):
-    the bucket key (bucket routing arithmetic is keyed on it —
-    declared out of scope), the partition/clustering columns (their
-    names are recorded table properties), a ``new`` name already in
-    use or EVER used (resurrection hazard — see
-    :func:`table_add_columns`)."""
+    Refuses the bucket key (bucket routing is keyed on it), the
+    partition/clustering columns (recorded table properties), and a
+    ``new`` name in use or EVER used (see :func:`table_add_columns`)."""
     import json as _json
 
     from pyspark.sql.types import StructField, StructType
@@ -2389,7 +2180,7 @@ def table_rename_column(target: str, old: str, new: str) -> dict:
 
 
 def table_drop_column(target: str, name: str) -> dict:
-    """DROP a column as a METADATA-ONLY commit (round 19): the column
+    """DROP a column as a METADATA-ONLY commit: the column
     leaves the manifest schema; old files keep its bytes (explicit-
     schema scans simply never read them — storage is reclaimed as
     compaction rewrites files) and the name joins the retired-name
@@ -2424,14 +2215,11 @@ def table_drop_column(target: str, name: str) -> dict:
 
 
 def table_stats(target: str) -> dict:
-    """Table-level summary from manifest METADATA alone — no data I/O,
-    and no part loads either (the root's refs carry counts/rows/
-    bytes): files, rows (None when any file predates row counts),
-    bytes, live tombstone files, non-empty buckets, and the
-    bucket-skew ratio (max bucket bytes / mean — the number that says
-    whether the hash key is balanced enough for the rewrite
-    granularity).  The observability op a maintenance scheduler polls
-    to decide WHEN to run :func:`table_compact` / :func:`table_vacuum`."""
+    """Table summary from the root's part refs alone (no data I/O, no part
+    loads): files, rows (None when any file lacks a row count), bytes,
+    live tombstone files, non-empty buckets, partitions, and the
+    bucket-skew ratio (max bucket bytes / mean).  What a maintenance
+    scheduler polls to decide WHEN to compact or vacuum."""
     man = _load_manifest(target)[1]
     per_bucket: dict[int, dict] = {}
     partitions: set = set()
@@ -2441,7 +2229,7 @@ def table_stats(target: str) -> dict:
         b = per_bucket.setdefault(
             r["bucket"], {"files": 0, "rows": 0, "bytes": 0, "tombstones": 0}
         )
-        # Accumulate (round 19): a partitioned bucket has one part
+        # Accumulate: a partitioned bucket has one part
         # ref PER partition, plus possibly a tombstone ref.
         b["files"] += r["files"]
         b["rows"] = (
@@ -2473,24 +2261,19 @@ def table_stats(target: str) -> dict:
 
 
 def with_commit_retry(fn, attempts: int = 5, backoff_s: float = 0.1):
-    """Run a v2 commit op under the optimistic-concurrency protocol's
-    documented recovery: on :class:`ConcurrentCommitError`, re-run
-    ``fn`` (every table_* op re-reads the live manifest at entry, so
-    the retry sees the competing writer's state) with linear backoff,
-    up to ``attempts`` total tries.  Each failed attempt's data files
-    are orphans reclaimed by the grace-aged pruner / vacuum — the
-    protocol's stated cost for losing a race, not a leak.  Raises the
-    last ConcurrentCommitError when contention outlasts the budget.
+    """Run a v2 commit op with the optimistic-concurrency recovery: on
+    :class:`ConcurrentCommitError`, re-run ``fn`` (every table_* op
+    re-reads the live manifest) with linear backoff, up to ``attempts``
+    tries; then re-raise the last error.  A failed attempt's data files
+    are orphans for the pruner / vacuum.
 
     Usage::
 
-        with_commit_retry(lambda: table_merge_mor(spark, target, batch))
-    """
+        with_commit_retry(lambda: table_merge_mor(spark, target, batch))"""
     import time
 
     if attempts < 1:
-        # ADVICE r18: attempts=0 used to fall through to ``raise None``
-        # (an opaque TypeError); name the misuse instead.
+        # attempts=0 would end in ``raise None`` (an opaque TypeError).
         raise ValueError("with_commit_retry: attempts must be >= 1")
     last: ConcurrentCommitError | None = None
     for attempt in range(attempts):
@@ -2504,18 +2287,12 @@ def with_commit_retry(fn, attempts: int = 5, backoff_s: float = 0.1):
 
 
 def table_set_retention(target: str, keep_generations: int) -> dict:
-    """Set the table's RETENTION property (round 18, VERDICT r17 next
-    #4): how many committed generations — live included — stay
-    readable for :func:`table_read(at=...)` time travel and rollback
-    before the commit-path pruner reclaims them.  A metadata-only
-    commit (one manifest write + pointer swap, O(1) in table size),
-    optimistic-concurrency-checked like every other commit.
-
-    Raising retention takes effect immediately; LOWERING it reclaims
-    the excess generations on the NEXT data commit (the pruner runs
-    after every commit, including this one).  The property is the
-    table's stated time-travel SLA — :func:`table_vacuum` also honors
-    it when sweeping."""
+    """Set the table's RETENTION property: how many committed generations —
+    live included — stay readable for ``table_read(at=...)`` time travel
+    before the pruner reclaims them.  A metadata-only commit.  Raising it
+    takes effect immediately; LOWERING it reclaims the excess on the NEXT
+    commit (the pruner runs after every commit, this one included), and
+    :func:`table_vacuum` honors it when sweeping."""
     if int(keep_generations) < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
     base_name, man = _load_manifest(target)
@@ -2529,23 +2306,17 @@ def table_set_retention(target: str, keep_generations: int) -> dict:
 
 
 def table_drop_partition(target: str, value) -> dict:
-    """Drop one PARTITION from a partitioned v2 table as a
-    METADATA-ONLY commit (round 19): the new manifest simply omits the
-    partition's parts — no data file is read, written, or
-    deleted at commit time (the files stay referenced by retained
-    older generations for time travel and are reclaimed by the pruner
-    / :func:`table_vacuum` as those age out).  This is the
-    partition-granular retention primitive (drop a day) and the
-    idempotent-backfill building block: drop + re-append a partition
-    is two O(partition) commits, never a table rewrite.
+    """Drop one PARTITION as a METADATA-ONLY commit: the new manifest omits
+    the partition's parts; no data file is read, written or deleted (the
+    files stay referenced by retained generations and are reclaimed as
+    those age out).  The partition-granular retention primitive, and with
+    a re-append an O(partition) idempotent backfill.
 
     ``value`` is the partition value in transformed encoding (e.g.
     ``"2024-01-05"`` for a day transform; ``None`` drops the NULL
-    partition).  Dropping an absent partition is a no-op (no commit —
-    idempotence without burning a retention generation).  Live MoR
-    tombstones are untouched: they are partition-less and may still
-    mask rows in other partitions.  Optimistic concurrency as
-    everywhere."""
+    partition).  Dropping an absent partition commits nothing.  Live MoR
+    tombstones are untouched: they are partition-less and may still mask
+    rows in other partitions."""
     base_name, man = _load_manifest(target)
     if _part_spec(man) is None:
         raise ValueError(
@@ -2566,25 +2337,19 @@ def table_drop_partition(target: str, value) -> dict:
 
 
 def table_vacuum(target: str, older_than_s: float = ORPHAN_GRACE_S) -> dict:
-    """Full-sweep maintenance janitor (round 18, VERDICT r17 next #4;
-    Iceberg's remove-orphan-files): delete every file under the table
-    root that NO retained manifest references and that is older than
-    ``older_than_s`` (the in-flight-commit grace — a concurrent
-    writer's unreferenced-but-recent files are never touched).
+    """Full-sweep maintenance janitor (Iceberg's remove-orphan-files): delete
+    every file under the table root that NO retained manifest references
+    and that is older than ``older_than_s`` (the in-flight-commit grace).
 
-    This is the one deliberately O(table-manifest) driver job: it
-    loads every retained root AND every retained part to build the
-    full live-reference set — exactly the cost the commit-path pruner
-    avoids by construction (orphan aging is deferred to here).
-    Run it as a scheduled maintenance window, not per commit.
+    The one deliberately O(table-manifest) driver job: it loads every
+    retained root AND part to build the full reference set, the cost the
+    commit-path pruner avoids.  Run it as scheduled maintenance, not per
+    commit.
 
-    Reclaims: crashed-commit data/part orphans, roots beyond the
-    retention property (enforcing a lowered retention without waiting
-    for a data commit), and empty data directories.  Never deletes a
-    file referenced by any retained manifest — time travel to every
-    retained generation stays row-exact (pytest-pinned).  Aborts
-    (deleting nothing) if any retained manifest or part is unreadable.
-    Returns {"data_files_removed", "part_files_removed",
+    Reclaims crashed-commit data/part orphans, roots beyond the retention
+    property, and empty data directories; never a file a retained manifest
+    references.  Aborts (deleting nothing) if any retained manifest or part
+    is unreadable.  Returns {"data_files_removed", "part_files_removed",
     "roots_removed", "kept_manifests"}."""
     import time
 

@@ -164,10 +164,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 #: Timestamp-bearing fixture columns and their canonical Spark dtype.
-#: The generator has re-encoded these across rounds (int64 nanos in
-#: rounds 1-2, timestamp[us] without timezone in round 3), and each
-#: switch broke queries three hours after the last commit — so the
-#: loader owns a schema contract instead of trusting the files.
+#: The generator has emitted these as int64 nanos and as timestamp[us]
+#: without timezone, so the loader owns a schema contract instead of
+#: trusting the files.
 #: ``events.ts`` must be TIMESTAMP (LTZ): NTZ rejects both
 #: `CAST(ts AS BIGINT)` and `withWatermark`.  The date columns stay
 #: TIMESTAMP_NTZ — that is today's validated-green dtype, and all
@@ -182,8 +181,8 @@ _TS_CANON: dict[str, dict[str, str]] = {
 
 def _normalize_ts(df: DataFrame, col: str = "ts", target: str = "timestamp") -> DataFrame:
     """Canonicalize one timestamp column to ``target`` regardless of the
-    fixture's physical encoding.  All branches stay live — the generator
-    has already produced two of these shapes across rounds:
+    fixture's physical encoding (the generator has produced both of the
+    first two shapes):
 
     - Parquet TIMESTAMP(NANOS) read as int64 under ``nanosAsLong``:
       ns → µs with *integer* division (`div` keeps LongType; a double
@@ -263,11 +262,8 @@ def scan_jdbc(
     spark: SparkSession, url: str, table: str, **properties
 ) -> DataFrame:
     """JDBC connector surface.  Declared as the full-oracle driver
-    query ``scan_jdbc`` (sources/scan_queries.py) since round 12: no
-    EXTERNAL database is reachable in the driver environment, but
-    Spark bundles embedded Derby, so the declared query writes nation
-    into a fresh Derby database and reads it back partitioned —
-    writer+reader value-exactness attested against the original table.
+    query ``scan_jdbc`` (sources/scan_queries.py), which writes nation
+    into a fresh embedded Derby database and reads it back partitioned.
     tests/test_jdbc.py drives the plain and partitioned paths directly.
 
     At scale, callers should pass ``partitionColumn``/``lowerBound``/
@@ -290,7 +286,7 @@ def sink_parquet(
     that enables partition pruning on re-read — the 100 TB default for
     fact tables (partition by a low-cardinality time bucket).
 
-    Operational note (r12 AQE root-cause, SCALE.md): keep row groups
+    Operational note: keep row groups
     bounded (``parquet.block.size``; Spark's 128 MB default is fine —
     the hazard is single-row-group compaction jobs).  A file whose rows
     live in ONE giant row group is read by ONE effective scan task no

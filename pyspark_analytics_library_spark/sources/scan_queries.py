@@ -38,11 +38,9 @@ _SCRATCH = os.path.join(
 def _scratch(name: str) -> str:
     # Janitor the shared .scratch root first (latched: one pass per
     # process), so a replay that only runs the roundtrip queries still
-    # reclaims dead-pid leftovers — the pid<NNN> dirs this module
-    # creates were the dominant residual leak when only streaming
-    # queries pruned (VERDICT r7 #2).  Lazy import: stream_queries
-    # pulls in nothing from this module, but keeping the dependency
-    # out of import time keeps both modules independently importable.
+    # reclaims the dead-pid pid<NNN> dirs this module creates.  Lazy
+    # import: keeping the dependency out of import time keeps both
+    # modules independently importable.
     from pyspark_analytics_library_spark.streaming.stream_queries import (
         _prune_stale_scratch,
     )
@@ -59,7 +57,7 @@ def _merge_target(name: str) -> str:
     but it does NOT clear an existing directory: merge targets model a
     LIVE table that :func:`_staged_overwrite` replaces crash-safely via
     rename, and an upfront rmtree would reintroduce exactly the
-    unprotected window the staged swap removes (VERDICT r13 #4)."""
+    unprotected window the staged swap removes."""
     from pyspark_analytics_library_spark.streaming.stream_queries import (
         _prune_stale_scratch,
     )
@@ -70,7 +68,7 @@ def _merge_target(name: str) -> str:
 
 
 def _staged_overwrite(df: DataFrame, target: str) -> str:
-    """Crash-safe parquet overwrite (VERDICT r13 #4); returns the path
+    """Crash-safe parquet overwrite; returns the path
     readers should scan.  Writes the new table to
     ``<target>.staging-<uuid>``, then swaps it in with filesystem
     renames, so a failure at ANY point leaves the previous target
@@ -82,12 +80,11 @@ def _staged_overwrite(df: DataFrame, target: str) -> str:
       dead-pid janitor otherwise;
     - crash BETWEEN the two renames (a metadata-sized window) → target
       briefly absent but the old table is intact under ``.old-<uuid>``
-      — recoverable by hand UNTIL dead-pid reclamation (ADVICE r14:
-      for the merge queries here the backup lives inside the
-      pid-scoped scratch dir, which the janitor rmtrees
-      ``_SCRATCH_DEAD_GRACE_S`` after the owning process dies, so the
-      recovery window is time-limited by design; a production target
-      outside scratch keeps its backup until an operator removes it).
+      — recoverable by hand until dead-pid reclamation (for the merge
+      queries here the backup lives inside the pid-scoped scratch dir,
+      which the janitor rmtrees ``_SCRATCH_DEAD_GRACE_S`` after the
+      owning process dies; a target outside scratch keeps its backup
+      until an operator removes it).
 
     POSIX ``rename`` within one filesystem is atomic, which covers
     local/HDFS deployments; on object stores (S3A et al.) "rename" is
@@ -115,14 +112,13 @@ def _staged_overwrite(df: DataFrame, target: str) -> str:
 
 def _insert_key_offset(orders: DataFrame) -> int:
     """Synthetic-insert key offset for the merge queries, derived from
-    the ACTUAL key domain (ADVICE r13): the former fixed 100000000
-    offset collides with real o_orderkey above ~SF 17 (TPC-H orderkeys
-    reach ~6M × SF), silently closing out unrelated base rows.  The
-    offset is the next power of 10 above max(o_orderkey) — spelled as
-    10^len(str(max)) so both engines compute it integer-exactly, with
-    no float log/pow rounding — FLOORED at the historical 100000000 so
-    every fixture SF (max key ≪ 1e8) produces bit-identical results to
-    the committed attestations.  The oracle derives the same value with
+    the ACTUAL key domain: a fixed 100000000 offset collides with real
+    o_orderkey above ~SF 17 (TPC-H orderkeys reach ~6M × SF), silently
+    closing out unrelated base rows.  The offset is the next power of
+    10 above max(o_orderkey) — spelled as 10^len(str(max)) so both
+    engines compute it integer-exactly — FLOORED at 100000000 so every
+    fixture SF (max key ≪ 1e8) keeps its attested results.  The oracle
+    derives the same value with
     GREATEST/POWER/LENGTH over the same table.  The collect is one
     1-row scalar aggregate (parquet column statistics make it a
     metadata-speed scan) — the PageRank-scalar size class."""
@@ -192,10 +188,9 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT n_nationkey, n_name, n_regionkey FROM nation",
 )
 def q_scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON round-trip with explicit re-read schema.  Full oracle
-    (upgraded from rows-only in round 5): with the schema pinned on
-    read, int/string columns survive JSON text encoding losslessly —
-    the oracle compares against the SOURCE table, so writer+reader
+    """JSON round-trip with explicit re-read schema.  Full oracle: with
+    the schema pinned on read, int/string columns survive JSON text
+    encoding losslessly — the oracle compares against the SOURCE table, so writer+reader
     must both preserve values exactly (same pattern as the
     parquet/csv sinks above; only float columns would be at the mercy
     of JSON number formatting, and none are on this surface)."""
@@ -210,10 +205,9 @@ def q_scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("scan_orc_roundtrip", oracle="SELECT r_regionkey, r_name FROM region")
 def q_scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORC round-trip.  Full oracle (upgraded from rows-only in round
-    5): ORC is a typed binary format, so the int/string region table
-    round-trips exactly; the oracle compares against the source
-    table."""
+    """ORC round-trip.  Full oracle: ORC is a typed binary format, so
+    the int/string region table round-trips exactly; the oracle compares
+    against the source table."""
     t = load_tables(spark, sf_dir)
     path = _scratch("sink_orc")
     t["region"].write.mode("overwrite").orc(path)
@@ -288,7 +282,7 @@ def q_scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     key shape ("this quarter's fact files only", where "this quarter"
     is itself a query result).
 
-    REFUSAL CONDITION (probed r12, PySpark 4.1.2): PartitionPruning
+    REFUSAL CONDITION (PySpark 4.1.2): PartitionPruning
     only fires when the dim side carries a selective FILTER predicate
     (here the HAVING).  A dim derived purely by JOIN — e.g. argmax via
     self-join on max(n) — gets NO dynamicpruning subquery and the fact
@@ -446,7 +440,7 @@ def scd1_merged(base: DataFrame, updates: DataFrame, key: str = "o_orderkey") ->
     :func:`scd2_history`) so tests can pin both the plan shape and the
     NULL-key semantics on the pre-sink frame.
 
-    NULL merge keys (VERDICT r13 #7): ``Window.partitionBy`` treats
+    NULL merge keys: ``Window.partitionBy`` treats
     NULL as one ordinary grouping value, so ALL NULL-key rows — base
     and update alike — land in a single merge group and exactly ONE row
     survives (an update row when any exists, by the priority order).
@@ -507,12 +501,9 @@ def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged-write + rename swap — so the oracle comparison covers the
     writer+reader loop.  At 100 TB the same plan works per partition
     (copy-on-write rewrites only partitions containing updated keys —
-    pair with sink_partition_overwrite's dynamic mode); row-level
-    MERGE without rewrite is exactly what table formats add on top.
-    Insert keys are offset by :func:`_insert_key_offset` (derived from
-    the real key domain, ADVICE r13 — collision-free at any SF);
-    NULL-key semantics are documented and pinned on the extracted
-    :func:`scd1_merged` core.
+    pair with sink_partition_overwrite's dynamic mode).  Insert keys
+    are offset by :func:`_insert_key_offset` (collision-free at any
+    SF); NULL-key semantics are pinned on the :func:`scd1_merged` core.
     """
     t = load_tables(spark, sf_dir)
     base = t["orders"].select(
@@ -549,11 +540,10 @@ def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            # Reported in millions (round-13 SCD-2 100x probe): at 15 M
-            # rows the raw ~1e12 sum's cross-engine summation-order
-            # noise (~1e-1 absolute) crosses the /1e3 4-dp rounding
-            # threshold; /1e6 restores ~5 orders of margin (the
-            # agg_salted_skew discipline).
+            # Reported in millions: at 15 M rows the raw ~1e12 sum's
+            # cross-engine summation-order noise (~1e-1 absolute)
+            # crosses a /1e3 4-dp rounding threshold; /1e6 restores ~5
+            # orders of margin.
             F.round(F.sum("o_totalprice") / 1e6, 4).alias("total_price_m"),
         )
         .orderBy("o_orderstatus")
@@ -566,13 +556,11 @@ def _SCD2_EFF_DATE() -> Column:
 
 
 def _scd2_update_batch(orders: DataFrame) -> DataFrame:
-    """The ONE spelling of the SCD-2 update batch (review r16: this
-    recipe previously lived hand-synchronized in several Python
-    spellings and the oracle SQL — a drift surface where editing one
-    spelling would silently diverge the others).  Columns: o_orderkey, o_orderstatus, o_totalprice,
-    valid_from.  Same %97 update / %101 insert predicates, floor-based
-    half-up price rounding, and collision-free insert offset the
-    oracle states."""
+    """The ONE Python spelling of the SCD-2 update batch (several
+    hand-synchronized copies would silently drift).  Columns:
+    o_orderkey, o_orderstatus, o_totalprice, valid_from.  Same %97
+    update / %101 insert predicates, floor-based half-up price
+    rounding, and collision-free insert offset the oracle states."""
     offset = _insert_key_offset(orders)
     eff = _SCD2_EFF_DATE()
     return (
@@ -603,7 +591,7 @@ def scd2_history(orders: DataFrame) -> DataFrame:
     invariant — zero join operators, the close-out is window-only —
     the same way join_asof's single-Exchange shape is pinned.
 
-    NULL merge keys (VERDICT r13 #7): a NULL-key base row is NEVER
+    NULL merge keys: a NULL-key base row is NEVER
     superseded here — the update batch is derived through
     ``o_orderkey % k == 0`` predicates, and ``NULL % k`` is NULL (not
     0), so NULL keys generate no update row; the base row passes
@@ -682,8 +670,8 @@ def scd2_history(orders: DataFrame) -> DataFrame:
     """,
 )
 def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SCD-2 (history-preserving) merge into plain parquet (VERDICT
-    r12 #3) — the companion to :func:`q_sink_merge_upsert`'s SCD-1:
+    """SCD-2 (history-preserving) merge into plain parquet — the
+    companion to :func:`q_sink_merge_upsert`'s SCD-1:
     instead of updates WINNING over base rows, updated keys keep both
     rows — the superseded version closed out (``valid_to`` = the
     batch's effective date, ``is_current`` = false) and the new
@@ -698,16 +686,13 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     priority-union (an outer-join formulation shuffles both sides and
     loses the append rows' nullability for free).  The history table
     is written and RE-READ, so the oracle covers the writer+reader
-    loop.  At 100 TB the window is per-key (shuffle on the merge key,
-    map-side nothing to combine — every row is kept) and copy-on-write
-    rewrites only partitions containing touched keys, exactly like
-    SCD-1; row-level MERGE + time travel without the rewrite is what
-    lakehouse formats add on top (none is installed here — SURVEY
-    scopes them out).  Same floor-based price rounding as SCD-1 (2-dp
-    inputs ×1.1 land on exact .xx5 halves where engine ROUND halfway
-    behavior differs; floor(x*100+0.5) is identical IEEE on both), same
-    :func:`_staged_overwrite` crash-safe sink and
-    :func:`_insert_key_offset` collision-free insert keys as SCD-1.
+    loop.  At 100 TB the window is per-key (every row is kept, so
+    map-side there is nothing to combine) and copy-on-write rewrites
+    only partitions containing touched keys, like SCD-1; row-level
+    MERGE + time travel without the rewrite is
+    :mod:`~pyspark_analytics_library_spark.sources.commit`.  Same
+    floor-based price rounding, :func:`_staged_overwrite` sink and
+    :func:`_insert_key_offset` insert keys as SCD-1.
     """
     orders = load_tables(spark, sf_dir)["orders"]
     path = _merge_target("sink_merge_scd2")
@@ -721,11 +706,7 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("valid_to").isNotNull().cast("int"))
             .cast("long")
             .alias("n_closed"),
-            # Reported in millions (round-13 SCD-2 100x probe): at 15 M
-            # rows the raw ~1e12 sum's cross-engine summation-order
-            # noise (~1e-1 absolute) crosses the /1e3 4-dp rounding
-            # threshold; /1e6 restores ~5 orders of margin (the
-            # agg_salted_skew discipline).
+            # Reported in millions: see q_sink_merge_upsert.
             F.round(F.sum("o_totalprice") / 1e6, 4).alias("total_price_m"),
         )
         .orderBy("o_orderstatus", "is_current")
@@ -743,8 +724,7 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JDBC source surface driven end-to-end against Spark's bundled
-    EMBEDDED Derby (VERDICT r11 #1: the one §2.1 row whose execution
-    evidence — tests/test_jdbc.py — the driver never saw).  Pipeline:
+    EMBEDDED Derby.  Pipeline:
     nation → ``DataFrame.write.jdbc`` into a fresh pid-scoped Derby
     database → re-read through :func:`scan_jdbc` with the PARTITIONED
     options (partitionColumn/lowerBound/upperBound/numPartitions=4),
@@ -756,10 +736,10 @@ def q_scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The returned frame stays LAZY (the driver collects after we
     return), so the Derby database must outlive this call: each call
-    boots its own uuid-leafed database under the pid scratch (ADVICE
-    r12 — a shared leaf would be rmtree'd by the NEXT call's
-    ``_scratch()``, yanking the files out from under any
-    still-uncollected prior frame), and the whole pid dir is reclaimed
+    boots its own uuid-leafed database under the pid scratch (a shared
+    leaf would be rmtree'd by the NEXT call's ``_scratch()``, yanking
+    the files out from under any still-uncollected prior frame), and
+    the whole pid dir is reclaimed
     by the shared dead-pid janitor once the process exits.  Embedded
     Derby is single-JVM — exactly the local[N] shape — while a cluster
     run would point the same options at a networked RDBMS; the plan is

@@ -53,48 +53,29 @@ _SCRATCH_DEAD_GRACE_S = 300
 
 
 def _prune_stale_scratch() -> None:
-    """Bounded scratch janitor (VERDICT r6 #6 / ADVICE r6): two classes
-    of per-run staging legitimately outlive their query and therefore
-    leak once the process exits —
+    """Bounded scratch janitor for per-run staging that outlives its query
+    and would leak once the process exits:
 
-    * ``feb_*`` / ``stream_sink_*``: per-run foreachBatch sinks named
-      ``<prefix>_<pid>_<uuid>``; the RETURNED DataFrame is backed by
-      the parquet they hold, so the query cannot delete them at exit.
-      Reclaimed once the owning pid is dead AND the dir is past the
-      short ``_SCRATCH_DEAD_GRACE_S`` window (liveness is a
-      namespace-local signal — the grace keeps a false 'dead' from a
-      sibling pid namespace from destroying a fresh sink) — which is
-      what makes the scratch population stop GROWING across replay
-      sweeps instead of plateauing at six hours' worth.  The age gate
-      is the fallback for legacy pid-less names and inconclusive
-      liveness.
-    * ``stream_src_*``: deterministic-keyed events staging (a dir with
-      one symlink), reused across processes — but every distinct
-      fixture PATH keys a new dir, and pytest tmp fixtures mint a
-      fresh path per run, so the population grows one symlink-dir per
-      test session forever.  Also age-reclaimed: restaging is one
-      symlink, and no stream holds a staging dir across hours (the
-      availableNow runs complete inside their query).
-    * ``late_stream_*_<pid>``: pid-scoped splits, rmtree'd only when
-      the SAME pid restages.  Reclaimed when the owning pid is dead
-      (``os.kill(pid, 0)``); a CONFIRMED-live pid's dir is never
-      touched — not even past the age gate, since a long-lived session
-      legitimately reuses its staged split without refreshing any
-      mtime — so a concurrent driver mid-stream is safe.  The age gate
-      applies only when liveness is inconclusive (EPERM).
-    * ``pid<NNN>``: per-process sink scratch for the nine
-      write-then-re-read roundtrip queries (sources/scan_queries.py) —
-      the dominant residual leak class before round 8 (81 dirs /
-      64 MB): one dir per process, forever, because the returned
-      DataFrame is backed by the parquet inside, so the owning process
-      cannot delete it at exit.  Same discipline as ``late_stream``:
-      dead pid + grace → reclaim; confirmed-live pid → never touched
-      at any age; inconclusive liveness → age gate only.
-      ``scan_queries._scratch()`` also invokes this janitor, so
-      non-streaming replays prune too (VERDICT r7 #2).
+    * ``feb_*`` / ``stream_sink_*`` (``<prefix>_<pid>_<uuid>``): per-run
+      foreachBatch sinks backing the RETURNED DataFrame.  Reclaimed once
+      the owning pid is dead AND the dir is past
+      ``_SCRATCH_DEAD_GRACE_S`` (liveness is namespace-local; the grace
+      keeps a false 'dead' from a sibling pid namespace from destroying a
+      fresh sink).  Pid-less names fall back to the age gate.
+    * ``stream_src_*``: keyed events staging (a dir with one symlink),
+      shared across processes; every distinct fixture PATH keys a new dir,
+      so these are age-reclaimed (restaging is one symlink, and
+      availableNow runs finish inside their query).
+    * ``late_stream_*_<pid>`` and ``pid<NNN>`` (the nine write-then-re-read
+      roundtrip queries in sources/scan_queries.py, whose returned frames
+      are backed by the parquet inside): dead pid + grace → reclaim; a
+      CONFIRMED-live pid's dir is never touched at any age (a long-lived
+      session reuses it without refreshing any mtime); inconclusive
+      liveness → age gate only.  ``scan_queries._scratch()`` runs this
+      janitor too.
 
-    Best-effort throughout: a racing deleter or permission hiccup must
-    never fail the query doing the janitoring."""
+    Best-effort: a racing deleter or permission hiccup never fails the
+    query doing the janitoring."""
     global _SCRATCH_PRUNED
     if _SCRATCH_PRUNED:
         return
@@ -129,7 +110,7 @@ def _prune_stale_scratch() -> None:
             # just lack signal permission) — POSIX kill(2).  Treating
             # it as 'unknown' would subject a live other-uid process's
             # dirs to the age-gate rmtree while its returned DataFrame
-            # may still be backed by parquet inside (ADVICE r8).
+            # may still be backed by parquet inside.
             return "alive"
         except OSError:  # anything else — can't probe liveness
             return "unknown"
@@ -141,22 +122,20 @@ def _prune_stale_scratch() -> None:
             age = now - os.path.getmtime(path)
             expired = age > _SCRATCH_MAX_AGE_S
             if name.startswith(("feb_", "stream_sink_")):
-                # <prefix>_<pid>_<uuid>; legacy names carried no pid
-                # and fall through to the age gate as unknown.
+                # <prefix>_<pid>_<uuid>; pid-less names fall through
+                # to the age gate as unknown.
                 parts = name.split("_")
                 state = pid_state(parts[-2]) if len(parts) >= 3 else None
                 state = state or "unknown"
             elif name.startswith("stream_src_"):
                 state = "unknown"  # keyed, shared across processes
-                # Broken staging (VERDICT r12 #8): the staged dir holds
-                # symlink(s) to a fixture parquet; pytest tmp fixtures
-                # rotate, leaving shape_* dirs whose target is gone —
-                # ~14 per test session that the 6 h age gate keeps for
-                # hours.  An all-links-broken dir can never serve a
-                # stream again (reuse re-points the link anyway), so it
-                # is reclaimed on the dead-grace path.  The grace still
-                # protects a dir staged moments ago; a dir with ANY
-                # live-target link stays age-gated as before.
+                # Broken staging: the staged dir holds symlink(s) to a
+                # fixture parquet; pytest tmp fixtures rotate, leaving
+                # dirs whose target is gone.  An all-links-broken dir
+                # can never serve a stream again (reuse re-points the
+                # link anyway), so it is reclaimed on the dead-grace
+                # path.  The grace still protects a dir staged moments
+                # ago; a dir with ANY live-target link stays age-gated.
                 try:
                     kids = os.listdir(path)
                     if kids and all(
@@ -167,9 +146,8 @@ def _prune_stale_scratch() -> None:
                         state = "dead"
                 except OSError:
                     pass
-            # Bare "late_stream" prefix, not "late_stream_": it must
-            # also sweep the pre-rename "late_stream3_*" generation
-            # already on disk (same _<pid> suffix contract).
+            # Bare "late_stream" prefix, not "late_stream_": it also
+            # sweeps "late_stream3_*" dirs (same _<pid> suffix contract).
             elif name.startswith("late_stream"):
                 state = pid_state(name.rsplit("_", 1)[-1])
                 if state is None:
@@ -185,7 +163,7 @@ def _prune_stale_scratch() -> None:
             if (state == "dead" and age > _SCRATCH_DEAD_GRACE_S) or (
                 state == "unknown" and expired
             ):
-                # Re-stat immediately before rmtree (ADVICE r8): a
+                # Re-stat immediately before rmtree: a
                 # sibling process's utime refresh (e.g. the keyed
                 # stream_src_* reuse clock reset) landing between the
                 # age computation above and the delete would otherwise
@@ -239,8 +217,8 @@ def _staged_events_dir(sf_dir: str) -> str:
         tmp = os.path.join(d, f".events_{os.getpid()}_{uuid.uuid4().hex[:6]}")
         os.symlink(target, tmp)
         os.replace(tmp, link)
-    # Reset the janitor age clock on EVERY reuse, not just restaging
-    # (ADVICE r7): the 6 h gate is the only protection this shared
+    # Reset the janitor age clock on EVERY reuse, not just restaging:
+    # the 6 h gate is the only protection this shared
     # keyed class has, and a long-lived session reusing a staged dir
     # whose mtime has quietly aged past it could otherwise have the
     # dir rmtree'd by a sibling process's janitor mid-stream.
@@ -319,37 +297,23 @@ _PARITY_CAP = 200_000
 
 
 def _cells_match(a, b) -> bool:
-    """Exact for everything except floats: stream and batch partials
-    add doubles in different orders, so a float cell near a rounding
-    boundary can legitimately differ in the last representable step —
-    the same hazard class §5.3 rule 8 handles for oracles.  abs_tol
-    admits ONE step of the 4dp rounding grid the streaming compare
-    surface uses (F.round(…, 4) everywhere floats appear):
-    summation-order noise (~1e-12 relative) can push a correctly-
-    rounded value at most one grid cell away.  The bound is 1.5e-4,
-    not 1e-4, because adjacent 4dp doubles differ by slightly MORE
-    than 1e-4 in IEEE representation (0.1235−0.1234 ≈ 1.000…03e-4), so
-    an exact one-grid-step bound would reject the very divergence it
-    documents admitting; two grid steps (≥ ~2e-4) still fail.
+    """Exact for everything except floats: stream and batch partials add
+    doubles in different orders, so a float cell near a rounding boundary
+    can differ by one step of the 4dp grid the streaming compare surface
+    uses (§5.3 rule 8's hazard class).  abs_tol is 1.5e-4, not 1e-4,
+    because adjacent 4dp doubles differ by slightly MORE than 1e-4
+    (0.1235−0.1234 ≈ 1.000…03e-4); two grid steps (≥ ~2e-4) still fail.
 
-    rel_tol is 0: ``math.isclose`` defaults rel_tol=1e-9, which would
-    silently DOMINATE abs_tol once |v| exceeds ~1.5e5 (at 1e6 the
-    effective tolerance becomes 1e-3 ≈ ten grid steps), voiding the
-    one-step guarantee exactly where big SUMs live — ADVICE r6.
+    rel_tol is 0: the default 1e-9 would DOMINATE abs_tol once |v| exceeds
+    ~1.5e5 (at 1e6 it is ten grid steps), voiding the one-step guarantee
+    where big SUMs live.
 
-    Large-magnitude floor (ADVICE r7 / VERDICT r8 #3): once |v|
-    reaches ~1e12 one double ulp (ulp(2^40) ≈ 2.4e-4) exceeds a flat
-    1.5e-4 and the one-grid-step property would silently degrade to
-    exact-equality — a legitimate one-step divergence failing loudly
-    exactly where sf≥1 parity sums land.  So the tolerance is
-    ``max(1.5e-4, 4 * ulp(max(|a|, |b|)))``: below ~2.6e11 the ulp
-    term is under 1.5e-4 and the grid bound governs unchanged; above,
-    four ulps admit summation-order noise (a tree-vs-sequential double
-    sum of n terms differs by O(n) ulps of the result — 4 covers the
-    per-cell partial-merge depth) while still rejecting any real
-    divergence, which at those magnitudes dwarfs ulp scale.  rel_tol
-    stays 0 — a blanket rel_tol=1e-9 would be ~4000 ulps at ANY
-    magnitude, three orders looser than this floor."""
+    Large-magnitude floor: past ~1e12 one ulp (ulp(2^40) ≈ 2.4e-4) exceeds
+    1.5e-4 and the check would degrade to exact equality where sf≥1 parity
+    sums land.  So the tolerance is ``max(1.5e-4, 4 * ulp(max(|a|,
+    |b|)))``: below ~2.6e11 the grid bound governs; above, four ulps admit
+    the partial-merge summation-order noise while rejecting any real
+    divergence (a blanket rel_tol=1e-9 would be ~4000 ulps)."""
     if isinstance(a, float) and isinstance(b, float):
         tol = max(1.5e-4, 4.0 * math.ulp(max(abs(a), abs(b))))
         return math.isclose(a, b, rel_tol=0.0, abs_tol=tol)
@@ -485,12 +449,11 @@ def _group_matches(got_g: list[tuple], want_g: list[tuple]) -> bool:
 
 def _attest_parity(result: DataFrame, batch: DataFrame, what: str) -> DataFrame:
     """Run the embedded stream-vs-batch parity check, then surface its
-    verdict as a literal ``selfcheck`` column on the returned frame
-    (VERDICT r13 #6): the driver's rows-only CORRECTNESS row records
-    this frame's shape, so a green row now attests "the full result-set
-    parity check ran and PASSED", not mere non-emptiness.  The column
-    VALUE names the check KIND (ADVICE r14: the former uniform
-    ``parity_ok=true`` boolean read as full parity even on queries
+    verdict as a literal ``selfcheck`` column on the returned frame:
+    the driver's rows-only CORRECTNESS row records this frame's shape,
+    so a green row attests "the full result-set parity check ran and
+    PASSED", not mere non-emptiness.  The column VALUE names the check
+    KIND (a uniform boolean would read as full parity even on queries
     whose embedded check is only watermark-drop or event-count
     coverage) — ``full-parity`` here; the weaker kinds come from
     :func:`_attest_check`.  The column can only ever carry a passing

@@ -186,54 +186,41 @@ def test_missing_sf_dir_raises_clean_error(spark):
 def test_ordered_registry_frontloads_least_recently_attested():
     """The driver samples a 50-query prefix of ``ordered_registry()``;
     the ordering must spend that budget on queries with the stalest (or
-    no) driver CORRECTNESS attestation — VERDICT r4 task #1."""
+    no) driver CORRECTNESS attestation."""
     from pyspark_analytics_library_spark.registry import (
-        _active_pins,
         _driver_attestation_rounds,
-        _driver_green_rows,
         ordered_registry,
     )
 
     order = list(ordered_registry())
     assert set(order) == set(REGISTRY), "ordering must be a permutation"
     attested = _driver_attestation_rounds()
-    # Pins hold only until their clearing round is green-attested.
-    pinned = _active_pins(_driver_green_rows())
-    assert order[: len(pinned)] == pinned
     never = [n for n in order if n not in attested]
     if len(never) >= 50:
         prefix_never = sum(1 for n in order[:50] if n not in attested)
         assert prefix_never >= 45, (
             f"only {prefix_never}/50 of the driver prefix are never-attested"
         )
-    # Staleness must be non-decreasing once the pinned prefix ends.
-    tiers = [attested.get(n, 0) for n in order[len(pinned):]]
+    tiers = [attested.get(n, 0) for n in order]
     assert tiers == sorted(tiers), "attestation rounds must be non-decreasing"
 
 
 def test_stalest_tier_fully_leads_rotation_after_pins():
-    """VERDICT r15 #1 regression: the r15 money-sum pin burst displaced
-    three r11-attested queries out of the K=50 sample, aging them one
-    round past the R=4 freshness window.  Ordering discipline: the
-    ENTIRE minimum-attestation tier must occupy the first slots after
-    any active pins — never interleaved with fresher tiers — so a
-    single driver round always restores the attestation floor (three
-    such queries sit at positions 0-2 for round 16)."""
+    """The ENTIRE minimum-attestation tier must occupy the first slots,
+    never interleaved with fresher tiers, so a single driver round
+    always restores the attestation floor.  A burst of front-loaded
+    queries once displaced part of the stalest tier out of the K=50
+    sample, aging it one round past the R=4 freshness window."""
     from pyspark_analytics_library_spark.registry import (
-        _active_pins,
         _driver_attestation_rounds,
-        _driver_green_rows,
         ordered_registry,
     )
 
     attested = _driver_attestation_rounds()
-    pinned = _active_pins(_driver_green_rows())
     order = list(ordered_registry())
     floor = min(attested.get(n, 0) for n in order)
-    min_tier = {
-        n for n in order if attested.get(n, 0) == floor and n not in pinned
-    }
-    lead = order[len(pinned) : len(pinned) + len(min_tier)]
+    min_tier = {n for n in order if attested.get(n, 0) == floor}
+    lead = order[: len(min_tier)]
     assert set(lead) == min_tier, (
         f"stalest tier (round {floor}) not contiguous at the front: "
         f"{sorted(min_tier - set(lead))} displaced"
@@ -241,16 +228,12 @@ def test_stalest_tier_fully_leads_rotation_after_pins():
 
 
 def test_driver_prefix_starves_recently_attested_queries():
-    """VERDICT r5 #4: the 50-query driver sample must never re-spend a
-    slot on a query attested in either of the two most recent rounds
-    while enough staler queries exist to fill the prefix — the
-    starvation property the ordered_registry docstring promises.
-    Pinned queries are exempt (a pin deliberately jumps the queue to
-    re-attest machinery that changed since its last green row)."""
+    """The 50-query driver sample must never re-spend a slot on a query
+    attested in either of the two most recent rounds while enough
+    staler queries exist to fill the prefix: the starvation property
+    the ordered_registry docstring promises."""
     from pyspark_analytics_library_spark.registry import (
-        _active_pins,
         _driver_attestation_rounds,
-        _driver_green_rows,
         ordered_registry,
     )
 
@@ -259,13 +242,11 @@ def test_driver_prefix_starves_recently_attested_queries():
         return  # outside the repo checkout: nothing to starve
     latest = max(attested.values())
     recent = {n for n, r in attested.items() if r >= latest - 1}
-    pinned = set(_active_pins(_driver_green_rows()))
     order = list(ordered_registry())
-    stale_pool = [n for n in order if n not in recent and n not in pinned]
-    budget = 50 - len(pinned)
-    if len(stale_pool) < budget:
+    stale_pool = [n for n in order if n not in recent]
+    if len(stale_pool) < 50:
         return  # not enough stale queries to fill the sample
-    offenders = [n for n in order[:50] if n in recent and n not in pinned]
+    offenders = [n for n in order[:50] if n in recent]
     assert not offenders, (
         f"driver prefix wastes slots on recently-attested queries: {offenders}"
     )
@@ -294,87 +275,7 @@ def test_attestation_ignores_failing_rows(tmp_path):
     assert att == {"good_oracle": 7, "rows_only": 7}
 
 
-def test_priority_pins_expire_after_clearing_round(monkeypatch):
-    """Once a pinned query has a green driver row at its clearing
-    round — recording the pin's expected row count — it re-enters the
-    normal staleness rotation (here: freshest tier, so it sorts last)
-    instead of holding a sample slot forever."""
-    import pyspark_analytics_library_spark.registry as reg
-
-    names = sorted(reg.REGISTRY)[:3]
-    monkeypatch.setattr(
-        reg,
-        "_PRIORITY",
-        {names[0]: reg._Pin(until=9), names[1]: reg._Pin(until=9, expect_rows=155)},
-    )
-    monkeypatch.setattr(
-        reg,
-        "_driver_green_rows",
-        lambda root=None: {n: [(9, 155)] for n in names},
-    )
-    order = list(reg.ordered_registry())
-    assert set(order[-3:]) >= set(names[:2]), "cleared pins must sort to the freshest tier"
-
-
-def test_priority_pin_not_cleared_by_stale_checkout_row(monkeypatch):
-    """ADVICE r10: a pin keyed on ``expect_rows`` must NOT clear on a
-    green row from the named round that attests the OLD result shape
-    (e.g. a stale checkout ran in that round) — the round number alone
-    is not evidence the changed definition was attested."""
-    import pyspark_analytics_library_spark.registry as reg
-
-    name = sorted(reg.REGISTRY)[0]
-    monkeypatch.setattr(reg, "_PRIORITY", {name: reg._Pin(until=9, expect_rows=155)})
-    # Green rows exist at r9 and r10, but both record the pre-change
-    # row count (42) — the pin must hold.
-    monkeypatch.setattr(
-        reg, "_driver_green_rows", lambda root=None: {name: [(9, 42), (10, 42)]}
-    )
-    assert list(reg.ordered_registry())[0] == name
-    # A green row from an EARLIER round with the right count also must
-    # not clear it (the change landed after that round).
-    monkeypatch.setattr(
-        reg, "_driver_green_rows", lambda root=None: {name: [(8, 155)]}
-    )
-    assert list(reg.ordered_registry())[0] == name
-    # Only round >= until AND matching rows clears.
-    monkeypatch.setattr(
-        reg, "_driver_green_rows", lambda root=None: {name: [(9, 155)]}
-    )
-    assert list(reg.ordered_registry())[0] != name
-
-
-def test_no_pin_outlives_its_staleness_ceiling(monkeypatch):
-    """ADVICE r11: a _Pin with a miscalculated ``expect_rows`` (or a
-    driver-SF change that moves the row count) can never clear — the
-    'a pin can never permanently starve' claim only holds for
-    round-only pins.  ``stale_pins`` is the ceiling: a pin still active
-    PIN_STALENESS_GRACE rounds past ``until`` fails here instead of
-    silently holding a rotation slot forever."""
-    import pyspark_analytics_library_spark.registry as reg
-
-    # The live check: the REAL pin table against the REAL artifacts.
-    current = reg.latest_attested_round() + 1
-    stale = reg.stale_pins(current)
-    assert not stale, (
-        f"pins {stale} are still active {reg.PIN_STALENESS_GRACE}+ rounds "
-        f"past their clearing round (building r{current}) — their "
-        "expect_rows is likely wrong; fix or remove them"
-    )
-
-    # The mechanism: a pin whose expect_rows never matches goes stale
-    # exactly after the grace window.
-    name = sorted(reg.REGISTRY)[0]
-    monkeypatch.setattr(reg, "_PRIORITY", {name: reg._Pin(until=9, expect_rows=1)})
-    monkeypatch.setattr(
-        reg, "_driver_green_rows", lambda root=None: {name: [(9, 42), (10, 42)]}
-    )
-    grace = reg.PIN_STALENESS_GRACE
-    assert reg.stale_pins(9 + grace) == []
-    assert reg.stale_pins(9 + grace + 1) == [name]
-
-
-def test_describe_self_check_conf_switch(spark, monkeypatch):
+def test_describe_always_self_checks(spark, monkeypatch):
     """agg_describe always runs its embedded parse-back attestation
     (VERDICT r6 #5): two bounded eager collects inside the query body,
     returning the unchanged summary frame."""

@@ -431,7 +431,9 @@ def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=16)
     man = commit_mod._load_manifest(target)[1]
     keys = [5, 17, 123]
-    entries = commit_mod._files_for_keys(spark, man, keys, target)
+    entries = commit_mod._man_entries(
+        target, man, buckets=commit_mod._buckets_for_keys(spark, man, keys)
+    )[0]
     # <=3 keys -> <=3 buckets of 16; strictly fewer files than the table.
     assert 0 < len(entries) <= 3 < len(manifest_listing(target, man)[0])
     got = sorted(

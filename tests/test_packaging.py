@@ -118,3 +118,28 @@ def test_pip_install_and_import_from_installed_copy(tmp_path):
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert "INSTALLED_OK" in out.stdout
+
+
+def test_public_api_resolves_and_import_stays_light():
+    """Every ``__all__`` name resolves, and a bare package import pulls
+    in neither pandas nor any operator module: those load lazily on
+    first attribute access.  Runs in a child interpreter so this test
+    session's own imports cannot mask a leak."""
+    probe = (
+        "import sys, pyspark_analytics_library_spark as pkg\n"
+        "loaded = sorted(m for m in sys.modules if m == 'pandas' or "
+        "m.startswith('pyspark_analytics_library_spark.operators.'))\n"
+        "print(loaded)\n"
+        "missing = [n for n in pkg.__all__ if getattr(pkg, n, None) is None]\n"
+        "print(missing, len(pkg.__all__))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", probe],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=300,
+    ).stdout.splitlines()
+    assert out[0] == "[]", f"package import loaded {out[0]}"
+    assert out[1].startswith("[] "), f"unresolved __all__ names: {out[1]}"

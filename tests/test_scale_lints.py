@@ -14,9 +14,12 @@ in the code.
 
 from __future__ import annotations
 
+import ast
 import inspect
+import io
 import os
 import re
+import tokenize
 
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.sources import io as io_mod
@@ -73,12 +76,13 @@ WHITELIST = {
     # parquet column stats make the scan metadata-speed) shared by both
     # merge queries, ADVICE r13's collision-free insert-key derivation
     "sources/scan_queries.py": 1,
-    # table_merge's touched-bucket probe and _buckets_for_keys' lookup
-    # bucket derivation: both distinct bucket-id collects, ≤ n_buckets
-    # ints by construction (VERDICT r15 #2); plus _zorder_expr's 1-row
-    # quantile-boundary aggregate (percentile_approx: 63 boundaries per
-    # clustering column — ≤189 doubles at 3 columns — the z-rank cell
-    # edges, round 18; ADVICE r18 doc-drift fix)
+    # table_merge's touched-bucket probe (a distinct bucket-id collect,
+    # ≤ n_buckets ints by construction); _buckets_for_keys' lookup
+    # bucket derivation (one bucket id per probe key over a keys-sized
+    # local frame, deduplicated on the driver); plus _zorder_expr's
+    # 1-row quantile-boundary aggregate (percentile_approx: 63
+    # boundaries per clustering column — ≤189 doubles at 3 columns —
+    # the z-rank cell edges)
     "sources/commit.py": 3,
 }
 
@@ -175,3 +179,44 @@ def test_session_conf_is_read_and_scoped_one_way():
         "non-test callers that need different values; otherwise make the "
         "one value in use a constant"
     )
+
+
+_HISTORY = re.compile(
+    r"VERDICT|ADVICE|guide §|[Rr]ound[- ]?\d+|OPTIMIZATION_r\d+|\br\d{1,2}\b|SCALE\.md"
+)
+
+
+def _prose_lines(src: str):
+    """(line number, text) of every comment and docstring line."""
+    tree = ast.parse(src)
+    lines = src.splitlines()
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ):
+            doc = node.body[0] if node.body else None
+            if (
+                isinstance(doc, ast.Expr)
+                and isinstance(doc.value, ast.Constant)
+                and isinstance(doc.value.value, str)
+            ):
+                for n in range(doc.lineno, doc.end_lineno + 1):
+                    yield n, lines[n - 1]
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        if tok.type == tokenize.COMMENT:
+            yield tok.start[0], tok.string
+
+
+def test_package_prose_states_the_contract_not_the_history():
+    """Comments and docstrings say what the code does and why, not
+    which review round or ledger entry changed it: the ledgers and git
+    keep that history.  Code (identifiers such as ``r4``, error-message
+    strings) is out of scope; only comment tokens and docstrings are
+    read."""
+    hits = [
+        f"{rel}:{n}: {text.strip()}"
+        for rel, src in _package_sources()
+        for n, text in _prose_lines(src)
+        if _HISTORY.search(text)
+    ]
+    assert hits == [], "history citations in package prose:\n" + "\n".join(hits)
