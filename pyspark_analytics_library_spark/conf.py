@@ -40,7 +40,7 @@ class Key(NamedTuple):
 KEYS: dict[str, Key] = {
     "spark.analytics.quantile.maxLocalStateBytes": Key("256m", size_bytes, "exact-percentile state above which the binned path runs"),
     "spark.analytics.cc.driverUnionFindMaxEdges": Key("500000", int, "CC driver union-find edge cap; 0 forces the loop"),
-    "spark.analytics.scratchDir": Key(None, str, "Hadoop-visible base for iteration scratch"),
+    "spark.analytics.scratchDir": Key(None, str, "Hadoop-visible base for every file the package stages"),
     "spark.analytics.graph.denseMatmulMaxVertices": Key("4096", int, "dense triangle census vertex cap"),
     "spark.analytics.graph.denseMatmulMaxEdges": Key("2000000", int, "dense triangle census edge cap"),
     "spark.analytics.graph.sparseMaxWork": Key("1e11", float, "sparse census work above which it refuses"),

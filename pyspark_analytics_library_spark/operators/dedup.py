@@ -26,7 +26,12 @@ from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import (
+    fs_delete,
+    iteration_scratch,
+    load_tables,
+    reclaim_iteration_scratch,  # noqa: F401 — public re-export
+)
 
 
 def word_shingles(text_col: Column, k: int = 3) -> Column:
@@ -515,8 +520,8 @@ def connected_components(
       makes the round count O(log n) however ids are laid out (pointer
       doubling takes >20 rounds at sf0.1 on the fixture graph, this 8).
 
-    Every round writes the label table to app-and-run-scoped scratch
-    parquet (see _iteration_scratch_root) and re-reads it.  Unlike
+    Every round writes the label table to a per-call scratch generation
+    (``iteration_scratch`` in ``sources/io.py``) and re-reads it.  Unlike
     ``localCheckpoint`` this cuts the plan AND resets Catalyst's size
     statistics: LogicalRDD carries the origin plan's estimate, and join
     estimates multiply, so the carried estimate compounds until the driver
@@ -640,138 +645,24 @@ class ConvergenceError(RuntimeError):
     """
 
 
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    """Best-effort recursive delete through the Hadoop FileSystem API —
-    works for any URI Spark can write (file://, hdfs://, s3a://), which
-    ``shutil.rmtree`` does not once scratchDir points at remote
-    storage."""
-    try:
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        fs.delete(hpath, True)
-    except Exception:  # cleanup must never fail the computation
-        pass
-
-
 def _cc_checkpoint(df: DataFrame, scratch_root: str, round_no: int) -> DataFrame:
     """Materialize a loop frame to scratch parquet and re-read it, cutting
     the plan and the carried size statistics (see connected_components).
     Rolls the prior round's files off via the Hadoop FS API, so the delete
     is real on remote scratchDirs too.  The FINAL round's files back the
-    returned DataFrame; :func:`reclaim_iteration_scratch`, clearing the
-    app-scoped scratch dir, or the OS tempdir cleaner reclaim them.
+    returned DataFrame; :func:`reclaim_iteration_scratch` or the dead-pid
+    scratch janitor reclaims them.
 
     Writes are coalesced to a few files: the vertex-count-sized label
     table is re-read whole every round, so many tiny files would pay
     per-file open/commit cost × rounds for no parallelism."""
     path = os.path.join(scratch_root, f"round_{round_no}")
     df.coalesce(4).write.mode("overwrite").parquet(path)
-    _fs_delete(df.sparkSession, os.path.join(scratch_root, f"round_{round_no - 1}"))
+    fs_delete(df.sparkSession, os.path.join(scratch_root, f"round_{round_no - 1}"))
     # The written schema is df's own — passing it skips the re-read's
     # footer-based schema inference (~70 ms of driver work per reader
     # build, ~log(diameter) builds per loop).
     return df.sparkSession.read.schema(df.schema).parquet(path)
-
-
-def _iteration_scratch_root(spark: SparkSession) -> str:
-    """Durable scratch base for iterative materialization, scoped by the
-    Spark application id (NOT the driver pid: pids collide across hosts
-    and containerized drivers are routinely pid 1) plus a per-call uuid.
-
-    Resolution order (a driver-local tempdir is only correct when driver
-    and executors share a filesystem, i.e. local masters):
-
-    1. ``spark.analytics.scratchDir`` — any Hadoop-visible URI, verbatim;
-    2. local[*] master — the OS tempdir;
-    3. cluster master — ``sparkContext.getCheckpointDir()`` if set, else
-       raise before the first job: executor-unreachable local paths would
-       corrupt the loop mid-flight."""
-    bases = _scratch_bases(spark)
-    if not bases:
-        raise ValueError(
-            "iterative operators need durable scratch storage on a "
-            "cluster: set spark.analytics.scratchDir to a shared "
-            "URI (hdfs://, s3a://, ...) or call "
-            "sparkContext.setCheckpointDir() first"
-        )
-    import uuid
-
-    # App-id scoping isolates concurrent applications sharing one
-    # scratch URI; the per-call uuid isolates repeated/concurrent loops
-    # WITHIN an application — a second run must not overwrite the final
-    # round files still backing the first run's returned DataFrame.
-    app_id = spark.sparkContext.applicationId
-    return os.path.join(
-        bases[0], f"pyspark_analytics_cc_{app_id}", uuid.uuid4().hex[:12]
-    )
-
-
-def _scratch_bases(spark: SparkSession) -> list[str]:
-    """Every base iteration scratch can live under, in the resolution
-    order of :func:`_iteration_scratch_root`."""
-    import tempfile
-
-    bases = [conf.get(spark, "spark.analytics.scratchDir")]
-    if conf.is_local_master(spark):
-        bases.append(tempfile.gettempdir())
-    try:
-        bases.append(spark.sparkContext.getCheckpointDir())
-    except Exception:  # best-effort: an unreadable checkpoint dir is no base
-        pass
-    return [b for b in bases if b]
-
-
-def reclaim_iteration_scratch(
-    spark: SparkSession, keep_latest: bool = True
-) -> list[str]:
-    """Prune THIS application's superseded iteration-scratch generations.
-
-    :func:`connected_components`'s loop writes a fresh per-call generation
-    under ``<base>/pyspark_analytics_cc_<applicationId>/`` (a later call
-    must not overwrite the parquet backing an earlier call's returned
-    DataFrame), so generations accumulate in a long-lived application.
-    This lists the app-scoped dir under every base
-    :func:`_iteration_scratch_root` could have used and deletes through
-    the Hadoop FileSystem API, so remote deletes are real.
-
-    ``keep_latest=True`` keeps the most recently modified generation per
-    base (backing the LAST returned frame).  ``keep_latest=False`` deletes
-    every generation and the app dir; frames returned earlier become
-    invalid, so persist or collect them first.
-
-    Returns the URIs deleted; unreachable bases and race-lost deletes are
-    skipped (reclaim must never fail the computation)."""
-    app_id = spark.sparkContext.applicationId
-    deleted: list[str] = []
-    seen: set[str] = set()
-    for base in _scratch_bases(spark):
-        app_dir = os.path.join(base, f"pyspark_analytics_cc_{app_id}")
-        if app_dir in seen:
-            continue
-        seen.add(app_dir)
-        try:
-            jvm = spark._jvm
-            hpath = jvm.org.apache.hadoop.fs.Path(app_dir)
-            fs = hpath.getFileSystem(
-                spark.sparkContext._jsc.hadoopConfiguration()
-            )
-            if not fs.exists(hpath):
-                continue
-            gens = sorted(
-                (s.getModificationTime(), str(s.getPath()))
-                for s in fs.listStatus(hpath)
-                if s.isDirectory()
-            )
-            victims = gens[:-1] if keep_latest and gens else gens
-            for _mtime, gen in victims:
-                if fs.delete(jvm.org.apache.hadoop.fs.Path(gen), True):
-                    deleted.append(gen)
-            if not keep_latest:
-                fs.delete(hpath, True)
-        except Exception:  # best-effort, like _fs_delete
-            continue
-    return deleted
 
 
 def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
@@ -840,7 +731,7 @@ def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
 
 def _cc_loop(sym: DataFrame, max_iters: int) -> DataFrame:
     spark = sym.sparkSession
-    scratch_root = _iteration_scratch_root(spark)
+    scratch_root = iteration_scratch(spark)
     from pyspark.sql import Observation
 
     # Every failed exit from here on — a write failing in any round, or
@@ -907,11 +798,11 @@ def _cc_loop(sym: DataFrame, max_iters: int) -> DataFrame:
                 "returning partial labels would silently split components"
             )
     except BaseException:
-        _fs_delete(spark, scratch_root)
+        fs_delete(spark, scratch_root)
         raise
     # The edge materialization is dead once the loop exits; only the
     # final round's parquet (backing the returned frame) must survive.
-    _fs_delete(spark, sym_path)
+    fs_delete(spark, sym_path)
     return lab
 
 

@@ -26,7 +26,11 @@ from pyspark.sql.types import ArrayType
 
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import (
+    fs_delete,
+    iteration_scratch,
+    load_tables,
+)
 
 
 def co_occurrence_edges(
@@ -356,40 +360,22 @@ def triangle_census(spark: SparkSession, edges: DataFrame) -> DataFrame:
     materializes to iteration scratch, which on a CLUSTER master
     requires ``spark.analytics.scratchDir`` (any Hadoop-visible URI) or
     a configured checkpoint dir — the census raises eagerly before the
-    first job otherwise, exactly like the connected-components loop
-    (see ``_iteration_scratch_root``).  The triangle sum is collected
-    INSIDE the census (one scalar row) and the whole scratch generation
-    is deleted before returning — including on the work-cap refusal
-    path — so the returned 1-row summary frame is backed purely by
-    driver-local literals and repeated census calls leave nothing on
-    disk (a frame lazily backed by the scratch parquet could never be
-    reclaimed).  The whole body runs under an exception guard that
-    reclaims the scratch generation, so a failure between the edge
-    write and the normal-path deletes (e.g. inside the dense numpy
-    section) leaks nothing."""
-    from pyspark_analytics_library_spark.operators.dedup import (
-        _fs_delete,
-        _iteration_scratch_root,
-    )
-
-    scratch = _iteration_scratch_root(spark)
+    first job otherwise, exactly like the connected-components loop.
+    Only scalars leave the census (the triangle sum is collected inside
+    it as one row), so the whole scratch generation is deleted on every
+    exit — return, work-cap refusal or failure — and the returned 1-row
+    summary frame is backed purely by driver-local literals."""
+    scratch = iteration_scratch(spark)
     try:
         return _triangle_census_impl(spark, edges, scratch)
-    except BaseException:
-        # The normal paths (dense, sparse, work-cap refusal) delete
-        # scratch themselves; this guard covers every OTHER exit so no
-        # generation outlives a failed census (_fs_delete is
-        # idempotent and never raises).
-        _fs_delete(spark, scratch)
-        raise
+    finally:
+        fs_delete(spark, scratch)
 
 
 def _triangle_census_impl(
     spark: SparkSession, edges: DataFrame, scratch: str
 ) -> DataFrame:
     import numpy as np
-
-    from pyspark_analytics_library_spark.operators.dedup import _fs_delete
 
     edges_path = os.path.join(scratch, "edges")
     edges_schema = edges.schema
@@ -426,7 +412,6 @@ def _triangle_census_impl(
             blk = A[i0 : i0 + 1024]
             t += int(((blk @ A) * blk).sum())
         wedges = int((deg_pd["d"] * (deg_pd["d"] - 1) // 2).sum())
-        _fs_delete(spark, scratch)
         return _census_summary(spark, m_edges, wedges, t)
 
     # ----- sparse / large: distributed adjacency-intersection path -----
@@ -480,7 +465,6 @@ def _triangle_census_impl(
     d_np = deg_pd["d"].to_numpy(dtype="float64")
     work = float((d_np * np.minimum(d_np, math.sqrt(2.0 * max(m_edges, 1)))).sum())
     if work > work_cap:
-        _fs_delete(spark, scratch)
         raise ValueError(
             f"graph_triangles: projected adjacency-intersection work "
             f"{work:.3g} (n={n_vertices} vertices, m={m_edges} edges, "
@@ -546,9 +530,6 @@ def _triangle_census_impl(
         e_dir, nbrs, m_edges <= bcast_cap, e_dir_out.schema["dst"].dataType
     )
     t = int(tri.collect()[0]["t"] or 0)
-    # Only scalars escaped: reclaim the whole scratch generation now,
-    # instead of leaving one edges/e_dir/nbrs set per call on disk.
-    _fs_delete(spark, scratch)
     return _census_summary(spark, m_edges, wedges, t)
 
 

@@ -47,14 +47,13 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.functions.coercion import ensure_columns
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, scratch_path
 
 DEFAULT_BUCKETS = 16
 
@@ -191,14 +190,10 @@ def write_bucketed(
 
     Bucketing is Spark's pay-once co-location: both sides of a future
     equi-join on `key` with the same bucket count scan pre-partitioned,
-    pre-sorted files and sort-merge-join with NO Exchange.
+    pre-sorted files and sort-merge-join with NO Exchange.  The files
+    default to this process's scratch root (``scratch_path``).
     """
-    # pid-scoped (like sources/scan_queries._SCRATCH): two concurrent
-    # processes writing the same table name must not clobber each other's
-    # files mid-read.
-    base = base_dir or os.path.join(
-        tempfile.gettempdir(), f"sparkalytics_bucketed_{os.getpid()}"
-    )
+    base = base_dir or scratch_path(spark, "bucketed")
     spark.sql(f"DROP TABLE IF EXISTS {name}")
     (
         df.write.mode("overwrite")

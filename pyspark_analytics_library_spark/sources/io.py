@@ -13,7 +13,13 @@ or a partitioned table root; nothing here assumes a single file.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import tempfile
+import time
+import uuid
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -66,8 +72,6 @@ def _package_zip() -> str:
     if _ZIP_PATH is not None and os.path.exists(_ZIP_PATH):
         return _ZIP_PATH
     import hashlib
-    import shutil
-    import tempfile
 
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     digest = hashlib.sha256()
@@ -305,3 +309,198 @@ def sink_parquet(
 
 def sink_csv(df: DataFrame, path: str, mode: str = "overwrite", header: bool = True) -> None:
     df.write.mode(mode).option("header", header).csv(path)
+
+
+# ---------------------------------------------------------------------------
+# Scratch storage
+# ---------------------------------------------------------------------------
+
+#: Grace window before a DEAD pid's root is reclaimed.  Pid liveness is
+#: namespace-local: a driver in a sibling container sharing the base
+#: probes a pid from ANOTHER namespace and gets a false
+#: ProcessLookupError; the grace keeps that mistake from destroying a
+#: sink minutes after a concurrent driver created it.
+_DEAD_GRACE_S = 300
+
+#: Age gate for roots whose pid liveness cannot be probed.
+_MAX_AGE_S = 6 * 3600
+
+_ROOT_PREFIX = "pyspark_analytics_"
+
+#: Janitor latch: one sweep per process, at the first scratch request,
+#: not at import (imports stay side-effect free).
+_SWEPT = False
+
+
+def _scratch_bases(spark: SparkSession) -> list[str]:
+    """Every base scratch can live under, in resolution order: the
+    ``spark.analytics.scratchDir`` conf (any Hadoop-visible URI), the OS
+    tempdir on local masters (a driver-local path is only correct when
+    driver and executors share a filesystem), then the checkpoint dir."""
+    bases = [conf.get(spark, "spark.analytics.scratchDir")]
+    if conf.is_local_master(spark):
+        bases.append(tempfile.gettempdir())
+    try:
+        bases.append(spark.sparkContext.getCheckpointDir())
+    except Exception:  # best-effort: an unreadable checkpoint dir is no base
+        pass
+    return [b for b in bases if b]
+
+
+def _root_name(spark: SparkSession) -> str:
+    # pid AND application id: pids collide across hosts (containerized
+    # drivers are routinely pid 1), application ids across restarts of
+    # one process do not.
+    return f"{_ROOT_PREFIX}{os.getpid()}_{spark.sparkContext.applicationId}"
+
+
+def scratch_path(spark: SparkSession, *parts: str) -> str:
+    """``<base>/pyspark_analytics_<pid>_<applicationId>/<parts...>`` — the
+    one place the package stages files.  The base is the first of
+    :func:`_scratch_bases`; with none (a cluster master with neither the
+    conf nor a checkpoint dir) this raises before any job runs, since
+    executor-unreachable local paths would corrupt the caller mid-flight.
+    The first call in a process also sweeps dead processes' roots."""
+    bases = _scratch_bases(spark)
+    if not bases:
+        raise ValueError(
+            "staging files on a cluster needs durable scratch storage: set "
+            "spark.analytics.scratchDir to a shared URI (hdfs://, s3a://, ...) "
+            "or call sparkContext.setCheckpointDir() first"
+        )
+    _sweep_dead_roots(bases)
+    return os.path.join(bases[0], _root_name(spark), *parts)
+
+
+def iteration_scratch(spark: SparkSession) -> str:
+    """A fresh generation ``<root>/iter/<uuid>`` for one iterative call:
+    a second call must not overwrite the files backing the first call's
+    returned DataFrame."""
+    return scratch_path(spark, "iter", uuid.uuid4().hex[:12])
+
+
+def _local(uri: str) -> str | None:
+    """The local path of a plain path or ``file:`` URI, else None."""
+    parsed = urlparse(uri)
+    if parsed.scheme == "":
+        return uri
+    return parsed.path if parsed.scheme == "file" else None
+
+
+def local_scratch_path(spark: SparkSession, name: str) -> str:
+    """:func:`scratch_path` leaf as a local path, for stagers that use OS
+    file calls (symlink, rename, rmtree); the root is created."""
+    root = scratch_path(spark)
+    local = _local(root)
+    if local is None:
+        raise ValueError(
+            f"staging with local file calls needs a local scratch root, not "
+            f"{root!r}: set spark.analytics.scratchDir to a path or file: URI"
+        )
+    os.makedirs(local, exist_ok=True)
+    return os.path.join(local, name)
+
+
+def _pid_state(pid_s: str) -> str | None:
+    """'dead' | 'alive' | 'unknown' for a pid segment, or None when the
+    segment is not a sane pid at all: the ascii+digit guard rejects
+    Unicode 'digits' that pass isdigit() but fail int(), and the range
+    cap rejects values past the C-long range that make os.kill raise
+    OverflowError."""
+    if not (pid_s.isascii() and pid_s.isdigit()):
+        return None
+    pid = int(pid_s)
+    if pid > 2**31 - 1:
+        return None
+    try:
+        os.kill(pid, 0)
+        return "alive"
+    except ProcessLookupError:
+        return "dead"
+    except PermissionError:
+        # EPERM from kill(pid, 0) proves the process EXISTS (we lack
+        # signal permission) — POSIX kill(2).  'unknown' would subject a
+        # live other-uid process's root to the age-gate rmtree while its
+        # returned DataFrames may still be backed by files inside.
+        return "alive"
+    except OSError:  # anything else — can't probe liveness
+        return "unknown"
+
+
+def _sweep_dead_roots(bases: list[str]) -> None:
+    """Once per process, delete other processes' roots under the local
+    bases: a dead pid's root past ``_DEAD_GRACE_S``, an unprobeable pid's
+    root past ``_MAX_AGE_S``.  A live pid's root is kept at any age (a
+    long-lived session never refreshes its mtime); other names are
+    skipped; remote bases are left to their storage's lifecycle rules."""
+    global _SWEPT
+    if _SWEPT:
+        return
+    _SWEPT = True
+    now = time.time()
+    for base in filter(None, map(_local, bases)):
+        for path in glob.glob(os.path.join(glob.escape(base), f"{_ROOT_PREFIX}*_*")):
+            state = _pid_state(os.path.basename(path)[len(_ROOT_PREFIX):].split("_")[0])
+            try:
+                age = now - os.path.getmtime(path)
+            except OSError:  # deleted by a racing sweeper
+                continue
+            if (state == "dead" and age > _DEAD_GRACE_S) or (
+                state == "unknown" and age > _MAX_AGE_S
+            ):
+                shutil.rmtree(path, ignore_errors=True)
+
+
+def _hadoop_fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for any URI Spark can write."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath
+
+
+def fs_delete(spark: SparkSession, path: str) -> None:
+    """Best-effort recursive delete through the Hadoop FileSystem API."""
+    try:
+        fs, hpath = _hadoop_fs(spark, path)
+        fs.delete(hpath, True)
+    except Exception:  # cleanup must never fail the computation
+        pass
+
+
+def reclaim_iteration_scratch(
+    spark: SparkSession, keep_latest: bool = True
+) -> list[str]:
+    """Prune THIS process's superseded iteration-scratch generations.
+
+    :func:`~pyspark_analytics_library_spark.operators.dedup.connected_components`'s
+    loop writes a fresh generation under ``<root>/iter/`` per call, so
+    generations accumulate in a long-lived application.  This lists
+    ``iter/`` under every base :func:`scratch_path` could have used and
+    deletes through the Hadoop FileSystem API, so remote deletes are
+    real.  Only ``iter/`` is touched: the root's other leaves (sinks,
+    bucketed tables) stay.
+
+    ``keep_latest=True`` keeps the most recently modified generation per
+    base (backing the LAST returned frame).  ``keep_latest=False`` deletes
+    every generation and ``iter/``; frames returned earlier become
+    invalid, so persist or collect them first.
+
+    Returns the URIs deleted; unreachable bases and race-lost deletes are
+    skipped (reclaim must never fail the computation)."""
+    deleted: list[str] = []
+    for base in dict.fromkeys(_scratch_bases(spark)):
+        try:
+            fs, hpath = _hadoop_fs(spark, os.path.join(base, _root_name(spark), "iter"))
+            if not fs.exists(hpath):
+                continue
+            gens = sorted(
+                (s for s in fs.listStatus(hpath) if s.isDirectory()),
+                key=lambda s: (s.getModificationTime(), str(s.getPath())),
+            )
+            for gen in gens[:-1] if keep_latest else gens:
+                if fs.delete(gen.getPath(), True):
+                    deleted.append(str(gen.getPath()))
+            if not keep_latest:
+                fs.delete(hpath, True)
+        except Exception:  # best-effort, like fs_delete
+            continue
+    return deleted

@@ -6,8 +6,9 @@ covers the writer+reader pair end-to-end, not just a row count.
 
 Scale posture: sinks write partitioned directories (one file per task);
 the parquet round-trip uses partitionBy to produce the prunable layout
-a 100 TB fact table needs.  Scratch lives under the repo
-(.scratch/, gitignored) — nothing touches the read-only fixtures.
+a 100 TB fact table needs.  Sinks, merge targets and the Derby
+database live under the process's scratch root (``sources/io.py``) —
+nothing touches the read-only fixtures.
 """
 
 from __future__ import annotations
@@ -25,46 +26,12 @@ from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources import io as io_mod
 from pyspark_analytics_library_spark.sources.io import load_tables
 
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
-    # pid-scoped: two processes running the roundtrip queries at once
-    # (e.g. the driver and a local test run) must not clobber each
-    # other's sink mid-read.
-    f"pid{os.getpid()}",
-)
 
-
-def _scratch(name: str) -> str:
-    # Janitor the shared .scratch root first (latched: one pass per
-    # process), so a replay that only runs the roundtrip queries still
-    # reclaims the dead-pid pid<NNN> dirs this module creates.  Lazy
-    # import: keeping the dependency out of import time keeps both
-    # modules independently importable.
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _prune_stale_scratch,
-    )
-
-    _prune_stale_scratch()
-    os.makedirs(_SCRATCH, exist_ok=True)
-    path = os.path.join(_SCRATCH, name)
+def _scratch(spark: SparkSession, name: str) -> str:
+    """A cleared scratch leaf for one round-trip sink."""
+    path = io_mod.local_scratch_path(spark, name)
     shutil.rmtree(path, ignore_errors=True)
     return path
-
-
-def _merge_target(name: str) -> str:
-    """Target directory for the merge queries — like :func:`_scratch`
-    but it does NOT clear an existing directory: merge targets model a
-    LIVE table that :func:`_staged_overwrite` replaces crash-safely via
-    rename, and an upfront rmtree would reintroduce exactly the
-    unprotected window the staged swap removes."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _prune_stale_scratch,
-    )
-
-    _prune_stale_scratch()
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return os.path.join(_SCRATCH, name)
 
 
 def _staged_overwrite(df: DataFrame, target: str) -> str:
@@ -81,10 +48,10 @@ def _staged_overwrite(df: DataFrame, target: str) -> str:
     - crash BETWEEN the two renames (a metadata-sized window) → target
       briefly absent but the old table is intact under ``.old-<uuid>``
       — recoverable by hand until dead-pid reclamation (for the merge
-      queries here the backup lives inside the pid-scoped scratch dir,
-      which the janitor rmtrees ``_SCRATCH_DEAD_GRACE_S`` after the
-      owning process dies; a target outside scratch keeps its backup
-      until an operator removes it).
+      queries here the backup lives inside the process's scratch root,
+      which the scratch janitor deletes once the owning process has
+      been dead for its grace period; a target outside scratch keeps
+      its backup until an operator removes it).
 
     POSIX ``rename`` within one filesystem is atomic, which covers
     local/HDFS deployments; on object stores (S3A et al.) "rename" is
@@ -149,7 +116,7 @@ def q_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset = t["lineitem"].filter(
         (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 40)
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    path = _scratch("sink_parquet")
+    path = _scratch(spark, "sink_parquet")
     io_mod.sink_parquet(subset, path, partition_by=["l_returnflag"])
     back = spark.read.parquet(path)
     # partitionBy moves the partition col last and reads it as string;
@@ -170,7 +137,7 @@ def q_sink_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset = t["lineitem"].filter(
         (F.col("l_returnflag") == "R") & (F.col("l_quantity") >= 40)
     ).select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag")
-    path = _scratch("sink_csv")
+    path = _scratch(spark, "sink_csv")
     io_mod.sink_csv(subset, path)
     schema = T.StructType(
         [
@@ -196,7 +163,7 @@ def q_scan_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     of JSON number formatting, and none are on this surface)."""
     t = load_tables(spark, sf_dir)
     subset = t["nation"]
-    path = _scratch("sink_json")
+    path = _scratch(spark, "sink_json")
     subset.write.mode("overwrite").json(path)
     return io_mod.scan_json(
         spark, path, schema="n_nationkey int, n_name string, n_regionkey int"
@@ -209,7 +176,7 @@ def q_scan_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the int/string region table round-trips exactly; the oracle compares
     against the source table."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("sink_orc")
+    path = _scratch(spark, "sink_orc")
     t["region"].write.mode("overwrite").orc(path)
     return io_mod.scan_orc(spark, path)
 
@@ -237,7 +204,7 @@ def q_scan_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORIGINAL table so the check also proves the layout lost no rows.
     """
     t = load_tables(spark, sf_dir)
-    path = _scratch("part_by_lang")
+    path = _scratch(spark, "part_by_lang")
     t["documents"].select("doc_id", "source", "n_chars", "lang").write.mode(
         "overwrite"
     ).partitionBy("lang").parquet(path)
@@ -294,7 +261,7 @@ def q_scan_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     pins the engaged path's numFiles < staticFilesNum at fixture scale.
     """
     t = load_tables(spark, sf_dir)
-    path = _scratch("dpp_by_lang")
+    path = _scratch(spark, "dpp_by_lang")
     t["documents"].select("doc_id", "n_chars", "lang").write.mode(
         "overwrite"
     ).partitionBy("lang").parquet(path)
@@ -342,7 +309,7 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     t = load_tables(spark, sf_dir)
     base = t["documents"].select("doc_id", "n_chars", "lang")
-    path = _scratch("dyn_overwrite")
+    path = _scratch(spark, "dyn_overwrite")
     base.write.mode("overwrite").partitionBy("lang").parquet(path)
     with conf.scoped_conf(
         spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
@@ -376,7 +343,7 @@ def q_scan_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-file schemas (parquet mergeSchema is the footer-union that
     makes additive evolution free)."""
     t = load_tables(spark, sf_dir)
-    path = _scratch("schema_evo")
+    path = _scratch(spark, "schema_evo")
     old_gen = t["documents"].filter(F.col("lang") == "en").select("doc_id", "lang")
     new_gen = (
         t["documents"]
@@ -417,7 +384,7 @@ def q_scan_csv_options(spark: SparkSession, sf_dir: str) -> DataFrame:
     subset = t["customer"].filter(F.col("c_acctbal") < 0).select(
         "c_custkey", "c_name", "c_acctbal", "c_mktsegment"
     )
-    path = _scratch("sink_csv_options")
+    path = _scratch(spark, "sink_csv_options")
     opts = {"header": "true", "sep": ";", "quoteAll": "true", "nullValue": "\\N"}
     subset.write.mode("overwrite").options(**opts).csv(path)
     schema = T.StructType(
@@ -532,7 +499,7 @@ def q_sink_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    path = _merge_target("sink_merge")
+    path = io_mod.local_scratch_path(spark, "sink_merge")
     merged = scd1_merged(base, updates)
     merged_read = spark.read.parquet(_staged_overwrite(merged, path))
     return (
@@ -695,7 +662,7 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     :func:`_insert_key_offset` insert keys as SCD-1.
     """
     orders = load_tables(spark, sf_dir)["orders"]
-    path = _merge_target("sink_merge_scd2")
+    path = io_mod.local_scratch_path(spark, "sink_merge_scd2")
     hist = scd2_history(orders)
     hist_read = spark.read.parquet(_staged_overwrite(hist, path))
     return (
@@ -725,7 +692,7 @@ def q_sink_merge_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JDBC source surface driven end-to-end against Spark's bundled
     EMBEDDED Derby.  Pipeline:
-    nation → ``DataFrame.write.jdbc`` into a fresh pid-scoped Derby
+    nation → ``DataFrame.write.jdbc`` into a fresh scratch Derby
     database → re-read through :func:`scan_jdbc` with the PARTITIONED
     options (partitionColumn/lowerBound/upperBound/numPartitions=4),
     the 100 TB-relevant half: a production JDBC ingest must shard
@@ -736,17 +703,16 @@ def q_scan_jdbc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The returned frame stays LAZY (the driver collects after we
     return), so the Derby database must outlive this call: each call
-    boots its own uuid-leafed database under the pid scratch (a shared
-    leaf would be rmtree'd by the NEXT call's ``_scratch()``, yanking
-    the files out from under any still-uncollected prior frame), and
-    the whole pid dir is reclaimed
-    by the shared dead-pid janitor once the process exits.  Embedded
-    Derby is single-JVM — exactly the local[N] shape — while a cluster
+    boots its own uuid-leafed database in the process's scratch root (a
+    shared leaf would be cleared by the NEXT call, yanking the files out
+    from under any still-uncollected prior frame); the scratch janitor
+    reclaims the root after the process exits.  Embedded Derby is
+    single-JVM — exactly the local[N] shape — while a cluster
     run would point the same options at a networked RDBMS; the plan is
     identical either way (JDBCRelation with 4 range-sharded
     partitions).
     """
-    path = _scratch(f"derby_jdbc_{uuid.uuid4().hex[:8]}")
+    path = io_mod.local_scratch_path(spark, f"derby_jdbc_{uuid.uuid4().hex[:8]}")
     # Keep derby.log inside the scratch dir (no-op after the engine
     # first boots in this JVM; the DB path itself is absolute).
     spark._jvm.java.lang.System.setProperty("derby.system.home", path)

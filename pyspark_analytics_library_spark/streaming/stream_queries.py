@@ -7,7 +7,9 @@ Scale posture: these are the same incremental plans a production
 cluster runs — watermarks bound state-store size (without one, a
 windowed agg's state grows forever); `availableNow` here is what a
 backfill run uses in production.  State lives on executors
-(HDFS/RocksDB state store), never the driver.
+(HDFS/RocksDB state store), never the driver.  Stream sources, sinks
+and the late-data splits stage files under the process's scratch root
+(``sources/io.py``); nothing touches the read-only fixtures.
 """
 
 from __future__ import annotations
@@ -23,208 +25,34 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import _configure, _normalize_ts, load_tables
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
-    ".scratch",
+from pyspark_analytics_library_spark.sources.io import (
+    _configure,
+    _normalize_ts,
+    load_tables,
+    local_scratch_path,
+    scratch_path,
 )
 
-#: Janitor latch — prune once per process, at the first query that
-#: stages into scratch, not at import (imports must stay side-effect
-#: free) and not per call (a 190-query sweep would re-scan .scratch
-#: hundreds of times).
-_SCRATCH_PRUNED = False
-
-#: Age gate for uuid-named leftovers.  Generous on purpose: a dir is
-#: only ever deleted long after any plausible run that could still hold
-#: a DataFrame backed by it has exited.
-_SCRATCH_MAX_AGE_S = 6 * 3600
-
-#: Grace window before a DEAD pid's dirs are reclaimed.  Pid liveness
-#: is a namespace-local signal: a driver in a sibling container
-#: bind-mounting the same checkout probes a pid from ANOTHER namespace
-#: and gets a false ProcessLookupError.  Sharing one checkout's
-#: .scratch across pid namespaces is out of contract, but the grace
-#: window keeps even that mistake from destroying a sink parquet
-#: minutes after a concurrent driver created it; reclamation still
-#: happens promptly enough that the population stops growing.
-_SCRATCH_DEAD_GRACE_S = 300
-
-
-def _prune_stale_scratch() -> None:
-    """Bounded scratch janitor for per-run staging that outlives its query
-    and would leak once the process exits:
-
-    * ``feb_*`` / ``stream_sink_*`` (``<prefix>_<pid>_<uuid>``): per-run
-      foreachBatch sinks backing the RETURNED DataFrame.  Reclaimed once
-      the owning pid is dead AND the dir is past
-      ``_SCRATCH_DEAD_GRACE_S`` (liveness is namespace-local; the grace
-      keeps a false 'dead' from a sibling pid namespace from destroying a
-      fresh sink).  Pid-less names fall back to the age gate.
-    * ``stream_src_*``: keyed events staging (a dir with one symlink),
-      shared across processes; every distinct fixture PATH keys a new dir,
-      so these are age-reclaimed (restaging is one symlink, and
-      availableNow runs finish inside their query).
-    * ``late_stream_*_<pid>`` and ``pid<NNN>`` (the nine write-then-re-read
-      roundtrip queries in sources/scan_queries.py, whose returned frames
-      are backed by the parquet inside): dead pid + grace → reclaim; a
-      CONFIRMED-live pid's dir is never touched at any age (a long-lived
-      session reuses it without refreshing any mtime); inconclusive
-      liveness → age gate only.  ``scan_queries._scratch()`` runs this
-      janitor too.
-
-    Best-effort: a racing deleter or permission hiccup never fails the
-    query doing the janitoring."""
-    global _SCRATCH_PRUNED
-    if _SCRATCH_PRUNED:
-        return
-    _SCRATCH_PRUNED = True
-    try:
-        entries = os.listdir(_SCRATCH)
-    except OSError:
-        return
-    import time
-
-    def pid_state(pid_s: str) -> str | None:
-        """'dead' | 'alive' | 'unknown' for a pid segment, or None when
-        the segment is not a sane pid at all: the ascii+digit guard
-        rejects Unicode 'digits' that pass isdigit() but fail int(),
-        and the range cap rejects values past the C-long range that
-        make os.kill raise OverflowError — neither failure is an
-        OSError, so neither may reach the loop's handler."""
-        if not (pid_s.isascii() and pid_s.isdigit()):
-            return None
-        pid = int(pid_s)
-        if pid > 2**31 - 1:
-            return None
-        if pid == os.getpid():
-            return "alive"
-        try:
-            os.kill(pid, 0)
-            return "alive"
-        except ProcessLookupError:
-            return "dead"
-        except PermissionError:
-            # EPERM from kill(pid, 0) proves the process EXISTS (we
-            # just lack signal permission) — POSIX kill(2).  Treating
-            # it as 'unknown' would subject a live other-uid process's
-            # dirs to the age-gate rmtree while its returned DataFrame
-            # may still be backed by parquet inside.
-            return "alive"
-        except OSError:  # anything else — can't probe liveness
-            return "unknown"
-
-    now = time.time()
-    for name in entries:
-        path = os.path.join(_SCRATCH, name)
-        try:
-            age = now - os.path.getmtime(path)
-            expired = age > _SCRATCH_MAX_AGE_S
-            if name.startswith(("feb_", "stream_sink_")):
-                # <prefix>_<pid>_<uuid>; pid-less names fall through
-                # to the age gate as unknown.
-                parts = name.split("_")
-                state = pid_state(parts[-2]) if len(parts) >= 3 else None
-                state = state or "unknown"
-            elif name.startswith("stream_src_"):
-                state = "unknown"  # keyed, shared across processes
-                # Broken staging: the staged dir holds symlink(s) to a
-                # fixture parquet; pytest tmp fixtures rotate, leaving
-                # dirs whose target is gone.  An all-links-broken dir
-                # can never serve a stream again (reuse re-points the
-                # link anyway), so it is reclaimed on the dead-grace
-                # path.  The grace still protects a dir staged moments
-                # ago; a dir with ANY live-target link stays age-gated.
-                try:
-                    kids = os.listdir(path)
-                    if kids and all(
-                        os.path.islink(os.path.join(path, k))
-                        and not os.path.exists(os.path.join(path, k))
-                        for k in kids
-                    ):
-                        state = "dead"
-                except OSError:
-                    pass
-            # Bare "late_stream" prefix, not "late_stream_": it also
-            # sweeps "late_stream3_*" dirs (same _<pid> suffix contract).
-            elif name.startswith("late_stream"):
-                state = pid_state(name.rsplit("_", 1)[-1])
-                if state is None:
-                    continue  # unrecognized name shape — never touch
-            elif name.startswith("pid"):
-                # pid<NNN> scan-sink scratch (scan_queries._SCRATCH):
-                # the whole suffix is the pid — no uuid segment.
-                state = pid_state(name[3:])
-                if state is None:
-                    continue  # e.g. a stray "pidfile" — never touch
-            else:
-                continue
-            if (state == "dead" and age > _SCRATCH_DEAD_GRACE_S) or (
-                state == "unknown" and expired
-            ):
-                # Re-stat immediately before rmtree: a
-                # sibling process's utime refresh (e.g. the keyed
-                # stream_src_* reuse clock reset) landing between the
-                # age computation above and the delete would otherwise
-                # be ignored.  Shrinks — cannot fully close — the
-                # TOCTOU window; the residual race is accepted for a
-                # best-effort janitor (the 6 h gate plus the per-reuse
-                # refresh make a mid-stream deletion require a >6 h
-                # stat-to-delete stall).
-                if time.time() - os.path.getmtime(path) <= (
-                    _SCRATCH_DEAD_GRACE_S
-                    if state == "dead"
-                    else _SCRATCH_MAX_AGE_S
-                ):
-                    continue
-                shutil.rmtree(path, ignore_errors=True)
-        except Exception:  # noqa: BLE001 — janitor is best-effort by contract
-            continue
-
-
-def _staged_events_dir(sf_dir: str) -> str:
-    """The file streaming source requires a *directory*; stage one in
-    scratch containing a symlink to the (read-only) events parquet.
-
-    The staged dir is keyed by a digest of the FULL fixture path, not
-    just its basename: two processes using different fixture dirs that
-    share a basename (numbered pytest tmp dirs both ending in sf0.01)
-    must stage disjoint dirs — with a shared key they would silently
-    re-point each other's events symlink mid-stream."""
-    _prune_stale_scratch()
+def _sf_key(sf_dir: str) -> str:
+    """Scratch leaf key for a fixture dir: a digest of the FULL path, not
+    just its basename, so two fixture dirs sharing a basename stage
+    disjoint leaves."""
     sf_norm = os.path.normpath(sf_dir)
-    sf_key = (
-        f"{os.path.basename(sf_norm)}_"
-        f"{hashlib.md5(sf_norm.encode()).hexdigest()[:8]}"
-    )
-    d = os.path.join(_SCRATCH, f"stream_src_{sf_key}")
+    digest = hashlib.md5(sf_norm.encode()).hexdigest()[:8]
+    return f"{os.path.basename(sf_norm)}_{digest}"
+
+
+def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The file streaming source requires a *directory*; stage one in
+    scratch containing a symlink to the (read-only) events parquet.  The
+    scratch root is per-process, so a staged link is never re-pointed."""
+    d = local_scratch_path(spark, f"stream_src_{_sf_key(sf_dir)}")
     os.makedirs(d, exist_ok=True)
-    link = os.path.join(d, "events.parquet")
-    target = os.path.join(sf_dir, "events.parquet")
-    # lexists, not exists: a STALE symlink (its fixture dir deleted and
-    # re-created elsewhere, e.g. numbered pytest tmp dirs reusing a
-    # basename) fails exists() yet still blocks os.symlink().  Re-point
-    # atomically: create under a unique temp name and rename over the
-    # old link — a remove→symlink sequence can interleave with a
-    # concurrent driver staging the same basename and crash on
-    # FileExistsError, the very failure the re-point exists to fix.
-    if not (
-        os.path.lexists(link)
-        and os.path.islink(link)
-        and os.readlink(link) == target
-    ):
-        tmp = os.path.join(d, f".events_{os.getpid()}_{uuid.uuid4().hex[:6]}")
-        os.symlink(target, tmp)
-        os.replace(tmp, link)
-    # Reset the janitor age clock on EVERY reuse, not just restaging:
-    # the 6 h gate is the only protection this shared
-    # keyed class has, and a long-lived session reusing a staged dir
-    # whose mtime has quietly aged past it could otherwise have the
-    # dir rmtree'd by a sibling process's janitor mid-stream.
     try:
-        os.utime(d)
-    except OSError:
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"), os.path.join(d, "events.parquet")
+        )
+    except FileExistsError:  # staged by an earlier call
         pass
     return d
 
@@ -241,7 +69,7 @@ def stream_events(spark: SparkSession, sf_dir: str, **reader_opts) -> DataFrame:
     reader = spark.readStream.schema(raw_schema)
     for k, v in reader_opts.items():
         reader = reader.option(k, v)
-    df = reader.parquet(_staged_events_dir(sf_dir))
+    df = reader.parquet(_staged_events_dir(spark, sf_dir))
     # Same two-branch canonicalization as the batch loader (io._normalize_ts):
     # int64-nanos fixtures AND timestamp[us]-NTZ fixtures both become
     # TIMESTAMP (LTZ, session-UTC) — NTZ would reject withWatermark.
@@ -559,17 +387,8 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrated only final-window holdback.  A middle on-time batch
     ages the filter watermark past the late rows before they arrive."""
     base = load_tables(spark, sf_dir, register_views=False)["events"]
-    _prune_stale_scratch()
-    sf_norm = os.path.normpath(sf_dir)
-    # pid-scoped (concurrent processes must not rmtree each other's
-    # staged files mid-stream) + full-path digest (same-basename fixture
-    # dirs within one process must stage disjoint splits); within one
-    # process the staging is reused.
-    split_dir = os.path.join(
-        _SCRATCH,
-        f"late_stream_{os.path.basename(sf_norm)}_"
-        f"{hashlib.md5(sf_norm.encode()).hexdigest()[:8]}_{os.getpid()}",
-    )
+    # Within one process the staging is reused.
+    split_dir = local_scratch_path(spark, f"late_stream_{_sf_key(sf_dir)}")
     cutoff = "2024-01-10 00:00:00"
     mid = "2024-01-20 00:00:00"
     cutoff_col = F.lit(cutoff).cast("timestamp")
@@ -734,9 +553,7 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory (the custom-sink escape hatch — also how streaming joins
     arbitrary batch logic); returns the re-read result."""
     ev = stream_events(spark, sf_dir)
-    out_dir = os.path.join(
-        _SCRATCH, f"stream_sink_{os.getpid()}_{uuid.uuid4().hex[:8]}"
-    )
+    out_dir = scratch_path(spark, f"stream_sink_{uuid.uuid4().hex[:8]}")
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (
@@ -862,7 +679,7 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     the returned frame re-aggregates across batches, so the result is
     batch-count-invariant.
     """
-    out_dir = os.path.join(_SCRATCH, f"feb_{os.getpid()}_{uuid.uuid4().hex[:8]}")
+    out_dir = scratch_path(spark, f"feb_{uuid.uuid4().hex[:8]}")
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         (

@@ -166,13 +166,13 @@ def test_cc_trim_leaves_unset_shuffle_partitions_unset(spark, cc_loop):
     assert seen == ["8"]
 
 
-def test_partition_overwrite_leaves_unset_mode_unset(spark, tmp_path, monkeypatch):
+def test_partition_overwrite_leaves_unset_mode_unset(spark, tmp_path):
     from pyspark_analytics_library_spark.sources import scan_queries
 
-    monkeypatch.setattr(scan_queries, "_SCRATCH", str(tmp_path))
     key = "spark.sql.sources.partitionOverwriteMode"
     with unset_during(spark, key):
-        assert scan_queries.q_sink_partition_overwrite(spark, TEST_SF_DIR).count()
+        with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+            assert scan_queries.q_sink_partition_overwrite(spark, TEST_SF_DIR).count()
         assert spark.conf.get(key, None) is None
 
 
@@ -194,13 +194,17 @@ def test_cluster_master_cc_loop_keeps_shuffle_partitions(spark, monkeypatch, cc_
     assert seen == ["200"]
 
 
-def test_cluster_master_stream_events_keeps_shuffle_partitions(spark, monkeypatch):
+def test_cluster_master_stream_events_keeps_shuffle_partitions(
+    spark, monkeypatch, tmp_path
+):
     from pyspark_analytics_library_spark.streaming.stream_queries import stream_events
 
     monkeypatch.setattr(spark.sparkContext, "master", CLUSTER_MASTER)
-    with unset_during(spark, SHUFFLE):
-        stream_events(spark, TEST_SF_DIR)
-        assert spark.conf.get(SHUFFLE, None) is None
+    # A cluster master stages only under a configured scratch base.
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+        with unset_during(spark, SHUFFLE):
+            stream_events(spark, TEST_SF_DIR)
+            assert spark.conf.get(SHUFFLE, None) is None
 
 
 def test_loader_session_writes_persist_after_load_tables(spark, monkeypatch):

@@ -80,26 +80,23 @@ def test_staged_overwrite_simulated_stale_staging_is_ignored(spark, tmp_path):
     assert os.path.isdir(orphan), "unrelated orphan must be left to the janitor"
 
 
-def test_merge_target_never_clears_existing_content():
-    """_merge_target is the crash-safety PRECONDITION: unlike _scratch
-    it must NOT rmtree an existing target — a revert to _scratch would
-    clear the live table before the staged write even starts,
-    silently reopening exactly the window _staged_overwrite closes."""
-    from pyspark_analytics_library_spark.sources.scan_queries import _merge_target
+def test_merge_target_never_clears_existing_content(spark, tmp_path):
+    """The merge queries resolve their live target with
+    ``local_scratch_path``, the crash-safety PRECONDITION: unlike the
+    round-trip sinks' ``_scratch`` it must NOT rmtree an existing target
+    — clearing the live table before the staged write even starts
+    would reopen exactly the window _staged_overwrite closes."""
+    from pyspark_analytics_library_spark.sources.io import local_scratch_path
 
-    path = _merge_target("pin_merge_target")
-    os.makedirs(path, exist_ok=True)
-    marker = os.path.join(path, "live-file")
-    with open(marker, "w") as f:
-        f.write("x")
-    try:
-        again = _merge_target("pin_merge_target")
-        assert again == path
-        assert os.path.exists(marker), "_merge_target cleared the live target"
-    finally:
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+        path = local_scratch_path(spark, "pin_merge_target")
+        os.makedirs(path)
+        marker = os.path.join(path, "live-file")
+        with open(marker, "w") as f:
+            f.write("x")
+        again = local_scratch_path(spark, "pin_merge_target")
+    assert again == path
+    assert os.path.exists(marker), "the merge target was cleared"
 
 
 def test_scd1_null_keys_collapse_to_single_survivor(spark):
@@ -146,24 +143,23 @@ from pyspark_analytics_library_spark.conf import scoped_conf
 from pyspark_analytics_library_spark.sources import commit as commit_mod
 
 @pytest.mark.parametrize("name", ["sink_merge_upsert", "sink_merge_scd2"])
-def test_merge_sinks_match_oracle(spark, oracle, tmp_path, monkeypatch, name):
+def test_merge_sinks_match_oracle(spark, oracle, tmp_path, name):
     """Each merge sink's staged-overwrite round trip must reproduce the
     query's DuckDB oracle."""
     from pyspark_analytics_library_spark.registry import (
         REGISTRY,
         load_all_query_modules,
     )
-    from pyspark_analytics_library_spark.sources import scan_queries
     from tests.conftest import TEST_SF_DIR, assert_query_matches_oracle
 
     load_all_query_modules()
-    # A fresh scratch root per case: the merge target is a live table
+    # A fresh scratch base per case: the merge target is a live table
     # that a previous run in this process may have left behind.
-    monkeypatch.setattr(scan_queries, "_SCRATCH", str(tmp_path))
     spec = REGISTRY[name]
-    assert_query_matches_oracle(
-        spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=name
-    )
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+        assert_query_matches_oracle(
+            spec.fn(spark, TEST_SF_DIR), oracle, spec.oracle, name=name
+        )
 
 
 def test_manifest_refuses_pointerless_nonempty_target(spark, tmp_path):

@@ -497,10 +497,10 @@ def test_sparse_census_reclaims_scratch_before_returning(spark, tmp_path):
     app_dirs = []
     for root, dirs, _files in os.walk(scratch_base):
         for d in dirs:
-            if not d.startswith("pyspark_analytics_cc_"):
+            if not (d.startswith("pyspark_analytics_") or d == "iter"):
                 app_dirs.append(os.path.join(root, d))
-    # The app-scoped parent may remain; every per-call generation
-    # (uuid leaf) and its e_dir/nbrs contents must be gone.
+    # The process root and its iter/ parent may remain; every per-call
+    # generation (uuid leaf) and its e_dir/nbrs contents must be gone.
     assert app_dirs == [], app_dirs
 
 
@@ -599,7 +599,7 @@ def _file_scan_metrics(df):
     return out
 
 
-def test_dpp_scan_reads_fewer_files_than_static(spark):
+def test_dpp_scan_reads_fewer_files_than_static(spark, tmp_path):
     """VERDICT r11 #7, second invariant: DPP must not merely appear in
     the plan (test_dpp_inserts_dynamic_pruning_subquery pins that) —
     the EXECUTED fact scan must open fewer files than the static
@@ -619,10 +619,9 @@ def test_dpp_scan_reads_fewer_files_than_static(spark):
     attested by the scan's own numFiles/staticFilesNum SQLMetrics, not
     the plan string."""
     from pyspark_analytics_library_spark.sources.io import load_tables
-    from pyspark_analytics_library_spark.sources.scan_queries import _scratch
 
     t = load_tables(spark, TEST_SF_DIR)
-    path = _scratch("dpp_selective")
+    path = str(tmp_path / "dpp_selective")
     t["documents"].select("doc_id", "n_chars", "lang").write.mode(
         "overwrite"
     ).partitionBy("lang").parquet(path)
@@ -806,9 +805,7 @@ def test_census_scratch_reclaimed_on_failure(spark, tmp_path, monkeypatch):
     with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
         with pytest.raises(RuntimeError, match="injected"):
             triangle_census(spark, edges)
-    leftovers = [
-        p for d in tmp_path.glob("pyspark_analytics_cc_*") for p in d.iterdir()
-    ]
+    leftovers = list(tmp_path.glob("pyspark_analytics_*/iter/*"))
     assert leftovers == [], leftovers
 
 

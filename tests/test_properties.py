@@ -558,7 +558,7 @@ def test_cc_scratch_dir_conf_honored(spark, tmp_path):
     ):
         out = {r.v: r.label for r in connected_components(edges, vertices).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
-    runs = list(tmp_path.glob("pyspark_analytics_cc_*/*"))
+    runs = list(tmp_path.glob("pyspark_analytics_*/iter/*"))
     assert runs, "configured scratchDir received no iteration files"
     names = {p.name for p in runs[0].iterdir()}
     # Only the final round's files (backing the returned frame) may
@@ -593,9 +593,7 @@ def test_cc_loop_reclaims_scratch_on_failure(
     with scoped_conf(spark, confs):
         with pytest.raises(RuntimeError, match=f"injected round-{fail_round}"):
             dedup.connected_components(edges, vertices).collect()
-    leftovers = [
-        p for d in tmp_path.glob("pyspark_analytics_cc_*") for p in d.iterdir()
-    ]
+    leftovers = list(tmp_path.glob("pyspark_analytics_*/iter/*"))
     assert leftovers == [], leftovers
 
 
@@ -654,12 +652,12 @@ def test_cc_interval_rewrite_matches_edge_closure(spark):
 def test_scratch_root_requires_durable_dir_on_cluster(spark, monkeypatch):
     """On a non-local master with no conf and no checkpoint dir the loop
     must refuse eagerly instead of writing executor-local paths."""
-    from pyspark_analytics_library_spark.operators.dedup import _iteration_scratch_root
+    from pyspark_analytics_library_spark.sources.io import iteration_scratch
 
     monkeypatch.setattr(spark.sparkContext, "master", "spark://cluster:7077")
     monkeypatch.setattr(spark.sparkContext, "getCheckpointDir", lambda: None)
     with pytest.raises(ValueError, match="scratchDir"):
-        _iteration_scratch_root(spark)
+        iteration_scratch(spark)
 
 
 def test_ngram_jaccard_prefix_filter_is_lossless(spark):
@@ -864,19 +862,22 @@ def test_approx_quantile_close_to_exact(spark):
 def test_scratch_root_uses_checkpoint_dir_on_cluster(spark, monkeypatch):
     """With no scratchDir conf, a cluster master falls back to the
     application's configured checkpoint dir."""
-    from pyspark_analytics_library_spark.operators.dedup import _iteration_scratch_root
+    import os
+
+    from pyspark_analytics_library_spark.sources.io import iteration_scratch
 
     sc = spark.sparkContext
     monkeypatch.setattr(sc, "master", "spark://cluster:7077")
     monkeypatch.setattr(sc, "getCheckpointDir", lambda: "hdfs://nn/checkpoints")
-    root = _iteration_scratch_root(spark)
-    # App-id scoped (NOT pid): two drivers sharing one scratch URI must
-    # land in disjoint roots even when their pids collide across hosts;
-    # the per-call leaf isolates repeated loops within one app.
+    root = iteration_scratch(spark)
+    # Pid AND app-id scoped: two drivers sharing one scratch URI land in
+    # disjoint roots even when their pids collide across hosts; the
+    # per-call leaf isolates repeated loops within one app.
     assert root.startswith(
-        f"hdfs://nn/checkpoints/pyspark_analytics_cc_{sc.applicationId}/"
+        f"hdfs://nn/checkpoints/pyspark_analytics_{os.getpid()}_"
+        f"{sc.applicationId}/iter/"
     )
-    assert root != _iteration_scratch_root(spark)
+    assert root != iteration_scratch(spark)
 
 
 def test_triangle_sparse_path_non_bigint_ids(spark):
@@ -1151,7 +1152,8 @@ def test_reclaim_iteration_scratch_conf_root_keeps_latest(spark, tmp_path):
 
         app_dir = os.path.join(
             scratch_base,
-            f"pyspark_analytics_cc_{spark.sparkContext.applicationId}",
+            f"pyspark_analytics_{os.getpid()}_{spark.sparkContext.applicationId}",
+            "iter",
         )
         gens_before = sorted(os.listdir(app_dir))
         assert len(gens_before) == 2, gens_before
@@ -1164,7 +1166,7 @@ def test_reclaim_iteration_scratch_conf_root_keeps_latest(spark, tmp_path):
         # run's lazy frame.
         assert second.count() == n_first
 
-        # keep_latest=False reclaims everything, app dir included.
+        # keep_latest=False reclaims every generation and iter/ itself.
         reclaim_iteration_scratch(spark, keep_latest=False)
         assert not os.path.exists(app_dir)
 
@@ -1185,7 +1187,9 @@ def test_reclaim_iteration_scratch_local_tempdir_root(spark, tmp_path, monkeypat
     os.makedirs(fake_tmp)
     monkeypatch.setattr(tempfile, "gettempdir", lambda: fake_tmp)
     app_dir = os.path.join(
-        fake_tmp, f"pyspark_analytics_cc_{spark.sparkContext.applicationId}"
+        fake_tmp,
+        f"pyspark_analytics_{os.getpid()}_{spark.sparkContext.applicationId}",
+        "iter",
     )
     for i, gen in enumerate(("aaaa11112222", "bbbb33334444")):
         d = os.path.join(app_dir, gen, "round_7")

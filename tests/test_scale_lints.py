@@ -60,7 +60,7 @@ WHITELIST = {
     # construction, VERDICT r13 #5) + distributed k-means' two bounded
     # collects (k-row init; k×dim centroid update per iteration — the
     # PageRank-rank-vector size class)
-    "operators/similarity.py": 7,
+    "operators/similarity.py": 6,
     # dense triangle census: degree table + edge list, both behind the
     # vertex AND edge caps that dispatch to the sparse path; plus the
     # sparse path's 1-row triangle-sum collect (lets the census delete
@@ -112,7 +112,9 @@ def _package_sources():
 
 def test_driver_materialization_sites_are_whitelisted():
     found = {
-        rel: n for rel, src in _package_sources() if (n := len(_CALL.findall(src)))
+        rel: n
+        for rel, src in _package_sources()
+        if (n := len(_CALL.findall(_code_only(src))))
     }
     assert found == WHITELIST, (
         "driver-side materialization sites changed — if the new site is "
@@ -132,6 +134,23 @@ def test_row_at_a_time_udfs_only_in_the_udf_demo_module():
         if rel != "operators/udf.py" and _PYUDF.search(src)
     ]
     assert not offenders, f"row-at-a-time F.udf outside the demo module: {offenders}"
+
+
+_STAGING_SCHEME = re.compile(r'tempfile\.gettempdir|mkdtemp|"[.]scratch"|\bfs\.delete\(')
+
+
+def test_scratch_has_one_owner():
+    """Every file the package stages goes under the one per-process root
+    that ``sources/io.py`` resolves and sweeps: no other module picks a
+    temp dir, spells a checkout-relative scratch tree, or deletes
+    through the Hadoop FileSystem API itself.  The scratch twin of the
+    conf lint below."""
+    offenders = [
+        rel
+        for rel, src in _package_sources()
+        if rel != "sources/io.py" and _STAGING_SCHEME.search(src)
+    ]
+    assert offenders == [], f"stage files through sources/io.py: {offenders}"
 
 
 _SESSION_CONF = re.compile(r"\.conf\.(get|set|unset)\(\s*([^,)]*)")
@@ -187,7 +206,8 @@ _HISTORY = re.compile(
 
 
 def _prose_lines(src: str):
-    """(line number, text) of every comment and docstring line."""
+    """(line number, start column, text) of every comment and docstring
+    line; the prose runs from the start column to the end of the line."""
     tree = ast.parse(src)
     lines = src.splitlines()
     for node in ast.walk(tree):
@@ -201,10 +221,19 @@ def _prose_lines(src: str):
                 and isinstance(doc.value.value, str)
             ):
                 for n in range(doc.lineno, doc.end_lineno + 1):
-                    yield n, lines[n - 1]
+                    yield n, 0, lines[n - 1]
     for tok in tokenize.generate_tokens(io.StringIO(src).readline):
         if tok.type == tokenize.COMMENT:
-            yield tok.start[0], tok.string
+            yield tok.start[0], tok.start[1], tok.string
+
+
+def _code_only(src: str) -> str:
+    """``src`` with every comment token and docstring blanked, so a lint
+    counts code, not prose that mentions the code."""
+    lines = src.splitlines()
+    for n, col, _text in _prose_lines(src):
+        lines[n - 1] = lines[n - 1][:col]
+    return "\n".join(lines)
 
 
 def test_package_prose_states_the_contract_not_the_history():
@@ -216,7 +245,7 @@ def test_package_prose_states_the_contract_not_the_history():
     hits = [
         f"{rel}:{n}: {text.strip()}"
         for rel, src in _package_sources()
-        for n, text in _prose_lines(src)
+        for n, _col, text in _prose_lines(src)
         if _HISTORY.search(text)
     ]
     assert hits == [], "history citations in package prose:\n" + "\n".join(hits)

@@ -272,170 +272,216 @@ def test_stream_late_data_output_has_no_precutoff_window(spark):
     assert pre == 0
 
 
-def test_scratch_janitor_prunes_leaked_dirs_only(tmp_path, monkeypatch):
-    """The scratch janitor must reclaim exactly the leak classes it
-    documents — aged uuid sinks and dead-pid late-stream splits — and
-    must never touch a live pid's split, a fresh sink, or the reusable
-    keyed staging dirs (VERDICT r6 #6 / ADVICE r6)."""
-    import os
+def _dead_pid() -> int:
     import subprocess
-    import time
-
-    import pyspark_analytics_library_spark.streaming.stream_queries as sq
 
     p = subprocess.Popen(["true"])
     p.wait()
-    dead_pid = p.pid
-    p2 = subprocess.Popen(["true"])
-    p2.wait()
-    dead_pid2 = p2.pid  # distinct dead pid for the pruned pid<NNN> case
+    return p.pid
 
+
+def _make_roots(base, roots: dict) -> None:
+    """One scratch root per name, each holding an ``iter/`` generation
+    and a staging leaf, with its mtime set (None keeps it fresh)."""
+    import os
+
+    for name, mtime in roots.items():
+        d = base / name
+        (d / "iter" / "aaaa11112222" / "round_3").mkdir(parents=True)
+        (d / "stream_sink_bbbb2222").mkdir()
+        (d / "stream_sink_bbbb2222" / "part-0.parquet").write_text("x")
+        if mtime is not None:
+            os.utime(d, (mtime, mtime))
+
+
+def test_scratch_janitor_prunes_leaked_dirs_only(tmp_path, monkeypatch):
+    """The scratch janitor reclaims exactly the roots of dead processes
+    past the grace period — iteration generations and staging leaves
+    alike — and never touches a live pid's root, a fresh dead root, a
+    hostile pid shape or a name that is not a scratch root."""
+    import os
+    import time
+
+    from pyspark_analytics_library_spark.sources import io as io_mod
+
+    dead_pid, dead_pid2 = _dead_pid(), _dead_pid()
     now = time.time()
-    aged = now - sq._SCRATCH_MAX_AGE_S - 60  # past the 6 h gate
-    graced = now - sq._SCRATCH_DEAD_GRACE_S - 60  # past dead-pid grace only
-    # late_stream_sf_gh_1: pid 1 is init — alive for the life of the
-    # container — and its dir is aged past the gate; a CONFIRMED-live
-    # pid must keep its split even then (a long-lived session reuses
-    # its staging without ever refreshing the dir mtime).  On an
-    # unprivileged runner kill(1, 0) raises EPERM rather than
-    # succeeding — which still proves pid 1 exists, and pid_state maps
-    # PermissionError to 'alive' (ADVICE r8), so this case is
-    # privilege-independent.  The superscript-³ and the >C-long pid
-    # are hostile name shapes that must be skipped, not crash the
-    # best-effort janitor.
+    aged = now - io_mod._MAX_AGE_S - 60  # past the 6 h gate
+    graced = now - io_mod._DEAD_GRACE_S - 60  # past dead-pid grace only
+    # pid 1 is init — alive for the life of the container — and its root
+    # is aged past the gate; a CONFIRMED-live pid keeps its root even
+    # then (a long-lived session reuses it without refreshing the
+    # mtime).  On an unprivileged runner kill(1, 0) raises EPERM, which
+    # still proves pid 1 exists, so this case is privilege-independent.
+    # The superscript-³ and the >C-long pid are hostile shapes that must
+    # be skipped, not crash the janitor.
     keep = {
-        "feb_fresh": None,  # legacy pid-less name, inside the age gate
-        "stream_src_fresh": None,
-        f"feb_{os.getpid()}_aaaa1111": None,  # own pid — alive by definition
-        "late_stream_sf_gh_1": aged,
-        f"late_stream_sf_ab_{os.getpid()}": None,
-        f"feb_{dead_pid}_ingrace": None,  # dead but FRESH — grace holds it
-        "feb_³_x": None,  # isdigit() but not int()-able
-        "late_stream_sf_huge_99999999999999999999": None,
-        # pid<NNN> scan-sink scratch (round-8 class): own pid is alive
-        # by definition even past the age gate; pid 1 is init — a
-        # confirmed-live pid keeps its sinks at any age; dead-but-fresh
-        # is held by the grace; "pidfile" is not a pid shape at all.
-        f"pid{os.getpid()}": aged,
-        "pid1": aged,
-        f"pid{dead_pid}": None,  # dead but FRESH — grace holds it
-        "pidfile": aged,  # suffix isn't a pid — never touch
+        f"pyspark_analytics_{os.getpid()}_local-1": aged,  # own pid
+        "pyspark_analytics_1_local-2": aged,
+        f"pyspark_analytics_{dead_pid}_local-3": None,  # dead but FRESH
+        "pyspark_analytics_³_local-4": aged,
+        "pyspark_analytics_99999999999999999999_local-5": aged,
+        "pyspark_analytics_library_spark-pyfiles-x": aged,  # not a pid
+        f"pyspark_analytics_{dead_pid}": graced,  # no application id
+        f"other_{dead_pid}_local-6": graced,
     }
     prune = {
-        "feb_aged": aged,  # legacy pid-less name, past the age gate
-        "stream_sink_aged": aged,
-        "stream_src_aged": aged,
-        f"feb_{dead_pid}_bbbb2222": graced,  # dead + past grace
-        f"stream_sink_{dead_pid}_cccc3333": graced,
-        f"late_stream_sf_cd_{dead_pid}": graced,
-        f"late_stream3_sf_legacy_{dead_pid}": graced,  # pre-rename generation
-        f"pid{dead_pid2}": graced,  # dead + past grace — reclaimed
+        f"pyspark_analytics_{dead_pid}_local-7": graced,
+        f"pyspark_analytics_{dead_pid2}_local-8": graced,
     }
-    for name, mtime in {**keep, **prune}.items():
-        d = tmp_path / name
-        d.mkdir()
-        (d / "payload").write_text("x")
-        if mtime is not None:
-            os.utime(d, (mtime, mtime))
+    _make_roots(tmp_path, {**keep, **prune})
+    (tmp_path / "plain_file").write_text("x")
+    keep["plain_file"] = None
 
-    # Broken-symlink staging (VERDICT r12 #8): a stream_src_* dir whose
-    # links ALL dangle (pytest tmp fixture rotated away) is reclaimed on
-    # the dead-grace path; a live-target link stays age-gated; a fresh
-    # broken dir is held by the grace; a mixed dir (any non-link or any
-    # live link) stays age-gated.
-    live_target = tmp_path / "live_fixture.parquet"
-    live_target.write_text("x")
-    sym_cases = {
-        "stream_src_shape_broken": (graced, tmp_path / "gone.parquet", True),
-        "stream_src_shape_broken_fresh": (None, tmp_path / "gone2.parquet", False),
-        "stream_src_shape_live": (graced, live_target, False),
-    }
-    for name, (mtime, target, _) in sym_cases.items():
-        d = tmp_path / name
-        d.mkdir()
-        os.symlink(target, d / "events.parquet")
-        if mtime is not None:
-            os.utime(d, (mtime, mtime))
-    mixed = tmp_path / "stream_src_shape_mixed"
-    mixed.mkdir()
-    os.symlink(tmp_path / "gone3.parquet", mixed / "events.parquet")
-    (mixed / "marker").write_text("x")
-    os.utime(mixed, (graced, graced))
-    keep.update(
-        {n: None for n, (_, _, pruned) in sym_cases.items() if not pruned}
-    )
-    keep["stream_src_shape_mixed"] = None
-    keep["live_fixture.parquet"] = None  # plain file at the root — untouched
-
-    monkeypatch.setattr(sq, "_SCRATCH", str(tmp_path))
-    monkeypatch.setattr(sq, "_SCRATCH_PRUNED", False)
-    sq._prune_stale_scratch()
+    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    io_mod._sweep_dead_roots([str(tmp_path)])
     assert {e.name for e in tmp_path.iterdir()} == set(keep)
     # The latch makes the second call a no-op even with new leaks.
-    (tmp_path / f"late_stream_sf_ef_{dead_pid}").mkdir()
-    sq._prune_stale_scratch()
-    assert f"late_stream_sf_ef_{dead_pid}" in {e.name for e in tmp_path.iterdir()}
+    _make_roots(tmp_path, {f"pyspark_analytics_{dead_pid}_local-9": graced})
+    io_mod._sweep_dead_roots([str(tmp_path)])
+    assert (tmp_path / f"pyspark_analytics_{dead_pid}_local-9").exists()
 
 
 def test_scratch_janitor_eperm_means_alive(tmp_path, monkeypatch):
     """kill(pid, 0) → EPERM proves the process EXISTS (POSIX kill(2)):
-    the janitor must treat it as confirmed-live and keep the dir at ANY
-    age — not degrade to 'unknown' and age-gate a live other-uid
-    process's scratch (ADVICE r8)."""
+    the janitor keeps that root at ANY age.  Any other probe error is
+    'unknown' liveness, held by the 6 h age gate only."""
+    import errno
     import os
     import time
 
-    import pyspark_analytics_library_spark.streaming.stream_queries as sq
+    from pyspark_analytics_library_spark.sources import io as io_mod
 
     real_kill = os.kill
 
-    def eperm_kill(pid, sig):
+    def probing_kill(pid, sig):
         if pid == 4242:
             raise PermissionError("simulated other-uid live process")
+        if pid in (4243, 4244):
+            raise OSError(errno.EINVAL, "simulated unprobeable pid")
         return real_kill(pid, sig)
 
-    monkeypatch.setattr(os, "kill", eperm_kill)
-    aged = time.time() - sq._SCRATCH_MAX_AGE_S - 60
-    for name in ("pid4242", "late_stream_sf_xy_4242", "feb_4242_dddd4444"):
-        d = tmp_path / name
-        d.mkdir()
-        os.utime(d, (aged, aged))
-    monkeypatch.setattr(sq, "_SCRATCH", str(tmp_path))
-    monkeypatch.setattr(sq, "_SCRATCH_PRUNED", False)
-    sq._prune_stale_scratch()
+    monkeypatch.setattr(os, "kill", probing_kill)
+    now = time.time()
+    aged = now - io_mod._MAX_AGE_S - 60
+    graced = now - io_mod._DEAD_GRACE_S - 60
+    _make_roots(
+        tmp_path,
+        {
+            "pyspark_analytics_4242_local-1": aged,
+            "pyspark_analytics_4243_local-2": graced,  # unknown, inside 6 h
+            "pyspark_analytics_4244_local-3": aged,  # unknown, past 6 h
+        },
+    )
+    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    io_mod._sweep_dead_roots([str(tmp_path)])
     assert {e.name for e in tmp_path.iterdir()} == {
-        "pid4242",
-        "late_stream_sf_xy_4242",
-        "feb_4242_dddd4444",
+        "pyspark_analytics_4242_local-1",
+        "pyspark_analytics_4243_local-2",
     }
 
 
-def test_scan_scratch_invokes_janitor(tmp_path, monkeypatch):
-    """`scan_queries._scratch()` must run the janitor too, so a replay
-    that never touches a streaming query still reclaims dead-pid
-    scan-sink dirs — the pre-round-8 leak was exactly this class
-    accumulating because only streaming queries pruned (VERDICT r7 #2)."""
+def test_scan_scratch_invokes_janitor(spark, tmp_path, monkeypatch):
+    """Every stager resolves its path through the one scratch root, so a
+    replay that only runs the round-trip sinks still sweeps dead
+    processes' roots under the configured base."""
     import os
-    import subprocess
     import time
 
-    import pyspark_analytics_library_spark.sources.scan_queries as scq
-    import pyspark_analytics_library_spark.streaming.stream_queries as sq
+    from pyspark_analytics_library_spark.conf import scoped_conf
+    from pyspark_analytics_library_spark.sources import io as io_mod
+    from pyspark_analytics_library_spark.sources import scan_queries as scq
 
-    p = subprocess.Popen(["true"])
-    p.wait()
-    leaked = tmp_path / f"pid{p.pid}"
-    leaked.mkdir()
-    (leaked / "payload").write_text("x")
-    graced = time.time() - sq._SCRATCH_DEAD_GRACE_S - 60
-    os.utime(leaked, (graced, graced))
+    leaked = f"pyspark_analytics_{_dead_pid()}_local-1"
+    graced = time.time() - io_mod._DEAD_GRACE_S - 60
+    _make_roots(tmp_path, {leaked: graced})
+    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+        path = scq._scratch(spark, "sink_probe")
+    assert not (tmp_path / leaked).exists()
+    root = f"pyspark_analytics_{os.getpid()}_{spark.sparkContext.applicationId}"
+    assert path == str(tmp_path / root / "sink_probe")
 
-    monkeypatch.setattr(sq, "_SCRATCH", str(tmp_path))
-    monkeypatch.setattr(sq, "_SCRATCH_PRUNED", False)
-    monkeypatch.setattr(scq, "_SCRATCH", str(tmp_path / f"pid{os.getpid()}"))
-    path = scq._scratch("sink_probe")
-    assert not leaked.exists()
-    assert path.endswith(os.path.join(f"pid{os.getpid()}", "sink_probe"))
+
+def test_every_stager_writes_under_the_one_scratch_root(spark, tmp_path):
+    """Stream sinks, sink round-trips, bucketed tables and the CC loop
+    all stage under ``<scratchDir>/pyspark_analytics_<pid>_<appId>/``;
+    the returned frames are backed by files there, and nothing lands in
+    the checkout."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from pyspark_analytics_library_spark.conf import scoped_conf
+    from pyspark_analytics_library_spark.operators.dedup import (
+        connected_components,
+        reclaim_iteration_scratch,
+    )
+    from pyspark_analytics_library_spark.operators.skew import write_bucketed
+
+    def repo_tree() -> set[str]:
+        out = set()
+        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        for d, dirs, names in os.walk(repo):
+            dirs[:] = [n for n in dirs if n not in (".git", "__pycache__")]
+            out.update(os.path.join(d, n) for n in dirs + names)
+        return out
+
+    before = repo_tree()
+    load_all_query_modules()
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    with scoped_conf(
+        spark,
+        {
+            "spark.analytics.scratchDir": str(tmp_path),
+            "spark.analytics.cc.driverUnionFindMaxEdges": 0,
+        },
+    ):
+        frames = [
+            REGISTRY["stream_sink"].fn(spark, TEST_SF_DIR),
+            REGISTRY["sink_parquet_roundtrip"].fn(spark, TEST_SF_DIR),
+            connected_components(edges, edges.select(F.col("src").alias("v"))),
+        ]
+        write_bucketed(spark.range(10), spark, "scratch_probe_b", "id", buckets=2)
+        frames.append(spark.table("scratch_probe_b"))
+    root = tmp_path / f"pyspark_analytics_{os.getpid()}_{spark.sparkContext.applicationId}"
+    assert [p.name for p in tmp_path.iterdir()] == [root.name]
+    assert {"iter", "bucketed", "sink_parquet"} <= {p.name for p in root.iterdir()}
+    for df in frames:
+        files = df.inputFiles()
+        assert files and all(str(root) in f for f in files), files
+    # Reclaiming iteration scratch never touches the other leaves.
+    with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
+        reclaim_iteration_scratch(spark, keep_latest=False)
+    assert not (root / "iter").exists()
+    assert frames[-1].count() == 10 and frames[1].count() > 0
+    spark.sql("DROP TABLE IF EXISTS scratch_probe_b")
+    assert repo_tree() - before == set()
+
+
+def test_local_stagers_refuse_a_remote_scratch_base(spark):
+    """Stagers that symlink, rename or rmtree need a local base; an
+    hdfs:// base is refused by name instead of creating a local dir
+    literally called ``hdfs:``."""
+    import os
+
+    import pytest
+
+    from pyspark_analytics_library_spark.conf import scoped_conf
+    from pyspark_analytics_library_spark.sources.io import (
+        local_scratch_path,
+        scratch_path,
+    )
+
+    load_all_query_modules()
+    with scoped_conf(spark, {"spark.analytics.scratchDir": "hdfs://nn/scratch"}):
+        assert scratch_path(spark, "x").startswith("hdfs://nn/scratch/")
+        with pytest.raises(ValueError, match="spark.analytics.scratchDir"):
+            local_scratch_path(spark, "x")
+        for name in ("stream_sink", "sink_parquet_roundtrip", "sink_merge_upsert"):
+            with pytest.raises(ValueError, match="spark.analytics.scratchDir"):
+                REGISTRY[name].fn(spark, TEST_SF_DIR)
+    assert not os.path.exists("hdfs:")
 
 
 def test_cells_match_admits_one_grid_step_rejects_two():
