@@ -284,20 +284,24 @@ def _trunc_lower(s: str) -> str:
     return s[:_STR_BOUND_MAX]
 
 
-def _trunc_upper(s: str):
-    """An upper bound must ROUND UP when truncated (the bare prefix
-    would order below the true max — a lossy prune): increment the
-    last kept char, carrying left; None (= unknown, keep the file)
-    if unrepresentable."""
-    if len(s) <= _STR_BOUND_MAX:
-        return s
-    p = s[:_STR_BOUND_MAX]
+def _successor(p: str) -> str | None:
+    """The shortest string ordering after every string that starts with
+    ``p``: its last char incremented, carrying left past U+10FFFF; None
+    when no such string exists."""
     while p:
         c = ord(p[-1])
         if c < 0x10FFFF:
             return p[:-1] + chr(c + 1)
         p = p[:-1]
     return None
+
+
+def _trunc_upper(s: str):
+    """An upper bound must ROUND UP when truncated (the bare prefix
+    would order below the true max — a lossy prune): the kept prefix's
+    :func:`_successor`; None (= unknown, keep the file) if
+    unrepresentable."""
+    return s if len(s) <= _STR_BOUND_MAX else _successor(s[:_STR_BOUND_MAX])
 
 
 def _json_stat(v):
@@ -451,6 +455,11 @@ def _zorder_expr(df: DataFrame, cols: list[str]):
     return z
 
 
+#: Helper column names the bucketed write adds, so no table column may
+#: take them.
+_RESERVED = ("bucket", "_zorder", "_part")
+
+
 def _write_bucketed(
     df: DataFrame,
     target: str,
@@ -479,7 +488,7 @@ def _write_bucketed(
     arithmetic can't do; ``key`` always gets its stats (see
     :func:`_file_stats`), so :func:`table_merge_mor` can list these same
     entries as tombstones."""
-    for reserved in ("bucket", "_zorder", "_part"):
+    for reserved in _RESERVED:
         if reserved in df.columns:
             # The helper column would collide (partitionBy would route
             # on the caller's data instead of the key hash; the sort
@@ -601,8 +610,7 @@ def _live_manifest_name(target: str) -> str:
 
 
 #: ``expect_current`` sentinel for "the table had NO pointer when this
-#: commit started" (a fresh table_init) — distinct from None = "skip
-#: the concurrency check entirely".
+#: commit started" (a fresh table_init).
 _ABSENT = "<absent>"
 
 #: Age (seconds) below which a file referenced by NO manifest is left
@@ -613,13 +621,11 @@ _ABSENT = "<absent>"
 ORPHAN_GRACE_S = 3600.0
 
 
-def _commit_manifest(
-    target: str, manifest: dict, expect_current: str | None = None
-) -> str:
+def _commit_manifest(target: str, manifest: dict, expect_current: str) -> str:
     """Write a new root manifest and atomically repoint ``_CURRENT`` at it —
-    the commit point.  With ``expect_current`` set, raise
-    :class:`ConcurrentCommitError` if the pointer moved off that manifest
-    (or appeared when :data:`_ABSENT` was expected).
+    the commit point.  Raise :class:`ConcurrentCommitError` if the pointer
+    moved off ``expect_current`` (or appeared when :data:`_ABSENT` was
+    expected).
 
     The candidate lives at a DOT-PREFIXED temp name (excluded from every
     ``MANIFEST_PREFIX`` listing) until the check passes: visible under its
@@ -633,25 +639,24 @@ def _commit_manifest(
     # needs a directory listing, not a JSON parse per root (the roots
     # are the table's largest JSON documents, and the pruner sorts them
     # on every commit).  Zero-padded so lexicographic = numeric.
-    seq = int(manifest.get("seq", -1))
+    seq = int(manifest["seq"])
     name = f"{MANIFEST_PREFIX}{seq:010d}-{uuid.uuid4().hex[:12]}.json"
     tmp = os.path.join(target, f".{name}.tmp")
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump(manifest, f)
     try:
-        if expect_current is not None:
-            ptr_exists = os.path.exists(os.path.join(target, CURRENT_POINTER))
-            ok = (
-                not ptr_exists
-                if expect_current == _ABSENT
-                else ptr_exists and _live_manifest_name(target) == expect_current
+        ptr_exists = os.path.exists(os.path.join(target, CURRENT_POINTER))
+        ok = (
+            not ptr_exists
+            if expect_current == _ABSENT
+            else ptr_exists and _live_manifest_name(target) == expect_current
+        )
+        if not ok:
+            raise ConcurrentCommitError(
+                f"{target}: live manifest moved off {expect_current!r} "
+                "during the commit — another writer committed; re-read "
+                "and retry"
             )
-            if not ok:
-                raise ConcurrentCommitError(
-                    f"{target}: live manifest moved off {expect_current!r} "
-                    "during the commit — another writer committed; re-read "
-                    "and retry"
-                )
         # Commit point: manifest becomes visible under its final name
         # only here, then the pointer swings to it.
         os.replace(tmp, os.path.join(target, name))
@@ -734,6 +739,15 @@ def _load_manifest(target: str) -> tuple[str, dict]:
     return base, _read_root(live)
 
 
+def _schema(man: dict):
+    """The table schema ``man`` records — the one parse of it."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(man["schema"]))
+
+
 def _schema_shape(st):
     """Comparable (name, type) list; nullability excluded — unions
     legitimately widen it and parquet self-describes it per file."""
@@ -774,14 +788,13 @@ def _write_part(
     with open(tmp, "w", encoding="utf-8") as f:
         json.dump({"bucket": bucket, "files": files, "tombstones": tombs}, f)
     os.replace(tmp, full)
-    rows = [e.get("rows") for e in files]
     ref = {
         "path": rel,
         "bucket": bucket,
         "files": len(files),
         "tombstones": len(tombs),
-        "rows": None if any(r is None for r in rows) else sum(rows),
-        "bytes": sum(e.get("bytes") or 0 for e in files),
+        "rows": sum(e["rows"] for e in files),
+        "bytes": sum(e["bytes"] for e in files),
     }
     if part is not None:
         # Partitioned tables key parts (partition, bucket) so a
@@ -839,7 +852,7 @@ def _man_entries(
     return files, tombs
 
 
-def _man_update(target: str, man: dict, touched: dict, seq: int) -> dict:
+def _man_update(target: str, man: dict, touched: dict) -> dict:
     """A new manifest dict with each touched GKEY's — (partition,
     bucket); see :func:`_gkey` — (files, tombstones) listing replaced
     WHOLESALE by ``touched[gkey]``; untouched gkeys carry over by part
@@ -851,7 +864,28 @@ def _man_update(target: str, man: dict, touched: dict, seq: int) -> dict:
         if fs or ts:
             parts.append(_write_part(target, b, fs, ts, part=p))
     parts.sort(key=lambda r: (r.get("part") or "", r["bucket"]))
-    return dict(man, parts=parts, seq=seq)
+    return dict(man, parts=parts)
+
+
+def _next_seq(man: dict) -> int:
+    """The commit sequence of the generation built on root ``man`` —
+    the ``gen`` its data files are stamped with."""
+    return int(man["seq"]) + 1
+
+
+def _commit(
+    target: str, base: str, man: dict, touched: dict | None = None, **props
+) -> dict:
+    """THE commit path of every op: the next root is ``man`` with
+    ``props`` set, each ``touched`` gkey's listing rewritten
+    (:func:`_man_update`) and the sequence advanced (:func:`_next_seq`);
+    it lands only while ``_CURRENT`` still names ``base``, the root
+    ``man`` was read from.  Returns the committed root."""
+    new = dict(man, **props, seq=_next_seq(man))
+    if touched is not None:
+        new = _man_update(target, new, touched)
+    _commit_manifest(target, new, expect_current=base)
+    return new
 
 
 def _group_listings(target: str, man: dict, new_files=(), new_tombs=()) -> dict:
@@ -884,10 +918,10 @@ def _cluster_args(man: dict) -> dict:
     """The table's recorded clustering + partitioning properties as
     _write_bucketed kwargs — every rewriting commit honors them, so
     clustering and the partition spec survive merges/appends/
-    compactions once declared at init.  (:func:`table_delete`'s
-    tombstone write calls _write_bucketed WITHOUT these: its tombstones
-    are key-only frames and partition-less by design — see the
-    partition-spec banner.)"""
+    compactions once declared at init.  (A tombstone-only write in
+    :func:`_add_commit` goes WITHOUT these: its frame is key-only and
+    tombstones are partition-less by design — see the partition-spec
+    banner.)"""
     return {
         "cluster_by": man.get("cluster_by"),
         "max_records_per_file": man.get("max_records_per_file"),
@@ -934,10 +968,11 @@ def table_init(
             "to nest a manifest layout inside it — clear it or pick "
             "another target"
         )
-    expected, seq = _ABSENT, 0
+    # A re-seed carries only the sequence of the root it replaces.
+    expected, prev = _ABSENT, {"seq": -1}
     if ptr_exists:
-        expected, cur_man = _load_manifest(target)
-        seq = int(cur_man.get("seq", -1)) + 1
+        expected, cur = _load_manifest(target)
+        prev = {"seq": cur["seq"]}
     if keep_generations < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
     if partition_by is not None:
@@ -957,33 +992,33 @@ def table_init(
         target,
         bucket_key,
         n_buckets,
-        gen=seq,
+        gen=_next_seq(prev),
         cluster_by=cluster_by,
         max_records_per_file=max_records_per_file,
         part_spec=(partition_by, partition_transform) if partition_by else None,
     )
-    manifest = {
-        "version": 2,
-        "seq": seq,
-        "bucket_key": bucket_key,
-        "n_buckets": n_buckets,
-        # Clustering is a TABLE PROPERTY: recorded here and honored by
-        # every later rewriting commit via _cluster_args.
-        "cluster_by": cluster_by,
-        "max_records_per_file": max_records_per_file,
-        "keep_generations": int(keep_generations),
-        # Partition spec: a table property like the bucket spec —
-        # every rewriting commit routes through it.
-        "partition_by": partition_by,
-        "partition_transform": partition_transform if partition_by else None,
-        "schema": df.schema.json(),
-        "parts": [],
-    }
     by_gkey: dict[tuple, tuple[list, list]] = {}
     for e in entries:
         by_gkey.setdefault(_gkey(e), ([], []))[0].append(e)
-    manifest = _man_update(target, manifest, by_gkey, seq)
-    _commit_manifest(target, manifest, expect_current=expected)
+    _commit(
+        target,
+        expected,
+        prev,
+        by_gkey,
+        version=2,
+        bucket_key=bucket_key,
+        n_buckets=n_buckets,
+        # Clustering and the partition spec are TABLE PROPERTIES:
+        # recorded here and honored by every later rewriting commit
+        # via _cluster_args.
+        cluster_by=cluster_by,
+        max_records_per_file=max_records_per_file,
+        keep_generations=int(keep_generations),
+        partition_by=partition_by,
+        partition_transform=partition_transform if partition_by else None,
+        schema=df.schema.json(),
+        parts=[],
+    )
     return {"files": len(entries), "n_buckets": n_buckets}
 
 
@@ -1000,20 +1035,14 @@ def table_history(target: str) -> list[str]:
 def _scan_coalesce(spark, items: list[dict]) -> int:
     """Task count for scanning ``items``' files: enough partitions to
     fill the cluster and to keep ``spark.sql.files.maxPartitionBytes``
-    (default 128 MiB) per task, but never one task per tiny file.
-    Entries without recorded byte sizes get NO coalescing: without
-    sizes the "files are tiny" premise is unprovable, and a fixed
-    files-per-task estimate under-parallelizes LARGE files.  Only the
-    byte-based path may shrink the task count, and never below the
-    cluster's default parallelism."""
-    par = spark.sparkContext.defaultParallelism
-    sizes = [e.get("bytes") for e in items]
-    if any(s is None for s in sizes):
-        return len(items)
+    (default 128 MiB) per task of the entries' recorded bytes, but
+    never one task per tiny file, and never below the cluster's default
+    parallelism."""
     max_bytes = conf.size_bytes(
         spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
     )
-    return max(par, -(-sum(sizes) // max_bytes))
+    total = sum(e["bytes"] for e in items)
+    return max(spark.sparkContext.defaultParallelism, -(-total // max_bytes))
 
 
 def _ranges_may_intersect(a, b) -> bool:
@@ -1194,12 +1223,10 @@ def _masked_scan(
     A tombstone's ``dv`` field (positional deletion vectors, written by
     older versions) is ignored: those commits also wrote the key
     tombstones this mask reads."""
-    import json as _json
-
     from pyspark.sql import functions as F
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(_json.loads(man["schema"]))
+    schema = _schema(man)
     if not entries:
         return spark.createDataFrame([], schema)
     clean, dirty, tombs = _mask_split(man, entries, tombstones)
@@ -1437,12 +1464,7 @@ def _col_typename(man: dict, col: str) -> str | None:
     """Spark type name of ``col`` from the manifest-recorded schema
     (None when absent) — feeds :func:`_stats_overlap`'s temporal
     encoding normalization."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    for f in schema.fields:
+    for f in _schema(man).fields:
         if f.name == col:
             return f.dataType.typeName()
     return None
@@ -1472,22 +1494,18 @@ def prefix_range(prefix: str) -> tuple[str, str]:
     """A string ``LIKE 'prefix%'`` predicate as the [lo, hi] range
     ``table_read(where=(col, *prefix_range(p)))`` serves with stats
     pruning: lo = the prefix
-    itself, hi = the prefix with its last char incremented (carrying
-    left past U+10FFFF) — every string starting with ``prefix``
-    orders in [lo, hi), so the inclusive-range scan is a sound
+    itself, hi = its :func:`_successor` — every string starting with
+    ``prefix`` orders in [lo, hi), so the inclusive-range scan is a sound
     superset and the recorded (possibly truncated) file bounds compare
     correctly against both ends.  Callers keep their exact
     ``startswith``/``LIKE`` as the residual row filter (hi itself and
     the sliver between the prefix family and hi don't match it)."""
     if not prefix:
         raise ValueError("empty prefix matches everything — no range to prune")
-    p = prefix
-    while p:
-        c = ord(p[-1])
-        if c < 0x10FFFF:
-            return prefix, p[:-1] + chr(c + 1)
-        p = p[:-1]
-    raise ValueError(f"prefix {prefix!r} has no representable upper bound")
+    hi = _successor(prefix)
+    if hi is None:
+        raise ValueError(f"prefix {prefix!r} has no representable upper bound")
+    return prefix, hi
 
 
 def _stats_overlap(entry: dict, col: str, lo, hi, dtype: str | None = None) -> bool:
@@ -1560,7 +1578,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
     describe a superseded state).  Catch it, re-read, retry."""
     from pyspark.sql import functions as F
 
-    base_name, man = _load_manifest(target)
+    base, man = _load_manifest(target)
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     # One tiny collect: ≤ n_buckets ints — never data-sized.
     touched = sorted(
@@ -1585,11 +1603,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
             "them, then retry the copy-on-write merge"
         )
     n_carried = _man_file_count(man) - len(rewritten)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(_json.loads(man["schema"]))
+    schema = _schema(man)
     if rewritten:
         base_slice = _scan_entries(spark, target, man, schema, rewritten)
     else:
@@ -1608,9 +1622,8 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
             f"{schema.simpleString()}); a merge may not evolve the "
             "schema — re-seed with table_init to change it"
         )
-    new_seq = int(man.get("seq", -1)) + 1
     entries = _write_bucketed(
-        merged, target, key, n_buckets, gen=new_seq, **_cluster_args(man)
+        merged, target, key, n_buckets, gen=_next_seq(man), **_cluster_args(man)
     )
     stray = [e["bucket"] for e in entries if e["bucket"] not in touched_set]
     if stray:
@@ -1630,8 +1643,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
     }
     for e in entries:
         listing[_gkey(e)][0].append(e)
-    manifest = _man_update(target, man, listing, new_seq)
-    _commit_manifest(target, manifest, expect_current=base_name)
+    _commit(target, base, man, listing)
     return {
         "touched_buckets": touched,
         "rewritten_files": len(rewritten),
@@ -1731,17 +1743,16 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
 
 
 def _key_frame(spark, man: dict, keys: list) -> DataFrame:
-    """``keys`` as a one-column local frame typed as the table's bucket
-    key column (from the manifest-recorded schema)."""
-    import json as _json
-
+    """``keys`` as a one-column frame typed as the table's bucket key
+    column.  Built from an Arrow table, it plans as a local relation,
+    so an expression over it collects without a Spark job."""
+    import pyarrow as pa
     from pyspark.sql.types import StructField, StructType
 
     key = man["bucket_key"]
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    key_field = next(f for f in schema.fields if f.name == key)
     return spark.createDataFrame(
-        [(k,) for k in keys], StructType([StructField(key, key_field.dataType)])
+        pa.table({key: pa.array(keys)}),
+        schema=StructType([StructField(key, _schema(man)[key].dataType)]),
     )
 
 
@@ -1750,11 +1761,11 @@ def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
     of the bucketed layout: bucket membership is the same
     pmod(xxhash64(key), n) arithmetic the writer used, so a point
     lookup needs no index, just the manifest.  Evaluated with one
-    Spark expression over a keys-sized local frame (xxhash64 is a JVM
+    Spark expression over the keys' local relation (xxhash64 is a JVM
     function; re-implementing it Python-side would be a second source
-    of truth that could silently drift).  The ids are deduplicated on
-    the driver: a Spark ``distinct`` costs one more job for a
-    keys-sized frame."""
+    of truth that could silently drift), which the driver evaluates
+    without a job.  The ids are deduplicated on the driver: a Spark
+    ``distinct`` would cost a job."""
     return {
         r["b"]
         for r in _key_frame(spark, man, keys)
@@ -1796,6 +1807,47 @@ def table_lookup(spark, target: str, keys: list) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _check_batch(op: str, df: DataFrame, man: dict) -> None:
+    """Refuse a batch whose columns differ from the table schema."""
+    schema = _schema(man)
+    if _schema_shape(df.schema) != _schema_shape(schema):
+        raise ValueError(
+            f"{op}: batch schema {df.schema.simpleString()} does not match "
+            f"table schema {schema.simpleString()}"
+        )
+
+
+def _add_commit(
+    target: str, base: str, man: dict, df: DataFrame, files: bool, tombs: bool
+) -> tuple[int, dict]:
+    """The ADDITIVE commit shared by append, merge-on-read and delete:
+    write ``df`` once, list the written entries as data files, as
+    tombstones or as both, and commit them into the parts of the groups
+    they touch (:func:`_group_listings`) — no existing entry is rewritten.
+    Returns (entries written, live root); an empty batch commits nothing
+    (a no-op generation would evict a retained time-travel root).
+
+    Data files take the table's clustering and partition layout; a
+    tombstone-only write is a key-only frame and stays partition-less.
+    A tombstone entry keeps only the bucket key's stats and no ``part``;
+    :func:`_masked_scan` reads just its key column, and gen ordering
+    keeps a delta file listed as both from masking its own rows."""
+    key = man["bucket_key"]
+    layout = _cluster_args(man) if files else {}
+    entries = _write_bucketed(
+        df, target, key, int(man["n_buckets"]), gen=_next_seq(man), **layout
+    )
+    if not entries:
+        return 0, man
+    tomb_entries = [
+        {k: e[k] for k in ("path", "bucket", "gen", "rows", "bytes", "key_nulls")}
+        | {"stats": {c: v for c, v in e["stats"].items() if c == key}}
+        for e in entries
+    ] if tombs else []
+    listing = _group_listings(target, man, entries if files else (), tomb_entries)
+    return len(entries), _commit(target, base, man, listing)
+
+
 def table_append(spark, target: str, rows: DataFrame) -> dict:
     """Fast append (Iceberg's append commit): write ``rows`` as NEW bucketed
     data files and commit a manifest that adds them; no base file is read
@@ -1803,38 +1855,10 @@ def table_append(spark, target: str, rows: DataFrame) -> dict:
     which :func:`table_compact` packs.  Duplicate keys coexist (a log,
     not an upsert); keyed updates are :func:`table_merge` /
     :func:`table_merge_mor`."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    base_name, man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    if _schema_shape(rows.schema) != _schema_shape(schema):
-        raise ValueError(
-            f"table_append: batch schema {rows.schema.simpleString()} does "
-            f"not match table schema {schema.simpleString()}"
-        )
-    new_seq = int(man.get("seq", -1)) + 1
-    entries = _write_bucketed(
-        rows,
-        target,
-        man["bucket_key"],
-        int(man["n_buckets"]),
-        gen=new_seq,
-        **_cluster_args(man),
-    )
-    if not entries:
-        # Empty batch: no-op, no commit (as in table_compact: a no-op
-        # generation would evict a retained time-travel manifest).
-        return {"new_files": 0, "total_files": _man_file_count(man)}
-    # Only the appended buckets' parts are loaded and rewritten (old
-    # entries carry INTO the new part; other buckets' parts carry by
-    # reference).
-    manifest = _man_update(
-        target, man, _group_listings(target, man, new_files=entries), new_seq
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
-    return {"new_files": len(entries), "total_files": _man_file_count(manifest)}
+    base, man = _load_manifest(target)
+    _check_batch("table_append", rows, man)
+    n, live = _add_commit(target, base, man, rows, files=True, tombs=False)
+    return {"new_files": n, "total_files": _man_file_count(live)}
 
 
 def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
@@ -1846,63 +1870,24 @@ def table_merge_mor(spark, target: str, updates: DataFrame) -> dict:
     Write side: ``updates`` lands as new data files (gen = this commit's
     seq) in ONE write; the manifest lists each file as a data file of its
     (partition, bucket) and as a TOMBSTONE of its bucket (its key column
-    is exactly the update keys).  Read side (:func:`_masked_scan`): a base
-    row is masked when a NEWER tombstone holds its key — newest-wins,
-    deferred to scan time.  Reads pay a broadcast anti-join against the
-    live tombstones until :func:`table_compact` applies them: the Delta
-    deletion-vector / Iceberg merge-on-read trade.
+    is exactly the update keys, never re-evaluated — a non-deterministic
+    batch run twice could tombstone other keys than it wrote).  Read side
+    (:func:`_masked_scan`): a base row is masked when a NEWER tombstone
+    holds its key — newest-wins, deferred to scan time.  Reads pay a
+    broadcast anti-join against the live tombstones until
+    :func:`table_compact` applies them: the Delta deletion-vector /
+    Iceberg merge-on-read trade.
 
     Batch contract: ``updates`` carries the table schema and at most one
     row per key (both rows of a duplicate would survive masking).
     Deletes are :func:`table_delete`."""
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    base_name, man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    if _schema_shape(updates.schema) != _schema_shape(schema):
-        raise ValueError(
-            f"table_merge_mor: batch schema {updates.schema.simpleString()} "
-            f"does not match table schema {schema.simpleString()}"
-        )
-    key, n_buckets = man["bucket_key"], int(man["n_buckets"])
-    new_seq = int(man.get("seq", -1)) + 1
-    entries = _write_bucketed(
-        updates, target, key, n_buckets, gen=new_seq, **_cluster_args(man)
-    )
-    if not entries:
-        # Empty batch: commit nothing (same no-op discipline as
-        # table_compact — never burn a retention generation for a
-        # commit that changes no row).
-        return {
-            "delta_files": 0,
-            "tombstone_files": 0,
-            "live_tombstone_files": _man_tomb_count(man),
-        }
-    # Each delta file is also its own tombstone: its key column IS the
-    # batch's key set, written once (never re-evaluated — a
-    # non-deterministic batch run twice could tombstone other keys than
-    # it wrote).  The tombstone entry keeps only the key's
-    # stats and no ``part`` (tombstones are partition-less);
-    # _masked_scan reads just its key column, and gen ordering keeps
-    # it from masking its own rows.
-    tombs = [
-        {k: e[k] for k in ("path", "bucket", "gen", "rows", "bytes", "key_nulls")}
-        | {"stats": {c: v for c, v in e["stats"].items() if c == key}}
-        for e in entries
-    ]
-    manifest = _man_update(
-        target,
-        man,
-        _group_listings(target, man, new_files=entries, new_tombs=tombs),
-        new_seq,
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
+    base, man = _load_manifest(target)
+    _check_batch("table_merge_mor", updates, man)
+    n, live = _add_commit(target, base, man, updates, files=True, tombs=True)
     return {
-        "delta_files": len(entries),
-        "tombstone_files": len(tombs),
-        "live_tombstone_files": _man_tomb_count(manifest),
+        "delta_files": n,
+        "tombstone_files": n,
+        "live_tombstone_files": _man_tomb_count(live),
     }
 
 
@@ -1925,28 +1910,24 @@ def table_compact(
     which stays correct because masking is per-bucket.  No candidates ->
     no commit.  Returns {"compacted_buckets", "files_before",
     "files_after", "tombstones_cleared"}."""
-    base_name, man = _load_manifest(target)
+    base, man = _load_manifest(target)
     key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     mrpf = man.get("max_records_per_file")
 
-    # Per-GKEY (n_files, rows-or-None, n_tombstones) from part refs
-    # WITHOUT loading any part (candidate selection is O(parts) driver
-    # work).  Gkeys holding only tombstones are included: a tombstone
-    # can live in a bucket with ZERO data files (table_delete of an
-    # absent key) — skipping it would leave readers
-    # paying its anti-join and table_merge refusing the bucket forever.
+    # Per-GKEY (n_files, rows, n_tombstones) from part refs WITHOUT
+    # loading any part (candidate selection is O(parts) driver work).
+    # Gkeys holding only tombstones are included: a tombstone can live
+    # in a bucket with ZERO data files (table_delete of an absent key) —
+    # skipping it would leave readers paying its anti-join and
+    # table_merge refusing the bucket forever.
     meta: dict[tuple, list] = {}
     for ref in man["parts"]:
         m = meta.setdefault(_gkey(ref), [0, 0, 0])
         m[0] += ref["files"]
-        m[1] = (
-            None
-            if m[1] is None or ref["rows"] is None
-            else m[1] + ref["rows"]
-        )
+        m[1] += ref["rows"]
         m[2] += ref["tombstones"]
 
-    def needs_packing(nf: int, rows) -> bool:
+    def needs_packing(nf: int, rows: int) -> bool:
         if nf < min_files:
             return False
         if not mrpf:
@@ -1955,10 +1936,7 @@ def table_compact(
         # state (the splitter caps rows per file), so "small files"
         # means MORE files than the rows need at capacity — otherwise
         # every compact run would rewrite every clustered bucket
-        # forever.  Row counts ride the manifest; entries from
-        # pre-rows manifests fall back to the unclustered rule.
-        if rows is None:
-            return True
+        # forever.
         import math
 
         return nf > max(1, math.ceil(rows / int(mrpf)))
@@ -1991,10 +1969,9 @@ def table_compact(
         }
     cand_gkeys = set().union(*units)
     rewritten, cand_tombs = _man_entries(target, man, gkeys=cand_gkeys)
-    new_seq = int(man.get("seq", -1)) + 1
     masked = _masked_scan(spark, target, man, rewritten, cand_tombs)
     entries = _write_bucketed(
-        masked, target, key, n_buckets, gen=new_seq, **_cluster_args(man)
+        masked, target, key, n_buckets, gen=_next_seq(man), **_cluster_args(man)
     )
     listing: dict[tuple, tuple[list, list]] = {g: ([], []) for g in cand_gkeys}
     for e in entries:
@@ -2007,12 +1984,11 @@ def table_compact(
                 f"{_gkey(e)}; candidates were {sorted(cand_gkeys)}"
             )
         listing[_gkey(e)][0].append(e)
-    manifest = _man_update(target, man, listing, new_seq)
-    _commit_manifest(target, manifest, expect_current=base_name)
+    live = _commit(target, base, man, listing)
     return {
         "compacted_buckets": sorted({g[1] for g in cand_gkeys}),
         "files_before": files_before,
-        "files_after": _man_file_count(manifest),
+        "files_after": _man_file_count(live),
         "tombstones_cleared": len(cand_tombs),
     }
 
@@ -2023,30 +1999,10 @@ def table_delete(spark, target: str, keys: list) -> dict:
     keys; :func:`table_compact` later makes the deletion physical.  Commit
     cost is O(keys).  ``keys`` is a Python list typed like the bucket-key
     column (a predicate delete is ``table_read`` + a filter + this)."""
-    base_name, man = _load_manifest(target)
-    new_seq = int(man.get("seq", -1)) + 1
-    tomb_entries = _write_bucketed(
-        _key_frame(spark, man, keys),
-        target,
-        man["bucket_key"],
-        int(man["n_buckets"]),
-        gen=new_seq,
-    )
-    if not tomb_entries:
-        # Empty key list: no-op, no commit (a no-op generation would
-        # burn a retention slot for nothing).
-        return {
-            "tombstone_files": 0,
-            "live_tombstone_files": _man_tomb_count(man),
-        }
-    manifest = _man_update(
-        target, man, _group_listings(target, man, new_tombs=tomb_entries), new_seq
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
-    return {
-        "tombstone_files": len(tomb_entries),
-        "live_tombstone_files": _man_tomb_count(manifest),
-    }
+    base, man = _load_manifest(target)
+    frame = _key_frame(spark, man, keys)
+    n, live = _add_commit(target, base, man, frame, files=False, tombs=True)
+    return {"tombstone_files": n, "live_tombstone_files": _man_tomb_count(live)}
 
 
 def table_add_columns(spark, target: str, new_fields) -> dict:
@@ -2056,53 +2012,29 @@ def table_add_columns(spark, target: str, new_fields) -> dict:
     fields with NULL, so old rows read NULL in the new column.
 
     ``new_fields`` is a list of ``StructField`` (or a ``StructType``); each
-    must be nullable (existing rows HAVE no value) and must not collide
-    with an existing, retired or reserved ``bucket`` name.  Cost: one
-    manifest write + pointer swap.  Optimistic concurrency as everywhere.
+    must be nullable (existing rows HAVE no value) and pass
+    :func:`_check_evolution`'s fresh-name rule.  Cost: one manifest write
+    + pointer swap.  Optimistic concurrency as everywhere.
 
     Retyping stays a whole-table re-seed (``table_init``): it changes what
     existing BYTES mean, which a carried-by-reference layout cannot
     re-interpret safely."""
-    import json as _json
-
     from pyspark.sql.types import StructType
 
-    base_name, man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
+    base, man = _load_manifest(target)
     fields = list(new_fields.fields) if isinstance(new_fields, StructType) else list(new_fields)
+    schema = _check_evolution("table_add_columns", man, new=[f.name for f in fields])
     if not fields:
         return {"added": [], "schema": schema.simpleString()}
-    existing = {f.name for f in schema.fields}
     for f in fields:
-        if f.name in existing or f.name == "bucket":
-            raise ValueError(
-                f"table_add_columns: column {f.name!r} already exists "
-                "(or is the reserved bucket-routing name)"
-            )
         if not f.nullable:
             raise ValueError(
                 f"table_add_columns: {f.name!r} must be nullable — "
                 "existing rows have no value for it; backfill with a "
                 "merge after adding it as nullable"
             )
-    retired = _retired_names(man)
-    for f in fields:
-        if f.name in retired:
-            # A dropped or renamed-away column's BYTES still live in
-            # old files under this name; re-adding it would resurrect
-            # them on old-epoch scans (the hazard Iceberg's field IDs
-            # exist to prevent — here the name registry is the ID).
-            raise ValueError(
-                f"table_add_columns: {f.name!r} was previously used by "
-                "this table (dropped or renamed away); old data files "
-                "still carry bytes under that name and re-adding it "
-                "would resurrect them — pick a fresh name"
-            )
     evolved = StructType(schema.fields + fields)
-    manifest = dict(
-        man, schema=evolved.json(), seq=int(man.get("seq", -1)) + 1
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
+    _commit(target, base, man, schema=evolved.json())
     return {"added": [f.name for f in fields], "schema": evolved.simpleString()}
 
 
@@ -2128,54 +2060,57 @@ def _immutable_cols(man: dict) -> dict[str, str]:
     return out
 
 
+def _check_evolution(op: str, man: dict, old: str | None = None, new=()):
+    """``man``'s schema, once the change ``op`` makes is proven safe:
+    ``old`` (a column to rename or drop) exists and no structural table
+    property is keyed on it; each ``new`` name is neither a column,
+    reserved, nor EVER used before — a dropped or renamed-away column's
+    bytes still live in old files under its name, and re-using it would
+    resurrect them on old-epoch scans (the hazard Iceberg's field IDs
+    exist to prevent — here the name registry is the ID)."""
+    schema = _schema(man)
+    frozen = _immutable_cols(man)
+    if old is not None and old not in schema.names:
+        raise ValueError(f"{op}: no column {old!r} in {schema.names}")
+    if old in frozen:
+        raise ValueError(
+            f"{op}: {old!r} is {frozen[old]} — structural table properties "
+            "are name-frozen; re-seed to change them"
+        )
+    for name in new:
+        if name in schema.names or name in _RESERVED:
+            raise ValueError(
+                f"{op}: {name!r} is already in use (a column already exists "
+                "under it, or it is reserved for the layout)"
+            )
+        if name in _retired_names(man):
+            raise ValueError(
+                f"{op}: {name!r} was previously used by this table; old data "
+                "files still carry bytes under that name — pick a fresh name"
+            )
+    return schema
+
+
 def table_rename_column(target: str, old: str, new: str) -> dict:
     """RENAME a column as a METADATA-ONLY commit: the manifest schema gets the
     new name and the table's RENAMES log an entry; no data file is
     touched.  Readers scan older files under the old name and alias it
     (:func:`_scan_entries`), so pre- and post-rename snapshots read
-    row-exact, and compaction migrates old files forward.
-
-    Refuses the bucket key (bucket routing is keyed on it), the
-    partition/clustering columns (recorded table properties), and a
-    ``new`` name in use or EVER used (see :func:`table_add_columns`)."""
-    import json as _json
-
+    row-exact, and compaction migrates old files forward.  Refusals:
+    :func:`_check_evolution`."""
     from pyspark.sql.types import StructField, StructType
 
-    base_name, man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    names = [f.name for f in schema.fields]
-    if old not in names:
-        raise ValueError(f"table_rename_column: no column {old!r} in {names}")
-    frozen = _immutable_cols(man)
-    if old in frozen:
-        raise ValueError(
-            f"table_rename_column: {old!r} is {frozen[old]} — structural "
-            "table properties are name-frozen; re-seed to change them"
-        )
-    if new in names or new in ("bucket", "_zorder", "_part"):
-        raise ValueError(f"table_rename_column: {new!r} already in use")
-    if new in _retired_names(man):
-        raise ValueError(
-            f"table_rename_column: {new!r} was previously used by this "
-            "table; old files still carry bytes under it — pick a fresh "
-            "name"
-        )
-    new_seq = int(man.get("seq", -1)) + 1
+    base, man = _load_manifest(target)
+    schema = _check_evolution("table_rename_column", man, old, [new])
     evolved = StructType(
         [
             StructField(new, f.dataType, f.nullable) if f.name == old else f
             for f in schema.fields
         ]
     )
-    manifest = dict(
-        man,
-        schema=evolved.json(),
-        renames=list(man.get("renames") or [])
-        + [{"seq": new_seq, "from": old, "to": new}],
-        seq=new_seq,
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
+    renames = list(man.get("renames") or [])
+    renames.append({"seq": _next_seq(man), "from": old, "to": new})
+    _commit(target, base, man, schema=evolved.json(), renames=renames)
     return {"renamed": [old, new], "schema": evolved.simpleString()}
 
 
@@ -2184,39 +2119,23 @@ def table_drop_column(target: str, name: str) -> dict:
     leaves the manifest schema; old files keep its bytes (explicit-
     schema scans simply never read them — storage is reclaimed as
     compaction rewrites files) and the name joins the retired-name
-    registry so it can never be re-added over live bytes.  Same
-    structural refusals as :func:`table_rename_column`."""
-    import json as _json
-
+    registry so it can never be re-added over live bytes.  Refusals:
+    :func:`_check_evolution`, and the last column."""
     from pyspark.sql.types import StructType
 
-    base_name, man = _load_manifest(target)
-    schema = StructType.fromJson(_json.loads(man["schema"]))
-    names = [f.name for f in schema.fields]
-    if name not in names:
-        raise ValueError(f"table_drop_column: no column {name!r} in {names}")
-    frozen = _immutable_cols(man)
-    if name in frozen:
-        raise ValueError(
-            f"table_drop_column: {name!r} is {frozen[name]} — structural "
-            "table properties are name-frozen; re-seed to change them"
-        )
-    if len(names) == 1:
+    base, man = _load_manifest(target)
+    schema = _check_evolution("table_drop_column", man, name)
+    if len(schema.fields) == 1:
         raise ValueError("table_drop_column: cannot drop the last column")
     evolved = StructType([f for f in schema.fields if f.name != name])
-    manifest = dict(
-        man,
-        schema=evolved.json(),
-        dropped_names=sorted(set(man.get("dropped_names") or []) | {name}),
-        seq=int(man.get("seq", -1)) + 1,
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
+    dropped = sorted(set(man.get("dropped_names") or []) | {name})
+    _commit(target, base, man, schema=evolved.json(), dropped_names=dropped)
     return {"dropped": name, "schema": evolved.simpleString()}
 
 
 def table_stats(target: str) -> dict:
     """Table summary from the root's part refs alone (no data I/O, no part
-    loads): files, rows (None when any file lacks a row count), bytes,
+    loads): files, rows, bytes,
     live tombstone files, non-empty buckets, partitions, and the
     bucket-skew ratio (max bucket bytes / mean).  What a maintenance
     scheduler polls to decide WHEN to compact or vacuum."""
@@ -2232,22 +2151,17 @@ def table_stats(target: str) -> dict:
         # Accumulate: a partitioned bucket has one part
         # ref PER partition, plus possibly a tombstone ref.
         b["files"] += r["files"]
-        b["rows"] = (
-            None
-            if b["rows"] is None or r["rows"] is None
-            else b["rows"] + r["rows"]
-        )
+        b["rows"] += r["rows"]
         b["bytes"] += r["bytes"]
         b["tombstones"] += r["tombstones"]
-    rows_known = [b["rows"] for b in per_bucket.values()]
     bucket_bytes = [b["bytes"] for b in per_bucket.values()]
     mean_bytes = sum(bucket_bytes) / len(bucket_bytes) if bucket_bytes else 0
     return {
-        "seq": int(man.get("seq", -1)),
+        "seq": int(man["seq"]),
         "n_buckets": int(man["n_buckets"]),
         "buckets_nonempty": len(per_bucket),
         "files": sum(b["files"] for b in per_bucket.values()),
-        "rows": None if any(r is None for r in rows_known) else sum(rows_known),
+        "rows": sum(b["rows"] for b in per_bucket.values()),
         "bytes": sum(bucket_bytes),
         "tombstone_files": sum(b["tombstones"] for b in per_bucket.values()),
         "bucket_skew": (
@@ -2295,13 +2209,8 @@ def table_set_retention(target: str, keep_generations: int) -> dict:
     :func:`table_vacuum` honors it when sweeping."""
     if int(keep_generations) < 1:
         raise ValueError("keep_generations must be >= 1 (the live manifest)")
-    base_name, man = _load_manifest(target)
-    manifest = dict(
-        man,
-        keep_generations=int(keep_generations),
-        seq=int(man.get("seq", -1)) + 1,
-    )
-    _commit_manifest(target, manifest, expect_current=base_name)
+    base, man = _load_manifest(target)
+    _commit(target, base, man, keep_generations=int(keep_generations))
     return {"keep_generations": int(keep_generations)}
 
 
@@ -2317,22 +2226,20 @@ def table_drop_partition(target: str, value) -> dict:
     partition).  Dropping an absent partition commits nothing.  Live MoR
     tombstones are untouched: they are partition-less and may still mask
     rows in other partitions."""
-    base_name, man = _load_manifest(target)
+    base, man = _load_manifest(target)
     if _part_spec(man) is None:
         raise ValueError(
             f"{target} has no partition spec; table_drop_partition needs "
             "table_init(partition_by=...)"
         )
     part = NULL_PART if value is None else str(value)
-    new_seq = int(man.get("seq", -1)) + 1
     keep = [r for r in man["parts"] if r.get("part") != part]
     if len(keep) == len(man["parts"]):
         return {"dropped_files": 0, "partition": part}
     dropped_files = sum(
         r["files"] for r in man["parts"] if r.get("part") == part
     )
-    manifest = dict(man, parts=keep, seq=new_seq)
-    _commit_manifest(target, manifest, expect_current=base_name)
+    _commit(target, base, man, parts=keep)
     return {"dropped_files": dropped_files, "partition": part}
 
 

@@ -63,45 +63,26 @@ def _package_zip() -> str:
 
     The source zip must outlive the call that ships it: local-mode
     executors re-fetch and byte-compare it against the file server's copy
-    at task time, so a deleted-on-exit tempdir breaks the first job.  The
-    name embeds a digest of the source contents, so a leftover zip from a
-    recycled pid with *different* code can never be shipped by mistake —
-    and an identical-content leftover is safe to reuse by construction.
+    at task time, so a deleted-on-exit tempdir breaks the first job.  It
+    lives in a per-process directory shaped like a scratch root
+    (``pyspark_analytics_<pid>_pyfiles``), so :func:`_sweep_dead_roots`
+    reclaims it once this process is gone; no other process writes
+    there, so the zip is written in place.
     """
     global _ZIP_PATH
     if _ZIP_PATH is not None and os.path.exists(_ZIP_PATH):
         return _ZIP_PATH
-    import hashlib
-
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    digest = hashlib.sha256()
-    for dirpath, dirnames, filenames in sorted(os.walk(pkg_root)):
-        dirnames.sort()
-        for fn in sorted(filenames):
-            if fn.endswith(".py"):
-                p = os.path.join(dirpath, fn)
-                digest.update(os.path.relpath(p, pkg_root).encode())
-                with open(p, "rb") as f:
-                    digest.update(f.read())
-    archive_base = os.path.join(
-        tempfile.gettempdir(),
-        f"pyspark_analytics_library_spark-pyfiles-{digest.hexdigest()[:12]}",
+    out_dir = os.path.join(
+        tempfile.gettempdir(), f"{_ROOT_PREFIX}{os.getpid()}_pyfiles"
     )
-    if not os.path.exists(archive_base + ".zip"):
-        # Build at a pid-unique scratch name, then os.replace() into the
-        # shared digest-named path: a concurrent process running the same
-        # code could otherwise pass the exists() check mid-write and
-        # addPyFile a partially written zip.  os.replace is atomic on the
-        # same filesystem, and identical digests mean identical contents,
-        # so whichever writer lands last is equivalent.
-        scratch = shutil.make_archive(
-            f"{archive_base}-build-{os.getpid()}",
-            "zip",
-            root_dir=os.path.dirname(pkg_root),
-            base_dir=os.path.basename(pkg_root),
-        )
-        os.replace(scratch, archive_base + ".zip")
-    _ZIP_PATH = archive_base + ".zip"
+    os.makedirs(out_dir, exist_ok=True)
+    _ZIP_PATH = shutil.make_archive(
+        os.path.join(out_dir, os.path.basename(pkg_root)),
+        "zip",
+        root_dir=os.path.dirname(pkg_root),
+        base_dir=os.path.basename(pkg_root),
+    )
     return _ZIP_PATH
 
 

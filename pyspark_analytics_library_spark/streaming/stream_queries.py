@@ -76,27 +76,28 @@ def stream_events(spark: SparkSession, sf_dir: str, **reader_opts) -> DataFrame:
     return _normalize_ts(df)
 
 
+def _run_available_now(writer, what: str, timeout_s: int = 120) -> None:
+    """Run a stream writer to completion under an availableNow trigger.
+    A query still running at ``timeout_s`` is stopped and raises
+    ``TimeoutError``: its partial sink would otherwise surface downstream
+    as a bogus event-count or parity divergence."""
+    q = writer.trigger(availableNow=True).start()
+    finished = q.awaitTermination(timeout_s)
+    q.stop()
+    if not finished:
+        raise TimeoutError(
+            f"streaming query {what} did not finish within {timeout_s}s"
+        )
+
+
 def run_to_memory(
     df: DataFrame, output_mode: str = "complete", timeout_s: int = 120
 ) -> tuple[str, "SparkSession"]:
     """Execute a streaming DataFrame to completion (availableNow) into
     an in-memory sink; returns the sink table name."""
     name = f"mem_{uuid.uuid4().hex[:12]}"
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    finished = q.awaitTermination(timeout_s)
-    q.stop()
-    if not finished:
-        # A partial sink would surface downstream as a bogus
-        # "diverges from batch twin" parity failure — fail as what it is.
-        raise TimeoutError(
-            f"streaming query {name} did not finish within {timeout_s}s"
-        )
+    writer = df.writeStream.format("memory").queryName(name).outputMode(output_mode)
+    _run_available_now(writer, name, timeout_s)
     return name, df.sparkSession
 
 
@@ -564,14 +565,9 @@ def q_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = (
-        ev.writeStream.foreachBatch(write_batch)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        ev.writeStream.foreachBatch(write_batch).outputMode("append"), "stream_sink"
     )
-    q.awaitTermination(120)
-    q.stop()
     sink = spark.read.parquet(out_dir)
     streamed = sink.agg(F.sum("n")).collect()[0][0] or 0
     _assert_stream_covers_events(spark, sf_dir, streamed, "stream_sink")
@@ -691,14 +687,11 @@ def q_stream_foreach_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(out_dir)
         )
 
-    q = (
+    _run_available_now(
         stream_events(spark, sf_dir, maxFilesPerTrigger="1")
-        .writeStream.foreachBatch(handle_batch)
-        .trigger(availableNow=True)
-        .start()
+        .writeStream.foreachBatch(handle_batch),
+        "stream_foreach_batch",
     )
-    q.awaitTermination(120)
-    q.stop()
     out = (
         spark.read.parquet(out_dir)
         .groupBy("event_type")

@@ -689,14 +689,11 @@ def test_with_commit_retry_rejects_zero_attempts():
 
 
 def test_scan_coalesce_sizeless_entries_keep_full_parallelism(spark):
-    """ADVICE r18: entries without recorded bytes (pre-r18 manifests)
-    must NOT be coalesced — the old 32-files-per-task estimate silently
-    under-parallelized legacy manifests holding LARGE files.  Without
-    sizes the 'files are tiny' premise is unprovable, so the scan keeps
-    one task per file (Spark's own split planning then governs)."""
-    sizeless = [{"path": f"f{i}"} for i in range(100)]
-    assert cm._scan_coalesce(spark, sizeless) == 100
-    # The byte-based path still packs tiny files down to the floor.
+    """The scan task count packs by the entries' recorded bytes: tiny
+    files down to the default parallelism, larger ones at the session's
+    maxPartitionBytes.  Every entry of a manifest-list table records its
+    bytes, so there is no sizeless case left to keep at one task per
+    file."""
     tiny = [{"path": f"f{i}", "bytes": 1024} for i in range(100)]
     assert cm._scan_coalesce(spark, tiny) == spark.sparkContext.defaultParallelism
     # ...and packs to the session's maxPartitionBytes, not a fixed 128 MiB.

@@ -417,6 +417,50 @@ def test_table_merge_refuses_rekeying_merge_fn(spark, tmp_path):
     assert _v2_rows(spark, target) == before
 
 
+def test_lookup_bucket_routing_runs_no_spark_job(spark):
+    """``_buckets_for_keys`` hashes the probe keys over an Arrow-built
+    local relation: the bucket ids equal those of the same expression
+    over a Python-list frame, for every key type and NULL, and the
+    collect runs no Spark job where the list frame runs one."""
+    import datetime
+    import uuid
+
+    from pyspark.sql import types as T
+
+    sc = spark.sparkContext
+    cases = [
+        (T.LongType(), [5, 17, 123, 2**40, -3, None]),
+        (T.IntegerType(), [0, 7, -1, 2**31 - 1, None]),
+        (T.StringType(), ["a", "", "é-ß", "x" * 40, None]),
+        (T.DateType(), [datetime.date(2024, 1, 5), datetime.date(1970, 1, 1), None]),
+    ]
+
+    def jobs(fn):
+        group = f"routing-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, "bucket routing")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    for dtype, keys in cases:
+        schema = T.StructType([T.StructField("k", dtype)])
+        man = {"bucket_key": "k", "n_buckets": 16, "schema": schema.json()}
+        got, got_jobs = jobs(lambda: commit_mod._buckets_for_keys(spark, man, keys))
+        listed = spark.createDataFrame([(k,) for k in keys], schema)
+        want, list_jobs = jobs(
+            lambda: {
+                r.b
+                for r in listed.select(
+                    commit_mod._bucket_expr("k", 16).alias("b")
+                ).collect()
+            }
+        )
+        assert got == want, (dtype, got, want)
+        assert (got_jobs, list_jobs) == (0, 1), dtype
+
+
 def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):
     """Read-side payoff of the bucketed layout: a point lookup derives
     its file set from the manifest by bucket arithmetic — no index —
@@ -1347,11 +1391,24 @@ def test_commit_ops_read_the_live_pointer_once(spark, tmp_path, monkeypatch):
     builds on and once more at its commit point.  A second read before
     the commit could see a root another writer committed in between,
     so the op would build on that root yet check against the first
-    name, and refuse a commit that raced nothing."""
+    name, and refuse a commit that raced nothing.  Every op also
+    advances the sequence by exactly one."""
+    from pyspark.sql.types import StringType, StructField
+
     target = str(tmp_path / "t")
+    parted = str(tmp_path / "p")
     base = _v2_base(spark)
     commit_mod.table_init(base, target, "o_orderkey", n_buckets=4)
+    commit_mod.table_init(
+        base, parted, "o_orderkey", n_buckets=4, partition_by="o_custkey"
+    )
     batch = base.filter(F.col("o_orderkey") < 3)
+
+    def upsert(base_slice, updates):
+        return base_slice.join(updates, "o_orderkey", "left_anti").unionByName(
+            updates
+        )
+
     calls: list[str] = []
     real = commit_mod.resolve_table
 
@@ -1361,16 +1418,37 @@ def test_commit_ops_read_the_live_pointer_once(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr(commit_mod, "resolve_table", counting)
     ops = {
-        "table_init": lambda: commit_mod.table_init(
+        "table_init": (target, lambda: commit_mod.table_init(
             base, target, "o_orderkey", n_buckets=4
+        )),
+        "table_append": (target, lambda: commit_mod.table_append(spark, target, batch)),
+        "table_merge_mor": (
+            target, lambda: commit_mod.table_merge_mor(spark, target, batch)
         ),
-        "table_append": lambda: commit_mod.table_append(spark, target, batch),
-        "table_merge_mor": lambda: commit_mod.table_merge_mor(spark, target, batch),
-        "table_delete": lambda: commit_mod.table_delete(spark, target, [1]),
-        "table_compact": lambda: commit_mod.table_compact(spark, target),
-        "table_set_retention": lambda: commit_mod.table_set_retention(target, 3),
+        "table_delete": (target, lambda: commit_mod.table_delete(spark, target, [1])),
+        "table_compact": (target, lambda: commit_mod.table_compact(spark, target)),
+        "table_merge": (
+            target, lambda: commit_mod.table_merge(spark, target, batch, upsert)
+        ),
+        "table_add_columns": (target, lambda: commit_mod.table_add_columns(
+            spark, target, [StructField("o_note", StringType(), True)]
+        )),
+        "table_rename_column": (
+            target, lambda: commit_mod.table_rename_column(target, "o_note", "o_memo")
+        ),
+        "table_drop_column": (
+            target, lambda: commit_mod.table_drop_column(target, "o_memo")
+        ),
+        "table_set_retention": (
+            target, lambda: commit_mod.table_set_retention(target, 3)
+        ),
+        "table_drop_partition": (
+            parted, lambda: commit_mod.table_drop_partition(parted, "3")
+        ),
     }
-    for name, op in ops.items():
+    for name, (t, op) in ops.items():
+        seq = int(commit_mod._load_manifest(t)[1]["seq"])
         calls.clear()
         op()
         assert len(calls) == 2, (name, len(calls))
+        assert int(commit_mod._load_manifest(t)[1]["seq"]) == seq + 1, name

@@ -249,3 +249,40 @@ def test_package_prose_states_the_contract_not_the_history():
         if _HISTORY.search(text)
     ]
     assert hits == [], "history citations in package prose:\n" + "\n".join(hits)
+
+
+def _calls_by_function(src: str) -> dict[str, list[str]]:
+    """Top-level function name → names of the functions it calls and of
+    the subscript keys it reads (``man["schema"]`` reads ``"schema"``)."""
+    out: dict[str, list[str]] = {}
+    for fn in ast.parse(src).body:
+        if not isinstance(fn, ast.FunctionDef):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Call):
+                f = node.func
+                out.setdefault(fn.name, []).append(
+                    f.id if isinstance(f, ast.Name) else getattr(f, "attr", "")
+                )
+            elif isinstance(node, ast.Subscript) and isinstance(node.slice, ast.Constant):
+                out.setdefault(fn.name, []).append(repr(node.slice.value))
+    return out
+
+
+def test_lakehouse_commits_through_one_path():
+    """``sources/commit.py`` spells its optimistic-commit protocol once:
+    ``_commit_manifest`` has one call site (``_commit``, which owns the
+    next-seq rule, the part rewrite and the live-pointer check), and the
+    manifest schema is parsed in ``_schema`` alone.  An op that
+    hand-spells either would let the copies drift."""
+    with open(os.path.join(PKG, "sources", "commit.py"), encoding="utf-8") as f:
+        calls = _calls_by_function(f.read())
+    committers = [fn for fn, names in calls.items() for n in names if n == "_commit_manifest"]
+    parsers = [
+        fn
+        for fn, names in calls.items()
+        for n in names
+        if n in ("fromJson", "'schema'")
+    ]
+    assert committers == ["_commit"], f"commit through _commit: {committers}"
+    assert set(parsers) == {"_schema"}, f"parse the manifest schema with _schema: {parsers}"

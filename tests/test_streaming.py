@@ -5,6 +5,7 @@ mode — the strongest check available without a streaming oracle.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given as hyp_given
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
@@ -103,6 +104,21 @@ def test_stream_sink_covers_all_events(spark):
     )
     total = stream.agg(F.sum("n")).collect()[0][0]
     assert total == load_tables(spark, TEST_SF_DIR)["events"].count()
+
+
+@pytest.mark.parametrize(
+    "name", ["stream_sink", "stream_foreach_batch", "stream_static_join"]
+)
+def test_timed_out_stream_raises_timeout(spark, monkeypatch, name):
+    """An availableNow query still running at its deadline fails as a
+    timeout, not as the event-count or parity divergence its partial
+    sink would show: the two foreachBatch sinks and the memory-sink
+    runner all go through one runner that checks awaitTermination."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda q, t=None: False)
+    with pytest.raises(TimeoutError, match="did not finish"):
+        REGISTRY[name].fn(spark, TEST_SF_DIR)
 
 
 def test_stream_static_join_matches_batch(spark):
@@ -340,6 +356,36 @@ def test_scratch_janitor_prunes_leaked_dirs_only(tmp_path, monkeypatch):
     _make_roots(tmp_path, {f"pyspark_analytics_{dead_pid}_local-9": graced})
     io_mod._sweep_dead_roots([str(tmp_path)])
     assert (tmp_path / f"pyspark_analytics_{dead_pid}_local-9").exists()
+
+
+def test_package_zip_lands_in_a_sweepable_root(tmp_path, monkeypatch):
+    """The executor zip is built inside a per-process directory shaped
+    like a scratch root, so the janitor keeps it while this process lives
+    and reclaims it after, instead of leaving one zip per source version
+    in the tempdir forever."""
+    import os
+    import shutil
+    import tempfile
+    import time
+
+    from pyspark_analytics_library_spark.sources import io as io_mod
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(io_mod, "_ZIP_PATH", None)
+    path = io_mod._package_zip()
+    assert io_mod._package_zip() == path, "built once per process"
+    root = os.path.dirname(path)
+    assert os.listdir(tmp_path) == [f"pyspark_analytics_{os.getpid()}_pyfiles"]
+    assert os.path.basename(path) == "pyspark_analytics_library_spark.zip"
+
+    # The same shape under a dead pid is swept; this process's is kept.
+    dead = tmp_path / f"pyspark_analytics_{_dead_pid()}_pyfiles"
+    shutil.copytree(root, dead)
+    graced = time.time() - io_mod._DEAD_GRACE_S - 60
+    os.utime(dead, (graced, graced))
+    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    io_mod._sweep_dead_roots([str(tmp_path)])
+    assert not dead.exists() and os.path.exists(path)
 
 
 def test_scratch_janitor_eperm_means_alive(tmp_path, monkeypatch):
