@@ -1745,14 +1745,23 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
 def _key_frame(spark, man: dict, keys: list) -> DataFrame:
     """``keys`` as a one-column frame typed as the table's bucket key
     column.  Built from an Arrow table, it plans as a local relation,
-    so an expression over it collects without a Spark job."""
+    so an expression over it collects without a Spark job.
+
+    Timestamp keys go in as the instants ``TimestampType.toInternal``
+    gives, the ones the row path and the ``isin`` residual use (a naive
+    datetime is OS-local time); Arrow would read a naive datetime in the
+    session time zone and hash another instant."""
     import pyarrow as pa
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import StructField, StructType, TimestampType
 
     key = man["bucket_key"]
+    dtype = _schema(man)[key].dataType
+    if isinstance(dtype, TimestampType):
+        arr = pa.array([dtype.toInternal(k) for k in keys], pa.timestamp("us", "UTC"))
+    else:
+        arr = pa.array(keys)
     return spark.createDataFrame(
-        pa.table({key: pa.array(keys)}),
-        schema=StructType([StructField(key, _schema(man)[key].dataType)]),
+        pa.table({key: arr}), schema=StructType([StructField(key, dtype)])
     )
 
 

@@ -67,12 +67,15 @@ def _package_zip() -> str:
     lives in a per-process directory shaped like a scratch root
     (``pyspark_analytics_<pid>_pyfiles``), so :func:`_sweep_dead_roots`
     reclaims it once this process is gone; no other process writes
-    there, so the zip is written in place.
+    there, so the zip is written in place.  The build sweeps the
+    tempdir itself: on a cluster master no scratch base is the tempdir,
+    so no scratch request would ever reclaim dead processes' zips.
     """
     global _ZIP_PATH
     if _ZIP_PATH is not None and os.path.exists(_ZIP_PATH):
         return _ZIP_PATH
     pkg_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    _sweep_dead_roots([tempfile.gettempdir()])
     out_dir = os.path.join(
         tempfile.gettempdir(), f"{_ROOT_PREFIX}{os.getpid()}_pyfiles"
     )
@@ -308,9 +311,10 @@ _MAX_AGE_S = 6 * 3600
 
 _ROOT_PREFIX = "pyspark_analytics_"
 
-#: Janitor latch: one sweep per process, at the first scratch request,
-#: not at import (imports stay side-effect free).
-_SWEPT = False
+#: Janitor latch: each local base is swept once per process, at the
+#: first scratch request or package-zip build that names it, not at
+#: import (imports stay side-effect free).
+_SWEPT: set[str] = set()
 
 
 def _scratch_bases(spark: SparkSession) -> list[str]:
@@ -409,17 +413,17 @@ def _pid_state(pid_s: str) -> str | None:
 
 
 def _sweep_dead_roots(bases: list[str]) -> None:
-    """Once per process, delete other processes' roots under the local
-    bases: a dead pid's root past ``_DEAD_GRACE_S``, an unprobeable pid's
-    root past ``_MAX_AGE_S``.  A live pid's root is kept at any age (a
-    long-lived session never refreshes its mtime); other names are
-    skipped; remote bases are left to their storage's lifecycle rules."""
-    global _SWEPT
-    if _SWEPT:
-        return
-    _SWEPT = True
+    """Once per process and base, delete other processes' roots under
+    the local bases: a dead pid's root past ``_DEAD_GRACE_S``, an
+    unprobeable pid's root past ``_MAX_AGE_S``.  A live pid's root is
+    kept at any age (a long-lived session never refreshes its mtime);
+    other names are skipped; remote bases are left to their storage's
+    lifecycle rules."""
     now = time.time()
     for base in filter(None, map(_local, bases)):
+        if base in _SWEPT:
+            continue
+        _SWEPT.add(base)
         for path in glob.glob(os.path.join(glob.escape(base), f"{_ROOT_PREFIX}*_*")):
             state = _pid_state(os.path.basename(path)[len(_ROOT_PREFIX):].split("_")[0])
             try:

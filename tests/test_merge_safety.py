@@ -12,6 +12,7 @@ data-loss bug if the caller expected per-row survival.
 
 from __future__ import annotations
 
+import contextlib
 import os
 
 import pytest
@@ -417,22 +418,53 @@ def test_table_merge_refuses_rekeying_merge_fn(spark, tmp_path):
     assert _v2_rows(spark, target) == before
 
 
+@contextlib.contextmanager
+def _process_tz(name: str):
+    """Run the body with the OS-local zone of this process set to
+    ``name`` (the zone naive datetimes are read in on the row path)."""
+    import time
+
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = name
+    time.tzset()
+    try:
+        yield
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+
+
 def test_lookup_bucket_routing_runs_no_spark_job(spark):
     """``_buckets_for_keys`` hashes the probe keys over an Arrow-built
     local relation: the bucket ids equal those of the same expression
     over a Python-list frame, for every key type and NULL, and the
-    collect runs no Spark job where the list frame runs one."""
+    collect runs no Spark job where the list frame runs one.  The OS and
+    session zones differ, so a naive timestamp hashed in the session
+    zone instead of the OS zone would show as other bucket ids."""
     import datetime
     import uuid
 
     from pyspark.sql import types as T
 
+    from pyspark_analytics_library_spark.conf import scoped_conf
+
     sc = spark.sparkContext
+    naive = [
+        datetime.datetime(2024, 1, 5, 3, 4, 5, 678),
+        datetime.datetime(2024, 7, 1, 23, 59),
+        datetime.datetime(1970, 1, 1),
+    ]
+    aware = datetime.datetime(2024, 3, 2, 12, tzinfo=datetime.timezone.utc)
     cases = [
         (T.LongType(), [5, 17, 123, 2**40, -3, None]),
         (T.IntegerType(), [0, 7, -1, 2**31 - 1, None]),
         (T.StringType(), ["a", "", "é-ß", "x" * 40, None]),
         (T.DateType(), [datetime.date(2024, 1, 5), datetime.date(1970, 1, 1), None]),
+        (T.TimestampType(), [*naive, aware, None]),
+        (T.TimestampNTZType(), [*naive, None]),
     ]
 
     def jobs(fn):
@@ -444,21 +476,58 @@ def test_lookup_bucket_routing_runs_no_spark_job(spark):
             sc.setLocalProperty("spark.jobGroup.id", None)
         return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
-    for dtype, keys in cases:
-        schema = T.StructType([T.StructField("k", dtype)])
-        man = {"bucket_key": "k", "n_buckets": 16, "schema": schema.json()}
-        got, got_jobs = jobs(lambda: commit_mod._buckets_for_keys(spark, man, keys))
-        listed = spark.createDataFrame([(k,) for k in keys], schema)
-        want, list_jobs = jobs(
-            lambda: {
-                r.b
-                for r in listed.select(
-                    commit_mod._bucket_expr("k", 16).alias("b")
-                ).collect()
-            }
+    with _process_tz("America/New_York"), scoped_conf(
+        spark, {"spark.sql.session.timeZone": "Asia/Tokyo"}
+    ):
+        for dtype, keys in cases:
+            schema = T.StructType([T.StructField("k", dtype)])
+            man = {"bucket_key": "k", "n_buckets": 16, "schema": schema.json()}
+            got, got_jobs = jobs(
+                lambda: commit_mod._buckets_for_keys(spark, man, keys)
+            )
+            listed = spark.createDataFrame([(k,) for k in keys], schema)
+            want, list_jobs = jobs(
+                lambda: {
+                    r.b
+                    for r in listed.select(
+                        commit_mod._bucket_expr("k", 16).alias("b")
+                    ).collect()
+                }
+            )
+            assert got == want, (dtype, got, want)
+            assert (got_jobs, list_jobs) == (0, 1), dtype
+
+
+def test_table_lookup_on_a_timestamp_key(spark, tmp_path):
+    """A timestamp-keyed table answers a lookup by naive datetimes, and
+    a delete by them masks exactly those rows, when the OS zone (the
+    one naive datetimes are read in) differs from the session zone."""
+    import datetime
+
+    from pyspark.sql import types as T
+
+    from pyspark_analytics_library_spark.conf import scoped_conf
+
+    target = str(tmp_path / "t")
+    schema = T.StructType(
+        [T.StructField("ts", T.TimestampType()), T.StructField("v", T.LongType())]
+    )
+    t0 = datetime.datetime(2024, 3, 9, 20)
+    rows = [(t0 + datetime.timedelta(hours=7 * i), i) for i in range(40)]
+    with _process_tz("America/New_York"), scoped_conf(
+        spark, {"spark.sql.session.timeZone": "Asia/Tokyo"}
+    ):
+        commit_mod.table_init(
+            spark.createDataFrame(rows, schema), target, "ts", n_buckets=16
         )
-        assert got == want, (dtype, got, want)
-        assert (got_jobs, list_jobs) == (0, 1), dtype
+        keys = [rows[i][0] for i in (1, 5, 33)]
+        got = sorted(
+            tuple(r) for r in commit_mod.table_lookup(spark, target, keys).collect()
+        )
+        assert got == [rows[i] for i in (1, 5, 33)]
+        commit_mod.table_delete(spark, target, keys[:2])
+        left = sorted(tuple(r) for r in commit_mod.table_read(spark, target).collect())
+    assert left == [r for i, r in enumerate(rows) if i not in (1, 5)]
 
 
 def test_table_lookup_scans_only_matching_buckets(spark, tmp_path):

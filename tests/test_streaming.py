@@ -349,7 +349,7 @@ def test_scratch_janitor_prunes_leaked_dirs_only(tmp_path, monkeypatch):
     (tmp_path / "plain_file").write_text("x")
     keep["plain_file"] = None
 
-    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
     io_mod._sweep_dead_roots([str(tmp_path)])
     assert {e.name for e in tmp_path.iterdir()} == set(keep)
     # The latch makes the second call a no-op even with new leaks.
@@ -372,6 +372,7 @@ def test_package_zip_lands_in_a_sweepable_root(tmp_path, monkeypatch):
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     monkeypatch.setattr(io_mod, "_ZIP_PATH", None)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
     path = io_mod._package_zip()
     assert io_mod._package_zip() == path, "built once per process"
     root = os.path.dirname(path)
@@ -383,9 +384,44 @@ def test_package_zip_lands_in_a_sweepable_root(tmp_path, monkeypatch):
     shutil.copytree(root, dead)
     graced = time.time() - io_mod._DEAD_GRACE_S - 60
     os.utime(dead, (graced, graced))
-    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
     io_mod._sweep_dead_roots([str(tmp_path)])
     assert not dead.exists() and os.path.exists(path)
+
+
+def test_package_zip_sweeps_the_tempdir_on_a_cluster_master(tmp_path, monkeypatch):
+    """On a cluster master the tempdir is no scratch base, so no scratch
+    request sweeps it: shipping the package does, once per process, and
+    a later scratch sweep still covers the other bases."""
+    import os
+    import tempfile
+    import time
+    from types import SimpleNamespace
+
+    from pyspark_analytics_library_spark.sources import io as io_mod
+
+    tmp_dir, base = tmp_path / "tmp", tmp_path / "base"
+    tmp_dir.mkdir()
+    base.mkdir()
+    graced = time.time() - io_mod._DEAD_GRACE_S - 60
+    dead = _dead_pid()
+    _make_roots(tmp_dir, {f"pyspark_analytics_{dead}_pyfiles": graced})
+    _make_roots(base, {f"pyspark_analytics_{dead}_app-1": graced})
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_dir))
+    monkeypatch.setattr(io_mod, "_ZIP_PATH", None)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
+    monkeypatch.setattr(io_mod, "_SHIPPED", set())
+    shipped = []
+    sc = SimpleNamespace(
+        master="spark://driver-host:7077",
+        applicationId="app-2",
+        addPyFile=shipped.append,
+    )
+    io_mod._ship_package(SimpleNamespace(sparkContext=sc))
+    assert os.listdir(tmp_dir) == [f"pyspark_analytics_{os.getpid()}_pyfiles"]
+    assert shipped == [io_mod._package_zip()]
+    io_mod._sweep_dead_roots([str(base), str(tmp_dir)])
+    assert os.listdir(base) == []
 
 
 def test_scratch_janitor_eperm_means_alive(tmp_path, monkeypatch):
@@ -419,7 +455,7 @@ def test_scratch_janitor_eperm_means_alive(tmp_path, monkeypatch):
             "pyspark_analytics_4244_local-3": aged,  # unknown, past 6 h
         },
     )
-    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
     io_mod._sweep_dead_roots([str(tmp_path)])
     assert {e.name for e in tmp_path.iterdir()} == {
         "pyspark_analytics_4242_local-1",
@@ -441,7 +477,7 @@ def test_scan_scratch_invokes_janitor(spark, tmp_path, monkeypatch):
     leaked = f"pyspark_analytics_{_dead_pid()}_local-1"
     graced = time.time() - io_mod._DEAD_GRACE_S - 60
     _make_roots(tmp_path, {leaked: graced})
-    monkeypatch.setattr(io_mod, "_SWEPT", False)
+    monkeypatch.setattr(io_mod, "_SWEPT", set())
     with scoped_conf(spark, {"spark.analytics.scratchDir": str(tmp_path)}):
         path = scq._scratch(spark, "sink_probe")
     assert not (tmp_path / leaked).exists()
