@@ -27,9 +27,11 @@ from pyspark.sql import functions as F
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import (
+    LOADER_SHUFFLE_PARTITIONS,
     fs_delete,
     iteration_scratch,
     load_tables,
+    materialize,
     reclaim_iteration_scratch,  # noqa: F401 — public re-export
 )
 
@@ -485,6 +487,23 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(F.col("id_b").alias("dup_vec_id")).distinct()
 
 
+def both_ways(df: DataFrame, a: str, b: str, x: str, y: str) -> DataFrame:
+    """Both directions of the pair list ``df`` (``a``, ``b``) as rows
+    (``x``, ``y``): one row ``(a, b)`` and one ``(b, a)`` per pair.
+
+    A row-local explode, NOT a union of two selects: a union references
+    ``df`` twice, so the caller's pair plan (an LSH or n-gram candidate
+    stage) would run as two physical subtrees."""
+    return df.select(
+        F.explode(
+            F.array(
+                F.struct(F.col(a).alias(x), F.col(b).alias(y)),
+                F.struct(F.col(b).alias(x), F.col(a).alias(y)),
+            )
+        ).alias("_e")
+    ).select(f"_e.{x}", f"_e.{y}")
+
+
 def connected_components(
     edges: DataFrame, vertices: DataFrame, max_iters: int = 30
 ) -> DataFrame:
@@ -536,23 +555,12 @@ def connected_components(
             return _cc_driver_union_find(
                 spark, head, vertices, e2.schema["src"].dataType
             )
-    # Symmetrize by a row-local explode, NOT a union of two branches: a
-    # union references ``e2`` twice, so the sym materialization job
-    # would execute the CALLER'S edge-generation plan (in the fuzzy
-    # pipelines a full LSH candidate stage) twice.
-    sym = e2.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("src"), F.col("dst")),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst")),
-            )
-        ).alias("_e")
-    ).select("_e.src", "_e.dst")
+    sym = both_ways(e2, "src", "dst", "src", "dst")
     # Scoped shuffle-partition trim (measured 13.3 s -> 3.5 s at sf0.01
     # on a bare session): every round pays per-partition task + state
     # overhead x partitions x rounds, and AQE's coalescing does not
     # shrink what localCheckpoint materializes.  Only the untouched 200
-    # default (or the loader's 32) is trimmed — a deliberately sized
+    # default (or the loader's trim of it) is trimmed — a deliberately sized
     # session is respected — and the conf is restored on exit (safe:
     # every round runs eagerly, so nothing inside the loop is re-planned
     # after restore).  Gated to local masters (same discipline as the
@@ -560,7 +568,7 @@ def connected_components(
     # default alone, a library helper must not pin a petabyte shuffle
     # to 8 reducers.
     parts = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    trim = conf.is_local_master(spark) and parts in ("200", "32")
+    trim = conf.is_local_master(spark) and parts in ("200", LOADER_SHUFFLE_PARTITIONS)
     with conf.scoped_conf(spark, {"spark.sql.shuffle.partitions": 8} if trim else {}):
         lab = _cc_loop(sym, max_iters)
     return _attach_singletons(vertices, lab, broadcast_labels=False)
@@ -656,13 +664,9 @@ def _cc_checkpoint(df: DataFrame, scratch_root: str, round_no: int) -> DataFrame
     Writes are coalesced to a few files: the vertex-count-sized label
     table is re-read whole every round, so many tiny files would pay
     per-file open/commit cost × rounds for no parallelism."""
-    path = os.path.join(scratch_root, f"round_{round_no}")
-    df.coalesce(4).write.mode("overwrite").parquet(path)
+    out = materialize(df, os.path.join(scratch_root, f"round_{round_no}"), files=4)
     fs_delete(df.sparkSession, os.path.join(scratch_root, f"round_{round_no - 1}"))
-    # The written schema is df's own — passing it skips the re-read's
-    # footer-based schema inference (~70 ms of driver work per reader
-    # build, ~log(diameter) builds per loop).
-    return df.sparkSession.read.schema(df.schema).parquet(path)
+    return out
 
 
 def _cc_step(sym: DataFrame, start: DataFrame) -> DataFrame:
@@ -744,11 +748,9 @@ def _cc_loop(sym: DataFrame, max_iters: int) -> DataFrame:
         # the caller's edge-generation plan (here a self-join; in the
         # fuzzy pipeline a full LSH candidate stage) ~log(diameter)
         # times.  Also gives every round's planner exact size stats for
-        # the join side.  Known schema: skip the re-read's footer
-        # inference (see _cc_checkpoint).
+        # the join side.
         sym_path = os.path.join(scratch_root, "sym")
-        sym.coalesce(8).write.mode("overwrite").parquet(sym_path)
-        sym = spark.read.schema(sym.schema).parquet(sym_path)
+        sym = materialize(sym, sym_path, files=8)
         # Labels start from the EDGE-INCIDENT vertex set only (derived
         # from the materialized edges — no extra pass over the caller's
         # plan); singletons rejoin in connected_components via

@@ -30,6 +30,7 @@ from pyspark_analytics_library_spark.sources.io import (
     fs_delete,
     iteration_scratch,
     load_tables,
+    materialize,
 )
 
 
@@ -64,6 +65,18 @@ def co_occurrence_edges(
         .select("u", F.explode("_m").alias("v"))
         .filter(F.col("u") < F.col("v"))
         .distinct()
+    )
+
+
+def degrees(edges: DataFrame) -> DataFrame:
+    """(node, degree) of every endpoint of an undirected (u, v) edge list.
+    Both endpoints come from one row-local explode: a union of two
+    selects over ``edges`` would re-execute the whole edge plan per
+    branch (DataFrame reuse is not plan reuse)."""
+    return (
+        edges.select(F.explode(F.array("u", "v")).alias("node"))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias("degree"))
     )
 
 
@@ -105,15 +118,9 @@ def q_graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = co_occurrence_edges(
         ev, "user_id", [F.col("event_type"), F.date_trunc("hour", F.col("ts"))]
     )
-    # Both endpoints via one row-local explode — a unionAll of two
-    # selects over `edges` would re-execute the whole edge pipeline
-    # per branch (DataFrame reuse is not plan reuse).
-    both = edges.select(
-        F.explode(F.array(F.col("u"), F.col("v"))).alias("node")
-    )
-    deg = both.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
     return (
-        deg.groupBy("degree")
+        degrees(edges)
+        .groupBy("degree")
         .agg(F.count(F.lit(1)).alias("n_nodes"))
         .orderBy("degree")
     )
@@ -377,21 +384,13 @@ def _triangle_census_impl(
 ) -> DataFrame:
     import numpy as np
 
-    edges_path = os.path.join(scratch, "edges")
-    edges_schema = edges.schema
-    edges.write.mode("overwrite").parquet(edges_path)
-    # known schema: skip the re-read's footer inference (~70 ms of
-    # driver work per reader build)
-    edges = spark.read.schema(edges_schema).parquet(edges_path)
-
-    ends = edges.select(F.explode(F.array("u", "v")).alias("node"))
-    deg = ends.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-
-    deg_pd = deg.toPandas()  # vertex-count-sized, like PageRank's counts
+    edges = materialize(edges, os.path.join(scratch, "edges"))
+    deg_pd = degrees(edges).toPandas()  # vertex-count-sized, like PageRank's counts
+    d = deg_pd["degree"]
     n_vertices = len(deg_pd)
     # Degree sum counts each edge twice — the exact edge count with no
     # extra job, so the dense/sparse dispatch is free.
-    m_edges = int(deg_pd["d"].sum()) // 2 if n_vertices else 0
+    m_edges = int(d.sum()) // 2 if n_vertices else 0
     cap = conf.get(spark, "spark.analytics.graph.denseMatmulMaxVertices")
     edge_cap = conf.get(spark, "spark.analytics.graph.denseMatmulMaxEdges")
     if n_vertices <= cap and m_edges <= edge_cap:
@@ -400,7 +399,7 @@ def _triangle_census_impl(
         # yields the same upper-triangular adjacency as the distributed
         # e_dir build without re-running the edge plan through two
         # degree joins.
-        order = deg_pd.sort_values(["d", "node"]).reset_index(drop=True)
+        order = deg_pd.sort_values(["degree", "node"]).reset_index(drop=True)
         rank = {node: i for i, node in enumerate(order["node"])}
         ep = edges.toPandas()
         ru = ep["u"].map(rank).to_numpy()
@@ -411,7 +410,7 @@ def _triangle_census_impl(
         for i0 in range(0, n_vertices, 1024):
             blk = A[i0 : i0 + 1024]
             t += int(((blk @ A) * blk).sum())
-        wedges = int((deg_pd["d"] * (deg_pd["d"] - 1) // 2).sum())
+        wedges = int((d * (d - 1) // 2).sum())
         return _census_summary(spark, m_edges, wedges, t)
 
     # ----- sparse / large: distributed adjacency-intersection path -----
@@ -462,7 +461,7 @@ def _triangle_census_impl(
     import math
 
     work_cap = conf.get(spark, "spark.analytics.graph.sparseMaxWork")
-    d_np = deg_pd["d"].to_numpy(dtype="float64")
+    d_np = d.to_numpy(dtype="float64")
     work = float((d_np * np.minimum(d_np, math.sqrt(2.0 * max(m_edges, 1)))).sum())
     if work > work_cap:
         raise ValueError(
@@ -480,17 +479,17 @@ def _triangle_census_impl(
             "job (W≈3.1e10 measured 87–338 s on one 32-thread box)."
         )
 
-    wedges = int((deg_pd["d"] * (deg_pd["d"] - 1) // 2).sum())
+    wedges = int((d * (d - 1) // 2).sum())
     deg_local = spark.createDataFrame(deg_pd)
     ed = (
         edges.join(
             F.broadcast(
-                deg_local.select(F.col("node").alias("u"), F.col("d").alias("du"))
+                deg_local.select(F.col("node").alias("u"), F.col("degree").alias("du"))
             ),
             "u",
         ).join(
             F.broadcast(
-                deg_local.select(F.col("node").alias("v"), F.col("d").alias("dv"))
+                deg_local.select(F.col("node").alias("v"), F.col("degree").alias("dv"))
             ),
             "v",
         )
@@ -498,26 +497,20 @@ def _triangle_census_impl(
     u_first = (F.col("du") < F.col("dv")) | (
         (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
     )
-    e_dir_path = os.path.join(scratch, "e_dir")
-    e_dir_out = ed.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+    e_dir = materialize(
+        ed.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        ),
+        os.path.join(scratch, "e_dir"),
     )
-    e_dir_out.write.mode("overwrite").parquet(e_dir_path)
     # Explicit repartition: the materialized edge file is compact
     # (~8 B/row columnar), so maxPartitionBytes would hand the whole
     # intersection stage to one or two scan tasks — the probe's other
     # single-task bottleneck.  A round-robin spread of the skinny
     # (src, dst) rows is cheap and sizes the stage to the session's
     # shuffle parallelism.
-    shuffle_n = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    # The read schema is the written frame's own: src/dst carry the
-    # common type of u and v, which differs from u's when the two
-    # endpoint columns differ.
-    e_dir = (
-        spark.read.schema(e_dir_out.schema).parquet(e_dir_path)
-        .repartition(shuffle_n)
-    )
+    e_dir = e_dir.repartition(int(spark.conf.get("spark.sql.shuffle.partitions", "200")))
     # The out-neighborhood aggregate stays LAZY: it has exactly one
     # physical consumer — the single broadcast relation / reused
     # exchange both join sides share (_sparse_triangle_sum_frame) — so
@@ -527,7 +520,7 @@ def _triangle_census_impl(
     nbrs = e_dir.groupBy("src").agg(F.collect_set("dst").alias("nb"))
     bcast_cap = conf.get(spark, "spark.analytics.graph.broadcastNbrsMaxEdges")
     tri = _sparse_triangle_sum_frame(
-        e_dir, nbrs, m_edges <= bcast_cap, e_dir_out.schema["dst"].dataType
+        e_dir, nbrs, m_edges <= bcast_cap, e_dir.schema["dst"].dataType
     )
     t = int(tri.collect()[0]["t"] or 0)
     return _census_summary(spark, m_edges, wedges, t)

@@ -17,11 +17,15 @@ a chain of checkpointed tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.operators.dedup import (
+    both_ways,
+    connected_components,
     dedup_exact_keep_min,
+    minhash_lsh_pairs,
+    ngram_jaccard_pairs,
     word_shingles,
 )
 from pyspark_analytics_library_spark.operators.text import tokenize
@@ -152,6 +156,20 @@ def q_pipeline_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _content_split() -> Column:
+    """The deterministic content-hash split of a document's ``text``:
+    'train' / 'val' / 'test' by the first sha256 hex nibble (0-b / c-d /
+    e-f, ≈75/12.5/12.5).  A pure function of content, so it is stable
+    across reruns, cluster sizes and partitionings, and a re-ingested
+    duplicate always lands in the same split."""
+    nibble = F.substring(F.sha2(F.col("text"), 256), 1, 1)
+    return (
+        F.when(nibble.between("0", "b"), "train")
+        .when(nibble.isin("c", "d"), "val")
+        .otherwise("test")
+    )
+
+
 @query(
     "pipeline_train_split",
     oracle="""
@@ -173,27 +191,18 @@ def q_pipeline_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_pipeline_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic content-hash train/val/test split (≈75/12.5/12.5
-    by the first sha256 nibble), summarized per (lang, split).
+    """Deterministic content-hash train/val/test split
+    (:func:`_content_split`), summarized per (lang, split).
 
-    The standard training-pipeline split discipline: assignment is a
-    pure function of content, so it is stable across reruns, cluster
-    sizes, and partitionings — no RNG, no seed coordination across
-    1000 executors, and a re-ingested duplicate document always lands
-    in the same split (no train/test leakage from re-crawls). The
-    hash is computed scan-side and aggregates map-side; nothing
-    shuffles except the tiny (lang, split) rollup.
+    No RNG and no seed coordination across executors, so re-crawled
+    duplicates cannot leak from train into test.  The hash is computed
+    scan-side and aggregates map-side; nothing shuffles except the tiny
+    (lang, split) rollup.
     """
     t = load_tables(spark, sf_dir)
-    nibble = F.substring(F.sha2(F.col("text"), 256), 1, 1)
-    split = (
-        F.when(nibble.between("0", "b"), "train")
-        .when(nibble.isin("c", "d"), "val")
-        .otherwise("test")
-    )
     return (
         t["documents"]
-        .select("lang", "n_chars", split.alias("split"))
+        .select("lang", "n_chars", _content_split().alias("split"))
         .groupBy("lang", "split")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -334,14 +343,8 @@ def q_pipeline_contamination_check(spark: SparkSession, sf_dir: str) -> DataFram
     Output is per-language counts, so nothing document-sized leaves
     the executors."""
     t = load_tables(spark, sf_dir)
-    nibble = F.substring(F.sha2(F.col("text"), 256), 1, 1)
-    split = (
-        F.when(nibble.between("0", "b"), "train")
-        .when(nibble.isin("c", "d"), "val")
-        .otherwise("test")
-    )
     docs = t["documents"].select(
-        "doc_id", "lang", split.alias("split"), F.lower(F.col("text")).alias("text")
+        "doc_id", "lang", _content_split().alias("split"), F.lower(F.col("text")).alias("text")
     )
     grams = docs.select(
         "doc_id",
@@ -525,46 +528,19 @@ def q_pipeline_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang", "source")
 
 
-@query("pipeline_fuzzy_dedup", tags=("rows-only",))  # LSH: xxhash64 absent in DuckDB
-def q_pipeline_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END fuzzy dedup — the seam a real 100 TB corpus run
-    exercises as ONE plan: MinHash-LSH candidate
-    pairs (:func:`..dedup.minhash_lsh_pairs`, verified Jaccard ≥ 0.4)
-    → connected components over the pair graph
-    (:func:`..dedup.connected_components` — transitivity merges
-    (a,b),(b,c) into one group even though (a,c) never scored) →
-    keeper = the min-doc_id representative of each component
-    (singletons keep themselves: their label IS their id) → per-lang
-    yield accounting, attributed to each document's OWN language —
-    removed docs in a cross-language component count under their own
-    lang, not the keeper's — so the global identity
-    sum(n_kept) + sum(n_removed) = corpus size holds even when an LSH
-    component spans languages.
-
-    Rows-only: the LSH stage hashes with xxhash64, which DuckDB 1.0.0
-    lacks (SURVEY §5.3.5 exclusion class) — but the result is fully
-    DETERMINISTIC (fixed per-hash salts), and
-    tests/test_properties.py::test_fuzzy_dedup_composite_matches_python_closure
-    re-derives the entire composite from the collected pair list with
-    an independent union-find and asserts exact equality.
-
-    Scale posture: LSH banding is an equi-join on (band_id, band_hash)
-    buckets — no O(n²) stage; the CC loop is the per-round-checkpointed
-    group-min hash-to-min (O(log n) rounds, plan+stats cut each round);
-    the final rollup is one shuffle on lang.  Each stage inherits the
-    skew/AQE posture its module documents.
-    """
-    from pyspark_analytics_library_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
+def _dedup_yield(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Per-lang dedup yield of near-dup ``pairs`` (id_a, id_b) over
+    ``docs`` (doc_id, lang): connected components over the pair graph
+    (transitivity merges (a,b),(b,c) into one group even though (a,c)
+    never scored), keeper = the min-doc_id member of each component
+    (singletons keep themselves), then n_docs / n_kept / n_removed /
+    dup_rate per language.  Each document counts under its OWN lang, so
+    sum(n_kept) + sum(n_removed) = corpus size even when a component
+    spans languages."""
+    lab = connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
+        docs.select(F.col("doc_id").alias("v")),
     )
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select("doc_id", "text", "lang")
-    pairs = minhash_lsh_pairs(docs)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    verts = docs.select(F.col("doc_id").alias("v"))
-    lab = connected_components(edges, verts)
     labeled = docs.select("doc_id", "lang").join(
         lab, docs.doc_id == lab.v
     ).select("doc_id", "lang", F.col("label").alias("component"))
@@ -583,6 +559,31 @@ def q_pipeline_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("lang")
     )
+
+
+@query("pipeline_fuzzy_dedup", tags=("rows-only",))  # LSH: xxhash64 absent in DuckDB
+def q_pipeline_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """END-TO-END fuzzy dedup — the seam a real 100 TB corpus run
+    exercises as ONE plan: MinHash-LSH candidate
+    pairs (:func:`..dedup.minhash_lsh_pairs`, verified Jaccard ≥ 0.4)
+    → connected components → min-id keepers → per-lang yield
+    (:func:`_dedup_yield`).
+
+    Rows-only: the LSH stage hashes with xxhash64, which DuckDB 1.0.0
+    lacks (SURVEY §5.3.5 exclusion class) — but the result is fully
+    DETERMINISTIC (fixed per-hash salts), and
+    tests/test_properties.py::test_fuzzy_dedup_composite_matches_python_closure
+    re-derives the entire composite from the collected pair list with
+    an independent union-find and asserts exact equality.
+
+    Scale posture: LSH banding is an equi-join on (band_id, band_hash)
+    buckets — no O(n²) stage; the CC loop is the per-round-checkpointed
+    group-min hash-to-min (O(log n) rounds, plan+stats cut each round);
+    the final rollup is one shuffle on lang.  Each stage inherits the
+    skew/AQE posture its module documents.
+    """
+    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text", "lang")
+    return _dedup_yield(docs, minhash_lsh_pairs(docs))
 
 
 @query(
@@ -648,35 +649,8 @@ def q_pipeline_fuzzy_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n-gram pairs are within-language by construction, so components
     never span langs and the per-lang attribution is exact."""
-    from pyspark_analytics_library_spark.operators.dedup import (
-        connected_components,
-        ngram_jaccard_pairs,
-    )
-
-    t = load_tables(spark, sf_dir)
-    docs = t["documents"].select("doc_id", "text", "lang")
-    pairs = ngram_jaccard_pairs(docs)
-    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    verts = docs.select(F.col("doc_id").alias("v"))
-    lab = connected_components(edges, verts)
-    labeled = docs.select("doc_id", "lang").join(
-        lab, docs.doc_id == lab.v
-    ).select("doc_id", "lang", F.col("label").alias("component"))
-    kept = F.sum(
-        F.when(F.col("doc_id") == F.col("component"), 1).otherwise(0)
-    )
-    return (
-        labeled.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            kept.alias("n_kept"),
-            (F.count(F.lit(1)) - kept).alias("n_removed"),
-            F.round(
-                (F.count(F.lit(1)) - kept) / F.count(F.lit(1)), 4
-            ).alias("dup_rate"),
-        )
-        .orderBy("lang")
-    )
+    docs = load_tables(spark, sf_dir)["documents"].select("doc_id", "text", "lang")
+    return _dedup_yield(docs, ngram_jaccard_pairs(docs))
 
 
 @query("pipeline_fuzzy_contamination", tags=("rows-only",))  # LSH: xxhash64
@@ -689,9 +663,8 @@ def q_pipeline_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     eval leakage (reworded prompts, whitespace/punct variants); this is
     the check an LLM eval pipeline runs alongside the exact one.
 
-    Same deterministic sha-nibble content split as the exact twin
-    (train 0–b, val c–d, test e–f), so the two audits grade the same
-    partition of the corpus.  Rows-only at the driver (LSH/xxhash64 —
+    Same content split as the exact twin (:func:`_content_split`), so
+    the two audits grade the same partition of the corpus.  Rows-only at the driver (LSH/xxhash64 —
     SURVEY §5.3.5);
     tests/test_properties.py::test_fuzzy_contamination_matches_python_twin
     re-derives the result from the collected pair list exactly.
@@ -701,31 +674,12 @@ def q_pipeline_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFram
     corpus-sized sides, merge-hinted against the static planner's
     broadcast misestimate.  The per-lang rollup is one shuffle.
     """
-    from pyspark_analytics_library_spark.operators.dedup import minhash_lsh_pairs
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"].select("doc_id", "text", "lang")
-    nibble = F.substring(F.sha2(F.col("text"), 256), 1, 1)
-    tagged = docs.withColumn(
-        "split",
-        F.when(nibble.between("0", "b"), "train")
-        .when(nibble.isin("c", "d"), "val")
-        .otherwise("test"),
-    )
+    tagged = docs.withColumn("split", _content_split())
     tags = tagged.select("doc_id", "split")
-    pairs = minhash_lsh_pairs(docs)
     # Each verified pair, both directions: (x, y) = x near-dups y.
-    # Row-local explode, not a two-branch union: a union references the
-    # pairs plan twice, so the ENTIRE LSH verify stage would run as two
-    # physical subtrees.
-    ends = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias("x"), F.col("id_b").alias("y")),
-                F.struct(F.col("id_b").alias("x"), F.col("id_a").alias("y")),
-            )
-        ).alias("_e")
-    ).select("_e.x", "_e.y")
+    ends = both_ways(minhash_lsh_pairs(docs), "id_a", "id_b", "x", "y")
     hits = (
         ends.join(
             tags.hint("merge").select(F.col("doc_id").alias("x"), F.col("split").alias("sx")),
@@ -829,23 +783,12 @@ def q_pipeline_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     would swap in the LSH generator exactly as the fuzzy twins do.
     Side membership joins are corpus-sized → merge-hinted.
     """
-    from pyspark_analytics_library_spark.operators.dedup import ngram_jaccard_pairs
-
     t = load_tables(spark, sf_dir)
     docs = t["documents"]
     is_new = F.col("source").isin("src18", "src19")
     pairs = ngram_jaccard_pairs(docs.select("doc_id", "text", "lang"))
     membership = docs.select("doc_id", is_new.alias("is_new"))
-    # Row-local explode, not a two-branch union (see the fuzzy
-    # contamination twin): one physical ngram candidate stage.
-    ends = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(F.col("id_a").alias("x"), F.col("id_b").alias("y")),
-                F.struct(F.col("id_b").alias("x"), F.col("id_a").alias("y")),
-            )
-        ).alias("_e")
-    ).select("_e.x", "_e.y")
+    ends = both_ways(pairs, "id_a", "id_b", "x", "y")
     rejected = (
         ends.join(
             membership.hint("merge").select(

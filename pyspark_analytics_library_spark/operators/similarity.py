@@ -60,7 +60,7 @@ class IndexTooLargeError(RuntimeError):
     the sharded paths (`sim_ivf_approx` / `sim_lsh_approx`)."""
 
 
-def build_index(spark: SparkSession, e: DataFrame, max_bytes: int | None = None):
+def build_index(spark: SparkSession, e: DataFrame):
     """Collect + broadcast the (ids, L2-normalized matrix, labels)
     index.  The ONE documented driver materialization in the package:
     valid while the index fits a broadcast (GBs); beyond that, shard.
@@ -69,8 +69,7 @@ def build_index(spark: SparkSession, e: DataFrame, max_bytes: int | None = None)
     IndexTooLargeError over the cap (conf ``spark.analytics.sim.
     maxIndexBytes``, default 2 GiB) — an eager, explainable error instead
     of a silent driver OOM deep into a 100 TB job."""
-    if max_bytes is None:
-        max_bytes = conf.get(spark, "spark.analytics.sim.maxIndexBytes")
+    max_bytes = conf.get(spark, "spark.analytics.sim.maxIndexBytes")
     # Two cheap probes, not one full scan: dim from a single-row take
     # (reads one Arrow batch), row count from count() (metadata-only on
     # a plain Parquet scan).  max(size(embedding)) would read the widest
@@ -89,8 +88,7 @@ def build_index(spark: SparkSession, e: DataFrame, max_bytes: int | None = None)
     pdf = e.toPandas()
     ids = pdf["vec_id"].to_numpy()
     if len(pdf):
-        mat = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        mat /= _safe_norm(mat)
+        mat = _unit_rows(pdf["embedding"])
     else:
         # Empty corpus (a filter matched nothing): dim probes 0 here, so
         # this is a (0, 0) matrix — every kernel early-returns on the
@@ -108,6 +106,15 @@ def _safe_norm(m: "np.ndarray") -> "np.ndarray":
     vectors — this guards user data)."""
     norm = np.linalg.norm(m, axis=1, keepdims=True)
     return np.where(norm == 0.0, 1.0, norm)
+
+
+def _unit_rows(col: "pd.Series") -> "np.ndarray":
+    """A non-empty column of embedding arrays as a float64 matrix of
+    L2-unit rows; every cosine kernel scores through this, so a
+    zero-norm row scores 0 on every path (:func:`_safe_norm`)."""
+    m = np.stack(col.to_numpy()).astype(np.float64)
+    m /= _safe_norm(m)
+    return m
 
 
 def brute_topk(e: DataFrame, bc, k: int = 5, with_labels: bool = False) -> DataFrame:
@@ -131,9 +138,7 @@ def brute_topk(e: DataFrame, bc, k: int = 5, with_labels: bool = False) -> DataF
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            A /= _safe_norm(A)
-            S = np.round(A @ M.T, 6)
+            S = np.round(_unit_rows(pdf["embedding"]) @ M.T, 6)
             a_ids = pdf["vec_id"].to_numpy()
             S[a_ids[:, None] == ids_b[None, :]] = -np.inf  # exclude self
             key = -S + id_bias[None, :]
@@ -165,9 +170,7 @@ def brute_threshold_pairs(e: DataFrame, bc, tau: float) -> DataFrame:
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            A /= _safe_norm(A)
-            S = np.round(A @ M.T, 6)
+            S = np.round(_unit_rows(pdf["embedding"]) @ M.T, 6)
             a_ids = pdf["vec_id"].to_numpy()
             mask = (S > tau) & (a_ids[:, None] < ids_b[None, :])
             ai, bi = np.nonzero(mask)
@@ -384,11 +387,7 @@ def train_ivf_centroids(e: DataFrame, k: int = _IVF_CELLS, iters: int = 10, samp
     :func:`_bounded_hash_sample` — deterministic AND driver-bounded at
     any partition count.
     """
-    pdf = _bounded_hash_sample(e, sample)
-    M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-    norms = np.linalg.norm(M, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0  # zero-norm guard: keep the row, avoid NaN
-    M /= norms
+    M = _unit_rows(_bounded_hash_sample(e, sample)["embedding"])
     rng = np.random.RandomState(7)
     C = M[rng.choice(len(M), size=min(k, len(M)), replace=False)].copy()
     for _ in range(iters):
@@ -397,9 +396,7 @@ def train_ivf_centroids(e: DataFrame, k: int = _IVF_CELLS, iters: int = 10, samp
             members = M[assign == j]
             if len(members):
                 C[j] = members.mean(axis=0)
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        cn[cn == 0] = 1.0
-        C /= cn
+        C /= _safe_norm(C)
     return C
 
 
@@ -412,9 +409,7 @@ def _assign_cells(C: np.ndarray, nprobe: int):
         for pdf in batches:
             if not len(pdf):
                 continue
-            A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            A /= _safe_norm(A)
-            cells = np.argsort(-(A @ C.T), axis=1)[:, :nprobe]
+            cells = np.argsort(-(_unit_rows(pdf["embedding"]) @ C.T), axis=1)[:, :nprobe]
             yield pd.DataFrame(
                 {
                     "vec_id": np.repeat(pdf["vec_id"].to_numpy(), nprobe),
@@ -456,11 +451,7 @@ def q_sim_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cos": "float64"}
             )
-        Q = np.stack(qdf["embedding"].to_numpy()).astype(np.float64)
-        Q /= np.linalg.norm(Q, axis=1, keepdims=True)
-        I = np.stack(idf["embedding"].to_numpy()).astype(np.float64)
-        I /= np.linalg.norm(I, axis=1, keepdims=True)
-        S = np.round(Q @ I.T, 6)
+        S = np.round(_unit_rows(qdf["embedding"]) @ _unit_rows(idf["embedding"]).T, 6)
         q_ids = qdf["vec_id"].to_numpy()
         i_ids = idf["vec_id"].to_numpy()
         S[q_ids[:, None] == i_ids[None, :]] = -np.inf
@@ -528,8 +519,7 @@ def q_sim_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
             return empty
         pdf = pdf.sort_values("vec_id")  # positional < ⇒ vec_id <
         ids = pdf["vec_id"].to_numpy()
-        E = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        E /= np.linalg.norm(E, axis=1, keepdims=True)
+        E = _unit_rows(pdf["embedding"])
         cols = np.arange(n)
         out = []
         block = 2048

@@ -45,7 +45,6 @@ is the unsalted/unbucketed SQL):
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -53,7 +52,7 @@ from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.functions.coercion import ensure_columns
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables, scratch_path
+from pyspark_analytics_library_spark.sources.io import load_tables, scratch_path, sf_digest
 
 DEFAULT_BUCKETS = 16
 
@@ -171,13 +170,6 @@ def q_join_salted_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUCKETED: set[tuple[str, str]] = set()
 
 
-def _sf_suffix(sf_dir: str) -> str:
-    """Stable digest of sf_dir for table names — NOT builtin hash(), which
-    collapses to one value across processes when PYTHONHASHSEED is fixed
-    (common in Spark deployments) and varies per-process otherwise."""
-    return hashlib.sha256(sf_dir.encode()).hexdigest()[:8]
-
-
 def write_bucketed(
     df: DataFrame,
     spark: SparkSession,
@@ -205,7 +197,7 @@ def write_bucketed(
 
 
 def _ensure_bucketed_orders_lineitem(spark: SparkSession, sf_dir: str) -> None:
-    suffix = _sf_suffix(sf_dir)
+    suffix = sf_digest(sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
     # Belt and braces: even on a cache hit, verify the tables still exist
     # in this session's catalog before skipping the write.
@@ -231,7 +223,7 @@ def bucketed_join_pair(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The raw bucketed join (pre-aggregation) — used by the plan test
     to assert there is no Exchange under the SortMergeJoin."""
     _ensure_bucketed_orders_lineitem(spark, sf_dir)
-    suffix = _sf_suffix(sf_dir)
+    suffix = sf_digest(sf_dir)
     li = spark.table(f"lineitem_b{suffix}")
     orders = spark.table(f"orders_b{suffix}")
     # merge hint: at fixture scale the planner would broadcast the tiny

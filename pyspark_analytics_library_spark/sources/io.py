@@ -14,6 +14,7 @@ or a partitioned table root; nothing here assumes a single file.
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
 import shutil
 import tempfile
@@ -49,6 +50,10 @@ TABLES = (
 # dead one.
 _CACHE: dict[tuple[str, str], dict[str, DataFrame]] = {}
 
+
+#: Shuffle partitions the loader sets on a local master that left Spark's
+#: 200 default untouched (see :func:`_configure`).
+LOADER_SHUFFLE_PARTITIONS = "32"
 
 #: applicationIds the package zip has already been shipped to.
 _SHIPPED: set[str] = set()
@@ -138,7 +143,7 @@ def _configure(spark: SparkSession) -> None:
         conf.is_local_master(spark)
         and spark.conf.get("spark.sql.shuffle.partitions", "200") == "200"
     ):
-        spark.conf.set("spark.sql.shuffle.partitions", "32")
+        spark.conf.set("spark.sql.shuffle.partitions", LOADER_SHUFFLE_PARTITIONS)
     _ship_package(spark)
 
 
@@ -209,6 +214,14 @@ def load_tables(
         for name, df in _CACHE[key].items():
             df.createOrReplaceTempView(name)
     return _CACHE[key]
+
+
+def sf_digest(sf_dir: str) -> str:
+    """Stable 8-hex-digit key for artifacts staged per fixture dir (scratch
+    leaves, bucketed table names): a digest of the full normalized path, so
+    two dirs sharing a basename never share an artifact, and not builtin
+    ``hash()``, which varies per process unless PYTHONHASHSEED is fixed."""
+    return hashlib.sha256(os.path.normpath(sf_dir).encode()).hexdigest()[:8]
 
 
 # ---------------------------------------------------------------------------
@@ -449,6 +462,17 @@ def fs_delete(spark: SparkSession, path: str) -> None:
         fs.delete(hpath, True)
     except Exception:  # cleanup must never fail the computation
         pass
+
+
+def materialize(df: DataFrame, path: str, files: int | None = None) -> DataFrame:
+    """Write ``df`` to parquet at ``path`` (overwriting), coalesced to
+    ``files`` files when given, and re-read it.  The re-read frame cuts
+    the plan and carries exact size statistics, so an iterative or
+    multi-consumer stage runs the caller's plan once.  It is read with
+    ``df``'s own schema, which skips the reader's footer-based schema
+    inference (~70 ms of driver work per reader build)."""
+    (df if files is None else df.coalesce(files)).write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def reclaim_iteration_scratch(

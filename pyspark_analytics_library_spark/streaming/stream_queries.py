@@ -14,7 +14,6 @@ and the late-data splits stage files under the process's scratch root
 
 from __future__ import annotations
 
-import hashlib
 import math
 import os
 import shutil
@@ -31,22 +30,15 @@ from pyspark_analytics_library_spark.sources.io import (
     load_tables,
     local_scratch_path,
     scratch_path,
+    sf_digest,
 )
-
-def _sf_key(sf_dir: str) -> str:
-    """Scratch leaf key for a fixture dir: a digest of the FULL path, not
-    just its basename, so two fixture dirs sharing a basename stage
-    disjoint leaves."""
-    sf_norm = os.path.normpath(sf_dir)
-    digest = hashlib.md5(sf_norm.encode()).hexdigest()[:8]
-    return f"{os.path.basename(sf_norm)}_{digest}"
 
 
 def _staged_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """The file streaming source requires a *directory*; stage one in
     scratch containing a symlink to the (read-only) events parquet.  The
     scratch root is per-process, so a staged link is never re-pointed."""
-    d = local_scratch_path(spark, f"stream_src_{_sf_key(sf_dir)}")
+    d = local_scratch_path(spark, f"stream_src_{sf_digest(sf_dir)}")
     os.makedirs(d, exist_ok=True)
     try:
         os.symlink(
@@ -389,7 +381,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     ages the filter watermark past the late rows before they arrive."""
     base = load_tables(spark, sf_dir, register_views=False)["events"]
     # Within one process the staging is reused.
-    split_dir = local_scratch_path(spark, f"late_stream_{_sf_key(sf_dir)}")
+    split_dir = local_scratch_path(spark, f"late_stream_{sf_digest(sf_dir)}")
     cutoff = "2024-01-10 00:00:00"
     mid = "2024-01-20 00:00:00"
     cutoff_col = F.lit(cutoff).cast("timestamp")

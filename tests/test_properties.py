@@ -44,11 +44,8 @@ def test_build_index_guard_trips(spark):
     from pyspark_analytics_library_spark.sources.io import load_tables
 
     e = load_tables(spark, TEST_SF_DIR)["embeddings"].select("vec_id", "embedding")
-    with pytest.raises(IndexTooLargeError, match="sim_ivf_approx"):
-        build_index(spark, e, max_bytes=1024)
-    # conf-driven cap takes effect when max_bytes is not passed
     with scoped_conf(spark, {"spark.analytics.sim.maxIndexBytes": 1024}):
-        with pytest.raises(IndexTooLargeError):
+        with pytest.raises(IndexTooLargeError, match="sim_ivf_approx"):
             build_index(spark, e)
     # and the default cap admits the fixture index
     assert build_index(spark, e) is not None
@@ -1033,6 +1030,39 @@ def test_similarity_kernel_degenerate_inputs(spark):
     )
     rows = brute_threshold_pairs(withzero, build_index(spark, withzero), tau=-1.0).collect()
     assert [(r["id_a"], r["id_b"], r["cos"]) for r in rows] == [(1, 2, 0.0)]
+
+
+def test_ivf_zero_norm_query_scores_cosine_zero(spark, tmp_path):
+    """A zero-norm embedding scores cosine 0 on the IVF path too, as on
+    the exact path: its query keeps a full top-5 of cosine-0 neighbours
+    instead of NaN scores that drop every candidate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pyspark_analytics_library_spark.sources.io import TABLES, load_tables
+
+    for name in TABLES:
+        if name != "embeddings":
+            os.symlink(
+                os.path.join(TEST_SF_DIR, f"{name}.parquet"),
+                tmp_path / f"{name}.parquet",
+            )
+    emb = pq.read_table(os.path.join(TEST_SF_DIR, "embeddings.parquet"))
+    vecs = emb.column("embedding").to_pylist()
+    zero_id = emb.column("vec_id")[0].as_py()
+    vecs[0] = [0.0] * len(vecs[0])
+    emb = emb.set_column(
+        emb.schema.get_field_index("embedding"),
+        emb.schema.field("embedding"),
+        pa.array(vecs, type=emb.schema.field("embedding").type),
+    )
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+    try:
+        rows = REGISTRY["sim_ivf_approx"].fn(spark, str(tmp_path)).collect()
+    finally:
+        load_tables(spark, TEST_SF_DIR)  # re-point the session's views
+    cos = [r["cos"] for r in rows if r["id_a"] == zero_id]
+    assert cos == [0.0] * 5, cos
 
 
 def test_ensure_columns_treats_bare_string_as_one_column(spark):

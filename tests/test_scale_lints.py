@@ -286,3 +286,48 @@ def test_lakehouse_commits_through_one_path():
     ]
     assert committers == ["_commit"], f"commit through _commit: {committers}"
     assert set(parsers) == {"_schema"}, f"parse the manifest schema with _schema: {parsers}"
+
+
+def _two_struct_explodes(src: str) -> list[str]:
+    """Top-level functions that explode a literal two-struct array
+    (``explode(array(struct(...), struct(...)))``)."""
+
+    def name(node):
+        return isinstance(node, ast.Call) and getattr(node.func, "attr", None)
+
+    return [
+        fn.name
+        for fn in ast.parse(src).body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if name(node) == "explode"
+        and name(node.args[0]) == "array"
+        and len(node.args[0].args) == 2
+        and all(name(a) == "struct" for a in node.args[0].args)
+    ]
+
+
+def test_llm_stages_spelled_once():
+    """Each LLM-data stage has one spelling, so copies cannot drift:
+    embeddings are L2-normalized through ``similarity._safe_norm`` (the
+    zero-norm guard), the content split hashes in
+    ``pipeline._content_split``, stages are written and re-read through
+    ``io.materialize``, and both directions of a pair list come from
+    ``dedup.both_ways``."""
+    norms, explodes, schema_reads = [], [], []
+    for rel, src in _package_sources():
+        calls = _calls_by_function(src)
+        norms += [(rel, fn) for fn, names in calls.items() if "norm" in names]
+        explodes += [(rel, fn) for fn in _two_struct_explodes(src)]
+        if rel.startswith("operators/") and "read.schema(" in _code_only(src):
+            schema_reads.append(rel)
+        if rel == "operators/pipeline.py":
+            hashers = [fn for fn, names in calls.items() if "sha2" in names]
+    assert norms == [("operators/similarity.py", "_safe_norm")], (
+        f"normalize embeddings with similarity._unit_rows / _safe_norm: {norms}"
+    )
+    assert hashers == ["_content_split"], f"split by pipeline._content_split: {hashers}"
+    assert schema_reads == [], f"write and re-read a stage with io.materialize: {schema_reads}"
+    assert explodes == [("operators/dedup.py", "both_ways")], (
+        f"symmetrize pair lists with dedup.both_ways: {explodes}"
+    )
