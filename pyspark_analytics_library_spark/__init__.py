@@ -14,7 +14,7 @@ Design stance (SURVEY.md §7):
 """
 
 from pyspark_analytics_library_spark.registry import REGISTRY, query, QuerySpec
-from pyspark_analytics_library_spark.sources.io import load_tables, TABLES
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views, TABLES
 from pyspark_analytics_library_spark.session import get_spark
 from pyspark_analytics_library_spark.functions.coercion import (
     ensure_column,
@@ -71,6 +71,7 @@ __all__ = [
     "QuerySpec",
     "query",
     "load_tables",
+    "register_views",
     "TABLES",
     "get_spark",
     "ensure_column",

@@ -18,8 +18,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark import conf
+from pyspark_analytics_library_spark.functions.coercion import ensure_column
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 def _r(col: Column | str, scale: int = 4) -> Column:
@@ -41,15 +42,13 @@ def money(col: Column | str) -> Column:
     disagree on ~6e-4 of rows by ±1e-8 — hence rule 12 casts OPERANDS,
     not products.)
     """
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast("decimal(12,2)")
+    return ensure_column(col).cast("decimal(12,2)")
 
 
 def rate(col: Column | str) -> Column:
     """Cast a 2-dp rate column (discount/tax, |x| < 10) to
     DECIMAL(3,2) — exact and engine-identical; see :func:`money`."""
-    col = F.col(col) if isinstance(col, str) else col
-    return col.cast("decimal(3,2)")
+    return ensure_column(col).cast("decimal(3,2)")
 
 
 def one() -> Column:
@@ -307,7 +306,7 @@ _GROUPING_SETS_SQL = """
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS is SQL-only surface in Spark — entry point B
     (SURVEY.md §3): identical SQL text runs on both engines."""
-    load_tables(spark, sf_dir)  # registers temp views
+    register_views(spark, sf_dir, "customer", "nation")
     return spark.sql(_GROUPING_SETS_SQL)
 
 

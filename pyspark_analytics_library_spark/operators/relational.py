@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.functions.coercion import ensure_column, ensure_columns
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 # ---------------------------------------------------------------------------
@@ -552,7 +552,7 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-rank under the hood, so the physical plan is the same
     one-shuffle rank as win_topk_per_group, not a nested loop per
     customer row."""
-    load_tables(spark, sf_dir)  # registers the temp views
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, o_orderkey, o_totalprice

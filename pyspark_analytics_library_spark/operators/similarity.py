@@ -386,8 +386,14 @@ def train_ivf_centroids(e: DataFrame, k: int = _IVF_CELLS, iters: int = 10, samp
     (and the property tests) exact.  The sample itself comes from
     :func:`_bounded_hash_sample` — deterministic AND driver-bounded at
     any partition count.
+
+    An empty corpus trains no cells: the (0, 0) matrix is never scored,
+    because :func:`_assign_cells` skips empty batches.
     """
-    M = _unit_rows(_bounded_hash_sample(e, sample)["embedding"])
+    pdf = _bounded_hash_sample(e, sample)
+    if not len(pdf):
+        return np.zeros((0, 0), dtype=np.float64)
+    M = _unit_rows(pdf["embedding"])
     rng = np.random.RandomState(7)
     C = M[rng.choice(len(M), size=min(k, len(M)), replace=False)].copy()
     for _ in range(iters):

@@ -50,7 +50,7 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pyspark_analytics_library_spark.functions.coercion import ensure_columns
+from pyspark_analytics_library_spark.functions.coercion import ensure_column, ensure_columns
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables, scratch_path, sf_digest
 
@@ -60,8 +60,7 @@ DEFAULT_BUCKETS = 16
 def salt_column(unique_col: str | Column, buckets: int = DEFAULT_BUCKETS) -> Column:
     """Deterministic uniform salt in [0, buckets): hash of a unique
     column, not rand() — reruns and retried tasks agree."""
-    c = F.col(unique_col) if isinstance(unique_col, str) else unique_col
-    return F.pmod(F.hash(c), F.lit(buckets))
+    return F.pmod(F.hash(ensure_column(unique_col)), F.lit(buckets))
 
 
 def salted_sum_count(

@@ -4,9 +4,9 @@ Capability parity: the reference's query-language entry points
 (snapshot empty — SURVEY.md §0.1; the §2 registry is the contract).
 Everything else in the package declares plans through the DataFrame
 API; this module pins the *other* public entry point — ``spark.sql``
-over registered temp views — plus the relational shapes that are only
-natural in SQL: scalar subqueries, correlated subqueries, and
-wide→long UNPIVOT.
+over the temp views ``io.register_views`` exposes — plus the
+relational shapes that are only natural in SQL: scalar subqueries,
+correlated subqueries, and wide→long UNPIVOT.
 
 Scale posture: ``spark.sql`` text compiles into the same Catalyst
 logical plans as the DataFrame API (scalar subqueries become
@@ -20,15 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
-
-
-def register_views(spark: SparkSession, sf_dir: str, tables: tuple[str, ...]) -> None:
-    """Expose fixture tables as session-scoped temp views under their
-    canonical names so SQL text is portable between engines."""
-    t = load_tables(spark, sf_dir)
-    for name in tables:
-        t[name].createOrReplaceTempView(name)
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 #: One SQL text, two engines: this exact string runs unmodified on
@@ -60,7 +52,7 @@ def q_sql_ansi_shared(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The oracle string IS the query: one shared-dialect SQL text
     executed by both engines.  Catalyst plans it identically to the
     equivalent DataFrame chain (pushed filter, partial agg, sort)."""
-    register_views(spark, sf_dir, ("lineitem",))
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(SHARED_ANSI_SQL)
 
 
@@ -88,7 +80,7 @@ def q_sql_subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.01, 37,430/150,000 at sf0.1), making
     the driver's value hash a real check.
     """
-    register_views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_custkey, o_totalprice
@@ -120,7 +112,7 @@ def q_sql_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial aggregate and one equi-join on the correlation key — the
     rewrite that makes correlated SQL viable at scale.
     """
-    register_views(spark, sf_dir, ("orders",))
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o.o_orderkey, o.o_custkey, o.o_totalprice

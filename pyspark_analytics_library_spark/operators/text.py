@@ -16,14 +16,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pyspark_analytics_library_spark.functions.coercion import ensure_column
 from pyspark_analytics_library_spark.registry import query
 from pyspark_analytics_library_spark.sources.io import load_tables
 
 
 def tokenize(text: str | Column = "text") -> Column:
     """Lowercased whitespace tokens (empty tokens dropped)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.filter(F.split(F.lower(c), " "), lambda w: w != "")
+    return F.filter(F.split(F.lower(ensure_column(text)), " "), lambda w: w != "")
 
 
 @query(

@@ -20,7 +20,7 @@ from pyspark.sql import types as T
 
 from pyspark_analytics_library_spark.functions.coercion import ensure_columns
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables
+from pyspark_analytics_library_spark.sources.io import load_tables, register_views
 
 
 def gapply(df: DataFrame, keys, func, schema) -> DataFrame:
@@ -33,8 +33,7 @@ def gapply(df: DataFrame, keys, func, schema) -> DataFrame:
     worker's memory — callers with skewed keys should pre-split (salt)
     or move to a built-in expression.
     """
-    cols = [c if isinstance(c, str) else c for c in (keys if isinstance(keys, list) else [keys])]
-    return df.groupBy(*ensure_columns(cols)).applyInPandas(func, schema)
+    return df.groupBy(*ensure_columns(keys)).applyInPandas(func, schema)
 
 
 _BAND_SQL_CASE = """
@@ -253,7 +252,7 @@ def q_udtf_table_fn(spark: SparkSession, sf_dir: str) -> DataFrame:
     relational unnest computes the identical row set; the oracle
     verifies the UDTF *result*, not its mechanism (same stance as the
     udf_* CASE oracles)."""
-    load_tables(spark, sf_dir)
+    register_views(spark, sf_dir, "documents")
 
     @F.udtf(returnType="word: string, word_len: int")
     class SplitWords:

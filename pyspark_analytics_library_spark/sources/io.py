@@ -197,23 +197,25 @@ def _normalize_ts(df: DataFrame, col: str = "ts", target: str = "timestamp") -> 
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, register_views: bool = True
-) -> dict[str, DataFrame]:
-    """Load all fixture tables; optionally register them as temp views.
-
-    Returns a dict of lazy DataFrames.  Cached per (session, sf_dir).
-    """
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    """Load all fixture tables as lazy DataFrames, cached per (session,
+    sf_dir).  Changes no catalog state: SQL text that reads a fixture
+    table names it through :func:`register_views`."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _CACHE:
         _CACHE[key] = {name: load_table(spark, sf_dir, name) for name in TABLES}
-    if register_views:
-        # Re-register on every call: the session-global view names must
-        # track the *requested* sf_dir even when callers alternate
-        # between scale factors (entry() at sf0.001, queries at sf0.01).
-        for name, df in _CACHE[key].items():
-            df.createOrReplaceTempView(name)
     return _CACHE[key]
+
+
+def register_views(spark: SparkSession, sf_dir: str, *tables: str) -> None:
+    """Expose the named fixture tables to SQL text as session temp views
+    under their canonical names, so one SQL string runs on Spark and on
+    DuckDB alike.  Re-registered on every call: the session-global view
+    names must track the *requested* sf_dir even when callers alternate
+    between scale factors (entry() at sf0.001, queries at sf0.01)."""
+    t = load_tables(spark, sf_dir)
+    for name in tables:
+        t[name].createOrReplaceTempView(name)
 
 
 def sf_digest(sf_dir: str) -> str:

@@ -102,7 +102,7 @@ def _assert_stream_covers_events(
     semantics, not just that a job ran.  One count aggregate on the
     batch side; the streamed total comes from the already-materialized
     sink."""
-    batch_events = load_tables(spark, sf_dir, register_views=False)["events"].count()
+    batch_events = load_tables(spark, sf_dir)["events"].count()
     if streamed_events != batch_events:
         raise AssertionError(
             f"{what}: stream processed {streamed_events} events, "
@@ -315,7 +315,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
     name, s = run_to_memory(shape(ev), "complete")
-    batch = shape(load_tables(spark, sf_dir, register_views=False)["events"])
+    batch = shape(load_tables(spark, sf_dir)["events"])
     return _attest_parity(s.table(name), batch, "stream_tumbling")
 
 
@@ -335,7 +335,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
     name, s = run_to_memory(shape(ev), "complete")
-    batch = shape(load_tables(spark, sf_dir, register_views=False)["events"])
+    batch = shape(load_tables(spark, sf_dir)["events"])
     return _attest_parity(s.table(name), batch, "stream_sliding")
 
 
@@ -357,7 +357,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = stream_events(spark, sf_dir).withWatermark("ts", "10 minutes")
     name, s = run_to_memory(shape(ev), "complete")
-    batch = shape(load_tables(spark, sf_dir, register_views=False)["events"])
+    batch = shape(load_tables(spark, sf_dir)["events"])
     return _attest_parity(s.table(name), batch, "stream_session")
 
 
@@ -379,7 +379,7 @@ def q_stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ever dropped — the original two-file version of this query
     demonstrated only final-window holdback.  A middle on-time batch
     ages the filter watermark past the late rows before they arrive."""
-    base = load_tables(spark, sf_dir, register_views=False)["events"]
+    base = load_tables(spark, sf_dir)["events"]
     # Within one process the staging is reused.
     split_dir = local_scratch_path(spark, f"late_stream_{sf_digest(sf_dir)}")
     cutoff = "2024-01-10 00:00:00"
@@ -490,7 +490,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup = doubled.dropDuplicatesWithinWatermark(["event_id"])
     name, s = run_to_memory(shape(dedup), "complete")
     # deduped double-stream == the original event set, exactly
-    batch = shape(load_tables(spark, sf_dir, register_views=False)["events"])
+    batch = shape(load_tables(spark, sf_dir)["events"])
     return _attest_parity(s.table(name), batch, "stream_dedup")
 
 
@@ -585,7 +585,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py checks parity against the all-batch twin.
     """
     ev = stream_events(spark, sf_dir)
-    batch_events = load_tables(spark, sf_dir, register_views=False)["events"]
+    batch_events = load_tables(spark, sf_dir)["events"]
     static = batch_events.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("lifetime_events")
     )
@@ -646,7 +646,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name, s = run_to_memory(joined, "append")
     result = rollup(s.table(name)).orderBy("user_id")
-    bc_, bp_ = sides(load_tables(spark, sf_dir, register_views=False)["events"])
+    bc_, bp_ = sides(load_tables(spark, sf_dir)["events"])
     return _attest_parity(
         result, rollup(join_and_rollup(bc_, bp_)), "stream_stream_join"
     )

@@ -215,5 +215,5 @@ def test_loader_session_writes_persist_after_load_tables(spark, monkeypatch):
     monkeypatch.setattr(io_mod, "_CACHE", {})
     nanos, zone = "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.session.timeZone"
     with unset_during(spark, nanos, zone, SHUFFLE):
-        io_mod.load_tables(spark, TEST_SF_DIR, register_views=False)
+        io_mod.load_tables(spark, TEST_SF_DIR)
         assert [spark.conf.get(k) for k in (nanos, zone, SHUFFLE)] == ["true", "UTC", "32"]

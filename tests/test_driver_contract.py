@@ -44,8 +44,20 @@ def _assert_boundary_has_no_complex_columns(df, name: str) -> None:
     )
 
 
+def _temp_views(spark) -> list[str]:
+    return [t.name for t in spark.catalog.listTables() if t.isTemporary]
+
+
+def _drop_temp_views(spark) -> None:
+    for name in _temp_views(spark):
+        spark.catalog.dropTempView(name)
+
+
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
 def test_query_matches_oracle(spark, oracle, name):
+    # No query may rely on a temp view an earlier call left behind: SQL
+    # text names its own tables through io.register_views.
+    _drop_temp_views(spark)
     spec = REGISTRY[name]
     df = spec.fn(spark, TEST_SF_DIR)
     _assert_boundary_has_no_complex_columns(df, name)
@@ -60,6 +72,18 @@ def test_rows_only_query_runs(spark, name):
     assert df.columns, f"[{name}] produced no columns"
     _assert_boundary_has_no_complex_columns(df, name)
     assert df.count() >= 0
+
+
+def test_load_tables_registers_no_views(spark, monkeypatch):
+    """Loading the fixture tables builds frames and changes no catalog
+    state, cold cache or warm."""
+    from pyspark_analytics_library_spark.sources import io as io_mod
+
+    monkeypatch.setattr(io_mod, "_CACHE", {})
+    _drop_temp_views(spark)
+    io_mod.load_tables(spark, TEST_SF_DIR)
+    io_mod.load_tables(spark, TEST_SF_DIR)
+    assert _temp_views(spark) == []
 
 
 def test_entry_smoke(spark):

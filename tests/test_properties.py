@@ -1032,14 +1032,12 @@ def test_similarity_kernel_degenerate_inputs(spark):
     assert [(r["id_a"], r["id_b"], r["cos"]) for r in rows] == [(1, 2, 0.0)]
 
 
-def test_ivf_zero_norm_query_scores_cosine_zero(spark, tmp_path):
-    """A zero-norm embedding scores cosine 0 on the IVF path too, as on
-    the exact path: its query keeps a full top-5 of cosine-0 neighbours
-    instead of NaN scores that drop every candidate."""
-    import pyarrow as pa
+def _sf_dir_with_embeddings(tmp_path, emb) -> str:
+    """A fixture dir under ``tmp_path`` whose embeddings table is the
+    Arrow table ``emb``; the other nine tables link to TEST_SF_DIR's."""
     import pyarrow.parquet as pq
 
-    from pyspark_analytics_library_spark.sources.io import TABLES, load_tables
+    from pyspark_analytics_library_spark.sources.io import TABLES
 
     for name in TABLES:
         if name != "embeddings":
@@ -1047,6 +1045,17 @@ def test_ivf_zero_norm_query_scores_cosine_zero(spark, tmp_path):
                 os.path.join(TEST_SF_DIR, f"{name}.parquet"),
                 tmp_path / f"{name}.parquet",
             )
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+    return str(tmp_path)
+
+
+def test_ivf_zero_norm_query_scores_cosine_zero(spark, tmp_path):
+    """A zero-norm embedding scores cosine 0 on the IVF path too, as on
+    the exact path: its query keeps a full top-5 of cosine-0 neighbours
+    instead of NaN scores that drop every candidate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     emb = pq.read_table(os.path.join(TEST_SF_DIR, "embeddings.parquet"))
     vecs = emb.column("embedding").to_pylist()
     zero_id = emb.column("vec_id")[0].as_py()
@@ -1056,13 +1065,46 @@ def test_ivf_zero_norm_query_scores_cosine_zero(spark, tmp_path):
         emb.schema.field("embedding"),
         pa.array(vecs, type=emb.schema.field("embedding").type),
     )
-    pq.write_table(emb, tmp_path / "embeddings.parquet")
-    try:
-        rows = REGISTRY["sim_ivf_approx"].fn(spark, str(tmp_path)).collect()
-    finally:
-        load_tables(spark, TEST_SF_DIR)  # re-point the session's views
+    sf_dir = _sf_dir_with_embeddings(tmp_path, emb)
+    rows = REGISTRY["sim_ivf_approx"].fn(spark, sf_dir).collect()
     cos = [r["cos"] for r in rows if r["id_a"] == zero_id]
     assert cos == [0.0] * 5, cos
+
+
+def test_ivf_empty_corpus_returns_no_rows(spark, tmp_path):
+    """An empty embeddings table trains no IVF cells: sim_ivf_approx
+    returns zero rows with its declared schema, as the exact path does,
+    instead of failing to stack an empty centroid sample."""
+    import pyarrow.parquet as pq
+
+    emb = pq.read_table(os.path.join(TEST_SF_DIR, "embeddings.parquet"))
+    df = REGISTRY["sim_ivf_approx"].fn(spark, _sf_dir_with_embeddings(tmp_path, emb.slice(0, 0)))
+    assert df.columns == ["id_a", "id_b", "cos", "rn"]
+    assert df.count() == 0
+
+
+def test_gapply_tuple_keys_match_list_keys(spark):
+    """``gapply`` takes its keys in the package's one argument
+    convention: a tuple of names groups like the same list, not as one
+    tuple-valued key."""
+    import pandas as pd
+
+    import pyspark_analytics_library_spark as p
+
+    df = spark.createDataFrame(
+        [(1, "a", 1.0), (1, "a", 2.0), (1, "b", 3.0), (2, "a", 4.0)],
+        "k long, g string, v double",
+    )
+
+    def total(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pdf.groupby(["k", "g"], as_index=False)["v"].sum()
+
+    def rows(keys):
+        return sorted(p.gapply(df, keys, total, "k long, g string, v double").collect())
+
+    by_tuple = rows(("k", "g"))
+    assert by_tuple == rows(["k", "g"])
+    assert len(by_tuple) == 3
 
 
 def test_ensure_columns_treats_bare_string_as_one_column(spark):

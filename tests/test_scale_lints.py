@@ -331,3 +331,55 @@ def test_llm_stages_spelled_once():
     assert explodes == [("operators/dedup.py", "both_ways")], (
         f"symmetrize pair lists with dedup.both_ways: {explodes}"
     )
+
+
+def _str_coercions(src: str) -> list[str]:
+    """Top-level functions that coerce a name to a Column by hand: an
+    ``isinstance(x, str)`` test (statement or expression) whose taken
+    branch calls ``col``."""
+
+    def is_str_test(node):
+        return (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "id", None) == "isinstance"
+            and getattr(node.args[1], "id", None) == "str"
+        )
+
+    def calls_col(body):
+        return any(
+            isinstance(n, ast.Call)
+            and (getattr(n.func, "attr", None) or getattr(n.func, "id", None)) == "col"
+            for part in (body if isinstance(body, list) else [body])
+            for n in ast.walk(part)
+        )
+
+    return [
+        top.name
+        for top in ast.parse(src).body
+        if isinstance(top, ast.FunctionDef)
+        for node in ast.walk(top)
+        if isinstance(node, (ast.If, ast.IfExp)) and is_str_test(node.test) and calls_col(node.body)
+    ]
+
+
+def test_views_and_coercion_have_one_owner():
+    """Catalog state and the name-or-Column convention each have one
+    owner.  ``io.register_views`` is the only function that registers a
+    temp view, so only SQL text that names its tables sees any;
+    ``load_tables`` takes just ``(spark, sf_dir)`` and changes no
+    catalog state; and a column name becomes a Column only through
+    ``functions/coercion.py``."""
+    views, coercions = {}, []
+    for rel, src in _package_sources():
+        if n := _code_only(src).count("createOrReplaceTempView"):
+            views[rel] = n
+        if rel != "functions/coercion.py":
+            coercions += [(rel, fn) for fn in _str_coercions(src)]
+    with open(os.path.join(PKG, "sources", "io.py"), encoding="utf-8") as f:
+        calls = _calls_by_function(f.read())
+    registrars = [fn for fn, names in calls.items() if "createOrReplaceTempView" in names]
+    assert views == {"sources/io.py": 1} and registrars == ["register_views"], (
+        f"register temp views through io.register_views: {views} {registrars}"
+    )
+    assert list(inspect.signature(io_mod.load_tables).parameters) == ["spark", "sf_dir"]
+    assert coercions == [], f"coerce column names with ensure_column(s): {coercions}"
