@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark_analytics_library_spark import conf
 from pyspark_analytics_library_spark.functions.coercion import ensure_column
 from pyspark_analytics_library_spark.registry import query
-from pyspark_analytics_library_spark.sources.io import load_tables, register_views
+from pyspark_analytics_library_spark.sources.io import load_tables, local_frame, register_views
 
 
 def _r(col: Column | str, scale: int = 4) -> Column:
@@ -571,28 +571,15 @@ def binned_exact_percentiles(
     def _bounds_join(active: list[dict]):
         """base rows matched to their unit's interval — group-key match
         is NULL-SAFE (a NULL group key is one ordinary group)."""
-        from pyspark.sql.types import (
-            DoubleType,
-            IntegerType,
-            StructField,
-            StructType,
-        )
+        from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
         uschema = StructType(
             [StructField("_uid", IntegerType(), False)]
-            + [
-                StructField(f"_k{i}", f.dataType)
-                for i, f in enumerate(key_schema.fields)
-            ]
-            + [
-                StructField("_lo", DoubleType(), False),
-                StructField("_hi", DoubleType(), False),
-            ]
+            + [StructField(f"_k{i}", f.dataType) for i, f in enumerate(key_schema.fields)]
+            + [StructField(c, DoubleType(), False) for c in ("_lo", "_hi")]
         )
-        bounds = spark.createDataFrame(
-            [(i, *u["key"], u["lo"], u["hi"]) for i, u in enumerate(active)],
-            uschema,
-        )
+        rows = [(i, *u["key"], u["lo"], u["hi"]) for i, u in enumerate(active)]
+        bounds = local_frame(spark, rows, uschema)
         cond = F.lit(True)
         for i, c in enumerate(by):
             cond = cond & base[c].eqNullSafe(bounds[f"_k{i}"])
@@ -778,8 +765,8 @@ def _binned_agg_quantile(spark: SparkSession, df: DataFrame) -> DataFrame:
         for key, qv in sorted(qty.items())
         for flag in [key[0]]
     ]
-    return spark.createDataFrame(
-        rows, "l_returnflag string, med_qty double, q25_qty double, "
+    return local_frame(
+        spark, rows, "l_returnflag string, med_qty double, q25_qty double, "
         "q75_qty double, med_price double"
     )
 

@@ -31,6 +31,7 @@ from pyspark_analytics_library_spark.sources.io import (
     fs_delete,
     iteration_scratch,
     load_tables,
+    local_frame,
     materialize,
     reclaim_iteration_scratch,  # noqa: F401 — public re-export
 )
@@ -603,9 +604,9 @@ def _cc_driver_union_find(
     converges to).  Edges with a NULL endpoint are no-ops, matching the
     loop's join semantics (a NULL never equi-joins a label row).
 
-    Only the NON-TRIVIAL mapping rows (label ≠ vertex) are shipped back
-    — bounded by the edge cap — and singletons fall out of the same
-    left-join + coalesce the loop path uses."""
+    Only the NON-TRIVIAL mapping rows (label ≠ vertex) become a local
+    relation — bounded by the edge cap — and singletons fall out of the
+    same left-join + coalesce the loop path uses."""
     from pyspark.sql import types as T
 
     parent: dict = {}
@@ -633,12 +634,8 @@ def _cc_driver_union_find(
         for v in list(parent)
         if (r := find(v)) != v
     ]
-    mdf = spark.createDataFrame(
-        mapping,
-        T.StructType(
-            [T.StructField("v", v_type), T.StructField("label", v_type)]
-        ),
-    )
+    schema = T.StructType([T.StructField("v", v_type), T.StructField("label", v_type)])
+    mdf = local_frame(spark, mapping, schema)
     return _attach_singletons(vertices, mdf, broadcast_labels=True)
 
 

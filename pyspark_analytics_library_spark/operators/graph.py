@@ -30,6 +30,7 @@ from pyspark_analytics_library_spark.sources.io import (
     fs_delete,
     iteration_scratch,
     load_tables,
+    local_frame,
     materialize,
 )
 
@@ -385,7 +386,8 @@ def _triangle_census_impl(
     import numpy as np
 
     edges = materialize(edges, os.path.join(scratch, "edges"))
-    deg_pd = degrees(edges).toPandas()  # vertex-count-sized, like PageRank's counts
+    deg = degrees(edges)
+    deg_pd = deg.toPandas()  # vertex-count-sized, like PageRank's counts
     d = deg_pd["degree"]
     n_vertices = len(deg_pd)
     # Degree sum counts each edge twice — the exact edge count with no
@@ -480,7 +482,7 @@ def _triangle_census_impl(
         )
 
     wedges = int((d * (d - 1) // 2).sum())
-    deg_local = spark.createDataFrame(deg_pd)
+    deg_local = local_frame(spark, deg_pd, deg.schema)
     ed = (
         edges.join(
             F.broadcast(
@@ -571,9 +573,8 @@ def _census_summary(
 ) -> DataFrame:
     """The shared 1-row summary both census paths return — built from
     driver-side scalars only, so it is never backed by scratch files."""
-    summary = spark.createDataFrame(
-        [(m_edges, wedges, t)], "n_edges long, n_wedges long, n_triangles long"
-    )
+    ddl = "n_edges long, n_wedges long, n_triangles long"
+    summary = local_frame(spark, [(m_edges, wedges, t)], ddl)
     return summary.select(
         "n_edges",
         "n_wedges",

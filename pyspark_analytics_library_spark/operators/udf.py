@@ -62,7 +62,7 @@ def q_udf_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-at-a-time Python UDF (the documented slow path — serde per
     row; the oracle CASE checks the semantics AND the UDF machinery)."""
     t = load_tables(spark, sf_dir)
-    band = F.udf(_band, T.StringType())
+    band = F.udf(_band, T.StringType(), useArrow=False)
     return t["lineitem"].select(
         "l_orderkey", "l_linenumber", band("l_discount").alias("disc_band")
     )

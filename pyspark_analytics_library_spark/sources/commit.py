@@ -47,6 +47,7 @@ import uuid
 from pyspark.sql import DataFrame
 
 from pyspark_analytics_library_spark import conf
+from pyspark_analytics_library_spark.sources.io import local_frame
 
 #: Pointer file naming the live root manifest.  The leading underscore
 #: keeps Spark/Hadoop readers from picking it up as data if someone
@@ -1228,7 +1229,7 @@ def _masked_scan(
 
     schema = _schema(man)
     if not entries:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     clean, dirty, tombs = _mask_split(man, entries, tombstones)
 
     def plain(items):
@@ -1607,7 +1608,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
     if rewritten:
         base_slice = _scan_entries(spark, target, man, schema, rewritten)
     else:
-        base_slice = spark.createDataFrame([], schema)
+        base_slice = local_frame(spark, [], schema)
     merged = merge_fn(base_slice, updates)
 
     if _schema_shape(merged.schema) != _schema_shape(schema):
@@ -1743,26 +1744,13 @@ def _prune_manifests(target: str, current: str, cur_man: dict | None = None) -> 
 
 
 def _key_frame(spark, man: dict, keys: list) -> DataFrame:
-    """``keys`` as a one-column frame typed as the table's bucket key
-    column.  Built from an Arrow table, it plans as a local relation,
-    so an expression over it collects without a Spark job.
-
-    Timestamp keys go in as the instants ``TimestampType.toInternal``
-    gives, the ones the row path and the ``isin`` residual use (a naive
-    datetime is OS-local time); Arrow would read a naive datetime in the
-    session time zone and hash another instant."""
-    import pyarrow as pa
-    from pyspark.sql.types import StructField, StructType, TimestampType
+    """``keys`` as a one-column local frame typed as the table's bucket
+    key column, so an expression over it collects without a Spark job."""
+    from pyspark.sql.types import StructField, StructType
 
     key = man["bucket_key"]
-    dtype = _schema(man)[key].dataType
-    if isinstance(dtype, TimestampType):
-        arr = pa.array([dtype.toInternal(k) for k in keys], pa.timestamp("us", "UTC"))
-    else:
-        arr = pa.array(keys)
-    return spark.createDataFrame(
-        pa.table({key: arr}), schema=StructType([StructField(key, dtype)])
-    )
+    field = StructField(key, _schema(man)[key].dataType)
+    return local_frame(spark, [(k,) for k in keys], StructType([field]))
 
 
 def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:

@@ -466,6 +466,33 @@ def fs_delete(spark: SparkSession, path: str) -> None:
         pass
 
 
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """``data`` (row tuples, or a pandas frame with ``schema``'s columns)
+    as a frame typed by ``schema`` (a StructType or a DDL string).
+
+    Driver literals become an Arrow local relation (``LocalTableScan``):
+    no Spark job, no pickled Python RDD and no executor-side Python, with
+    ``spark.sql.execution.arrow.pyspark.enabled`` on or off.  A row-list
+    ``createDataFrame`` is a pickled RDD whose first action forks a Python
+    daemon and workers, even for one row or none.  Values go in as
+    ``DataType.toInternal`` gives them, so a timestamp is the instant the
+    row path and an ``isin`` use (a naive datetime is OS-local time), not
+    Arrow's reading of it in the session time zone."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    rows = None if hasattr(data, "columns") else list(data)
+    arrays = []
+    for i, f in enumerate(schema.fields):
+        col = data[f.name] if rows is None else [r[i] for r in rows]
+        if f.dataType.needConversion():
+            col = [f.dataType.toInternal(v) for v in col]
+        arrays.append(pa.array(col, to_arrow_type(f.dataType)))
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, names=schema.names), schema)
+
+
 def materialize(df: DataFrame, path: str, files: int | None = None) -> DataFrame:
     """Write ``df`` to parquet at ``path`` (overwriting), coalesced to
     ``files`` files when given, and re-read it.  The re-read frame cuts

@@ -1727,3 +1727,14 @@ def test_cc_step_restructure_matches_two_join_form(spark):
         assert new == old
         # advance with the restructured step's output (non-null rows)
         cur = spark.createDataFrame(sorted(new), "v long, label long")
+
+
+def test_udf_scalar_builds_without_warnings(spark):
+    """``udf_scalar`` names its row-at-a-time eval type, so PySpark does
+    not try to infer one from ``_band``'s type hints, which warns."""
+    import warnings
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        df = REGISTRY["udf_scalar"].fn(spark, TEST_SF_DIR)
+    assert df.columns == ["l_orderkey", "l_linenumber", "disc_band"]

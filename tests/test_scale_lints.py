@@ -383,3 +383,22 @@ def test_views_and_coercion_have_one_owner():
     )
     assert list(inspect.signature(io_mod.load_tables).parameters) == ["spark", "sf_dir"]
     assert coercions == [], f"coerce column names with ensure_column(s): {coercions}"
+
+
+def test_driver_literals_have_one_owner():
+    """Driver values become a frame only through ``io.local_frame``, an
+    Arrow local relation that needs no Spark job and no Python worker.
+    A row-list ``createDataFrame`` elsewhere is a pickled Python RDD:
+    collecting even a 1-row summary over it forks a Python daemon and
+    workers for what is otherwise a JVM-only operator."""
+    sites = {
+        rel: n
+        for rel, src in _package_sources()
+        if (n := _code_only(src).count("createDataFrame"))
+    }
+    with open(os.path.join(PKG, "sources", "io.py"), encoding="utf-8") as f:
+        calls = _calls_by_function(f.read())
+    owners = [fn for fn, names in calls.items() if "createDataFrame" in names]
+    assert sites == {"sources/io.py": 1} and owners == ["local_frame"], (
+        f"build driver-literal frames with io.local_frame: {sites} {owners}"
+    )
