@@ -324,10 +324,10 @@ HEADLINE = {
     "graph_pagerank": "graph_pagerank_nations",
     "resample_interp": "ts_resample_interp",
     # Round-8 addition: agg_describe is the third-heaviest
-    # non-streaming query (summary() multi-statistic pass + its r7
-    # embedded self-check) and lived outside BENCH's regression radar
-    # (VERDICT r7 #6) — reference row in BASELINE.md §"Round-8
-    # regression reference".
+    # non-streaming query (summary() multi-statistic pass; its values
+    # are checked in tests/test_driver_contract.py, not in the query)
+    # and lived outside BENCH's regression radar (VERDICT r7 #6) —
+    # reference row in BASELINE.md §"Round-8 regression reference".
     "describe_summary": "agg_describe",
     # Round-12 additions (VERDICT r11 #2/#6): the as-of union+window
     # plan and the salted skew join both carry 100 M-row probe evidence
@@ -444,9 +444,10 @@ def main() -> None:
     # timed region must rebuild the DataFrame — re-collecting the
     # returned frame would only re-read the final checkpoint / replay
     # the cheap tail aggregates.
-    # agg_describe belongs here too: its embedded self-check (summary
-    # cells parsed back vs direct aggregates) runs eagerly inside
-    # fn(), and the bench row exists to watch exactly that cost.
+    # describe_summary stays in this set so its row keeps timing fn()
+    # plus collect, comparable with its reference band, although fn()
+    # is now a lazy summary() plan: its cell checks moved to
+    # tests/test_driver_contract.py.
     # dedup_components left this set in round 19: the interval-
     # segmentation rewrite made the query a pure lazy plan (no eager
     # loop), so it is timed collect-only like every other plan row; the

@@ -391,53 +391,16 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_describe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """df.describe / df.summary surface (string-typed output by design).
 
-    Embedded self-check: summary() emits stringly cells
-    no oracle can hash, so a rows-only green would otherwise attest
-    only that a job ran.  The exact cells — count, mean, min, max; the
-    percentile rows are approximate by contract — are parsed back and
-    compared against the same aggregates computed directly, so the
-    driver's rows-only green attests VALUES.  Both collects are tiny
-    fixed-size scalars (8 summary rows + 1 aggregate row), the same
-    embedded-self-check pattern the streaming queries use."""
-    import math
-
-    t = load_tables(spark, sf_dir)
+    No oracle can hash the stringly cells, so
+    tests/test_driver_contract.py parses the count, mean, min and max
+    rows back and compares them with the same aggregates computed
+    directly."""
     cols = ["l_quantity", "l_extendedprice", "l_discount"]
-    df = t["lineitem"].select(*cols)
-    out = df.summary("count", "mean", "stddev", "min", "25%", "50%", "75%", "max")
-    # 8 rows × 4 columns — bounded by the statistic list, never by input.
-    cells = {r["summary"]: r.asDict() for r in out.collect()}
-    # Per-column F.count(c), NOT F.count(1): summary's count row is the
-    # NON-NULL count, a different statistic on any fixture with nulls.
-    exact = df.agg(
-        *[F.count(c).alias(f"n_{c}") for c in cols],
-        *[F.avg(c).alias(f"avg_{c}") for c in cols],
-        *[F.min(c).alias(f"min_{c}") for c in cols],
-        *[F.max(c).alias(f"max_{c}") for c in cols],
-    ).collect()[0]
-    for c in cols:
-        # Java's Double.toString round-trips, so parsed cells match the
-        # direct aggregates to the ulp; mean gets rel_tol for the one
-        # summation-order divergence class rounding cannot absorb.  An
-        # all-null column yields None on BOTH sides (summary cell and
-        # direct aggregate) — equal-None passes, one-sided None raises.
-        checks = {
-            "count": (cells["count"][c], exact[f"n_{c}"], 0.0),
-            "mean": (cells["mean"][c], exact[f"avg_{c}"], 1e-9),
-            "min": (cells["min"][c], exact[f"min_{c}"], 0.0),
-            "max": (cells["max"][c], exact[f"max_{c}"], 0.0),
-        }
-        for stat, (got, want, rt) in checks.items():
-            if got is None or want is None:
-                ok = got is None and want is None
-            else:
-                ok = math.isclose(float(got), float(want), rel_tol=rt, abs_tol=0.0)
-            if not ok:
-                raise AssertionError(
-                    f"agg_describe: summary {stat}({c}) = {got} diverges "
-                    f"from the directly-computed aggregate {want}"
-                )
-    return out
+    return (
+        load_tables(spark, sf_dir)["lineitem"]
+        .select(*cols)
+        .summary("count", "mean", "stddev", "min", "25%", "50%", "75%", "max")
+    )
 
 
 #: Estimated bytes per exact-percentile hash-map entry (double key +

@@ -672,15 +672,14 @@ def test_no_query_plans_a_shuffled_cartesian(spark):
     with its name, not at 100 TB.
 
     Skips the queries whose fn() runs eager driver-paced work
-    (iterative loops, embedded self-checks, streaming runs, sink
-    round-trips) — their plans are audited by their own dedicated
-    tests, and building them here would re-run minutes of jobs for a
-    string grep."""
+    (iterative loops, streaming runs, sink round-trips) — their plans
+    are audited by their own dedicated tests, and building them here
+    would re-run minutes of jobs for a string grep."""
     eager_or_streaming = {
-        # iterative / embedded-self-check / sink-writing queries
+        # iterative / sink-writing queries
         "dedup_connected_components", "dedup_watermarked",
         "pipeline_fuzzy_dedup", "pipeline_fuzzy_dedup_exact",
-        "sim_kmeans_assign", "agg_describe", "graph_triangles",
+        "sim_kmeans_assign", "graph_triangles",
         "graph_pagerank_nations", "graph_degree_stats",
         "sim_topk_exact", "sim_threshold_pairs", "sim_knn_labels",
         "sim_ivf_approx", "sim_range_search",

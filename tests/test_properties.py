@@ -965,8 +965,8 @@ def test_freqitems_superset_of_true_heavy_hitters(spark):
     result (false positives are allowed).  The declared query
     serializes its sorted arrays to JSON, so parse them back and check
     the superset relation against exact groupBy counts — the value
-    attestation backing agg_freqitems' rows-only driver green, the
-    same role the embedded self-check plays for agg_describe."""
+    check behind agg_freqitems' rows-only driver green, as
+    tests/test_driver_contract.py's parse-back is for agg_describe."""
     import json
 
     from pyspark.sql import functions as F

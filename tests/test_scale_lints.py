@@ -3,7 +3,7 @@
 The package's contract (SCALE.md) is that driver-side materialization
 is the exception: every ``.collect()`` / ``.toPandas()`` in operator
 code must be one of the documented, size-guarded cases (scalar
-convergence/self-check aggregates, the IndexTooLargeError-gated
+convergence aggregates, the IndexTooLargeError-gated
 broadcast index build, the capped dense-census path).  A new operator
 that quietly collects its input would pass fixture-scale correctness
 tests while being wrong at 100 TB — this lint makes that a visible,
@@ -31,27 +31,21 @@ PKG = os.path.join(
 
 #: repo-relative file → exact count of driver-materialization call
 #: sites (``.collect()`` + ``.toPandas()``).  Every entry is justified
-#: in the file itself at the cited call site.
+#: in the file itself at the cited call site.  ``streaming/`` has no
+#: entry: its queries return their sink tables and collect nothing.
 WHITELIST = {
-    # batch-vs-stream self-checks: three scalar event-count collects,
-    # the two group-count-sized collects inside
-    # _assert_stream_matches_batch (full result-set parity), and the
-    # two 1-row scalar-aggregate collects in stream_late_data's
-    # embedded watermark-drop check
-    "streaming/stream_queries.py": 7,
-    # agg_describe embedded self-check: the 8-row summary() grid plus
-    # one scalar-aggregate row, both bounded by the statistic list;
-    # plus exact_quantile_guard's 1-row approx_count_distinct probe
-    # (HLL sketch — fixed-size state and a single output row at any
-    # input scale, VERDICT r15 #2); plus binned_exact_percentiles'
-    # four bounded collects (round 17, VERDICT r16 #7): per-group
-    # count/min/max (one row per group), the per-round histogram
-    # (≤ units × bins rows — fixed by conf, never data-sized), the
-    # degenerate per-VALUE histogram (≤ ~bins representable doubles
-    # in an underflowed-width interval), and the leaf candidate pull
-    # (≤ units × leaf_limit values, the final order-statistic read —
-    # per-rank units make that bound unconditional, review r17)
-    "operators/aggregates.py": 7,
+    # exact_quantile_guard's 1-row approx_count_distinct probe (HLL
+    # sketch — fixed-size state and a single output row at any input
+    # scale); plus binned_exact_percentiles' four bounded collects:
+    # per-group count/min/max (one row per group), the per-round
+    # histogram (≤ units × bins rows — fixed by conf, never
+    # data-sized), the degenerate per-VALUE histogram (≤ ~bins
+    # representable doubles in an underflowed-width interval), and the
+    # leaf candidate pull (≤ units × leaf_limit values, the final
+    # order-statistic read — per-rank units make that bound
+    # unconditional).  agg_describe returns its summary() plan; its
+    # values are checked in tests, not collected in the query.
+    "operators/aggregates.py": 5,
     # dim probe (1 row) + IndexTooLargeError-gated index build +
     # IVF centroid sample's three driver pulls (the limit(sample+1)
     # small-table probe — CollectLimit, driver-bounded at sample+1 rows
@@ -120,6 +114,19 @@ def test_driver_materialization_sites_are_whitelisted():
         "driver-side materialization sites changed — if the new site is "
         f"size-guarded, update the whitelist: {found} != {WHITELIST}"
     )
+
+
+_SELF_CHECK = re.compile(r"""raise AssertionError|["']selfcheck["']""")
+
+
+def test_queries_return_results_and_tests_check_them():
+    """A declared query returns its result; its checks live in the
+    tests (tests/test_streaming.py, tests/test_driver_contract.py), so
+    no package module raises AssertionError or stamps a ``selfcheck``
+    column.  An embedded check costs driver-side jobs on every call
+    and adds a column the result does not own."""
+    offenders = [rel for rel, src in _package_sources() if _SELF_CHECK.search(src)]
+    assert offenders == [], f"move the check into a test: {offenders}"
 
 
 def test_row_at_a_time_udfs_only_in_the_udf_demo_module():

@@ -1,13 +1,12 @@
-"""Batch-parity self-checks for the streaming queries (SURVEY.md §2.11):
+"""Batch-parity checks for the streaming queries (SURVEY.md §2.11):
 each streaming result is compared against the same logic run in batch
-mode — the strongest check available without a streaming oracle.
+mode — the strongest check available without a streaming oracle.  The
+queries return their results unchecked; every check lives here.
 """
 
 from __future__ import annotations
 
 import pytest
-from hypothesis import given as hyp_given
-from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from pyspark_analytics_library_spark.registry import REGISTRY, load_all_query_modules
@@ -16,20 +15,20 @@ from tests.conftest import TEST_SF_DIR
 
 load_all_query_modules()
 
+#: stream_late_data's split point: events before it arrive in the last,
+#: late micro-batch, behind the watermark.
+LATE_CUTOFF = "2024-01-10 00:00:00"
 
-def _split_parity(stream, expect="full-parity"):
-    """Every rows-only streaming query carries the attestation column
-    (VERDICT r13 #6); since ADVICE r14 its VALUE names the check kind,
-    so a green row can't overclaim full parity when only a weaker
-    watermark-drop/event-count check ran.  Peel it off for the tuple
-    compare and assert the expected kind was stamped uniformly."""
-    vals = {r["selfcheck"] for r in stream.select("selfcheck").distinct().collect()}
-    assert vals == {expect}, f"selfcheck not uniformly {expect!r}: {vals}"
-    return stream.drop("selfcheck")
+
+def _run(spark, name):
+    """Run one streaming query; its result carries only its own columns."""
+    df = REGISTRY[name].fn(spark, TEST_SF_DIR)
+    assert "selfcheck" not in df.columns, f"{name}: {df.columns}"
+    return df
 
 
 def test_stream_tumbling_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_tumbling"].fn(spark, TEST_SF_DIR))
+    stream = _run(spark, "stream_tumbling")
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -40,7 +39,7 @@ def test_stream_tumbling_matches_batch(spark):
 
 
 def test_stream_sliding_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_sliding"].fn(spark, TEST_SF_DIR))
+    stream = _run(spark, "stream_sliding")
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"))
@@ -51,24 +50,65 @@ def test_stream_sliding_matches_batch(spark):
 
 
 def test_stream_session_total_events_preserved(spark):
-    stream = _split_parity(REGISTRY["stream_session"].fn(spark, TEST_SF_DIR))
-    n_events = load_tables(spark, TEST_SF_DIR)["events"].count()
-    assert stream.agg(F.sum("n_events")).collect()[0][0] == n_events
+    """Full parity with the batch session_window twin: every session's
+    bounds, user and count, so the event total is preserved too."""
+    stream = _run(spark, "stream_session")
+    batch = (
+        load_tables(spark, TEST_SF_DIR)["events"]
+        .groupBy(F.session_window("ts", "30 minutes").alias("sw"), "user_id")
+        .agg(F.count(F.lit(1)).alias("n_events"))
+        .select(
+            F.col("sw.start").alias("session_start"),
+            F.col("sw.end").alias("session_end"),
+            "user_id",
+            "n_events",
+        )
+    )
+    assert sorted(map(tuple, stream.collect())) == sorted(map(tuple, batch.collect()))
 
 
 def test_stream_late_data_drops_rows(spark):
-    """APPEND mode + advanced watermark must drop the late file's rows."""
-    stream = _split_parity(
-        REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR), expect="watermark-drop"
+    """APPEND mode + advanced watermark must drop the late file's rows:
+    the fixture has both late and on-time rows, and the stream emits
+    some events but no more than the on-time ones."""
+    cutoff = F.lit(LATE_CUTOFF).cast("timestamp")
+    total, late = (
+        load_tables(spark, TEST_SF_DIR)["events"]
+        .agg(F.count(F.lit(1)), F.count_if(F.col("ts") < cutoff))
+        .collect()[0]
     )
-    counted = stream.agg(F.sum("n_events")).collect()[0][0] or 0
-    total = load_tables(spark, TEST_SF_DIR)["events"].count()
-    assert counted < total, f"late rows were not dropped ({counted} vs {total})"
-    assert counted > 0
+    assert 0 < late < total, (
+        f"fixture has {late} of {total} rows before the cutoff; the drop "
+        "check needs both late and on-time rows"
+    )
+    stream = _run(spark, "stream_late_data")
+    streamed = stream.agg(F.sum("n_events")).collect()[0][0] or 0
+    assert 0 < streamed <= total - late, (
+        f"emitted {streamed} events vs {total - late} on-time rows"
+    )
 
 
-def test_stream_dedup_collapses_duplicates(spark):
-    stream = _split_parity(REGISTRY["stream_dedup"].fn(spark, TEST_SF_DIR))
+def test_stream_late_data_output_has_no_precutoff_window(spark):
+    """The append-mode run emits windows, and none before the cutoff:
+    every late row lives in a window starting before it (hour windows
+    align and the cutoff is a midnight), so one such window means late
+    rows were counted.  Spark-side comparison on purpose: collected
+    timestamps render in the driver OS timezone, not the session
+    timezone, so a Python-side `< datetime(...)` would break (or
+    silently weaken) on any non-UTC machine."""
+    stream = _run(spark, "stream_late_data")
+    cutoff = F.lit(LATE_CUTOFF).cast("timestamp")
+    pre, n_windows = stream.agg(
+        F.count_if(F.col("window_start") < cutoff), F.count(F.lit(1))
+    ).collect()[0]
+    assert n_windows > 0
+    assert pre == 0, f"{pre} emitted windows predate the cutoff"
+
+
+@pytest.mark.parametrize("name", ["stream_dedup", "dedup_watermarked"])
+def test_stream_dedup_collapses_duplicates(spark, name):
+    """The deduplicated doubled stream equals the original event set."""
+    stream = _run(spark, name)
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy("event_type")
@@ -78,9 +118,7 @@ def test_stream_dedup_collapses_duplicates(spark):
 
 
 def test_stream_stateful_matches_batch_totals(spark):
-    stream = _split_parity(
-        REGISTRY["stream_stateful"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
+    stream = _run(spark, "stream_stateful")
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy("user_id")
@@ -99,10 +137,7 @@ def test_stream_stateful_matches_batch_totals(spark):
 
 
 def test_stream_sink_covers_all_events(spark):
-    stream = _split_parity(
-        REGISTRY["stream_sink"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
-    total = stream.agg(F.sum("n")).collect()[0][0]
+    total = _run(spark, "stream_sink").agg(F.sum("n")).collect()[0][0]
     assert total == load_tables(spark, TEST_SF_DIR)["events"].count()
 
 
@@ -111,9 +146,9 @@ def test_stream_sink_covers_all_events(spark):
 )
 def test_timed_out_stream_raises_timeout(spark, monkeypatch, name):
     """An availableNow query still running at its deadline fails as a
-    timeout, not as the event-count or parity divergence its partial
-    sink would show: the two foreachBatch sinks and the memory-sink
-    runner all go through one runner that checks awaitTermination."""
+    timeout instead of returning its partial sink: the two foreachBatch
+    sinks and the memory-sink runner all go through one runner that
+    checks awaitTermination."""
     from pyspark.sql.streaming.query import StreamingQuery
 
     monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda q, t=None: False)
@@ -122,7 +157,7 @@ def test_timed_out_stream_raises_timeout(spark, monkeypatch, name):
 
 
 def test_stream_static_join_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_static_join"].fn(spark, TEST_SF_DIR))
+    stream = _run(spark, "stream_static_join")
     ev = load_tables(spark, TEST_SF_DIR)["events"]
     static = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("lifetime_events"))
     batch = (
@@ -137,7 +172,7 @@ def test_stream_static_join_matches_batch(spark):
 
 
 def test_stream_stream_join_matches_batch(spark):
-    stream = _split_parity(REGISTRY["stream_stream_join"].fn(spark, TEST_SF_DIR))
+    stream = _run(spark, "stream_stream_join")
     ev = load_tables(spark, TEST_SF_DIR)["events"]
     clicks = ev.filter(F.col("event_type") == "click").select(
         F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts")
@@ -162,9 +197,7 @@ def test_stream_foreach_batch_matches_batch_totals(spark):
     """foreachBatch appends per-micro-batch aggregates; re-aggregating
     them must reproduce the plain batch totals regardless of how many
     micro-batches the source emitted."""
-    stream = _split_parity(
-        REGISTRY["stream_foreach_batch"].fn(spark, TEST_SF_DIR), expect="event-count"
-    )
+    stream = _run(spark, "stream_foreach_batch")
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy("event_type")
@@ -177,115 +210,6 @@ def test_stream_foreach_batch_matches_batch_totals(spark):
     got = [(r["event_type"], r["n_events"], round(r["total_value"], 3)) for r in stream.collect()]
     want = [(r["event_type"], r["n_events"], round(r["total_value"], 3)) for r in batch.collect()]
     assert got == want
-
-
-def test_parity_check_skips_past_the_cap(spark):
-    """_assert_stream_matches_batch must SKIP (not collect-and-compare,
-    not raise) when the result exceeds _PARITY_CAP — the check attests
-    fixture-scale semantics and must never pull an input-scaled result
-    through the driver of a production job."""
-    from pyspark.sql import functions as F
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _PARITY_CAP,
-        _assert_stream_matches_batch,
-    )
-
-    import pytest as _pytest
-
-    # BOTH sides past the cap: skip (fixture-scale attestation only) —
-    # even though the ranges differ beyond the cap
-    big = spark.range(_PARITY_CAP + 10).select(F.col("id"))
-    bigger = spark.range(_PARITY_CAP + 20).select(F.col("id"))
-    _assert_stream_matches_batch(big, bigger, "cap-probe-both")
-
-    # exactly ONE side past the cap: the cardinalities provably differ
-    # (≤cap vs >cap), so this must RAISE — in both directions — without
-    # quoting the truncated collect as a real count
-    other = spark.range(5).select(F.col("id"))
-    with _pytest.raises(AssertionError, match="exceeds the .*parity cap"):
-        _assert_stream_matches_batch(big, other, "cap-probe-stream-over")
-    with _pytest.raises(AssertionError, match="exceeds the .*parity cap"):
-        _assert_stream_matches_batch(other, big, "cap-probe-batch-over")
-
-    # under the cap the same divergence must raise
-    with _pytest.raises(AssertionError, match="diverges"):
-        _assert_stream_matches_batch(
-            spark.range(5).select(F.col("id")),
-            spark.range(6).select(F.col("id")),
-            "small-probe",
-        )
-
-
-def test_parity_check_survives_tied_keys_with_ulp_floats(spark):
-    """VERDICT r5 #2: rows tied on their non-float key whose float
-    cells differ by one ulp between stream and batch must PASS — under
-    the old raw-tuple sort the float decided order and misaligned the
-    zip compare, failing a genuine parity pass."""
-    import math
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
-    )
-
-    schema = "k string, v double, tag string"
-    got = spark.createDataFrame([("a", 1.0, "x"), ("a", 1.0, "y")], schema)
-    want = spark.createDataFrame(
-        [
-            ("a", math.nextafter(1.0, 2.0), "x"),
-            ("a", math.nextafter(1.0, 0.0), "y"),
-        ],
-        schema,
-    )
-    _assert_stream_matches_batch(got, want, "ulp-probe")
-
-
-def test_parity_check_is_none_safe(spark):
-    """ADVICE r5: None beside a non-None value in the same column made
-    the old sorted() comparison raise TypeError mid-check."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
-    )
-
-    schema = "k string, n bigint"
-    got = spark.createDataFrame([(None, 1), ("b", 2)], schema)
-    want = spark.createDataFrame([("b", 2), (None, 1)], schema)
-    _assert_stream_matches_batch(got, want, "none-probe")
-
-
-def test_parity_check_rejects_two_grid_steps(spark):
-    """ADVICE r5: tolerance is one step of the 4dp rounding grid — a
-    float divergence of 5e-4 (well past summation-order noise) must
-    FAIL, where the old 1e-3 abs_tol silently passed it."""
-    import pytest as _pytest
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _assert_stream_matches_batch,
-    )
-
-    schema = "k string, v double"
-    got = spark.createDataFrame([("a", 1.0)], schema)
-    want = spark.createDataFrame([("a", 1.0005)], schema)
-    with _pytest.raises(AssertionError, match="diverges"):
-        _assert_stream_matches_batch(got, want, "tol-probe")
-
-
-def test_stream_late_data_output_has_no_precutoff_window(spark):
-    """The embedded self-check asserts this inside the query; assert it
-    from the outside too so a regression in the check itself (not just
-    the semantics) is caught.  Spark-side comparison on purpose:
-    collected timestamps render in the driver OS timezone, not the
-    session timezone, so a Python-side `< datetime(...)` would break
-    (or silently weaken) on any non-UTC machine."""
-    stream = _split_parity(
-        REGISTRY["stream_late_data"].fn(spark, TEST_SF_DIR), expect="watermark-drop"
-    )
-    cutoff = F.lit("2024-01-10 00:00:00").cast("timestamp")
-    pre, total = stream.agg(
-        F.count_if(F.col("window_start") < cutoff), F.count(F.lit(1))
-    ).collect()[0]
-    assert total > 0
-    assert pre == 0
 
 
 def _dead_pid() -> int:
@@ -564,121 +488,3 @@ def test_local_stagers_refuse_a_remote_scratch_base(spark):
             with pytest.raises(ValueError, match="spark.analytics.scratchDir"):
                 REGISTRY[name].fn(spark, TEST_SF_DIR)
     assert not os.path.exists("hdfs:")
-
-
-def test_cells_match_admits_one_grid_step_rejects_two():
-    """The tolerance must admit exactly one step of the 4dp rounding
-    grid (adjacent 4dp doubles differ by slightly MORE than 1e-4 in
-    IEEE form — the reason abs_tol is 1.5e-4, not 1e-4) and reject two
-    steps."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _cells_match,
-    )
-
-    assert _cells_match(0.1234, 0.1235)
-    assert _cells_match(12.3456, 12.3457)
-    assert _cells_match(99.9999, 100.0)
-    assert not _cells_match(0.1234, 0.1236)
-    assert not _cells_match(12.3456, 12.3458)
-    # The guarantee must hold at SUM-sized magnitudes too: with
-    # isclose's default rel_tol=1e-9 a 1e6-scale cell would tolerate
-    # ~1e-3 (ten grid steps) — rel_tol is pinned to 0 so abs_tol is
-    # the sole bound at every magnitude (ADVICE r6).
-    assert _cells_match(1234567.1234, 1234567.1235)
-    assert not _cells_match(1234567.1234, 1234567.1236)
-
-
-@hyp_given(st.floats(min_value=1e11, max_value=1e15), st.integers(1, 4))
-def test_cells_match_ulp_floor_at_large_magnitudes(x, k):
-    """PROPERTY (VERDICT r8 #3): above ~2.6e11, where one double ulp
-    exceeds the flat 1.5e-4 grid bound, the tolerance floor is 4 ulps —
-    a k≤4-ulp summation-order divergence must PASS (the flat bound
-    alone would degrade to exact equality there) and a 16-ulp
-    divergence must still FAIL.  Magnitude range brackets the sf≈1
-    parity-sum scale the flat bound could not serve."""
-    import math
-
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _cells_match,
-    )
-
-    y = x
-    for _ in range(k):
-        y = math.nextafter(y, math.inf)
-    assert _cells_match(x, y)
-    far = x + 16.0 * math.ulp(x)
-    if far - x > 1.5e-4:  # guard: near 1e11 sixteen ulps can sit under the grid bound
-        assert not _cells_match(x, far)
-
-
-def test_group_matching_backtracks_past_greedy_order():
-    """Two rows tied on keys whose floats have OVERLAPPING tolerance
-    windows: greedy first-fit pairs stream 1.0001 with batch 1.0002 and
-    then dead-ends; the augmenting-path matcher must find the valid
-    pairing (1.0001→1.0000, 1.0002→1.0002)."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _group_matches,
-    )
-
-    got = [("k", 1.0001), ("k", 1.0002)]
-    want = [("k", 1.0002), ("k", 1.0000)]
-    assert _group_matches(got, want)
-    # and a genuinely unmatchable set still fails
-    assert not _group_matches([("k", 1.0), ("k", 1.0002)], [("k", 1.0), ("k", 1.01)])
-
-
-def _parity_multiset_ok(got_rows, want_rows) -> bool:
-    """Drives the REAL pure multiset core the assert helper uses."""
-    from pyspark_analytics_library_spark.streaming.stream_queries import (
-        _parity_rows_match,
-    )
-
-    return _parity_rows_match(got_rows, want_rows) is None
-
-
-@hyp_given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b", None]),
-            st.integers(0, 3).map(lambda i: float(i) / 100.0),
-            st.integers(-5, 5),
-        ),
-        max_size=12,
-    ),
-    st.randoms(use_true_random=False),
-)
-def test_parity_matching_accepts_noise_within_one_grid_step(rows, rnd):
-    """PROPERTY: any permutation of the batch rows with per-float noise
-    strictly inside the tolerance must match — regardless of ties,
-    Nones, duplicate rows, or how the noise reorders a raw sort."""
-    want = [
-        (k, v + (rnd.random() - 0.5) * 1e-4, n)  # |noise| ≤ 5e-5 < 1.5e-4
-        for (k, v, n) in rows
-    ]
-    rnd.shuffle(want)
-    assert _parity_multiset_ok(rows, want)
-
-
-@hyp_given(
-    st.lists(
-        st.tuples(
-            st.sampled_from(["a", "b"]),
-            st.integers(0, 9).map(lambda i: float(i) / 100.0),
-            st.integers(-5, 5),
-        ),
-        min_size=1,
-        max_size=10,
-        unique=True,
-    ),
-    st.randoms(use_true_random=False),
-)
-def test_parity_matching_rejects_divergence_beyond_tolerance(rows, rnd):
-    """PROPERTY: perturbing ONE row's float by 4e-4 (past tolerance,
-    while all generated floats sit on a 1e-2 grid so it cannot sidle up
-    to a different row) must be reported as divergence."""
-    want = list(rows)
-    i = rnd.randrange(len(want))
-    k, v, n = want[i]
-    want[i] = (k, v + 4e-4, n)
-    rnd.shuffle(want)
-    assert not _parity_multiset_ok(rows, want)
