@@ -179,6 +179,13 @@ def _part_spec(man: dict):
     return (col, man.get("partition_transform") or "identity") if col else None
 
 
+def _cluster_cols(man: dict) -> list[str]:
+    """The table's recorded clustering columns; a single column may be
+    recorded as a string, which counts as a 1-list."""
+    cb = man.get("cluster_by")
+    return [cb] if isinstance(cb, str) else list(cb or ())
+
+
 def _part_expr(df: DataFrame, col: str, transform: str):
     """The ``_part`` helper column: the TRANSFORMED partition value as
     a string (directory-safe for day/month; identity is cast).  NULL
@@ -462,31 +469,33 @@ _RESERVED = ("bucket", "_zorder", "_part")
 
 
 def _write_bucketed(
-    df: DataFrame,
-    target: str,
-    key: str,
-    n_buckets: int,
-    gen: int = 0,
-    cluster_by=None,
-    max_records_per_file: int | None = None,
-    part_spec: tuple | None = None,
+    df: DataFrame, target: str, man: dict, layout: bool = True
 ) -> list[dict]:
-    """Write ``df`` hash-bucketed by ``key`` under a fresh commit dir;
-    return manifest entries
+    """Write ``df`` hash-bucketed by the table's bucket key under a fresh
+    commit dir; return manifest entries
     [{"path": rel, "bucket": b, "gen": gen, "stats": {col: [mn, mx]}}].
 
-    ``partitionBy`` lays files out as ``bucket=<b>/part-*.parquet`` and
-    DROPS the helper column; readers get the original schema back because
-    :func:`table_read` passes explicit leaf files (no partition-column
-    inference).  One repartition on the bucket id — on (partition, bucket)
-    when ``part_spec`` = ``(column, transform)`` adds the ``_part=<value>/``
-    level above the bucket dirs — gives one file per non-empty group
-    (``max_records_per_file`` splits further).
+    ``man`` is the root the commit builds on.  It gives the bucket key
+    and count, the ``gen`` the entries are stamped with (the commit's
+    sequence, :func:`_next_seq`; merge-on-read orders delta rows against
+    tombstones by it) and, with ``layout``, the table's clustering and
+    partition spec.  ``layout=False`` is the tombstone-only write: a
+    key-only frame, partition-less by design (see the partition-spec
+    banner).
 
-    ``gen`` stamps the entries with the COMMIT SEQUENCE that produced them;
-    the merge-on-read path orders delta rows against tombstones by it.
+    ``partitionBy`` lays files out as ``bucket=<b>/part-*.parquet``, under
+    a ``_part=<value>/`` level on partitioned tables, and DROPS the
+    helper columns; readers get the original schema back because
+    :func:`table_read` passes explicit leaf files (no partition-column
+    inference).  One hash repartition on those directory columns puts
+    each (partition, bucket) group in one task, so every non-empty group
+    gets one file (``max_records_per_file`` splits further).  The write
+    runs one task per shuffle partition, not one per bucket: a small
+    commit into many buckets pays a few tasks, each writing several
+    buckets' files.
+
     ``stats`` carries per-file footer min/max for range pruning bucket
-    arithmetic can't do; ``key`` always gets its stats (see
+    arithmetic can't do; the bucket key always gets its stats (see
     :func:`_file_stats`), so :func:`table_merge_mor` can list these same
     entries as tombstones."""
     for reserved in _RESERVED:
@@ -499,53 +508,44 @@ def _write_bucketed(
                 f"{reserved!r}; rename that column before "
                 "table_init/table_merge"
             )
+    key, gen = man["bucket_key"], _next_seq(man)
+    props = man if layout else {}
+    part_spec, cluster_by = _part_spec(props), _cluster_cols(props)
     commit_id = f"c-{uuid.uuid4().hex[:12]}"
     commit_dir = os.path.join(target, DATA_DIR, commit_id)
     try:
-        staged = df.withColumn("bucket", _bucket_expr(key, n_buckets))
-        sort_prefix = ["bucket"]
+        staged = df.withColumn("bucket", _bucket_expr(key, int(man["n_buckets"])))
         part_dirs = ["bucket"]
         if part_spec is not None:
-            pcol, ptransform = part_spec
-            staged = staged.withColumn(
-                "_part", _part_expr(df, pcol, ptransform)
-            ).repartition("_part", "bucket")
-            sort_prefix = ["_part", "bucket"]
+            staged = staged.withColumn("_part", _part_expr(df, *part_spec))
             part_dirs = ["_part", "bucket"]
-        else:
-            staged = staged.repartition(n_buckets, "bucket")
-        drop_helper = None
-        if isinstance(cluster_by, (list, tuple)):
-            # MULTI-column clustering: sort each bucket
-            # partition by the bit-interleaved Z-value of the listed
-            # columns — locality on every listed dimension, so per-file
-            # stats prune range reads on ANY of them.  The helper
-            # column is sort-only: projected away before the write
-            # (a narrow projection preserves the per-partition order).
-            if len(cluster_by) == 1:
-                staged = staged.sortWithinPartitions(*sort_prefix, cluster_by[0])
-            else:
-                if len(cluster_by) not in (2, 3):
-                    raise ValueError(
-                        "z-order clustering supports 2 or 3 columns; got "
-                        f"{list(cluster_by)!r}"
-                    )
-                drop_helper = "_zorder"
-                staged = staged.withColumn(
-                    drop_helper, _zorder_expr(df, list(cluster_by))
-                ).sortWithinPartitions(*sort_prefix, drop_helper)
-        elif cluster_by is not None:
-            # Intra-bucket CLUSTERING: sort each bucket
-            # partition by the cluster column and split on row count —
-            # consecutive files then carry near-disjoint [min, max]
-            # for it, so the manifest stats prune RANGE reads WITHIN a
-            # bucket (the 1-D analog of Delta's OPTIMIZE ZORDER).
-            staged = staged.sortWithinPartitions(*sort_prefix, cluster_by)
-        if drop_helper is not None:
-            staged = staged.drop(drop_helper)
+        staged = staged.repartition(*part_dirs)
+        if len(cluster_by) == 1:
+            # Intra-bucket CLUSTERING: sort each group by the cluster
+            # column and split on row count — consecutive files then
+            # carry near-disjoint [min, max] for it, so the manifest
+            # stats prune RANGE reads WITHIN a bucket.
+            staged = staged.sortWithinPartitions(*part_dirs, cluster_by[0])
+        elif cluster_by:
+            # MULTI-column clustering: sort each group by the
+            # bit-interleaved Z-value of the listed columns — locality on
+            # every listed dimension, so per-file stats prune range reads
+            # on ANY of them.  The helper column is sort-only: projected
+            # away before the write (a narrow projection preserves the
+            # per-partition order).
+            if len(cluster_by) not in (2, 3):
+                raise ValueError(
+                    "z-order clustering supports 2 or 3 columns; got "
+                    f"{cluster_by!r}"
+                )
+            staged = (
+                staged.withColumn("_zorder", _zorder_expr(df, cluster_by))
+                .sortWithinPartitions(*part_dirs, "_zorder")
+                .drop("_zorder")
+            )
         writer = staged.write.partitionBy(*part_dirs).mode("overwrite")
-        if max_records_per_file is not None:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        if props.get("max_records_per_file") is not None:
+            writer = writer.option("maxRecordsPerFile", props["max_records_per_file"])
         writer.parquet(commit_dir)
     except BaseException:
         shutil.rmtree(commit_dir, ignore_errors=True)
@@ -889,6 +889,20 @@ def _commit(
     return new
 
 
+def _listings(files=(), tombs=(), gkeys=()) -> dict:
+    """Per-GKEY (files, tombstones) listings of ``files`` and ``tombs`` —
+    the ``touched`` argument of :func:`_commit`, which replaces each
+    listed group wholesale.  Every gkey in ``gkeys`` is listed even when
+    no entry lands there, so a rewritten group with no new files
+    vanishes from the root."""
+    listing: dict[tuple, tuple[list, list]] = {g: ([], []) for g in gkeys}
+    for e in files:
+        listing.setdefault(_gkey(e), ([], []))[0].append(e)
+    for t in tombs:
+        listing.setdefault(_gkey(t), ([], []))[1].append(t)
+    return listing
+
+
 def _group_listings(target: str, man: dict, new_files=(), new_tombs=()) -> dict:
     """Per-GKEY (files, tombstones) listings composing the OLD
     listings — loaded only for the gkeys the new entries touch — with
@@ -897,12 +911,7 @@ def _group_listings(target: str, man: dict, new_files=(), new_tombs=()) -> dict:
     entry."""
     gkeys = {_gkey(e) for e in new_files} | {_gkey(t) for t in new_tombs}
     old_files, old_tombs = _man_entries(target, man, gkeys=gkeys)
-    listing = {g: ([], []) for g in gkeys}
-    for e in list(old_files) + list(new_files):
-        listing[_gkey(e)][0].append(e)
-    for t in list(old_tombs) + list(new_tombs):
-        listing[_gkey(t)][1].append(t)
-    return listing
+    return _listings([*old_files, *new_files], [*old_tombs, *new_tombs])
 
 
 def _man_file_count(man: dict) -> int:
@@ -913,21 +922,6 @@ def _man_file_count(man: dict) -> int:
 def _man_tomb_count(man: dict) -> int:
     """Total tombstone files a manifest lists, without loading parts."""
     return sum(ref["tombstones"] for ref in man["parts"])
-
-
-def _cluster_args(man: dict) -> dict:
-    """The table's recorded clustering + partitioning properties as
-    _write_bucketed kwargs — every rewriting commit honors them, so
-    clustering and the partition spec survive merges/appends/
-    compactions once declared at init.  (A tombstone-only write in
-    :func:`_add_commit` goes WITHOUT these: its frame is key-only and
-    tombstones are partition-less by design — see the partition-spec
-    banner.)"""
-    return {
-        "cluster_by": man.get("cluster_by"),
-        "max_records_per_file": man.get("max_records_per_file"),
-        "part_spec": _part_spec(man),
-    }
 
 
 def table_init(
@@ -987,31 +981,14 @@ def table_init(
                 f"partition_by column {partition_by!r} not in the table "
                 f"schema {df.columns}"
             )
-    os.makedirs(target, exist_ok=True)
-    entries = _write_bucketed(
-        df,
-        target,
-        bucket_key,
-        n_buckets,
-        gen=_next_seq(prev),
-        cluster_by=cluster_by,
-        max_records_per_file=max_records_per_file,
-        part_spec=(partition_by, partition_transform) if partition_by else None,
-    )
-    by_gkey: dict[tuple, tuple[list, list]] = {}
-    for e in entries:
-        by_gkey.setdefault(_gkey(e), ([], []))[0].append(e)
-    _commit(
-        target,
-        expected,
+    # Clustering and the partition spec are TABLE PROPERTIES: recorded
+    # here and honored by every later rewriting commit, which reads them
+    # from the root it builds on (:func:`_write_bucketed`).
+    man = dict(
         prev,
-        by_gkey,
         version=2,
         bucket_key=bucket_key,
         n_buckets=n_buckets,
-        # Clustering and the partition spec are TABLE PROPERTIES:
-        # recorded here and honored by every later rewriting commit
-        # via _cluster_args.
         cluster_by=cluster_by,
         max_records_per_file=max_records_per_file,
         keep_generations=int(keep_generations),
@@ -1020,6 +997,9 @@ def table_init(
         schema=df.schema.json(),
         parts=[],
     )
+    os.makedirs(target, exist_ok=True)
+    entries = _write_bucketed(df, target, man)
+    _commit(target, expected, man, _listings(entries))
     return {"files": len(entries), "n_buckets": n_buckets}
 
 
@@ -1406,7 +1386,9 @@ def table_read(
     ``where_in`` = ``(col, [v1, ...])`` is the IN-list twin: a file is kept
     if SOME value can fall inside its [min, max], under the same non-lossy
     rules.  NULL values never match (SQL ``IN``).  Composes with ``where``
-    as a conjunction.
+    as a conjunction.  On the bucket key it is :func:`table_lookup`'s
+    read: only the values' buckets' parts are parsed, so the values must
+    be typed like that column.
 
     ``partitions`` (partitioned tables only) restricts the read to the
     listed partition VALUES (transformed encoding, e.g. ``"2024-01-05"``
@@ -1414,8 +1396,6 @@ def table_read(
     row filter.  ``where`` / ``where_in`` predicates ON the partition
     column also prune partitions BEFORE any file-stats pass; pruned
     partitions' parts are never parsed (metered by :data:`MANIFEST_IO`)."""
-    from pyspark.sql import functions as F
-
     man = _manifest_at(target, at)
     # ``where`` may be one (col, lo, hi) tuple or a list of them; every
     # predicate prunes independently (conjunction: a file survives only
@@ -1423,9 +1403,29 @@ def table_read(
     preds = []
     if where is not None:
         preds = [where] if isinstance(where, tuple) else list(where)
+    return _scan(spark, target, man, preds, where_in, partitions)
+
+
+def _scan(spark, target: str, man: dict, preds=(), where_in=None, partitions=None):
+    """The body of :func:`table_read` and :func:`table_lookup`: the
+    manifest-pruned, tombstone-masked scan of ``man`` with the
+    predicates applied row-level.
+
+    Pruning runs before any file is scanned: partitions first
+    (:func:`_partition_pred`), then, for an IN-list on the bucket key,
+    the keys' buckets (:func:`_buckets_for_keys`), so only those parts
+    are parsed; then file entries by their stats, a range per ``preds``
+    entry and an any-value overlap for ``where_in``.  The residual
+    filters are the exact predicates, so ``isin`` gives SQL ``IN``'s
+    NULL semantics: a NULL value matches nothing."""
+    from pyspark.sql import functions as F
+
     preds = [(c, lo, hi, _col_typename(man, c)) for (c, lo, hi) in preds]
     ppred = _partition_pred(man, preds, where_in, partitions)
-    entries, tombs = _man_entries(target, man, partitions=ppred)
+    buckets = None
+    if where_in is not None and where_in[0] == man["bucket_key"]:
+        buckets = _buckets_for_keys(spark, man, list(where_in[1]))
+    entries, tombs = _man_entries(target, man, buckets=buckets, partitions=ppred)
 
     def ecol(e, c):
         # Entry stats are keyed by the name the column had WHEN THE
@@ -1623,9 +1623,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
             f"{schema.simpleString()}); a merge may not evolve the "
             "schema — re-seed with table_init to change it"
         )
-    entries = _write_bucketed(
-        merged, target, key, n_buckets, gen=_next_seq(man), **_cluster_args(man)
-    )
+    entries = _write_bucketed(merged, target, man)
     stray = [e["bucket"] for e in entries if e["bucket"] not in touched_set]
     if stray:
         # merge_fn emitted rows outside the update batch's buckets —
@@ -1639,12 +1637,7 @@ def table_merge(spark, target: str, updates: DataFrame, merge_fn) -> dict:
     # (any partition — a CoW merge rewrites the whole bucket slice, and
     # a key's partition value may move) plus every gkey the rewrite
     # produced; pre-existing gkeys with no new files vanish.
-    listing: dict[tuple, tuple[list, list]] = {
-        g: ([], []) for g in {_gkey(e) for e in rewritten} | {_gkey(e) for e in entries}
-    }
-    for e in entries:
-        listing[_gkey(e)][0].append(e)
-    _commit(target, base, man, listing)
+    _commit(target, base, man, _listings(entries, gkeys={_gkey(e) for e in rewritten}))
     return {
         "touched_buckets": touched,
         "rewritten_files": len(rewritten),
@@ -1772,30 +1765,19 @@ def _buckets_for_keys(spark, man: dict, keys: list) -> set[int]:
 
 
 def table_lookup(spark, target: str, keys: list) -> DataFrame:
-    """Point lookup: rows whose merge key is in ``keys``, scanning ONLY the
-    keys' buckets' files whose per-file key [min, max] can contain a key
-    (on banded-ingest tables a bucket holds one file per commit, most of
-    whose ranges exclude the probe).  The driver parses only those
-    buckets' parts.  Returns an empty, correctly-typed frame when nothing
-    matches.
+    """Point lookup: rows whose bucket key is in ``keys`` — the bucket-key
+    IN-list read, ``table_read(where_in=(bucket_key, keys))`` on the live
+    manifest.  It scans ONLY the keys' buckets' files whose per-file key
+    [min, max] can contain a key (on banded-ingest tables a bucket holds
+    one file per commit, most of whose ranges exclude the probe), and the
+    driver parses only those buckets' parts.  Returns an empty,
+    correctly-typed frame when nothing matches.  ``keys`` are typed like
+    the bucket-key column.
 
     NULL keys follow SQL ``IN`` semantics: the residual ``isin`` never
     matches NULL (use :func:`table_read` + ``isNull`` for NULL rows)."""
-    from pyspark.sql import functions as F
-
     man = _load_manifest(target)[1]
-    key = man["bucket_key"]
-    wanted = _buckets_for_keys(spark, man, keys)
-    entries, tombs = _man_entries(target, man, buckets=wanted)
-    vals = [k for k in keys if k is not None]
-    dtype = _col_typename(man, key)
-    entries = [
-        e
-        for e in entries
-        if any(_stats_overlap(e, key, k, k, dtype) for k in vals)
-    ]
-    df = _masked_scan(spark, target, man, entries, tombs)
-    return df.filter(F.col(key).isin(keys))
+    return _scan(spark, target, man, where_in=(man["bucket_key"], keys))
 
 
 # ---------------------------------------------------------------------------
@@ -1824,16 +1806,14 @@ def _add_commit(
     Returns (entries written, live root); an empty batch commits nothing
     (a no-op generation would evict a retained time-travel root).
 
-    Data files take the table's clustering and partition layout; a
-    tombstone-only write is a key-only frame and stays partition-less.
+    The write is :func:`_write_bucketed` on ``man`` with ``layout=files``:
+    data files take the table's clustering and partition layout, and a
+    tombstone-only write is a key-only frame that stays partition-less.
     A tombstone entry keeps only the bucket key's stats and no ``part``;
     :func:`_masked_scan` reads just its key column, and gen ordering
     keeps a delta file listed as both from masking its own rows."""
     key = man["bucket_key"]
-    layout = _cluster_args(man) if files else {}
-    entries = _write_bucketed(
-        df, target, key, int(man["n_buckets"]), gen=_next_seq(man), **layout
-    )
+    entries = _write_bucketed(df, target, man, layout=files)
     if not entries:
         return 0, man
     tomb_entries = [
@@ -1908,7 +1888,6 @@ def table_compact(
     no commit.  Returns {"compacted_buckets", "files_before",
     "files_after", "tombstones_cleared"}."""
     base, man = _load_manifest(target)
-    key, n_buckets = man["bucket_key"], int(man["n_buckets"])
     mrpf = man.get("max_records_per_file")
 
     # Per-GKEY (n_files, rows, n_tombstones) from part refs WITHOUT
@@ -1967,21 +1946,17 @@ def table_compact(
     cand_gkeys = set().union(*units)
     rewritten, cand_tombs = _man_entries(target, man, gkeys=cand_gkeys)
     masked = _masked_scan(spark, target, man, rewritten, cand_tombs)
-    entries = _write_bucketed(
-        masked, target, key, n_buckets, gen=_next_seq(man), **_cluster_args(man)
-    )
-    listing: dict[tuple, tuple[list, list]] = {g: ([], []) for g in cand_gkeys}
-    for e in entries:
-        if _gkey(e) not in listing:
-            # The rewrite is partition-stable (partition values derive
-            # deterministically from row columns) — a stray gkey means
-            # a bug that would shadow carried files; refuse pre-commit.
-            raise RuntimeError(
-                f"table_compact: rewrite produced unexpected group "
-                f"{_gkey(e)}; candidates were {sorted(cand_gkeys)}"
-            )
-        listing[_gkey(e)][0].append(e)
-    live = _commit(target, base, man, listing)
+    entries = _write_bucketed(masked, target, man)
+    stray = sorted({_gkey(e) for e in entries} - cand_gkeys, key=str)
+    if stray:
+        # The rewrite is partition-stable (partition values derive
+        # deterministically from row columns) — a stray gkey means a
+        # bug that would shadow carried files; refuse pre-commit.
+        raise RuntimeError(
+            f"table_compact: rewrite produced unexpected groups {stray}; "
+            f"candidates were {sorted(cand_gkeys, key=str)}"
+        )
+    live = _commit(target, base, man, _listings(entries, gkeys=cand_gkeys))
     return {
         "compacted_buckets": sorted({g[1] for g in cand_gkeys}),
         "files_before": files_before,
@@ -2051,8 +2026,7 @@ def _immutable_cols(man: dict) -> dict[str, str]:
     out = {man["bucket_key"]: "the bucket key"}
     if man.get("partition_by"):
         out[man["partition_by"]] = "the partition column"
-    cb = man.get("cluster_by")
-    for c in [cb] if isinstance(cb, str) else (cb or []):
+    for c in _cluster_cols(man):
         out[c] = "a clustering column"
     return out
 

@@ -101,6 +101,116 @@ def test_split_lookup_parses_one_bucket(spark, tmp_path):
     assert len(got) == 1 and got[0]["o_orderkey"] == 42
 
 
+def _groups(spark, frame, n_buckets, part_col=None):
+    """(partition, bucket) → row count of ``frame``, by the bucket hash
+    spelled out here rather than through the commit layer."""
+    part = F.col(part_col).cast("string") if part_col else F.lit(None).cast("string")
+    bucket = F.pmod(F.xxhash64(F.col("o_orderkey")), F.lit(n_buckets))
+    rows = frame.groupBy(part.alias("p"), bucket.alias("b")).count().collect()
+    return {(r["p"], r["b"]): r["count"] for r in rows}
+
+
+def test_bucket_key_where_in_parses_only_its_buckets(spark, tmp_path):
+    """``table_read(where_in=...)`` on the bucket key is the lookup read:
+    the driver parses only the parts of the values' buckets, not the
+    whole listing."""
+    target = _split_init(spark, tmp_path, n_buckets=8)
+    keys = [42, 43, 310]
+    probe = _base(spark).filter(F.col("o_orderkey").isin(keys))
+    buckets = {b for _p, b in _groups(spark, probe, 8)}
+    assert len(buckets) < len(cm._load_manifest(target)[1]["parts"])
+    _reset_io()
+    got = cm.table_read(spark, target, where_in=("o_orderkey", keys)).collect()
+    assert cm.MANIFEST_IO["part_reads"] == len(buckets), cm.MANIFEST_IO
+    assert sorted(r["o_orderkey"] for r in got) == keys
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize(
+    "n_buckets, layout",
+    [
+        (64, {}),
+        (16, {"partition_by": "o_custkey"}),
+        (64, {"cluster_by": "o_totalprice", "max_records_per_file": 5}),
+    ],
+    ids=["plain", "partitioned", "max_records"],
+)
+def test_write_layout_with_fewer_shuffle_partitions_than_buckets(
+    spark, tmp_path, aqe, n_buckets, layout
+):
+    """A write runs one task per shuffle partition, and a task writes
+    several buckets; each (partition, bucket) group still lands in one
+    task, so each commit writes one file per non-empty group (or the
+    ``max_records_per_file`` split of it), with AQE on or off.  After
+    init, append, merge-on-read and compact the table reads back the
+    model's rows."""
+    import math
+
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) < n_buckets
+    target = str(tmp_path / "t")
+    part_col = layout.get("partition_by")
+    mrpf = layout.get("max_records_per_file")
+
+    def files_per_group(rows):
+        return math.ceil(rows / mrpf) if mrpf else 1
+
+    def by_group(gen=None):
+        """gkey → row counts of its files (only gen ``gen``'s if given)."""
+        out = {}
+        for e in manifest_listing(target)[0]:
+            if gen is None or e["gen"] == gen:
+                out.setdefault(cm._gkey(e), []).append(e["rows"])
+        return out
+
+    def seq():
+        return cm._load_manifest(target)[1]["seq"]
+
+    model = {}
+
+    def commit(op, batch):
+        op(batch)
+        model.update((r[0], tuple(r)) for r in batch.collect())
+        written = by_group(seq())
+        assert {g: sum(r) for g, r in written.items()} == _groups(
+            spark, batch, n_buckets, part_col
+        )
+        for g, rows in written.items():
+            assert len(rows) == files_per_group(sum(rows)), (g, rows)
+        assert _rows(spark, target) == sorted(model.values())
+
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": aqe}):
+        commit(
+            lambda b: cm.table_init(b, target, "o_orderkey", n_buckets=n_buckets, **layout),
+            _base(spark, 600),
+        )
+        commit(
+            lambda b: cm.table_append(spark, target, b),
+            _base(spark, 604).filter(F.col("o_orderkey") >= 600),
+        )
+        commit(
+            lambda b: cm.table_merge_mor(spark, target, b),
+            _base(spark, 650)
+            .filter(F.col("o_orderkey") >= 550)
+            .withColumn("o_orderstatus", F.lit("U")),
+        )
+        cm.table_compact(spark, target)
+        # Compaction packed every group that got a second file or a
+        # tombstone; every group now holds the model's rows.
+        assert all(r["tombstones"] == 0 for r in cm._load_manifest(target)[1]["parts"])
+        live = spark.createDataFrame(list(model.values()), _base(spark).schema)
+        have = by_group()
+        assert {g: sum(r) for g, r in have.items()} == _groups(
+            spark, live, n_buckets, part_col
+        )
+        packed = by_group(seq())
+        assert packed
+        for g, rows in packed.items():
+            assert len(rows) == files_per_group(sum(rows)), (g, rows)
+        if mrpf is None:
+            assert all(len(rows) == 1 for rows in have.values()), have
+        assert _rows(spark, target) == sorted(model.values())
+
+
 def test_split_pruned_range_read_skips_parts(spark, tmp_path):
     """table_read(where=) on a split table: parts are parsed
     (O(buckets) — the layout's stated range-read cost; ref-level

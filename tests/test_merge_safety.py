@@ -853,8 +853,8 @@ def test_table_compact_detects_concurrent_commit(spark, tmp_path, monkeypatch):
     real_write = commit_mod._write_bucketed
     raced = {"done": False}
 
-    def racing_write(df, tgt, key, n_buckets, gen=0, **kw):
-        entries = real_write(df, tgt, key, n_buckets, gen=gen, **kw)
+    def racing_write(df, tgt, man, layout=True):
+        entries = real_write(df, tgt, man, layout=layout)
         if not raced["done"]:
             raced["done"] = True
             monkeypatch.undo()

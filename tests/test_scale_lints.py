@@ -280,10 +280,14 @@ def test_lakehouse_commits_through_one_path():
     """``sources/commit.py`` spells its optimistic-commit protocol once:
     ``_commit_manifest`` has one call site (``_commit``, which owns the
     next-seq rule, the part rewrite and the live-pointer check), and the
-    manifest schema is parsed in ``_schema`` alone.  An op that
-    hand-spells either would let the copies drift."""
+    manifest schema is parsed in ``_schema`` alone.  Data is written in
+    one shape: ``_write_bucketed`` holds the layer's one shuffle and
+    takes the table layout from the manifest it is given.  IN-list and
+    lookup reads share one stats filter, in ``_scan``.  An op that
+    hand-spells any of these would let the copies drift."""
     with open(os.path.join(PKG, "sources", "commit.py"), encoding="utf-8") as f:
-        calls = _calls_by_function(f.read())
+        src = f.read()
+    calls = _calls_by_function(src)
     committers = [fn for fn, names in calls.items() for n in names if n == "_commit_manifest"]
     parsers = [
         fn
@@ -293,6 +297,36 @@ def test_lakehouse_commits_through_one_path():
     ]
     assert committers == ["_commit"], f"commit through _commit: {committers}"
     assert set(parsers) == {"_schema"}, f"parse the manifest schema with _schema: {parsers}"
+    # One write shape: the only shuffle is _write_bucketed's, and every
+    # writer hands it the root its commit builds on, which carries the
+    # table's layout, instead of spelling the layout as arguments.
+    shuffles = [fn for fn, names in calls.items() for n in names if n == "repartition"]
+    assert shuffles == ["_write_bucketed"], f"shuffle only in _write_bucketed: {shuffles}"
+    assert _code_only(src).count(".repartition(") == 1
+    writes = [
+        node
+        for node in ast.walk(ast.parse(src))
+        if isinstance(node, ast.Call) and getattr(node.func, "id", None) == "_write_bucketed"
+    ]
+    assert writes, "no _write_bucketed call found"
+    for node in writes:
+        kws = {k.arg for k in node.keywords}
+        assert len(node.args) == 3 and kws <= {"layout"}, (
+            f"line {node.lineno}: call _write_bucketed(df, target, man[, layout=])"
+        )
+    # One keyed read: the point-probe stats filter (lo and hi the same
+    # value) that serves IN-lists and lookups is spelled once.
+    probes = [
+        fn.name
+        for fn in ast.parse(src).body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) == "_stats_overlap"
+        and len(node.args) >= 4
+        and ast.dump(node.args[2]) == ast.dump(node.args[3])
+    ]
+    assert probes == ["_scan"], f"filter IN-list files in _scan only: {probes}"
 
 
 def _two_struct_explodes(src: str) -> list[str]:

@@ -119,6 +119,12 @@ def test_stream_dedup_collapses_duplicates(spark, name):
 
 def test_stream_stateful_matches_batch_totals(spark):
     stream = _run(spark, "stream_stateful")
+    # The applyInPandasWithState worker concatenates pandas frames, some
+    # empty; pin the output types so a change in pandas' concat dtype
+    # rules cannot drift them unnoticed.
+    assert stream.schema.simpleString() == (
+        "struct<user_id:bigint,n_events:bigint,total_value:double>"
+    )
     batch = (
         load_tables(spark, TEST_SF_DIR)["events"]
         .groupBy("user_id")
